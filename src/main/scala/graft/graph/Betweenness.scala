@@ -86,15 +86,12 @@ object Betweenness {
         greatest(col(aCol), col(bCol)).as("b"))
       .filter(col("a") =!= col("b"))
       .distinct()
-    // eager + size-partitioned (the KCore.decompose shape): the BFS and
-    // dependency loops probe ed every round
+    // eager + size-partitioned: the BFS and dependency loops probe ed
+    // every round
     val ed0 = e.select(col("a").as("v"), col("b").as("w"))
       .unionAll(e.select(col("b").as("v"), col("a").as("w")))
       .localCheckpoint(true)
-    val edParts = math.max(1L, math.min(
-      spark.sparkContext.defaultParallelism.toLong,
-      ed0.count() / 100000L + 1L)).toInt
-    val ed = ed0.coalesce(edParts)
+    val ed = ed0.coalesce(Iterate.parts(spark, ed0.count()))
     val nodes = ed.select(col("v")).distinct()
     val n = nodes.count()
     if (n == 0L) {
@@ -105,30 +102,22 @@ object Betweenness {
     val k = pivotSet.count()
     require(k > 0L, "pivot set selected no graph vertices")
 
-    // forward multi-source BFS: (p, v, dist, sigma = #shortest s→v paths)
-    var bfs = pivotSet
-      .select(col("p"), col("p").as("v"), lit(0).as("dist"), lit(1L).as("sigma"))
-      .localCheckpoint(true)
-    var d = 0
-    var grewBy = 1L
-    var bfsCount = bfs.count()
-    while (grewBy > 0L) {
-      val frontier = bfs.filter(col("dist") === d)
-      val next = frontier
+    // forward multi-source BFS: (p, v, dist, sigma = #shortest s→v
+    // paths); __imp marks the layer added this round, and a round that
+    // adds nothing is the fixpoint, reached within the diameter
+    val bfs = Iterate.untilStable(
+      pivotSet.select(col("p"), col("p").as("v"), lit(0).as("dist"),
+        lit(1L).as("sigma"), lit(true).as("__imp")),
+      Int.MaxValue, "Betweenness.run") { (s, round) =>
+      val next = s.filter(col("__imp"))
         .join(ed, Seq("v"))
         .select(col("p"), col("w").as("v"), col("sigma"))
         // paths through DIFFERENT predecessors to the same w add up
         .groupBy("p", "v").agg(sum(col("sigma")).as("sigma"))
-        .join(bfs.select("p", "v"), Seq("p", "v"), "left_anti")
-        .select(col("p"), col("v"), lit(d + 1).as("dist"), col("sigma"))
-      val grown = bfs.unionAll(next).localCheckpoint(true)
-      // carry the previous round's count instead of re-counting the old
-      // checkpoint — one action per round, not two
-      val grownCount = grown.count()
-      grewBy = grownCount - bfsCount
-      bfsCount = grownCount
-      bfs = grown
-      d += 1
+        .join(s.select("p", "v"), Seq("p", "v"), "left_anti")
+      s.select(col("p"), col("v"), col("dist"), col("sigma"), lit(false).as("__imp"))
+        .unionAll(next.select(col("p"), col("v"), lit(round).as("dist"),
+          col("sigma"), lit(true).as("__imp")))
     }
     val maxD = bfs.agg(max(col("dist"))).head().getInt(0)
 
@@ -180,12 +169,12 @@ object Betweenness {
     * (the qg32 rationale, applied to the brokerage question).
     *
     * Three keyed-join fixpoints, each localCheckpointed per round with
-    * exact convergence detection (fused into the round's single
-    * aggregate/plan — one checkpoint + one cached count per round; σ
+    * exact convergence detection (distances and δ flag changed rows in
+    * the round's own plan and stop through [[Iterate.untilStable]]; σ
     * uses the exact monotone (count, Σσ) integer signature):
     *
-    *  1. DISTANCES from the pivot set — the [[Bfs.sssp]] min-plus
-    *     frontier fold keyed by (pivot, node).
+    *  1. DISTANCES from the pivot set — the [[Bfs.minPlus]] kernel
+    *     keyed by (pivot, node).
     *  2. PATH COUNTS σ over the shortest-path DAG: DAG edge u→v iff
     *     `d(u) + w(u,v) = d(v)` (bit-exact for INTEGER-VALUED weights —
     *     all sums stay exact doubles; fractional weights can split a
@@ -208,31 +197,7 @@ object Betweenness {
       pivots: Int = 0, seed: Long = 42L, maxRounds: Int = 128): DataFrame = {
     require(maxRounds >= 1, s"maxRounds must be >= 1, got $maxRounds")
     val spark = edges.sparkSession
-    val e0 = edges
-      .select(
-        least(col(aCol), col(bCol)).cast("long").as("a"),
-        greatest(col(aCol), col(bCol)).cast("long").as("b"),
-        col(wCol).cast("double").as("__w"))
-      .filter(col("a").isNotNull && col("b").isNotNull && col("__w").isNotNull)
-      .filter(col("a") =!= col("b"))
-      .groupBy(col("a"), col("b"))
-      .agg(min(col("__w")).as("__w"))
-    // eager + size-partitioned (the KCore.decompose shape): phases 1-3
-    // probe ed across their rounds
-    val ed0 = e0.select(col("a").as("v"), col("b").as("t"), col("__w"))
-      .unionAll(e0.select(col("b").as("v"), col("a").as("t"), col("__w")))
-      .localCheckpoint(true)
-    val edParts = math.max(1L, math.min(
-      spark.sparkContext.defaultParallelism.toLong,
-      ed0.count() / 100000L + 1L)).toInt
-    val ed = ed0.coalesce(edParts)
-    val minW = ed.agg(min(col("__w"))).head()
-    if (!minW.isNullAt(0) && minW.getDouble(0) <= 0.0) {
-      throw new IllegalArgumentException(
-        "runWeighted requires strictly positive weights: min weight " +
-          s"${minW.getDouble(0)} ≤ 0 (a zero-weight tie gives infinitely " +
-          "many equal-cost paths — σ diverges; negative forms a cycle)")
-    }
+    val ed = Bfs.positiveAdjacency(edges, aCol, bCol, wCol, "runWeighted")
     val nodes = ed.select(col("v")).distinct()
     val n = nodes.count()
     if (n == 0L) {
@@ -245,49 +210,10 @@ object Betweenness {
         .select(col("v").as("p"))
     val k = pivotSet.count()
 
-    // 1. cost distances from every pivot (min-plus frontier fold) —
-    // FUSED round (the Bfs.sssp shape): one tagged min aggregate merges
-    // candidates with the old table AND recovers the old distance, so
-    // "improved" is a column; one exchange + one checkpoint + one cached
-    // count per round, bit-identical values (IEEE min is order-free)
-    var dist = pivotSet
-      .select(col("p"), col("p").as("v"), lit(0.0).as("dist"))
-      .localCheckpoint(true)
-    var frontier = dist
-    var rounds = 0
-    var improving = true
-    while (improving) {
-      rounds += 2 // two relax applications per materialized round
-      if (rounds > maxRounds)
-        throw new IllegalStateException(
-          s"runWeighted distances still improving after maxRounds=$maxRounds")
-      // DOUBLE-STEPPED (r16, the Bfs.sssp rationale): two lazy
-      // relax+merge steps per checkpoint+count; __imp flags the SECOND
-      // step, whose empty improvement set is the single-step stop
-      // condition verbatim — values bit-identical (order-free IEEE min)
-      def relaxMerge(d: DataFrame, f: DataFrame): DataFrame = {
-        val cand = f
-          .join(ed, Seq("v"))
-          .select(col("p"), col("t").as("v"), (col("dist") + col("__w")).as("dist"))
-        d
-          .select(col("p"), col("v"), col("dist"), lit(false).as("__cand"))
-          .unionAll(cand.select(col("p"), col("v"), col("dist"), lit(true).as("__cand")))
-          .groupBy(col("p"), col("v"))
-          .agg(
-            min(col("dist")).as("dist"),
-            min(when(!col("__cand"), col("dist"))).as("__old"))
-          .select(col("p"), col("v"), col("dist"),
-            (col("__old").isNull || col("dist") < col("__old")).as("__imp"))
-      }
-      val m1 = relaxMerge(dist, frontier)
-      val merged = relaxMerge(
-          m1.select(col("p"), col("v"), col("dist")),
-          m1.filter(col("__imp")).select(col("p"), col("v"), col("dist")))
-        .localCheckpoint(true)
-      improving = merged.filter(col("__imp")).count() > 0L
-      frontier = merged.filter(col("__imp")).select(col("p"), col("v"), col("dist"))
-      dist = merged.select(col("p"), col("v"), col("dist"))
-    }
+    // 1. cost distances from every pivot
+    val dist = Bfs.minPlus(ed,
+      pivotSet.select(col("p"), col("p").as("v"), lit(0.0).as("dist")),
+      maxRounds, "runWeighted distances")
 
     // shortest-path DAG edges per pivot: u→v iff d(u) + w = d(v)
     val dagE = dist.select(col("p"), col("v").as("__u"), col("dist").as("__du"))
@@ -329,7 +255,7 @@ object Betweenness {
       (n, if (s == null) java.math.BigDecimal.ZERO else s)
     }
     var sigPrev = sigSignature(sig)
-    rounds = 0
+    var rounds = 0
     var changing = true
     while (changing) {
       rounds += 1
@@ -369,33 +295,27 @@ object Betweenness {
     // δ backward fixpoint — FUSED change detection: the previous δ table
     // itself is the left side (its key set IS dist's, invariant across
     // rounds), so the old value rides the same plan as the new one and
-    // "changed" is a column; one checkpoint + one cached count per
-    // round, was checkpoint + join + count. Arithmetic unchanged —
-    // each δ recomputes bit-identically once its successors settle.
-    var delta = dist.select(col("p"), col("v"), lit(0.0).as("delta"))
-      .localCheckpoint(true)
-    rounds = 0
-    changing = true
-    while (changing) {
-      rounds += 1
-      if (rounds > maxRounds)
-        throw new IllegalStateException(
-          s"runWeighted δ still changing after maxRounds=$maxRounds")
-      val next = delta.select(col("p"), col("v"), col("delta").as("__od"))
+    // "changed" is the __imp column. The successor terms fold in sorted
+    // order, so each δ recomputes bit-identically once its successors
+    // settle: a plain sum adds them in shuffle-arrival order, and its
+    // last-ulp jitter kept rows "changing" for dozens of rounds past the
+    // DAG depth.
+    val delta = Iterate.untilStable(
+      dist.select(col("p"), col("v"), lit(0.0).as("delta")),
+      maxRounds, "runWeighted delta") { (s, _) =>
+      s.select(col("p"), col("v"), col("delta").as("__od"))
         .join(
-          dagR.join(delta.select(col("p"), col("v").as("__v"),
+          dagR.join(s.select(col("p"), col("v").as("__v"),
               col("delta").as("__dw")), Seq("p", "__v"))
             .groupBy(col("p"), col("__u"))
-            .agg(sum(col("__r") * (lit(1.0) + col("__dw"))).as("__acc"))
+            .agg(aggregate(
+              array_sort(collect_list(col("__r") * (lit(1.0) + col("__dw")))),
+              lit(0.0), (acc, x) => acc + x).as("__acc"))
             .select(col("p"), col("__u").as("v"), col("__acc")),
           Seq("p", "v"), "left")
         .select(col("p"), col("v"),
           coalesce(col("__acc"), lit(0.0)).as("delta"),
-          (coalesce(col("__acc"), lit(0.0)) =!= col("__od")).as("__chg"))
-        .localCheckpoint(true)
-      val changed = next.filter(col("__chg")).count()
-      delta = next.select(col("p"), col("v"), col("delta"))
-      changing = changed > 0L
+          (coalesce(col("__acc"), lit(0.0)) =!= col("__od")).as("__imp"))
     }
 
     val scale = n.toDouble / k.toDouble / 2.0

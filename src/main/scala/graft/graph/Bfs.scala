@@ -1,8 +1,8 @@
 package graft.graph
 
 import org.apache.spark.sql.{DataFrame, Row}
-import org.apache.spark.sql.functions.{col, greatest, least, lit}
-import org.apache.spark.sql.types.{IntegerType, LongType, StructField, StructType}
+import org.apache.spark.sql.functions.{col, greatest, least, lit, min, when}
+import org.apache.spark.sql.types.{DoubleType, IntegerType, LongType, StructField, StructType}
 
 /** SINGLE-SOURCE BFS HOP DISTANCE — unweighted shortest-path layers
   * from one source over an undirected graph: the reachability/radius
@@ -41,25 +41,9 @@ object Bfs {
       maxDepth: Int = 64): DataFrame = {
     require(maxDepth >= 1, s"maxDepth must be >= 1, got $maxDepth")
     val spark = edges.sparkSession
-    // eager + size-partitioned adjacency (the KCore.decompose shape):
-    // the layer loop probes ed every round — checkpoint the canonical
-    // edges once, then the doubled adjacency at a data-derived
-    // partition count so each round's probe stays data-shaped instead
-    // of 2x(shuffle.partitions) KB-block tasks
-    val e = edges
-      .select(
-        least(col(aCol), col(bCol)).cast("long").as("a"),
-        greatest(col(aCol), col(bCol)).cast("long").as("b"))
-      .filter(col("a") =!= col("b"))
-      .distinct()
-      .localCheckpoint(true)
-    val parts = math.max(1L, math.min(
-      spark.sparkContext.defaultParallelism.toLong,
-      2L * e.count() / 100000L + 1L)).toInt
-    val ed = e.select(col("a").as("v"), col("b").as("w"))
-      .unionAll(e.select(col("b").as("v"), col("a").as("w")))
-      .coalesce(parts)
-      .localCheckpoint(true)
+    val (ed, parts) = Iterate.adjacency(
+      edges.select(col(aCol).cast("long").as("a"), col(bCol).cast("long").as("b")),
+      "a", "b")
 
     val schema = StructType(Seq(
       StructField("node", LongType, nullable = false),
@@ -126,11 +110,9 @@ object Bfs {
     * throws past `maxRounds` (a negative-cycle input can never
     * converge; non-negative weights always do).
     *
-    * Scale shape: state is one (node, dist) row per reached node;
-    * each round is one edge-keyed equi-join (frontier-sized, not
-    * graph-sized), one min aggregate, one min-merge aggregate —
-    * localCheckpointed so plans never stack. The one driver value per
-    * round is the improved-count.
+    * Scale shape: state is one row per reached node; each relax step
+    * is one frontier-sized edge join and one min-merge aggregate (the
+    * [[minPlus]] kernel, seeded with the single source).
     */
   def sssp(
       edges: DataFrame,
@@ -144,25 +126,18 @@ object Bfs {
     val spark = edges.sparkSession
     val typed = edges
       .select(
-        col(srcCol).cast("long").as("a"),
-        col(dstCol).cast("long").as("b"),
-        col(wCol).cast("double").as("w"))
-      .filter(col("a").isNotNull && col("b").isNotNull && col("w").isNotNull)
-      .filter(col("a") =!= col("b"))
-    // eager + size-partitioned (the KCore.decompose shape): the relax
-    // loop joins e every round; checkpointed once and viewed through a
-    // data-derived coalesce, each round's probe reads a few cached
-    // blocks instead of shuffle.partitions KB-block tasks
-    val e0 = (if (directed) typed
-             else typed.unionAll(
-               typed.select(col("b").as("a"), col("a").as("b"), col("w"))))
-      .groupBy(col("a"), col("b"))
-      .agg(org.apache.spark.sql.functions.min(col("w")).as("w"))
+        col(srcCol).cast("long").as("v"),
+        col(dstCol).cast("long").as("t"),
+        col(wCol).cast("double").as("__w"))
+      .filter(col("v").isNotNull && col("t").isNotNull && col("__w").isNotNull)
+      .filter(col("v") =!= col("t"))
+    val ed0 = (if (directed) typed
+               else typed.unionAll(
+                 typed.select(col("t").as("v"), col("v").as("t"), col("__w"))))
+      .groupBy(col("v"), col("t"))
+      .agg(min(col("__w")).as("__w"))
       .localCheckpoint(true)
-    val parts = math.max(1L, math.min(
-      spark.sparkContext.defaultParallelism.toLong,
-      e0.count() / 100000L + 1L)).toInt
-    val e = e0.coalesce(parts)
+    val ed = ed0.coalesce(Iterate.parts(spark, ed0.count()))
     // fail fast on negative weights: with directed=false, ONE negative
     // edge is a 2-cycle of negative total — the fixpoint would burn all
     // maxRounds of joins before throwing a generic non-convergence
@@ -172,7 +147,7 @@ object Bfs {
     // only a directed negative CYCLE diverges, still caught by
     // maxRounds).
     if (!directed) {
-      val minW = e.agg(org.apache.spark.sql.functions.min(col("w"))).head()
+      val minW = ed.agg(min(col("__w"))).head()
       if (!minW.isNullAt(0) && minW.getDouble(0) < 0.0) {
         throw new IllegalArgumentException(
           s"sssp with directed=false requires non-negative weights: " +
@@ -180,69 +155,87 @@ object Bfs {
             "with its reverse edge, so no shortest path exists")
       }
     }
-
     val schema = StructType(Seq(
-      StructField("node", LongType, nullable = false),
-      StructField("dist", org.apache.spark.sql.types.DoubleType, nullable = false)))
-    var dist = spark
-      .createDataFrame(
-        spark.sparkContext.parallelize(Seq(Row(source, 0.0)), 1), schema)
+      StructField("p", LongType, nullable = false),
+      StructField("v", LongType, nullable = false),
+      StructField("dist", DoubleType, nullable = false)))
+    val seed = spark.createDataFrame(
+      spark.sparkContext.parallelize(Seq(Row(source, source, 0.0)), 1), schema)
+    minPlus(ed, seed, maxRounds, "sssp")
+      .select(col("v").as("node"), col("dist"))
+  }
+
+  /** Symmetric min-weight adjacency `(v, t, __w)` for the weighted
+    * all-pairs and betweenness fixpoints: endpoints cast to long, null
+    * endpoints/weights and self-loops dropped, parallel edges collapsed
+    * to their min weight, checkpointed once. Rejects any weight ≤ 0 up front, naming `caller`: a zero
+    * weight puts distinct vertices at distance 0 (harmonic diverges,
+    * σ counts infinitely many equal-cost paths) and an undirected
+    * negative edge is a negative cycle.
+    */
+  private[graph] def positiveAdjacency(
+      edges: DataFrame, aCol: String, bCol: String, wCol: String,
+      caller: String): DataFrame = {
+    val e = edges
+      .select(
+        least(col(aCol), col(bCol)).cast("long").as("a"),
+        greatest(col(aCol), col(bCol)).cast("long").as("b"),
+        col(wCol).cast("double").as("__w"))
+      .filter(col("a").isNotNull && col("b").isNotNull && col("__w").isNotNull)
+      .filter(col("a") =!= col("b"))
+      .groupBy(col("a"), col("b"))
+      .agg(min(col("__w")).as("__w"))
+    val ed0 = e.select(col("a").as("v"), col("b").as("t"), col("__w"))
+      .unionAll(e.select(col("b").as("v"), col("a").as("t"), col("__w")))
       .localCheckpoint(true)
-    var frontier = dist
-    var rounds = 0
-    var improving = true
-    while (improving) {
-      rounds += 2 // two relax applications per materialized round
-      if (rounds > maxRounds)
-        throw new IllegalStateException(
-          s"SSSP still improving after maxRounds=$maxRounds rounds — " +
-            "either a negative cycle or a longer-than-expected optimal " +
-            "path; check weights or raise maxRounds")
-      // FUSED round (one exchange + one checkpoint, was three jobs): the
-      // relax candidates union the old table under a tag and ONE min
-      // aggregate yields the merged distance AND the old distance per
-      // node, so "improved" is a column — min(old, cand) is the same
-      // IEEE min the separate join+union+min computed, bit-identical;
-      // the improved-count reads the checkpointed blocks (no recompute).
-      //
-      // DOUBLE-STEPPED (r16): TWO lazy relax+merge steps ride each
-      // checkpoint — the per-round fixed costs (checkpoint job, count
-      // job, driver planning) amortize over two hops of propagation.
-      // Values are bit-identical: improvements propagate one hop per
-      // relax application either way, so the same candidate multiset
-      // meets the same order-free IEEE min. Convergence stays exact:
-      // __imp flags the SECOND step's improvements, and "step 2
-      // improved nothing" is the single-step stop condition verbatim
-      // (step 2 relaxes exactly step 1's improved set; an empty
-      // improvement there is the fixpoint regardless of step 1). The
-      // step-1 subtree feeds both step-2 branches, but its exchange is
-      // canonically identical in each — ReuseExchange computes it once.
-      def relaxMerge(d: DataFrame, f: DataFrame): DataFrame = {
-        val cand = e
-          .join(f.select(col("node").as("a"), col("dist")), Seq("a"))
-          .select(col("b").as("node"), (col("dist") + col("w")).as("dist"))
-        d
-          .select(col("node"), col("dist"), lit(false).as("__cand"))
-          .unionAll(cand.select(col("node"), col("dist"), lit(true).as("__cand")))
-          .groupBy(col("node"))
-          .agg(
-            org.apache.spark.sql.functions.min(col("dist")).as("dist"),
-            org.apache.spark.sql.functions.min(
-              org.apache.spark.sql.functions.when(!col("__cand"), col("dist")))
-              .as("__old"))
-          .select(col("node"), col("dist"),
-            (col("__old").isNull || col("dist") < col("__old")).as("__imp"))
-      }
-      val m1 = relaxMerge(dist, frontier)
-      val merged = relaxMerge(
-          m1.select(col("node"), col("dist")),
-          m1.filter(col("__imp")).select(col("node"), col("dist")))
-        .coalesce(parts)
-        .localCheckpoint(true)
-      improving = merged.filter(col("__imp")).count() > 0L
-      frontier = merged.filter(col("__imp")).select(col("node"), col("dist"))
-      dist = merged.select(col("node"), col("dist"))
+    val ed = ed0.coalesce(Iterate.parts(edges.sparkSession, ed0.count()))
+    val minW = ed.agg(min(col("__w"))).head()
+    if (!minW.isNullAt(0) && minW.getDouble(0) <= 0.0) {
+      throw new IllegalArgumentException(
+        s"$caller requires strictly positive weights: min weight " +
+          s"${minW.getDouble(0)} ≤ 0 (zero puts distinct vertices at " +
+          "distance 0 and ties infinitely many equal-cost paths; negative " +
+          "forms a cycle)")
     }
-    dist
+    ed
+  }
+
+  /** The min-plus distance fixpoint behind [[sssp]], all-pairs
+    * closeness/eccentricity and weighted betweenness: frontier
+    * Bellman-Ford from every `seeds` row `(p, v, dist)` at once over the
+    * directed adjacency `ed (v, t, __w)`, returning `(p, v, dist)` — one
+    * row per reached (source, node) pair. Each step relaxes only the
+    * edges out of pairs that improved in the step before, and ONE tagged
+    * min aggregate merges the candidates with the old table and recovers
+    * the old distance, so "improved" is the `__imp` column — bit-identical
+    * to a join + union + min (IEEE min is order-free).
+    *
+    * Two relax steps ride each checkpoint, so the per-round fixed costs
+    * (checkpoint job, driver planning) amortize over two hops. Values
+    * are unchanged: improvements still propagate one hop per step. The
+    * stop stays exact: `__imp` flags the second step, which relaxes
+    * exactly the first step's improvements, so an empty second step is
+    * the single-step fixpoint. The first step's exchange is canonically
+    * identical in both of its uses and ReuseExchange computes it once.
+    * `maxRounds` counts relax steps (hops): [[Iterate.untilStable]]
+    * grants ⌈maxRounds/2⌉ rounds, so an odd bound loses no step.
+    */
+  private[graph] def minPlus(
+      ed: DataFrame, seeds: DataFrame, maxRounds: Int, what: String): DataFrame = {
+    def relaxMerge(d: DataFrame): DataFrame = {
+      val cand = d.filter(col("__imp"))
+        .join(ed, Seq("v"))
+        .select(col("p"), col("t").as("v"), (col("dist") + col("__w")).as("dist"))
+      d.select(col("p"), col("v"), col("dist"), lit(false).as("__cand"))
+        .unionAll(cand.select(col("p"), col("v"), col("dist"), lit(true).as("__cand")))
+        .groupBy(col("p"), col("v"))
+        .agg(
+          min(col("dist")).as("dist"),
+          min(when(!col("__cand"), col("dist"))).as("__old"))
+        .select(col("p"), col("v"), col("dist"),
+          (col("__old").isNull || col("dist") < col("__old")).as("__imp"))
+    }
+    Iterate.untilStable(seeds.withColumn("__imp", lit(true)), maxRounds, what,
+      stepsPerRound = 2)((s, _) => relaxMerge(relaxMerge(s)))
   }
 }

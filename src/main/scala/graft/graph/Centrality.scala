@@ -80,20 +80,15 @@ object Centrality {
     *
     * Multi-source BFS: state is ONE DataFrame keyed by (source, node)
     * — every source advances together, one frontier×edges join + one
-    * aggregate per round, rounds bounded by the diameter, each round
-    * `localCheckpoint`ed (the qg9 lineage lesson).
+    * aggregate per round, rounds bounded by the diameter, driven by
+    * [[Iterate.untilStable]].
     */
   def distanceCentralities(
       edges: DataFrame, aCol: String, bCol: String): DataFrame = {
     val spark = edges.sparkSession
-    // eager + size-partitioned (the KCore.decompose shape): the layer
-    // loop probes ed every round — checkpointed once, viewed through a
-    // data-derived coalesce so each round's stages stay data-shaped
+    // eager + size-partitioned: the layer loop probes ed every round
     val ed0 = symmetrize(edges, aCol, bCol).localCheckpoint(true)
-    val parts = math.max(1L, math.min(
-      spark.sparkContext.defaultParallelism.toLong,
-      ed0.count() / 100000L + 1L)).toInt
-    val ed = ed0.coalesce(parts)
+    val ed = ed0.coalesce(Iterate.parts(spark, ed0.count()))
     val nodes = ed.select(col("v")).distinct()
     if (nodes.isEmpty) {
       return spark.range(0).select(
@@ -101,29 +96,18 @@ object Centrality {
         lit(0L).as("sum_dist"), lit(0.0).as("closeness"),
         lit(0.0).as("harmonic"))
     }
-    var bfs = nodes
-      .select(col("v").as("p"), col("v"), lit(0).as("dist"))
-      .localCheckpoint(true)
-    var d = 0
-    var grewBy = 1L
-    // one count per round: the previous round's count rides a driver
-    // var instead of re-counting the old checkpoint (the
-    // Betweenness.core lesson)
-    var prevN = bfs.count()
-    while (grewBy > 0L) {
-      val frontier = bfs.filter(col("dist") === d)
-      val next = frontier
+    // __imp marks the layer added this round; a round that adds no
+    // (source, node) pair is the fixpoint, reached within the diameter
+    val bfs = Iterate.untilStable(
+      nodes.select(col("v").as("p"), col("v"), lit(0).as("dist"), lit(true).as("__imp")),
+      Int.MaxValue, "distanceCentralities") { (s, round) =>
+      val next = s.filter(col("__imp"))
         .join(ed, Seq("v"))
         .select(col("p"), col("w").as("v"))
         .distinct()
-        .join(bfs.select("p", "v"), Seq("p", "v"), "left_anti")
-        .select(col("p"), col("v"), lit(d + 1).as("dist"))
-      val grown = bfs.unionAll(next).localCheckpoint(true)
-      val curN = grown.count()
-      grewBy = curN - prevN
-      prevN = curN
-      bfs = grown
-      d += 1
+        .join(s.select("p", "v"), Seq("p", "v"), "left_anti")
+      s.select(col("p"), col("v"), col("dist"), lit(false).as("__imp"))
+        .unionAll(next.select(col("p"), col("v"), lit(round).as("dist"), lit(true).as("__imp")))
     }
     val counts = bfs
       .filter(col("dist") > 0)
@@ -152,7 +136,7 @@ object Centrality {
     * COST distances — the composition the engine's own road graph
     * demands (edge costs are RUC·length, G3; hop-count closeness
     * answers the wrong question on a cost-weighted graph). The
-    * distance fixpoint is [[Bfs.sssp]]'s min-plus frontier
+    * distance fixpoint is [[Bfs.minPlus]]'s min-plus frontier
     * Bellman-Ford run from EVERY source at once (state keyed by
     * (source, node), the [[distanceCentralities]] multi-source
     * shape); the normalization tail is [[distanceCentralities]]'s:
@@ -172,9 +156,9 @@ object Centrality {
     *
     * Weights must be STRICTLY positive: a zero-weight edge puts two
     * distinct vertices at distance 0 and harmonic = Σ 1/d diverges —
-    * rejected up front with one min(w) pass (the [[Bfs.sssp]]
-    * fail-fast); undirected negatives are negative cycles anyway.
-    * Parallel edges collapse to min weight; self-loops, null
+    * rejected up front with one min(w) pass
+    * ([[Bfs.positiveAdjacency]]); undirected negatives are negative
+    * cycles anyway. Parallel edges collapse to min weight; self-loops, null
     * endpoints/weights drop; isolated vertices emit no row (no edges
     * → no rows, the [[distanceCentralities]] contract).
     *
@@ -182,10 +166,8 @@ object Centrality {
     * pair — Θ(n²) on a connected graph, the inherent cost of exact
     * all-pairs closeness (same as [[distanceCentralities]]);
     * [[harmonicHyperBall]] stays the designated 100 TB estimator.
-    * Each round: one frontier×edges join (frontier-sized), one min
-    * aggregate, one min-merge — localCheckpointed, driver sees one
-    * improved-count per round. Rounds = hop length of the
-    * hop-longest optimal path; throws past `maxRounds`.
+    * The fixpoint is [[Bfs.minPlus]]: relax steps = hop length of the
+    * hop-longest optimal path; throws past `maxRounds` steps.
     */
   def weightedDistanceCentralities(
       edges: DataFrame, aCol: String, bCol: String, wCol: String,
@@ -221,7 +203,7 @@ object Centrality {
   }
 
   /** WEIGHTED ALL-PAIRS SHORTEST DISTANCES — the multi-source
-    * [[Bfs.sssp]] min-plus fixpoint run from EVERY vertex at once:
+    * [[Bfs.minPlus]] min-plus fixpoint run from EVERY vertex at once:
     * output `(p, v, dist)`, one row per REACHED (source, node) pair,
     * dist 0.0 on the diagonal. The shared distance kernel behind
     * [[weightedDistanceCentralities]] and [[weightedEccentricity]];
@@ -233,9 +215,8 @@ object Centrality {
     *
     * Scale: state is Θ(reached pairs) — n² on a connected graph, the
     * inherent exact-all-pairs cost; [[harmonicHyperBall]] is the
-    * designated 100 TB estimator. Per round: one frontier×edges join,
-    * one min aggregate, one min-merge, all localCheckpointed; the
-    * driver sees one improved-count per round.
+    * designated 100 TB estimator. The fixpoint is [[Bfs.minPlus]]
+    * seeded with every vertex.
     */
   def weightedAllPairsDistances(
       edges: DataFrame, aCol: String, bCol: String, wCol: String,
@@ -247,82 +228,14 @@ object Centrality {
       edges: DataFrame, aCol: String, bCol: String, wCol: String,
       maxRounds: Int, caller: String): DataFrame = {
     require(maxRounds >= 1, s"maxRounds must be >= 1, got $maxRounds")
-    val spark = edges.sparkSession
-    val e0 = edges
-      .select(
-        least(col(aCol), col(bCol)).cast("long").as("a"),
-        greatest(col(aCol), col(bCol)).cast("long").as("b"),
-        col(wCol).cast("double").as("__w"))
-      .filter(col("a").isNotNull && col("b").isNotNull && col("__w").isNotNull)
-      .filter(col("a") =!= col("b"))
-      .groupBy(col("a"), col("b"))
-      .agg(min(col("__w")).as("__w"))
-    // eager + size-partitioned (the KCore.decompose shape): each relax
-    // round probes ed — checkpointed once, viewed through a
-    // data-derived coalesce
-    val ed0 = e0.select(col("a").as("v"), col("b").as("t"), col("__w"))
-      .unionAll(e0.select(col("b").as("v"), col("a").as("t"), col("__w")))
-      .localCheckpoint(true)
-    val edParts = math.max(1L, math.min(
-      spark.sparkContext.defaultParallelism.toLong,
-      ed0.count() / 100000L + 1L)).toInt
-    val ed = ed0.coalesce(edParts)
-    val minW = ed.agg(min(col("__w"))).head()
-    if (!minW.isNullAt(0) && minW.getDouble(0) <= 0.0) {
-      throw new IllegalArgumentException(
-        s"$caller requires strictly positive weights: " +
-          s"min weight ${minW.getDouble(0)} ≤ 0 (zero puts distinct vertices " +
-          "at distance 0 — harmonic diverges; negative forms a cycle)")
-    }
+    val ed = Bfs.positiveAdjacency(edges, aCol, bCol, wCol, caller)
     val nodes = ed.select(col("v")).distinct()
     if (nodes.isEmpty) {
-      return spark.range(0).select(
+      return edges.sparkSession.range(0).select(
         col("id").as("p"), col("id").as("v"), lit(0.0).as("dist"))
     }
-    var dist = nodes
-      .select(col("v").as("p"), col("v"), lit(0.0).as("dist"))
-      .localCheckpoint(true)
-    var frontier = dist
-    var rounds = 0
-    var improving = true
-    while (improving) {
-      rounds += 2 // two relax applications per materialized round
-      if (rounds > maxRounds)
-        throw new IllegalStateException(
-          s"$caller still improving after " +
-            s"maxRounds=$maxRounds rounds; raise maxRounds")
-      // FUSED round (the Bfs.sssp shape): relax candidates union the old
-      // table under a tag, ONE min aggregate merges and recovers the old
-      // distance per pair, "improved" becomes a column; IEEE min is
-      // order-free so the merged values are bit-identical.
-      // DOUBLE-STEPPED (r16, the Bfs.sssp rationale): two lazy
-      // relax+merge steps ride each checkpoint+count — per-round fixed
-      // costs amortize over two hops; __imp flags the SECOND step, whose
-      // empty improvement set is the single-step stop condition verbatim
-      def relaxMerge(d: DataFrame, f: DataFrame): DataFrame = {
-        val cand = f
-          .join(ed, Seq("v"))
-          .select(col("p"), col("t").as("v"), (col("dist") + col("__w")).as("dist"))
-        d
-          .select(col("p"), col("v"), col("dist"), lit(false).as("__cand"))
-          .unionAll(cand.select(col("p"), col("v"), col("dist"), lit(true).as("__cand")))
-          .groupBy(col("p"), col("v"))
-          .agg(
-            min(col("dist")).as("dist"),
-            min(when(!col("__cand"), col("dist"))).as("__old"))
-          .select(col("p"), col("v"), col("dist"),
-            (col("__old").isNull || col("dist") < col("__old")).as("__imp"))
-      }
-      val m1 = relaxMerge(dist, frontier)
-      val merged = relaxMerge(
-          m1.select(col("p"), col("v"), col("dist")),
-          m1.filter(col("__imp")).select(col("p"), col("v"), col("dist")))
-        .localCheckpoint(true)
-      improving = merged.filter(col("__imp")).count() > 0L
-      frontier = merged.filter(col("__imp")).select(col("p"), col("v"), col("dist"))
-      dist = merged.select(col("p"), col("v"), col("dist"))
-    }
-    dist
+    Bfs.minPlus(ed, nodes.select(col("v").as("p"), col("v"), lit(0.0).as("dist")),
+      maxRounds, caller)
   }
 
   /** WEIGHTED ECCENTRICITY per vertex — `(node, n_reached, ecc)` with
@@ -497,16 +410,16 @@ object Centrality {
       case Some(w) => symmetrizeWeighted(edges, aCol, bCol, w)
       case None => symmetrize(edges, aCol, bCol).withColumn("__w", lit(1.0))
     }).localCheckpoint(true)
-    val edParts = math.max(1L, math.min(
-      edges.sparkSession.sparkContext.defaultParallelism.toLong,
-      ed0.count() / 100000L + 1L)).toInt
+    val edParts = Iterate.parts(edges.sparkSession, ed0.count())
     val ed = ed0.coalesce(edParts)
     val nodes = ed.select(col("v")).distinct()
     var x = nodes.select(col("v"), lit(1.0).as("__x")).coalesce(edParts)
       .localCheckpoint(true)
     var i = 0
     while (i < iters) {
-      x = eigenStep(ed, x).localCheckpoint(true)
+      // coalesced like the Hits/PageRank vectors: the aggregate's
+      // shuffle.partitions blocks would otherwise fan every round out
+      x = eigenStep(ed, x).coalesce(edParts).localCheckpoint(true)
       i += 1
     }
     x.select(col("v").as("node"), round(col("__x"), 6).as("score"))
@@ -546,13 +459,9 @@ object Centrality {
       p: Int, maxIter: Int,
       trackNf: Boolean): Option[(DataFrame, Vector[Long])] = {
     require(p >= 4 && p <= 12, s"p must be in [4, 12], got $p")
-    // eager + size-partitioned (the KCore.decompose shape)
-    val spark = edges.sparkSession
+    // eager + size-partitioned: every round probes ed
     val ed0 = symmetrize(edges, aCol, bCol).localCheckpoint(true)
-    val edParts = math.max(1L, math.min(
-      spark.sparkContext.defaultParallelism.toLong,
-      ed0.count() / 100000L + 1L)).toInt
-    val ed = ed0.coalesce(edParts)
+    val ed = ed0.coalesce(Iterate.parts(edges.sparkSession, ed0.count()))
     val nodes = ed.select(col("v")).distinct()
     if (nodes.isEmpty) {
       return None

@@ -111,10 +111,10 @@ object Dag {
     * bit-identical; integer-valued durations give exact integer costs.
     *
     * Convergence is an EXACT per-node changed-row count (the
-    * [[Bfs.sssp]] pattern): the old state rides the merge union under a
-    * tag, so the same max aggregate that merges also recovers the old
-    * (layer, cost) per node and rows whose layer OR cost moved are
-    * counted off the checkpointed result. The first
+    * [[Iterate.untilStable]] pattern): the old state rides the merge
+    * union under a tag, so the same max aggregate that merges also
+    * recovers the old (layer, cost) per node and rows whose layer OR
+    * cost moved are counted off the checkpointed result. The first
     * draft's Σcost signature was a double sum that could absorb a
     * same-hop-length cost improvement smaller than the sum's ulp
     * (Σ≈10¹⁶ swallows deltas < 1); a row-wise compare of max-merged

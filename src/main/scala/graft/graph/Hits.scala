@@ -72,15 +72,12 @@ object Hits {
     require(n > 0, "empty graph")
     val sumW = e.agg(sum("w")).head().getDouble(0)
     require(sumW > 0.0, s"total edge weight must be positive, got $sumW")
-    val parts = math.max(1L, math.min(
-      spark.sparkContext.defaultParallelism.toLong, n / 100000L + 1L)).toInt
+    val parts = Iterate.parts(spark, n)
     // size the per-iteration probes to the data (the PageRank transV /
     // rankParts rationale): e's checkpoint and nodes' cache hold
     // shuffle.partitions KB-blocks, and every gather would launch that
     // many tasks regardless of data
-    val eParts = math.max(1L, math.min(
-      spark.sparkContext.defaultParallelism.toLong, e.count() / 100000L + 1L)).toInt
-    val eV = e.coalesce(eParts)
+    val eV = e.coalesce(Iterate.parts(spark, e.count()))
     val nodesV = nodes.coalesce(parts)
 
     // gather along edges: scores flow src→dst (by="src", out="dst") or

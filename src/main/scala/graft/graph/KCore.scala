@@ -1,7 +1,7 @@
 package graft.graph
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions.{col, count => fcount, greatest, least, lit}
+import org.apache.spark.sql.functions.{col, count => fcount, lit}
 
 /** K-CORE DECOMPOSITION — the maximal subgraph in which every vertex
   * keeps degree ≥ k, computed by the standard iterative peel (Seidman
@@ -33,30 +33,8 @@ object KCore {
     */
   def decompose(edges: DataFrame, aCol: String, bCol: String, k: Int): DataFrame = {
     require(k >= 1, s"k must be >= 1, got $k")
-    // EAGER canonical edges (the Structure.neighborhoodJaccard
-    // rationale), then the doubled adjacency SIZE-PARTITIONED (the Hits
-    // `parts` pattern): the peel loop probes `ed` every round, and a
-    // 2x32-partition lazy cache made every round a 64-task stage of
-    // KB-sized blocks — per-task fixed cost (shuffle file create,
-    // codegen init) dominated the round at 32 local cores. Partitions
-    // sized to the edge count keep every round's stages data-shaped at
-    // any scale; the union/coalesce reads e's checkpointed blocks, so
-    // the input computes exactly once.
-    val e = edges
-      .select(
-        least(col(aCol), col(bCol)).as("a"),
-        greatest(col(aCol), col(bCol)).as("b"))
-      .filter(col("a") =!= col("b"))
-      .distinct()
-      .localCheckpoint(true)
-    val spark = edges.sparkSession
-    val parts = math.max(1L, math.min(
-      spark.sparkContext.defaultParallelism.toLong,
-      2L * e.count() / 100000L + 1L)).toInt
-    val ed = e.select(col("a").as("v"), col("b").as("w"))
-      .unionAll(e.select(col("b").as("v"), col("a").as("w")))
-      .coalesce(parts)
-      .localCheckpoint(true)
+    // the peel loop probes ed every round
+    val (ed, parts) = Iterate.adjacency(edges, aCol, bCol)
 
     var alive = ed.select(col("v")).distinct().coalesce(parts).localCheckpoint(true)
     var n = alive.count()

@@ -29,25 +29,8 @@ object LabelProp {
     */
   def run(edges: DataFrame, aCol: String, bCol: String, rounds: Int): DataFrame = {
     require(rounds >= 0, s"rounds must be >= 0, got $rounds")
-    // eager + size-partitioned adjacency (the KCore.decompose shape):
-    // the propagation loop joins ed every round — materialize the
-    // canonical edges once, then checkpoint the doubled adjacency at a
-    // data-derived partition count so each round's stages stay
-    // data-shaped instead of 2x(shuffle.partitions) KB-block tasks
-    val e = edges
-      .select(
-        least(col(aCol), col(bCol)).as("a"),
-        greatest(col(aCol), col(bCol)).as("b"))
-      .filter(col("a") =!= col("b"))
-      .distinct()
-      .localCheckpoint(true)
-    val parts = math.max(1L, math.min(
-      edges.sparkSession.sparkContext.defaultParallelism.toLong,
-      2L * e.count() / 100000L + 1L)).toInt
-    val ed = e.select(col("a").as("v"), col("b").as("w"))
-      .unionAll(e.select(col("b").as("v"), col("a").as("w")))
-      .coalesce(parts)
-      .localCheckpoint(true)
+    // the propagation loop joins ed every round
+    val (ed, _) = Iterate.adjacency(edges, aCol, bCol)
 
     var labels = ed.select(col("v")).distinct()
       .withColumn("lbl", col("v"))

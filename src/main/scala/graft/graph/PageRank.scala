@@ -112,9 +112,7 @@ object PageRank {
     // leaves shuffle.partitions KB-blocks, and every iteration's join
     // would launch that many tasks regardless of data
     val mEdges = trans.count()
-    val transParts = math.max(1L, math.min(
-      spark.sparkContext.defaultParallelism.toLong, mEdges / 100000L + 1L)).toInt
-    val transV = trans.coalesce(transParts)
+    val transV = trans.coalesce(Iterate.parts(spark, mEdges))
 
     // dangling = nodes with no out-edge (their mass redistributes
     // uniformly); counted ONCE — a graph with no sinks (the common case
@@ -127,8 +125,7 @@ object PageRank {
     // spark.sql.shuffle.partitions: a 25-node gate graph in 32 shuffled
     // partitions pays 30+ empty-task launches per iteration, while a
     // 10⁸-node graph still fans out to the full parallelism
-    val rankParts = math.max(1L, math.min(
-      spark.sparkContext.defaultParallelism.toLong, n / 100000L + 1L)).toInt
+    val rankParts = Iterate.parts(spark, n)
 
     val init: Column = personalizedTo match {
       case Some(s) => when(col("node") === s, lit(1.0)).otherwise(lit(0.0))

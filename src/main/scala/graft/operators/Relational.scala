@@ -381,7 +381,11 @@ object Relational {
           pending = live.map { r =>
             val (k, pq, off, n) =
               (r.get(0), r.getDouble(1), r.getLong(5), r.getLong(6))
-            val c = counts((k, pq))
+            // every live band holds its target rank, so the aggregate
+            // must have a row for it
+            val c = counts.getOrElse((k, pq), throw new IllegalStateException(
+              s"grouped percentile: band for key $k at percentile $pq " +
+                "matched no rows, but a live band is never empty"))
             val below = c.getLong(2)
             // chosen half carries its exact data range as a CLOSED band
             // — same multiset, same rank offset, same resolved value

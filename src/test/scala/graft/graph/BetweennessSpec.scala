@@ -137,4 +137,20 @@ class BetweennessSpec extends AnyFunSuite {
     val a = wbc(g, pivots = 2)
     assert(a == wbc(g, pivots = 2), "same pivots/seed must replay bit-identically")
   }
+
+  test("runWeighted: the δ fixpoint settles near the DAG depth when σ " +
+      "ratios are fractional (no last-ulp jitter keeps it changing)") {
+    // 150 nodes with small-integer costs: many equal-cost paths, so the
+    // δ terms are fractional and a sum in arrival order jitters
+    val rnd = new scala.util.Random(1)
+    val e = Seq.fill(700)((rnd.nextInt(150).toLong, rnd.nextInt(150).toLong))
+      .map { case (x, y) => (x, y, (1 + (x + y) % 7).toDouble) }
+      .toDF("x", "y", "w")
+    val prev = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", "8")
+    try {
+      val got = Betweenness.runWeighted(e, "x", "y", "w", maxRounds = 20).collect()
+      assert(got.nonEmpty && got.forall(r => r.getDouble(1) >= 0.0))
+    } finally spark.conf.set("spark.sql.shuffle.partitions", prev)
+  }
 }

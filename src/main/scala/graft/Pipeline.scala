@@ -10,7 +10,9 @@ import org.apache.spark.sql.functions._
   * build → criticality indicator → EAUL sweep → indicator merge → CSV +
   * GeoJSON egress. The reference exchanged every arrow through `.tmp`
   * files and S3 between separate node processes; here each stage is a
-  * DataFrame the next stage consumes lazily.
+  * DataFrame handed to the next. The two sweeps (criticality, EAUL) are
+  * materialized once as driver-local frames of one row per scenario, so
+  * the merge, the writes and the counts never re-run their routing.
   *
   * Usage: `sbt "runMain graft.Pipeline <osmDir> <outDir>"` — with no args,
   * runs the golden 10-segment network end-to-end (writes to /tmp).
@@ -46,7 +48,7 @@ object Pipeline {
       col("tags")("RUC").cast("double").as("RUC"))
     val merged = operators.Relational.mergeIndicators(
       rn, "NAME",
-      Seq("crit" -> criticality.withColumnRenamed("way_id", "way_id")))
+      Seq("crit" -> criticality))
     merged.write.mode("overwrite").option("header", "true").csv(s"$outDir/indicators")
     eaul.write.mode("overwrite").json(s"$outDir/eaul")
     println(s"[pipeline] ways=${g.ways.length} nodes=${g.numNodes} " +

@@ -5740,8 +5740,8 @@ object SparkEntry {
   /** G8–G10 — EAUL upgrade sweep: (way × upgrade) fan-out with flood
     * scenarios and the trapezoid over return periods. DuckDB-oracled: the
     * demo flood stats only sever ways at RP 500/1000 (identical impassable
-    * sets), so the 11-matrix sweep per scenario collapses exactly to two
-    * matrices (upgrade baseline + flooded), the RP≤250 trapezoid terms are
+    * sets), so each scenario routes exactly two matrices (upgrade
+    * baseline + flooded), the RP≤250 trapezoid terms are
     * literal zeros, and the whole chain — impassability, repair-time max,
     * user-cost sum, trapezoid, neglect threshold — replays in SQL. Rounded
     * to 6 dp (pair sums accumulate in different orders across engines).

@@ -33,6 +33,10 @@ object Criticality {
       unroutablePairs: Int,
       impactedPairs: Int)
 
+  /** One row per way. The fan-out runs once: its rows are collected and
+    * returned as a driver-local frame, so scoring, merge and counts read
+    * them without re-running a Dijkstra task.
+    */
   def waysStats(spark: SparkSession, g: CsrGraph, odNodes: Array[Int]): DataFrame = {
     import spark.implicits._
     val benchmark = Routing.routeMatrixLocal(g, odNodes)
@@ -74,6 +78,8 @@ object Criticality {
           unroutablePairs = unroutable,
           impactedPairs = impacted)
       }
+      .collect()
+      .toSeq
       .toDF()
   }
 

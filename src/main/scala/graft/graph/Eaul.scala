@@ -91,11 +91,17 @@ object Eaul {
   /** Way factor for a scenario: flooded ways removed; the upgraded way's
     * edges rescaled to the new RUC (flood removal wins if both apply,
     * matching the reference where the flood speed-profile overrides the
-    * contracted upgrade).
+    * contracted upgrade). A non-positive RUC on the upgraded way throws:
+    * the rescale divides by it, and a factor of +∞ would silently treat
+    * the upgraded way as removed.
     */
   private def scenarioFactor(g: CsrGraph, impassable: Set[Int], upgraded: Option[(Int, Upgrade)]): Int => Double = {
     val upIdx = upgraded.map(_._1).getOrElse(-1)
-    val upFactor = upgraded.map { case (idx, up) => up.ruc / g.ways(idx).ruc }.getOrElse(1.0)
+    val upFactor = upgraded.map { case (idx, up) =>
+      val way = g.ways(idx)
+      require(way.ruc > 0, s"upgraded way ${way.name} (index $idx) has non-positive RUC ${way.ruc}")
+      up.ruc / way.ruc
+    }.getOrElse(1.0)
     (w: Int) =>
       if (impassable.contains(w)) Double.PositiveInfinity
       else if (w == upIdx) upFactor
@@ -104,7 +110,10 @@ object Eaul {
 
   /** Executor-local EAUL for one (graph, upgrade) combination
     * (eaul.js:593-659). `globalUnroutable`/`noTraffic` are the pair-key
-    * sets from the baseline run (G10).
+    * sets from the baseline run (G10). The route matrix depends only on
+    * the impassable set, so each distinct set is routed once per call
+    * (the baseline is the empty set) and shared by the periods that flood
+    * the same ways.
     */
   def calcEaulLocal(
       g: CsrGraph,
@@ -115,15 +124,16 @@ object Eaul {
       noTraffic: Set[(Int, Int)],
       upgraded: Option[(Int, Upgrade)]): Double = {
 
-    val baseFactor = scenarioFactor(g, Set.empty, upgraded)
-    val baseline = Routing.routeMatrixLocal(g, odNodes, baseFactor)
+    val matrices = scala.collection.mutable.Map.empty[Set[Int], Array[PairCost]]
+    def routed(imp: Set[Int]): Array[PairCost] =
+      matrices.getOrElseUpdate(imp, Routing.routeMatrixLocal(g, odNodes, scenarioFactor(g, imp, upgraded)))
+    val baseline = routed(Set.empty)
 
     def excluded(p: PairCost): Boolean =
       globalUnroutable.contains((p.oIdx, p.dIdx)) || noTraffic.contains((p.oIdx, p.dIdx))
 
     val uByPeriod = FloodReturnPeriods.map { rp =>
-      val imp = impassableWays(g, stats, rp, upgraded)
-      val flood = Routing.routeMatrixLocal(g, odNodes, scenarioFactor(g, imp, upgraded))
+      val flood = routed(impassableWays(g, stats, rp, upgraded))
       val r = floodRepairTime(g, stats, rp, upgraded)
       // Σ (RUC_flood − RUC_base) · traffic over non-excluded pairs; the
       // baseline row at the same triangle position (JS aligns by array idx)
@@ -157,8 +167,7 @@ object Eaul {
     * period of the UN-upgraded flooded graphs.
     */
   def globalUnroutablePairs(g: CsrGraph, stats: FloodStats, odNodes: Array[Int]): Set[(Int, Int)] =
-    FloodReturnPeriods.flatMap { rp =>
-      val imp = impassableWays(g, stats, rp, None)
+    FloodReturnPeriods.map(rp => impassableWays(g, stats, rp, None)).distinct.flatMap { imp =>
       Routing
         .routeMatrixLocal(g, odNodes, scenarioFactor(g, imp, None))
         .filter(!_.routable)
@@ -168,8 +177,11 @@ object Eaul {
   case class WayEaul(way_id: String, upgrade: String, eaul: Double)
 
   /** Distributed sweep: (way × upgrade) fan-out, graph/stats broadcast.
-    * Work volume = (1 + 3·|ways|) · 11 cost matrices (BASELINE.md) — each
-    * task self-contained, zero shuffle until the tiny result.
+    * Work volume = one cost matrix per distinct impassable set (the
+    * baseline plus each distinct flood) for each of the 1 + 3·|ways|
+    * scenarios — each task self-contained, zero shuffle. The 3·|ways| + 1
+    * result rows are collected once and returned as a driver-local frame,
+    * so every downstream action reads them without re-running the fan-out.
     */
   def sweep(
       spark: SparkSession,
@@ -199,8 +211,7 @@ object Eaul {
         val eaul = if (math.abs(raw) < 1) 0.0 else raw // eaul.js:726-727
         WayEaul(graph.ways(w).name, up.id, eaul)
       }
-      .toDF()
-    val base = spark.createDataFrame(Seq(("baseline", "baseline", baselineEaul))).toDF("way_id", "upgrade", "eaul")
-    results.union(base)
+      .collect()
+    (results :+ WayEaul("baseline", "baseline", baselineEaul)).toSeq.toDF()
   }
 }

@@ -17,8 +17,10 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * updates at the trigger, recompute with the EXACT batch operator":
   * result identity with batch mode is the correctness contract
   * (spec-asserted), staleness is bounded by the trigger interval, and the
-  * expensive part (the (1+3·|ways|)·11 matrix fan-out inside `sweep`)
-  * stays fully distributed. Only the tiny revision maps touch the driver.
+  * expensive part (the fan-out inside `sweep`: one route matrix per
+  * distinct impassable set for each of the 1 + 3·|ways| scenarios) stays
+  * fully distributed. Only the tiny revision maps and the O(ways) result
+  * rows touch the driver.
   */
 object EaulStream {
 

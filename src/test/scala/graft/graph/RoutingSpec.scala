@@ -116,6 +116,59 @@ class RoutingSpec extends AnyFunSuite {
       Eaul.calcEaulLocal(g, stats, od, noTraffic, Set.empty, Set.empty, None) == 0.0)
   }
 
+  test("EAUL routing each distinct impassable set once equals recomputing every period") {
+    // the loop of eaul.js:593-659 as written: every return period routes
+    // its own flood matrix (the golden sets differ at RP500 and RP1000)
+    def reference(upgraded: Option[(Int, Eaul.Upgrade)], unroutable: Set[(Int, Int)]): Double = {
+      def factor(imp: Set[Int]): Int => Double = w =>
+        if (imp(w)) Double.PositiveInfinity
+        else upgraded match {
+          case Some((idx, up)) if idx == w => up.ruc / g.ways(idx).ruc
+          case _ => 1.0
+        }
+      val baseline = Routing.routeMatrixLocal(g, od, factor(Set.empty))
+      val u = Eaul.FloodReturnPeriods.map { rp =>
+        val flood = Routing.routeMatrixLocal(g, od, factor(Eaul.impassableWays(g, stats, rp, upgraded)))
+        val sum = flood.indices.foldLeft(0.0) { (acc, k) =>
+          val f = flood(k)
+          if (unroutable((f.oIdx, f.dIdx)) || GoldenNetwork.noTraffic((f.oIdx, f.dIdx))) acc
+          else acc + (f.ruc.getOrElse(0.0) - baseline(k).ruc.getOrElse(0.0)) *
+            GoldenNetwork.yearlyTraffic(f.oIdx)(f.dIdx)
+        }
+        Eaul.floodRepairTime(g, stats, rp, upgraded) * sum
+      }
+      val t = Eaul.FloodReturnPeriods
+      0.5 * (0 until t.length - 1).foldLeft(0.0) { (acc, i) =>
+        acc + (1.0 / t(i) - 1.0 / t(i + 1)) * (u(i) + u(i + 1))
+      }
+    }
+    val scenarios = None +: (for (w <- Seq(1, 2, 4); up <- Eaul.RoadUpgrades) yield Some((w, up)))
+    Seq(Eaul.globalUnroutablePairs(g, stats, od), Set.empty[(Int, Int)]).foreach { unroutable =>
+      scenarios.foreach { upgraded =>
+        val got = Eaul.calcEaulLocal(
+          g, stats, od, GoldenNetwork.yearlyTraffic, unroutable, GoldenNetwork.noTraffic, upgraded)
+        val want = reference(upgraded, unroutable)
+        assert(
+          java.lang.Double.doubleToLongBits(got) == java.lang.Double.doubleToLongBits(want),
+          s"$upgraded, unroutable=$unroutable: $got vs $want")
+      }
+    }
+  }
+
+  test("EAUL throws on a non-positive RUC of the upgraded way, naming the way") {
+    val asphalt = Eaul.RoadUpgrades.head
+    Seq(0.0, -1.0).foreach { ruc =>
+      val ways = g.ways.updated(1, g.ways(1).copy(ruc = ruc))
+      val bad = new CsrGraph(g.numNodes, g.indptr, g.nbr, g.cost, g.wayOfEdge, ways, g.nodeLon, g.nodeLat)
+      val ex = intercept[IllegalArgumentException] {
+        Eaul.calcEaulLocal(bad, stats, od, GoldenNetwork.yearlyTraffic, Set.empty, Set.empty, Some((1, asphalt)))
+      }
+      assert(ex.getMessage.contains("way 2 ") && ex.getMessage.contains(s"RUC $ruc"), ex.getMessage)
+      // the un-upgraded scenario never divides by it
+      Eaul.calcEaulLocal(bad, stats, od, GoldenNetwork.yearlyTraffic, Set.empty, Set.empty, None)
+    }
+  }
+
   test("Dijkstra matrix matches an independent Floyd-Warshall oracle") {
     // different algorithm, independently derived from the same edge list —
     // catches kernel bugs a same-algorithm refactor would preserve

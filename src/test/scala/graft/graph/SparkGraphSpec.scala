@@ -2,8 +2,12 @@ package graft.graph
 
 import graft.GraftSession
 import graft.sources.OsmXml
+import java.util.concurrent.ConcurrentLinkedQueue
+import java.util.concurrent.atomic.AtomicInteger
+import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted, SparkListenerStageSubmitted}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
+import scala.jdk.CollectionConverters._
 
 /** Spark-side graph ops: G1 build (coord dedup → nodes/edges), distributed
   * route matrix, criticality scoring, EAUL sweep — on the golden network.
@@ -112,6 +116,45 @@ class SparkGraphSpec extends AnyFunSuite {
     val baseline = rows.find(_.getAs[String]("way_id") == "baseline").get.getAs[Double]("eaul")
     val up23 = rows.filter(r => Seq("2", "3").contains(r.getAs[String]("way_id")) && r.getAs[String]("upgrade") == "upgrade-rehab-asphalt")
     up23.foreach(r => assert(r.getAs[Double]("eaul") > baseline))
+  }
+
+  // task counts of the stages `body` runs
+  private def stageTasks(body: => Unit): Seq[Int] = {
+    val submitted = new ConcurrentLinkedQueue[Int]()
+    val completed = new AtomicInteger()
+    val listener = new SparkListener {
+      override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit = submitted.add(e.stageInfo.numTasks)
+      override def onStageCompleted(e: SparkListenerStageCompleted): Unit = completed.incrementAndGet()
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      body
+      // listener delivery is async; wait until every submitted stage has completed
+      val deadline = System.nanoTime() + 10_000_000_000L
+      while (System.nanoTime() < deadline && (submitted.isEmpty || completed.get < submitted.size))
+        Thread.sleep(50)
+    } finally spark.sparkContext.removeSparkListener(listener)
+    submitted.asScala.toSeq
+  }
+
+  test("sweep results are materialized once: count and write run no fan-out stage") {
+    val parallelism = spark.sparkContext.defaultParallelism
+    val out = java.nio.file.Files.createTempDirectory("sweep-out").toString
+    val (grid, gridOd) = DemoNetwork.grid(6)
+    val frames = Seq(
+      "eaul" -> Eaul.sweep(
+        spark, GoldenNetwork.graph, GoldenNetwork.floodStats, GoldenNetwork.odNodes,
+        GoldenNetwork.yearlyTraffic, GoldenNetwork.noTraffic),
+      "criticality" -> Criticality.scores(spark, grid, gridOd))
+    frames.foreach { case (name, df) =>
+      val tasks = stageTasks {
+        df.count()
+        df.write.mode("overwrite").json(s"$out/$name")
+      }
+      assert(tasks.nonEmpty, name)
+      // the fan-out has one task per scenario (30 and 60 here)
+      assert(tasks.max <= parallelism, s"$name: stage task counts $tasks, defaultParallelism $parallelism")
+    }
   }
 
   test("custom Catalyst operator: RouteMatrixExec plans, composes, and matches the kernel") {

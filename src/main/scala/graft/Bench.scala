@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Benchmark driver.
  *
@@ -25,62 +24,36 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      // AQE partition-coalescing knobs, env-parameterized for A/B runs;
-      // defaults are Spark's own. The r16 hypothesis that the 32-core
-      // anti-scaling was post-shuffle task count was RACED and REJECTED:
-      // byte-based coalescing (parallelismFirst=false, advisory 64m)
-      // read 1.06x WORSE pooled over the 18-query subset — the real
-      // cause was concurrent broadcast builds racing lazy cache fills
-      // (fixed eagerly in the operators; see OPTIMIZATION_r16.md).
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst",
-        sys.env.getOrElse("SPARK_GRAFT_AQE_PARALLELISM_FIRST", "true"))
-      .config("spark.sql.adaptive.advisoryPartitionSizeInBytes",
-        sys.env.getOrElse("SPARK_GRAFT_AQE_ADVISORY_BYTES", "67108864"))
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // SHUFFLE/SPILL SCRATCH DIR (guide §2.1: "local disk bandwidth for
-      // shuffle files can be the tighter limit — check both"): this VM's
-      // only disk is ext4 on virtio, where creating+writing a tiny
-      // shuffle file costs ~95 ms of Shuffle Write Time PER TASK
-      // (event-log-measured on qg11's peel rounds: 64 tasks x ~120
-      // records each). tmpfs is the faithful local stand-in for the
-      // fast local NVMe a production shuffle tier assumes; measured
-      // qg11 6.2 -> 2.8 s, same plans, same results. Env-overridable;
-      // falls back to Spark's default when no tmpfs exists.
-      .config("spark.local.dir",
-        sys.env.getOrElse("SPARK_GRAFT_LOCAL_DIR",
-          if (new java.io.File("/dev/shm").isDirectory) "/dev/shm/graft-spark-local"
-          else System.getProperty("java.io.tmpdir", "/tmp")))
-      // local scale runs (sf1+) read single big files; a smaller split
-      // size stands in for the many-file layout a real table has
-      .config("spark.sql.files.maxPartitionBytes",
-        sys.env.getOrElse("SPARK_GRAFT_MAX_PARTITION_BYTES", "134217728"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // optional comma-separated query-name filter for local perf iteration;
+    // the round driver sets no filter and measures everything. Resolved
+    // before anything runs: an unknown name throws instead of overwriting
+    // bench_full.json with an empty query list.
+    val selected = SparkEntry.selectQueries(sys.env.get("SPARK_GRAFT_ONLY"))
+    // SHUFFLE/SPILL SCRATCH DIR (guide §2.1: "local disk bandwidth for
+    // shuffle files can be the tighter limit — check both"): this VM's
+    // only disk is ext4 on virtio, where creating+writing a tiny
+    // shuffle file costs ~95 ms of Shuffle Write Time PER TASK
+    // (event-log-measured on qg11's peel rounds: 64 tasks x ~120
+    // records each). tmpfs is the faithful local stand-in for the
+    // fast local NVMe a production shuffle tier assumes; measured
+    // qg11 6.2 -> 2.8 s, same plans, same results. Env-overridable;
+    // falls back to Spark's default when no tmpfs exists.
+    val spark = GraftSession.local(appName = "bench", localDir = Some(
+      sys.env.getOrElse("SPARK_GRAFT_LOCAL_DIR",
+        if (new java.io.File("/dev/shm").isDirectory) "/dev/shm/graft-spark-local"
+        else System.getProperty("java.io.tmpdir", "/tmp"))))
     // steady-state warmup: JIT + codegen + parquet footer caches, so the
     // first measured query doesn't absorb JVM startup
     spark.range(1000000).selectExpr("sum(id)").collect()
     try SparkEntry.entry(spark).count()
     catch { case _: Throwable => }
-    // optional comma-separated query-name filter for local perf iteration;
-    // the round driver sets no filter and measures everything
-    val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").map(_.trim).toSet)
-    val selected = only match {
-      case Some(names) => SparkEntry.queries.filter { case (n, _) => names(n) }
-      case None => SparkEntry.queries
-    }
     val runs = math.max(1, sys.env.get("SPARK_GRAFT_RUNS").flatMap(_.toIntOption).getOrElse(5))
     val baseRuns = math.min(
       runs,
       math.max(1, sys.env.get("SPARK_GRAFT_BASE_RUNS").flatMap(_.toIntOption).getOrElse(3)))
     // per-query: isolate, run `runs` times, keep every successful timing
-    val results: Seq[(String, Seq[Double])] = selected.toSeq.map { case (name, fn) =>
+    // and the reason of every failed run
+    val results: Seq[(String, Seq[Double], Seq[String])] = selected.toSeq.map { case (name, fn) =>
       // fresh executor state: drop caches a previous query may have left
       // behind (several queries persist internally by design), so no query's
       // timing depends on suite order
@@ -93,12 +66,16 @@ object Bench {
       // timings over SUCCESSFUL runs only — a thrown run's (fast) failure
       // duration must not masquerade as a timing. All runs failed → empty,
       // reported as -1 sentinel instead of a silent near-zero.
+      val errors = Seq.newBuilder[String]
       def time(): Option[Double] = {
         val t0 = System.nanoTime()
         try {
           fn(spark, sfDir).count()
           Some((System.nanoTime() - t0) / 1e9)
-        } catch { case _: Throwable => None }
+        } catch { case e: Throwable =>
+          errors += SparkEntry.failureReason(e)
+          None
+        }
       }
       // ADAPTIVE RUN COUNT (round 9, per the r8 ask): sub-0.5 s queries
       // stop at `baseRuns` — their absolute noise band is too small to
@@ -124,9 +101,9 @@ object Bench {
         if (runs > baseRuns && median(base) >= 0.5)
           base ++ (1 to (runs - baseRuns)).flatMap(_ => timeIsolated())
         else base
-      name -> times
+      (name, times, errors.result())
     }
-    val medians = results.map { case (k, ts) => k -> median(ts) }
+    val medians = results.map { case (k, ts, _) => k -> median(ts) }
     val qs = medians.map { case (k, v) => s"\"" + k + "\":" + v }
       .mkString("{", ",", "}")
     val total = medians.map(_._2).filter(_ >= 0).sum
@@ -135,13 +112,18 @@ object Bench {
     // full machine-readable artifact with per-query variance: median, MAD,
     // min, and the raw runs, slowest-median first. The driver's BENCH tail
     // truncates to the last ~65 queries, so every entry also lands here.
+    // A query with failed runs also carries their count and the first
+    // failure's reason.
     val fullPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_FULL", "bench_full.json")
-    val full = results.sortBy { case (k, ts) => -median(ts) }
-      .map { case (k, ts) =>
+    val full = results.sortBy { case (_, ts, _) => -median(ts) }
+      .map { case (k, ts, errs) =>
         val med = median(ts)
         val mad = if (ts.isEmpty) -1.0 else median(ts.map(t => math.abs(t - med)))
         val raw = ts.map(t => f"$t%.4f").mkString("[", ", ", "]")
-        f"""  {"query": "$k", "sec_median": $med%.4f, "sec_mad": $mad%.4f, "sec_min": ${if (ts.isEmpty) -1.0 else ts.min}%.4f, "runs": $raw}"""
+        val failed =
+          if (errs.isEmpty) ""
+          else s""", "failed": ${errs.size}, "error": ${SparkEntry.jsonString(errs.head)}"""
+        f"""  {"query": "$k", "sec_median": $med%.4f, "sec_mad": $mad%.4f, "sec_min": ${if (ts.isEmpty) -1.0 else ts.min}%.4f, "runs": $raw$failed}"""
       }
       .mkString(
         s"""{"sf": "$sfDir", "runs_per_query": "$baseRuns-$runs adaptive (>=0.5s median gets $runs)", "stat": "median", "total_sec": ${f"$total%.2f"},

@@ -154,8 +154,7 @@ object CurationPipeline {
   }
 
   def main(args: Array[String]): Unit = {
-    val spark = GraftSession.local(
-      sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt, "graft-curation")
+    val spark = GraftSession.local(appName = "graft-curation")
     val (sfDir, outDir) = args match {
       case Array(s, o) => (s, o)
       case _ => ("/root/testdata/sf0.001",

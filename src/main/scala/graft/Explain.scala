@@ -9,9 +9,7 @@ package graft
   */
 object Explain {
   def main(args: Array[String]): Unit = {
-    val spark = GraftSession.local(
-      sys.env.get("SPARK_GRAFT_CPUS").flatMap(_.toIntOption).getOrElse(4),
-      "explain")
+    val spark = GraftSession.local(appName = "explain")
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001")
     val names =
       if (args.nonEmpty) args.toSeq

@@ -78,7 +78,7 @@ object Pipeline {
   }
 
   def main(args: Array[String]): Unit = {
-    val spark = GraftSession.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt, "graft-pipeline")
+    val spark = GraftSession.local(appName = "graft-pipeline")
     val (osmDir, outDir) = args match {
       case Array(i, o) => (i, o)
       case _ =>

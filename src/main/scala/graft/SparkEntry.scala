@@ -27,6 +27,46 @@ object SparkEntry {
   def entry(spark: SparkSession): DataFrame =
     q1Agg(spark, "/root/testdata/sf0.001")
 
+  // ------------------------------------------------------ harness helpers
+  /** The queries a Bench or Verify run covers: all of [[queries]] when
+    * `only` (the `SPARK_GRAFT_ONLY` value, comma-separated names) is
+    * unset, else exactly the named ones. Throws IllegalArgumentException
+    * listing every name that is not a query: a typo must not select
+    * nothing.
+    */
+  def selectQueries(only: Option[String]): Map[String, (SparkSession, String) => DataFrame] =
+    only.fold(queries) { v =>
+      val names = v.split(",").map(_.trim).filter(_.nonEmpty).toSet
+      val unknown = names -- queries.keySet
+      require(names.nonEmpty, s"SPARK_GRAFT_ONLY='$v' names no query")
+      require(unknown.isEmpty,
+        s"SPARK_GRAFT_ONLY names unknown queries: ${unknown.toSeq.sorted.mkString(", ")}")
+      queries.filter { case (n, _) => names(n) }
+    }
+
+  /** Why a query failed, on one line: the exception class plus the first
+    * non-blank line of its message (which may be null, or a multi-line
+    * plan dump).
+    */
+  def failureReason(e: Throwable): String =
+    e.getClass.getName + Option(e.getMessage)
+      .flatMap(_.linesIterator.map(_.trim).find(_.nonEmpty))
+      .fold("")(": " + _)
+
+  /** JSON string literal: escapes backslash, quote and ALL control chars
+    * (< 0x20) — a tab or CR in builder-authored SQL would otherwise make
+    * the driver's json.load fail and silently zero the round's correctness.
+    */
+  def jsonString(s: String): String = "\"" + s.flatMap {
+    case '"'  => "\\\""
+    case '\\' => "\\\\"
+    case '\n' => "\\n"
+    case '\r' => "\\r"
+    case '\t' => "\\t"
+    case c if c < ' ' => f"\\u${c.toInt}%04x"
+    case c => c.toString
+  } + "\""
+
   // ---------------------------------------------------------------- helpers
   private def t(spark: SparkSession, dir: String, name: String): DataFrame =
     Tables.load(spark, dir, name)
@@ -247,8 +287,9 @@ object SparkEntry {
     * content is dir-deterministic (memoized maxUs + the physical ts
     * type), so only the FIRST run pays the Spark write job — later runs
     * copy the cached file's bytes into their stage dir (measured
-    * ~0.5 s/run of the stream-gate floor, StreamProbe). The build
-    * callback writes one coalesce(1) parquet into the passed dir.
+    * ~0.5 s/run of the stream-gate floor by the qe6 phase probe, git
+    * 3e96ab2). The build callback writes one coalesce(1) parquet into
+    * the passed dir.
     */
   private val sentinelCache =
     new java.util.concurrent.ConcurrentHashMap[String, java.nio.file.Path]()
@@ -469,9 +510,9 @@ object SparkEntry {
     // partitions instead of 32 cuts the per-batch checkpoint-file fan-out
     // (3 batches × partitions HDFS-state files) that dominates this
     // gate's wall time on local data volumes — restored after the run.
-    // StreamProbe (r17): 8 → 2 takes another ~0.5 s off both batches
-    // (state is ~95 k session rows — 48 k/partition is nowhere near
-    // memory pressure)
+    // qe6 phase probe (r17, git 3e96ab2): 8 → 2 takes another ~0.5 s
+    // off both batches (state is ~95 k session rows — 48 k/partition is
+    // nowhere near memory pressure)
     val prevShuffle = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set("spark.sql.shuffle.partitions", "2")
     // NO sentinel filter inside the streaming plan: Catalyst pushes a

@@ -70,12 +70,21 @@ object Tables {
   def embeddings(spark: SparkSession, sfDir: String): DataFrame = load(spark, sfDir, "embeddings")
 }
 
-/** Local SparkSession factory used by tests and ad-hoc mains. Verify/Bench
-  * build their own sessions per the driver contract.
+/** Local SparkSession factory — the only session builder: tests, the
+  * harness mains (Bench, Verify, Explain) and the runnable pipelines all
+  * call it, so every surface runs under the same conf.
+  *
+  * `threads` defaults to `SPARK_GRAFT_CPUS` (else 4); this is the one
+  * place that reads it. `localDir` sets `spark.local.dir` only when given:
+  * left unset, a `-Dspark.local.dir` on the JVM (or Spark's own default)
+  * stays in force.
   */
 object GraftSession {
-  def local(threads: Int = 4, appName: String = "graft"): SparkSession = {
-    val spark = SparkSession
+  def local(
+      threads: Int = sys.env.get("SPARK_GRAFT_CPUS").map(_.trim.toInt).getOrElse(4),
+      appName: String = "graft",
+      localDir: Option[String] = None): SparkSession = {
+    val builder = SparkSession
       .builder()
       .master(s"local[$threads]")
       .appName(appName)
@@ -84,8 +93,10 @@ object GraftSession {
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
+      // events.parquet may store TIMESTAMP(NANOS); read as Long nanos
+      // (Tables.normalizeTs maps every encoding to TIMESTAMP)
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
+    val spark = localDir.fold(builder)(builder.config("spark.local.dir", _)).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     spark
   }

@@ -1,39 +1,16 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // same AQE coalescing knobs as Bench (defaults = Spark's own) so
-      // the correctness dump runs the exact plans the bench times
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst",
-        sys.env.getOrElse("SPARK_GRAFT_AQE_PARALLELISM_FIRST", "true"))
-      .config("spark.sql.adaptive.advisoryPartitionSizeInBytes",
-        sys.env.getOrElse("SPARK_GRAFT_AQE_ADVISORY_BYTES", "67108864"))
-      // events.parquet stores TIMESTAMP(NANOS); read as Long nanos
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // local scale runs (sf1+) read single big files; a smaller split
-      // size stands in for the many-file layout a real table has
-      .config("spark.sql.files.maxPartitionBytes",
-        sys.env.getOrElse("SPARK_GRAFT_MAX_PARTITION_BYTES", "134217728"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    new java.io.File(outDir).mkdirs()
     // optional comma-separated filter (same contract as Bench's) for
     // single-query iteration; the driver sets no filter
-    val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").map(_.trim).toSet)
-    val selected = only match {
-      case Some(names) => SparkEntry.queries.filter { case (n, _) => names(n) }
-      case None => SparkEntry.queries
-    }
+    val only = sys.env.get("SPARK_GRAFT_ONLY")
+    val selected = SparkEntry.selectQueries(only)
+    val spark = GraftSession.local(appName = "verify")
+    new java.io.File(outDir).mkdirs()
     val succeeded = scala.collection.mutable.TreeSet.empty[String]
     selected.foreach { case (name, fn) =>
       val t0 = System.nanoTime()
@@ -46,7 +23,7 @@ object Verify {
         succeeded += name
         System.err.println(f"[verify] $name ok in ${(System.nanoTime() - t0) / 1e9}%.2fs")
       } catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
+        System.err.println(s"[verify] $name failed: ${SparkEntry.failureReason(e)}")
       }
     }
     // Verified-gates manifest (tools/verified_gates.txt, checked in):
@@ -68,22 +45,11 @@ object Verify {
         Files.writeString(manifest, updated.mkString("", "\n", "\n"))
       }
     } catch { case e: Throwable =>
-      System.err.println(s"[verify] manifest write skipped: ${e.getMessage}")
+      System.err.println(s"[verify] manifest write skipped: ${SparkEntry.failureReason(e)}")
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
     val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+      .map { case (k, v) => s"${SparkEntry.jsonString(k)}: ${SparkEntry.jsonString(v)}" }
+      .mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()
   }

@@ -47,7 +47,7 @@ import org.apache.spark.sql.functions._
   * collect; the only driver values are 1-row signatures. Worst case is
   * a long chain of SCCs (rounds ~ chain length — inherent to the
   * label-propagation family); hash-random and crawl-shaped graphs
-  * finish in a handful of rounds (GraphScale pins 10⁶ edges). Throws
+  * finish in a handful of rounds (10⁶ edges measured, git 3e96ab2). Throws
   * rather than returning partial labels if `maxRounds` inner rounds
   * don't reach the fixpoint — the connectedComponents contract.
   */

@@ -21,7 +21,7 @@ import org.apache.spark.sql.functions._
   * neighbourhood `array_intersect` form carried a celebrity node's
   * true-degree array into every incident edge's intersection: measured
   * 456 s on 10⁶ random edges + one degree-10⁵ hub vs 2.9 s skew-free
-  * (`graft.GraphScale` ktruss4-skew). This form pays one extra shuffle
+  * (graph scale probe ktruss4-skew, git 3e96ab2). This form pays one extra shuffle
   * of 3·#triangles edge rows plus the per-round orientation joins
   * (~2× on small skew-FREE graphs: 2.9 → 5.4 s at 10⁶) and is immune
   * to the hub, whose edges all orient INTO it leaving its out-list

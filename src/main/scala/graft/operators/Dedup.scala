@@ -600,14 +600,13 @@ object Dedup {
     * have no shingle set and are excluded (containment undefined).
     * Output: (a_id, b_id, containment) with C(a → b) rounded 6 dp.
     */
-  /** [[containmentJoin]] stage 1 (package-private for the phase probe):
-    * codegen shingle kernel + dictionary collapse to distinct sets.
-    * One-pass `SortedShingleSetExpr` — the interpreted
-    * transform/concat_ws/array_distinct/array_sort chain was this
+  /** [[containmentJoin]] stage 1: codegen shingle kernel + dictionary
+    * collapse to distinct sets. One-pass `SortedShingleSetExpr` — the
+    * interpreted transform/concat_ws/array_distinct/array_sort chain was this
     * stage's floor (9.8 -> 3.4 s at sf1); < k tokens -> empty set ->
     * dropped, exactly as the old size(toks) >= k filter.
     */
-  private[graft] def containmentGroups(
+  private def containmentGroups(
       docs: DataFrame, idCol: String, textCol: String, k: Int): DataFrame =
     docs
       .select(col(idCol).as("__id"),
@@ -621,9 +620,9 @@ object Dedup {
         col("__ws"), col("__ids"), size(col("__ws")).as("__n"))
       .localCheckpoint(true)
 
-  /** [[containmentJoin]] stage 2 (package-private for the phase probe):
-    * rare-first canonical ordering. Shingles travel as 64-bit xxhash64
-    * keys from here on: the freq aggregate, the rare-first ordering,
+  /** [[containmentJoin]] stage 2: rare-first canonical ordering.
+    * Shingles travel as 64-bit xxhash64 keys from here on: the freq
+    * aggregate, the rare-first ordering,
     * and the candidate equi-join never need the string back
     * (verification reads the ORIGINAL string sets via array_intersect),
     * and a hash collision can only MERGE two tokens' postings —
@@ -641,7 +640,7 @@ object Dedup {
     * full set, not the pruned list). Checkpointed: the A-prefix
     * explode and the B-posting explode both read it.
     */
-  private[graft] def containmentOrdered(groups: DataFrame): DataFrame = {
+  private def containmentOrdered(groups: DataFrame): DataFrame = {
     val toks = groups.select(col("__sid"),
       explode(transform(col("__ws"), t => xxhash64(t))).as("__tok"))
     // distinct-set document frequency per shingle — single consumer

@@ -512,8 +512,8 @@ object Similarity {
     * every stage keyed. The pair stage is Θ(n · occupancy) where
     * occupancy = n/2^bits, so `bits` MUST grow with log₂(n) to hold
     * occupancy constant (the qs14 nCells lesson: a fixed bucket count
-    * is a hidden n²). SimilarityScale's dbscan probe runs
-    * bits = ⌈log₂(n/64)⌉ and its wall tracks rows.
+    * is a hidden n²). The similarity scale probe (git 3e96ab2) ran
+    * bits = ⌈log₂(n/64)⌉ and its wall tracked rows.
     */
   def dbscanCosine(
       embs: DataFrame,

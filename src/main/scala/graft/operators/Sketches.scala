@@ -293,40 +293,27 @@ object Sketches {
     * the sketch keeps the tied max-level rows (briefly > k — the same
     * "conservative, never empty" degradation KMV accepts at ties).
     *
-    * `broadcastLevels`: the level table is one row per key; the
-    * default broadcast keeps the corpus-sized `base` side from ever
-    * key-shuffling for this join. At extreme key cardinality (a
-    * billion-key corpus) one-row-per-key no longer fits the driver —
-    * pass false to fall back to a shuffled equi-join (AQE may still
-    * choose broadcast from the measured size).
+    * The level table is one row per key and is broadcast, so the
+    * corpus-sized `base` side never key-shuffles for this join.
     */
   private def levelSample(
       df: DataFrame, keyCol: String, valueCol: String, idCol: String,
-      k: Int, broadcastLevels: Boolean, reuseBase: Boolean): DataFrame = {
-    val base0 = tzBase(df, keyCol, valueCol, idCol)
-    // tz-ONCE (r14-adjudicated default): persist the projection so the
-    // level aggregate and the sample join share ONE md5 pass —
-    // SketchScale: 3.15 s vs 4.21 s at 10⁷ rows, 23.3 s vs 29.3 s at
-    // 10⁸ (single group, k = 4096), and that probe REGENERATES its
-    // source in codegen, the cheapest possible rescan, so a real scan
-    // tilts further toward reuse. The persisted projection is freed by
-    // the ContextCleaner once the query's RDDs drop out of scope.
-    // reuseBase = false restores the recompute form for inputs whose
-    // full-width projection exceeds cluster storage headroom (the
-    // 100 TB caveat: MEMORY_AND_DISK spill writes the projection out,
-    // where a columnar rescan might read less).
-    val base =
-      if (reuseBase)
-        base0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      else base0
-    levelSampleFrom(base, k, broadcastLevels)
+      k: Int): DataFrame = {
+    // tz-ONCE (r14-adjudicated): persist the projection so the level
+    // aggregate and the sample join share ONE md5 pass — sketch scale
+    // probe (git 3e96ab2): 3.15 s vs 4.21 s at 10⁷ rows, 23.3 s vs
+    // 29.3 s at 10⁸ (single group, k = 4096), and that probe
+    // REGENERATED its source in codegen, the cheapest possible rescan,
+    // so a real scan tilts further toward reuse. The persisted
+    // projection is freed by the ContextCleaner once the query's RDDs
+    // drop out of scope.
+    val base = tzBase(df, keyCol, valueCol, idCol)
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    levelSampleFrom(base, k)
   }
 
-  /** The (key, v, id, tz) projection both level-sample stages consume.
-    * Lazy — each consumer recomputes it from the scan (two md5 passes)
-    * unless the caller persists it; [[graft.SketchScale]] races both.
-    */
-  private[graft] def tzBase(
+  /** The (key, v, id, tz) projection both level-sample stages consume. */
+  private def tzBase(
       df: DataFrame, keyCol: String, valueCol: String, idCol: String): DataFrame = {
     val h = md5Hash32(col(idCol).cast("string"))
     df
@@ -337,8 +324,7 @@ object Sketches {
           .otherwise(length(bin(h.bitwiseAND(-h))) - lit(1)).as("__tz"))
   }
 
-  private[graft] def levelSampleFrom(
-      base: DataFrame, k: Int, broadcastLevels: Boolean): DataFrame = {
+  private def levelSampleFrom(base: DataFrame, k: Int): DataFrame = {
     val lvl = base.groupBy(col("__key"), col("__tz"))
       .agg(count(lit(1)).as("__c"))
       .withColumn("__suf", sum(col("__c")).over(
@@ -350,11 +336,10 @@ object Sketches {
           coalesce(max(when(col("__suf") > k, col("__tz"))) + lit(1), lit(0)),
           max(col("__tz")))
           .cast("long").as("__lvl"))
-    // lvl is ONE row per key — broadcast it (by default) so the
-    // corpus-sized base is never shuffled for this join (the map-side
-    // filter then discards all but ~k rows per key before anything
-    // wide happens)
-    base.join(if (broadcastLevels) broadcast(lvl) else lvl, Seq("__key"))
+    // lvl is ONE row per key — broadcast it so the corpus-sized base is
+    // never shuffled for this join (the map-side filter then discards
+    // all but ~k rows per key before anything wide happens)
+    base.join(broadcast(lvl), Seq("__key"))
       .filter(col("__tz") >= col("__lvl"))
   }
 
@@ -378,20 +363,16 @@ object Sketches {
     */
   def quantileSketch(
       df: DataFrame, keyCol: String, valueCol: String, idCol: String,
-      k: Int = 256, qs: Seq[Double] = Seq(0.5),
-      broadcastLevels: Boolean = true,
-      reuseBase: Boolean = true): DataFrame = {
+      k: Int = 256, qs: Seq[Double] = Seq(0.5)): DataFrame = {
     require(k >= 2, s"k must be >= 2, got $k")
     require(qs.nonEmpty && qs.forall(q => q > 0.0 && q <= 1.0),
       s"quantiles must be in (0, 1], got $qs")
-    quantileAnswers(
-      levelSample(df, keyCol, valueCol, idCol, k, broadcastLevels, reuseBase),
-      keyCol, qs)
+    quantileAnswers(levelSample(df, keyCol, valueCol, idCol, k), keyCol, qs)
   }
 
   /** Nearest-rank answers from level-sample rows — [[quantileSketch]]'s
-    * tail, shared with [[graft.SketchScale]]'s tz-once variant. */
-  private[graft] def quantileAnswers(
+    * tail. */
+  private def quantileAnswers(
       sample: DataFrame, keyCol: String, qs: Seq[Double]): DataFrame = {
     val ranked = sample
       .withColumn("__i", row_number().over(
@@ -429,9 +410,8 @@ object Sketches {
     */
   def quantileSketchState(
       df: DataFrame, keyCol: String, valueCol: String, idCol: String,
-      k: Int = 256, broadcastLevels: Boolean = true,
-      reuseBase: Boolean = true): DataFrame =
-    levelSample(df, keyCol, valueCol, idCol, k, broadcastLevels, reuseBase)
+      k: Int = 256): DataFrame =
+    levelSample(df, keyCol, valueCol, idCol, k)
       .groupBy(col("__key"))
       .agg(
         max(col("__n")).as("n"),

@@ -1713,16 +1713,19 @@ object TextAnalysis {
     * (source, gram) once; then ONE ObjectHashAggregate collects each
     * gram's ≤-sources set and explodes its ordered pairs — object list
     * state is bounded by the SOURCE count (feeds, not documents), the
-    * qt46 lesson's safe case. sf1 race vs the gram-keyed self-join
-    * form ([[sourceOverlapViaJoin]]) — run-each-form-in-a-block first
-    * "won" for whichever form ran SECOND (warmer JIT, ~7% both
-    * orders); the honest interleaved order-alternated paired design
-    * (TextScale, 6 rounds) reads join − sets = +1.31 s median with
-    * per-round spread −2.7 to +3.0 s — LOCAL WALLS ARE A TIE inside
-    * the session envelope. The sets form ships on STRUCTURE: it runs
-    * one gram-keyed exchange fewer (the self-join re-exchanges the
-    * distinct gram set twice; the aggregate shuffles it once), and
-    * exchange count is what survives a 100× scale-up.
+    * qt46 lesson's safe case. sf1 race vs the r13 gram-keyed self-join
+    * form (distinct (source, gram) self-joined ON GRAM; removed, in git
+    * at 3e96ab2) — run-each-form-in-a-block first "won" for whichever
+    * form ran SECOND (warmer JIT, ~7% both orders); the honest
+    * interleaved order-alternated paired design (6 rounds) reads
+    * join − sets = +1.31 s median with per-round spread −2.7 to +3.0 s
+    * — LOCAL WALLS ARE A TIE inside the session envelope. The sets form
+    * ships on STRUCTURE: it runs one gram-keyed exchange fewer (the
+    * self-join re-exchanges the distinct gram set twice; the aggregate
+    * shuffles it once), and exchange count is what survives a 100×
+    * scale-up. The self-join form is the fallback should a future
+    * corpus make per-gram source sets large enough to hurt the object
+    * aggregate (sources ≫ 10³ — not a feed matrix any more).
     *
     * Grams-ONCE (second r14 adjudication): the distinct (source, gram)
     * set feeds the pair aggregate AND two size-join branches, so
@@ -1730,25 +1733,26 @@ object TextAnalysis {
     * THREE times (Explain audit). Persisting it won the same
     * interleaved paired race at sf1: recomputed − persisted =
     * +1.30 s paired median (12.70 vs 10.97 s medians, persisted wins
-    * 4/5 pairs), so `reuseGrams = true` is the default; pass false for
-    * inputs whose distinct-gram set exceeds storage headroom (the
-    * persist is MEMORY_AND_DISK and freed by the ContextCleaner, but
-    * at 100 TB the recompute may beat the disk spill).
+    * 4/5 pairs), so the grams are always checkpointed.
     */
   def sourceOverlap(
-      docs: DataFrame, sourceCol: String, textCol: String,
-      n: Int, reuseGrams: Boolean = true): DataFrame = {
+      docs: DataFrame, sourceCol: String, textCol: String, n: Int): DataFrame = {
     require(n >= 1, s"n must be >= 1, got $n")
-    val grams0 = sourceGrams(docs, sourceCol, textCol, n)
-    // EAGER when reused: the final action reads grams through TWO
-    // branches (the common-gram aggregate and the per-source sizes,
-    // the latter a broadcast build) — left as a lazy persist those
-    // concurrent subqueries race the cache fill (the
-    // Structure.neighborhoodJaccard event-log finding). reuseGrams =
-    // false keeps the recompute form for corpora past storage headroom.
-    val grams =
-      if (reuseGrams) grams0.localCheckpoint(true)
-      else grams0
+    // EAGER: the final action reads grams through TWO branches (the
+    // common-gram aggregate and the per-source sizes, the latter a
+    // broadcast build) — left as a lazy persist those concurrent
+    // subqueries race the cache fill (the Structure.neighborhoodJaccard
+    // event-log finding)
+    val grams = docs
+      .filter(col(sourceCol).isNotNull)
+      .select(col(sourceCol).as("__s"),
+        split(lower(trim(col(textCol))), "\\s+").as("__t"))
+      .filter(size(col("__t")) >= n)
+      .select(col("__s"), explode(transform(
+        sequence(lit(0), size(col("__t")) - n),
+        i => concat_ws(" ", slice(col("__t"), i + 1, lit(n))))).as("__g"))
+      .distinct()
+      .localCheckpoint(true)
     val common = grams
       .groupBy(col("__g"))
       .agg(sort_array(collect_set(col("__s"))).as("__ss"))
@@ -1758,25 +1762,6 @@ object TextAnalysis {
         col("__ss"), col("__ia") + 2, size(col("__ss")))).as("__sb"))
       .groupBy(col("__sa"), col("__sb"))
       .agg(count(lit(1)).as("common_grams"))
-    overlapFromCommon(grams, common)
-  }
-
-  /** The distinct (source, gram) projection [[sourceOverlap]] pairs. */
-  private def sourceGrams(
-      docs: DataFrame, sourceCol: String, textCol: String, n: Int): DataFrame =
-    docs
-      .filter(col(sourceCol).isNotNull)
-      .select(col(sourceCol).as("__s"),
-        split(lower(trim(col(textCol))), "\\s+").as("__t"))
-      .filter(size(col("__t")) >= n)
-      .select(col("__s"), explode(transform(
-        sequence(lit(0), size(col("__t")) - n),
-        i => concat_ws(" ", slice(col("__t"), i + 1, lit(n))))).as("__g"))
-      .distinct()
-
-  /** Shared [[sourceOverlap]] tail: per-source sizes + Jaccard. */
-  private def overlapFromCommon(
-      grams: DataFrame, common: DataFrame): DataFrame = {
     val sizes = grams.groupBy(col("__s")).agg(count(lit(1)).as("__n"))
     common
       .join(sizes.select(col("__s").as("__sa"), col("__n").as("grams_a")), Seq("__sa"))
@@ -1787,28 +1772,6 @@ object TextAnalysis {
         round(col("common_grams")
           / (col("grams_a") + col("grams_b") - col("common_grams"))
             .cast("double"), 6).as("jaccard"))
-  }
-
-  /** The gram-keyed SELF-JOIN form of [[sourceOverlap]] — the r13
-    * shipped plan, replaced in r14 on exchange-count structure (local
-    * sf1 walls tied inside the session envelope once the race was run
-    * order-fairly; numbers in [[sourceOverlap]]'s scaladoc;
-    * [[graft.TextScale]] reruns the race). Kept as the measured record
-    * and the fallback should a future corpus make per-gram source sets
-    * large enough to hurt the object aggregate (sources ≫ 10³ — not a
-    * feed matrix any more).
-    */
-  private[graft] def sourceOverlapViaJoin(
-      docs: DataFrame, sourceCol: String, textCol: String,
-      n: Int): DataFrame = {
-    require(n >= 1, s"n must be >= 1, got $n")
-    val grams = sourceGrams(docs, sourceCol, textCol, n)
-    val common = grams.select(col("__s").as("__sa"), col("__g"))
-      .join(grams.select(col("__s").as("__sb"), col("__g")), Seq("__g"))
-      .filter(col("__sa") < col("__sb"))
-      .groupBy(col("__sa"), col("__sb"))
-      .agg(count(lit(1)).as("common_grams"))
-    overlapFromCommon(grams, common)
   }
 
   /** SEQUENCE PACKING — the concat-and-chunk layout every LLM training

@@ -31,4 +31,43 @@ class RegistrySpec extends AnyFunSuite {
     assert(unverified.isEmpty,
       s"gates declared but never verified (run Verify with SPARK_GRAFT_ONLY=${unverified.toSeq.sorted.mkString(",")} then oracle_check): ${unverified.toSeq.sorted}")
   }
+
+  /** "Verify dumps the plans Bench times" holds only while every main
+    * builds its session through `GraftSession.local`; a second builder in
+    * `src/main` would let the confs drift apart again.
+    */
+  test("GraftSession is the only session builder in src/main") {
+    import scala.jdk.CollectionConverters._
+    val files = java.nio.file.Files.walk(java.nio.file.Paths.get("src", "main", "scala"))
+      .iterator().asScala.filter(_.toString.endsWith(".scala")).toSeq
+    val texts = files.map(p => p -> java.nio.file.Files.readString(p))
+    val home = texts.collect { case (p, t) if t.contains("object GraftSession") => p }
+    assert(home.size == 1, s"expected one file defining GraftSession, got $home")
+    val builderCall = "\\.builder\\(\\)".r
+    val offenders = texts.collect {
+      case (p, t) if p != home.head && builderCall.findFirstIn(t).nonEmpty => p.toString
+    }
+    assert(offenders.isEmpty,
+      s"session builders outside GraftSession (call GraftSession.local instead): ${offenders.sorted}")
+  }
+
+  test("SPARK_GRAFT_ONLY selects exactly the named queries and rejects unknown names") {
+    assert(SparkEntry.selectQueries(None).keySet == SparkEntry.queries.keySet)
+    assert(SparkEntry.selectQueries(Some(" q1_agg,q3_join_agg ")).keySet ==
+      Set("q1_agg", "q3_join_agg"))
+    val e = intercept[IllegalArgumentException](
+      SparkEntry.selectQueries(Some("q1_agg,q1_agg_typo,zz_nope")))
+    assert(e.getMessage.contains("q1_agg_typo, zz_nope"), e.getMessage)
+    intercept[IllegalArgumentException](SparkEntry.selectQueries(Some(" , ")))
+  }
+
+  test("failureReason is the exception class plus the first message line") {
+    assert(SparkEntry.failureReason(new IllegalStateException()) ==
+      "java.lang.IllegalStateException")
+    assert(SparkEntry.failureReason(new IllegalStateException(null: String)) ==
+      "java.lang.IllegalStateException")
+    assert(SparkEntry.failureReason(
+      new RuntimeException("\n  [CANNOT_RESOLVE] col `x`  \n== Plan ==\nProject [x]")) ==
+      "java.lang.RuntimeException: [CANNOT_RESOLVE] col `x`")
+  }
 }

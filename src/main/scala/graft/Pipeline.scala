@@ -10,12 +10,17 @@ import org.apache.spark.sql.functions._
   * build → criticality indicator → EAUL sweep → indicator merge → CSV +
   * GeoJSON egress. The reference exchanged every arrow through `.tmp`
   * files and S3 between separate node processes; here each stage is a
-  * DataFrame handed to the next. The two sweeps (criticality, EAUL) are
-  * materialized once as driver-local frames of one row per scenario, so
-  * the merge, the writes and the counts never re-run their routing.
+  * DataFrame handed to the next.
+  *
+  * Spark work is spent only where the routing is. The OSM input is parsed
+  * in one job into driver-local frames, which feed both the graph build
+  * and the merge base. The two sweeps (criticality, EAUL) run one task
+  * per core and are materialized once as driver-local frames, so the
+  * merge, the writes and the summary counts never re-run their routing
+  * and the counts start no job.
   *
   * Usage: `sbt "runMain graft.Pipeline <osmDir> <outDir>"` — with no args,
-  * runs the golden 10-segment network end-to-end (writes to /tmp).
+  * runs the grid(6) demo network end-to-end (writes to a temp dir).
   */
 object Pipeline {
 
@@ -23,6 +28,7 @@ object Pipeline {
     // stage 1-2: ingest + graph build (base-network + preparation)
     val (nodesDf, waysDf) = OsmXml.read(spark, osmDir)
     val g = RoadGraph.fromOsm(spark, nodesDf, waysDf)
+    require(g.numNodes > 0, s"no OSM nodes under $osmDir: the road network is empty")
     // OD points: the four extreme nodes + center snap (stand-in for the
     // od.geojson ingest — callers with real OD data snap the same way)
     val od = Array(
@@ -31,7 +37,8 @@ object Pipeline {
       g.snap(g.nodeLon.sum / g.numNodes, g.nodeLat.sum / g.numNodes))
 
     // stage 3: criticality indicator (way_id, score)
-    val criticality = Criticality.scores(spark, g, od)
+    val wayStats = Criticality.waysStats(spark, g, od)
+    val criticality = Criticality.scoreStats(wayStats)
       .select(col("way_id"), round(col("score"), 2).as("score"))
 
     // stage 4: EAUL (flood stats default-zero when no stats table rides
@@ -49,10 +56,12 @@ object Pipeline {
     val merged = operators.Relational.mergeIndicators(
       rn, "NAME",
       Seq("crit" -> criticality))
-    merged.write.mode("overwrite").option("header", "true").csv(s"$outDir/indicators")
+    // one row per way: one CSV file, in road-network order
+    merged.coalesce(1).write.mode("overwrite").option("header", "true").csv(s"$outDir/indicators")
     eaul.write.mode("overwrite").json(s"$outDir/eaul")
+    // both sweep frames are driver-local: collecting them starts no job
     println(s"[pipeline] ways=${g.ways.length} nodes=${g.numNodes} " +
-      s"criticality_rows=${criticality.count()} eaul_rows=${eaul.count()} -> $outDir")
+      s"criticality_rows=${wayStats.collect().length} eaul_rows=${eaul.collect().length} -> $outDir")
   }
 
   /** Serialize the grid(6) demo network to OSM XML in a temp dir —

@@ -33,9 +33,10 @@ object Criticality {
       unroutablePairs: Int,
       impactedPairs: Int)
 
-  /** One row per way. The fan-out runs once: its rows are collected and
-    * returned as a driver-local frame, so scoring, merge and counts read
-    * them without re-running a Dijkstra task.
+  /** One row per way. The fan-out runs once, in `Routing.sweepSlices`
+    * slices (one per core, each a contiguous run of ways): its rows are
+    * collected and returned as a driver-local frame, so scoring, merge and
+    * counts read them without re-running a Dijkstra task.
     */
   def waysStats(spark: SparkSession, g: CsrGraph, odNodes: Array[Int]): DataFrame = {
     import spark.implicits._
@@ -44,7 +45,7 @@ object Criticality {
     val bg = sc.broadcast(g)
     val bBench = sc.broadcast(benchmark)
     val nWays = g.ways.length
-    sc.parallelize(0 until nWays, math.min(nWays, 256))
+    sc.parallelize(0 until nWays, Routing.sweepSlices(sc, nWays))
       .map { w =>
         val graph = bg.value
         val bench = bBench.value

@@ -179,9 +179,11 @@ object Eaul {
   /** Distributed sweep: (way × upgrade) fan-out, graph/stats broadcast.
     * Work volume = one cost matrix per distinct impassable set (the
     * baseline plus each distinct flood) for each of the 1 + 3·|ways|
-    * scenarios — each task self-contained, zero shuffle. The 3·|ways| + 1
-    * result rows are collected once and returned as a driver-local frame,
-    * so every downstream action reads them without re-running the fan-out.
+    * scenarios — each scenario self-contained, zero shuffle. The 3·|ways|
+    * upgrade scenarios run in `Routing.sweepSlices` slices (one per core,
+    * each a contiguous run of scenarios). The 3·|ways| + 1 result rows are
+    * collected once and returned as a driver-local frame, so every
+    * downstream action reads them without re-running the fan-out.
     */
   def sweep(
       spark: SparkSession,
@@ -202,7 +204,7 @@ object Eaul {
     val bNoTraffic = sc.broadcast(noTraffic)
     val combos = for (w <- g.ways.indices; up <- RoadUpgrades) yield (w, up)
     val results = sc
-      .parallelize(combos, math.min(combos.size, 256))
+      .parallelize(combos, Routing.sweepSlices(sc, combos.size))
       .map { case (w, up) =>
         val graph = bg.value
         val raw = calcEaulLocal(

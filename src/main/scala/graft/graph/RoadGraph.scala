@@ -207,6 +207,10 @@ object RoadGraph {
     * SURF_TYPE, ROAD_CLASS — normalized per `utils.js:140-162` (class
     * n/a → secondary, surface ∉ {paved,unpaved} → unpaved). Edge cost =
     * RUC · haversine(consecutive nodes).
+    *
+    * Bad input throws an `IllegalArgumentException` naming the way: an `nd`
+    * ref with no `<node>`, a non-numeric RUC or length, and a RUC that is
+    * negative, NaN or infinite (Dijkstra needs finite non-negative costs).
     */
   def fromOsm(spark: SparkSession, nodesDf: DataFrame, waysDf: DataFrame): CsrGraph = {
     val nodeRows = nodesDf.collect()
@@ -215,26 +219,28 @@ object RoadGraph {
     val lat = nodeRows.map(_.getAs[Double]("lat"))
     val wayRows = waysDf.collect()
     val ways = wayRows.zipWithIndex.map { case (r, i) =>
+      val id = r.getAs[Long]("way_id")
       val tags = r.getAs[Map[String, String]]("tags")
+      def number(key: String, default: Double): Double =
+        tags.get(key).fold(default) { v =>
+          v.toDoubleOption.getOrElse(
+            throw new IllegalArgumentException(s"way $id: $key tag '$v' is not a number"))
+        }
+      val ruc = number("RUC", 1.0)
+      require(ruc >= 0 && !ruc.isInfinite, s"way $id: RUC $ruc is not a finite non-negative cost")
       val surface = tags.get("SURF_TYPE").map(_.toLowerCase).filter(Set("paved", "unpaved")).getOrElse("unpaved")
       val cls = tags.get("ROAD_CLASS").map(_.toLowerCase).filter(_ != "n/a").getOrElse("secondary")
-      Way(
-        i,
-        r.getAs[Long]("way_id"),
-        tags.getOrElse("NAME", r.getAs[Long]("way_id").toString),
-        tags.get("RUC").map(_.toDouble).getOrElse(1.0),
-        tags.get("length").map(_.toDouble).getOrElse(0.0),
-        surface,
-        cls)
+      Way(i, id, tags.getOrElse("NAME", id.toString), ruc, number("length", 0.0), surface, cls)
     }
     val edges = wayRows.zipWithIndex.flatMap { case (r, i) =>
-      val refs = r.getAs[scala.collection.Seq[Long]]("nodes")
-      refs.sliding(2).collect {
-        case scala.collection.Seq(a, b) if a != b =>
-          val ia = nodeIdx(a)
-          val ib = nodeIdx(b)
+      val way = ways(i)
+      val at = r.getAs[scala.collection.Seq[Long]]("nodes").map { ref =>
+        nodeIdx.getOrElse(ref, throw new IllegalArgumentException(s"way ${way.osmId}: nd ref $ref has no <node>"))
+      }
+      at.sliding(2).collect {
+        case scala.collection.Seq(ia, ib) if ia != ib =>
           val len = graft.functions.GeoFunctions.haversineKm(lon(ia), lat(ia), lon(ib), lat(ib))
-          (ia, ib, i, ways(i).ruc * len)
+          (ia, ib, i, way.ruc * len)
       }.toSeq
     }.toSeq
     compile(nodeRows.length, edges, ways, lon, lat)

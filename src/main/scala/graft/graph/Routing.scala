@@ -1,5 +1,6 @@
 package graft.graph
 
+import org.apache.spark.SparkContext
 import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
@@ -20,6 +21,16 @@ case class PairCost(oIdx: Int, dIdx: Int, routable: Boolean, ruc: Option[Double]
   * re-contract (the reference's own pain point, `utils.js:273-294`).
   */
 object Routing {
+
+  /** Slice count of a scenario fan-out (criticality, EAUL, the distributed
+    * route matrix): one slice per core, capped at the scenario count. A
+    * scenario costs a few Dijkstra runs, far less than a task's launch and
+    * deserialization, so more slices than cores only add overhead. Slices
+    * are contiguous and `collect` keeps their order, so the rows and their
+    * order do not depend on the count.
+    */
+  private[graph] def sweepSlices(sc: SparkContext, scenarios: Int): Int =
+    math.max(1, math.min(scenarios, sc.defaultParallelism))
 
   /** All-pairs upper-triangle matrix, driver/executor-local. */
   def routeMatrixLocal(
@@ -52,7 +63,7 @@ object Routing {
     import spark.implicits._
     val n = odNodes.length
     val directed = spark.sparkContext
-      .parallelize(0 until n, math.min(n, 64))
+      .parallelize(0 until n, sweepSlices(spark.sparkContext, n))
       .flatMap { i =>
         val g = bg.value
         val dist = g.dijkstra(odNodes(i))

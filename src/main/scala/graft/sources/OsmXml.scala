@@ -7,9 +7,12 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * `debug-scripts/index-nodes.js:17-43`): stream-parse `<node>`/`<way>`
   * elements into nodes/ways tables.
   *
-  * Spark shape: files land whole per task (`wholetext`), StAX parses
-  * executor-side in `flatMap` — no driver bottleneck, one task per file;
-  * a multi-file OSM extract parallelizes naturally.
+  * Spark shape: files land whole per task (`wholetext`) and StAX parses
+  * executor-side, one task per file, so a multi-file OSM extract parses in
+  * parallel. The parsed elements are collected in that one job and both
+  * frames are driver-local over them: the road network is driver-small
+  * (SURVEY §2.8) and the graph build collects it anyway, so reading either
+  * frame never parses the files again.
   */
 object OsmXml {
 
@@ -77,12 +80,13 @@ object OsmXml {
     java.nio.file.Files.writeString(java.nio.file.Paths.get(path), sb.result())
   }
 
+  /** Nodes and ways of every OSM file under `path`, in file order: one
+    * parse job, then two driver-local frames over its result.
+    */
   def read(spark: SparkSession, path: String): (DataFrame, DataFrame) = {
     import spark.implicits._
     val files = spark.read.option("wholetext", "true").text(path).as[String]
-    val parsed = files.rdd.map(parse)
-    val nodes = parsed.flatMap(_._1).toDF()
-    val ways = parsed.flatMap(_._2).toDF()
-    (nodes, ways)
+    val parsed = files.rdd.map(parse).collect()
+    (parsed.flatMap(_._1).toSeq.toDF(), parsed.flatMap(_._2).toSeq.toDF())
   }
 }

@@ -1,7 +1,14 @@
 package graft
 
+import graft.sources.OsmXml
+import java.util.concurrent.{ConcurrentHashMap, ConcurrentLinkedQueue, CountDownLatch, TimeUnit}
+import java.util.concurrent.atomic.AtomicInteger
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageSubmitted, SparkListenerTaskEnd}
+import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalatest.funsuite.AnyFunSuite
+import scala.jdk.CollectionConverters._
 
 /** End-to-end run of the five-stage indicator pipeline (§3.1) — OSM XML
   * ingest → graph build → criticality → EAUL sweep → merge → CSV/JSON
@@ -11,9 +18,68 @@ import org.scalatest.funsuite.AnyFunSuite
 class PipelineSpec extends AnyFunSuite {
   private lazy val spark = GraftSession.local(4, "pipeline-spec")
 
+  /** What `body` ran: the ids of the jobs that read input records, the
+    * task count of every submitted stage, and the name of every SQL
+    * action (`count`, `collect`, `command`, …).
+    */
+  private case class JobShape(inputJobs: Set[Int], stageTasks: Seq[Int], sqlActions: Seq[String])
+
+  private def jobShape(body: => Unit): JobShape = {
+    val sc = spark.sparkContext
+    val jobOfStage = new ConcurrentHashMap[Int, Int]()
+    val inputStages = ConcurrentHashMap.newKeySet[Int]()
+    val stageTasks = new ConcurrentHashMap[Int, Int]()
+    val actions = new ConcurrentLinkedQueue[String]()
+    val flushJob = new AtomicInteger(-1)
+    val flushed = new CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = {
+        e.stageIds.foreach(jobOfStage.put(_, e.jobId))
+        if (e.properties != null && e.properties.getProperty("spark.job.description") == "flush")
+          flushJob.set(e.jobId)
+      }
+      override def onJobEnd(e: SparkListenerJobEnd): Unit =
+        if (e.jobId == flushJob.get) flushed.countDown()
+      override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit =
+        stageTasks.put(e.stageInfo.stageId, e.stageInfo.numTasks)
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+        if (e.taskMetrics != null && e.taskMetrics.inputMetrics.recordsRead > 0) inputStages.add(e.stageId)
+    }
+    val qel = new QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit = actions.add(funcName)
+      override def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = actions.add(funcName)
+    }
+    sc.addSparkListener(listener)
+    spark.listenerManager.register(qel)
+    try {
+      body
+      // listener delivery is async but ordered: once a marker job's end
+      // is delivered, so is every event `body` posted before it
+      sc.setJobDescription("flush")
+      try sc.parallelize(Seq(1), 1).count()
+      finally sc.setJobDescription(null)
+      assert(flushed.await(10, TimeUnit.SECONDS), "listener events not delivered")
+    } finally {
+      sc.removeSparkListener(listener)
+      spark.listenerManager.unregister(qel)
+    }
+    JobShape(
+      inputStages.asScala.map(jobOfStage.get).toSet,
+      stageTasks.asScala.collect { case (s, n) if jobOfStage.get(s) != flushJob.get => n }.toSeq,
+      actions.asScala.toSeq)
+  }
+
   test("five-stage pipeline egresses merged indicators and EAUL results") {
     val outDir = java.nio.file.Files.createTempDirectory("pipeline-out").toString
-    Pipeline.run(spark, Pipeline.demoOsmDir(), outDir)
+    val shape = jobShape(Pipeline.run(spark, Pipeline.demoOsmDir(), outDir))
+    // Spark work only where the routing is: one parse of the OSM input, no
+    // count job, and no stage wider than the cores (grid(6) has 60 ways,
+    // so 60 criticality and 180 EAUL scenarios)
+    assert(shape.inputJobs.size == 1, s"jobs reading the OSM input: ${shape.inputJobs}")
+    assert(shape.sqlActions.nonEmpty && !shape.sqlActions.contains("count"), s"SQL actions: ${shape.sqlActions}")
+    val parallelism = spark.sparkContext.defaultParallelism
+    assert(shape.stageTasks.nonEmpty && shape.stageTasks.max <= parallelism,
+      s"stage task counts ${shape.stageTasks}, defaultParallelism $parallelism")
 
     val indicators = spark.read.option("header", "true").csv(s"$outDir/indicators")
     // grid(6): 60 ways, every one present after the merge, each with a
@@ -30,6 +96,14 @@ class PipelineSpec extends AnyFunSuite {
     // 60 ways × 3 upgrades + baseline = 181 rows
     assert(eaul.count() == 181)
     assert(eaul.filter(col("way_id") === "baseline").count() == 1)
+  }
+
+  test("an OSM input with no nodes is rejected, naming the input") {
+    val osmDir = java.nio.file.Files.createTempDirectory("pipeline-empty")
+    OsmXml.write(Nil, Nil, osmDir.resolve("empty.osm").toString)
+    val outDir = java.nio.file.Files.createTempDirectory("pipeline-out").toString
+    val e = intercept[IllegalArgumentException](Pipeline.run(spark, osmDir.toString, outDir))
+    assert(e.getMessage.contains(osmDir.toString), e.getMessage)
   }
 
   test("curation pipeline egresses a deduped, sharded corpus and its PQ index, stages monotone") {

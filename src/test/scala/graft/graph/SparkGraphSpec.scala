@@ -4,7 +4,8 @@ import graft.GraftSession
 import graft.sources.OsmXml
 import java.util.concurrent.ConcurrentLinkedQueue
 import java.util.concurrent.atomic.AtomicInteger
-import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted, SparkListenerStageSubmitted}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted, SparkListenerStageSubmitted, StageInfo}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import scala.jdk.CollectionConverters._
@@ -118,43 +119,73 @@ class SparkGraphSpec extends AnyFunSuite {
     up23.foreach(r => assert(r.getAs[Double]("eaul") > baseline))
   }
 
-  // task counts of the stages `body` runs
-  private def stageTasks(body: => Unit): Seq[Int] = {
-    val submitted = new ConcurrentLinkedQueue[Int]()
+  // `body`'s result and the stages it ran
+  private def submittedStages[A](body: => A): (A, Seq[StageInfo]) = {
+    val submitted = new ConcurrentLinkedQueue[StageInfo]()
     val completed = new AtomicInteger()
     val listener = new SparkListener {
-      override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit = submitted.add(e.stageInfo.numTasks)
+      override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit = submitted.add(e.stageInfo)
       override def onStageCompleted(e: SparkListenerStageCompleted): Unit = completed.incrementAndGet()
     }
     spark.sparkContext.addSparkListener(listener)
-    try {
-      body
+    val result = try {
+      val r = body
       // listener delivery is async; wait until every submitted stage has completed
       val deadline = System.nanoTime() + 10_000_000_000L
       while (System.nanoTime() < deadline && (submitted.isEmpty || completed.get < submitted.size))
         Thread.sleep(50)
+      r
     } finally spark.sparkContext.removeSparkListener(listener)
-    submitted.asScala.toSeq
+    (result, submitted.asScala.toSeq)
   }
 
   test("sweep results are materialized once: count and write run no fan-out stage") {
     val parallelism = spark.sparkContext.defaultParallelism
     val out = java.nio.file.Files.createTempDirectory("sweep-out").toString
     val (grid, gridOd) = DemoNetwork.grid(6)
-    val frames = Seq(
-      "eaul" -> Eaul.sweep(
+    // 30 EAUL scenarios on the golden network, 60 criticality ones on grid(6)
+    val sweeps = Seq[(String, () => DataFrame)](
+      "eaul" -> (() => Eaul.sweep(
         spark, GoldenNetwork.graph, GoldenNetwork.floodStats, GoldenNetwork.odNodes,
-        GoldenNetwork.yearlyTraffic, GoldenNetwork.noTraffic),
-      "criticality" -> Criticality.scores(spark, grid, gridOd))
-    frames.foreach { case (name, df) =>
-      val tasks = stageTasks {
+        GoldenNetwork.yearlyTraffic, GoldenNetwork.noTraffic)),
+      "criticality" -> (() => Criticality.scores(spark, grid, gridOd)))
+    sweeps.foreach { case (name, sweep) =>
+      val (df, fanOut) = submittedStages(sweep())
+      // one slice per core, not one task per scenario
+      assert(fanOut.nonEmpty && fanOut.map(_.numTasks).max <= parallelism,
+        s"$name: fan-out task counts ${fanOut.map(_.numTasks)}")
+      val (_, stages) = submittedStages {
         df.count()
         df.write.mode("overwrite").json(s"$out/$name")
       }
+      val tasks = stages.map(_.numTasks)
       assert(tasks.nonEmpty, name)
-      // the fan-out has one task per scenario (30 and 60 here)
+      // a re-run fan-out would read the sweep's own parallelized scenarios
+      val rerun = stages.flatMap(_.rddInfos.map(_.callSite))
+        .filter(c => c.startsWith("parallelize at Eaul.scala") || c.startsWith("parallelize at Criticality.scala"))
+      assert(rerun.isEmpty, s"$name: fan-out RDDs in the count and write stages: $rerun")
       assert(tasks.max <= parallelism, s"$name: stage task counts $tasks, defaultParallelism $parallelism")
     }
+  }
+
+  private def osmGraph(ways: Seq[OsmXml.OsmWay]): CsrGraph = {
+    val dir = java.nio.file.Files.createTempDirectory("osm-bad")
+    val nodes = Seq(OsmXml.OsmNode(1, 0.0, 0.0), OsmXml.OsmNode(2, 0.01, 0.0))
+    OsmXml.write(nodes, ways, dir.resolve("net.osm").toString)
+    val (nDf, wDf) = OsmXml.read(spark, dir.toString)
+    RoadGraph.fromOsm(spark, nDf, wDf)
+  }
+
+  test("fromOsm names the way and the bad value: a dangling nd ref, a non-numeric, negative, NaN or infinite RUC") {
+    val bad = Seq(
+      OsmXml.OsmWay(7, Seq(1L, 2L, 99L), Map("RUC" -> "1.0")) -> "ref 99") ++
+      Seq("abc", "-1.5", "NaN", "Infinity").map(ruc => OsmXml.OsmWay(7, Seq(1L, 2L), Map("RUC" -> ruc)) -> ruc)
+    bad.foreach { case (way, value) =>
+      val e = intercept[IllegalArgumentException](osmGraph(Seq(way)))
+      assert(e.getMessage.contains("way 7") && e.getMessage.contains(value), e.getMessage)
+    }
+    // a zero RUC is a valid (free) cost
+    assert(osmGraph(Seq(OsmXml.OsmWay(7, Seq(1L, 2L), Map("RUC" -> "0")))).cost.forall(_ == 0.0))
   }
 
   test("custom Catalyst operator: RouteMatrixExec plans, composes, and matches the kernel") {

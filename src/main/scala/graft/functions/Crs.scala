@@ -1,8 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.expressions.UserDefinedFunction
-import org.apache.spark.sql.functions.udf
-
 /** F15 — general CRS reprojection (reference reprojects every source
   * shapefile with `ogr2ogr -t_srs EPSG:4326`, `scripts/base-network.sh:98-99`,
   * and pyproj for raster CRS, `scripts/imgstats/img-stats.py:60-73`).
@@ -347,21 +344,5 @@ object Crs {
       }
     } else throw new IllegalArgumentException(
       s"unrecognized .prj WKT root (expected GEOGCS or PROJCS): ${s.take(80)}")
-  }
-
-  /** UDF form: project UTM (x, y) metres to [lon, lat] degrees. */
-  def utmToLonLatUdf(zone: Int, south: Boolean): UserDefinedFunction = {
-    val p = utmZone(zone, south)
-    udf { (x: Double, y: Double) =>
-      val (lon, lat) = tmInverse(x, y, p); Seq(lon, lat)
-    }
-  }
-
-  /** UDF form: [lon, lat] degrees to UTM (x, y) metres. */
-  def lonLatToUtmUdf(zone: Int, south: Boolean): UserDefinedFunction = {
-    val p = utmZone(zone, south)
-    udf { (lon: Double, lat: Double) =>
-      val (x, y) = tmForward(lon, lat, p); Seq(x, y)
-    }
   }
 }

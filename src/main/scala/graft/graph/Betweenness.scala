@@ -88,10 +88,8 @@ object Betweenness {
       .distinct()
     // eager + size-partitioned: the BFS and dependency loops probe ed
     // every round
-    val ed0 = e.select(col("a").as("v"), col("b").as("w"))
-      .unionAll(e.select(col("b").as("v"), col("a").as("w")))
-      .localCheckpoint(true)
-    val ed = ed0.coalesce(Iterate.parts(spark, ed0.count()))
+    val (ed, _) = Iterate.sized(e.select(col("a").as("v"), col("b").as("w"))
+      .unionAll(e.select(col("b").as("v"), col("a").as("w"))))
     val nodes = ed.select(col("v")).distinct()
     val n = nodes.count()
     if (n == 0L) {
@@ -168,10 +166,9 @@ object Betweenness {
     * hop-count form routes "shortest paths" that no traveler takes
     * (the qg32 rationale, applied to the brokerage question).
     *
-    * Three keyed-join fixpoints, each localCheckpointed per round with
-    * exact convergence detection (distances and δ flag changed rows in
-    * the round's own plan and stop through [[Iterate.untilStable]]; σ
-    * uses the exact monotone (count, Σσ) integer signature):
+    * Three keyed-join fixpoints on [[Iterate.untilStable]], each
+    * localCheckpointed per round with exact convergence detection:
+    * distances, σ and δ flag changed rows in the round's own plan.
     *
     *  1. DISTANCES from the pivot set — the [[Bfs.minPlus]] kernel
     *     keyed by (pivot, node).
@@ -224,62 +221,28 @@ object Betweenness {
       .select(col("p"), col("__u"), col("__v"))
       .localCheckpoint(true)
 
-    // 2. σ fixpoint over the DAG (exact Longs, monotone in hop rounds).
-    // Convergence by the (count, Σσ) signature instead of a per-round
-    // join against the previous table: σ_t(v) is NONDECREASING in t
-    // (round t counts shortest paths of ≤ t hops) and the reached set
-    // only grows, so equal count AND equal exact-integer sum imply no
-    // row changed — the signature is exact, not heuristic (the
-    // Dag.longestPathLayer argument; DECIMAL(38,0) so huge path counts
-    // can't overflow the sum). One cheap cached aggregate replaces the
-    // n²-row join per round.
+    // 2. σ fixpoint over the DAG (exact Longs, monotone in hop rounds):
+    // σ_t(v) is NONDECREASING in t (round t counts shortest paths of
+    // ≤ t hops) and the reached set only grows, so the old σ rides the
+    // max-merge under a tag and a row whose merged σ beats it (or that
+    // is new) is flagged. Every pivot-seeded DAG is acyclic under
+    // positive weights, so the fold is exact and stable at DAG depth.
     val seedSig = pivotSet.select(col("p"), col("p").as("v"), lit(1L).as("sigma"))
-    var sig = seedSig.localCheckpoint(true)
-    // The signature's exactness proof needs the Σσ sum to be REAL: a
-    // null sum with count > 0 means the DECIMAL(38,0) aggregate
-    // overflowed (non-ANSI sum returns null), and coalescing it to zero
-    // would conflate "overflowed" with "empty" — two consecutive
-    // equal-count overflowed rounds would falsely signal convergence.
-    // Fail loudly instead; σ itself stays a Long per node, whose own
-    // bound (paths per node < 2⁶³) is the tier's documented contract.
-    def sigSignature(df: DataFrame): (Long, java.math.BigDecimal) = {
-      val r = df.agg(
-        count(lit(1)),
-        sum(col("sigma").cast("decimal(38,0)"))).head()
-      val n = r.getLong(0)
-      val s = r.getDecimal(1)
-      if (n > 0 && s == null)
-        throw new ArithmeticException(
-          "runWeighted σ signature: sum(sigma) overflowed decimal(38,0) " +
-            s"over $n rows — path counts too large for the exact signature")
-      (n, if (s == null) java.math.BigDecimal.ZERO else s)
-    }
-    var sigPrev = sigSignature(sig)
-    var rounds = 0
-    var changing = true
-    while (changing) {
-      rounds += 1
-      if (rounds > maxRounds)
-        throw new IllegalStateException(
-          s"runWeighted σ still changing after maxRounds=$maxRounds")
-      val next = seedSig.unionAll(
-          dagE.join(sig.select(col("p"), col("v").as("__u"), col("sigma")),
+    val sig = Iterate.untilStable(seedSig, maxRounds, "runWeighted sigma") { (s, _) =>
+      s.select(col("p"), col("v"), col("sigma"), lit(false).as("__cand"))
+        .unionAll(seedSig.withColumn("__cand", lit(true)))
+        .unionAll(
+          dagE.join(s.select(col("p"), col("v").as("__u"), col("sigma")),
             Seq("p", "__u"))
             .groupBy(col("p"), col("__v"))
             .agg(sum(col("sigma")).as("sigma"))
-            .select(col("p"), col("__v").as("v"), col("sigma")))
+            .select(col("p"), col("__v").as("v"), col("sigma"), lit(true).as("__cand")))
         .groupBy(col("p"), col("v"))
-        .agg(max(col("sigma")).as("sigma"))
-        .localCheckpoint(true)
-      val cur = sigSignature(next)
-      sig = next
-      changing = cur != sigPrev
-      sigPrev = cur
+        .agg(max(when(col("__cand"), col("sigma"))).as("sigma"),
+          max(when(!col("__cand"), col("sigma"))).as("__old"))
+        .select(col("p"), col("v"), col("sigma"),
+          (col("__old").isNull || col("sigma") =!= col("__old")).as("__imp"))
     }
-    // σ(v) at round t counts shortest paths of ≤ t hops: the union's
-    // max-merge keeps the newest (largest) count per node; every
-    // pivot-seeded DAG is acyclic under positive weights, so the fold
-    // is exact and stable at DAG depth
 
     // 3. per-edge ratio once, then δ backward fixpoint
     val dagR = dagE

@@ -131,13 +131,11 @@ object Bfs {
         col(wCol).cast("double").as("__w"))
       .filter(col("v").isNotNull && col("t").isNotNull && col("__w").isNotNull)
       .filter(col("v") =!= col("t"))
-    val ed0 = (if (directed) typed
-               else typed.unionAll(
-                 typed.select(col("t").as("v"), col("v").as("t"), col("__w"))))
-      .groupBy(col("v"), col("t"))
-      .agg(min(col("__w")).as("__w"))
-      .localCheckpoint(true)
-    val ed = ed0.coalesce(Iterate.parts(spark, ed0.count()))
+    val (ed, _) = Iterate.sized(
+      (if (directed) typed
+       else typed.unionAll(typed.select(col("t").as("v"), col("v").as("t"), col("__w"))))
+        .groupBy(col("v"), col("t"))
+        .agg(min(col("__w")).as("__w")))
     // fail fast on negative weights: with directed=false, ONE negative
     // edge is a 2-cycle of negative total — the fixpoint would burn all
     // maxRounds of joins before throwing a generic non-convergence
@@ -185,10 +183,8 @@ object Bfs {
       .filter(col("a") =!= col("b"))
       .groupBy(col("a"), col("b"))
       .agg(min(col("__w")).as("__w"))
-    val ed0 = e.select(col("a").as("v"), col("b").as("t"), col("__w"))
-      .unionAll(e.select(col("b").as("v"), col("a").as("t"), col("__w")))
-      .localCheckpoint(true)
-    val ed = ed0.coalesce(Iterate.parts(edges.sparkSession, ed0.count()))
+    val (ed, _) = Iterate.sized(e.select(col("a").as("v"), col("b").as("t"), col("__w"))
+      .unionAll(e.select(col("b").as("v"), col("a").as("t"), col("__w"))))
     val minW = ed.agg(min(col("__w"))).head()
     if (!minW.isNullAt(0) && minW.getDouble(0) <= 0.0) {
       throw new IllegalArgumentException(

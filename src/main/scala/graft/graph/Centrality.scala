@@ -87,8 +87,7 @@ object Centrality {
       edges: DataFrame, aCol: String, bCol: String): DataFrame = {
     val spark = edges.sparkSession
     // eager + size-partitioned: the layer loop probes ed every round
-    val ed0 = symmetrize(edges, aCol, bCol).localCheckpoint(true)
-    val ed = ed0.coalesce(Iterate.parts(spark, ed0.count()))
+    val (ed, _) = Iterate.sized(symmetrize(edges, aCol, bCol))
     val nodes = ed.select(col("v")).distinct()
     if (nodes.isEmpty) {
       return spark.range(0).select(
@@ -406,22 +405,16 @@ object Centrality {
     // eager (the PageRank/Hits rationale): computed once, the 8 eigenStep
     // rounds and the node derivation all read checkpointed blocks —
     // through a data-sized coalesce view (the PageRank transV rationale)
-    val ed0 = (weightCol match {
+    val (ed, edParts) = Iterate.sized(weightCol match {
       case Some(w) => symmetrizeWeighted(edges, aCol, bCol, w)
       case None => symmetrize(edges, aCol, bCol).withColumn("__w", lit(1.0))
-    }).localCheckpoint(true)
-    val edParts = Iterate.parts(edges.sparkSession, ed0.count())
-    val ed = ed0.coalesce(edParts)
+    })
     val nodes = ed.select(col("v")).distinct()
-    var x = nodes.select(col("v"), lit(1.0).as("__x")).coalesce(edParts)
-      .localCheckpoint(true)
-    var i = 0
-    while (i < iters) {
-      // coalesced like the Hits/PageRank vectors: the aggregate's
-      // shuffle.partitions blocks would otherwise fan every round out
-      x = eigenStep(ed, x).coalesce(edParts).localCheckpoint(true)
-      i += 1
-    }
+    // coalesced like the Hits/PageRank vectors: the aggregate's
+    // shuffle.partitions blocks would otherwise fan every round out
+    val x = Iterate.fixedRounds(
+      nodes.select(col("v"), lit(1.0).as("__x")).coalesce(edParts),
+      iters, "eigenvectorCentrality")((x, _) => eigenStep(ed, x).coalesce(edParts))
     x.select(col("v").as("node"), round(col("__x"), 6).as("score"))
   }
 
@@ -460,8 +453,7 @@ object Centrality {
       trackNf: Boolean): Option[(DataFrame, Vector[Long])] = {
     require(p >= 4 && p <= 12, s"p must be in [4, 12], got $p")
     // eager + size-partitioned: every round probes ed
-    val ed0 = symmetrize(edges, aCol, bCol).localCheckpoint(true)
-    val ed = ed0.coalesce(Iterate.parts(edges.sparkSession, ed0.count()))
+    val (ed, _) = Iterate.sized(symmetrize(edges, aCol, bCol))
     val nodes = ed.select(col("v")).distinct()
     if (nodes.isEmpty) {
       return None

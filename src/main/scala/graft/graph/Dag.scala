@@ -12,17 +12,16 @@ import org.apache.spark.sql.functions._
   * fixpoint machinery, max-fold instead of min-fold.
   *
   * Algorithm: the longest-path DP `layer(v) = max(0, 1 + max over
-  * incoming u→v of layer(u))` iterated to fixpoint. Layers only GROW
-  * and are bounded by n − 1 on any acyclic input, so the (count, Σ)
-  * mass signature detects convergence (the SCC/HyperBall idiom —
-  * EXACT here because layers are integer Longs summed without
-  * rounding: any single-node growth strictly raises Σlayer, so the
-  * signature cannot absorb a change the way [[criticalPath]]'s old
-  * FP cost sum could) and a
-  * layer reaching n PROVES a cycle — the operator throws rather than
-  * returning garbage ranks for a non-DAG input (cycles make "longest
-  * path" undefined; silently dropping back-edges would hide a data
-  * bug). Self-loops are cycles and throw via the same guard.
+  * incoming u→v of layer(u))` iterated to fixpoint on
+  * [[Iterate.untilStable]]. Layers only GROW, so a row whose max-merged
+  * layer beats its old one is flagged and the first round flagging none
+  * is the fixpoint. Round t settles every path of ≤ t hops, so an
+  * acyclic input stops within n rounds (≤ n − 1 improving ones), while
+  * on a cycle every round improves: still improving at round n PROVES a
+  * cycle — the operator throws rather than returning garbage ranks for
+  * a non-DAG input (cycles make "longest path" undefined; silently
+  * dropping back-edges would hide a data bug). Self-loops are cycles
+  * and throw via the same guard.
   *
   * Null endpoints (the [[Scc]] contract): an edge with a null side is
   * NO EDGE, but its non-null side is still a node (isolated ⇒ layer 0).
@@ -33,8 +32,9 @@ import org.apache.spark.sql.functions._
   * Scale shape: state is Θ(n) rows keyed by node; each round is one
   * edge-keyed equi-join + one node-keyed max aggregate,
   * localCheckpointed so plans never stack (the qg9 lineage lesson). No
-  * driver-side graph — the only driver values are the 1-row signature
-  * and node count. Rounds = the longest path length L (inherent to
+  * driver-side graph — the only driver value is the node count; the
+  * changed-row count is observed inside each round's checkpoint job.
+  * Rounds = the longest path length L + 1 (inherent to
   * label propagation; a 100 TB dependency corpus is wide and shallow,
   * so L stays small while n scales). Throws after `maxRounds` rounds
   * without convergence.
@@ -59,40 +59,38 @@ object Dag {
       .localCheckpoint(true)
     val nNodes = nodes.count()
 
-    var layer = nodes.select(col("node"), lit(0L).as("layer"))
-      .localCheckpoint(true)
-    // one driver row per round: the convergence signature AND the
-    // cycle guard share a single aggregate pass
-    def sig(df: DataFrame): (Long, Long, Long) = {
-      val r = df.agg(count(lit(1)), coalesce(sum(col("layer")), lit(0L)),
-        coalesce(max(col("layer")), lit(0L))).head()
-      (r.getLong(0), r.getLong(1), r.getLong(2))
-    }
-    var prev = sig(layer)
-    var rounds = 0
-    var changing = nNodes > 0
-    while (changing) {
-      rounds += 1
-      if (rounds > maxRounds)
-        throw new IllegalStateException(
-          s"longestPathLayer did not converge within $maxRounds rounds — " +
-            "either a cycle or a longer-than-expected critical path; " +
-            "check acyclicity or raise maxRounds")
-      layer = layer.unionAll(
+    untilAcyclic(nodes.select(col("node"), lit(0L).as("layer")),
+        nNodes, maxRounds, "longestPathLayer") { layer =>
+      // the old layer rides the merge under a tag, so the same max
+      // aggregate recovers it and "grew" is a column
+      layer.select(col("node"), col("layer"), lit(false).as("__cand"))
+        .unionAll(
           e.join(layer.withColumnRenamed("node", "s"), Seq("s"))
-            .select(col("d").as("node"), (col("layer") + 1L).as("layer")))
+            .select(col("d").as("node"), (col("layer") + 1L).as("layer"),
+              lit(true).as("__cand")))
         .groupBy(col("node"))
-        .agg(max(col("layer")).as("layer"))
-        .localCheckpoint(true)
-      val cur = sig(layer)
-      if (cur._3 >= nNodes)
-        throw new IllegalArgumentException(
-          s"input graph has a cycle: a path of length ${cur._3} exists over " +
-            s"$nNodes nodes (acyclic inputs are bounded by n - 1)")
-      changing = cur != prev
-      prev = cur
+        .agg(max(col("layer")).as("layer"),
+          max(when(!col("__cand"), col("layer"))).as("__ol"))
+        .select(col("node"), col("layer"), (col("layer") =!= col("__ol")).as("__imp"))
     }
-    layer
+  }
+
+  /** The fixpoint both DPs share: `step` from `init` on
+    * [[Iterate.untilStable]], bounded at min(maxRounds, nNodes) rounds.
+    * An acyclic input is stable by round nNodes; still improving there
+    * means a cycle and throws `IllegalArgumentException`, while a
+    * `maxRounds` below nNodes keeps its own round-bound error.
+    */
+  private def untilAcyclic(init: DataFrame, nNodes: Long, maxRounds: Int, what: String)(
+      step: DataFrame => DataFrame): DataFrame = {
+    val bound = math.max(1L, math.min(maxRounds.toLong, nNodes)).toInt
+    try Iterate.untilStable(init, bound, what)((s, _) => step(s))
+    catch {
+      case bound: IllegalStateException if nNodes <= maxRounds =>
+        throw new IllegalArgumentException(
+          s"input graph has a cycle: a path of length $nNodes exists over " +
+            s"$nNodes nodes (acyclic inputs are bounded by n - 1)", bound)
+    }
   }
 
   /** CRITICAL PATH — [[longestPathLayer]] with edge DURATIONS: per node,
@@ -110,11 +108,11 @@ object Dag {
     * winning path and merge by max, so a recursive-CTE replay is
     * bit-identical; integer-valued durations give exact integer costs.
     *
-    * Convergence is an EXACT per-node changed-row count (the
-    * [[Iterate.untilStable]] pattern): the old state rides the merge
-    * union under a tag, so the same max aggregate that merges also
-    * recovers the old (layer, cost) per node and rows whose layer OR
-    * cost moved are counted off the checkpointed result. The first
+    * Convergence is an EXACT per-node changed-row flag on
+    * [[Iterate.untilStable]]: the old state rides the merge union under
+    * a tag, so the same max aggregate that merges also recovers the old
+    * (layer, cost) per node and rows whose layer OR cost moved are
+    * flagged and counted inside the round's checkpoint job. The first
     * draft's Σcost signature was a double sum that could absorb a
     * same-hop-length cost improvement smaller than the sum's ulp
     * (Σ≈10¹⁶ swallows deltas < 1); a row-wise compare of max-merged
@@ -144,27 +142,15 @@ object Dag {
       .localCheckpoint(true)
     val nNodes = nodes.count()
 
-    var state = nodes.select(col("node"), lit(0L).as("layer"), lit(0.0).as("cost"))
-      .localCheckpoint(true)
-    var rounds = 0
-    var changing = nNodes > 0
-    while (changing) {
-      rounds += 1
-      if (rounds > maxRounds)
-        throw new IllegalStateException(
-          s"criticalPath did not converge within $maxRounds rounds — " +
-            "either a cycle or a longer-than-expected critical path; " +
-            "check acyclicity or raise maxRounds")
+    untilAcyclic(nodes.select(col("node"), lit(0L).as("layer"), lit(0.0).as("cost")),
+        nNodes, maxRounds, "criticalPath") { state =>
       // FUSED round: the old state rides the same union under a tag, so
       // ONE max aggregate yields the merged (layer, cost) AND the old
-      // values per node — "changed" becomes a column and the exact
-      // changed-row count + cycle guard read the checkpointed blocks
-      // (one checkpoint + one cached aggregate per round; the previous
-      // shape paid an extra shuffle join against the old table). The
-      // node set is stable (every round's union carries every node), so
-      // the old-value max is total and a row moved iff layer or cost
-      // grew — same exact compare of max-merged values as before.
-      val next = state
+      // values per node. The node set is stable (every round's union
+      // carries every node), so the old-value max is total and a row
+      // moved iff layer or cost grew — an exact compare of max-merged
+      // values.
+      state
         .select(col("node"), col("layer"), col("cost"), lit(false).as("__cand"))
         .unionAll(
           e.join(state.withColumnRenamed("node", "s"), Seq("s"))
@@ -177,19 +163,7 @@ object Dag {
           max(when(!col("__cand"), col("cost"))).as("__oc"))
         .select(col("node"), col("layer"), col("cost"),
           (col("layer") =!= col("__ol") || col("cost") =!= col("__oc"))
-            .as("__chg"))
-        .localCheckpoint(true)
-      val r = next.agg(
-        coalesce(sum(when(col("__chg"), 1L).otherwise(0L)), lit(0L)),
-        coalesce(max(col("layer")), lit(0L))).head()
-      val (changed, maxLayer) = (r.getLong(0), r.getLong(1))
-      if (maxLayer >= nNodes)
-        throw new IllegalArgumentException(
-          s"input graph has a cycle: a path of length $maxLayer exists over " +
-            s"$nNodes nodes (acyclic inputs are bounded by n - 1)")
-      state = next.select(col("node"), col("layer"), col("cost"))
-      changing = changed > 0L
+            .as("__imp"))
     }
-    state
   }
 }

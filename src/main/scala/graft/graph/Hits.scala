@@ -58,12 +58,12 @@ object Hits {
     // eager, not a lazy persist: the first action over a lazy cache is
     // nodes' union-distinct, whose two branches scan e inside ONE job
     // and race the cache fill — the caller's (possibly 4-table) edge
-    // build would run up to twice before the cache lands
-    val e = edges
+    // build would run up to twice before the cache lands; data-sized so
+    // every gather probes it with data-shaped tasks
+    val (e, _) = Iterate.sized(edges
       .select(col(srcCol).as("src"), col(dstCol).as("dst"),
         col(wCol).cast("double").as("w"))
-      .groupBy("src", "dst").agg(sum("w").as("w"))
-      .localCheckpoint(true)
+      .groupBy("src", "dst").agg(sum("w").as("w")))
     val nodes = e.select(col("src").as("node"))
       .union(e.select(col("dst").as("node")))
       .distinct()
@@ -73,11 +73,10 @@ object Hits {
     val sumW = e.agg(sum("w")).head().getDouble(0)
     require(sumW > 0.0, s"total edge weight must be positive, got $sumW")
     val parts = Iterate.parts(spark, n)
-    // size the per-iteration probes to the data (the PageRank transV /
-    // rankParts rationale): e's checkpoint and nodes' cache hold
-    // shuffle.partitions KB-blocks, and every gather would launch that
-    // many tasks regardless of data
-    val eV = e.coalesce(Iterate.parts(spark, e.count()))
+    // size the per-iteration probe to the data (the PageRank transV /
+    // rankParts rationale): nodes' cache holds shuffle.partitions
+    // KB-blocks, and every gather would launch that many tasks
+    // regardless of data
     val nodesV = nodes.coalesce(parts)
 
     // gather along edges: scores flow src→dst (by="src", out="dst") or
@@ -86,24 +85,23 @@ object Hits {
     def gather(scores: DataFrame, inCol: String, by: String, out: String,
         outCol: String): DataFrame =
       nodesV.join(
-        scores.join(eV, scores("node") === eV(by))
+        scores.join(e, scores("node") === e(by))
           .groupBy(col(out).as("node"))
           .agg((sum(col("w") * col(inCol)) / lit(sumW)).as("__raw")),
         Seq("node"), "left")
         .select(col("node"), coalesce(col("__raw"), lit(0.0)).as(outCol))
 
     // coalesce, not repartition: narrow merge to parts, no keyless
-    // exchange (and no sort-before-repartition pass) per checkpoint
-    var h = nodesV.select(col("node"), lit(1.0).as("h"))
-      .coalesce(parts).localCheckpoint(true)
+    // exchange (and no sort-before-repartition pass) per checkpoint.
+    // a stays LAZY inside the iteration — only h checkpoints, so the
+    // whole iteration is one job; the final a re-derives from the last
+    // checkpointed h at output time (one cheap extra gather)
     var a: DataFrame = null
-    (1 to iterations).foreach { _ =>
-      // a stays LAZY inside the iteration — only h checkpoints, so the
-      // whole iteration is one job; the final a re-derives from the
-      // last checkpointed h at output time (one cheap extra gather)
+    val h = Iterate.fixedRounds(
+      nodesV.select(col("node"), lit(1.0).as("h")).coalesce(parts),
+      iterations, "Hits.run") { (h, _) =>
       a = gather(h, "h", by = "src", out = "dst", outCol = "a")
-      h = gather(a, "a", by = "dst", out = "src", outCol = "h")
-        .coalesce(parts).localCheckpoint(true)
+      gather(a, "a", by = "dst", out = "src", outCol = "h").coalesce(parts)
     }
     // the last a must checkpoint too: it still references e/nodes,
     // which unpersist below (recompute would re-run the edge build on

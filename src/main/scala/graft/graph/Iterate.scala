@@ -5,9 +5,10 @@ import org.apache.spark.sql.functions.{col, count, count_if, greatest, least, li
 import org.slf4j.LoggerFactory
 
 /** The graph tier's shared fixpoint machinery: data-sized partition
-  * counts, the canonical undirected adjacency every iterative operator
-  * probes each round, and the round driver that checkpoints, counts
-  * convergence and enforces the round bound.
+  * counts, the checkpointed probe tables every iterative operator reads
+  * each round, and the two round drivers — [[fixedRounds]] for a fixed
+  * round count, [[untilStable]] for a fixpoint — that checkpoint each
+  * round, observe convergence and enforce the round bound.
   */
 private[graph] object Iterate {
   private val log = LoggerFactory.getLogger(getClass)
@@ -20,6 +21,17 @@ private[graph] object Iterate {
   def parts(spark: SparkSession, rows: Long): Int =
     math.max(1L, math.min(
       spark.sparkContext.defaultParallelism.toLong, rows / 100000L + 1L)).toInt
+
+  /** `df` `localCheckpoint`ed once and coalesced to the [[parts]] of
+    * its row count, plus that partition count: the probe table a loop
+    * reads every round computes exactly once, and each round's scan of
+    * it runs data-sized tasks instead of shuffle.partitions KB blocks.
+    */
+  def sized(df: DataFrame): (DataFrame, Int) = {
+    val cp = df.localCheckpoint(true)
+    val n = parts(df.sparkSession, cp.count())
+    (cp.coalesce(n), n)
+  }
 
   /** Canonical undirected adjacency `(v, w)` — each edge in both
     * orientations, self-loops and duplicates dropped — plus its
@@ -44,18 +56,43 @@ private[graph] object Iterate {
     (ed, n)
   }
 
+  /** Applies `step(state, round)` (round 1-based) `rounds` times from
+    * `init` and returns the last state; `rounds = 0` returns `init`.
+    * `init` and every round's state are `localCheckpoint`ed, so rounds
+    * never stack plans and each round is the one job its plan needs —
+    * a fixed count observes nothing. One INFO line per round logs its
+    * wall time.
+    */
+  def fixedRounds(init: DataFrame, rounds: Int, what: String)(
+      step: (DataFrame, Int) => DataFrame): DataFrame = {
+    require(rounds >= 0, s"rounds must be >= 0, got $rounds")
+    var state = init.localCheckpoint(true)
+    for (round <- 1 to rounds) {
+      val t0 = System.nanoTime()
+      state = step(state, round).localCheckpoint(true)
+      log.info(s"$what round=$round ms=${(System.nanoTime() - t0) / 1000000L}")
+    }
+    state
+  }
+
   /** Runs `step` from `init` to a fixpoint and returns the final state
     * without its `__imp` column. `step(state, round)` (round 1-based)
     * returns the next state with a boolean `__imp` column marking rows
-    * that improved this round; each state is `localCheckpoint`ed so
-    * rounds never stack plans. The improved-row count is observed inside
-    * the checkpoint's own job — no separate count job per round — and
-    * the loop stops on the first round that improves nothing.
+    * that improved this round (`init` needs none); `init` and each
+    * state are `localCheckpoint`ed so rounds never stack plans. The
+    * improved-row and row counts are observed inside the checkpoint's
+    * own job — no separate count job per round — and the loop stops on
+    * the first round that flags no row and does not shrink the state.
+    * A loop that adds or improves rows flags them; a peel that only
+    * removes rows flags nothing and stops on the first round that
+    * removes none. Growth alone does not count: [[Bfs.minPlus]] adds
+    * rows in the first of its two steps and is stable when the second
+    * improves nothing.
     *
     * `maxRounds` bounds the step applications: a step that applies
     * `stepsPerRound` updates gets ⌈maxRounds / stepsPerRound⌉ rounds,
     * so the bound keeps its meaning whatever the batching. Still
-    * improving past it throws, naming `what` and `maxRounds` — a silent
+    * changing past it throws, naming `what` and `maxRounds` — a silent
     * cutoff would return a wrong answer. One INFO line per round logs
     * rows, improved rows and wall time.
     */
@@ -64,10 +101,12 @@ private[graph] object Iterate {
     require(maxRounds >= 1, s"maxRounds must be >= 1, got $maxRounds")
     require(stepsPerRound >= 1, s"stepsPerRound must be >= 1, got $stepsPerRound")
     val roundBound = (maxRounds - 1) / stepsPerRound + 1
-    var state = init.localCheckpoint(true)
+    val initObs = new Observation()
+    var state = init.observe(initObs, count(lit(1)).as("rows")).localCheckpoint(true)
+    var rows = initObs.get("rows").asInstanceOf[Long]
     var round = 0
-    var improved = 1L
-    while (improved > 0L) {
+    var stable = false
+    while (!stable) {
       if (round == roundBound)
         throw new IllegalStateException(
           s"$what still improving after maxRounds=$maxRounds; raise maxRounds")
@@ -78,8 +117,11 @@ private[graph] object Iterate {
         .observe(obs, count_if(col("__imp")).as("improved"), count(lit(1)).as("rows"))
         .localCheckpoint(true)
       val m = obs.get
-      improved = m("improved").asInstanceOf[Long]
-      log.info(s"$what round=$round rows=${m("rows")} improved=$improved " +
+      val improved = m("improved").asInstanceOf[Long]
+      val prevRows = rows
+      rows = m("rows").asInstanceOf[Long]
+      stable = improved == 0L && rows >= prevRows
+      log.info(s"$what round=$round rows=$rows improved=$improved " +
         s"ms=${(System.nanoTime() - t0) / 1000000L}")
     }
     state.drop("__imp")

@@ -18,11 +18,13 @@ import org.apache.spark.sql.functions.{col, count => fcount, lit}
   * live×live via two SEMI joins (id-keyed — the edge payload never
   * re-shuffles wider than (src, dst)) and one count aggregate with
   * map-side partials; the live-vertex set is the only thing that
-  * changes. Convergence is one `count()` per round, and each live set
+  * changes. The loop runs on [[Iterate.untilStable]]: each live set
   * `localCheckpoint`s so K rounds never stack K join plans (the qg9
-  * lineage lesson — persist alone nests the plan one join deeper per
-  * iteration until plan construction OOMs). Rounds are bounded by the
-  * peel depth (the graph's degeneracy ordering), not the vertex count.
+  * lineage lesson), and the live-set size is observed inside that
+  * checkpoint's job — the peel stops on the first round that keeps
+  * every vertex, with no count job of its own. Rounds are bounded by
+  * the peel depth (the graph's degeneracy ordering), not the vertex
+  * count.
   */
 object KCore {
 
@@ -36,22 +38,18 @@ object KCore {
     // the peel loop probes ed every round
     val (ed, parts) = Iterate.adjacency(edges, aCol, bCol)
 
-    var alive = ed.select(col("v")).distinct().coalesce(parts).localCheckpoint(true)
-    var n = alive.count()
-    var converged = n == 0L
-    while (!converged) {
-      val next = ed
-        .join(alive, Seq("v"), "left_semi")
-        .join(alive.select(col("v").as("w")), Seq("w"), "left_semi")
+    // no row is flagged: the peel only shrinks the live set, so an
+    // unchanged size is the fixpoint
+    val alive = Iterate.untilStable(
+      ed.select(col("v")).distinct().coalesce(parts),
+      Int.MaxValue, "KCore.decompose") { (live, _) =>
+      ed
+        .join(live, Seq("v"), "left_semi")
+        .join(live.select(col("v").as("w")), Seq("w"), "left_semi")
         .groupBy("v").agg(fcount(lit(1)).as("__d"))
         .filter(col("__d") >= k)
-        .select("v")
+        .select(col("v"), lit(false).as("__imp"))
         .coalesce(parts)
-        .localCheckpoint(true)
-      val m = next.count()
-      converged = m == n
-      alive = next
-      n = m
     }
     // materialize the node-sized result (checkpoint blocks free on GC —
     // nothing pins executor storage for the session)

@@ -19,7 +19,7 @@ import org.apache.spark.sql.functions._
   * the label vector on dst, one (v, label) count with map-side
   * partials, one per-vertex `row_number` pick over (count desc, label
   * asc) — all keyed, shuffle bounded by edges; the label vector
-  * `localCheckpoint`s per round (the qg9 lineage rule).
+  * `localCheckpoint`s per round through [[Iterate.fixedRounds]].
   */
 object LabelProp {
 
@@ -32,23 +32,19 @@ object LabelProp {
     // the propagation loop joins ed every round
     val (ed, _) = Iterate.adjacency(edges, aCol, bCol)
 
-    var labels = ed.select(col("v")).distinct()
-      .withColumn("lbl", col("v"))
-      .localCheckpoint(true)
-    (1 to rounds).foreach { _ =>
-      val byV = Window.partitionBy(col("v"))
-        .orderBy(col("cnt").desc, col("lbl").asc)
-      labels = ed
-        .join(labels.select(col("v").as("w"), col("lbl")), Seq("w"))
+    val byV = Window.partitionBy(col("v")).orderBy(col("cnt").desc, col("lbl").asc)
+    val labels = Iterate.fixedRounds(
+      ed.select(col("v")).distinct().withColumn("lbl", col("v")),
+      rounds, "LabelProp.run") { (cur, _) =>
+      ed
+        .join(cur.select(col("v").as("w"), col("lbl")), Seq("w"))
         .groupBy(col("v"), col("lbl"))
         .agg(count(lit(1)).as("cnt"))
         .withColumn("__rn", row_number().over(byV))
         .filter(col("__rn") === 1)
         .select(col("v"), col("lbl"))
-        .localCheckpoint(true)
     }
-    // labels is already checkpointed per round; ed's checkpoint blocks
-    // free on GC
+    // ed's checkpoint blocks free on GC
     labels.select(col("v").as("node"), col("lbl").as("label"))
   }
 }

@@ -29,7 +29,8 @@ import org.apache.spark.storage.StorageLevel
   *    side — is what moves. No adjacency collect, no driver matrix.
   *  - the dangling mass is a 1-row aggregate per iteration (a broadcast
   *    scalar, not a join).
-  *  - each new rank vector is `localCheckpoint`ed (eager): the LINEAGE
+  *  - each new rank vector is `localCheckpoint`ed (eager, by
+  *    [[Iterate.fixedRounds]]): the LINEAGE
   *    is cut every iteration, not just the data cached — `persist`
   *    alone still nests the logical plan one join deeper per round,
   *    and by a few dozen iterations plan construction itself blows up
@@ -135,10 +136,8 @@ object PageRank {
     // a narrow merge to rankParts avoids a keyless exchange (and its
     // sort-before-repartition pass) per materialization
     val nodesV = nodes.coalesce(rankParts)
-    var ranks = nodesV.select(col("node"), init.as("rank"))
-      .localCheckpoint(true)
-
-    (1 to iterations).foreach { _ =>
+    val ranks = Iterate.fixedRounds(
+      nodesV.select(col("node"), init.as("rank")), iterations, "PageRank.run") { (ranks, _) =>
       val danglingMass =
         if (!hasDangling) 0.0
         else ranks.join(dangling, "node")
@@ -157,10 +156,9 @@ object PageRank {
             lit(damping) * coalesce(col("inflow"), lit(0.0)) +
             lit(damping * danglingMass / n)
       }
-      ranks = nodesV.join(contrib, Seq("node"), "left")
+      nodesV.join(contrib, Seq("node"), "left")
         .select(col("node"), rankExpr.as("rank"))
         .coalesce(rankParts)
-        .localCheckpoint(true)
     }
     val out = ranks.select(col("node"), col("rank"))
     trans.unpersist(); dangling.unpersist(); nodes.unpersist()

@@ -21,8 +21,9 @@ import org.apache.spark.sql.functions._
   *     next), which alone dissolves any DAG region.
   *  2. COLOR: the forward min-label fixpoint F(v) = min({v} ∪
   *     {F(u) : u→v}) — F(v) is the least unassigned node that reaches
-  *     v. Labels only decrease, so the (count, Σ F) signature detects
-  *     the fixpoint (the HyperBall mass idiom).
+  *     v. Labels only decrease, so a row whose min-merged label beats
+  *     its old one is flagged, and the first round flagging none is the
+  *     fixpoint.
   *  3. CONFINE: within each color class, the nodes that reach their
   *     root r = F(r) = r through SAME-COLOR vertices are EXACTLY
   *     SCC(r) (if v→*r and F(v) = r then r→*v, mutual; conversely a
@@ -41,10 +42,14 @@ import org.apache.spark.sql.functions._
   * cluster logic is interchangeable.
   *
   * Scale shape: state is Θ(n) rows keyed by node; each inner round is
-  * one edge-keyed equi-join + one node-keyed aggregate (or a distinct
-  * union for the confine set), localCheckpointed so plans never stack
-  * (the qg9 lineage lesson). No driver-side graph, no adjacency
-  * collect; the only driver values are 1-row signatures. Worst case is
+  * one edge-keyed equi-join + one node-keyed aggregate (semi joins for
+  * the trim), run by
+  * [[Iterate.untilStable]]: localCheckpointed so plans never stack,
+  * with the changed-row and row counts observed inside each round's
+  * checkpoint job. No driver-side graph, no adjacency collect; the
+  * only driver reads are one emptiness probe per phase boundary. The
+  * three phases share one `maxRounds` budget of inner rounds, each
+  * phase's last (stable) round included. Worst case is
   * a long chain of SCCs (rounds ~ chain length — inherent to the
   * label-propagation family); hash-random and crawl-shaped graphs
   * finish in a handful of rounds (10⁶ edges measured, git 3e96ab2). Throws
@@ -60,14 +65,17 @@ object Scc {
     val spark = edges.sparkSession
     import spark.implicits._
 
+    // the three phases share one budget of inner rounds
     var rounds = 0
-    def spend(n: Int = 1): Unit = {
-      rounds += n
-      if (rounds > maxRounds)
-        throw new IllegalStateException(
-          s"SCC did not converge within $maxRounds rounds — " +
-            "a pathological SCC chain; raise maxRounds")
-    }
+    def phase(init: DataFrame, what: String)(step: DataFrame => DataFrame): DataFrame =
+      Iterate.untilStable(init, maxRounds, s"SCC $what") { (state, _) =>
+        rounds += 1
+        if (rounds > maxRounds)
+          throw new IllegalStateException(
+            s"SCC did not converge within $maxRounds rounds — " +
+              "a pathological SCC chain; raise maxRounds")
+        step(state)
+      }
 
     // null endpoints (the leakageSafeSplit contract): an edge with a
     // null side is NO EDGE — but its non-null side is still a node
@@ -89,92 +97,65 @@ object Scc {
       .localCheckpoint(true)
     val assigned = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
 
-    var nLeft = nodes.count()
-    while (nLeft > 0) {
-      // ---- 1. trim to fixpoint: no in-edge or no out-edge => singleton
-      var trimming = true
-      while (trimming && nLeft > 0) {
-        spend()
-        val trimmed = nodes
-          .join(remaining.select(col("d").as("node")).distinct(),
-            Seq("node"), "left_anti")
-          .unionAll(nodes.join(
-            remaining.select(col("s").as("node")).distinct(),
-            Seq("node"), "left_anti"))
-          .distinct()
-          .localCheckpoint(true)
-        val nTrim = trimmed.count()
-        if (nTrim == 0) trimming = false
-        else {
-          assigned += trimmed.select(col("node"), col("node").as("scc"))
-          nodes = nodes.join(trimmed, Seq("node"), "left_anti")
-            .localCheckpoint(true)
-          remaining = remaining
-            .join(trimmed.select(col("node").as("s")), Seq("s"), "left_anti")
-            .join(trimmed.select(col("node").as("d")), Seq("d"), "left_anti")
-            .select(col("s"), col("d"))
-            .localCheckpoint(true)
-          nLeft -= nTrim
-        }
+    // narrows the unassigned nodes to `live` and the edges to those among them
+    def keepOnly(live: DataFrame): Unit = {
+      nodes = live
+      remaining = remaining
+        .join(live.select(col("node").as("s")), Seq("s"), "left_semi")
+        .join(live.select(col("node").as("d")), Seq("d"), "left_semi")
+        .localCheckpoint(true)
+    }
+
+    while (!nodes.isEmpty) {
+      // ---- 1. trim to fixpoint: a node with no in-edge or no out-edge
+      // among the live ones is a singleton; the live set only shrinks
+      // (no row is flagged), so an unchanged size is the fixpoint
+      val live = phase(nodes, "trim") { live =>
+        val among = remaining
+          .join(live.select(col("node").as("s")), Seq("s"), "left_semi")
+          .join(live.select(col("node").as("d")), Seq("d"), "left_semi")
+        live
+          .join(among.select(col("d").as("node")), Seq("node"), "left_semi")
+          .join(among.select(col("s").as("node")), Seq("node"), "left_semi")
+          .select(col("node"), lit(false).as("__imp"))
       }
-      if (nLeft > 0) {
-        // ---- 2. forward min-label coloring to fixpoint
-        var f = nodes.select(col("node"), col("node").as("lb"))
-          .localCheckpoint(true)
-        def sig(df: DataFrame): (Long, Long) = {
-          val r = df.agg(count(lit(1)), coalesce(sum(col("lb")), lit(0L))).head()
-          (r.getLong(0), r.getLong(1))
-        }
-        var prev = sig(f)
-        var changing = true
-        while (changing) {
-          spend()
-          f = f.unionAll(
+      assigned += nodes.join(live, Seq("node"), "left_anti")
+        .select(col("node"), col("node").as("scc"))
+      keepOnly(live)
+      if (!nodes.isEmpty) {
+        // ---- 2. forward min-label coloring to fixpoint; the old label
+        // rides the merge under a tag, so "improved" is a column
+        val f = phase(nodes.select(col("node"), col("node").as("lb")), "coloring") { f =>
+          f.select(col("node"), col("lb"), lit(false).as("__cand"))
+            .unionAll(
               remaining.join(f.withColumnRenamed("node", "s"), Seq("s"))
-                .select(col("d").as("node"), col("lb")))
+                .select(col("d").as("node"), col("lb"), lit(true).as("__cand")))
             .groupBy(col("node"))
-            .agg(min(col("lb")).as("lb"))
-            .localCheckpoint(true)
-          val cur = sig(f)
-          changing = cur != prev
-          prev = cur
+            .agg(min(col("lb")).as("lb"), min(when(!col("__cand"), col("lb"))).as("__old"))
+            .select(col("node"), col("lb"), (col("lb") < col("__old")).as("__imp"))
         }
-        // ---- 3. backward confinement within each color class
+        // ---- 3. backward confinement within each color class; a
+        // reached node not in the old set is flagged
         val sameColor = remaining
           .join(f.select(col("node").as("s"), col("lb").as("__fs")), Seq("s"))
           .join(f.select(col("node").as("d"), col("lb").as("__fd")), Seq("d"))
           .filter(col("__fs") === col("__fd"))
           .select(col("s"), col("d"))
           .localCheckpoint(true)
-        var reach = f.filter(col("node") === col("lb"))
-          .select(col("node"))
-          .localCheckpoint(true)
-        var nReach = reach.count()
-        var growing = true
-        while (growing) {
-          spend()
-          val grown = reach.unionAll(
-              sameColor.join(reach.withColumnRenamed("node", "d"), Seq("d"))
-                .select(col("s").as("node")))
-            .distinct()
-            .localCheckpoint(true)
-          val n2 = grown.count()
-          growing = n2 != nReach
-          reach = grown
-          nReach = n2
+        val reach = phase(f.filter(col("node") === col("lb")).select(col("node")),
+            "confinement") { reach =>
+          reach.select(col("node"), lit(false).as("__imp"))
+            .unionAll(
+              sameColor.join(reach.select(col("node").as("d")), Seq("d"))
+                .select(col("s").as("node"), lit(true).as("__imp")))
+            .groupBy(col("node"))
+            .agg(min(col("__imp")).as("__imp"))
         }
         val members = reach.join(f, Seq("node"))
           .select(col("node"), col("lb").as("scc"))
           .localCheckpoint(true)
         assigned += members
-        nodes = nodes.join(members.select(col("node")), Seq("node"), "left_anti")
-          .localCheckpoint(true)
-        remaining = remaining
-          .join(members.select(col("node").as("s")), Seq("s"), "left_anti")
-          .join(members.select(col("node").as("d")), Seq("d"), "left_anti")
-          .select(col("s"), col("d"))
-          .localCheckpoint(true)
-        nLeft -= nReach
+        keepOnly(nodes.join(members, Seq("node"), "left_anti").localCheckpoint(true))
       }
     }
     if (assigned.isEmpty) spark.emptyDataset[(Long, Long)].toDF("node", "scc")

@@ -7,9 +7,9 @@ import org.apache.spark.sql.functions._
   * every edge participates in ≥ k−2 triangles: the EDGE-cohesion
   * sibling of the k-core's vertex degrees, and the standard "community
   * nucleus" extractor (every k-truss is a (k−1)-core, but far denser).
-  * Same iterative-peel fixpoint as [[KCore]]: dropping a weak edge
-  * destroys triangles of its neighbours, so the peel cascades and must
-  * run to a fixpoint, not a fixed depth.
+  * Same iterative-peel fixpoint as [[KCore]], on [[Iterate.untilStable]]:
+  * dropping a weak edge destroys triangles of its neighbours, so the
+  * peel cascades and must run to a fixpoint, not a fixed depth.
   *
   * Per round, edge support is computed by degree-ordered triangle
   * ENUMERATION (the [[Triangles]] compact-forward orientation), not by
@@ -75,24 +75,19 @@ object Truss {
         .groupBy("a", "b").agg(count(lit(1)).as("support"))
     }
 
-    var cur = edges
-      .select(
-        least(col(aCol), col(bCol)).as("a"),
-        greatest(col(aCol), col(bCol)).as("b"))
-      .filter(col("a") =!= col("b"))
-      .distinct()
-      .localCheckpoint(true)
-    var n = cur.count()
-    var converged = n == 0L
-    while (!converged) {
-      val next = supports(cur)
+    // the peel only shrinks the edge set (no row is flagged), so an
+    // unchanged size is the fixpoint
+    val cur = Iterate.untilStable(
+      edges
+        .select(
+          least(col(aCol), col(bCol)).as("a"),
+          greatest(col(aCol), col(bCol)).as("b"))
+        .filter(col("a") =!= col("b"))
+        .distinct(),
+      Int.MaxValue, "Truss.decompose") { (s, _) =>
+      supports(s)
         .filter(col("support") >= k - 2)
-        .select(col("a"), col("b"))
-        .localCheckpoint(true)
-      val m = next.count()
-      converged = m == n
-      cur = next
-      n = m
+        .select(col("a"), col("b"), lit(false).as("__imp"))
     }
     supports(cur)
   }

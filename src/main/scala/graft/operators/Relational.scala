@@ -553,12 +553,6 @@ object Relational {
         col("__mad").as("mad"))
   }
 
-  /** P3 — conditional overwrite (reference `preparation.sh:142-146`, the
-    * ogr2ogr `UPDATE … SET x='b' WHERE x='a'`). Pure projection — no shuffle.
-    */
-  def conditionalUpdate(df: DataFrame, colName: String, from: String, to: String): DataFrame =
-    df.withColumn(colName, when(col(colName) === from, to).otherwise(col(colName)))
-
   /** F6 — categorical defaults (reference `scripts/utils/utils.js:140-162`):
     * lowercase, then out-of-vocabulary values collapse to a default.
     */

@@ -2,7 +2,6 @@ package graft.operators
 
 import graft.functions.GeoFunctions
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Spatial operators (SURVEY.md §2.3 J8/J9, §2.4 A4).
@@ -55,21 +54,13 @@ object Spatial {
       .drop("__cell", "__lbox", "__rbox")
   }
 
-  /** J8 — nearest-neighbour (argmin) join, window form: for each left row
-    * the single closest right row by `distCol`, deterministic tie-break on
-    * `tieCol`. The window sorts every candidate row — prefer
-    * `nearestJoinAgg` on big pair sets.
-    */
-  def nearestJoinWindow(pairs: DataFrame, leftKey: String, distCol: Column, tieCol: Column): DataFrame = {
-    val w = Window.partitionBy(col(leftKey)).orderBy(distCol, tieCol)
-    pairs.withColumn("__rn", row_number().over(w)).filter(col("__rn") === 1).drop("__rn")
-  }
-
-  /** J8 scale form — argmin via `min_by` hash aggregation: partial (map-
-    * side) combine collapses each key to ONE candidate before the shuffle,
-    * so a billions-row candidate set shuffles only |left keys| rows — vs
-    * the window form shuffling and sorting every candidate. Ordering is
-    * the lexicographic struct (dist, tie), same determinism contract.
+  /** J8 — nearest-neighbour (argmin) join via `min_by` hash aggregation:
+    * for each left key the single closest candidate by `distCol`,
+    * deterministic tie-break on `tieCol`. Partial (map-side) combine
+    * collapses each key to ONE candidate before the shuffle, so a
+    * billions-row candidate set shuffles only |left keys| rows — a
+    * `row_number` window would shuffle and sort every candidate. Ordering
+    * is the lexicographic struct (dist, tie).
     * `payload` columns are carried through on the winning row.
     */
   def nearestJoinAgg(
@@ -390,8 +381,6 @@ object Spatial {
         val settled = winners.filter(col("dist") <= col("__lb")).select(col("__lkey"))
         unresolved = unresolved.join(settled, Seq("__lkey"), "left_anti").persist()
         unresolvedCount = unresolved.count()
-        if (sys.env.contains("SPARK_GRAFT_DEBUG"))
-          System.err.println(s"[nearestGrid] k=$k g=$g kCover=$kCover unresolved=$unresolvedCount parts=${unresolved.rdd.getNumPartitions} t=${System.nanoTime() / 1000000000L % 100000}")
         if (unresolvedCount == 0) done = true else k *= 2
       }
     }

@@ -17,7 +17,7 @@ import org.apache.spark.sql.types.{BooleanType, DoubleType, IntegerType}
   * `spark.experimental.extraStrategies` (or `GraftExtensions` for
   * `spark.sql.extensions` config users).
   *
-  * Payoff vs the RDD wrapper (`Routing.routeMatrix`): the operator is
+  * Payoff vs an RDD wrapper around the same Dijkstra: the operator is
   * *inside* Catalyst — downstream filters/projections/joins compose and
   * optimize against its output schema (e.g. `routable = false` predicates
   * prune before any shuffle), `.explain` shows `RouteMatrixExec` with row

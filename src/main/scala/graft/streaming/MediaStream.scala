@@ -13,10 +13,6 @@ import org.apache.spark.sql.functions._
   */
 object MediaStream {
 
-  /** Stateless per-row decode — append-mode safe. */
-  def audioStats(media: Dataset[Multimodal.Media]): Dataset[Multimodal.AudioFeatures] =
-    Multimodal.extractAudioFeatures(media)
-
   /** Running per-sample-rate quality aggregate over the decoded stream
     * (stateful, update mode): clip count, total decoded samples, mean
     * RMS. The place a media-ingest pipeline watches encoder drift.

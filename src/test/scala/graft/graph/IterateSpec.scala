@@ -7,7 +7,7 @@ import scala.jdk.CollectionConverters._
 import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
-import org.apache.spark.sql.functions.{col, lit, min, when}
+import org.apache.spark.sql.functions.{col, lit, min, sum, when}
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.GraftSession
@@ -15,7 +15,9 @@ import graft.GraftSession
 /** Fixpoint-driver contracts: the observation-driven stop matches a
   * count-driven loop round for round, an already-stable init returns
   * after one round, the round bound throws by name, and no count job
-  * runs inside the loop.
+  * runs inside the loop — in the driver and in its peel and
+  * longest-path callers. The fixed-count driver matches a hand-written
+  * checkpoint loop and runs one checkpoint job per round.
   */
 class IterateSpec extends AnyFunSuite {
   private lazy val spark = GraftSession.local(4, "iterate-spec")
@@ -139,6 +141,61 @@ class IterateSpec extends AnyFunSuite {
       step(ed)(init, 1).localCheckpoint(true).filter(col("__imp")).count()
     }
     assert(refNames.exists(_.contains("count at")), refNames.mkString("\n"))
+  }
+
+  test("peel and longest-path callers submit no count or head job per round") {
+    // path 0-1-…-9 at k=2: the core is empty, peeled from both ends one
+    // vertex a round (5 peeling rounds + the stable one)
+    val path = (0L until 9L).map(i => (i, i + 1)).toDF("x", "y")
+    var core: Array[org.apache.spark.sql.Row] = null
+    val kcore = actionsOf { core = KCore.decompose(path, "x", "y", 2).collect() }
+    assert(core.isEmpty)
+    val fromKCore = kcore.filter(_.contains("KCore.scala"))
+    assert(!fromKCore.exists(n => n.contains("count at") || n.contains("head at")),
+      kcore.mkString("\n"))
+    // chain 0→1→…→9: ten layering rounds; the one node count precedes the loop
+    var layers: Map[Long, Long] = null
+    val dag = actionsOf {
+      layers = Dag.longestPathLayer(path, "x", "y").as[(Long, Long)].collect().toMap
+    }
+    assert(layers == (0L to 9L).map(i => i -> i).toMap)
+    val reads = dag.filter(n => n.contains("Dag.scala") &&
+      (n.contains("count at") || n.contains("head at")))
+    assert(reads.size == 1, dag.mkString("\n"))
+  }
+
+  // x ← ½x + ¼·Σ neighbours: doubles whose every bit depends on the round
+  private def smooth(ed: DataFrame)(x: DataFrame): DataFrame =
+    x.join(ed.join(x.select(col("v").as("w"), col("x").as("__n")), Seq("w"))
+        .groupBy("v").agg(sum(col("__n")).as("__s")), Seq("v"))
+      .select(col("v"), (col("x") * 0.5 + col("__s") * 0.25).as("x"))
+
+  private def xs(df: DataFrame): Map[Long, Double] =
+    df.select("v", "x").as[(Long, Double)].collect().toMap
+
+  private def x0: DataFrame = (0L to 6L).map(i => (i, (i * i).toDouble / 7.0)).toDF("v", "x")
+
+  test("fixedRounds: same values as a hand-written checkpoint loop") {
+    val ed = chain.localCheckpoint(true)
+    var ref = x0.localCheckpoint(true)
+    (1 to 5).foreach(_ => ref = smooth(ed)(ref).localCheckpoint(true))
+    val seen = scala.collection.mutable.ArrayBuffer.empty[Int]
+    val got = Iterate.fixedRounds(x0, 5, "smooth") { (x, r) => seen += r; smooth(ed)(x) }
+    assert(seen == (1 to 5))
+    assert(xs(got) == xs(ref))
+    assert(xs(got) != xs(x0))
+  }
+
+  test("fixedRounds: one checkpoint job per round plus the init, no count") {
+    val ed = chain.localCheckpoint(true)
+    val names = actionsOf { Iterate.fixedRounds(x0, 4, "smooth")((x, _) => smooth(ed)(x)) }
+    assert(names.size == 5, names.mkString("\n"))
+    assert(names.forall(_.contains("localCheckpoint at")), names.mkString("\n"))
+  }
+
+  test("fixedRounds: zero rounds returns init without calling step") {
+    val got = Iterate.fixedRounds(x0, 0, "none") { (_, _) => fail("step called") }
+    assert(xs(got) == xs(x0))
   }
 
   test("odd maxRounds bounds relax steps in the three min-plus callers") {

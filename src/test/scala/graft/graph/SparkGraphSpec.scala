@@ -10,8 +10,9 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import scala.jdk.CollectionConverters._
 
-/** Spark-side graph ops: G1 build (coord dedup → nodes/edges), distributed
-  * route matrix, criticality scoring, EAUL sweep — on the golden network.
+/** Spark-side graph ops: G1 build (coord dedup → nodes/edges), the
+  * Catalyst route-matrix operator, criticality scoring, EAUL sweep — on the
+  * golden network.
   */
 class SparkGraphSpec extends AnyFunSuite {
   private lazy val spark = GraftSession.local(4, "graph-spec")
@@ -37,19 +38,6 @@ class SparkGraphSpec extends AnyFunSuite {
     val m = Routing.routeMatrixLocal(g, od)
     val ab = m.find(p => p.oIdx == 0 && p.dIdx == 1).get
     assert(math.abs(ab.ruc.get - 3.75) < 0.01)
-  }
-
-  test("G6 distributed route matrix matches the local kernel") {
-    val g = GoldenNetwork.graph
-    val bg = spark.sparkContext.broadcast(g)
-    val dist = Routing.routeMatrix(spark, bg, GoldenNetwork.odNodes).collect()
-    val local = Routing.routeMatrixLocal(g, GoldenNetwork.odNodes)
-    assert(dist.length == local.length)
-    local.foreach { p =>
-      val row = dist.find(r => r.getInt(0) == p.oIdx && r.getInt(1) == p.dIdx).get
-      assert(row.getBoolean(2) == p.routable)
-      if (p.routable) assert(math.abs(row.getDouble(3) - p.ruc.get) < 1e-12)
-    }
   }
 
   test("G7: criticality scores — segment 1 maximal, segment 10 severs C pairs") {

@@ -71,6 +71,25 @@ object SparkEntry {
   private def t(spark: SparkSession, dir: String, name: String): DataFrame =
     Tables.load(spark, dir, name)
 
+  private val ShufflePartitions = "spark.sql.shuffle.partitions"
+  private val NoDataBatches = "spark.sql.streaming.noDataMicroBatches.enabled"
+
+  /** `body` run with each `key -> value` set on the session conf; every
+    * key gets its prior value back afterwards, thrown or not, and a key
+    * that was unset comes back unset. A streaming query pins its confs
+    * when it starts, so a gate scopes its overrides to its own query.
+    */
+  private[graft] def withConf[T](spark: SparkSession, kvs: (String, String)*)(body: => T): T = {
+    val set = spark.conf.getAll
+    val prior = kvs.map { case (k, _) => k -> set.get(k) }
+    kvs.foreach { case (k, v) => spark.conf.set(k, v) }
+    try body
+    finally prior.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
+
   // ------------------------------------------------------------- 2.4 aggs
   /** A1/A5/A6-family: grouped multi-aggregate in one shuffle (single-pass
     * multi-agg is the reference's own manual optimization, SURVEY §4).
@@ -513,8 +532,6 @@ object SparkEntry {
     // qe6 phase probe (r17, git 3e96ab2): 8 → 2 takes another ~0.5 s
     // off both batches (state is ~95 k session rows — 48 k/partition is
     // nowhere near memory pressure)
-    val prevShuffle = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "2")
     // NO sentinel filter inside the streaming plan: Catalyst pushes a
     // user_id predicate below the EventTimeWatermark node, and filtered
     // sentinel rows then never advance the watermark (caught live: the 7
@@ -531,26 +548,23 @@ object SparkEntry {
     // state path itself is pinned by StreamingSpec on MemoryStreams)
     sentinel(1)
     sentinel(2)
-    val q = ev
-      .withWatermark("ts", "1 second")
-      .groupBy(session_window(col("ts"), "30 minutes").as("w"), col("user_id"))
-      .agg(count(lit(1)).as("n_events"))
-      .select(
-        unix_timestamp(col("w.start")).as("session_start"),
-        col("user_id"),
-        col("n_events"))
-      .writeStream
-      .outputMode("append")
-      .format("memory")
-      .queryName(name)
-      .start()
-    try {
-      q.processAllAvailable() // data batch + watermark-advance flush batch
-    } finally {
-      q.stop()
-      spark.conf.set("spark.sql.shuffle.partitions", prevShuffle)
-      dropStage(stage)
-    }
+    try withConf(spark, ShufflePartitions -> "2") {
+      val q = ev
+        .withWatermark("ts", "1 second")
+        .groupBy(session_window(col("ts"), "30 minutes").as("w"), col("user_id"))
+        .agg(count(lit(1)).as("n_events"))
+        .select(
+          unix_timestamp(col("w.start")).as("session_start"),
+          col("user_id"),
+          col("n_events"))
+        .writeStream
+        .outputMode("append")
+        .format("memory")
+        .queryName(name)
+        .start()
+      // data batch + watermark-advance flush batch
+      try q.processAllAvailable() finally q.stop()
+    } finally dropStage(stage)
     drainSink(spark, name).filter(col("user_id") >= 0)
   }
 
@@ -563,7 +577,9 @@ object SparkEntry {
     * gate emission), so a bounded replay needs no sentinels — one
     * `processAllAvailable` drain yields every matched pair. Lineage of
     * this gate's rows therefore includes an actual stream-stream join,
-    * the shape qe4 only exercises in batch form.
+    * the shape qe4 only exercises in batch form. The query runs with
+    * no-data micro-batches off: with every match emitted in its data
+    * batch, the trailing no-data batch would only evict join state.
     */
   private def qe7StreamJoin(spark: SparkSession, dir: String): DataFrame = {
     val stage = stageEvents(dir)
@@ -572,26 +588,21 @@ object SparkEntry {
     // sides × key/index maps), so per-partition checkpoint fan-out costs
     // 4× qe6's; 2 partitions suffice for the gate volumes (the state is
     // per-user rows within a 10-min horizon). Restored after the run.
-    val prevShuffle = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "2")
     val name = s"qe7_mem_${System.nanoTime()}"
     val ev = Tables.normalizeTs(spark.readStream.schema(schema).parquet(stage.toString))
-    val q = streaming.EventStreams
-      .clickToPurchaseJoin(ev, windowSec = 600)
-      .select(
-        col("click_id"), col("user_id"), col("purchase_id"),
-        round(col("value"), 2).as("value"))
-      .writeStream
-      .outputMode("append")
-      .format("memory")
-      .queryName(name)
-      .start()
-    try q.processAllAvailable()
-    finally {
-      q.stop()
-      spark.conf.set("spark.sql.shuffle.partitions", prevShuffle)
-      dropStage(stage)
-    }
+    try withConf(spark, ShufflePartitions -> "2", NoDataBatches -> "false") {
+      val q = streaming.EventStreams
+        .clickToPurchaseJoin(ev, windowSec = 600)
+        .select(
+          col("click_id"), col("user_id"), col("purchase_id"),
+          round(col("value"), 2).as("value"))
+        .writeStream
+        .outputMode("append")
+        .format("memory")
+        .queryName(name)
+        .start()
+      try q.processAllAvailable() finally q.stop()
+    } finally dropStage(stage)
     drainSink(spark, name)
   }
 
@@ -631,30 +642,25 @@ object SparkEntry {
         Files.move(p, stage.resolve(s"zz_dup_${p.getFileName}"),
           StandardCopyOption.REPLACE_EXISTING)
     }
-    val prevShuffle = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "2")
     val name = s"qe18_mem_${System.nanoTime()}"
     val ev = Tables.normalizeTs(
       spark.readStream.schema(schema).option("maxFilesPerTrigger", 1)
         .parquet(stage.toString))
       .withWatermark("ts", "45 days")
       .dropDuplicatesWithinWatermark("event_id")
-    val q = streaming.EventStreams
-      .clickToPurchaseJoin(ev, windowSec = 600, preWatermarked = true)
-      .select(
-        col("click_id"), col("user_id"), col("purchase_id"),
-        round(col("value"), 2).as("value"))
-      .writeStream
-      .outputMode("append")
-      .format("memory")
-      .queryName(name)
-      .start()
-    try q.processAllAvailable()
-    finally {
-      q.stop()
-      spark.conf.set("spark.sql.shuffle.partitions", prevShuffle)
-      dropStage(stage)
-    }
+    try withConf(spark, ShufflePartitions -> "2") {
+      val q = streaming.EventStreams
+        .clickToPurchaseJoin(ev, windowSec = 600, preWatermarked = true)
+        .select(
+          col("click_id"), col("user_id"), col("purchase_id"),
+          round(col("value"), 2).as("value"))
+        .writeStream
+        .outputMode("append")
+        .format("memory")
+        .queryName(name)
+        .start()
+      try q.processAllAvailable() finally q.stop()
+    } finally dropStage(stage)
     drainSink(spark, name)
   }
 
@@ -700,8 +706,6 @@ object SparkEntry {
       Files.copy(src, stage.resolve(s"zz_sentinel_$n.parquet"),
         StandardCopyOption.REPLACE_EXISTING)
     }
-    val prevShuffle = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "2")
     val name = s"qe13_mem_${System.nanoTime()}"
     // sentinels staged BEFORE the query: the watermark stays 0 through
     // the initial batch (matches emit eagerly, nothing evicts), jumps
@@ -711,23 +715,20 @@ object SparkEntry {
     sentinel(1)
     sentinel(2)
     val ev = Tables.normalizeTs(spark.readStream.schema(schema).parquet(stage.toString))
-    val q = streaming.EventStreams
-      .clickToPurchaseJoin(ev, windowSec = 600, joinType = "left_outer")
-      .select(
-        col("click_id"), col("user_id"), col("purchase_id"),
-        round(col("value"), 2).as("value"))
-      .writeStream
-      .outputMode("append")
-      .format("memory")
-      .queryName(name)
-      .start()
-    try {
-      q.processAllAvailable() // data batch + watermark-advance flush batch
-    } finally {
-      q.stop()
-      spark.conf.set("spark.sql.shuffle.partitions", prevShuffle)
-      dropStage(stage)
-    }
+    try withConf(spark, ShufflePartitions -> "2") {
+      val q = streaming.EventStreams
+        .clickToPurchaseJoin(ev, windowSec = 600, joinType = "left_outer")
+        .select(
+          col("click_id"), col("user_id"), col("purchase_id"),
+          round(col("value"), 2).as("value"))
+        .writeStream
+        .outputMode("append")
+        .format("memory")
+        .queryName(name)
+        .start()
+      // data batch + watermark-advance flush batch
+      try q.processAllAvailable() finally q.stop()
+    } finally dropStage(stage)
     drainSink(spark, name).filter(col("user_id") >= 0)
   }
 
@@ -764,30 +765,25 @@ object SparkEntry {
       Files.copy(src, stage.resolve(s"zz_sentinel_$n.parquet"),
         StandardCopyOption.REPLACE_EXISTING)
     }
-    val prevShuffle = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "2")
     val name = s"qe17_mem_${System.nanoTime()}"
     // sentinels staged upfront + single drain — see qe13's rationale
     sentinel(1)
     sentinel(2)
     val ev = Tables.normalizeTs(spark.readStream.schema(schema).parquet(stage.toString))
-    val q = streaming.EventStreams
-      .clickToPurchaseJoin(ev, windowSec = 600, joinType = "full_outer")
-      .select(
-        col("click_id"), col("user_id"), col("purchase_id"),
-        round(col("value"), 2).as("value"))
-      .writeStream
-      .outputMode("append")
-      .format("memory")
-      .queryName(name)
-      .start()
-    try {
-      q.processAllAvailable() // data batch + watermark-advance flush batch
-    } finally {
-      q.stop()
-      spark.conf.set("spark.sql.shuffle.partitions", prevShuffle)
-      dropStage(stage)
-    }
+    try withConf(spark, ShufflePartitions -> "2") {
+      val q = streaming.EventStreams
+        .clickToPurchaseJoin(ev, windowSec = 600, joinType = "full_outer")
+        .select(
+          col("click_id"), col("user_id"), col("purchase_id"),
+          round(col("value"), 2).as("value"))
+        .writeStream
+        .outputMode("append")
+        .format("memory")
+        .queryName(name)
+        .start()
+      // data batch + watermark-advance flush batch
+      try q.processAllAvailable() finally q.stop()
+    } finally dropStage(stage)
     drainSink(spark, name).filter(col("user_id") >= 0)
   }
 
@@ -837,15 +833,11 @@ object SparkEntry {
   private def qe8StreamWindow(spark: SparkSession, dir: String): DataFrame = {
     val stage = stageEvents(dir)
     val schema = eventsSchema(spark, stage.toString, dir)
-    val prevShuffle = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
     val t =
-      try streaming.EventStreams.runWindowedStream(
-        spark, stage.toString, schema, s"qe8_mem_${System.nanoTime()}")
-      finally {
-        spark.conf.set("spark.sql.shuffle.partitions", prevShuffle)
-        dropStage(stage)
-      }
+      try withConf(spark, ShufflePartitions -> "8") {
+        streaming.EventStreams.runWindowedStream(
+          spark, stage.toString, schema, s"qe8_mem_${System.nanoTime()}")
+      } finally dropStage(stage)
     t.select(
       unix_timestamp(col("window_start")).as("window_start"),
       col("event_type"), col("n"), col("value_sum"))
@@ -858,7 +850,10 @@ object SparkEntry {
     * arrives twice and the emitted stream must equal the events table
     * exactly once per id. Completes the real-writeStream lineage set:
     * sessions (qe6), stream-stream join (qe7), windowed agg (qe8),
-    * dedup (qe9).
+    * dedup (qe9). `dropDuplicatesWithinWatermark` in append mode emits
+    * each first-seen id in its data batch, so the query runs with no-data
+    * micro-batches off: the trailing one would only evict expired state,
+    * and one micro-batch drains the whole replay.
     */
   private def qe9StreamDedup(spark: SparkSession, dir: String): DataFrame = {
     import java.nio.file.{Files, StandardCopyOption}
@@ -870,26 +865,24 @@ object SparkEntry {
         Files.copy(p, stage.resolve(s"dup_${p.getFileName}"), StandardCopyOption.REPLACE_EXISTING)
     }
     val schema = eventsSchema(spark, stage.toString, dir)
-    val prevShuffle = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
     val name = s"qe9_mem_${System.nanoTime()}"
     val ev = Tables.normalizeTs(spark.readStream.schema(schema).parquet(stage.toString))
-    val q = streaming.EventStreams
-      .dedupStream(ev, "event_id")
-      .select(
-        col("event_id"), col("user_id"), col("event_type"),
-        round(col("value"), 2).as("value"))
-      .writeStream
-      .outputMode("append")
-      .format("memory")
-      .queryName(name)
-      .start()
-    try q.processAllAvailable()
-    finally {
-      q.stop()
-      spark.conf.set("spark.sql.shuffle.partitions", prevShuffle)
-      dropStage(stage)
-    }
+    // 2 state-store partitions, the qe6 rationale: the batch's state
+    // work fans out per partition (sf0.01, 4 cores: the query drains in
+    // 0.87 s at 8 partitions, 0.63 s at 2, medians of 6)
+    try withConf(spark, ShufflePartitions -> "2", NoDataBatches -> "false") {
+      val q = streaming.EventStreams
+        .dedupStream(ev, "event_id")
+        .select(
+          col("event_id"), col("user_id"), col("event_type"),
+          round(col("value"), 2).as("value"))
+        .writeStream
+        .outputMode("append")
+        .format("memory")
+        .queryName(name)
+        .start()
+      try q.processAllAvailable() finally q.stop()
+    } finally dropStage(stage)
     drainSink(spark, name)
   }
 
@@ -1803,11 +1796,10 @@ object SparkEntry {
     // 6.5 → 4.5 s at 8) — the qe6 small-state override, restored after
     // the eager rounds (Betweenness checkpoints its output, so the
     // caller's count() does no shuffling at the restored setting)
-    val prevShuffle = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try graph.Betweenness.run(edges, "x", "y", pivots = 0)
-      .select(col("node"), round(col("betweenness"), 6).as("betweenness"))
-    finally spark.conf.set("spark.sql.shuffle.partitions", prevShuffle)
+    withConf(spark, ShufflePartitions -> "8") {
+      graph.Betweenness.run(edges, "x", "y", pivots = 0)
+        .select(col("node"), round(col("betweenness"), 6).as("betweenness"))
+    }
   }
 
   /** Weighted betweenness ([[graph.Betweenness.runWeighted]], exact —
@@ -1827,11 +1819,10 @@ object SparkEntry {
         (col("o_custkey") % 150).as("x"),
         (col("o_orderkey") % 150).as("y"))
       .withColumn("w", (lit(1) + (col("x") + col("y")) % 7).cast("double"))
-    val prevShuffle = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try graph.Betweenness.runWeighted(edges, "x", "y", "w", pivots = 0)
-      .select(col("node"), round(col("betweenness"), 6).as("betweenness"))
-    finally spark.conf.set("spark.sql.shuffle.partitions", prevShuffle)
+    withConf(spark, ShufflePartitions -> "8") {
+      graph.Betweenness.runWeighted(edges, "x", "y", "w", pivots = 0)
+        .select(col("node"), round(col("betweenness"), 6).as("betweenness"))
+    }
   }
 
   /** Common-neighbor link prediction ([[graph.Structure.linkPrediction]],
@@ -1914,10 +1905,9 @@ object SparkEntry {
       .select(
         (col("o_custkey") % 80).as("x"),
         (col("o_orderkey") % 80).as("y"))
-    val prevShuffle = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try graph.Walks.randomWalks(edges, "x", "y", walksPerNode = 2, length = 8)
-    finally spark.conf.set("spark.sql.shuffle.partitions", prevShuffle)
+    withConf(spark, ShufflePartitions -> "8") {
+      graph.Walks.randomWalks(edges, "x", "y", walksPerNode = 2, length = 8)
+    }
   }
 
   /** Exact closeness + harmonic centrality ([[graph.Centrality
@@ -1936,10 +1926,9 @@ object SparkEntry {
         (col("o_orderkey") % 150).as("y"))
     // small-state override (the qg21 rationale: diameter eager BFS
     // rounds over ≤ 150² rows are task-count-bound at 32 partitions)
-    val prevShuffle = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try graph.Centrality.distanceCentralities(edges, "x", "y")
-    finally spark.conf.set("spark.sql.shuffle.partitions", prevShuffle)
+    withConf(spark, ShufflePartitions -> "8") {
+      graph.Centrality.distanceCentralities(edges, "x", "y")
+    }
   }
 
   /** HyperBall harmonic-centrality ESTIMATE ([[graph.Centrality
@@ -1964,13 +1953,12 @@ object SparkEntry {
         (col("o_orderkey") % 150).as("y"))
     // small-state override (the qg21 rationale: diameter eager rounds
     // over ≤ 150·2^p register rows are task-count-bound at 32)
-    val prevShuffle = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try graph.Centrality.harmonicHyperBall(edges, "x", "y", p = 6)
-      .select(col("node"),
-        round(col("harmonic_est"), 6).as("harmonic_est"),
-        round(col("reached_est"), 6).as("reached_est"))
-    finally spark.conf.set("spark.sql.shuffle.partitions", prevShuffle)
+    withConf(spark, ShufflePartitions -> "8") {
+      graph.Centrality.harmonicHyperBall(edges, "x", "y", p = 6)
+        .select(col("node"),
+          round(col("harmonic_est"), 6).as("harmonic_est"),
+          round(col("reached_est"), 6).as("reached_est"))
+    }
   }
 
   /** Effective diameter via HyperANF ([[graph.Centrality
@@ -1990,11 +1978,10 @@ object SparkEntry {
       .select(
         (col("o_custkey") % 150).as("x"),
         (col("o_orderkey") % 150).as("y"))
-    val prevShuffle = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try graph.Centrality.effectiveDiameterHyperBall(
-      edges, "x", "y", alpha = 0.9, p = 6)
-    finally spark.conf.set("spark.sql.shuffle.partitions", prevShuffle)
+    withConf(spark, ShufflePartitions -> "8") {
+      graph.Centrality.effectiveDiameterHyperBall(
+        edges, "x", "y", alpha = 0.9, p = 6)
+    }
   }
 
   /** Hard-negative mining ([[operators.Similarity.hardNegatives]],
@@ -2038,10 +2025,9 @@ object SparkEntry {
       .select(
         (col("o_custkey") % 150).as("x"),
         (col("o_orderkey") % 150).as("y"))
-    val prevShuffle = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try graph.Centrality.eigenvectorCentrality(edges, "x", "y", iters = 8)
-    finally spark.conf.set("spark.sql.shuffle.partitions", prevShuffle)
+    withConf(spark, ShufflePartitions -> "8") {
+      graph.Centrality.eigenvectorCentrality(edges, "x", "y", iters = 8)
+    }
   }
 
   /** WEIGHTED eigenvector centrality ([[graph.Centrality
@@ -2060,11 +2046,10 @@ object SparkEntry {
         (col("o_custkey") % 150).as("x"),
         (col("o_orderkey") % 150).as("y"))
       .agg(count(lit(1)).as("w"))
-    val prevShuffle = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try graph.Centrality.eigenvectorCentrality(
-      edges, "x", "y", iters = 8, weightCol = Some("w"))
-    finally spark.conf.set("spark.sql.shuffle.partitions", prevShuffle)
+    withConf(spark, ShufflePartitions -> "8") {
+      graph.Centrality.eigenvectorCentrality(
+        edges, "x", "y", iters = 8, weightCol = Some("w"))
+    }
   }
 
   /** Strongly connected components ([[graph.Scc]], trim + forward
@@ -2083,10 +2068,7 @@ object SparkEntry {
         (col("o_orderkey") % 60).as("d"))
     // small-state fixpoint rounds over ≤ 60 label rows — task-count-
     // bound at 32 shuffle partitions (the qg21/qg23 rationale)
-    val prevShuffle = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try graph.Scc.run(edges, "s", "d")
-    finally spark.conf.set("spark.sql.shuffle.partitions", prevShuffle)
+    withConf(spark, ShufflePartitions -> "8")(graph.Scc.run(edges, "s", "d"))
   }
 
   /** Topological layering ([[graph.Dag.longestPathLayer]]): per node,
@@ -2105,10 +2087,7 @@ object SparkEntry {
       .filter(floor(col("s") / 50) < floor(col("d") / 50))
     // small-state fixpoint rounds over ≤ 500 layer rows (the qg28
     // rationale)
-    val prevShuffle = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try graph.Dag.longestPathLayer(edges, "s", "d")
-    finally spark.conf.set("spark.sql.shuffle.partitions", prevShuffle)
+    withConf(spark, ShufflePartitions -> "8")(graph.Dag.longestPathLayer(edges, "s", "d"))
   }
 
   /** Critical path ([[graph.Dag.criticalPath]]): the qg29 bucket-layered
@@ -2124,10 +2103,7 @@ object SparkEntry {
         (col("o_orderkey") % 500).as("d"))
       .filter(floor(col("s") / 50) < floor(col("d") / 50))
       .withColumn("w", (lit(1) + (col("s") + col("d")) % 5).cast("double"))
-    val prevShuffle = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try graph.Dag.criticalPath(edges, "s", "d", "w")
-    finally spark.conf.set("spark.sql.shuffle.partitions", prevShuffle)
+    withConf(spark, ShufflePartitions -> "8")(graph.Dag.criticalPath(edges, "s", "d", "w"))
   }
 
   /** Distributed weighted SSSP ([[graph.Bfs.sssp]], source 0): min-plus
@@ -2145,10 +2121,7 @@ object SparkEntry {
       .select(least(col("x"), col("y")).as("s"), greatest(col("x"), col("y")).as("d"))
       .filter(col("s") =!= col("d"))
       .withColumn("w", (lit(1) + (col("s") + col("d")) % 7).cast("double"))
-    val prevShuffle = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try graph.Bfs.sssp(edges, "s", "d", "w", source = 0L)
-    finally spark.conf.set("spark.sql.shuffle.partitions", prevShuffle)
+    withConf(spark, ShufflePartitions -> "8")(graph.Bfs.sssp(edges, "s", "d", "w", source = 0L))
   }
 
   /** Weighted closeness + harmonic centrality ([[graph.Centrality
@@ -2169,10 +2142,9 @@ object SparkEntry {
         (col("o_custkey") % 150).as("x"),
         (col("o_orderkey") % 150).as("y"))
       .withColumn("w", (lit(1) + (col("x") + col("y")) % 7).cast("double"))
-    val prevShuffle = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try graph.Centrality.weightedDistanceCentralities(edges, "x", "y", "w")
-    finally spark.conf.set("spark.sql.shuffle.partitions", prevShuffle)
+    withConf(spark, ShufflePartitions -> "8") {
+      graph.Centrality.weightedDistanceCentralities(edges, "x", "y", "w")
+    }
   }
 
   /** Weighted eccentricity ([[graph.Centrality.weightedEccentricity]])
@@ -2190,10 +2162,9 @@ object SparkEntry {
         (col("o_custkey") % 150).as("x"),
         (col("o_orderkey") % 150).as("y"))
       .withColumn("w", (lit(1) + (col("x") + col("y")) % 7).cast("double"))
-    val prevShuffle = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try graph.Centrality.weightedEccentricity(edges, "x", "y", "w")
-    finally spark.conf.set("spark.sql.shuffle.partitions", prevShuffle)
+    withConf(spark, ShufflePartitions -> "8") {
+      graph.Centrality.weightedEccentricity(edges, "x", "y", "w")
+    }
   }
 
   /** ANN recall@10 evaluation ([[operators.Similarity.annRecall]],
@@ -2777,16 +2748,12 @@ object SparkEntry {
   private def qe24StreamHll(spark: SparkSession, dir: String): DataFrame = {
     val stage = stageEvents(dir)
     val schema = eventsSchema(spark, stage.toString, dir)
-    val prevShuffle = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
     val t =
-      try streaming.EventStreams.runHllStream(
-        spark, stage.toString, schema, p = 4,
-        queryName = s"qe24_mem_${System.nanoTime()}")
-      finally {
-        spark.conf.set("spark.sql.shuffle.partitions", prevShuffle)
-        dropStage(stage)
-      }
+      try withConf(spark, ShufflePartitions -> "8") {
+        streaming.EventStreams.runHllStream(
+          spark, stage.toString, schema, p = 4,
+          queryName = s"qe24_mem_${System.nanoTime()}")
+      } finally dropStage(stage)
     t.select(
       unix_timestamp(col("window_start")).as("window_start"),
       col("n_registers"), col("est_distinct"))
@@ -2809,16 +2776,12 @@ object SparkEntry {
   private def qe51StreamQuantile(spark: SparkSession, dir: String): DataFrame = {
     val stage = stageEvents(dir)
     val schema = eventsSchema(spark, stage.toString, dir)
-    val prevShuffle = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
     val t =
-      try streaming.EventStreams.runQuantileStream(
-        spark, stage.toString, schema, k = 8, qs = Seq(0.5, 0.95),
-        queryName = s"qe51_mem_${System.nanoTime()}")
-      finally {
-        spark.conf.set("spark.sql.shuffle.partitions", prevShuffle)
-        dropStage(stage)
-      }
+      try withConf(spark, ShufflePartitions -> "8") {
+        streaming.EventStreams.runQuantileStream(
+          spark, stage.toString, schema, k = 8, qs = Seq(0.5, 0.95),
+          queryName = s"qe51_mem_${System.nanoTime()}")
+      } finally dropStage(stage)
     t.select(
       unix_timestamp(col("window_start")).as("window_start"),
       col("q"), col("n"), col("level"), col("n_sample"), col("est"))
@@ -2904,16 +2867,12 @@ object SparkEntry {
   private def qe52StreamTopk(spark: SparkSession, dir: String): DataFrame = {
     val stage = stageEvents(dir)
     val schema = eventsSchema(spark, stage.toString, dir)
-    val prevShuffle = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
     val t =
-      try streaming.EventStreams.runTopKStream(
-        spark, stage.toString, schema, m = 64, k = 5,
-        queryName = s"qe52_mem_${System.nanoTime()}")
-      finally {
-        spark.conf.set("spark.sql.shuffle.partitions", prevShuffle)
-        dropStage(stage)
-      }
+      try withConf(spark, ShufflePartitions -> "8") {
+        streaming.EventStreams.runTopKStream(
+          spark, stage.toString, schema, m = 64, k = 5,
+          queryName = s"qe52_mem_${System.nanoTime()}")
+      } finally dropStage(stage)
     t.select(
       unix_timestamp(col("window_start")).as("window_start"),
       col("rank"), col("term"), col("est"), col("err"))
@@ -2929,18 +2888,14 @@ object SparkEntry {
   private def qe27StreamCms(spark: SparkSession, dir: String): DataFrame = {
     val stage = stageEvents(dir)
     val schema = eventsSchema(spark, stage.toString, dir)
-    val prevShuffle = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
     val t =
-      try streaming.EventStreams.runCmsStream(
-        spark, stage.toString, schema,
-        probes = Seq("click", "purchase", "zzz_missing"),
-        depth = 4, width = 64,
-        queryName = s"qe27_mem_${System.nanoTime()}")
-      finally {
-        spark.conf.set("spark.sql.shuffle.partitions", prevShuffle)
-        dropStage(stage)
-      }
+      try withConf(spark, ShufflePartitions -> "8") {
+        streaming.EventStreams.runCmsStream(
+          spark, stage.toString, schema,
+          probes = Seq("click", "purchase", "zzz_missing"),
+          depth = 4, width = 64,
+          queryName = s"qe27_mem_${System.nanoTime()}")
+      } finally dropStage(stage)
     t.select(
       unix_timestamp(col("window_start")).as("window_start"),
       col("term"), col("est"))

@@ -1,7 +1,7 @@
 package graft.graph
 
 import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
-import org.apache.spark.sql.functions.{col, count, count_if, greatest, least, lit}
+import org.apache.spark.sql.functions.{array, col, count, count_if, explode, greatest, least, lit, struct}
 import org.slf4j.LoggerFactory
 
 /** The graph tier's shared fixpoint machinery: data-sized partition
@@ -22,21 +22,29 @@ private[graph] object Iterate {
     math.max(1L, math.min(
       spark.sparkContext.defaultParallelism.toLong, rows / 100000L + 1L)).toInt
 
+  /** `df` `localCheckpoint`ed, plus its row count observed inside the
+    * checkpoint's own job — sizing a table costs no separate count job.
+    */
+  private def checkpointCounted(df: DataFrame): (DataFrame, Long) = {
+    val obs = new Observation()
+    val cp = df.observe(obs, count(lit(1)).as("rows")).localCheckpoint(true)
+    (cp, obs.get("rows").asInstanceOf[Long])
+  }
+
   /** `df` `localCheckpoint`ed once and coalesced to the [[parts]] of
     * its row count, plus that partition count: the probe table a loop
     * reads every round computes exactly once, and each round's scan of
     * it runs data-sized tasks instead of shuffle.partitions KB blocks.
     */
   def sized(df: DataFrame): (DataFrame, Int) = {
-    val cp = df.localCheckpoint(true)
-    val n = parts(df.sparkSession, cp.count())
+    val (cp, rows) = checkpointCounted(df)
+    val n = parts(df.sparkSession, rows)
     (cp.coalesce(n), n)
   }
 
   /** Canonical undirected adjacency `(v, w)` — each edge in both
-    * orientations, self-loops and duplicates dropped — plus its
-    * [[parts]]. The canonical edges checkpoint once; the doubled list is
-    * coalesced to the data size and checkpointed, so every round of the
+    * orientations, self-loops and duplicates dropped — [[sized]]: one
+    * checkpoint job computes and counts it, so every round of the
     * caller's loop reads a few cached blocks and the input computes
     * exactly once. No cast: the endpoint type is the caller's.
     */
@@ -47,13 +55,11 @@ private[graph] object Iterate {
         greatest(col(aCol), col(bCol)).as("b"))
       .filter(col("a") =!= col("b"))
       .distinct()
-      .localCheckpoint(true)
-    val n = parts(edges.sparkSession, 2L * e.count())
-    val ed = e.select(col("a").as("v"), col("b").as("w"))
-      .unionAll(e.select(col("b").as("v"), col("a").as("w")))
-      .coalesce(n)
-      .localCheckpoint(true)
-    (ed, n)
+    sized(e
+      .select(explode(array(
+        struct(col("a").as("v"), col("b").as("w")),
+        struct(col("b").as("v"), col("a").as("w")))).as("__e"))
+      .select(col("__e.v"), col("__e.w")))
   }
 
   /** Applies `step(state, round)` (round 1-based) `rounds` times from
@@ -101,9 +107,7 @@ private[graph] object Iterate {
     require(maxRounds >= 1, s"maxRounds must be >= 1, got $maxRounds")
     require(stepsPerRound >= 1, s"stepsPerRound must be >= 1, got $stepsPerRound")
     val roundBound = (maxRounds - 1) / stepsPerRound + 1
-    val initObs = new Observation()
-    var state = init.observe(initObs, count(lit(1)).as("rows")).localCheckpoint(true)
-    var rows = initObs.get("rows").asInstanceOf[Long]
+    var (state, rows) = checkpointCounted(init)
     var round = 0
     var stable = false
     while (!stable) {

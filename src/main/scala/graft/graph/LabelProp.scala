@@ -1,7 +1,6 @@
 package graft.graph
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** SYNCHRONOUS LABEL PROPAGATION (Raghavan et al. 2007) — the
@@ -16,10 +15,15 @@ import org.apache.spark.sql.functions._
   * be unreplayable by construction).
   *
   * Per round: one equi-join of the (src, dst)-doubled edge list against
-  * the label vector on dst, one (v, label) count with map-side
-  * partials, one per-vertex `row_number` pick over (count desc, label
-  * asc) — all keyed, shuffle bounded by edges; the label vector
-  * `localCheckpoint`s per round through [[Iterate.fixedRounds]].
+  * the label vector on dst, then ONE exchange by vertex — the
+  * (v, label) count and the per-vertex pick `min(struct(-count,
+  * label))` (most frequent, then smallest label; `-count` leaves any
+  * orderable label type valid) both aggregate inside it, with no
+  * Window; the label vector `localCheckpoint`s per round through
+  * [[Iterate.fixedRounds]]. Round 1 starts from the identity labelling,
+  * where every neighbour brings a label of its own exactly once: all
+  * counts are 1 and the pick is the least neighbour, one aggregate of
+  * the edge list with no join.
   */
 object LabelProp {
 
@@ -30,19 +34,20 @@ object LabelProp {
   def run(edges: DataFrame, aCol: String, bCol: String, rounds: Int): DataFrame = {
     require(rounds >= 0, s"rounds must be >= 0, got $rounds")
     // the propagation loop joins ed every round
-    val (ed, _) = Iterate.adjacency(edges, aCol, bCol)
+    val (ed, parts) = Iterate.adjacency(edges, aCol, bCol)
 
-    val byV = Window.partitionBy(col("v")).orderBy(col("cnt").desc, col("lbl").asc)
-    val labels = Iterate.fixedRounds(
-      ed.select(col("v")).distinct().withColumn("lbl", col("v")),
-      rounds, "LabelProp.run") { (cur, _) =>
+    val (init, steps) =
+      if (rounds == 0) (ed.select(col("v")).distinct().withColumn("lbl", col("v")), 0)
+      else (ed.groupBy(col("v")).agg(min(col("w")).as("lbl")), rounds - 1)
+    val labels = Iterate.fixedRounds(init, steps, "LabelProp.run") { (cur, _) =>
       ed
         .join(cur.select(col("v").as("w"), col("lbl")), Seq("w"))
+        .repartition(parts, col("v"))
         .groupBy(col("v"), col("lbl"))
         .agg(count(lit(1)).as("cnt"))
-        .withColumn("__rn", row_number().over(byV))
-        .filter(col("__rn") === 1)
-        .select(col("v"), col("lbl"))
+        .groupBy(col("v"))
+        .agg(min(struct((-col("cnt")).as("negCnt"), col("lbl"))).as("best"))
+        .select(col("v"), col("best.lbl").as("lbl"))
     }
     // ed's checkpoint blocks free on GC
     labels.select(col("v").as("node"), col("lbl").as("label"))

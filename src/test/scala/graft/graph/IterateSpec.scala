@@ -17,7 +17,8 @@ import graft.GraftSession
   * after one round, the round bound throws by name, and no count job
   * runs inside the loop — in the driver and in its peel and
   * longest-path callers. The fixed-count driver matches a hand-written
-  * checkpoint loop and runs one checkpoint job per round.
+  * checkpoint loop and runs one checkpoint job per round; LabelProp on
+  * it runs one checkpoint execution per round and no count.
   */
 class IterateSpec extends AnyFunSuite {
   private lazy val spark = GraftSession.local(4, "iterate-spec")
@@ -162,6 +163,19 @@ class IterateSpec extends AnyFunSuite {
     val reads = dag.filter(n => n.contains("Dag.scala") &&
       (n.contains("count at") || n.contains("head at")))
     assert(reads.size == 1, dag.mkString("\n"))
+  }
+
+  test("LabelProp submits no count: one checkpoint execution per round") {
+    val g = Seq((1L, 2L), (2L, 3L), (3L, 1L), (3L, 4L), (4L, 5L), (5L, 6L), (6L, 4L))
+      .toDF("x", "y")
+    for (rounds <- Seq(2, 4)) {
+      val names = actionsOf { LabelProp.run(g, "x", "y", rounds).collect() }
+      assert(!names.exists(_.contains("count at")), names.mkString("\n"))
+      // the adjacency and round 1 (one aggregate), then one per later round
+      val checkpoints = names.count(_.contains("localCheckpoint at Iterate.scala"))
+      assert(checkpoints == rounds + 1, names.mkString("\n"))
+      assert(names.size == checkpoints + 1, names.mkString("\n")) // + the collect
+    }
   }
 
   // x ← ½x + ¼·Σ neighbours: doubles whose every bit depends on the round

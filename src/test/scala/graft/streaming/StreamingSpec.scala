@@ -555,6 +555,60 @@ class StreamingSpec extends AnyFunSuite {
     assert(got == events.count()) // each id exactly once despite 2× input
   }
 
+  test("watermark dedup with no-data batches off drains in one micro-batch, each id once") {
+    val raw = Tables.events(spark, sfDir)
+    val dir = java.nio.file.Files.createTempDirectory("events-dedup-nodata")
+    for (f <- Seq("a.parquet", "b.parquet"))
+      java.nio.file.Files.copy(java.nio.file.Paths.get(s"$sfDir/events.parquet"), dir.resolve(f))
+    def drain(noDataBatches: String): (Int, Array[Long]) =
+      graft.SparkEntry.withConf(
+          spark, "spark.sql.streaming.noDataMicroBatches.enabled" -> noDataBatches) {
+        val name = s"dedup_nodata_$noDataBatches"
+        val stream = Tables.normalizeTs(spark.readStream.schema(raw.schema).parquet(dir.toString))
+        val q = EventStreams.dedupStream(stream, "event_id")
+          .writeStream.outputMode("append").format("memory").queryName(name).start()
+        try q.processAllAvailable() finally q.stop()
+        val ids = spark.table(name).select("event_id").collect().map(_.getLong(0))
+        spark.catalog.dropTempView(name)
+        (q.recentProgress.length, ids)
+      }
+    val (batches, ids) = drain("false")
+    assert(batches == 1)
+    val expected = events.select("event_id").collect().map(_.getLong(0))
+    assert(ids.length == ids.distinct.length)
+    assert(ids.sorted.toSeq == expected.sorted.toSeq)
+    // on, the same drain adds a no-data batch that only evicts state
+    val (batchesOn, idsOn) = drain("true")
+    assert(batchesOn == 2)
+    assert(idsOn.sorted.toSeq == expected.sorted.toSeq)
+  }
+
+  test("withConf restores every key when its body throws, unset keys unset") {
+    val shuffle = "spark.sql.shuffle.partitions"
+    val noData = "spark.sql.streaming.noDataMicroBatches.enabled"
+    val shuffleBefore = spark.conf.get(shuffle)
+    assert(!spark.conf.getAll.contains(noData))
+    def failing(value: String): Unit = {
+      val ex = intercept[IllegalStateException] {
+        graft.SparkEntry.withConf(spark, shuffle -> "3", noData -> value) {
+          assert(spark.conf.get(shuffle) == "3" && spark.conf.get(noData) == value)
+          throw new IllegalStateException("body failed")
+        }
+      }
+      assert(ex.getMessage == "body failed")
+    }
+    failing("false")
+    assert(spark.conf.get(shuffle) == shuffleBefore)
+    assert(!spark.conf.getAll.contains(noData))
+    // a key set before comes back to that value, not to the default
+    spark.conf.set(noData, "false")
+    try {
+      failing("true")
+      assert(spark.conf.getAll.get(noData).contains("false"))
+      assert(spark.conf.get(shuffle) == shuffleBefore)
+    } finally spark.conf.unset(noData)
+  }
+
   test("multimodal: decode stub features are deterministic and shaped") {
     import spark.implicits._
     val media = graft.multimodal.Multimodal.mediaFromDocuments(spark, Tables.documents(spark, sfDir))

@@ -112,6 +112,8 @@ object CurationPipeline {
     * First call creates the table (batch curated against itself).
     *
     * Returns per-stage counts incl. the committed version.
+    * No gate calls it: it is the program's incremental entry, which
+    * PipelineSpec drives batch by batch.
     */
   def appendCuratedBatch(
       spark: SparkSession,

@@ -294,14 +294,6 @@ object SparkEntry {
     maxUsCache.computeIfAbsent(dir, d =>
       events(spark, d).agg(max(unix_micros(col("ts")))).first().getLong(0))
 
-  /** events schema, memoized per dir (immutable table; the footer read
-    * is one small job but every stream gate re-ran it per bench run). */
-  private val eventsSchemaCache =
-    new java.util.concurrent.ConcurrentHashMap[String, org.apache.spark.sql.types.StructType]()
-  private def eventsSchema(
-      spark: SparkSession, path: String, dir: String): org.apache.spark.sql.types.StructType =
-    eventsSchemaCache.computeIfAbsent(dir, _ => spark.read.parquet(path).schema)
-
   /** Sentinel parquet files, memoized per (gate-kind, dir, n): sentinel
     * content is dir-deterministic (memoized maxUs + the physical ts
     * type), so only the FIRST run pays the Spark write job — later runs
@@ -471,36 +463,41 @@ object SparkEntry {
     stage
   }
 
-  /** Delete a staged source dir once its streaming query has drained —
-    * the memory-sink table is already materialized, so the files are
-    * dead weight; without this, every bench run (5× per query) leaks a
-    * full events copy into /tmp.
+  /** Recursive best-effort delete of a staging dir. A stream gate calls
+    * it once its query has drained (the memory-sink table is already
+    * materialized); without it every bench run (5× per query) leaks a
+    * full events copy into the temp dir.
     */
-  private def dropStage(stage: java.nio.file.Path): Unit = {
-    import java.nio.file.Files
-    try {
-      Files.list(stage).forEach(p => Files.deleteIfExists(p))
-      Files.deleteIfExists(stage)
-    } catch { case _: java.io.IOException => () } // best-effort cleanup
+  private def rmTree(root: java.nio.file.Path): Unit = {
+    import java.nio.file.{Files, Path}
+    try
+      Files.walk(root)
+        .sorted(java.util.Comparator.reverseOrder[Path]())
+        .forEach { p => Files.deleteIfExists(p); () }
+    catch { case _: java.io.IOException => () }
   }
 
-  /** Materialize a drained memory-sink table and DROP its temp view —
-    * the catalog twin of [[dropStage]]: the streaming gates register
-    * nanoTime-suffixed memory sinks, and without the drop every bench
-    * run (5× per query) leaked a cached result table into the session
-    * catalog. localCheckpoint first (eager, bounded drained rows) so
-    * the returned frame no longer references the dropped view.
+  /** Run a gate that writes and re-reads files: `body` gets a fresh
+    * `graft-<name>…` temp dir, its rows are collected into a
+    * one-partition local frame, and the dir is deleted whether or not
+    * the body throws. A gate's result is small by construction; its
+    * staged files (some a lineitem copy) are not, and a lazy frame over
+    * them would keep them alive past the gate.
     */
-  private def drainSink(spark: SparkSession, name: String): DataFrame = {
-    val out = spark.table(name).localCheckpoint(true)
-    spark.catalog.dropTempView(name)
-    out
+  private def staged(spark: SparkSession, name: String)(
+      body: java.nio.file.Path => DataFrame): DataFrame = {
+    val dir = java.nio.file.Files.createTempDirectory(s"graft-$name")
+    try {
+      val out = body(dir)
+      spark.createDataFrame(
+        spark.sparkContext.parallelize(out.collect().toIndexedSeq, 1), out.schema)
+    } finally rmTree(dir)
   }
 
   private def qe6StreamSessions(spark: SparkSession, dir: String): DataFrame = {
     import java.nio.file.{Files, StandardCopyOption}
     val stage = stageEvents(dir)
-    val schema = eventsSchema(spark, stage.toString, dir)
+    val schema = Tables.schema(spark, dir, "events")
     val tsType = schema("ts").dataType
     val tsIsLong = tsType == org.apache.spark.sql.types.LongType
     val maxUs = eventsMaxUs(spark, dir)
@@ -564,8 +561,8 @@ object SparkEntry {
         .start()
       // data batch + watermark-advance flush batch
       try q.processAllAvailable() finally q.stop()
-    } finally dropStage(stage)
-    drainSink(spark, name).filter(col("user_id") >= 0)
+    } finally rmTree(stage)
+    streaming.EventStreams.drainMemorySink(spark, name).filter(col("user_id") >= 0)
   }
 
   /** §2.10 through the ORACLE, part 2 — a REAL stream-stream interval
@@ -583,7 +580,7 @@ object SparkEntry {
     */
   private def qe7StreamJoin(spark: SparkSession, dir: String): DataFrame = {
     val stage = stageEvents(dir)
-    val schema = eventsSchema(spark, stage.toString, dir)
+    val schema = Tables.schema(spark, dir, "events")
     // stream-stream joins keep FOUR state stores per partition (both
     // sides × key/index maps), so per-partition checkpoint fan-out costs
     // 4× qe6's; 2 partitions suffice for the gate volumes (the state is
@@ -602,8 +599,8 @@ object SparkEntry {
         .queryName(name)
         .start()
       try q.processAllAvailable() finally q.stop()
-    } finally dropStage(stage)
-    drainSink(spark, name)
+    } finally rmTree(stage)
+    streaming.EventStreams.drainMemorySink(spark, name)
   }
 
   /** CHAINED STATEFUL STREAMING — watermarked dedup feeding a
@@ -631,7 +628,7 @@ object SparkEntry {
   private def qe18StreamDedupJoin(spark: SparkSession, dir: String): DataFrame = {
     import java.nio.file.{Files, StandardCopyOption}
     val stage = stageEvents(dir)
-    val schema = eventsSchema(spark, stage.toString, dir)
+    val schema = Tables.schema(spark, dir, "events")
     // inject byte-identical duplicates as a LATER file (newer mtime ⇒
     // later micro-batch under maxFilesPerTrigger=1)
     val dups = spark.read.parquet(stage.toString).filter(col("event_id") % 5 === 0)
@@ -642,6 +639,7 @@ object SparkEntry {
         Files.move(p, stage.resolve(s"zz_dup_${p.getFileName}"),
           StandardCopyOption.REPLACE_EXISTING)
     }
+    rmTree(tmp)
     val name = s"qe18_mem_${System.nanoTime()}"
     val ev = Tables.normalizeTs(
       spark.readStream.schema(schema).option("maxFilesPerTrigger", 1)
@@ -660,8 +658,8 @@ object SparkEntry {
         .queryName(name)
         .start()
       try q.processAllAvailable() finally q.stop()
-    } finally dropStage(stage)
-    drainSink(spark, name)
+    } finally rmTree(stage)
+    streaming.EventStreams.drainMemorySink(spark, name)
   }
 
   /** §2.10 through the ORACLE, part 6 — the stream-stream LEFT OUTER
@@ -682,7 +680,7 @@ object SparkEntry {
   private def qe13StreamLeftJoin(spark: SparkSession, dir: String): DataFrame = {
     import java.nio.file.{Files, StandardCopyOption}
     val stage = stageEvents(dir)
-    val schema = eventsSchema(spark, stage.toString, dir)
+    val schema = Tables.schema(spark, dir, "events")
     val tsType = schema("ts").dataType
     val tsIsLong = tsType == org.apache.spark.sql.types.LongType
     val maxUs = eventsMaxUs(spark, dir)
@@ -728,8 +726,8 @@ object SparkEntry {
         .start()
       // data batch + watermark-advance flush batch
       try q.processAllAvailable() finally q.stop()
-    } finally dropStage(stage)
-    drainSink(spark, name).filter(col("user_id") >= 0)
+    } finally rmTree(stage)
+    streaming.EventStreams.drainMemorySink(spark, name).filter(col("user_id") >= 0)
   }
 
   /** Stream-stream FULL OUTER interval join — completes the join-type
@@ -743,7 +741,7 @@ object SparkEntry {
   private def qe17StreamFullJoin(spark: SparkSession, dir: String): DataFrame = {
     import java.nio.file.{Files, StandardCopyOption}
     val stage = stageEvents(dir)
-    val schema = eventsSchema(spark, stage.toString, dir)
+    val schema = Tables.schema(spark, dir, "events")
     val tsType = schema("ts").dataType
     val tsIsLong = tsType == org.apache.spark.sql.types.LongType
     val maxUs = eventsMaxUs(spark, dir)
@@ -783,8 +781,8 @@ object SparkEntry {
         .start()
       // data batch + watermark-advance flush batch
       try q.processAllAvailable() finally q.stop()
-    } finally dropStage(stage)
-    drainSink(spark, name).filter(col("user_id") >= 0)
+    } finally rmTree(stage)
+    streaming.EventStreams.drainMemorySink(spark, name).filter(col("user_id") >= 0)
   }
 
   /** §2.10 through the ORACLE, part 5 — the STREAM-STATIC enrich join
@@ -799,7 +797,7 @@ object SparkEntry {
     */
   private def qe10StreamEnrich(spark: SparkSession, dir: String): DataFrame = {
     val stage = stageEvents(dir)
-    val schema = eventsSchema(spark, stage.toString, dir)
+    val schema = Tables.schema(spark, dir, "events")
     val name = s"qe10_mem_${System.nanoTime()}"
     val ev = Tables.normalizeTs(spark.readStream.schema(schema).parquet(stage.toString))
     val dim = t(spark, dir, "customer").select(col("c_custkey"), col("c_mktsegment"))
@@ -817,9 +815,9 @@ object SparkEntry {
     try q.processAllAvailable()
     finally {
       q.stop()
-      dropStage(stage)
+      rmTree(stage)
     }
-    drainSink(spark, name)
+    streaming.EventStreams.drainMemorySink(spark, name)
   }
 
   /** §2.10 through the ORACLE, part 3 — the REAL watermarked streaming
@@ -832,12 +830,12 @@ object SparkEntry {
     */
   private def qe8StreamWindow(spark: SparkSession, dir: String): DataFrame = {
     val stage = stageEvents(dir)
-    val schema = eventsSchema(spark, stage.toString, dir)
+    val schema = Tables.schema(spark, dir, "events")
     val t =
       try withConf(spark, ShufflePartitions -> "8") {
         streaming.EventStreams.runWindowedStream(
           spark, stage.toString, schema, s"qe8_mem_${System.nanoTime()}")
-      } finally dropStage(stage)
+      } finally rmTree(stage)
     t.select(
       unix_timestamp(col("window_start")).as("window_start"),
       col("event_type"), col("n"), col("value_sum"))
@@ -864,7 +862,7 @@ object SparkEntry {
       if (p.toString.endsWith(".parquet"))
         Files.copy(p, stage.resolve(s"dup_${p.getFileName}"), StandardCopyOption.REPLACE_EXISTING)
     }
-    val schema = eventsSchema(spark, stage.toString, dir)
+    val schema = Tables.schema(spark, dir, "events")
     val name = s"qe9_mem_${System.nanoTime()}"
     val ev = Tables.normalizeTs(spark.readStream.schema(schema).parquet(stage.toString))
     // 2 state-store partitions, the qe6 rationale: the batch's state
@@ -882,8 +880,8 @@ object SparkEntry {
         .queryName(name)
         .start()
       try q.processAllAvailable() finally q.stop()
-    } finally dropStage(stage)
-    drainSink(spark, name)
+    } finally rmTree(stage)
+    streaming.EventStreams.drainMemorySink(spark, name)
   }
 
   /** §2.10 through the ORACLE, part 6 — EXACTLY-ONCE FILE SINK
@@ -901,7 +899,7 @@ object SparkEntry {
     val stage = stageEvents(dir)
     val out = java.nio.file.Files.createTempDirectory("graft-qe11-out")
     val ckpt = java.nio.file.Files.createTempDirectory("graft-qe11-ckpt")
-    val schema = eventsSchema(spark, stage.toString, dir)
+    val schema = Tables.schema(spark, dir, "events")
     val ev = Tables.normalizeTs(
       spark.readStream.schema(schema).option("maxFilesPerTrigger", "1")
         .parquet(stage.toString))
@@ -913,7 +911,7 @@ object SparkEntry {
     try q.processAllAvailable()
     finally {
       q.stop()
-      dropStage(stage)
+      rmTree(stage)
     }
     val res = spark.read.parquet(out.toString).drop("batch_id")
     val rows = res.collect()
@@ -941,7 +939,7 @@ object SparkEntry {
     val ckpt = java.nio.file.Files.createTempDirectory("graft-qe12-ckpt")
     try {
       val root = wh.resolve("tbl").toString
-      val schema = eventsSchema(spark, stage.toString, dir)
+      val schema = Tables.schema(spark, dir, "events")
       val ev = Tables.normalizeTs(
         spark.readStream.schema(schema).option("maxFilesPerTrigger", "1")
           .parquet(stage.toString))
@@ -956,7 +954,7 @@ object SparkEntry {
       try q.processAllAvailable()
       finally {
         q.stop()
-        dropStage(stage)
+        rmTree(stage)
       }
       // redelivery probe: batch 0 arrives again (poison payload) — the
       // claimed version makes it a no-op; a duplicate would fail the oracle
@@ -1680,22 +1678,19 @@ object SparkEntry {
     * recovered from the half-pixel-centered world coords, edge pixels
     * averaging over their real neighbors only.
     */
-  private def qz8Focal(spark: SparkSession, dir: String): DataFrame = {
-    val w = 64; val h = 48
-    val vals = Array.tabulate(w * h) { i =>
-      val c = i % w; val r = i / w
-      (((c * 7 + r * 13) % 40) / 10.0).toFloat
+  private def qz8Focal(spark: SparkSession, dir: String): DataFrame =
+    staged(spark, "qz8") { tmp =>
+      val (w, h) = (64, 48)
+      sources.GeoTiff.write(
+        tmp.resolve("raster.tif").toString, w, h, rasterValues(w, h, 7, 13, 40),
+        1.0, 1.0, 0.0, h.toDouble)
+      val cells = sources.GeoTiff.read(spark, tmp.toString, globFilter = Some("*.tif"))
+        .select(
+          floor(col("x")).cast("long").as("cx"),
+          floor(col("y")).cast("long").as("cy"),
+          col("value"))
+      operators.Spatial.focalMean(cells, radius = 1, quant = 10.0)
     }
-    val tmp = java.nio.file.Files.createTempDirectory("graft-qz8")
-    sources.GeoTiff.write(
-      tmp.resolve("raster.tif").toString, w, h, vals, 1.0, 1.0, 0.0, h.toDouble)
-    val cells = sources.GeoTiff.read(spark, tmp.toString, globFilter = Some("*.tif"))
-      .select(
-        floor(col("x")).cast("long").as("cx"),
-        floor(col("y")).cast("long").as("cy"),
-        col("value"))
-    operators.Spatial.focalMean(cells, radius = 1, quant = 10.0)
-  }
 
   /** Rolling lag-1 autocorrelation ([[operators.Temporal
     * .rollingAutocorr]], window 8): per-user trending-vs-whipsawing
@@ -2747,13 +2742,13 @@ object SparkEntry {
     */
   private def qe24StreamHll(spark: SparkSession, dir: String): DataFrame = {
     val stage = stageEvents(dir)
-    val schema = eventsSchema(spark, stage.toString, dir)
+    val schema = Tables.schema(spark, dir, "events")
     val t =
       try withConf(spark, ShufflePartitions -> "8") {
         streaming.EventStreams.runHllStream(
           spark, stage.toString, schema, p = 4,
           queryName = s"qe24_mem_${System.nanoTime()}")
-      } finally dropStage(stage)
+      } finally rmTree(stage)
     t.select(
       unix_timestamp(col("window_start")).as("window_start"),
       col("n_registers"), col("est_distinct"))
@@ -2775,13 +2770,13 @@ object SparkEntry {
     */
   private def qe51StreamQuantile(spark: SparkSession, dir: String): DataFrame = {
     val stage = stageEvents(dir)
-    val schema = eventsSchema(spark, stage.toString, dir)
+    val schema = Tables.schema(spark, dir, "events")
     val t =
       try withConf(spark, ShufflePartitions -> "8") {
         streaming.EventStreams.runQuantileStream(
           spark, stage.toString, schema, k = 8, qs = Seq(0.5, 0.95),
           queryName = s"qe51_mem_${System.nanoTime()}")
-      } finally dropStage(stage)
+      } finally rmTree(stage)
     t.select(
       unix_timestamp(col("window_start")).as("window_start"),
       col("q"), col("n"), col("level"), col("n_sample"), col("est"))
@@ -2866,13 +2861,13 @@ object SparkEntry {
     */
   private def qe52StreamTopk(spark: SparkSession, dir: String): DataFrame = {
     val stage = stageEvents(dir)
-    val schema = eventsSchema(spark, stage.toString, dir)
+    val schema = Tables.schema(spark, dir, "events")
     val t =
       try withConf(spark, ShufflePartitions -> "8") {
         streaming.EventStreams.runTopKStream(
           spark, stage.toString, schema, m = 64, k = 5,
           queryName = s"qe52_mem_${System.nanoTime()}")
-      } finally dropStage(stage)
+      } finally rmTree(stage)
     t.select(
       unix_timestamp(col("window_start")).as("window_start"),
       col("rank"), col("term"), col("est"), col("err"))
@@ -2887,7 +2882,7 @@ object SparkEntry {
     */
   private def qe27StreamCms(spark: SparkSession, dir: String): DataFrame = {
     val stage = stageEvents(dir)
-    val schema = eventsSchema(spark, stage.toString, dir)
+    val schema = Tables.schema(spark, dir, "events")
     val t =
       try withConf(spark, ShufflePartitions -> "8") {
         streaming.EventStreams.runCmsStream(
@@ -2895,7 +2890,7 @@ object SparkEntry {
           probes = Seq("click", "purchase", "zzz_missing"),
           depth = 4, width = 64,
           queryName = s"qe27_mem_${System.nanoTime()}")
-      } finally dropStage(stage)
+      } finally rmTree(stage)
     t.select(
       unix_timestamp(col("window_start")).as("window_start"),
       col("term"), col("est"))
@@ -3059,8 +3054,7 @@ object SparkEntry {
     * TxLogSpec's job.
     */
   private def qf17TxlogRestore(spark: SparkSession, dir: String): DataFrame = {
-    val wh = java.nio.file.Files.createTempDirectory("graft-qf17")
-    try {
+    staged(spark, "qf17") { wh =>
       val root = wh.resolve("tbl").toString
       val orders = t(spark, dir, "orders")
         .select(col("o_orderkey"), col("o_custkey"), col("o_totalprice"))
@@ -3072,15 +3066,12 @@ object SparkEntry {
       operators.TxLog.delete(spark, root, col("o_custkey") % 7 === 2) // v2 (DV)
       operators.TxLog.rewrite(spark, root, col("o_totalprice") >= 80000.0) // v3
       operators.TxLog.restore(spark, root, 1L) // v4
-      val out = operators.TxLog.snapshot(spark, root)
+      operators.TxLog.snapshot(spark, root)
         .groupBy((col("o_orderkey") % 5).as("bucket"))
         .agg(
           count(lit(1)).as("n"),
           round(sum(col("o_totalprice")), 2).as("sum_price"))
-      val rows = out.collect()
-      spark.createDataFrame(
-        spark.sparkContext.parallelize(rows.toIndexedSeq, 1), out.schema)
-    } finally rmTree(wh)
+    }
   }
 
   /** Composed partition + stats pruning
@@ -3093,8 +3084,7 @@ object SparkEntry {
     * TxLogSpec's job.
     */
   private def qy11TxlogCombined(spark: SparkSession, dir: String): DataFrame = {
-    val wh = java.nio.file.Files.createTempDirectory("graft-qy11")
-    try {
+    staged(spark, "qy11") { wh =>
       val root = wh.resolve("tbl").toString
       val orders = t(spark, dir, "orders")
         .select(col("o_orderkey"), col("o_custkey"), col("o_totalprice"),
@@ -3109,14 +3099,11 @@ object SparkEntry {
         spark, root,
         orders.filter(col("o_orderkey") % 2 === 1)
           .repartitionByRange(6, col("o_orderkey")).sortWithinPartitions("o_orderkey"))
-      val out = operators.TxLog.snapshotWhereRange(
+      operators.TxLog.snapshotWhereRange(
         spark, root, Map("o_orderstatus" -> Seq("O")), 3000L, 4200L)
         .select(col("o_orderkey"), col("o_custkey"), col("o_totalprice"),
           col("o_orderstatus"))
-      val rows = out.collect()
-      spark.createDataFrame(
-        spark.sparkContext.parallelize(rows.toIndexedSeq, 1), out.schema)
-    } finally rmTree(wh)
+    }
   }
 
   /** K-truss decomposition ([[graph.Truss.decompose]]): the
@@ -4064,8 +4051,7 @@ object SparkEntry {
   // (accuracy spec-asserted vs this exact tier in OperatorsSpec)
 
   /** §2.10 — sessionization (gap > 30 min), batch window-function form;
-    * the streaming-stateful twin (`EventStreams.sessionizeStateful`) is
-    * equivalence-tested in StreamingSpec.
+    * StreamingSpec checks it against two stateful-operator forms.
     */
   private def qe1Sessionize(spark: SparkSession, dir: String): DataFrame =
     streaming.EventStreams.sessionizeBatch(events(spark, dir))
@@ -4590,9 +4576,6 @@ object SparkEntry {
     * spatial operators get REAL DuckDB oracles: axis-aligned rectangles
     * make point-in-polygon and line-clipping SQL-expressible.
     */
-  private def syntheticWays(spark: SparkSession, dir: String): DataFrame =
-    syntheticWaysFrom(t(spark, dir, "supplier"))
-
   private def syntheticWaysFrom(supp: DataFrame): DataFrame =
     supp.select(
       col("s_suppkey").as("way_id"),
@@ -4608,6 +4591,37 @@ object SparkEntry {
       ((col("n_nationkey") % 11) - 0.2).as("ry1"),
       ((col("n_nationkey") % 11) + 1.2 + (col("n_nationkey") % 2)).as("ry2"),
       ((col("n_nationkey") % 7) + 1).cast("double").as("value"))
+
+  /** The synthetic areas as closed rectangle zones (zone_id, rings). */
+  private def syntheticZones(spark: SparkSession, dir: String): DataFrame =
+    syntheticAreas(spark, dir).select(
+      col("area_id").as("zone_id"),
+      array(
+        array(
+          array(col("rx1"), col("ry1")),
+          array(col("rx2"), col("ry1")),
+          array(col("rx2"), col("ry2")),
+          array(col("rx1"), col("ry2")),
+          array(col("rx1"), col("ry1")))).as("rings"))
+
+  /** A w×h float32 GeoTIFF fixture: cell (c, r) holds ((c·a + r·b) mod m)
+    * / 10, row-major. The raster gates' oracles regenerate the same grid.
+    */
+  private def rasterValues(w: Int, h: Int, a: Int, b: Int, m: Int): Array[Float] =
+    Array.tabulate(w * h) { i =>
+      val c = i % w; val r = i / w
+      (((c * a + r * b) % m) / 10.0).toFloat
+    }
+
+  /** qz6/qz7's 3-band BandsW×BandsH fixture, exact quarter floats. */
+  private val BandsW = 32
+  private val BandsH = 16
+  private def rasterBands: Array[Array[Float]] =
+    Array.tabulate(3)(b =>
+      Array.tabulate(BandsW * BandsH) { i =>
+        val c = i % BandsW; val r = i / BandsW
+        (((c * 3 + r * 5 + b * 7) % 40) / 4.0).toFloat
+      })
 
   /** J9 + A4 + F8/F11/F12 — the §3.2 representative query: bbox spatial
     * join → line split by polygon → midpoint-in-polygon weighting →
@@ -4667,16 +4681,7 @@ object SparkEntry {
       ((col("p_partkey") % 17) + 0.5).as("x"),
       ((col("p_partkey") % 11) + 0.5).as("y"),
       col("p_retailprice").as("value"))
-    val polys = syntheticAreas(spark, dir).select(
-      col("area_id").as("zone_id"),
-      array(
-        array(
-          array(col("rx1"), col("ry1")),
-          array(col("rx2"), col("ry1")),
-          array(col("rx2"), col("ry2")),
-          array(col("rx1"), col("ry2")),
-          array(col("rx1"), col("ry1")))).as("rings"))
-    operators.Spatial.zonalStats(cells, polys)
+    operators.Spatial.zonalStats(cells, syntheticZones(spark, dir))
   }
 
   /** S11 end-to-end — raster zonal stats with the raster decode
@@ -4689,28 +4694,16 @@ object SparkEntry {
     * AND the zonal aggregation in one pass — closing the reference's
     * img-stats stage (`img-stats.py:60-102`) fully in-engine.
     */
-  private def qz2RasterZonal(spark: SparkSession, dir: String): DataFrame = {
-    val w = 64; val h = 48
-    val vals = Array.tabulate(w * h) { i =>
-      val c = i % w; val r = i / w
-      (((c * 7 + r * 13) % 40) / 10.0).toFloat
+  private def qz2RasterZonal(spark: SparkSession, dir: String): DataFrame =
+    staged(spark, "qz2") { tmp =>
+      val (w, h) = (64, 48)
+      sources.GeoTiff.write(
+        tmp.resolve("raster.tif").toString, w, h, rasterValues(w, h, 7, 13, 40),
+        1.0, 1.0, 0.0, h.toDouble)
+      val cells = sources.GeoTiff.read(spark, tmp.toString, globFilter = Some("*.tif"))
+        .select("x", "y", "value")
+      operators.Spatial.zonalStats(cells, syntheticZones(spark, dir))
     }
-    val tmp = java.nio.file.Files.createTempDirectory("graft-qz2")
-    sources.GeoTiff.write(
-      tmp.resolve("raster.tif").toString, w, h, vals, 1.0, 1.0, 0.0, h.toDouble)
-    val cells = sources.GeoTiff.read(spark, tmp.toString, globFilter = Some("*.tif"))
-      .select("x", "y", "value")
-    val polys = syntheticAreas(spark, dir).select(
-      col("area_id").as("zone_id"),
-      array(
-        array(
-          array(col("rx1"), col("ry1")),
-          array(col("rx2"), col("ry1")),
-          array(col("rx2"), col("ry2")),
-          array(col("rx1"), col("ry2")),
-          array(col("rx1"), col("ry1")))).as("rings"))
-    operators.Spatial.zonalStats(cells, polys)
-  }
 
   /** S11 compressed — as [[qz2RasterZonal]] but the raster is written
     * zlib-compressed (TIFF Compression=8) and inflated by the reader's
@@ -4718,29 +4711,16 @@ object SparkEntry {
     * flood rasters ship deflate- or LZW-compressed; `img-stats.py`
     * delegates that to rasterio, this engine decodes natively).
     */
-  private def qz3RasterDeflate(spark: SparkSession, dir: String): DataFrame = {
-    val w = 80; val h = 40
-    val vals = Array.tabulate(w * h) { i =>
-      val c = i % w; val r = i / w
-      (((c * 11 + r * 7) % 50) / 10.0).toFloat
+  private def qz3RasterDeflate(spark: SparkSession, dir: String): DataFrame =
+    staged(spark, "qz3") { tmp =>
+      val (w, h) = (80, 40)
+      sources.GeoTiff.write(
+        tmp.resolve("raster.tif").toString, w, h, rasterValues(w, h, 11, 7, 50),
+        1.0, 1.0, 0.0, h.toDouble, deflate = true)
+      val cells = sources.GeoTiff.read(spark, tmp.toString, globFilter = Some("*.tif"))
+        .select("x", "y", "value")
+      operators.Spatial.zonalStats(cells, syntheticZones(spark, dir))
     }
-    val tmp = java.nio.file.Files.createTempDirectory("graft-qz3")
-    sources.GeoTiff.write(
-      tmp.resolve("raster.tif").toString, w, h, vals, 1.0, 1.0, 0.0, h.toDouble,
-      deflate = true)
-    val cells = sources.GeoTiff.read(spark, tmp.toString, globFilter = Some("*.tif"))
-      .select("x", "y", "value")
-    val polys = syntheticAreas(spark, dir).select(
-      col("area_id").as("zone_id"),
-      array(
-        array(
-          array(col("rx1"), col("ry1")),
-          array(col("rx2"), col("ry1")),
-          array(col("rx2"), col("ry2")),
-          array(col("rx1"), col("ry2")),
-          array(col("rx1"), col("ry1")))).as("rings"))
-    operators.Spatial.zonalStats(cells, polys)
-  }
 
   /** S11 mega-raster path — the SAME contract as qz3 but the raster is
     * written MULTI-STRIP (8 rows per strip, each strip independently
@@ -4748,30 +4728,17 @@ object SparkEntry {
     * header parse + one task per strip byte range. Gates the fan-out
     * path the single-huge-raster scenario needs.
     */
-  private def qz4RasterParallel(spark: SparkSession, dir: String): DataFrame = {
-    val w = 80; val h = 40
-    val vals = Array.tabulate(w * h) { i =>
-      val c = i % w; val r = i / w
-      (((c * 11 + r * 7) % 50) / 10.0).toFloat
+  private def qz4RasterParallel(spark: SparkSession, dir: String): DataFrame =
+    staged(spark, "qz4") { tmp =>
+      val (w, h) = (80, 40)
+      sources.GeoTiff.write(
+        tmp.resolve("raster.tif").toString, w, h, rasterValues(w, h, 11, 7, 50),
+        1.0, 1.0, 0.0, h.toDouble, deflate = true, rowsPerStrip = 8)
+      val cells = sources.GeoTiff
+        .readParallel(spark, tmp.toString + "/*", globFilter = Some("*.tif"))
+        .select("x", "y", "value")
+      operators.Spatial.zonalStats(cells, syntheticZones(spark, dir))
     }
-    val tmp = java.nio.file.Files.createTempDirectory("graft-qz4")
-    sources.GeoTiff.write(
-      tmp.resolve("raster.tif").toString, w, h, vals, 1.0, 1.0, 0.0, h.toDouble,
-      deflate = true, rowsPerStrip = 8)
-    val cells = sources.GeoTiff
-      .readParallel(spark, tmp.toString + "/*", globFilter = Some("*.tif"))
-      .select("x", "y", "value")
-    val polys = syntheticAreas(spark, dir).select(
-      col("area_id").as("zone_id"),
-      array(
-        array(
-          array(col("rx1"), col("ry1")),
-          array(col("rx2"), col("ry1")),
-          array(col("rx2"), col("ry2")),
-          array(col("rx1"), col("ry2")),
-          array(col("rx1"), col("ry1")))).as("rings"))
-    operators.Spatial.zonalStats(cells, polys)
-  }
 
   /** S11 JPEG — Compression=7 ingest through the native baseline-DCT
     * codec ([[sources.Jpeg]]): a block-constant 8-bit raster is written in
@@ -4781,19 +4748,19 @@ object SparkEntry {
     * [[sources.Jpeg]]), so the oracle replays every pixel from
     * generate_series while the full huffman/DCT/marker machinery runs.
     */
-  private def qz5RasterJpeg(spark: SparkSession, dir: String): DataFrame = {
-    val w = 64; val h = 48
-    val px = Array.tabulate(w * h) { i =>
-      val bc = (i % w) / 8; val br = (i / w) / 8
-      (bc * 5 + br * 11) % 256
+  private def qz5RasterJpeg(spark: SparkSession, dir: String): DataFrame =
+    staged(spark, "qz5") { tmp =>
+      val w = 64; val h = 48
+      val px = Array.tabulate(w * h) { i =>
+        val bc = (i % w) / 8; val br = (i / w) / 8
+        (bc * 5 + br * 11) % 256
+      }
+      sources.GeoTiff.writeJpeg(
+        tmp.resolve("raster.tif").toString, w, h, px, 1.0, 1.0, 0.0, h.toDouble,
+        rowsPerStrip = 16)
+      sources.GeoTiff.read(spark, tmp.toString, globFilter = Some("*.tif"))
+        .select(col("x"), col("y"), col("value"))
     }
-    val tmp = java.nio.file.Files.createTempDirectory("graft-qz5")
-    sources.GeoTiff.writeJpeg(
-      tmp.resolve("raster.tif").toString, w, h, px, 1.0, 1.0, 0.0, h.toDouble,
-      rowsPerStrip = 16)
-    sources.GeoTiff.read(spark, tmp.toString, globFilter = Some("*.tif"))
-      .select(col("x"), col("y"), col("value"))
-  }
 
   /** S11 multi-band — a 3-band (RGB-shaped) float32 chunky-interleaved
     * GeoTIFF writes through [[sources.GeoTiff.writeBands]] and scans back
@@ -4801,19 +4768,14 @@ object SparkEntry {
     * floats, so every (x, y, band, value) cell replays in SQL. Closes the
     * single-band-only limitation for the orthophoto/multispectral case.
     */
-  private def qz6RasterBands(spark: SparkSession, dir: String): DataFrame = {
-    val w = 32; val h = 16
-    val bands = Array.tabulate(3)(b =>
-      Array.tabulate(w * h) { i =>
-        val c = i % w; val r = i / w
-        (((c * 3 + r * 5 + b * 7) % 40) / 4.0).toFloat
-      })
-    val tmp = java.nio.file.Files.createTempDirectory("graft-qz6")
-    sources.GeoTiff.writeBands(
-      tmp.resolve("rgb.tif").toString, w, h, bands, 1.0, 1.0, 0.0, h.toDouble, deflate = true)
-    sources.GeoTiff.readBands(spark, tmp.toString, globFilter = Some("*.tif"))
-      .select(col("x"), col("y"), col("band"), col("value"))
-  }
+  private def qz6RasterBands(spark: SparkSession, dir: String): DataFrame =
+    staged(spark, "qz6") { tmp =>
+      sources.GeoTiff.writeBands(
+        tmp.resolve("rgb.tif").toString, BandsW, BandsH, rasterBands,
+        1.0, 1.0, 0.0, BandsH.toDouble, deflate = true)
+      sources.GeoTiff.readBands(spark, tmp.toString, globFilter = Some("*.tif"))
+        .select(col("x"), col("y"), col("band"), col("value"))
+    }
 
   /** qz6's fixture through the MEGA-RASTER path: multi-strip + deflate +
     * multi-band, read segment-fanned by
@@ -4821,27 +4783,15 @@ object SparkEntry {
     * task carrying all bands of its rows). Same oracle as qz6 — the
     * physical plan differs, the cells must not.
     */
-  private def qz7RasterBandsParallel(spark: SparkSession, dir: String): DataFrame = {
-    val w = 32; val h = 16
-    val bands = Array.tabulate(3)(b =>
-      Array.tabulate(w * h) { i =>
-        val c = i % w; val r = i / w
-        (((c * 3 + r * 5 + b * 7) % 40) / 4.0).toFloat
-      })
-    val tmp = java.nio.file.Files.createTempDirectory("graft-qz7")
-    sources.GeoTiff.writeBands(
-      tmp.resolve("rgb.tif").toString, w, h, bands, 1.0, 1.0, 0.0, h.toDouble,
-      deflate = true, rowsPerStrip = 4)
-    sources.GeoTiff.readBandsParallel(spark, tmp.resolve("rgb.tif").toString)
-      .select(col("x"), col("y"), col("band"), col("value"))
-  }
+  private def qz7RasterBandsParallel(spark: SparkSession, dir: String): DataFrame =
+    staged(spark, "qz7") { tmp =>
+      sources.GeoTiff.writeBands(
+        tmp.resolve("rgb.tif").toString, BandsW, BandsH, rasterBands,
+        1.0, 1.0, 0.0, BandsH.toDouble, deflate = true, rowsPerStrip = 4)
+      sources.GeoTiff.readBandsParallel(spark, tmp.resolve("rgb.tif").toString)
+        .select(col("x"), col("y"), col("band"), col("value"))
+    }
 
-  /** S-family interop — ORC round trip: lineitem projects through an ORC
-    * write → read (Spark's builtin columnar format besides parquet) and
-    * aggregates; the oracle replays the same aggregate over the parquet
-    * source directly, so any value corruption in the ORC path (type
-    * mapping, nulls, decimal/double round trip) breaks the hash.
-    */
   /** S8-family — AVRO CONTAINER ROUND TRIP through the from-scratch
     * connector ([[sources.Avro.writeAvro]]/[[sources.Avro.readAvro]] —
     * `spark-avro` is NOT on this classpath; only Avro core is): a
@@ -4854,15 +4804,14 @@ object SparkEntry {
     * Output is materialized (3 rows) so the staging dir is reclaimed.
     */
   private def qf10AvroRoundtrip(spark: SparkSession, dir: String): DataFrame = {
-    val tmp = java.nio.file.Files.createTempDirectory("graft-qf10")
-    try {
+    staged(spark, "qf10") { tmp =>
       val src = t(spark, dir, "lineitem").select(
         col("l_orderkey"), col("l_linenumber"), col("l_returnflag"),
         col("l_quantity"), col("l_shipdate"),
         array(col("l_discount"), col("l_tax")).as("rates"),
         (col("l_quantity") < 25).as("small"))
       sources.Avro.writeAvro(src.repartition(8), tmp.toString)
-      val out = sources.Avro.readAvro(spark, tmp.toString)
+      sources.Avro.readAvro(spark, tmp.toString)
         .groupBy(col("l_returnflag"))
         .agg(
           count(lit(1)).as("n"),
@@ -4871,10 +4820,7 @@ object SparkEntry {
             .as("sum_rates"),
           sum(when(col("small"), 1L).otherwise(0L)).as("n_small"),
           date_format(max(col("l_shipdate")), "yyyy-MM-dd HH:mm:ss").as("max_ship"))
-      val rows = out.collect()
-      spark.createDataFrame(
-        spark.sparkContext.parallelize(rows.toIndexedSeq, 1), out.schema)
-    } finally rmTree(tmp)
+    }
   }
 
   /** Transaction-log table format end-to-end ([[operators.TxLog]]):
@@ -4890,25 +4836,21 @@ object SparkEntry {
     * TxLogSpec's job.
     */
   private def qf11Txlog(spark: SparkSession, dir: String): DataFrame = {
-    val wh = java.nio.file.Files.createTempDirectory("graft-qf11")
-    try {
+    staged(spark, "qf11") { wh =>
       val root = wh.resolve("tbl").toString
       val orders = t(spark, dir, "orders")
         .select(col("o_orderkey"), col("o_custkey"), col("o_totalprice"))
       operators.TxLog.create(spark, root, orders.filter(col("o_orderkey") % 3 === 0))
       operators.TxLog.append(spark, root, orders.filter(col("o_orderkey") % 3 === 1))
       operators.TxLog.rewrite(spark, root, col("o_totalprice") >= 150000.0)
-      val out = (0L to 2L).map { v =>
+      (0L to 2L).map { v =>
         operators.TxLog.snapshot(spark, root, Some(v))
           .agg(
             count(lit(1)).as("n"),
             round(sum(col("o_totalprice")), 2).as("sum_price"))
           .select(lit(v).as("version"), col("n"), col("sum_price"))
       }.reduce(_ unionByName _)
-      val rows = out.collect()
-      spark.createDataFrame(
-        spark.sparkContext.parallelize(rows.toIndexedSeq, 1), out.schema)
-    } finally rmTree(wh)
+    }
   }
 
   /** Manifest-stats range scan over the tx-log table
@@ -4923,8 +4865,7 @@ object SparkEntry {
     * filter). The pruning count itself is TxLogSpec's job.
     */
   private def qy8TxlogPrune(spark: SparkSession, dir: String): DataFrame = {
-    val wh = java.nio.file.Files.createTempDirectory("graft-qy8")
-    try {
+    staged(spark, "qy8") { wh =>
       val root = wh.resolve("tbl").toString
       val orders = t(spark, dir, "orders")
         .select(col("o_orderkey"), col("o_custkey"), col("o_totalprice"), col("o_orderpriority"))
@@ -4937,12 +4878,9 @@ object SparkEntry {
         spark, root,
         orders.filter(col("o_orderkey") % 2 === 1)
           .repartitionByRange(8, col("o_orderkey")).sortWithinPartitions("o_orderkey"))
-      val out = operators.TxLog.snapshotRange(spark, root, 2000L, 2600L)
+      operators.TxLog.snapshotRange(spark, root, 2000L, 2600L)
         .select(col("o_orderkey"), col("o_custkey"), col("o_totalprice"), col("o_orderpriority"))
-      val rows = out.collect()
-      spark.createDataFrame(
-        spark.sparkContext.parallelize(rows.toIndexedSeq, 1), out.schema)
-    } finally rmTree(wh)
+    }
   }
 
   /** Log-checkpointed planning under the oracle
@@ -4957,8 +4895,7 @@ object SparkEntry {
     * is TxLogSpec's job.
     */
   private def qy9TxlogCheckpoint(spark: SparkSession, dir: String): DataFrame = {
-    val wh = java.nio.file.Files.createTempDirectory("graft-qy9")
-    try {
+    staged(spark, "qy9") { wh =>
       val root = wh.resolve("tbl").toString
       val orders = t(spark, dir, "orders")
         .select(col("o_orderkey"), col("o_custkey"), col("o_totalprice"), col("o_orderpriority"))
@@ -4972,12 +4909,9 @@ object SparkEntry {
         spark, root,
         orders.filter(col("o_orderkey") % 2 === 1)
           .repartitionByRange(8, col("o_orderkey")).sortWithinPartitions("o_orderkey"))
-      val out = operators.TxLog.snapshotRange(spark, root, 2000L, 2600L)
+      operators.TxLog.snapshotRange(spark, root, 2000L, 2600L)
         .select(col("o_orderkey"), col("o_custkey"), col("o_totalprice"), col("o_orderpriority"))
-      val rows = out.collect()
-      spark.createDataFrame(
-        spark.sparkContext.parallelize(rows.toIndexedSeq, 1), out.schema)
-    } finally rmTree(wh)
+    }
   }
 
   /** Tx-log OPTIMIZE end-to-end ([[operators.TxLog.optimize]]): four
@@ -4990,8 +4924,7 @@ object SparkEntry {
     * contracts are TxLogSpec's job.
     */
   private def qf12TxlogOptimize(spark: SparkSession, dir: String): DataFrame = {
-    val wh = java.nio.file.Files.createTempDirectory("graft-qf12")
-    try {
+    staged(spark, "qf12") { wh =>
       val root = wh.resolve("tbl").toString
       val orders = t(spark, dir, "orders")
         .select(col("o_orderkey"), col("o_custkey"), col("o_totalprice"))
@@ -5004,15 +4937,12 @@ object SparkEntry {
       }
       operators.TxLog.optimize(
         spark, root, numFiles = 4, clusterBy = Seq("o_orderkey", "o_custkey"))
-      val out = operators.TxLog.snapshot(spark, root)
+      operators.TxLog.snapshot(spark, root)
         .groupBy((col("o_orderkey") % 7).as("bucket"))
         .agg(
           count(lit(1)).as("n"),
           round(sum(col("o_totalprice")), 2).as("sum_price"))
-      val rows = out.collect()
-      spark.createDataFrame(
-        spark.sparkContext.parallelize(rows.toIndexedSeq, 1), out.schema)
-    } finally rmTree(wh)
+    }
   }
 
   /** Tx-log MERGE (upsert) end-to-end ([[operators.TxLog.merge]]): the
@@ -5028,8 +4958,7 @@ object SparkEntry {
     * contracts are TxLogSpec's job.
     */
   private def qf13TxlogMerge(spark: SparkSession, dir: String): DataFrame = {
-    val wh = java.nio.file.Files.createTempDirectory("graft-qf13")
-    try {
+    staged(spark, "qf13") { wh =>
       val root = wh.resolve("tbl").toString
       val orders = t(spark, dir, "orders")
         .select(col("o_orderkey"), col("o_custkey"), col("o_totalprice"))
@@ -5040,12 +4969,9 @@ object SparkEntry {
       val source = orders.filter(col("o_orderkey") % 8 <= 1)
         .withColumn("o_totalprice", col("o_totalprice") + 100000.0)
       operators.TxLog.merge(spark, root, source, Seq("o_orderkey"))
-      val out = operators.TxLog.snapshot(spark, root)
+      operators.TxLog.snapshot(spark, root)
         .select(col("o_orderkey"), col("o_custkey"), col("o_totalprice"))
-      val rows = out.collect()
-      spark.createDataFrame(
-        spark.sparkContext.parallelize(rows.toIndexedSeq, 1), out.schema)
-    } finally rmTree(wh)
+    }
   }
 
   /** Row-level change data feed over the tx-log table
@@ -5061,8 +4987,7 @@ object SparkEntry {
     * TxLogSpec's job.
     */
   private def qf14TxlogCdf(spark: SparkSession, dir: String): DataFrame = {
-    val wh = java.nio.file.Files.createTempDirectory("graft-qf14")
-    try {
+    staged(spark, "qf14") { wh =>
       val root = wh.resolve("tbl").toString
       val orders = t(spark, dir, "orders")
         .select(col("o_orderkey"), col("o_custkey"), col("o_totalprice"))
@@ -5072,13 +4997,10 @@ object SparkEntry {
           .repartitionByRange(6, col("o_orderkey")))
       operators.TxLog.append(spark, root, orders.filter(col("o_orderkey") % 4 === 1))
       operators.TxLog.rewrite(spark, root, !(col("o_custkey") % 10 === 3))
-      val out = operators.TxLog.changes(spark, root, 0L, 2L)
+      operators.TxLog.changes(spark, root, 0L, 2L)
         .select(col("_commit_version"), col("_change_type"),
           col("o_orderkey"), col("o_custkey"), col("o_totalprice"))
-      val rows = out.collect()
-      spark.createDataFrame(
-        spark.sparkContext.parallelize(rows.toIndexedSeq, 1), out.schema)
-    } finally rmTree(wh)
+    }
   }
 
   /** Partitioned tx-log table ([[operators.TxLog.snapshotWhere]]): the
@@ -5092,8 +5014,7 @@ object SparkEntry {
     * metric and rewrite-preserves-layout contracts are TxLogSpec's job.
     */
   private def qf15TxlogPartition(spark: SparkSession, dir: String): DataFrame = {
-    val wh = java.nio.file.Files.createTempDirectory("graft-qf15")
-    try {
+    staged(spark, "qf15") { wh =>
       val root = wh.resolve("tbl").toString
       val orders = t(spark, dir, "orders")
         .select(col("o_orderkey"), col("o_custkey"), col("o_totalprice"),
@@ -5103,14 +5024,11 @@ object SparkEntry {
         partitionBy = Seq("o_orderstatus"))
       operators.TxLog.append(
         spark, root, orders.filter(col("o_orderkey") % 2 === 1).repartition(4))
-      val out = operators.TxLog.snapshotWhere(
+      operators.TxLog.snapshotWhere(
         spark, root, Map("o_orderstatus" -> Seq("F", "P")))
         .select(col("o_orderkey"), col("o_custkey"), col("o_totalprice"),
           col("o_orderstatus"))
-      val rows = out.collect()
-      spark.createDataFrame(
-        spark.sparkContext.parallelize(rows.toIndexedSeq, 1), out.schema)
-    } finally rmTree(wh)
+    }
   }
 
   /** Deletion-vector delete ([[operators.TxLog.delete]]): two row-level
@@ -5123,8 +5041,7 @@ object SparkEntry {
     * and read-through-mask rewrite contracts are TxLogSpec's job.
     */
   private def qf16TxlogDelete(spark: SparkSession, dir: String): DataFrame = {
-    val wh = java.nio.file.Files.createTempDirectory("graft-qf16")
-    try {
+    staged(spark, "qf16") { wh =>
       val root = wh.resolve("tbl").toString
       val orders = t(spark, dir, "orders")
         .select(col("o_orderkey"), col("o_custkey"), col("o_totalprice"),
@@ -5136,15 +5053,12 @@ object SparkEntry {
         spark, root,
         col("o_orderstatus") === "F" && col("o_totalprice") < 100000.0)
       operators.TxLog.delete(spark, root, col("o_custkey") % 10 === 7)
-      val out = operators.TxLog.snapshot(spark, root)
+      operators.TxLog.snapshot(spark, root)
         .groupBy(col("o_orderstatus"))
         .agg(
           count(lit(1)).as("n"),
           round(sum(col("o_totalprice")), 2).as("sum_price"))
-      val rows = out.collect()
-      spark.createDataFrame(
-        spark.sparkContext.parallelize(rows.toIndexedSeq, 1), out.schema)
-    } finally rmTree(wh)
+    }
   }
 
   /** Incremental index maintenance from the change feed
@@ -5159,8 +5073,7 @@ object SparkEntry {
     * deleted) is TextAnalysisSpec's job.
     */
   private def qy10IncrIndex(spark: SparkSession, dir: String): DataFrame = {
-    val wh = java.nio.file.Files.createTempDirectory("graft-qy10")
-    try {
+    staged(spark, "qy10") { wh =>
       val root = wh.resolve("tbl").toString
       val docs = t(spark, dir, "documents").select(col("doc_id"), col("text"))
       operators.TxLog.create(
@@ -5173,25 +5086,28 @@ object SparkEntry {
       operators.TxLog.merge(spark, root, source, Seq("doc_id")) // v1
       operators.TxLog.delete(spark, root, col("doc_id") % 9 === 0) // v2
       val delta = operators.TxLog.changes(spark, root, 0L, 2L)
-      val out = operators.TextAnalysis.applyIndexDelta(index0, delta, "doc_id", "text")
-      val rows = out.collect()
-      spark.createDataFrame(
-        spark.sparkContext.parallelize(rows.toIndexedSeq, 1), out.schema)
-    } finally rmTree(wh)
+      operators.TextAnalysis.applyIndexDelta(index0, delta, "doc_id", "text")
+    }
   }
 
-  private def qf6OrcRoundtrip(spark: SparkSession, dir: String): DataFrame = {
-    val tmp = java.nio.file.Files.createTempDirectory("graft-qf6")
-    t(spark, dir, "lineitem")
-      .select(col("l_orderkey"), col("l_returnflag"), col("l_quantity"), col("l_discount"))
-      .write.mode("overwrite").orc(tmp.toString)
-    spark.read.orc(tmp.toString)
-      .groupBy(col("l_returnflag"))
-      .agg(
-        count(lit(1)).as("n"),
-        round(sum(col("l_quantity")), 2).as("sum_qty"),
-        round(avg(col("l_discount")), 6).as("avg_disc"))
-  }
+  /** S-family interop — ORC round trip: lineitem projects through an ORC
+    * write → read (Spark's builtin columnar format besides parquet) and
+    * aggregates; the oracle replays the same aggregate over the parquet
+    * source directly, so any value corruption in the ORC path (type
+    * mapping, nulls, decimal/double round trip) breaks the hash.
+    */
+  private def qf6OrcRoundtrip(spark: SparkSession, dir: String): DataFrame =
+    staged(spark, "qf6") { tmp =>
+      t(spark, dir, "lineitem")
+        .select(col("l_orderkey"), col("l_returnflag"), col("l_quantity"), col("l_discount"))
+        .write.mode("overwrite").orc(tmp.toString)
+      spark.read.orc(tmp.toString)
+        .groupBy(col("l_returnflag"))
+        .agg(
+          count(lit(1)).as("n"),
+          round(sum(col("l_quantity")), 2).as("sum_qty"),
+          round(avg(col("l_discount")), 6).as("avg_disc"))
+    }
 
   /** Layout tier — Z-order clustering under the oracle gate: the Morton
     * code ([[operators.Layout.zorder2]], magic-number bit spreading as
@@ -5225,39 +5141,30 @@ object SparkEntry {
     * sort corruption (a row landing in the wrong bucket would silently
     * drop join matches under bucketed execution) breaks the values.
     */
-  private def qy2BucketJoin(spark: SparkSession, dir: String): DataFrame = {
-    val wh = java.nio.file.Files.createTempDirectory("graft-qy2").toString
-    operators.Layout.writeBucketed(
-      t(spark, dir, "orders")
-        .filter(col("o_orderpriority") === "2-HIGH")
-        .select(col("o_orderkey"), col("o_custkey")),
-      "graft_qy2_orders", "o_orderkey", 8, wh)
-    operators.Layout.writeBucketed(
-      // a deterministic slice keeps the gate's write volume proportional
-      // while still routing rows across all 8 buckets
-      t(spark, dir, "lineitem")
-        .filter(col("l_quantity") < 10)
-        .select(col("l_orderkey"), col("l_returnflag"), col("l_extendedprice"), col("l_discount")),
-      "graft_qy2_lineitem", "l_orderkey", 8, wh)
-    spark.table("graft_qy2_lineitem")
-      .join(
-        spark.table("graft_qy2_orders"),
-        col("l_orderkey") === col("o_orderkey"))
-      .groupBy(col("l_returnflag"))
-      .agg(
-        count(lit(1)).as("n"),
-        round(sum(col("l_extendedprice") * (lit(1) - col("l_discount"))), 2).as("revenue"))
-  }
-
-  /** Recursive best-effort temp cleanup (nested staging layouts). */
-  private def rmTree(root: java.nio.file.Path): Unit = {
-    import java.nio.file.{Files, Path}
-    try
-      Files.walk(root)
-        .sorted(java.util.Comparator.reverseOrder[Path]())
-        .forEach { p => Files.deleteIfExists(p); () }
-    catch { case _: java.io.IOException => () }
-  }
+  private def qy2BucketJoin(spark: SparkSession, dir: String): DataFrame =
+    staged(spark, "qy2") { whDir =>
+      val wh = whDir.toString
+      operators.Layout.writeBucketed(
+        t(spark, dir, "orders")
+          .filter(col("o_orderpriority") === "2-HIGH")
+          .select(col("o_orderkey"), col("o_custkey")),
+        "graft_qy2_orders", "o_orderkey", 8, wh)
+      operators.Layout.writeBucketed(
+        // a deterministic slice keeps the gate's write volume proportional
+        // while still routing rows across all 8 buckets
+        t(spark, dir, "lineitem")
+          .filter(col("l_quantity") < 10)
+          .select(col("l_orderkey"), col("l_returnflag"), col("l_extendedprice"), col("l_discount")),
+        "graft_qy2_lineitem", "l_orderkey", 8, wh)
+      spark.table("graft_qy2_lineitem")
+        .join(
+          spark.table("graft_qy2_orders"),
+          col("l_orderkey") === col("o_orderkey"))
+        .groupBy(col("l_returnflag"))
+        .agg(
+          count(lit(1)).as("n"),
+          round(sum(col("l_extendedprice") * (lit(1) - col("l_discount"))), 2).as("revenue"))
+    }
 
   /** Layout tier — FILE-LEVEL BLOOM SKIPPING INDEX end-to-end
     * ([[operators.Layout.writeBloomIndexed]]/[[operators.Layout.bloomLookup]]):
@@ -5273,23 +5180,19 @@ object SparkEntry {
     * bench reruns must not accumulate lineitem copies in /tmp.
     */
   private def qy4BloomLookup(spark: SparkSession, dir: String): DataFrame = {
-    val wh = java.nio.file.Files.createTempDirectory("graft-qy4")
-    try {
+    staged(spark, "qy4") { wh =>
       operators.Layout.writeBloomIndexed(
         t(spark, dir, "lineitem")
           .select(
             col("l_orderkey"), col("l_linenumber"), col("l_partkey"),
             col("l_quantity"), col("l_extendedprice")),
         "l_orderkey", wh.toString, numFiles = 16, expectedPerFile = 500000L)
-      val out = operators.Layout
+      operators.Layout
         .bloomLookup(spark, wh.toString, "l_orderkey", lit(1L))
         .select(
           col("l_orderkey"), col("l_linenumber"), col("l_partkey"),
           col("l_quantity"), col("l_extendedprice"))
-      val rows = out.collect()
-      spark.createDataFrame(
-        spark.sparkContext.parallelize(rows.toIndexedSeq, 1), out.schema)
-    } finally rmTree(wh)
+    }
   }
 
   /** Layout tier — FILE-LEVEL MIN/MAX ZONE-MAP INDEX end-to-end
@@ -5306,23 +5209,19 @@ object SparkEntry {
     * reclaimed before return.
     */
   private def qy5MinMaxPrune(spark: SparkSession, dir: String): DataFrame = {
-    val wh = java.nio.file.Files.createTempDirectory("graft-qy5")
-    try {
+    staged(spark, "qy5") { wh =>
       operators.Layout.writeMinMaxIndexed(
         t(spark, dir, "orders")
           .select(
             col("o_orderkey"), col("o_custkey"), col("o_totalprice"),
             col("o_orderpriority")),
         "o_orderkey", wh.toString, numFiles = 16)
-      val out = operators.Layout
+      operators.Layout
         .rangeLookup(spark, wh.toString, "o_orderkey", lit(1000L), lit(1400L))
         .select(
           col("o_orderkey"), col("o_custkey"), col("o_totalprice"),
           col("o_orderpriority"))
-      val rows = out.collect()
-      spark.createDataFrame(
-        spark.sparkContext.parallelize(rows.toIndexedSeq, 1), out.schema)
-    } finally rmTree(wh)
+    }
   }
 
   /** Layout tier — HILBERT-CURVE INDEX ([[operators.Layout.hilbert2]],
@@ -5356,23 +5255,24 @@ object SparkEntry {
     * interval decomposition's exactness contract. File-level pruning
     * (and Hilbert-vs-Z candidate-file comparison) is LayoutSpec's job.
     */
-  private def qy7HilbertBox(spark: SparkSession, dir: String): DataFrame = {
-    val tmp = java.nio.file.Files.createTempDirectory("graft-qy7").toString
-    val base = t(spark, dir, "lineitem").select(
-      col("l_partkey").bitwiseAND(lit(255)).as("x"),
-      col("l_suppkey").bitwiseAND(lit(255)).as("y"),
-      col("l_extendedprice"))
-    operators.Layout
-      .clusterByHilbertKeep(base, Seq(col("x"), col("y")), numFiles = 8, order = 8)
-      .write.mode("overwrite").parquet(tmp)
-    operators.Layout
-      .hilbertBoxQuery(
-        spark.read.parquet(tmp), col("x"), col("y"), col("h"),
-        32, 79, 100, 131, order = 8)
-      .agg(
-        count(lit(1)).as("n"),
-        round(sum(col("l_extendedprice")), 2).as("sum_price"))
-  }
+  private def qy7HilbertBox(spark: SparkSession, dir: String): DataFrame =
+    staged(spark, "qy7") { tmpDir =>
+      val tmp = tmpDir.toString
+      val base = t(spark, dir, "lineitem").select(
+        col("l_partkey").bitwiseAND(lit(255)).as("x"),
+        col("l_suppkey").bitwiseAND(lit(255)).as("y"),
+        col("l_extendedprice"))
+      operators.Layout
+        .clusterByHilbertKeep(base, Seq(col("x"), col("y")), numFiles = 8, order = 8)
+        .write.mode("overwrite").parquet(tmp)
+      operators.Layout
+        .hilbertBoxQuery(
+          spark.read.parquet(tmp), col("x"), col("y"), col("h"),
+          32, 79, 100, 131, order = 8)
+        .agg(
+          count(lit(1)).as("n"),
+          round(sum(col("l_extendedprice")), 2).as("sum_price"))
+    }
 
   /** Layout tier — small-file compaction round trip: a 48-shard parquet
     * directory is compacted ([[operators.Layout.compact]] — `coalesce`,
@@ -5381,26 +5281,31 @@ object SparkEntry {
     * The oracle replays the aggregate over the source table, so any row
     * lost or duplicated by the rewrite breaks count/sum/hash.
     */
-  private def qf7Compact(spark: SparkSession, dir: String): DataFrame = {
-    val in = java.nio.file.Files.createTempDirectory("graft-qf7-in").toString
-    val out = java.nio.file.Files.createTempDirectory("graft-qf7-out").toString
-    t(spark, dir, "lineitem")
-      .filter(col("l_linenumber") === 1) // deterministic slice; 48 shards still exercise the merge
-      .select(col("l_orderkey"), col("l_linestatus"), col("l_extendedprice"), col("l_quantity"))
-      .repartition(48)
-      .write.mode("overwrite").parquet(in)
-    val total = new java.io.File(in).listFiles
-      .filter(_.getName.endsWith(".parquet")).map(_.length).sum
-    operators.Layout.compact(spark, in, out, targetBytes = math.max(1L, total / 6))
-    spark.read.parquet(out)
-      .groupBy(col("l_linestatus"))
-      .agg(
-        count(lit(1)).as("n"),
-        round(sum(col("l_extendedprice")), 2).as("sum_price"),
-        round(avg(col("l_quantity")), 6).as("avg_qty"))
-  }
+  private def qf7Compact(spark: SparkSession, dir: String): DataFrame =
+    staged(spark, "qf7") { tmp =>
+      val in = tmp.resolve("in").toString
+      val out = tmp.resolve("out").toString
+      t(spark, dir, "lineitem")
+        .filter(col("l_linenumber") === 1) // deterministic slice; 48 shards still exercise the merge
+        .select(col("l_orderkey"), col("l_linestatus"), col("l_extendedprice"), col("l_quantity"))
+        .repartition(48)
+        .write.mode("overwrite").parquet(in)
+      val total = new java.io.File(in).listFiles
+        .filter(_.getName.endsWith(".parquet")).map(_.length).sum
+      operators.Layout.compact(spark, in, out, targetBytes = math.max(1L, total / 6))
+      spark.read.parquet(out)
+        .groupBy(col("l_linestatus"))
+        .agg(
+          count(lit(1)).as("n"),
+          round(sum(col("l_extendedprice")), 2).as("sum_price"),
+          round(avg(col("l_quantity")), 6).as("avg_qty"))
+    }
 
   // ------------------------------------------- file codecs (S1/S2/S3/S9/S10)
+  /** The GEOGCS `.prj` the shapefile gates write: lon/lat passes through. */
+  private val Wgs84Prj =
+    """GEOGCS["GCS_WGS_1984",DATUM["D_WGS_1984",SPHEROID["WGS_1984",6378137.0,298.257223563]],PRIMEM["Greenwich",0.0],UNIT["Degree",0.0174532925199433]]"""
+
   /** S1 end-to-end — native shapefile ingest under the oracle gate: a
     * deterministic .shp/.dbf/.prj triple is materialized through
     * [[sources.Shapefile.writePoints]] and scanned back by
@@ -5410,28 +5315,26 @@ object SparkEntry {
     * from generate_series. Closes the one §2 row family whose correctness
     * previously rested on specs alone (`base-network.sh:98-99` semantics).
     */
-  private def qf1ShapefileScan(spark: SparkSession, dir: String): DataFrame = {
-    val n = 40
-    val pts = Seq.tabulate(n)(i => (i * 1.5 + 0.25, (i % 7) * 2.0 - 3.5))
-    val attrs = Seq.tabulate(n) { i =>
-      Map(
-        "NAME" -> s"F$i",
-        "VAL" -> String.format(java.util.Locale.ROOT, "%6.2f", Double.box((i % 20) * 0.25)))
+  private def qf1ShapefileScan(spark: SparkSession, dir: String): DataFrame =
+    staged(spark, "qf1") { tmp =>
+      val n = 40
+      val pts = Seq.tabulate(n)(i => (i * 1.5 + 0.25, (i % 7) * 2.0 - 3.5))
+      val attrs = Seq.tabulate(n) { i =>
+        Map(
+          "NAME" -> s"F$i",
+          "VAL" -> String.format(java.util.Locale.ROOT, "%6.2f", Double.box((i % 20) * 0.25)))
+      }
+      sources.Shapefile.writePoints(
+        tmp.resolve("pts.shp").toString, pts, attrs, Seq(("NAME", 8), ("VAL", 6)))
+      java.nio.file.Files.writeString(tmp.resolve("pts.prj"), Wgs84Prj)
+      sources.Shapefile.read(spark, tmp.toString + "/*")
+        .select(
+          col("record_no"),
+          expr("parts[0][0][0]").as("x"),
+          expr("parts[0][0][1]").as("y"),
+          col("attrs")("NAME").as("name"),
+          col("attrs")("VAL").cast("double").as("val"))
     }
-    val tmp = java.nio.file.Files.createTempDirectory("graft-qf1")
-    sources.Shapefile.writePoints(
-      tmp.resolve("pts.shp").toString, pts, attrs, Seq(("NAME", 8), ("VAL", 6)))
-    java.nio.file.Files.writeString(
-      tmp.resolve("pts.prj"),
-      """GEOGCS["GCS_WGS_1984",DATUM["D_WGS_1984",SPHEROID["WGS_1984",6378137.0,298.257223563]],PRIMEM["Greenwich",0.0],UNIT["Degree",0.0174532925199433]]""")
-    sources.Shapefile.read(spark, tmp.toString + "/*")
-      .select(
-        col("record_no"),
-        expr("parts[0][0][0]").as("x"),
-        expr("parts[0][0][1]").as("y"),
-        col("attrs")("NAME").as("name"),
-        col("attrs")("VAL").cast("double").as("val"))
-  }
 
   /** S1 through the DATASOURCE V2 path ([[sources.v2.ShapefileDataSource]]):
     * `spark.read.format("graft-shapefile")` over a TWO-file directory —
@@ -5442,34 +5345,32 @@ object SparkEntry {
     * Same parse kernels as qf1, so the oracle is the same fixture
     * arithmetic, unioned across both files.
     */
-  private def qf9ShapefileV2(spark: SparkSession, dir: String): DataFrame = {
-    val tmp = java.nio.file.Files.createTempDirectory("graft-qf9")
-    val prj =
-      """GEOGCS["GCS_WGS_1984",DATUM["D_WGS_1984",SPHEROID["WGS_1984",6378137.0,298.257223563]],PRIMEM["Greenwich",0.0],UNIT["Degree",0.0174532925199433]]"""
-    val lens = Seq(("NAME", 8), ("VAL", 6), ("EXTRA", 6))
-    def fmt(d: Double) = String.format(java.util.Locale.ROOT, "%6.2f", Double.box(d))
-    sources.Shapefile.writePoints(
-      tmp.resolve("a.shp").toString,
-      Seq.tabulate(40)(i => (i * 1.5 + 0.25, (i % 7) * 2.0 - 3.5)),
-      Seq.tabulate(40)(i =>
-        Map("NAME" -> s"F$i", "VAL" -> fmt((i % 20) * 0.25), "EXTRA" -> s"X$i")),
-      lens)
-    java.nio.file.Files.writeString(tmp.resolve("a.prj"), prj)
-    sources.Shapefile.writePoints(
-      tmp.resolve("b.shp").toString,
-      Seq.tabulate(20)(i => (i * 0.5 + 0.125, (i % 5) * 1.0 - 2.0)),
-      Seq.tabulate(20)(i =>
-        Map("NAME" -> s"G$i", "VAL" -> fmt((i % 10) * 0.5), "EXTRA" -> s"Y$i")),
-      lens)
-    java.nio.file.Files.writeString(tmp.resolve("b.prj"), prj)
-    spark.read.format("graft-shapefile").load(tmp.toString)
-      .select(
-        col("record_no"),
-        expr("parts[0][0][0]").as("x"),
-        expr("parts[0][0][1]").as("y"),
-        col("NAME").as("name"),
-        col("VAL").cast("double").as("val"))
-  }
+  private def qf9ShapefileV2(spark: SparkSession, dir: String): DataFrame =
+    staged(spark, "qf9") { tmp =>
+      val lens = Seq(("NAME", 8), ("VAL", 6), ("EXTRA", 6))
+      def fmt(d: Double) = String.format(java.util.Locale.ROOT, "%6.2f", Double.box(d))
+      sources.Shapefile.writePoints(
+        tmp.resolve("a.shp").toString,
+        Seq.tabulate(40)(i => (i * 1.5 + 0.25, (i % 7) * 2.0 - 3.5)),
+        Seq.tabulate(40)(i =>
+          Map("NAME" -> s"F$i", "VAL" -> fmt((i % 20) * 0.25), "EXTRA" -> s"X$i")),
+        lens)
+      java.nio.file.Files.writeString(tmp.resolve("a.prj"), Wgs84Prj)
+      sources.Shapefile.writePoints(
+        tmp.resolve("b.shp").toString,
+        Seq.tabulate(20)(i => (i * 0.5 + 0.125, (i % 5) * 1.0 - 2.0)),
+        Seq.tabulate(20)(i =>
+          Map("NAME" -> s"G$i", "VAL" -> fmt((i % 10) * 0.5), "EXTRA" -> s"Y$i")),
+        lens)
+      java.nio.file.Files.writeString(tmp.resolve("b.prj"), Wgs84Prj)
+      spark.read.format("graft-shapefile").load(tmp.toString)
+        .select(
+          col("record_no"),
+          expr("parts[0][0][0]").as("x"),
+          expr("parts[0][0][1]").as("y"),
+          col("NAME").as("name"),
+          col("VAL").cast("double").as("val"))
+    }
 
   /** S2+S3 round-trip — GeoJSON FeatureCollection sink then scan: a
     * synthetic point layer serializes through [[sources.GeoJson.write]]
@@ -5480,30 +5381,30 @@ object SparkEntry {
     * JSON text round-trip (shortest-repr format → parse) is lossless and
     * DuckDB replays the layer from generate_series.
     */
-  private def qf2GeoJsonRoundtrip(spark: SparkSession, dir: String): DataFrame = {
-    val src = spark
-      .range(30)
-      .select(
-        concat(
-          lit("""{"type":"Point","coordinates":["""),
-          (col("id") * 0.5).cast("string"),
-          lit(","),
-          ((col("id") % 5) * 1.0).cast("string"),
-          lit("]}")).as("geom"),
-        concat(lit("g"), col("id")).as("name"),
-        (col("id") * 0.25).as("score"))
-    val tmp = java.nio.file.Files.createTempDirectory("graft-qf2")
-    val out = tmp.resolve("layer.geojson").toString
-    sources.GeoJson.write(src, "geom", out)
-    sources.GeoJson
-      .lineCoords(sources.GeoJson.read(spark, out + "/part-*"))
-      .select(
-        col("geom_type"),
-        col("properties")("name").as("name"),
-        col("properties")("score").cast("double").as("score"),
-        expr("coords[0][0]").as("x"),
-        expr("coords[0][1]").as("y"))
-  }
+  private def qf2GeoJsonRoundtrip(spark: SparkSession, dir: String): DataFrame =
+    staged(spark, "qf2") { tmp =>
+      val src = spark
+        .range(30)
+        .select(
+          concat(
+            lit("""{"type":"Point","coordinates":["""),
+            (col("id") * 0.5).cast("string"),
+            lit(","),
+            ((col("id") % 5) * 1.0).cast("string"),
+            lit("]}")).as("geom"),
+          concat(lit("g"), col("id")).as("name"),
+          (col("id") * 0.25).as("score"))
+      val out = tmp.resolve("layer.geojson").toString
+      sources.GeoJson.write(src, "geom", out)
+      sources.GeoJson
+        .lineCoords(sources.GeoJson.read(spark, out + "/part-*"))
+        .select(
+          col("geom_type"),
+          col("properties")("name").as("name"),
+          col("properties")("score").cast("double").as("score"),
+          expr("coords[0][0]").as("x"),
+          expr("coords[0][1]").as("y"))
+    }
 
   /** S9+S10 round-trip — OSM-XML sink then scan: a synthetic road network
     * (24 nodes, 6 four-node ways with tags) serializes through
@@ -5512,26 +5413,26 @@ object SparkEntry {
     * node coordinates — gating node parse, way `nd` ordering, tag parse
     * and the join in one pass (`extract-ways.js:56-63` semantics).
     */
-  private def qf3OsmRoundtrip(spark: SparkSession, dir: String): DataFrame = {
-    val nodes = Seq.tabulate(24)(i =>
-      sources.OsmXml.OsmNode(i + 1L, i * 0.25 + 0.125, 0.25 - (i % 9) * 0.5))
-    val ways = Seq.tabulate(6)(j =>
-      sources.OsmXml.OsmWay(
-        100L + j,
-        Seq.tabulate(4)(k => (j * 4 + k) % 24 + 1L),
-        Map("highway" -> (if (j % 2 == 0) "primary" else "secondary"), "name" -> s"W$j")))
-    val tmp = java.nio.file.Files.createTempDirectory("graft-qf3")
-    val osmPath = tmp.resolve("net.osm").toString
-    sources.OsmXml.write(nodes, ways, osmPath)
-    val (nodesDf, waysDf) = sources.OsmXml.read(spark, osmPath)
-    waysDf
-      .select(
-        col("way_id"),
-        col("tags")("highway").as("highway"),
-        posexplode(col("nodes")).as(Seq("pos", "node_id")))
-      .join(nodesDf, Seq("node_id"))
-      .select(col("way_id"), col("pos"), col("node_id"), col("highway"), col("lon"), col("lat"))
-  }
+  private def qf3OsmRoundtrip(spark: SparkSession, dir: String): DataFrame =
+    staged(spark, "qf3") { tmp =>
+      val nodes = Seq.tabulate(24)(i =>
+        sources.OsmXml.OsmNode(i + 1L, i * 0.25 + 0.125, 0.25 - (i % 9) * 0.5))
+      val ways = Seq.tabulate(6)(j =>
+        sources.OsmXml.OsmWay(
+          100L + j,
+          Seq.tabulate(4)(k => (j * 4 + k) % 24 + 1L),
+          Map("highway" -> (if (j % 2 == 0) "primary" else "secondary"), "name" -> s"W$j")))
+      val osmPath = tmp.resolve("net.osm").toString
+      sources.OsmXml.write(nodes, ways, osmPath)
+      val (nodesDf, waysDf) = sources.OsmXml.read(spark, osmPath)
+      waysDf
+        .select(
+          col("way_id"),
+          col("tags")("highway").as("highway"),
+          posexplode(col("nodes")).as(Seq("pos", "node_id")))
+        .join(nodesDf, Seq("node_id"))
+        .select(col("way_id"), col("pos"), col("node_id"), col("highway"), col("lon"), col("lat"))
+    }
 
   /** S13 — native Mapbox Vector Tile sink under the oracle gate: the
     * nation dim (driver-small by contract, like the OSM egress) encodes
@@ -5543,29 +5444,29 @@ object SparkEntry {
     * last §2 row that stayed external (tippecanoe, `indicators.sh:109`);
     * the distributed lon/lat tiler (`writeTiles`) is spec-covered.
     */
-  private def qf4VectorTile(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    val nations = t(spark, dir, "nation")
-      .select(col("n_nationkey").cast("long"), col("n_name"))
-      .collect()
-      .map(r => (r.getLong(0), r.getString(1)))
-      .sortBy(_._1)
-    val feats = nations.map { case (k, name) =>
-      sources.VectorTile.Feature(
-        k, 1,
-        Seq(Seq((((k * 163) % 4096).toInt, ((k * 311) % 4096).toInt))),
-        Map("name" -> name))
+  private def qf4VectorTile(spark: SparkSession, dir: String): DataFrame =
+    staged(spark, "qf4") { tmp =>
+      import spark.implicits._
+      val nations = t(spark, dir, "nation")
+        .select(col("n_nationkey").cast("long"), col("n_name"))
+        .collect()
+        .map(r => (r.getLong(0), r.getString(1)))
+        .sortBy(_._1)
+      val feats = nations.map { case (k, name) =>
+        sources.VectorTile.Feature(
+          k, 1,
+          Seq(Seq((((k * 163) % 4096).toInt, ((k * 311) % 4096).toInt))),
+          Map("name" -> name))
+      }
+      val p = tmp.resolve("0.mvt")
+      java.nio.file.Files.write(
+        p, sources.VectorTile.encodeTile(Seq(sources.VectorTile.Layer("nations", 4096, feats.toSeq))))
+      sources.VectorTile
+        .decodeTile(java.nio.file.Files.readAllBytes(p))
+        .flatMap(l => l.features.map(f =>
+          (f.id, f.geometry.head.head._1, f.geometry.head.head._2, f.attrs("name"))))
+        .toDF("id", "px", "py", "name")
     }
-    val tmp = java.nio.file.Files.createTempDirectory("graft-qf4")
-    val p = tmp.resolve("0.mvt")
-    java.nio.file.Files.write(
-      p, sources.VectorTile.encodeTile(Seq(sources.VectorTile.Layer("nations", 4096, feats.toSeq))))
-    sources.VectorTile
-      .decodeTile(java.nio.file.Files.readAllBytes(p))
-      .flatMap(l => l.features.map(f =>
-        (f.id, f.geometry.head.head._1, f.geometry.head.head._2, f.attrs("name"))))
-      .toDF("id", "px", "py", "name")
-  }
 
   /** S13 line/polygon tier — the MVT geometry command stream beyond
     * points: per nation, one square ring (ClosePath, implied closure) and
@@ -5611,21 +5512,22 @@ object SparkEntry {
     * interval-decomposition bug (a lost quad cell, an off-by-one range
     * bound) loses or duplicates rows and breaks count/sum.
     */
-  private def qy3ZBoxQuery(spark: SparkSession, dir: String): DataFrame = {
-    val tmp = java.nio.file.Files.createTempDirectory("graft-qy3").toString
-    val base = t(spark, dir, "lineitem").select(
-      col("l_partkey").bitwiseAND(lit(255)).as("x"),
-      col("l_suppkey").bitwiseAND(lit(255)).as("y"),
-      col("l_extendedprice"))
-    operators.Layout
-      .clusterByZorderKeep(base, Seq(col("x"), col("y")), numFiles = 8)
-      .write.mode("overwrite").parquet(tmp)
-    operators.Layout
-      .boxQuery(spark.read.parquet(tmp), col("x"), col("y"), col("z"), 32, 79, 100, 131)
-      .agg(
-        count(lit(1)).as("n"),
-        round(sum(col("l_extendedprice")), 2).as("sum_price"))
-  }
+  private def qy3ZBoxQuery(spark: SparkSession, dir: String): DataFrame =
+    staged(spark, "qy3") { tmpDir =>
+      val tmp = tmpDir.toString
+      val base = t(spark, dir, "lineitem").select(
+        col("l_partkey").bitwiseAND(lit(255)).as("x"),
+        col("l_suppkey").bitwiseAND(lit(255)).as("y"),
+        col("l_extendedprice"))
+      operators.Layout
+        .clusterByZorderKeep(base, Seq(col("x"), col("y")), numFiles = 8)
+        .write.mode("overwrite").parquet(tmp)
+      operators.Layout
+        .boxQuery(spark.read.parquet(tmp), col("x"), col("y"), col("z"), 32, 79, 100, 131)
+        .agg(
+          count(lit(1)).as("n"),
+          round(sum(col("l_extendedprice")), 2).as("sum_price"))
+    }
 
   /** S13 polygons-with-holes — [[sources.VectorTile.writePolygonTiles]]
     * under the oracle gate: per nation, a donut (exterior square + hole)
@@ -5639,34 +5541,35 @@ object SparkEntry {
     * arithmetic. Any protobuf/zigzag/winding/clip regression breaks the
     * vertex hash.
     */
-  private def qf8PolygonHoles(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    def invLon(gx: Double) = gx / 4096.0 * 360.0 - 180.0
-    def invLat(gy: Double) = math.atan(math.sinh(math.Pi * (1.0 - 2.0 * gy / 4096.0))) * 180.0 / math.Pi
-    val nations = t(spark, dir, "nation")
-      .select(col("n_nationkey").cast("long")).as[Long].collect().sorted
-    val rows = nations.toSeq.map { k =>
-      val ex = 256.0 + k * 163 % 3000
-      val ey = 256.0 + k * 311 % 3000
-      val w = 200.0 + k % 5 * 16
-      def ring(x0: Double, y0: Double, s: Double) = Seq(
-        Seq(invLon(x0), invLat(y0)), Seq(invLon(x0 + s), invLat(y0)),
-        Seq(invLon(x0 + s), invLat(y0 + s)), Seq(invLon(x0), invLat(y0 + s)))
-      (k, Seq(ring(ex, ey, w), ring(ex + 48, ey + 48, w - 96)), "donut")
+  private def qf8PolygonHoles(spark: SparkSession, dir: String): DataFrame =
+    staged(spark, "qf8") { tmpDir =>
+      val tmp = tmpDir.toString
+      import spark.implicits._
+      def invLon(gx: Double) = gx / 4096.0 * 360.0 - 180.0
+      def invLat(gy: Double) = math.atan(math.sinh(math.Pi * (1.0 - 2.0 * gy / 4096.0))) * 180.0 / math.Pi
+      val nations = t(spark, dir, "nation")
+        .select(col("n_nationkey").cast("long")).as[Long].collect().sorted
+      val rows = nations.toSeq.map { k =>
+        val ex = 256.0 + k * 163 % 3000
+        val ey = 256.0 + k * 311 % 3000
+        val w = 200.0 + k % 5 * 16
+        def ring(x0: Double, y0: Double, s: Double) = Seq(
+          Seq(invLon(x0), invLat(y0)), Seq(invLon(x0 + s), invLat(y0)),
+          Seq(invLon(x0 + s), invLat(y0 + s)), Seq(invLon(x0), invLat(y0 + s)))
+        (k, Seq(ring(ex, ey, w), ring(ex + 48, ey + 48, w - 96)), "donut")
+      }
+      sources.VectorTile.writePolygonTiles(
+        rows.toDF("id", "rings", "name"), "id", "rings", Seq("name"), zoom = 0, dir = tmp)
+      val bytes = java.nio.file.Files.readAllBytes(
+        java.nio.file.Paths.get(tmp, "0", "0", "0.mvt"))
+      sources.VectorTile
+        .decodeTile(bytes)
+        .flatMap(l => l.features.flatMap(f =>
+          f.geometry.zipWithIndex.flatMap { case (part, pi) =>
+            part.zipWithIndex.map { case ((x, y), vi) => (f.id, pi, vi, x, y) }
+          }))
+        .toDF("id", "ring", "pos", "x", "y")
     }
-    val tmp = java.nio.file.Files.createTempDirectory("graft-qf8").toString
-    sources.VectorTile.writePolygonTiles(
-      rows.toDF("id", "rings", "name"), "id", "rings", Seq("name"), zoom = 0, dir = tmp)
-    val bytes = java.nio.file.Files.readAllBytes(
-      java.nio.file.Paths.get(tmp, "0", "0", "0.mvt"))
-    sources.VectorTile
-      .decodeTile(bytes)
-      .flatMap(l => l.features.flatMap(f =>
-        f.geometry.zipWithIndex.flatMap { case (part, pi) =>
-          part.zipWithIndex.map { case ((x, y), vi) => (f.id, pi, vi, x, y) }
-        }))
-      .toDF("id", "ring", "pos", "x", "y")
-  }
 
   // ------------------------------------------------- routing (G6/G7/G8-10)
   /** G6 — many-to-many route matrix via the custom Catalyst operator

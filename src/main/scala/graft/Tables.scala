@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.StructType
 
 /** Canonical table access for the harness testdata
   * (`/root/testdata/sf*`, see TESTDATA.md).
@@ -12,7 +13,17 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   */
 object Tables {
   def load(spark: SparkSession, sfDir: String, name: String): DataFrame =
-    normalizeNumerics(spark.read.parquet(s"$sfDir/$name.parquet"))
+    normalizeNumerics(spark.read.schema(schema(spark, sfDir, name)).parquet(s"$sfDir/$name.parquet"))
+
+  /** The table's parquet schema, read once per path: reading it is a
+    * footer job that every load would otherwise start again, and a table
+    * never changes at its path. A table written at a new path is a new
+    * key.
+    */
+  private[graft] def schema(spark: SparkSession, sfDir: String, name: String): StructType =
+    schemas.computeIfAbsent(s"$sfDir/$name.parquet", p => spark.read.parquet(p).schema)
+
+  private val schemas = new java.util.concurrent.ConcurrentHashMap[String, StructType]()
 
   /** DECIMAL → DOUBLE insurance (the numeric sibling of [[normalizeTs]]):
     * today's harness parquet stores TPC-H numerics as float64, but a

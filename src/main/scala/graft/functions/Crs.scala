@@ -4,7 +4,7 @@ package graft.functions
   * shapefile with `ogr2ogr -t_srs EPSG:4326`, `scripts/base-network.sh:98-99`,
   * and pyproj for raster CRS, `scripts/imgstats/img-stats.py:60-73`).
   *
-  * Implements the ellipsoidal transverse-Mercator forward/inverse series
+  * Implements the ellipsoidal transverse-Mercator inverse series
   * (Snyder 1987, USGS Professional Paper 1395, eqs. 3-21, 8-9..8-17 and
   * 8-18..8-25 — the same truncated Krüger series PROJ's `tmerc` uses) on
   * the WGS-84 ellipsoid. That covers every UTM zone — in particular
@@ -17,7 +17,8 @@ package graft.functions
   * 1SP-with-k0) and Albers equal-area conic (Snyder eqs. 14-1..14-21),
   * both verified in CrsSpec against projection-independent invariants
   * (unit scale on the standard parallels, conformality/area
-  * preservation, sub-1e-9° round-trips).
+  * preservation, sub-1e-9° round-trips through the forward projections
+  * the specs carry, `CrsForward`).
   *
   * The `.prj` sidecar (OGC WKT) is parsed by [[Crs.parsePrj]]:
   * `GEOGCS`-only means already-geographic (identity); a
@@ -48,14 +49,6 @@ object Crs {
       falseEasting: Double,
       falseNorthing: Double)
 
-  /** Standard UTM zone parameters: lon0 = zone·6 − 183, k0 = 0.9996,
-    * FE = 500 000, FN = 10 000 000 for the southern hemisphere.
-    */
-  def utmZone(zone: Int, south: Boolean): TmParams = {
-    require(zone >= 1 && zone <= 60, s"UTM zone must be 1..60, got $zone")
-    TmParams(zone * 6.0 - 183.0, 0.0, 0.9996, 500000.0, if (south) 10000000.0 else 0.0)
-  }
-
   /** Meridian arc length from the equator to latitude `phi` (radians):
     * Snyder eq. 3-21, the e⁶ truncation.
     */
@@ -65,29 +58,6 @@ object Crs {
       - (3 * e2 / 8 + 3 * e4 / 32 + 45 * e6 / 1024) * math.sin(2 * phi)
       + (15 * e4 / 256 + 45 * e6 / 1024) * math.sin(4 * phi)
       - (35 * e6 / 3072) * math.sin(6 * phi))
-  }
-
-  /** Forward transverse Mercator: lon/lat degrees → projected (x, y)
-    * metres (Snyder eqs. 8-9..8-17).
-    */
-  def tmForward(lonDeg: Double, latDeg: Double, p: TmParams): (Double, Double) = {
-    val phi = math.toRadians(latDeg)
-    val lam = math.toRadians(lonDeg)
-    val lam0 = math.toRadians(p.centralMeridianDeg)
-    val sinP = math.sin(phi); val cosP = math.cos(phi); val tanP = math.tan(phi)
-    val n = A / math.sqrt(1 - E2 * sinP * sinP)
-    val t = tanP * tanP
-    val c = Ep2 * cosP * cosP
-    val a1 = (lam - lam0) * cosP
-    val m = meridianArc(phi)
-    val m0 = meridianArc(math.toRadians(p.latitudeOfOriginDeg))
-    val a2 = a1 * a1; val a3 = a2 * a1; val a4 = a3 * a1; val a5 = a4 * a1; val a6 = a5 * a1
-    val x = p.scaleFactor * n * (a1 + (1 - t + c) * a3 / 6 +
-      (5 - 18 * t + t * t + 72 * c - 58 * Ep2) * a5 / 120) + p.falseEasting
-    val y = p.scaleFactor * (m - m0 + n * tanP * (a2 / 2 +
-      (5 - t + 9 * c + 4 * c * c) * a4 / 24 +
-      (61 - 58 * t + t * t + 600 * c - 330 * Ep2) * a6 / 720)) + p.falseNorthing
-    (x, y)
   }
 
   /** Inverse transverse Mercator: projected (x, y) metres → lon/lat
@@ -143,7 +113,7 @@ object Crs {
       falseEasting: Double,
       falseNorthing: Double)
 
-  private val E = math.sqrt(E2)
+  private[functions] val E = math.sqrt(E2)
 
   /** Snyder eq. 14-15: m = cosφ / √(1 − e²sin²φ). */
   private def mFactor(phi: Double): Double = {
@@ -152,7 +122,7 @@ object Crs {
   }
 
   /** Snyder eq. 15-9: t = tan(π/4 − φ/2) / [(1 − e·sinφ)/(1 + e·sinφ)]^(e/2). */
-  private def tFactor(phi: Double): Double = {
+  private[functions] def tFactor(phi: Double): Double = {
     val s = math.sin(phi)
     math.tan(math.Pi / 4 - phi / 2) /
       math.pow((1 - E * s) / (1 + E * s), E / 2)
@@ -165,9 +135,9 @@ object Crs {
       (1 / (2 * E)) * math.log((1 - E * s) / (1 + E * s)))
   }
 
-  private case class LccDerived(n: Double, f: Double, rho0: Double, lam0: Double, k0: Double)
+  private[functions] case class LccDerived(n: Double, f: Double, rho0: Double, lam0: Double, k0: Double)
 
-  private def lccDerive(p: LccParams): LccDerived = {
+  private[functions] def lccDerive(p: LccParams): LccDerived = {
     val phi1 = math.toRadians(p.stdParallel1Deg)
     val phi2 = math.toRadians(p.stdParallel2Deg)
     val phi0 = math.toRadians(p.latitudeOfOriginDeg)
@@ -183,15 +153,6 @@ object Crs {
     val f = m1 / (n * math.pow(t1, n)) // 15-10
     val rho0 = A * f * math.pow(tFactor(phi0), n) * p.scaleFactor // 15-7a
     LccDerived(n, f, rho0, math.toRadians(p.centralMeridianDeg), p.scaleFactor)
-  }
-
-  /** Forward Lambert conformal conic (Snyder eqs. 15-1..15-10). */
-  def lccForward(lonDeg: Double, latDeg: Double, p: LccParams): (Double, Double) = {
-    val d = lccDerive(p)
-    val rho = A * d.f * math.pow(tFactor(math.toRadians(latDeg)), d.n) * d.k0
-    val theta = d.n * (math.toRadians(lonDeg) - d.lam0)
-    (p.falseEasting + rho * math.sin(theta),
-      p.falseNorthing + d.rho0 - rho * math.cos(theta))
   }
 
   /** Inverse Lambert conformal conic (Snyder eqs. 15-1..15-11 inverted;
@@ -215,9 +176,9 @@ object Crs {
     (math.toDegrees(theta / d.n + d.lam0), math.toDegrees(phi))
   }
 
-  private case class AlbersDerived(n: Double, c: Double, rho0: Double, lam0: Double)
+  private[functions] case class AlbersDerived(n: Double, c: Double, rho0: Double, lam0: Double)
 
-  private def albersDerive(p: AlbersParams): AlbersDerived = {
+  private[functions] def albersDerive(p: AlbersParams): AlbersDerived = {
     val phi1 = math.toRadians(p.stdParallel1Deg)
     val phi2 = math.toRadians(p.stdParallel2Deg)
     val phi0 = math.toRadians(p.latitudeOfOriginDeg)
@@ -232,15 +193,6 @@ object Crs {
     val c = m1 * m1 + n * q1 // 14-13
     val rho0 = A * math.sqrt(c - n * authalicQ(phi0)) / n // 14-12a
     AlbersDerived(n, c, rho0, math.toRadians(p.centralMeridianDeg))
-  }
-
-  /** Forward Albers equal-area conic (Snyder eqs. 14-1..14-14). */
-  def albersForward(lonDeg: Double, latDeg: Double, p: AlbersParams): (Double, Double) = {
-    val d = albersDerive(p)
-    val rho = A * math.sqrt(d.c - d.n * authalicQ(math.toRadians(latDeg))) / d.n
-    val theta = d.n * (math.toRadians(lonDeg) - d.lam0)
-    (p.falseEasting + rho * math.sin(theta),
-      p.falseNorthing + d.rho0 - rho * math.cos(theta))
   }
 
   /** Inverse Albers (Snyder eqs. 14-19..14-21; φ from authalic q by the

@@ -46,8 +46,6 @@ object GeoFunctions {
     if (coords == null || coords.size < 2) 0.0
     else coords.sliding(2).map { case Seq(a, b) => haversineKm(a(0), a(1), b(0), b(1)) }.sum
 
-  val lineLengthKmUdf: UserDefinedFunction = udf(lineLengthKm _)
-
   /** F10 — bbox [minLon, minLat, maxLon, maxLat] (reference
     * `utils.js:88-95`).
     */
@@ -117,8 +115,6 @@ object GeoFunctions {
     else line.sliding(2).map { case Seq(a, b) => segDist(a(0), a(1), b(0), b(1)) }.min
   }
 
-  val pointToLineDistanceKmUdf: UserDefinedFunction = udf(pointToLineDistanceKm _)
-
   /** F14 — centroid: arithmetic mean of vertices (matches ogr2ogr
     * ST_Centroid-on-points usage in `preparation.sh:193-195` closely enough
     * for OD seeding; NOT an area-weighted centroid).
@@ -127,8 +123,6 @@ object GeoFunctions {
     val n = coords.size
     Seq(coords.map(_(0)).sum / n, coords.map(_(1)).sum / n)
   }
-
-  val centroidUdf: UserDefinedFunction = udf(centroid _)
 
   /** Planar shoelace area of one closed ring (last point repeats the
     * first). Abstract-coordinate geometry (no geodesy) — used for
@@ -164,28 +158,6 @@ object GeoFunctions {
   /** Sum of perimeters over a multi-ring list. */
   val multiRingPerimeterUdf: UserDefinedFunction =
     udf((rings: Seq[Seq[Seq[Double]]]) => rings.map(ringPerimeter).sum)
-
-  /** F15 — CRS transform: EPSG:4326 lon/lat ↔ EPSG:3857 Web Mercator
-    * (the projection pair the tiling egress needs; reference used pyproj
-    * for raster CRS only, `img-stats.py:60-73`). Spherical Mercator per
-    * the published EPSG:3857 definition.
-    */
-  val WebMercatorR = 6378137.0
-
-  def toWebMercator(lon: Double, lat: Double): Seq[Double] = {
-    val clamped = math.max(-85.06, math.min(85.06, lat))
-    Seq(
-      WebMercatorR * math.toRadians(lon),
-      WebMercatorR * math.log(math.tan(math.Pi / 4 + math.toRadians(clamped) / 2)))
-  }
-
-  def fromWebMercator(x: Double, y: Double): Seq[Double] =
-    Seq(
-      math.toDegrees(x / WebMercatorR),
-      math.toDegrees(2 * math.atan(math.exp(y / WebMercatorR)) - math.Pi / 2))
-
-  val toWebMercatorUdf: UserDefinedFunction = udf(toWebMercator _)
-  val fromWebMercatorUdf: UserDefinedFunction = udf(fromWebMercator _)
 
   /** F9 — midpoint of the first segment of a line piece (reference
     * `indicator-from-areas.js:112-116`).
@@ -231,6 +203,4 @@ object GeoFunctions {
     if (current.size >= 2) pieces += current.toSeq
     pieces.toSeq
   }
-
-  val lineSplitUdf: UserDefinedFunction = udf(lineSplit _)
 }

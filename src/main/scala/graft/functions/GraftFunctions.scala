@@ -79,6 +79,8 @@ object GraftFunctions {
 
   /** Register the harness testdata tables as temp views for `spark.sql`
     * use: `graft.functions.GraftFunctions.registerTables(spark, sfDir)`.
+    * No gate or program calls it: like [[register]], it is the `spark.sql`
+    * surface.
     */
   def registerTables(spark: SparkSession, sfDir: String): Unit =
     Seq("region", "nation", "customer", "supplier", "part", "orders",

@@ -200,7 +200,10 @@ object TextFunctions {
   def fingerprint(text: Column): Column =
     xxhash64(regexp_replace(lower(trim(text)), "\\s+", " "))
 
-  /** Character shingles (n-grams) of the normalized text, as an array. */
+  /** Character shingles (n-grams) of the normalized text, as an array.
+    * Only its own spec case reaches it: a deletion candidate
+    * (ROADMAP direction 4).
+    */
   def charShingles(text: Column, n: Int): Column = {
     val norm = regexp_replace(lower(trim(text)), "\\s+", " ")
     val len = length(norm)
@@ -208,7 +211,10 @@ object TextFunctions {
       .otherwise(transform(sequence(lit(1), len - n + 1), i => norm.substr(i, lit(n))))
   }
 
-  /** Word shingles (n-gram strings over whitespace tokens). */
+  /** Word shingles (n-gram strings over whitespace tokens).
+    * Only its own spec case reaches it: a deletion candidate
+    * (ROADMAP direction 4).
+    */
   def wordShingles(text: Column, n: Int): Column = {
     val toks = split(lower(trim(text)), "\\s+")
     val cnt = size(toks)

@@ -111,30 +111,4 @@ object HilbertExpressions {
     }
     d
   }
-
-  /** Driver-side d→(x, y) inverse (spec cross-check + interval sanity).
-    * Note the rotation here uses the CURRENT level size `s`, not `n` —
-    * the published inverse pairs with [[xy2d]] exactly (round-trip is
-    * property-pinned in LayoutSpec).
-    */
-  def d2xy(order: Int, d: Long): (Long, Long) = {
-    val n = 1L << order
-    var x = 0L
-    var y = 0L
-    var t = d
-    var s = 1L
-    while (s < n) {
-      val rx = 1L & (t / 2)
-      val ry = 1L & (t ^ rx)
-      if (ry == 0) {
-        if (rx == 1) { x = s - 1 - x; y = s - 1 - y }
-        val tmp = x; x = y; y = tmp
-      }
-      x += s * rx
-      y += s * ry
-      t /= 4
-      s <<= 1
-    }
-    (x, y)
-  }
 }

@@ -66,6 +66,8 @@ object Betweenness {
     * pinning the estimator's defining property in specs: averaging the
     * singleton-pivot estimates over ALL vertices reproduces exact
     * betweenness, which is what "unbiased" means with the n/k scale.
+    * No gate or program calls it: it is how BetweennessSpec checks the gated
+    * estimator is unbiased.
     */
   def runPivots(
       edges: DataFrame, aCol: String, bCol: String,

@@ -183,6 +183,8 @@ object RoadGraph {
     * form. Columns: (way_id string, src int, dst int, weight double);
     * +∞ weights (removed ways) are dropped at compile time so Dijkstra
     * never visits them.
+    * No gate or program calls it yet: it is the upgrade-scenario route into
+    * routing (paper stage 4) that `Pipeline` does not wire.
     */
   def fromEdges(edgesDf: DataFrame): CsrGraph = {
     val rows = edgesDf
@@ -248,6 +250,8 @@ object RoadGraph {
 
   /** End-to-end: features DataFrame → CSR graph (collects only the road
     * network itself — small by construction; see class doc).
+    * No gate or program calls it yet: it is the GeoJSON-features network
+    * input of paper stage 1; `Pipeline` reads OSM.
     */
   def fromFeatures(spark: SparkSession, features: DataFrame): CsrGraph = {
     val (nodesDf, edgesDf) = buildTables(features)

@@ -20,14 +20,15 @@ case class PairCost(oIdx: Int, dIdx: Int, routable: Boolean, ruc: Option[Double]
   */
 object Routing {
 
-  /** Slice count of a scenario fan-out (criticality, EAUL): one slice per
-    * core, capped at the scenario count. A scenario costs a few Dijkstra
+  /** Slice count of a scenario fan-out (criticality, EAUL, the sources of
+    * `RouteMatrixExec`): one slice per core, capped at the scenario
+    * count. A scenario costs a few Dijkstra
     * runs, far less than a task's launch and deserialization, so more
     * slices than cores only add overhead. Slices are contiguous and
     * `collect` keeps their order, so the rows and their order do not
     * depend on the count.
     */
-  private[graph] def sweepSlices(sc: SparkContext, scenarios: Int): Int =
+  private[graft] def sweepSlices(sc: SparkContext, scenarios: Int): Int =
     math.max(1, math.min(scenarios, sc.defaultParallelism))
 
   /** All-pairs upper-triangle matrix, driver/executor-local. */

@@ -39,6 +39,8 @@ object ScenarioWeights {
   /** Speed-profile CSV sink (S5 + G4 interop): `fromNode,toNode,speed`
     * both directions, the reference's exchange format
     * (`utils.js:196-220`).
+    * No gate or program calls it yet: it is the reference's speed-profile
+    * export, which `Pipeline` does not wire.
     */
   def writeSpeedProfile(edges: DataFrame, overrides: DataFrame, path: String): Unit = {
     val rows = edges

@@ -163,10 +163,6 @@ object Multimodal {
     } else None
   }
 
-  /** Column form of [[imageDims]]: (format, width, height) struct or null. */
-  val imageDimsUdf: org.apache.spark.sql.expressions.UserDefinedFunction =
-    org.apache.spark.sql.functions.udf { (bytes: Array[Byte]) => imageDims(bytes) }
-
   def extractFeatures(media: Dataset[Media]): Dataset[MediaFeatures] = {
     import media.sparkSession.implicits._
     media.mapPartitions { it =>
@@ -175,30 +171,6 @@ object Multimodal {
         val bytes = safeBytes(m.bytes)
         val (mean, entropy, feature) = byteStats(bytes)
         MediaFeatures(m.media_id, m.meta.kind, bytes.length.toLong, mean, entropy, feature)
-      }
-    }
-  }
-
-  /** Resize stub: deterministic byte subsampling standing in for a real
-    * image resize — halving width/height keeps every 4th byte (the 2×2
-    * pixel-block shape a real resizer would average). Metadata is updated
-    * in lockstep with the payload, which is the part pipelines get wrong.
-    */
-  def resizeStub(media: Dataset[Media], factor: Int): Dataset[Media] = {
-    import media.sparkSession.implicits._
-    require(factor >= 1)
-    media.mapPartitions { it =>
-      // real impl: codec init once per partition
-      it.map { m =>
-        val bytes = safeBytes(m.bytes)
-        val step = factor * factor
-        val out = new Array[Byte]((bytes.length + step - 1) / step)
-        var i = 0
-        while (i < out.length) { out(i) = bytes(i * step); i += 1 }
-        Media(
-          m.media_id,
-          m.meta.copy(width = m.meta.width / factor, height = m.meta.height / factor),
-          out)
       }
     }
   }

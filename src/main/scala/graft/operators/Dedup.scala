@@ -33,8 +33,6 @@ import org.apache.spark.sql.functions._
   */
 object Dedup {
 
-  private val Prime = 2147483647L // 2^31 - 1
-
   /** Null-safe: a NULL document yields the empty token, matching the
     * null-propagating behavior of the pure-Column paths instead of killing
     * the job with an NPE from inside a UDF.
@@ -76,29 +74,9 @@ object Dedup {
   private[graft] def minHashCoefs(numHashes: Int, seed: Long): Array[(Long, Long)] =
     graft.functions.expressions.TextHashKernel.minHashCoefs(numHashes, seed)
 
-  /** MinHash signature, UDF tier (kept as the kernel's second entry point
-    * and the equivalence baseline for the codegen Expression; operators
-    * below use [[graft.functions.expressions.TextHashExpressions.minHashSignature]],
-    * which runs the SAME kernel inside whole-stage codegen — no ScalaUDF
-    * row conversion per document).
-    */
-  def minHashSignatureUdf(shingleSize: Int, numHashes: Int, seed: Long = 42L): UserDefinedFunction = {
-    val cs = minHashCoefs(numHashes, seed)
-    val (coefA, coefB) = (cs.map(_._1), cs.map(_._2))
-    udf { (text: String) =>
-      graft.functions.expressions.TextHashKernel.minHashSignature(text, shingleSize, coefA, coefB)
-    }
-  }
-
   /** Distinct word shingles (for exact Jaccard verification). */
   def shingleSetUdf(shingleSize: Int): UserDefinedFunction =
     udf { (text: String) => wordShingleSet(text, shingleSize) }
-
-  /** SimHash UDF tier — see [[minHashSignatureUdf]] for why both tiers
-    * exist; operators use the codegen Expression form.
-    */
-  val simHashUdf: UserDefinedFunction =
-    udf { (text: String) => graft.functions.expressions.TextHashKernel.simHash64(text) }
 
   /** Exact dedup: keep the lowest-id row per normalized-text fingerprint.
     * One shuffle on the 64-bit fingerprint (xxhash64 — codegen'd builtin,

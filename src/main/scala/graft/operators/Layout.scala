@@ -296,6 +296,8 @@ object Layout {
   /** Candidate-file count for a probe value — the pruning metric
     * (LayoutSpec asserts candidates ≪ total files for a present key and
     * documents the fpp contract for absent keys).
+    * No gate or program calls it: it is how LayoutSpec checks the gated bloom
+    * lookup's pruning.
     */
   def bloomCandidateFiles(spark: SparkSession, dir: String, value: Column): Long =
     spark.read.parquet(s"$dir/_bloom_index")
@@ -410,6 +412,8 @@ object Layout {
   /** Overlapping-file count for a probe range — the pruning metric
     * (LayoutSpec asserts candidates ≪ total files for a narrow range and
     * 0 for a range outside the key domain).
+    * No gate or program calls it: it is how LayoutSpec checks the gated
+    * min/max lookup's pruning.
     */
   def minMaxCandidateFiles(
       spark: SparkSession, dir: String, lo: Column, hi: Column): Long =

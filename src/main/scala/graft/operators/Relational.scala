@@ -55,6 +55,8 @@ object Relational {
     * selection: shuffle values into sorted ranges, count per range (tiny
     * collect of P longs), then sort only the one range holding rank k.
     * O(n/P) memory per task — survives 1000 executors reading 100 TB.
+    * No gate or program calls it: it is the fixed-rank entry the specs check
+    * the gated [[kthSmallestByRank]] through.
     */
   def kthSmallest(df: DataFrame, valueCol: String, k: Long, numRanges: Int = 32): Double =
     kthSmallestByRank(df, valueCol, _ => k, numRanges)
@@ -408,42 +410,10 @@ object Relational {
     } finally vals.unpersist(blocking = false)
   }
 
-  /** The former window form of [[groupedPercentileFilter]] — kept as the
-    * equivalence twin for specs (one window sort per group: fine for
-    * small groups, single-task-per-key at scale).
-    */
-  def groupedPercentileFilterWindow(
-      df: DataFrame,
-      keyCol: String,
-      valueCol: String,
-      percentile: Double): DataFrame = {
-    val thr = groupedPercentileThresholdsWindow(df, keyCol, valueCol, percentile)
-    df.join(broadcast(thr), Seq(keyCol))
-      .filter(col(valueCol) >= col("__thr"))
-      .drop("__thr")
-  }
-
-  /** Window-form threshold kernel (one per-key sort; the many-small-
-    * groups regime of the strategy guard). Returns (keyCol, __thr). */
-  def groupedPercentileThresholdsWindow(
-      df: DataFrame,
-      keyCol: String,
-      valueCol: String,
-      percentile: Double): DataFrame = {
-    val wSort = Window.partitionBy(col(keyCol)).orderBy(col(valueCol))
-    val wAll = Window.partitionBy(col(keyCol))
-    df
-      .filter(col(valueCol).isNotNull && !isnan(col(valueCol)))
-      .withColumn("__rn", row_number().over(wSort) - 1)
-      .withColumn("__n", count(lit(1)).over(wAll))
-      .filter(col("__rn") === round(lit(percentile / 100.0) * (col("__n") - 1)))
-      .select(col(keyCol), col(valueCol).cast("double").as("__thr"))
-  }
-
   /** Window-form multi-rank fallback: ONE per-key sort shared by every
     * percentile (each rank filter reads the same row_number), same
-    * nearest-rank values as [[groupedPercentileThresholdsWindow]] per
-    * percentile. Returns (keyCol, __pq, __thr). */
+    * nearest-rank value per percentile as a per-percentile window sort.
+    * Returns (keyCol, __pq, __thr). */
   def groupedPercentileThresholdsWindowMulti(
       df: DataFrame,
       keyCol: String,
@@ -603,6 +573,8 @@ object Relational {
 
   /** J2 unmatched report (reference `merge-indicators.js:123-126`): indicator
     * rows whose key has no base row — an anti-join.
+    * No gate or program calls it yet: it is the unmatched report of the
+    * paper's indicator merge (stage 5), which `Pipeline` does not emit.
     */
   def unmatchedIndicators(base: DataFrame, baseKey: String, ind: DataFrame, indKey: String): DataFrame =
     ind.join(base, ind(indKey) === base(baseKey), "left_anti")

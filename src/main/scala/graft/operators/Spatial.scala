@@ -54,36 +54,6 @@ object Spatial {
       .drop("__cell", "__lbox", "__rbox")
   }
 
-  /** J8 — nearest-neighbour (argmin) join via `min_by` hash aggregation:
-    * for each left key the single closest candidate by `distCol`,
-    * deterministic tie-break on `tieCol`. Partial (map-side) combine
-    * collapses each key to ONE candidate before the shuffle, so a
-    * billions-row candidate set shuffles only |left keys| rows — a
-    * `row_number` window would shuffle and sort every candidate. Ordering
-    * is the lexicographic struct (dist, tie).
-    * `payload` columns are carried through on the winning row.
-    */
-  def nearestJoinAgg(
-      pairs: DataFrame,
-      leftKey: String,
-      distCol: Column,
-      tieCol: Column,
-      payload: Seq[String]): DataFrame = {
-    val winner = min_by(
-      struct((payload.map(col) :+ distCol.as("__dist")): _*),
-      struct(distCol, tieCol))
-    pairs
-      .groupBy(col(leftKey))
-      .agg(winner.as("__nn"))
-      .select(col(leftKey) +: payload.map(p => col(s"__nn.$p")) :+ col("__nn.__dist").as("dist"): _*)
-  }
-
-  /** A11 equivalent — zonal statistics over a cell table (reference
-    * `scripts/imgstats/img-stats.py:98-104` computes count/mean/min/max of
-    * raster cells under each polygon + `percent = count/total·100`; the
-    * raster decode itself is upstream, its cell table is the input here):
-    * point-in-polygon join (bbox-prefiltered) → groupBy polygon.
-    */
   /** FOCAL (neighborhood) RASTER STATISTIC — per pixel, the mean over
     * its (2r+1)² window: the kernel-op class zonal statistics can't
     * express (zonal reduces BY polygon; focal convolves the grid —
@@ -127,6 +97,12 @@ object Spatial {
           .as("focal_mean"))
   }
 
+  /** A11 equivalent — zonal statistics over a cell table (reference
+    * `scripts/imgstats/img-stats.py:98-104` computes count/mean/min/max of
+    * raster cells under each polygon + `percent = count/total·100`; the
+    * raster decode itself is upstream, its cell table is the input here):
+    * point-in-polygon join (bbox-prefiltered) → groupBy polygon.
+    */
   def zonalStats(cells: DataFrame, polys: DataFrame, gridCell: Double = 2.0): DataFrame = {
     // total cell count as an in-plan broadcast 1-row aggregate (the
     // `Relational.scaleScore` pattern) — NOT a driver-side count(): the
@@ -404,9 +380,8 @@ object Spatial {
     indicatorFromAreasImpl(ways, areas, gridCell = None)
 
   /** Scale form: identical semantics, but candidate pairs come from the
-    * grid-cell equi-join instead of broadcasting the area side — use when
-    * areas outgrow broadcast. Equality with the broadcast form is spec-
-    * tested.
+    * grid-cell equi-join instead of broadcasting the area side. No gate
+    * runs it; SpatialSpec holds the gated broadcast form equal to it.
     */
   def indicatorFromAreasGrid(ways: DataFrame, areas: DataFrame, gridCell: Double): DataFrame =
     indicatorFromAreasImpl(ways, areas, Some(gridCell))

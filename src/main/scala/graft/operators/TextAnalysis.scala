@@ -307,6 +307,8 @@ object TextAnalysis {
     * produced the rules by sequential application). Returns the subword
     * token count per row, the trained-tokenizer analogue of
     * `TextFunctions.wordpieceCount`.
+    * Only its own spec case reaches it: a deletion candidate
+    * (ROADMAP direction 4).
     */
   def bpeSubwordCountUdf(merges: Seq[(String, String)]): org.apache.spark.sql.expressions.UserDefinedFunction =
     udf { (text: String) =>
@@ -1062,8 +1064,8 @@ object TextAnalysis {
     * aggregate): a row cap alone would let millions of LONG tokens
     * exhaust driver heap before the fallback was chosen. Two accidents of that old
     * shape had to be replicated deliberately before the new one won:
-    * baskets feed three consumers, so they persist
-    * (`reuseBaskets`, the qd21 grams-once lesson), and the bid
+    * baskets feed three consumers, so they persist (the qd21
+    * grams-once lesson), and the bid
     * exchange was accidentally parallelizing the quadratic pair stage
     * on low-row-group inputs — naive in-array LOST the first sf1 race
     * by 2.9–5.1 s paired median until the adaptive parallelism floor
@@ -1073,25 +1075,21 @@ object TextAnalysis {
     */
   def assocPairs(
       docs: DataFrame, textCol: String, minSupport: Long, k: Int,
-      localFrequentMax: Int = 1 << 22, reuseBaskets: Boolean = true,
+      localFrequentMax: Int = 1 << 22,
       localFrequentMaxBytes: Long = 256L << 20): DataFrame = {
     require(minSupport >= 1, s"minSupport must be >= 1, got $minSupport")
     require(k > 0, s"k must be positive, got $k")
     require(localFrequentMaxBytes >= 1L,
       s"localFrequentMaxBytes must be >= 1, got $localFrequentMaxBytes")
-    val baskets0 = docs
+    // baskets-ONCE (the qd21 grams-once pattern): the tokenize + distinct
+    // + sort chain feeds THREE consumers (item counts, basket count, pair
+    // generation); persisted it runs once.
+    val baskets = docs
       .select(array_sort(array_distinct(
         filter(split(lower(trim(col(textCol))), "\\s+"), w => w =!= "")))
         .as("__items"))
       .filter(size(col("__items")) > 0)
-    // baskets-ONCE (the qd21 grams-once pattern): the tokenize + distinct
-    // + sort chain feeds THREE consumers (item counts, basket count, pair
-    // generation); persisted it runs once. Opt out for corpora past
-    // storage headroom.
-    val baskets =
-      if (reuseBaskets)
-        baskets0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      else baskets0
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val itemFreq = baskets
       .select(explode(col("__items")).as("__w"))
       .groupBy(col("__w"))

@@ -37,7 +37,7 @@ import org.apache.spark.sql.types.StructType
   * is an atomic namenode op; on S3 the same contract needs a
   * conditional PUT (If-None-Match) — the hook is [[commitFile]], one
   * method to swap. Crashed writers leave only orphan data dirs that no
-  * log entry references; [[vacuum]] reclaims them.
+  * log entry references; a vacuum can reclaim them.
   *
   * Two further metadata tiers complete the lakehouse surface:
   * PARTITIONED TABLES (declared at [[create]], inherited by every
@@ -61,12 +61,12 @@ object TxLog {
     m
   }
 
-  private def fs(spark: SparkSession, dir: String): (FileSystem, Path) = {
+  private[operators] def fs(spark: SparkSession, dir: String): (FileSystem, Path) = {
     val p = new Path(dir)
     (p.getFileSystem(spark.sparkContext.hadoopConfiguration), p)
   }
 
-  private def logPath(root: Path, version: Long): Path =
+  private[operators] def logPath(root: Path, version: Long): Path =
     new Path(root, f"_log/$version%020d.json")
 
   /** Committed versions, ascending (empty if the table doesn't exist). */
@@ -296,44 +296,13 @@ object TxLog {
     * files whose (file, pos) rows mask deleted rows of still-live data
     * files.
     */
-  private case class TableState(
+  private[operators] case class TableState(
       live: Seq[String],
       schema: StructType,
       stats: Map[String, (Long, Long)],
       dv: Seq[String])
 
-  /** Optimistic-concurrency RETRY loop around [[append]] — the pattern
-    * every concurrent writer otherwise hand-rolls: stage + claim the
-    * current head+1; if the claim fails BECAUSE another writer took
-    * that version (the version file now exists), re-read the head and
-    * try again — up to `maxRetries` times. Any other failure (missing
-    * table, IO error) propagates immediately: retrying can't fix those
-    * and must not mask them. Each lost attempt's staged files are
-    * invisible orphans ([[vacuum]]'s job), exactly like a crashed
-    * writer — the loser never mutates visible state. Returns the
-    * committed version.
-    */
-  def appendWithRetry(
-      spark: SparkSession, dir: String, df: DataFrame, maxRetries: Int = 5): Long = {
-    val (f, root) = fs(spark, dir)
-    var attempt = 0
-    while (true) {
-      val vs = versions(spark, dir)
-      require(vs.nonEmpty, s"no table at $dir")
-      val target = vs.last + 1
-      try return appendAt(spark, dir, df, target)
-      catch {
-        case e: Exception if f.exists(logPath(root, target)) && attempt < maxRetries =>
-          attempt += 1 // lost the version race — head moved, re-target
-        case e: Exception if f.exists(logPath(root, target)) =>
-          throw new IllegalStateException(
-            s"lost the commit race $maxRetries times at $dir (contention too high)", e)
-      }
-    }
-    -1L // unreachable
-  }
-
-  private def replay(f: FileSystem, root: Path, upTo: Long): TableState = {
+  private[operators] def replay(f: FileSystem, root: Path, upTo: Long): TableState = {
     // start from the newest checkpoint ≤ upTo: O(commits SINCE it), not
     // O(all commits) — at 10⁵ commits the log replay is otherwise the
     // planner bottleneck the log was built to remove
@@ -537,6 +506,8 @@ object TxLog {
   /** Live data files (table-relative) at a version — planning
     * introspection: what a snapshot scan would read, straight from the
     * log replay (deletion-vector sidecars not included).
+    * No gate or program calls it: it is how TxLogSpec checks the file sets
+    * the gated commits leave.
     */
   def liveFiles(spark: SparkSession, dir: String, version: Option[Long] = None): Seq[String] = {
     val (f, root) = fs(spark, dir)
@@ -549,6 +520,8 @@ object TxLog {
 
   /** Live deletion-vector row count — the masking metric (TxLogSpec
     * asserts delete commits positions, not rewritten files).
+    * No gate or program calls it: it is how TxLogSpec checks the gated
+    * delete, rewrite and restore commit positions, not files.
     */
   def deletionVectorRows(spark: SparkSession, dir: String, version: Option[Long] = None): Long = {
     val (f, root) = fs(spark, dir)
@@ -594,6 +567,8 @@ object TxLog {
 
   /** Planned file count for a range probe — the pruning metric
     * (TxLogSpec asserts candidates ≪ live files for a narrow range).
+    * No gate or program calls it: it is how TxLogSpec checks that
+    * [[snapshotRange]] (qy8) prunes.
     */
   def rangeCandidateFiles(spark: SparkSession, dir: String, lo: Long, hi: Long): Long = {
     val (f, root) = fs(spark, dir)
@@ -739,6 +714,8 @@ object TxLog {
 
   /** Planned file count for a partition probe — the pruning metric
     * (TxLogSpec asserts candidates == the matching partitions' files).
+    * No gate or program calls it: it is how TxLogSpec checks that
+    * [[snapshotWhere]] prunes.
     */
   def partitionCandidateFiles(
       spark: SparkSession, dir: String, partFilter: Map[String, Seq[String]]): Long = {
@@ -901,38 +878,6 @@ object TxLog {
       statsCol = sc, stats = old.stats, partitionBy = pb,
       dvAdd = old.dv, dvRemove = cur.dv))
     v
-  }
-
-  /** Delete data files referenced by NO retained version (crashed
-    * writers' orphan stage dirs, and — when `retain` drops old versions
-    * — files only old snapshots referenced). Returns deleted
-    * table-relative paths. Time travel to a dropped version dies after
-    * vacuum, exactly like Delta's.
-    */
-  def vacuum(
-      spark: SparkSession,
-      dir: String,
-      retain: Option[Seq[Long]] = None): Seq[String] = {
-    val (f, root) = fs(spark, dir)
-    val vs = versions(spark, dir)
-    require(vs.nonEmpty, s"no table at $dir")
-    val keep = retain.getOrElse(vs)
-    val referenced = keep.flatMap { v =>
-      val st = replay(f, root, v); st.live ++ st.dv
-    }.toSet
-    val dataDir = new Path(root, "data")
-    if (!f.exists(dataDir)) return Seq.empty
-    val rootUri = f.makeQualified(root).toString
-    val it = f.listFiles(dataDir, true)
-    val all = scala.collection.mutable.ArrayBuffer.empty[String]
-    while (it.hasNext) {
-      val s = it.next().getPath
-      val rel = f.makeQualified(s).toString.stripPrefix(rootUri).stripPrefix("/")
-      if (rel.endsWith(".parquet")) all += rel
-    }
-    val orphans = all.toSeq.filterNot(referenced)
-    orphans.foreach(p => f.delete(new Path(root, p), false))
-    orphans.sorted
   }
 
   /** MERGE (upsert) — Delta's `WHEN MATCHED THEN UPDATE SET * WHEN NOT

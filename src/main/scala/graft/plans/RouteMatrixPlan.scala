@@ -14,8 +14,7 @@ import org.apache.spark.sql.types.{BooleanType, DoubleType, IntegerType}
   * a many-to-many shortest-path matrix has no composition of built-in
   * operators (it's an iterative graph traversal), so it enters the plan as
   * a custom `LogicalPlan` leaf + `Strategy` + `SparkPlan`, registered via
-  * `spark.experimental.extraStrategies` (or `GraftExtensions` for
-  * `spark.sql.extensions` config users).
+  * `spark.experimental.extraStrategies`.
   *
   * Payoff vs an RDD wrapper around the same Dijkstra: the operator is
   * *inside* Catalyst — downstream filters/projections/joins compose and
@@ -24,8 +23,8 @@ import org.apache.spark.sql.types.{BooleanType, DoubleType, IntegerType}
   * statistics, and AQE sees real stats instead of an opaque RDD scan.
   *
   * The graph itself broadcasts (driver-small by construction, SURVEY
-  * §2.8); the WORK — one Dijkstra per OD source — distributes one source
-  * per task slice.
+  * §2.8); the WORK — one Dijkstra per OD source — distributes over
+  * [[graft.graph.Routing.sweepSlices]] contiguous slices of the sources.
   */
 case class RouteMatrixRelation(
     @transient graph: CsrGraph,
@@ -60,7 +59,7 @@ case class RouteMatrixExec(relation: RouteMatrixRelation) extends LeafExecNode {
     val removed = relation.removedWay
     val n = odNodes.length
     val outAttrs = output
-    sc.parallelize(0 until n - 1, math.min(math.max(n - 1, 1), 64))
+    sc.parallelize(0 until n - 1, graft.graph.Routing.sweepSlices(sc, n - 1))
       .mapPartitions { sources =>
         val g = bg.value
         val proj = org.apache.spark.sql.catalyst.expressions.UnsafeProjection.create(outAttrs, outAttrs)
@@ -97,12 +96,6 @@ object RouteMatrixStrategy extends SparkStrategy {
     case r: RouteMatrixRelation => RouteMatrixExec(r) :: Nil
     case _ => Nil
   }
-}
-
-/** `spark.sql.extensions=graft.plans.GraftExtensions` registration path. */
-class GraftExtensions extends (org.apache.spark.sql.SparkSessionExtensions => Unit) {
-  override def apply(e: org.apache.spark.sql.SparkSessionExtensions): Unit =
-    e.injectPlannerStrategy(_ => RouteMatrixStrategy)
 }
 
 object RouteMatrixPlan {

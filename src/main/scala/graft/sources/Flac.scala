@@ -22,6 +22,7 @@ object Flac {
 
   /** Decoded stream: per-channel sample arrays (not interleaved). */
   final case class Audio(sampleRate: Int, channels: Int, bps: Int, data: Array[Array[Int]]) {
+    /** Samples per channel. No gate or program reads it; FlacSpec does. */
     def numSamples: Int = if (data.isEmpty) 0 else data(0).length
   }
 

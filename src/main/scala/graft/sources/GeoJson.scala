@@ -68,7 +68,10 @@ object GeoJson {
         array(from_json(col("coordinates_json"), org.apache.spark.sql.types.DataTypes.createArrayType(org.apache.spark.sql.types.DataTypes.DoubleType))))
         .otherwise(from_json(col("coordinates_json"), lineType)))
 
-  /** Polygon rings as array<array<array<double>>>. */
+  /** Polygon rings as array<array<array<double>>>.
+    * No gate or program calls it yet: it decodes the GeoJSON area input of
+    * the paper's overlay (stage 2), which `Pipeline` does not wire.
+    */
   def polygonRings(df: DataFrame): DataFrame =
     df.withColumn(
       "rings",

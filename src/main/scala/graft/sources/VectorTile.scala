@@ -454,6 +454,8 @@ object VectorTile {
     * → one `{z}/{x}/{y}.mvt` per occupied tile under `dir`. One shuffle
     * (groupBy tile key); each task encodes and writes its own tiles —
     * no driver collect, no external tool.
+    * No gate or program calls it yet: it writes the paper's stage-5 tiles,
+    * which `Pipeline` does not wire.
     */
   def writeTiles(
       df: DataFrame,
@@ -508,6 +510,8 @@ object VectorTile {
     * Degenerate clips (< 2 line points / < 3 ring points after integer
     * rounding) drop silently — the tile simply has no fragment of that
     * feature, matching clipping-tiler semantics.
+    * No gate or program calls it yet: it writes the paper's stage-5 tiles,
+    * which `Pipeline` does not wire.
     */
   def writeGeomTiles(
       df: DataFrame,

@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.streaming.OutputMode
 
 /** Structured-Streaming surface (SURVEY.md §2.10 — beyond-reference
   * capability; the reference has no event-time processing).
@@ -37,119 +37,6 @@ object EventStreams {
       .agg(sum(col("new_session")).as("n_sessions"), count(lit(1)).as("n_events"))
   }
 
-  case class Event(event_id: Long, ts: java.sql.Timestamp, user_id: Long, event_type: String, value: Double)
-  case class SessionSummary(user_id: Long, n_sessions: Long, n_events: Long)
-  private case class SessionState(lastEpoch: Long, sessions: Long, events: Long)
-
-  /** Streaming-stateful sessionization via mapGroupsWithState — the custom
-    * per-key state operator (KeyValueGroupedDataset) the §2.10 mandate asks
-    * for. Batch-callable too (state then spans the whole group at once).
-    *
-    * ORDERING CONTRACT: events are sorted within each micro-batch, but the
-    * compact state keeps only `lastEpoch` — an event arriving in a LATER
-    * batch with an EARLIER timestamp (out-of-order across batches) cannot
-    * retroactively re-split earlier sessions. Such a late event is folded
-    * into the current session and never rewinds `lastEpoch` (so it cannot
-    * fabricate a new session for the next on-time event either). For
-    * exact event-time semantics under disorder, use the native
-    * `session_window` path (qe3 in SparkEntry) with a watermark, which
-    * buffers per-window state until the watermark closes it.
-    */
-  def sessionizeStateful(events: Dataset[Event], gapSec: Long = 1800): Dataset[SessionSummary] = {
-    import events.sparkSession.implicits._
-    events
-      .groupByKey(_.user_id)
-      .mapGroupsWithState[SessionState, SessionSummary](GroupStateTimeout.NoTimeout) {
-        (userId: Long, it: Iterator[Event], state: GroupState[SessionState]) =>
-          val sorted = it.toSeq.sortBy(e => (e.ts.getTime, e.event_id))
-          var st = state.getOption.getOrElse(SessionState(Long.MinValue, 0L, 0L))
-          sorted.foreach { e =>
-            val epoch = e.ts.getTime / 1000
-            val isNew = st.lastEpoch == Long.MinValue || epoch - st.lastEpoch > gapSec
-            // math.max: a cross-batch late event joins the current session
-            // but must not rewind the gap anchor (see ordering contract)
-            st = SessionState(math.max(st.lastEpoch, epoch), st.sessions + (if (isNew) 1 else 0), st.events + 1)
-          }
-          state.update(st)
-          SessionSummary(userId, st.sessions, st.events)
-      }
-  }
-
-  /** Event-time-correct stateful sessionization: events buffer in per-key
-    * state and sessions finalize only when the EVENT-TIME timeout fires
-    * (watermark passes last-seen + gap), so cross-batch disorder within
-    * the watermark horizon cannot mis-split sessions — the exactness
-    * `sessionizeStateful`'s compact state gives up (see its ordering
-    * contract). Cost: state holds the key's in-flight events, bounded by
-    * the watermark horizon; emission is deferred until quiescence.
-    *
-    * Output contract (inherent to Append mode): one `SessionSummary` per
-    * QUIESCENCE EPOCH, not per key. State is removed when the event-time
-    * timeout fires, so a key that becomes active again after a summary was
-    * emitted starts from zero and eventually emits a SECOND independent
-    * row. Downstream consumers wanting per-key lifetime totals must
-    * aggregate (`groupBy(user_id).agg(sum(sessions), sum(events))`) —
-    * summaries are disjoint (each event counted in exactly one row), so
-    * the sums are exact. The batch twin (`sessionize`) emits exactly one
-    * row per key because it sees the whole input at once.
-    */
-  /** State for `sessionizeBuffered`: running summary of watermark-closed
-    * sessions + the still-open tail buffer. Public: the streaming state
-    * encoder generates accessor code for it.
-    */
-  case class BufferedSessions(sessions: Long, events: Long, lastEpoch: Long, buf: List[Event])
-
-  def sessionizeBuffered(events: Dataset[Event], gapSec: Long = 1800): Dataset[SessionSummary] = {
-    import events.sparkSession.implicits._
-
-    def fold(st: BufferedSessions, sorted: Seq[Event]): BufferedSessions =
-      sorted.foldLeft(st) { (s, e) =>
-        val epoch = e.ts.getTime / 1000
-        val isNew = s.lastEpoch == Long.MinValue || epoch - s.lastEpoch > gapSec
-        BufferedSessions(
-          s.sessions + (if (isNew) 1 else 0),
-          s.events + 1,
-          math.max(s.lastEpoch, epoch),
-          s.buf)
-      }
-
-    events
-      .withWatermark("ts", "1 hour")
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState[BufferedSessions, SessionSummary](OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
-        (userId: Long, it: Iterator[Event], state: GroupState[BufferedSessions]) =>
-          val zero = BufferedSessions(0L, 0L, Long.MinValue, Nil)
-          if (state.hasTimedOut) {
-            val st0 = state.getOption.getOrElse(zero)
-            state.remove()
-            val done = fold(st0, st0.buf.sortBy(e => (e.ts.getTime, e.event_id)))
-            Iterator.single(SessionSummary(userId, done.sessions, done.events))
-          } else {
-            val st0 = state.getOption.getOrElse(zero)
-            val merged = (st0.buf ++ it).sortBy(e => (e.ts.getTime, e.event_id))
-            // Compaction keeps state bounded by the watermark horizon even
-            // for a continuously-active key: events at least one full gap
-            // older than the watermark can neither be re-split nor re-joined
-            // by any in-watermark arrival, so their prefix folds into the
-            // running (sessions, events, lastEpoch) summary and only the
-            // open tail stays buffered.
-            val foldBoundary = state.getCurrentWatermarkMs() / 1000 - gapSec
-            val (closed, open) = merged.partition(_.ts.getTime / 1000 <= foldBoundary)
-            val st = fold(st0, closed).copy(buf = open)
-            state.update(st)
-            // finalize once the watermark clears the last event by a full
-            // gap. Clamp above the current watermark: a LATE event
-            // (admitted by Spark — flatMapGroupsWithState does not
-            // pre-filter) can put lastMs+gap below the watermark, and
-            // setTimeoutTimestamp throws on a sub-watermark target.
-            val foldedMs = if (st.lastEpoch == Long.MinValue) Long.MinValue else st.lastEpoch * 1000
-            val openMs = if (open.isEmpty) Long.MinValue else open.iterator.map(_.ts.getTime).max
-            val lastMs = math.max(foldedMs, openMs)
-            state.setTimeoutTimestamp(math.max(lastMs + gapSec * 1000, state.getCurrentWatermarkMs() + 1))
-            Iterator.empty
-          }
-      }
-  }
 
   /** Streaming dedup: exactly-once event ids within the watermark horizon
     * (`dropDuplicatesWithinWatermark` — state expires with the watermark,
@@ -159,30 +46,6 @@ object EventStreams {
     events
       .withWatermark("ts", "1 hour")
       .dropDuplicatesWithinWatermark(idCol)
-
-  /** Stream-static INCREMENTAL dedup — the streaming twin of
-    * [[graft.operators.Dedup.incrementalExactDedup]]: incoming docs
-    * anti-join the standing corpus's DISTINCT fingerprints (stream-static
-    * joins re-evaluate the static side per micro-batch, so a corpus
-    * refresh lands without restarting the query), then streaming
-    * `dropDuplicates` state enforces exactly-once per NOVEL fingerprint
-    * across batches. State is bounded by novel volume only — the corpus
-    * never enters the state store; at 100 TB the corpus side stays a
-    * parquet scan of an 8-byte fingerprint column (or a bucketed table,
-    * making the per-batch anti join exchange-light).
-    */
-  def incrementalDedupStream(
-      docs: DataFrame,
-      corpus: DataFrame,
-      textCol: String): DataFrame = {
-    val fp = graft.functions.TextFunctions.fingerprint(col(textCol))
-    val seen = corpus.select(fp.as("__fp")).distinct()
-    docs
-      .withColumn("__fp", fp)
-      .join(seen, Seq("__fp"), "left_anti")
-      .dropDuplicates("__fp")
-      .drop("__fp")
-  }
 
   /** Stream-stream interval join: clicks matched to purchases by the same
     * user within `windowSec` AFTER the click. Both sides watermarked so
@@ -308,149 +171,6 @@ object EventStreams {
       }
       .start()
 
-  // ---------------------------------------------- streaming near-dup LSH
-
-  case class StreamDoc(doc_id: Long, text: String)
-  case class BandVerdict(doc_id: Long, dup: Boolean)
-
-  /** Online MinHash-LSH near-dup detection — the streaming twin of
-    * `operators.Dedup.minHashDedup` for incoming crawl data: each doc's
-    * banded signature (IDENTICAL banding expression to the batch
-    * operator) claims its band buckets; a bucket's first claimant owns
-    * it, and any later doc hitting an owned bucket is flagged dup via
-    * that band. Emits one verdict PER (doc, band); the per-doc
-    * conjunction is [[nearDupSurvivors]], run per micro-batch (all of a
-    * doc's bands land in the same batch, so no second stateful op is
-    * needed — `foreachBatch` the conjunction).
-    *
-    * Within one batch a bucket's claimant is its MIN doc id, so a
-    * single-batch replay equals the batch operator exactly: batch
-    * `minHashDedup` keeps a doc iff it is the min of EVERY bucket it
-    * occupies, which is precisely "no band flags it dup" here
-    * (spec-asserted). Across batches the contract is first-seen-wins —
-    * the online semantics a crawl pipeline wants.
-    *
-    * State: one Long per DISTINCT band bucket ever seen — the LSH
-    * dictionary, the storage lower bound for GLOBAL online dedup. For an
-    * unbounded crawl that cannot hold the dictionary, switch the
-    * timeout to `EventTimeTimeout` with a watermark so idle buckets
-    * expire: dedup then weakens to "within the watermark horizon" — the
-    * same tradeoff `dropDuplicatesWithinWatermark` makes for exact ids.
-    */
-  def nearDupBandVerdicts(
-      docs: Dataset[StreamDoc],
-      shingleSize: Int = 3,
-      numHashes: Int = 16,
-      bands: Int = 4): Dataset[BandVerdict] = {
-    import docs.sparkSession.implicits._
-    val rpb = numHashes / bands
-    val banded = docs
-      .select(
-        col("doc_id"),
-        graft.functions.expressions.TextHashExpressions
-          .minHashSignature(col("text"), shingleSize, numHashes).as("__sig"))
-      .withColumn("__band", explode(array((0 until bands).map(lit): _*)))
-      // the batch operator's exact bucket key (Dedup.banded)
-      .withColumn(
-        "__bandhash",
-        xxhash64(slice(col("__sig"), col("__band") * rpb + 1, lit(rpb)), col("__band")))
-      .select(col("__band"), col("__bandhash"), col("doc_id"))
-      .as[(Int, Long, Long)]
-    banded
-      .groupByKey { case (band, hash, _) => (band, hash) }
-      .flatMapGroupsWithState[Long, BandVerdict](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (_: (Int, Long), rows: Iterator[(Int, Long, Long)], state: GroupState[Long]) =>
-          // a bucket claimed in ANY earlier batch stays claimed
-          // (first-seen-wins, regardless of id); within one batch the
-          // min id claims first → single-batch ≡ the batch operator
-          val ids = rows.map(_._3).toArray.sorted
-          val claimedBefore = state.exists
-          var batchMin = Long.MaxValue
-          val out = ids.iterator.map { id =>
-            val dup = claimedBefore || batchMin < id
-            if (id < batchMin) batchMin = id
-            BandVerdict(id, dup)
-          }.toVector
-          state.update(math.min(state.getOption.getOrElse(Long.MaxValue), batchMin))
-          out.iterator
-      }
-  }
-
-  case class StreamDocTs(doc_id: Long, text: String, ts: java.sql.Timestamp)
-  /** Public: the streaming state encoder generates accessor code for it. */
-  case class BucketTtlState(claimed: Boolean, lastMs: Long)
-
-  /** TTL variant of [[nearDupBandVerdicts]] for unbounded crawls that
-    * cannot hold the full LSH dictionary: the input carries event time,
-    * and a band bucket idle for `ttlSec` past the watermark is REMOVED —
-    * dedup weakens from global to "within the TTL horizon" (a text
-    * re-sent after the horizon survives again), exactly the
-    * `dropDuplicatesWithinWatermark` tradeoff. Same banding, same
-    * first-seen-wins semantics inside the horizon.
-    */
-  def nearDupBandVerdictsTtl(
-      docs: Dataset[StreamDocTs],
-      ttlSec: Long,
-      shingleSize: Int = 3,
-      numHashes: Int = 16,
-      bands: Int = 4): Dataset[BandVerdict] = {
-    import docs.sparkSession.implicits._
-    val rpb = numHashes / bands
-    val banded = docs
-      .withWatermark("ts", s"$ttlSec seconds")
-      .select(
-        col("doc_id"),
-        col("ts"),
-        graft.functions.expressions.TextHashExpressions
-          .minHashSignature(col("text"), shingleSize, numHashes).as("__sig"))
-      .withColumn("__band", explode(array((0 until bands).map(lit): _*)))
-      .withColumn(
-        "__bandhash",
-        xxhash64(slice(col("__sig"), col("__band") * rpb + 1, lit(rpb)), col("__band")))
-      .select(col("__band"), col("__bandhash"), col("doc_id"), col("ts"))
-      .as[(Int, Long, Long, java.sql.Timestamp)]
-    banded
-      .groupByKey { case (band, hash, _, _) => (band, hash) }
-      .flatMapGroupsWithState[BucketTtlState, BandVerdict](
-        OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
-        (_: (Int, Long), rows: Iterator[(Int, Long, Long, java.sql.Timestamp)],
-         state: GroupState[BucketTtlState]) =>
-          if (state.hasTimedOut) { state.remove(); Iterator.empty }
-          else {
-            val batch = rows.toArray.sortBy(_._3)
-            val claimedBefore = state.getOption.exists(_.claimed)
-            var batchMin = Long.MaxValue
-            val out = batch.iterator.map { case (_, _, id, _) =>
-              val dup = claimedBefore || batchMin < id
-              if (id < batchMin) batchMin = id
-              BandVerdict(id, dup)
-            }.toVector
-            val lastMs = math.max(
-              state.getOption.map(_.lastMs).getOrElse(Long.MinValue),
-              batch.iterator.map(_._4.getTime).max)
-            state.update(BucketTtlState(claimed = true, lastMs))
-            // sub-watermark clamp: a late arrival can put lastMs + ttl
-            // below the watermark, and setTimeoutTimestamp throws there
-            state.setTimeoutTimestamp(
-              math.max(lastMs + ttlSec * 1000, state.getCurrentWatermarkMs() + 1))
-            out.iterator
-          }
-      }
-  }
-
-  /** Per-micro-batch conjunction over [[nearDupBandVerdicts]] output:
-    * a doc survives iff NO band flagged it (i.e. it owns every bucket it
-    * touches). Run inside `foreachBatch` — a plain batch aggregation,
-    * keeping the pipeline at ONE stateful operator.
-    */
-  def nearDupSurvivors(bandVerdicts: DataFrame): DataFrame =
-    bandVerdicts
-      .groupBy(col("doc_id"))
-      .agg(max(col("dup").cast("int")).as("__anyDup"))
-      .filter(col("__anyDup") === 0)
-      .select(col("doc_id"))
-
   /** Materialize a drained memory-sink table and DROP its temp view:
     * memory sinks register a catalog table under `queryName`, and the
     * bench sweeps invoke these runners repeatedly with unique
@@ -461,61 +181,11 @@ object EventStreams {
     * view; the drained results are bounded by contract (register /
     * cell / retained-sample rows), so the checkpoint is small.
     */
-  private def drainMemorySink(spark: SparkSession, queryName: String): DataFrame = {
+  private[graft] def drainMemorySink(spark: SparkSession, queryName: String): DataFrame = {
     val out = spark.table(queryName).localCheckpoint(true)
     spark.catalog.dropTempView(queryName)
     out
   }
-
-  /** Run the windowed aggregation as a real streaming query over a parquet
-    * directory (memory sink) — used by the streaming spec; returns the
-    * final in-memory table.
-    */
-  /** One state-store operator's footprint at one micro-batch — the
-    * observability row an operator dashboard ingests.
-    */
-  case class StateOpMetrics(
-      batchId: Long,
-      operator: String,
-      stateRows: Long,
-      rowsUpdated: Long,
-      memoryUsedBytes: Long,
-      watermark: Option[String])
-
-  /** STATE OBSERVABILITY — harvest per-batch state-store metrics from a
-    * running (or drained) streaming query's progress history: state rows
-    * held, rows updated, state memory, and the event-time watermark that
-    * gates eviction. This is the signal that makes a stateful stream
-    * OPERABLE at scale: unbounded state growth (a watermark that never
-    * advances, a join whose unmatched side accumulates) shows up here
-    * batches before it OOMs an executor — the number to alert on, and
-    * the companion to [[observe]]d row counts (state is WHY rows
-    * emit late in watermark joins). Reads the driver-held
-    * `recentProgress` ring (last ~100 batches): O(1) driver memory,
-    * zero executor cost — the metrics are already collected by the
-    * streaming engine; this surfaces them as data.
-    */
-  def stateMetrics(
-      q: org.apache.spark.sql.streaming.StreamingQuery): Seq[StateOpMetrics] =
-    q.recentProgress.toSeq.flatMap { p =>
-      p.stateOperators.toSeq.map { so =>
-        StateOpMetrics(
-          p.batchId, so.operatorName, so.numRowsTotal, so.numRowsUpdated,
-          so.memoryUsedBytes, Option(p.eventTime.get("watermark")))
-      }
-    }
-
-  /** Per-batch OBSERVED metrics for one named [[DataFrame.observe]]
-    * point, keyed by batchId. observe() computes its aggregates inside
-    * the running plan (codegen, map-side — no second pass over the
-    * stream), so per-batch row/sum counters are free at any scale.
-    */
-  def observedMetrics(
-      q: org.apache.spark.sql.streaming.StreamingQuery,
-      name: String): Map[Long, org.apache.spark.sql.Row] =
-    q.recentProgress.toSeq.flatMap { p =>
-      Option(p.observedMetrics.get(name)).map(p.batchId -> _)
-    }.toMap
 
   /** STREAMING HLL — per-hour distinct-user estimates where the
     * streaming STATE is the sketch: the stream aggregates
@@ -747,6 +417,9 @@ object EventStreams {
         col("term"), col("est"), col("err"))
   }
 
+  /** The windowed aggregation as a real streaming query over a parquet
+    * directory (memory sink): the drained table (qe8).
+    */
   def runWindowedStream(
       spark: SparkSession,
       dir: String,

@@ -70,4 +70,32 @@ class RegistrySpec extends AnyFunSuite {
       new RuntimeException("\n  [CANNOT_RESOLVE] col `x`  \n== Plan ==\nProject [x]")) ==
       "java.lang.RuntimeException: [CANNOT_RESOLVE] col `x`")
   }
+
+  /** The gates that write and re-read files stage them under a `graft-*`
+    * temp dir; a dir left behind is a table copy leaked per bench run.
+    * `graft-sent-cache` is the stream gates' sentinel store, kept for the
+    * JVM's lifetime on purpose.
+    */
+  test("gates that stage files leave no graft-* entry in the temp dir") {
+    import scala.jdk.CollectionConverters._
+    val gates = Seq(
+      "qz2_raster_zonal", "qz3_raster_deflate", "qz4_raster_parallel",
+      "qz5_raster_jpeg", "qz6_raster_bands", "qz7_raster_bands_parallel",
+      "qz8_focal", "qf1_shapefile", "qf2_geojson", "qf3_osmxml",
+      "qf4_vector_tile", "qf6_orc_roundtrip", "qf7_compact",
+      "qf8_polygon_holes", "qf9_shapefile_v2", "qy2_bucket_join", "qy3_zbox",
+      "qy7_hilbert_box")
+    val tmp = java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"))
+    def staged(): Set[String] = {
+      val ls = java.nio.file.Files.list(tmp)
+      try ls.iterator().asScala.map(_.getFileName.toString)
+        .filter(n => n.startsWith("graft-") && !n.startsWith("graft-sent-cache")).toSet
+      finally ls.close()
+    }
+    val spark = GraftSession.local(2, "registry-spec")
+    val before = staged()
+    gates.foreach(g => SparkEntry.queries(g)(spark, "/root/testdata/sf0.001").collect())
+    val leaked = staged() -- before
+    assert(leaked.isEmpty, s"staging dirs left behind: ${leaked.toSeq.sorted}")
+  }
 }

@@ -12,6 +12,7 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class CrsSpec extends AnyFunSuite {
   import Crs._
+  import CrsForward._
 
   /** ∫ a(1−e²)/(1−e² sin²t)^{3/2} dt from 0 to phi — the meridian arc by
     * Simpson quadrature (defining integral; shares nothing with the

@@ -48,18 +48,6 @@ class GeoFunctionsSpec extends AnyFunSuite {
     assert(math.abs(d - 1.0 * 111.32) < 0.1)
   }
 
-  test("Web Mercator round-trips and matches known anchors") {
-    // EPSG:3857 extent corner: (180, 0) → (20037508.34, 0)
-    val c = toWebMercator(180, 0)
-    assert(math.abs(c(0) - 20037508.342789244) < 1e-6)
-    assert(math.abs(c(1)) < 1e-6)
-    for ((lon, lat) <- Seq((32.58, -25.96), (0.0, 0.0), (-74.0, 40.7))) {
-      val Seq(x, y) = toWebMercator(lon, lat)
-      val Seq(lon2, lat2) = fromWebMercator(x, y)
-      assert(math.abs(lon2 - lon) < 1e-9 && math.abs(lat2 - lat) < 1e-9)
-    }
-  }
-
   test("centroid is the vertex mean") {
     assert(centroid(Seq(Seq(0.0, 0.0), Seq(2.0, 2.0))) == Seq(1.0, 1.0))
   }

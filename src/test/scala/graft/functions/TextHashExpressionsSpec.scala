@@ -3,6 +3,7 @@ package graft.functions
 import graft.GraftSession
 import graft.functions.expressions.{TextHashExpressions, TextHashKernel}
 import graft.operators.Dedup
+import org.apache.spark.sql.expressions.UserDefinedFunction
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -14,11 +15,21 @@ import org.scalatest.funsuite.AnyFunSuite
 class TextHashExpressionsSpec extends AnyFunSuite {
   private lazy val spark = GraftSession.local(2, "texthash-expr-spec")
 
+  /** The UDF tier: the same kernel behind a ScalaUDF, row by row. */
+  private def minHashSignatureUdf(shingleSize: Int, numHashes: Int, seed: Long = 42L): UserDefinedFunction = {
+    val cs = Dedup.minHashCoefs(numHashes, seed)
+    val (coefA, coefB) = (cs.map(_._1), cs.map(_._2))
+    udf { (text: String) => TextHashKernel.minHashSignature(text, shingleSize, coefA, coefB) }
+  }
+
+  private val simHashUdf: UserDefinedFunction =
+    udf { (text: String) => TextHashKernel.simHash64(text) }
+
   test("MinHashSignatureExpr output is bit-identical to the UDF tier on real documents") {
     val docs = graft.Tables.documents(spark, "/root/testdata/sf0.001")
     val both = docs.select(
       TextHashExpressions.minHashSignature(col("text"), 3, 16).as("fast"),
-      Dedup.minHashSignatureUdf(3, 16)(col("text")).as("slow"))
+      minHashSignatureUdf(3, 16)(col("text")).as("slow"))
     assert(both.filter(col("fast") =!= col("slow")).count() === 0L)
   }
 
@@ -26,7 +37,7 @@ class TextHashExpressionsSpec extends AnyFunSuite {
     val docs = graft.Tables.documents(spark, "/root/testdata/sf0.001")
     val both = docs.select(
       TextHashExpressions.simHash64(col("text")).as("fast"),
-      Dedup.simHashUdf(col("text")).as("slow"))
+      simHashUdf(col("text")).as("slow"))
     assert(both.filter(col("fast") =!= col("slow")).count() === 0L)
   }
 

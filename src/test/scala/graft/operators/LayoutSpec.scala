@@ -317,7 +317,32 @@ class LayoutSpec extends AnyFunSuite {
 
   // ------------------------------------------------------------- Hilbert tier
 
-  import graft.functions.expressions.HilbertExpressions.{xy2d, d2xy}
+  import graft.functions.expressions.HilbertExpressions.xy2d
+
+  /** Driver-side d→(x, y) inverse of [[xy2d]]. Note the rotation here
+    * uses the CURRENT level size `s`, not `n`: the published inverse
+    * pairs with xy2d exactly.
+    */
+  private def d2xy(order: Int, d: Long): (Long, Long) = {
+    val n = 1L << order
+    var x = 0L
+    var y = 0L
+    var t = d
+    var s = 1L
+    while (s < n) {
+      val rx = 1L & (t / 2)
+      val ry = 1L & (t ^ rx)
+      if (ry == 0) {
+        if (rx == 1) { x = s - 1 - x; y = s - 1 - y }
+        val tmp = x; x = y; y = tmp
+      }
+      x += s * rx
+      y += s * ry
+      t /= 4
+      s <<= 1
+    }
+    (x, y)
+  }
 
   test("hilbert2 column matches the driver xy2d loop; d2xy round-trips; masking") {
     val rnd = new scala.util.Random(31)

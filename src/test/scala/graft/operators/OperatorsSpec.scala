@@ -659,7 +659,7 @@ class OperatorsSpec extends AnyFunSuite {
     val q = Array.tabulate(64)(i => math.cos(i * 0.7))
     val brute = Similarity.bruteForceTopK(embs, "vec_id", "embedding", q, 10)
       .collect().map(_.getLong(0)).toSet
-    val ivf = Similarity.ivfKmeansTopK(embs, "vec_id", "embedding", q, 10, nClusters = 8, nProbe = 4)
+    val ivf = SimilarityVariants.ivfKmeansTopK(embs, "vec_id", "embedding", q, 10, nClusters = 8, nProbe = 4)
       .collect().map(_.getLong(0)).toSet
     val recall = brute.intersect(ivf).size.toDouble / brute.size
     assert(ivf.size == 10)
@@ -729,7 +729,7 @@ class OperatorsSpec extends AnyFunSuite {
         (0 until 800).map(_ => ("skew", math.pow(rnd.nextDouble(), 8) * 1e6)) :+
         (("one", 42.0)) :+ (("two", 1.0)) :+ (("two", 2.0))
     val df = rows.toDF("g", "v")
-    val win = Relational.groupedPercentileFilterWindow(df, "g", "v", 80.0)
+    val win = RelationalWindowForms.groupedPercentileFilterWindow(df, "g", "v", 80.0)
       .collect().map(r => (r.getString(0), r.getDouble(1))).sorted.toSeq
     // exactCutoff=1 forces the bisection loop for every group ≥ 2 rows
     val bis = Relational.groupedPercentileFilter(df, "g", "v", 80.0, exactCutoff = 1L)
@@ -752,7 +752,7 @@ class OperatorsSpec extends AnyFunSuite {
       i <- 0 until (1 + rnd.nextInt(20))
     } yield (s"g$g", rnd.nextDouble() * 100)
     val df = rows.toDF("g", "v")
-    val win = Relational.groupedPercentileFilterWindow(df, "g", "v", 80.0)
+    val win = RelationalWindowForms.groupedPercentileFilterWindow(df, "g", "v", 80.0)
       .collect().map(r => (r.getString(0), r.getDouble(1))).sorted.toSeq
     val guarded = Relational.groupedPercentileFilter(df, "g", "v", 80.0, maxBisectGroups = 8)
       .collect().map(r => (r.getString(0), r.getDouble(1))).sorted.toSeq
@@ -859,7 +859,7 @@ class OperatorsSpec extends AnyFunSuite {
     val got = knn.collect()
     assert(got.length == 15) // 3 queries × 5
     // bounded-aggregator plan is row-identical to the naive window twin
-    val naive = Similarity.knnJoinWindow(embs, queries, "vec_id", "embedding", "q_id", "q_vec", 5)
+    val naive = SimilarityVariants.knnJoinWindow(embs, queries, "vec_id", "embedding", "q_id", "q_vec", 5)
       .collect()
     val key = (r: org.apache.spark.sql.Row) => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getLong(3))
     assert(got.map(key).sortBy(t => (t._1, t._4)).toSeq == naive.map(key).sortBy(t => (t._1, t._4)).toSeq)
@@ -912,7 +912,7 @@ class OperatorsSpec extends AnyFunSuite {
     val embs = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
     def key(r: org.apache.spark.sql.Row) =
       (r.getLong(0), r.getLong(1), r.getDouble(2), r.getLong(3), r.getLong(4))
-    val brute = Similarity.mutualKnnBrute(embs, "vec_id", "embedding", k = 3)
+    val brute = SimilarityVariants.mutualKnnBrute(embs, "vec_id", "embedding", k = 3)
       .collect().map(key).toSet
     val one = Similarity.mutualKnn(embs, "vec_id", "embedding", k = 3,
       nCells = 1, nProbe = 1).collect().map(key).toSet
@@ -939,7 +939,7 @@ class OperatorsSpec extends AnyFunSuite {
       (4L, Array(2.0f, 0.2f)),
       (5L, Array(98.0f, 9.8f))
     ).toDF("vec_id", "embedding")
-    val brute = Similarity.mutualKnnBrute(embs, "vec_id", "embedding", k = 1)
+    val brute = SimilarityVariants.mutualKnnBrute(embs, "vec_id", "embedding", k = 1)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(brute == Set((1L, 2L), (4L, 5L)))
     val bucketed = Similarity.mutualKnn(embs, "vec_id", "embedding", k = 1,
@@ -977,16 +977,16 @@ class OperatorsSpec extends AnyFunSuite {
     val q = Array.tabulate(64)(i => math.sin(i + 1.0))
     val (bits, nProbe) = (6, 2)
     val dir = java.nio.file.Files.createTempDirectory("ivfpart").toString
-    Similarity.writeCellPartitioned(embs, "vec_id", "embedding", dir, bits)
+    SimilarityVariants.writeCellPartitioned(embs, "vec_id", "embedding", dir, bits)
     // the driver-side cell twin matches the Column expression exactly
     val spCell = embs.limit(1)
       .select(graft.functions.VectorFunctions
         .hyperplaneSignature(col("embedding"), 64, bits).as("c"), col("embedding"))
       .first()
-    val localCell = Similarity.hyperplaneCellLocal(
+    val localCell = SimilarityVariants.hyperplaneCellLocal(
       spCell.getAs[scala.collection.Seq[Float]]("embedding").map(_.toDouble).toArray, bits)
     assert(spCell.getLong(0) == localCell)
-    val pruned = Similarity.ivfTopKPruned(spark, dir, "vec_id", "embedding", q, 10, bits, nProbe)
+    val pruned = SimilarityVariants.ivfTopKPruned(spark, dir, "vec_id", "embedding", q, 10, bits, nProbe)
     val plain = Similarity.ivfTopK(embs, "vec_id", "embedding", q, 10, bits, nProbe)
     assert(pruned.collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq ==
       plain.collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq)
@@ -1703,7 +1703,7 @@ class OperatorsSpec extends AnyFunSuite {
     // window-threshold twin agrees on both tails
     val loB = Relational.groupedPercentileThresholds(df, "k", "v", 10.0)
       .collect().map(r => r.getString(0) -> r.getDouble(1)).toMap
-    val loW = Relational.groupedPercentileThresholdsWindow(df, "k", "v", 10.0)
+    val loW = RelationalWindowForms.groupedPercentileThresholdsWindow(df, "k", "v", 10.0)
       .collect().map(r => r.getString(0) -> r.getDouble(1)).toMap
     assert(loB == loW)
   }

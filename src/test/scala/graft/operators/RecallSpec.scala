@@ -180,10 +180,10 @@ class RecallSpec extends AnyFunSuite {
     qvecs.foreach { case (qid, qv) =>
       val exact = ids(Similarity.bruteForceTopK(
         embs.filter(col("vec_id") =!= qid), "vec_id", "embedding", qv, 10))
-      val cell = Similarity.hyperplaneCellLocal(qv, 6)
+      val cell = SimilarityVariants.hyperplaneCellLocal(qv, 6)
       val inCell = embs.collect().filter { r =>
         val v = r.getSeq[Float](1).map(_.toDouble).toArray
-        r.getLong(0) != qid && Similarity.hyperplaneCellLocal(v, 6) == cell
+        r.getLong(0) != qid && SimilarityVariants.hyperplaneCellLocal(v, 6) == cell
       }.map(r => (r.getLong(0),
         r.getSeq[Float](1).map(_.toDouble).toArray))
       def cos(a: Array[Double], b: Array[Double]): Double = {
@@ -202,7 +202,7 @@ class RecallSpec extends AnyFunSuite {
 
   test("k-means IVF: recall@10 >= 0.9 probing 4 of 16 clusters") {
     val r = meanRecall(10,
-      q => Similarity.ivfKmeansTopK(embs, "vec_id", "embedding", q, 10, nClusters = 16, nProbe = 4, iters = 4))
+      q => SimilarityVariants.ivfKmeansTopK(embs, "vec_id", "embedding", q, 10, nClusters = 16, nProbe = 4, iters = 4))
     assert(r >= 0.9, s"kmeans-IVF recall@10 at 4/16 probes is $r < 0.9")
   }
 
@@ -242,7 +242,7 @@ class RecallSpec extends AnyFunSuite {
     val perQuery = queries.map { q =>
       val exact = exactL2(q, 10)
       def recallAt(shortlist: Int): Double = {
-        val got = ids(Similarity.pqTopKRerank(
+        val got = ids(SimilarityVariants.pqTopKRerank(
           embsPq, "vec_id", "embedding", q, 10, shortlist = shortlist, m = 4, k = 16))
         exact.intersect(got).size.toDouble / exact.size
       }
@@ -280,7 +280,7 @@ class RecallSpec extends AnyFunSuite {
     def meanRecallAt(cb: Option[Array[Array[Array[Double]]]]): Double = {
       val rs = queries.map { q =>
         val exact = exactL2(q, 10)
-        val got = ids(Similarity.pqTopKRerank(
+        val got = ids(SimilarityVariants.pqTopKRerank(
           embsPq, "vec_id", "embedding", q, 10, shortlist = 100, m = 4, k = 16, codebook = cb))
         exact.intersect(got).size.toDouble / exact.size
       }
@@ -339,12 +339,12 @@ class RecallSpec extends AnyFunSuite {
     val q = queries.head
     val (qc, qm) = Similarity.sqQuantizeQuery(q)
     val dir = java.nio.file.Files.createTempDirectory("sq-codes").toString + "/codes"
-    val enc = Similarity.sqEncode(embs, "vec_id", "embedding")
+    val enc = SimilarityVariants.sqEncode(embs, "vec_id", "embedding")
     // the artifact really is int8 + one scale (the 4× claim)
     assert(enc.schema("codes").dataType ==
       org.apache.spark.sql.types.ArrayType(org.apache.spark.sql.types.ByteType, true))
     enc.write.parquet(dir)
-    val stored = Similarity
+    val stored = SimilarityVariants
       .sqTopKFromCodes(spark.read.parquet(dir), "vec_id", qc, qm, 10)
       .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
     val inline = Similarity.sqTopK(embs, "vec_id", "embedding", qc, qm, 10)

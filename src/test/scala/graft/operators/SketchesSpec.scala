@@ -216,8 +216,8 @@ class SketchesSpec extends AnyFunSuite {
     val oneShot = Sketches.quantileSketch(df, "k", "v", "id",
       k = 128, qs = Seq(0.3, 0.7)).collect()
       .map(r => (r.getString(0), r.getDouble(1)) -> r.getDouble(5)).toMap
-    val viaState = Sketches.quantileFromState(
-      Sketches.quantileSketchState(df, "k", "v", "id", k = 128),
+    val viaState = QuantileSketchStates.quantileFromState(
+      QuantileSketchStates.quantileSketchState(df, "k", "v", "id", k = 128),
       Seq(0.3, 0.7)).collect()
       .map(r => (r.getString(0), r.getDouble(1)) -> r.getDouble(5)).toMap
     assert(oneShot == viaState)
@@ -229,18 +229,18 @@ class SketchesSpec extends AnyFunSuite {
     val right = (8001 to 16000).map(i => ("g", i.toDouble, s"id_$i"))
       .toDF("k", "v", "id") union qdf(40, "only_right")
     val k = 128
-    val merged = Sketches.mergeQuantileStates(
-      Sketches.quantileSketchState(left, "k", "v", "id", k),
-      Sketches.quantileSketchState(right, "k", "v", "id", k), k)
+    val merged = QuantileSketchStates.mergeQuantileStates(
+      QuantileSketchStates.quantileSketchState(left, "k", "v", "id", k),
+      QuantileSketchStates.quantileSketchState(right, "k", "v", "id", k), k)
     val g = merged.filter($"key" === "g").collect().head
     assert(g.getLong(1) == 16000L, "merged n must be the exact sum")
     assert(g.getSeq[Any](3).size <= k, "merged sample exceeds k")
-    val ans = Sketches.quantileFromState(merged, Seq(0.5))
+    val ans = QuantileSketchStates.quantileFromState(merged, Seq(0.5))
       .filter($"key" === "g").collect().head.getDouble(5)
     assert(math.abs(ans - 8000.0) <= 4.0 * 16000 / math.sqrt(k.toDouble),
       s"merged median $ans too far from 8000")
     // the single-sided key survives with its exact small-group answers
-    val or = Sketches.quantileFromState(merged, Seq(0.5))
+    val or = QuantileSketchStates.quantileFromState(merged, Seq(0.5))
       .filter($"key" === "only_right").collect().head
     assert(or.getLong(2) == 40L && or.getLong(3) == 0L && or.getDouble(5) == 20.0)
   }
@@ -281,28 +281,28 @@ class SketchesSpec extends AnyFunSuite {
   test("quantile sketch merge: pooled rows tied at the maximum tz above k " +
     "keep a non-empty sample") {
     val ids = tiedMaxTzIds(3)
-    def st(slice: Seq[(String, Int)]) = Sketches.quantileSketchState(
+    def st(slice: Seq[(String, Int)]) = QuantileSketchStates.quantileSketchState(
       slice.map { case (id, i) => ("g", (i + 1).toDouble, id) }
         .toDF("k", "v", "id"),
       "k", "v", "id", k = 2)
     val indexed = ids.zipWithIndex
-    val merged = Sketches.mergeQuantileStates(
+    val merged = QuantileSketchStates.mergeQuantileStates(
       st(indexed.take(2)), st(indexed.drop(2)), k = 2)
     val row = merged.collect().head
     assert(row.getLong(1) == 3L)
     assert(row.getSeq[Any](3).nonEmpty, "merged sample must never be empty")
-    val ans = Sketches.quantileFromState(merged, Seq(0.5)).collect().head
+    val ans = QuantileSketchStates.quantileFromState(merged, Seq(0.5)).collect().head
     assert(!ans.isNullAt(5))
   }
 
   test("quantile sketch merge: merging is a pure function of the two states " +
     "— swap order, same result") {
-    val a = Sketches.quantileSketchState(qdf(4000), "k", "v", "id", 64)
-    val b = Sketches.quantileSketchState(
+    val a = QuantileSketchStates.quantileSketchState(qdf(4000), "k", "v", "id", 64)
+    val b = QuantileSketchStates.quantileSketchState(
       (4001 to 6000).map(i => ("g", i.toDouble, s"id_$i")).toDF("k", "v", "id"),
       "k", "v", "id", 64)
-    val ab = Sketches.mergeQuantileStates(a, b, 64).collect().head
-    val ba = Sketches.mergeQuantileStates(b, a, 64).collect().head
+    val ab = QuantileSketchStates.mergeQuantileStates(a, b, 64).collect().head
+    val ba = QuantileSketchStates.mergeQuantileStates(b, a, 64).collect().head
     assert(ab.getLong(1) == ba.getLong(1) && ab.getLong(2) == ba.getLong(2))
     assert(ab.getSeq[Any](3) == ba.getSeq[Any](3))
   }

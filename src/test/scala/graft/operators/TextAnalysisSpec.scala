@@ -653,25 +653,23 @@ class TextAnalysisSpec extends AnyFunSuite {
   }
 
   test("assoc pairs: in-array retain_in prune path is row-identical to the " +
-      "distributed explode+regroup fallback, with and without basket reuse") {
+      "distributed explode+regroup fallback") {
     import spark.implicits._
     val docs = Seq("a b c x", "a b y", "a c", "b c d d", "a b c z", "x y z",
       "", "q").toDF("text")
-    def rows(localMax: Int, reuse: Boolean) =
+    def rows(localMax: Int) =
       TextAnalysis.assocPairs(docs, "text", minSupport = 2L, k = 10,
-        localFrequentMax = localMax, reuseBaskets = reuse)
+        localFrequentMax = localMax)
         .collect().map(_.toSeq).toSet
-    val inArray = rows(1 << 20, reuse = true)
-    assert(inArray == rows(0, reuse = false), "fallback path diverged")
-    assert(inArray == rows(1 << 20, reuse = false), "persist changed rows")
+    val inArray = rows(1 << 20)
+    assert(inArray == rows(0), "fallback path diverged")
     assert(inArray.nonEmpty)
     // a basket whose every item is infrequent ("q") must vanish in both
     assert(!inArray.exists(r => r.contains("q")))
     // the BYTE cap alone must also route to the fallback (row cap
     // permissive, bytes tiny) and stay row-identical
     val byteCapped = TextAnalysis.assocPairs(docs, "text", minSupport = 2L,
-      k = 10, localFrequentMax = 1 << 20, reuseBaskets = false,
-      localFrequentMaxBytes = 1L)
+      k = 10, localFrequentMax = 1 << 20, localFrequentMaxBytes = 1L)
       .collect().map(_.toSeq).toSet
     assert(inArray == byteCapped, "byte-capped fallback diverged")
   }

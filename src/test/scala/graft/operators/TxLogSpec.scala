@@ -98,7 +98,7 @@ class TxLogSpec extends AnyFunSuite {
     assert(TxLog.versions(spark, dir) == Seq(0L, 1L))
     assert(TxLog.snapshot(spark, dir).as[(Long, String)].collect().toSet ==
       Set((1L, "a"), (7L, "w")))
-    val deleted = TxLog.vacuum(spark, dir)
+    val deleted = TxLogMaintenance.vacuum(spark, dir)
     assert(deleted.nonEmpty, "loser's staged files should be orphans for vacuum")
     assert(TxLog.snapshot(spark, dir).as[(Long, String)].collect().toSet ==
       Set((1L, "a"), (7L, "w")))
@@ -119,13 +119,13 @@ class TxLogSpec extends AnyFunSuite {
       s"""{"version":1,"schemaJson":"$schemaJson","add":[],"remove":[]}"""
         .getBytes("UTF-8"))
     out.close()
-    val v = TxLog.appendWithRetry(spark, dir, Seq((3L, "retry")).toDF("id", "s"))
+    val v = TxLogMaintenance.appendWithRetry(spark, dir, Seq((3L, "retry")).toDF("id", "s"))
     assert(v == 2L, s"expected re-target to version 2, got $v")
     assert(TxLog.snapshot(spark, dir).as[(Long, String)].collect().toSet ==
       Set((1L, "a"), (3L, "retry")))
     // a non-race failure is NOT retried: no table -> immediate require
     intercept[IllegalArgumentException](
-      TxLog.appendWithRetry(spark, tmp(), Seq((9L, "x")).toDF("id", "s")))
+      TxLogMaintenance.appendWithRetry(spark, tmp(), Seq((9L, "x")).toDF("id", "s")))
   }
 
   test("orphan data is invisible to snapshots and reclaimed by vacuum") {
@@ -136,13 +136,13 @@ class TxLogSpec extends AnyFunSuite {
       .write.parquet(dir + "/data/c9-deadbeef")
     assert(TxLog.snapshot(spark, dir).as[(Long, String)].collect().toSet ==
       Set((1L, "a"), (2L, "b")), "orphan rows leaked into a snapshot")
-    val deleted = TxLog.vacuum(spark, dir)
+    val deleted = TxLogMaintenance.vacuum(spark, dir)
     assert(deleted.nonEmpty && deleted.forall(_.startsWith("data/c9-deadbeef/")))
     // live data untouched
     assert(TxLog.snapshot(spark, dir).as[(Long, String)].collect().toSet ==
       Set((1L, "a"), (2L, "b")))
     // nothing more to reclaim
-    assert(TxLog.vacuum(spark, dir).isEmpty)
+    assert(TxLogMaintenance.vacuum(spark, dir).isEmpty)
   }
 
   test("vacuum with retention drops files only old versions referenced") {
@@ -151,7 +151,7 @@ class TxLogSpec extends AnyFunSuite {
       spark.range(40).select($"id").repartitionByRange(2, $"id").sortWithinPartitions($"id"))
     TxLog.rewrite(spark, dir, $"id" >= 20L) // drops the low file, rewrites it
     val latestFiles = liveNames(dir, 1L)
-    val deleted = TxLog.vacuum(spark, dir, retain = Some(Seq(1L)))
+    val deleted = TxLogMaintenance.vacuum(spark, dir, retain = Some(Seq(1L)))
     assert(deleted.nonEmpty, "the retracted v0 file should be reclaimed")
     // latest snapshot still reads perfectly
     assert(TxLog.snapshot(spark, dir).as[Long].collect().sorted === (20L until 40L).toArray)
@@ -218,7 +218,7 @@ class TxLogSpec extends AnyFunSuite {
     assert(TxLog.rangeCandidateFiles(spark, dir, 0L, 799L) == liveNames(dir, 4L).size.toLong)
     assert(TxLog.rangeCandidateFiles(spark, dir, 5000L, 6000L) == 0L)
     // retention vacuum then reclaims the 20 fragmented files
-    val deleted = TxLog.vacuum(spark, dir, retain = Some(Seq(4L)))
+    val deleted = TxLogMaintenance.vacuum(spark, dir, retain = Some(Seq(4L)))
     assert(deleted.size == 20)
     assert(TxLog.snapshot(spark, dir).count() == 800L)
   }
@@ -571,7 +571,7 @@ class TxLogSpec extends AnyFunSuite {
     assert(TxLog.snapshot(spark, dir).count() == preCount)
     assert(TxLog.snapshot(spark, dir).as[(Long, Long)].collect().toMap == rows3)
     // retention vacuum reclaims the folded DV sidecars with the old layout
-    val deleted = TxLog.vacuum(spark, dir, retain = Some(Seq(4L)))
+    val deleted = TxLogMaintenance.vacuum(spark, dir, retain = Some(Seq(4L)))
     assert(deleted.exists(_.contains("-dv/")), s"DV sidecars not reclaimed: $deleted")
     assert(TxLog.snapshot(spark, dir).count() == preCount)
   }

@@ -414,7 +414,7 @@ class GeoTiffSpec extends AnyFunSuite {
     val vals = Array.tabulate(w * h)(i => ((i * 31 % 89) / 4.0).toFloat)
     val dir = java.nio.file.Files.createTempDirectory("gtiffbig")
     // single strip: LONG8 offset/count inline in the 8-byte value field
-    GeoTiff.writeBig(dir.resolve("one.tif").toString, w, h, vals, 0.5, 0.25, 3.0, 9.0)
+    GeoTiffFixtures.writeBig(dir.resolve("one.tif").toString, w, h, vals, 0.5, 0.25, 3.0, 9.0)
     val one = java.nio.file.Files.readAllBytes(dir.resolve("one.tif"))
     assert((one(2) & 0xff) == 43 && (one(4) & 0xff) == 8)
     val h1 = GeoTiff.parseHeader(one)
@@ -422,7 +422,7 @@ class GeoTiffSpec extends AnyFunSuite {
     assert(h1.sx == 0.5 && h1.sy == 0.25 && h1.ox == 3.0 && h1.oy == 9.0)
     assert(GeoTiff.cells(one).toSeq.map(_._3) == vals.toSeq.map(_.toDouble))
     // multi-strip: external LONG8 arrays + readParallel segment fan-out
-    GeoTiff.writeBig(dir.resolve("ms.tif").toString, w, h, vals, 1.0, 1.0, 0.0, h.toDouble,
+    GeoTiffFixtures.writeBig(dir.resolve("ms.tif").toString, w, h, vals, 1.0, 1.0, 0.0, h.toDouble,
       rowsPerStrip = 4)
     val ms = java.nio.file.Files.readAllBytes(dir.resolve("ms.tif"))
     val h2 = GeoTiff.parseHeader(ms)
@@ -440,7 +440,7 @@ class GeoTiffSpec extends AnyFunSuite {
     val w = 4; val h = 4
     val vals = Array.fill(w * h)(1.0f)
     val dir = java.nio.file.Files.createTempDirectory("gtiffcorrupt")
-    GeoTiff.writeBig(dir.resolve("c.tif").toString, w, h, vals, 1.0, 1.0, 0.0, h.toDouble)
+    GeoTiffFixtures.writeBig(dir.resolve("c.tif").toString, w, h, vals, 1.0, 1.0, 0.0, h.toDouble)
     val bytes = java.nio.file.Files.readAllBytes(dir.resolve("c.tif"))
     val buf = java.nio.ByteBuffer.wrap(bytes).order(java.nio.ByteOrder.LITTLE_ENDIAN)
     buf.putLong(8, 1L << 40) // first-IFD offset points a TB into nowhere

@@ -34,15 +34,15 @@ class JpegSpec extends AnyFunSuite {
   }
 
   test("Annex K quality tables: 50 = unscaled, fidelity rises and size falls with quality") {
-    assert(Jpeg.qualityTable(50).sameElements(Jpeg.AnnexKLuma), "quality 50 is the base table")
-    assert(Jpeg.qualityTable(100).forall(_ >= 1), "clamped at the legal floor")
-    assert(Jpeg.qualityTable(1).forall(_ <= 255), "clamped at the 8-bit ceiling")
+    assert(JpegFixtures.qualityTable(50).sameElements(JpegFixtures.AnnexKLuma), "quality 50 is the base table")
+    assert(JpegFixtures.qualityTable(100).forall(_ >= 1), "clamped at the legal floor")
+    assert(JpegFixtures.qualityTable(1).forall(_ <= 255), "clamped at the 8-bit ceiling")
     // smooth 2-D gradient — natural-image-ish content where the
     // perceptual tables actually matter
     val w = 48; val h = 32
     val px = Array.tabulate(w * h)(i => ((i % w) * 3 + (i / w) * 4) % 256)
     def roundTrip(q: Int): (Int, Double) = {
-      val bytes = Jpeg.encodeGray(px, w, h, quant = Jpeg.qualityTable(q))
+      val bytes = Jpeg.encodeGray(px, w, h, quant = JpegFixtures.qualityTable(q))
       val (dw, dh, out) = Jpeg.decodeGray(bytes)
       assert(dw == w && dh == h)
       val mae = px.indices.map(i => math.abs((out(i) & 0xff) - px(i))).sum.toDouble / px.length
@@ -54,7 +54,7 @@ class JpegSpec extends AnyFunSuite {
     assert(size10 < size90, s"q10 bytes $size10 must undercut q90 bytes $size90")
     assert(mae90 <= 3.0, s"q90 should be near-faithful on a smooth ramp, mae $mae90")
     // any conformant decoder reads the scaled table from DQT — ours does
-    val malformed = intercept[IllegalArgumentException](Jpeg.qualityTable(0))
+    val malformed = intercept[IllegalArgumentException](JpegFixtures.qualityTable(0))
     assert(malformed.getMessage.contains("quality"))
   }
 
@@ -129,7 +129,7 @@ class JpegSpec extends AnyFunSuite {
       (bc * 60 + br * 30 + seed) % 256
     }
     val (yP, cbP, crP) = (plane(40), plane(90), plane(10))
-    val enc = Jpeg.encodeColor(yP, cbP, crP, w, h, subsample = false)
+    val enc = JpegFixtures.encodeColor(yP, cbP, crP, w, h, subsample = false)
     val img = Jpeg.decodeImage(enc)
     assert(img.planes.length == 3)
     assert(img.planes(0).data.map(_ & 0xff).toSeq == yP.toSeq)
@@ -138,7 +138,7 @@ class JpegSpec extends AnyFunSuite {
     // decodeGray = the Y plane
     assert(Jpeg.decodeGray(enc)._3.map(_ & 0xff).toSeq == yP.toSeq)
     // RGB conversion applies the JFIF formulas to the exact planes
-    val (_, _, rgb) = Jpeg.decodeRgb(enc)
+    val (_, _, rgb) = JpegFixtures.decodeRgb(enc)
     val i0 = 0
     def clamp(v: Double) = math.max(0, math.min(255, math.round(v).toInt))
     assert((rgb(i0 * 3) & 0xff) == clamp(yP(i0) + 1.402 * (crP(i0) - 128)))
@@ -154,7 +154,7 @@ class JpegSpec extends AnyFunSuite {
       (rc * 70 + rr * 50 + seed) % 256
     }
     val (yP, cbP, crP) = (plane(20), plane(120), plane(200))
-    val enc = Jpeg.encodeColor(yP, cbP, crP, w, h, subsample = true)
+    val enc = JpegFixtures.encodeColor(yP, cbP, crP, w, h, subsample = true)
     val img = Jpeg.decodeImage(enc)
     assert(img.planes(0).hs == 2 && img.planes(1).hs == 1)
     assert(img.planes(0).data.map(_ & 0xff).toSeq == yP.toSeq)
@@ -181,7 +181,7 @@ class JpegSpec extends AnyFunSuite {
         (rc * 70 + rr * 50 + seed) % 256
       }
       val (yP, cbP, crP) = (plane(20), plane(120), plane(200))
-      val enc = Jpeg.encodeColorSampled(yP, cbP, crP, w, h, yh, yv)
+      val enc = JpegFixtures.encodeColorSampled(yP, cbP, crP, w, h, yh, yv)
       val img = Jpeg.decodeImage(enc)
       assert(img.planes(0).hs == yh && img.planes(0).vs == yv, s"$yh x $yv")
       assert(img.planes(0).data.map(_ & 0xff).toSeq == yP.toSeq, s"luma $yh x $yv")

@@ -155,13 +155,13 @@ class ShapefileSpec extends AnyFunSuite {
   }
 
   test("F15/S1: UTM-36S shapefile with .prj auto-reprojects to EPSG:4326 within 1e-6°") {
-    import graft.functions.Crs
+    import graft.functions.CrsForward
     // Mozambique-ish lon/lat waypoints, forward-projected into UTM 36S
     // metres exactly as ogr2ogr would receive them; the reader must hand
     // back degrees (`-t_srs EPSG:4326` semantics, base-network.sh:98-99)
     val lonLat = Seq((32.57, -25.97), (33.0, -15.0), (34.7, -11.2))
-    val p36s = Crs.utmZone(36, south = true)
-    val projected = lonLat.map { case (lon, lat) => Crs.tmForward(lon, lat, p36s) }
+    val p36s = CrsForward.utmZone(36, south = true)
+    val projected = lonLat.map { case (lon, lat) => CrsForward.tmForward(lon, lat, p36s) }
     val dir = java.nio.file.Files.createTempDirectory("shp-utm")
     writeShpPoints(dir.resolve("roads.shp"), projected)
     java.nio.file.Files.writeString(
@@ -221,10 +221,10 @@ class ShapefileSpec extends AnyFunSuite {
   }
 
   test("S1 V2: .prj reprojection applies on the V2 path too") {
-    import graft.functions.Crs
+    import graft.functions.CrsForward
     val lonLat = Seq((32.57, -25.97), (33.0, -15.0))
-    val p36s = Crs.utmZone(36, south = true)
-    val projected = lonLat.map { case (lon, lat) => Crs.tmForward(lon, lat, p36s) }
+    val p36s = CrsForward.utmZone(36, south = true)
+    val projected = lonLat.map { case (lon, lat) => CrsForward.tmForward(lon, lat, p36s) }
     val dir = java.nio.file.Files.createTempDirectory("shp-v2-utm")
     writeShpPoints(dir.resolve("roads.shp"), projected)
     java.nio.file.Files.writeString(

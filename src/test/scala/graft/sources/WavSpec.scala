@@ -73,7 +73,7 @@ class WavSpec extends AnyFunSuite {
     // encode→decode: a smooth waveform reconstructs with small error
     val src = Array.tabulate(2000)(i =>
       (8000 * math.sin(i * 0.05) + 2000 * math.sin(i * 0.013)).toShort)
-    val (_, _, back) = Wav.decode(Wav.encodeImaAdpcm(src, 16000))
+    val (_, _, back) = Wav.decode(WavFixtures.encodeImaAdpcm(src, 16000))
     assert(back.length >= src.length && back.length <= src.length + 505)
     val err = src.indices.map(i => math.abs(back(i) - src(i)))
     assert(err.max <= 2000, s"max err ${err.max}") // 4-bit ADPCM tracks a smooth curve
@@ -81,7 +81,7 @@ class WavSpec extends AnyFunSuite {
     // every block header carries the exact predictor sample
     assert(back(0) == src(0))
     // corrupt step index must throw, not walk off the table
-    val enc = Wav.encodeImaAdpcm(src, 16000)
+    val enc = WavFixtures.encodeImaAdpcm(src, 16000)
     val bad = enc.clone()
     bad(60 + 2) = 120.toByte // first block header's index byte (data at 60)
     intercept[Exception](Wav.decode(bad))

@@ -17,11 +17,11 @@ class StreamingSpec extends AnyFunSuite {
       .collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
       .toSet
-    val stateful = EventStreams
+    val stateful = StatefulSessions
       .sessionizeStateful(
         events
           .select(col("event_id"), col("ts"), col("user_id"), col("event_type"), col("value"))
-          .as[EventStreams.Event])
+          .as[StatefulSessions.Event])
       .collect()
       .map(s => (s.user_id, s.n_sessions, s.n_events))
       .toSet
@@ -137,26 +137,26 @@ class StreamingSpec extends AnyFunSuite {
     // recover this, the buffered variant must
     def ts(hhmm: String) = Timestamp.valueOf(s"2024-01-01 $hhmm:00")
     val dir = java.nio.file.Files.createTempDirectory("buffered-sessions").toString
-    def writeBatch(name: String, rows: Seq[EventStreams.Event], mtime: Long): Unit = {
+    def writeBatch(name: String, rows: Seq[StatefulSessions.Event], mtime: Long): Unit = {
       val sub = s"$dir/$name"
       rows.toDS().repartition(1).write.parquet(sub)
       // deterministic file-source pickup order via modification times
       new java.io.File(sub).listFiles().foreach(f => f.setLastModified(mtime))
     }
     writeBatch("a", Seq(
-      EventStreams.Event(1L, ts("10:00"), 1L, "click", 1.0),
-      EventStreams.Event(2L, ts("10:10"), 1L, "click", 1.0)), 1000000L)
+      StatefulSessions.Event(1L, ts("10:00"), 1L, "click", 1.0),
+      StatefulSessions.Event(2L, ts("10:10"), 1L, "click", 1.0)), 1000000L)
     writeBatch("b", Seq(
-      EventStreams.Event(3L, ts("09:00"), 1L, "click", 1.0)), 2000000L)
+      StatefulSessions.Event(3L, ts("09:00"), 1L, "click", 1.0)), 2000000L)
     writeBatch("c", Seq( // watermark pusher: 14:00 − 1h ≫ 10:10 + gap
-      EventStreams.Event(9L, ts("14:00"), 99L, "click", 1.0)), 3000000L)
-    val schema = implicitly[org.apache.spark.sql.Encoder[EventStreams.Event]].schema
+      StatefulSessions.Event(9L, ts("14:00"), 99L, "click", 1.0)), 3000000L)
+    val schema = implicitly[org.apache.spark.sql.Encoder[StatefulSessions.Event]].schema
     val stream = spark.readStream
       .schema(schema)
       .option("maxFilesPerTrigger", 1)
       .parquet(s"$dir/*")
-      .as[EventStreams.Event]
-    val q = EventStreams.sessionizeBuffered(stream, gapSec = 1800).writeStream
+      .as[StatefulSessions.Event]
+    val q = StatefulSessions.sessionizeBuffered(stream, gapSec = 1800).writeStream
       .outputMode("append")
       .format("memory")
       .queryName("buffered_sessions")
@@ -173,7 +173,7 @@ class StreamingSpec extends AnyFunSuite {
     import java.sql.Timestamp
     def ts(hhmm: String) = Timestamp.valueOf(s"2024-01-01 $hhmm:00")
     val dir = java.nio.file.Files.createTempDirectory("buffered-compact").toString
-    def writeBatch(name: String, rows: Seq[EventStreams.Event], mtime: Long): Unit = {
+    def writeBatch(name: String, rows: Seq[StatefulSessions.Event], mtime: Long): Unit = {
       val sub = s"$dir/$name"
       rows.toDS().repartition(1).write.parquet(sub)
       new java.io.File(sub).listFiles().foreach(f => f.setLastModified(mtime))
@@ -184,20 +184,20 @@ class StreamingSpec extends AnyFunSuite {
     // the summary while 10:30 stays buffered; batch C pushes the
     // watermark past 11:00 and times user 1 out.
     writeBatch("a", Seq(
-      EventStreams.Event(1L, ts("09:00"), 1L, "click", 1.0),
-      EventStreams.Event(2L, ts("09:10"), 1L, "click", 1.0),
-      EventStreams.Event(8L, ts("11:00"), 99L, "click", 1.0)), 1000000L)
+      StatefulSessions.Event(1L, ts("09:00"), 1L, "click", 1.0),
+      StatefulSessions.Event(2L, ts("09:10"), 1L, "click", 1.0),
+      StatefulSessions.Event(8L, ts("11:00"), 99L, "click", 1.0)), 1000000L)
     writeBatch("b", Seq(
-      EventStreams.Event(3L, ts("10:30"), 1L, "click", 1.0)), 2000000L)
+      StatefulSessions.Event(3L, ts("10:30"), 1L, "click", 1.0)), 2000000L)
     writeBatch("c", Seq(
-      EventStreams.Event(9L, ts("14:00"), 99L, "click", 1.0)), 3000000L)
-    val schema = implicitly[org.apache.spark.sql.Encoder[EventStreams.Event]].schema
+      StatefulSessions.Event(9L, ts("14:00"), 99L, "click", 1.0)), 3000000L)
+    val schema = implicitly[org.apache.spark.sql.Encoder[StatefulSessions.Event]].schema
     val stream = spark.readStream
       .schema(schema)
       .option("maxFilesPerTrigger", 1)
       .parquet(s"$dir/*")
-      .as[EventStreams.Event]
-    val q = EventStreams.sessionizeBuffered(stream, gapSec = 1800).writeStream
+      .as[StatefulSessions.Event]
+    val q = StatefulSessions.sessionizeBuffered(stream, gapSec = 1800).writeStream
       .outputMode("append")
       .format("memory")
       .queryName("buffered_compact")
@@ -400,141 +400,6 @@ class StreamingSpec extends AnyFunSuite {
       EventStreams.runCmsStream(spark, once.toString, raw.schema, probes = Seq.empty))
   }
 
-  test("streaming near-dup LSH: single batch ≡ batch minHashDedup; cross-batch first-seen-wins") {
-    import spark.implicits._
-    // real corpus slice: 60 docs incl. planted near-dups
-    val corpus = spark.read.parquet("/root/testdata/sf0.01/documents.parquet")
-      .select("doc_id", "text").filter(col("doc_id") < 60)
-    val batchSurvivors = graft.operators.Dedup
-      .minHashDedup(corpus, "doc_id", "text")
-      .select("doc_id").collect().map(_.getLong(0)).toSet
-    val dir = java.nio.file.Files.createTempDirectory("neardup-stream").toString
-    val docsDs = corpus.as[(Long, String)]
-      .map { case (id, t) => EventStreams.StreamDoc(id, t) }
-    docsDs.repartition(1).write.parquet(s"$dir/a")
-    new java.io.File(s"$dir/a").listFiles().foreach(_.setLastModified(1000000L))
-    // batch 2: re-send doc 0's text under a NEW smaller-looking id bucket
-    // (id 1000) plus one genuinely novel doc — first-seen-wins must flag
-    // the re-send dup even though batch ids differ
-    val doc0Text = corpus.filter(col("doc_id") === 0).select("text").first().getString(0)
-    Seq(
-      EventStreams.StreamDoc(1000L, doc0Text),
-      EventStreams.StreamDoc(1001L, "utterly novel zebra quantum paragraph nothing shares these words at all " * 3))
-      .toDS().repartition(1).write.parquet(s"$dir/b")
-    new java.io.File(s"$dir/b").listFiles().foreach(_.setLastModified(2000000L))
-    val schema = implicitly[org.apache.spark.sql.Encoder[EventStreams.StreamDoc]].schema
-    val stream = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(s"$dir/*")
-      .as[EventStreams.StreamDoc]
-    val perBatch = scala.collection.mutable.Map.empty[Long, Set[Long]]
-    val q = EventStreams.nearDupBandVerdicts(stream).writeStream
-      .outputMode("append")
-      .foreachBatch { (df: org.apache.spark.sql.Dataset[EventStreams.BandVerdict], id: Long) =>
-        val s = EventStreams.nearDupSurvivors(df.toDF())
-          .collect().map(_.getLong(0)).toSet
-        if (s.nonEmpty || df.count() > 0) perBatch.synchronized { perBatch(id) = s }
-        ()
-      }
-      .start()
-    q.processAllAvailable()
-    q.stop()
-    val streamed = perBatch.toSeq.sortBy(_._1).map(_._2).filter(_.nonEmpty)
-    assert(streamed.nonEmpty)
-    // batch 1 survivors ≡ the batch operator on the same corpus
-    assert(streamed.head == batchSurvivors,
-      s"single-batch mismatch: ${streamed.head.diff(batchSurvivors)} / ${batchSurvivors.diff(streamed.head)}")
-    // batch 2: the re-sent text is dup (bucket owned since batch 1), the
-    // novel doc survives
-    assert(streamed.last.contains(1001L) && !streamed.last.contains(1000L),
-      s"cross-batch survivors: ${streamed.last}")
-  }
-
-  test("stream-static incremental dedup: corpus hits drop, novel fingerprints exactly once") {
-    import spark.implicits._
-    val corpus = Seq((1L, "alpha beta"), (2L, "gamma delta")).toDF("doc_id", "text")
-    val dir = java.nio.file.Files.createTempDirectory("incdedup-stream").toString
-    Seq(
-      EventStreams.StreamDoc(10L, "ALPHA  beta"), // normalizes into the corpus → drop
-      EventStreams.StreamDoc(11L, "epsilon zeta"), // novel
-      EventStreams.StreamDoc(12L, "epsilon zeta")) // in-batch dup of 11
-      .toDS().repartition(1).write.parquet(s"$dir/a")
-    new java.io.File(s"$dir/a").listFiles().foreach(_.setLastModified(1000000L))
-    Seq(
-      EventStreams.StreamDoc(13L, "epsilon  zeta"), // cross-batch dup → state drops it
-      EventStreams.StreamDoc(14L, "eta theta")) // novel
-      .toDS().repartition(1).write.parquet(s"$dir/b")
-    new java.io.File(s"$dir/b").listFiles().foreach(_.setLastModified(2000000L))
-    val schema = implicitly[org.apache.spark.sql.Encoder[EventStreams.StreamDoc]].schema
-    val stream = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(s"$dir/*")
-    val perBatch = scala.collection.mutable.Map.empty[Long, Set[Long]]
-    val q = EventStreams.incrementalDedupStream(stream, corpus, "text").writeStream
-      .outputMode("append")
-      .foreachBatch { (df: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], id: Long) =>
-        val s = df.select("doc_id").collect().map(_.getLong(0)).toSet
-        if (s.nonEmpty) perBatch.synchronized { perBatch(id) = s }
-        ()
-      }
-      .start()
-    q.processAllAvailable()
-    q.stop()
-    val batches = perBatch.toSeq.sortBy(_._1).map(_._2)
-    assert(batches.size == 2, s"expected survivors in both batches: $perBatch")
-    // batch 1: corpus hit (10) gone, exactly ONE of the in-batch twins
-    assert(batches.head.subsetOf(Set(11L, 12L)) && batches.head.size == 1, s"batch 1: ${batches.head}")
-    // batch 2: 13 is a cross-batch dup (state), 14 survives
-    assert(batches.last == Set(14L), s"batch 2: ${batches.last}")
-  }
-
-  test("streaming near-dup TTL: dup within horizon, forgotten (survives) past it") {
-    import spark.implicits._
-    import java.sql.Timestamp
-    def ts(t: String) = Timestamp.valueOf(
-      s"2024-01-01 $t" + (if (t.count(_ == ':') == 1) ":00" else ""))
-    val text = "a highly distinctive crawl page body with many stable words " * 3
-    val dir = java.nio.file.Files.createTempDirectory("neardup-ttl").toString
-    def writeBatch(name: String, rows: Seq[EventStreams.StreamDocTs], mtime: Long): Unit = {
-      val sub = s"$dir/$name"
-      rows.toDS().repartition(1).write.parquet(sub)
-      new java.io.File(sub).listFiles().foreach(_.setLastModified(mtime))
-    }
-    // ttl 600 s: batch B re-sends within the horizon (dup), batch C
-    // pushes the watermark far past lastSeen + ttl (bucket expires),
-    // batch D re-sends after expiry (survives)
-    writeBatch("a", Seq(EventStreams.StreamDocTs(1L, text, ts("10:00"))), 1000000L)
-    writeBatch("b", Seq(EventStreams.StreamDocTs(2L, text, ts("10:05"))), 2000000L)
-    writeBatch("c", Seq(EventStreams.StreamDocTs(3L, "completely unrelated watermark pusher content zebra", ts("14:00"))), 3000000L)
-    // watermark computation lags one batch AND a key's timeout only
-    // fires in a batch where that key receives NO data — c2 is the batch
-    // where the 13:50 watermark takes effect and doc-1's idle buckets
-    // (timeout 10:15) actually expire
-    writeBatch("c2", Seq(EventStreams.StreamDocTs(5L, "another unrelated quokka pusher wholly different", ts("14:00:30"))), 4000000L)
-    writeBatch("d", Seq(EventStreams.StreamDocTs(4L, text, ts("14:01"))), 5000000L)
-    val schema = implicitly[org.apache.spark.sql.Encoder[EventStreams.StreamDocTs]].schema
-    val stream = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(s"$dir/*")
-      .as[EventStreams.StreamDocTs]
-    val survivors = scala.collection.mutable.ArrayBuffer.empty[Set[Long]]
-    val q = EventStreams.nearDupBandVerdictsTtl(stream, ttlSec = 600).writeStream
-      .outputMode("append")
-      .foreachBatch { (df: org.apache.spark.sql.Dataset[EventStreams.BandVerdict], _: Long) =>
-        val s = EventStreams.nearDupSurvivors(df.toDF()).collect().map(_.getLong(0)).toSet
-        survivors.synchronized { if (s.nonEmpty) survivors += s }
-        ()
-      }
-      .start()
-    q.processAllAvailable()
-    q.stop()
-    val all = survivors.reduceOption(_ ++ _).getOrElse(Set.empty)
-    assert(all.contains(1L), s"first sighting must survive: $all")
-    assert(!all.contains(2L), s"re-send inside the TTL horizon must be flagged: $all")
-    assert(all.contains(4L), s"re-send AFTER bucket expiry must survive (weakened contract): $all")
-    assert(all.contains(3L))
-  }
-
   test("streaming dedup drops duplicate event ids within the watermark") {
     val raw = Tables.events(spark, sfDir)
     val dir = java.nio.file.Files.createTempDirectory("events-dedup")
@@ -631,8 +496,6 @@ class StreamingSpec extends AnyFunSuite {
     assert(feats(1L) == 0L && feats(2L) == 3L)
     val frames = Multimodal.sampleFrames(media, everyK = 1, frameBytes = 2).collect()
     assert(frames.count(_.getLong(0) == 1L) == 1) // one empty frame
-    val resized = Multimodal.resizeStub(media, 2).collect().map(m => m.media_id -> m.bytes.length).toMap
-    assert(resized(1L) == 0 && resized(2L) == 1)
   }
 
   test("stream-stream interval join equals the batch equivalent") {
@@ -756,19 +619,6 @@ class StreamingSpec extends AnyFunSuite {
     } finally spark.conf.set("spark.sql.shuffle.partitions", prevShuffle)
   }
 
-  test("multimodal: resize halves metadata and payload in lockstep") {
-    import spark.implicits._
-    val media = graft.multimodal.Multimodal.mediaFromDocuments(spark, Tables.documents(spark, sfDir))
-    val resized = graft.multimodal.Multimodal.resizeStub(media, factor = 2).collect()
-    val orig = media.collect().map(m => m.media_id -> m).toMap
-    resized.foreach { m =>
-      val o = orig(m.media_id)
-      assert(m.meta.width == o.meta.width / 2 && m.meta.height == o.meta.height / 2)
-      assert(m.bytes.length == (o.bytes.length + 3) / 4)
-      if (o.bytes.nonEmpty) assert(m.bytes(0) == o.bytes(0)) // deterministic subsample
-    }
-  }
-
   test("multimodal: frame sampling multiplies rows by payload size") {
     import spark.implicits._
     val media = graft.multimodal.Multimodal.mediaFromDocuments(spark, Tables.documents(spark, sfDir))
@@ -852,124 +702,4 @@ class StreamingSpec extends AnyFunSuite {
     assert(math.abs(f.byte_entropy - 1.0) < 1e-12) // two equally likely values
     assert(f.n_bytes == jpeg.length)
   }
-
-  test("streaming media: decoded running aggregate equals the batch form over all batches") {
-    import spark.implicits._
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    import graft.multimodal.Multimodal
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    def wavClip(id: Long, rate: Int): Multimodal.Media = {
-      val samples = Array.tabulate(256)(i => (((i * 31 + id * 7) % 4096) - 2048).toShort)
-      Multimodal.Media(id, Multimodal.MediaMeta("audio", 0, 0, rate),
-        graft.sources.Wav.encodeMono16(samples, rate))
-    }
-    def flacClip(id: Long, rate: Int): Multimodal.Media = {
-      val samples = Array.tabulate(300)(i => (1000 * math.sin(i * 0.1 + id)).toShort)
-      Multimodal.Media(id, Multimodal.MediaMeta("audio", 0, 0, rate),
-        graft.sources.Flac.encodeMono16(samples, rate))
-    }
-    val batch1 = Seq(wavClip(1, 8000), wavClip(2, 16000), flacClip(3, 16000))
-    val batch2 = Seq(flacClip(4, 8000), wavClip(5, 16000),
-      Multimodal.Media(6, Multimodal.MediaMeta("audio", 0, 0, 0), "not audio".getBytes))
-    val in = MemoryStream[Multimodal.Media]
-    val q = MediaStream.audioQualityByRate(in.toDS())
-      .writeStream.outputMode("update").format("memory").queryName("media_agg").start()
-    try {
-      in.addData(batch1)
-      q.processAllAvailable()
-      in.addData(batch2)
-      q.processAllAvailable()
-      // latest update per rate == the batch aggregate over ALL clips
-      val streamed = spark.sql("SELECT * FROM media_agg").collect()
-        .map(r => r.getInt(0) -> (r.getLong(1), r.getLong(2), r.getDouble(3)))
-        .groupBy(_._1).map { case (k, vs) => k -> vs.maxBy(_._2._1)._2 } // latest = most clips
-      val expect = MediaStream.audioQualityByRate((batch1 ++ batch2).toDS())
-        .collect().map(r => r.getInt(0) -> (r.getLong(1), r.getLong(2), r.getDouble(3))).toMap
-      assert(streamed == expect)
-      // the corrupt payload landed as the zero-sample row (rate 0), not a crash
-      assert(expect.contains(0) && expect(0)._2 == 0L)
-    } finally q.stop()
-  }
-
-  test("streaming EAUL: per-batch recompute equals the batch sweep on folded stats") {
-    import spark.implicits._
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val (g, od) = graft.graph.DemoNetwork.grid(6) // the qg3 network — non-degenerate EAUL
-    val stats0 = graft.graph.DemoNetwork.floodStats(g)
-    val traffic = graft.graph.DemoNetwork.yearlyTraffic(od.length)
-    def table(df: org.apache.spark.sql.DataFrame): Map[(String, String), Double] =
-      df.collect().map(r => (r.getString(0), r.getString(1)) -> r.getDouble(2)).toMap
-
-    val in = MemoryStream[EaulStream.DepthUpdate]
-    val results = scala.collection.mutable.Map.empty[Long, Map[(String, String), Double]]
-    val q = EaulStream.recompute(in.toDS(), g, stats0, od, traffic, Set.empty) {
-      (id, df) => results(id) = table(df)
-    }
-    try {
-      // batch 0: no revisions -> identical to the plain batch sweep
-      in.addData(Seq.empty[EaulStream.DepthUpdate])
-      q.processAllAvailable()
-      assert(results(0) == table(graft.graph.Eaul.sweep(spark, g, stats0, od, traffic, Set.empty)))
-      // batch 1: flood a previously-dry way; streaming result must equal
-      // the batch sweep over the SAME folded stats
-      val revs = Seq(
-        // ARRIVAL order deliberately disagrees with seq order: the stale
-        // depth (seq=1) arrives last and must still lose
-        EaulStream.DepthUpdate(g.ways(1).name, 500, 2.0, 50.0, seq = 2L),
-        EaulStream.DepthUpdate(g.ways(1).name, 1000, 2.5, 100.0, seq = 3L),
-        EaulStream.DepthUpdate(g.ways(1).name, 500, 9.9, 1.0, seq = 1L))
-      in.addData(revs)
-      q.processAllAvailable()
-      val folded = EaulStream.fold(stats0, revs)
-      assert(folded.depth(g.ways(1).name)(500) == 2.0) // seq wins, not arrival
-      assert(results(1) == table(graft.graph.Eaul.sweep(spark, g, folded, od, traffic, Set.empty)))
-      // the revision actually changed the answer (not a vacuous identity)
-      assert(results(0) != results(1))
-    } finally q.stop()
-  }
-  test("qe14 observability: state metrics expose join buffering and watermark eviction") {
-    import spark.implicits._
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext =
-      spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession].sqlContext
-    // (event_id, event_type, user_id, sec, value)
-    val mem = MemoryStream[(Long, String, Long, Long, Double)]
-    val events = mem.toDF()
-      .toDF("event_id", "event_type", "user_id", "sec", "value")
-      .withColumn("ts", timestamp_seconds($"sec"))
-      .drop("sec")
-    val joined = EventStreams.clickToPurchaseJoin(events, windowSec = 3600)
-      .observe("qe14", count(lit(1)).as("rows"))
-    val q = joined.writeStream.outputMode("append")
-      .format("memory").queryName("qe14_obs").start()
-    try {
-      // batch 0: one converting click, one dangling click, one purchase
-      mem.addData((1L, "click", 1L, 100L, 0.0), (2L, "click", 2L, 100L, 0.0),
-        (3L, "purchase", 1L, 200L, 5.0))
-      q.processAllAvailable()
-      // batch 1 + 2: sentinels on BOTH sides push the min-watermark past
-      // click_ts + window + delay, so batch 2 evicts batch 0's state
-      mem.addData((90L, "click", 999L, 11000L, 0.0), (91L, "purchase", 997L, 11000L, 0.0))
-      q.processAllAvailable()
-      mem.addData((92L, "click", 999L, 12000L, 0.0), (93L, "purchase", 998L, 12000L, 0.0))
-      q.processAllAvailable()
-
-      val sm = EventStreams.stateMetrics(q)
-      assert(sm.nonEmpty, "no state metrics harvested")
-      val rowsByBatch = sm.groupBy(_.batchId).view.mapValues(_.map(_.stateRows).sum).toMap
-      val peak = rowsByBatch.values.max
-      val last = rowsByBatch(rowsByBatch.keys.max)
-      // batch 0 buffers the 3 unexpired rows; eviction later shrinks state
-      assert(peak >= 3L, s"peak state rows $peak, history $rowsByBatch")
-      assert(last < peak, s"watermark never evicted: $rowsByBatch")
-      // the watermark surfaced in the metrics advanced past epoch 0
-      assert(sm.exists(_.watermark.exists(_ > "1970-01-01T01:00:00")))
-      // observed per-batch counters: exactly the one converting pair emitted
-      val om = EventStreams.observedMetrics(q, "qe14")
-      assert(om.nonEmpty && om.values.map(_.getLong(0)).sum == 1L,
-        s"observed rows ${om.view.mapValues(_.toString).toMap}")
-    } finally q.stop()
-  }
-
 }

@@ -11,6 +11,9 @@
 # reflection or from outside the repo is listed. Overrides are skipped
 # (a supertype reaches them), and so are private and protected defs.
 #
+# A deletion can orphan the helpers only the deleted def called, so after
+# deleting, re-run it until the no-argument list is empty.
+#
 # Usage: tools/unreached_defs.sh [dir...]   (dirs relative to the repo root)
 set -eu
 cd "$(dirname "$0")/.."

@@ -5,6 +5,7 @@ import graft.operators.{Dedup, Relational, Similarity}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.OutputMode
 
 /** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
   *
@@ -70,6 +71,16 @@ object SparkEntry {
   // ---------------------------------------------------------------- helpers
   private def t(spark: SparkSession, dir: String, name: String): DataFrame =
     Tables.load(spark, dir, name)
+
+  /** The orders-residue graph most graph gates run on: one edge
+    * (x = o_custkey % mod, y = o_orderkey % mod) per order whose key is
+    * a multiple of `every`. Each gate's oracle SQL replays the same
+    * projection.
+    */
+  private def ordersGraph(spark: SparkSession, dir: String, every: Int, mod: Int): DataFrame =
+    t(spark, dir, "orders")
+      .filter(col("o_orderkey") % every === 0)
+      .select((col("o_custkey") % mod).as("x"), (col("o_orderkey") % mod).as("y"))
 
   private val ShufflePartitions = "spark.sql.shuffle.partitions"
   private val NoDataBatches = "spark.sql.streaming.noDataMicroBatches.enabled"
@@ -294,13 +305,12 @@ object SparkEntry {
     maxUsCache.computeIfAbsent(dir, d =>
       events(spark, d).agg(max(unix_micros(col("ts")))).first().getLong(0))
 
-  /** Sentinel parquet files, memoized per (gate-kind, dir, n): sentinel
+  /** Sentinel parquet files, memoized per (kind, dir, n): sentinel
     * content is dir-deterministic (memoized maxUs + the physical ts
     * type), so only the FIRST run pays the Spark write job — later runs
     * copy the cached file's bytes into their stage dir (measured
     * ~0.5 s/run of the stream-gate floor by the qe6 phase probe, git
-    * 3e96ab2). The build callback writes one coalesce(1) parquet into
-    * the passed dir.
+    * 3e96ab2).
     */
   private val sentinelCache =
     new java.util.concurrent.ConcurrentHashMap[String, java.nio.file.Path]()
@@ -318,19 +328,54 @@ object SparkEntry {
         finally walk.close()
       } catch { case _: java.io.IOException => () }
     }))
-  private def cachedSentinel(
-      key: String)(build: java.nio.file.Path => Unit): java.nio.file.Path =
-    sentinelCache.computeIfAbsent(key, _ => {
-      val tmp = java.nio.file.Files.createTempDirectory("graft-sent-cache")
-      sentinelDirs.add(tmp)
-      build(tmp)
-      val listed = java.nio.file.Files.list(tmp)
-      val found =
-        try listed.filter(_.toString.endsWith(".parquet")).findFirst()
-        finally listed.close()
-      require(found.isPresent, s"sentinel build produced no parquet in $tmp")
-      found.get()
-    })
+
+  /** Stages watermark sentinels 1 and 2 into a replay's `stage` dir as
+    * `zz_sentinel_<n>.parquet`: `rows(n, us)` gives each file's
+    * (event_id, ts in µs, user_id, event_type) rows, where `us` is
+    * 100 + n days past the last real event. The file carries the staged
+    * schema's EXACT physical ts type (Long ns / NTZ µs / LTZ µs) — a
+    * file-source stream rejects schema drift; the LTZ→NTZ cast is exact
+    * under the UTC session TZ. `kind` names the row shape in the memo.
+    */
+  private def stageSentinels(
+      spark: SparkSession, dir: String, stage: java.nio.file.Path, kind: String)(
+      rows: (Long, Long) => Seq[(Long, Long, Long, String)]): Unit = {
+    import java.nio.file.{Files, StandardCopyOption}
+    val tsType = Tables.schema(spark, dir, "events")("ts").dataType
+    val tsIsLong = tsType == org.apache.spark.sql.types.LongType
+    for (n <- 1L to 2L) {
+      val cached = sentinelCache.computeIfAbsent(s"$kind|$dir|$n", _ => {
+        import spark.implicits._
+        val tmp = Files.createTempDirectory("graft-sent-cache")
+        sentinelDirs.add(tmp)
+        val us = eventsMaxUs(spark, dir) + 86400L * 1000000L * (100 + n)
+        val df = rows(n, us)
+          .map { case (id, tsUs, user, eventType) =>
+            (id, if (tsIsLong) tsUs * 1000 else tsUs, user, eventType, 0.0, "{}")
+          }
+          .toDF("event_id", "ts", "user_id", "event_type", "value", "props")
+        val one =
+          if (tsIsLong) df
+          else df.withColumn("ts", timestamp_micros(col("ts")).cast(tsType))
+        one.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
+        val listed = Files.list(tmp)
+        val found =
+          try listed.filter(_.toString.endsWith(".parquet")).findFirst()
+          finally listed.close()
+        require(found.isPresent, s"sentinel build produced no parquet in $tmp")
+        found.get()
+      })
+      Files.copy(cached, stage.resolve(s"zz_sentinel_$n.parquet"),
+        StandardCopyOption.REPLACE_EXISTING)
+    }
+  }
+
+  /** One click + one purchase per sentinel, on out-of-domain users, so
+    * BOTH sides' watermarks jump past every real event (the global
+    * watermark is their min) — qe13's and qe17's sentinels.
+    */
+  private val clickPurchaseSentinels: (Long, Long) => Seq[(Long, Long, Long, String)] =
+    (n, us) => Seq((-2L * n, us, -1L, "click"), (-2L * n - 1, us + 1000000L, -2L, "purchase"))
 
   /** §2.10 — event-time tumbling window aggregation (batch form of the
     * Structured-Streaming plan; same `window()` expression). Window start
@@ -433,40 +478,8 @@ object SparkEntry {
         col("user_id"),
         col("n_events"))
 
-  /** §2.10 through the ORACLE — a REAL Structured Streaming run inside
-    * the gate: the events parquet is staged into a file-source directory,
-    * `readStream` → watermark → `session_window` (30-min gap) →
-    * **append mode** → `writeStream` into a memory sink. Two far-future
-    * sentinel events (user −1) are dropped into the source dir in two
-    * separate post-drain phases so the watermark passes every real
-    * session and append mode flushes them all — each real session is
-    * emitted exactly once, making the output equal to the BATCH
-    * `session_window` result (qe3's oracle, same SQL replay). Lineage of
-    * this gate's rows therefore includes an actual streaming query, not
-    * a batch twin.
-    */
-  /** Stage the events parquet (file or directory) into a fresh temp dir —
-    * file-source streams need a directory, and the qe6 gate also appends
-    * sentinel files to it. All real files are present before the stream
-    * starts, so batch 1 sees every row with the watermark still at -inf.
-    */
-  private def stageEvents(dir: String): java.nio.file.Path = {
-    import java.nio.file.{Files, Paths, StandardCopyOption}
-    val stage = Files.createTempDirectory("graft-events-src")
-    val src = Paths.get(dir, "events.parquet")
-    if (Files.isDirectory(src)) {
-      Files.list(src).forEach { p =>
-        if (p.toString.endsWith(".parquet"))
-          Files.copy(p, stage.resolve(p.getFileName), StandardCopyOption.REPLACE_EXISTING)
-      }
-    } else Files.copy(src, stage.resolve("events.parquet"))
-    stage
-  }
-
-  /** Recursive best-effort delete of a staging dir. A stream gate calls
-    * it once its query has drained (the memory-sink table is already
-    * materialized); without it every bench run (5× per query) leaks a
-    * full events copy into the temp dir.
+  /** Recursive best-effort delete of a staging dir; without it every
+    * bench run (5× per query) leaks a full events copy into the temp dir.
     */
   private def rmTree(root: java.nio.file.Path): Unit = {
     import java.nio.file.{Files, Path}
@@ -494,114 +507,124 @@ object SparkEntry {
     } finally rmTree(dir)
   }
 
-  private def qe6StreamSessions(spark: SparkSession, dir: String): DataFrame = {
-    import java.nio.file.{Files, StandardCopyOption}
-    val stage = stageEvents(dir)
-    val schema = Tables.schema(spark, dir, "events")
-    val tsType = schema("ts").dataType
-    val tsIsLong = tsType == org.apache.spark.sql.types.LongType
-    val maxUs = eventsMaxUs(spark, dir)
-    def sentinel(n: Int): Unit = {
-      val src = cachedSentinel(s"qe6|$dir|$n") { tmp =>
-        import spark.implicits._
-        val us = maxUs + 86400L * 1000000L * (100 + n)
-        val df = Seq((-1L * n, if (tsIsLong) us * 1000 else us, -1L, "s", 0.0, "{}"))
-          .toDF("event_id", "ts", "user_id", "event_type", "value", "props")
-        // the sentinel file must carry the staged schema's EXACT physical
-        // ts type (Long ns / NTZ µs / LTZ µs) — a file-source stream
-        // rejects schema drift; LTZ→NTZ cast is exact under the UTC
-        // session TZ
-        val one =
-          if (tsIsLong) df
-          else df.withColumn("ts", timestamp_micros(col("ts")).cast(tsType))
-        one.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-      }
-      Files.copy(src, stage.resolve(s"zz_sentinel_$n.parquet"),
-        StandardCopyOption.REPLACE_EXISTING)
-    }
-    val stream = spark.readStream.schema(schema).parquet(stage.toString)
-    val ev = Tables.normalizeTs(stream)
-    val name = s"qe6_mem_${System.nanoTime()}"
+  /** The bounded replay behind every stream gate: the events parquet
+    * (file or directory) is copied into a fresh `graft-events-src` dir
+    * (file-source streams need a directory), and `body` gets that dir
+    * and the [[Tables.normalizeTs]] file stream over it. The stream
+    * lists the dir only when its query starts, so the body may add
+    * files first (duplicates, sentinels); the real files are all there
+    * before, so batch 1 sees every row with the watermark still at
+    * -inf. `conf` holds for the body — a streaming query pins its
+    * confs when it starts — and `oneFilePerTrigger` makes each staged
+    * file its own micro-batch. The dir is deleted when the body returns
+    * or throws, staging included, so the body's result must not read it
+    * lazily ([[streaming.EventStreams.drain]] materializes its rows).
+    */
+  private def replayEvents(
+      spark: SparkSession,
+      dir: String,
+      conf: Seq[(String, String)] = Nil,
+      oneFilePerTrigger: Boolean = false)(
+      body: (java.nio.file.Path, DataFrame) => DataFrame): DataFrame = {
+    import java.nio.file.{Files, Paths, StandardCopyOption}
+    val stage = Files.createTempDirectory("graft-events-src")
+    try {
+      val src = Paths.get(dir, "events.parquet")
+      if (Files.isDirectory(src)) {
+        val ls = Files.list(src)
+        try ls.forEach { p =>
+          if (p.toString.endsWith(".parquet"))
+            Files.copy(p, stage.resolve(p.getFileName), StandardCopyOption.REPLACE_EXISTING)
+        } finally ls.close()
+      } else Files.copy(src, stage.resolve("events.parquet"))
+      val reader = spark.readStream.schema(Tables.schema(spark, dir, "events"))
+      val files = if (oneFilePerTrigger) reader.option("maxFilesPerTrigger", 1) else reader
+      val stream = Tables.normalizeTs(files.parquet(stage.toString))
+      withConf(spark, conf: _*)(body(stage, stream))
+    } finally rmTree(stage)
+  }
+
+  /** The click-to-purchase interval join ([[streaming.EventStreams
+    * .clickToPurchaseJoin]], 10-minute window) drained from a replay:
+    * the join family qe7, qe13, qe17 and qe18 gate.
+    */
+  private def drainClickPurchase(
+      ev: DataFrame, joinType: String = "inner", preWatermarked: Boolean = false): DataFrame =
+    streaming.EventStreams.drain(
+      streaming.EventStreams
+        .clickToPurchaseJoin(ev, windowSec = 600, joinType = joinType,
+          preWatermarked = preWatermarked)
+        .select(
+          col("click_id"), col("user_id"), col("purchase_id"),
+          round(col("value"), 2).as("value")),
+      OutputMode.Append)
+
+  /** §2.10 through the ORACLE — a REAL Structured Streaming run inside
+    * the gate: the replayed events go through a watermark →
+    * `session_window` (30-min gap) → **append mode** → memory sink. Two
+    * far-future sentinel events (user −1) are staged with the data so
+    * the watermark passes every real session and append mode flushes
+    * them all — each real session is emitted exactly once, making the
+    * output equal to the BATCH `session_window` result (qe3's oracle,
+    * same SQL replay). Lineage of this gate's rows therefore includes an
+    * actual streaming query, not a batch twin.
+    */
+  private def qe6StreamSessions(spark: SparkSession, dir: String): DataFrame =
     // a streaming query pins shuffle.partitions at start; 2 state-store
     // partitions instead of 32 cuts the per-batch checkpoint-file fan-out
     // (3 batches × partitions HDFS-state files) that dominates this
-    // gate's wall time on local data volumes — restored after the run.
+    // gate's wall time on local data volumes.
     // qe6 phase probe (r17, git 3e96ab2): 8 → 2 takes another ~0.5 s
     // off both batches (state is ~95 k session rows — 48 k/partition is
     // nowhere near memory pressure)
-    // NO sentinel filter inside the streaming plan: Catalyst pushes a
-    // user_id predicate below the EventTimeWatermark node, and filtered
-    // sentinel rows then never advance the watermark (caught live: the 7
-    // final sessions of the gate data stayed open forever). Sentinels
-    // flow through the full plan and their session rows are excluded from
-    // the memory-sink TABLE afterwards.
-    // sentinels are staged BEFORE the query starts: the watermark is 0
-    // throughout the initial batch (no state evicts inside it), advances
-    // past every real session when the batch commits, and the engine's
-    // no-data micro-batch (run exactly because the watermark moved)
-    // flushes the closed sessions — same cross-batch eviction semantics
-    // as the old drain-sentinel-drain loop at a third of the micro-batch
-    // count (the gate's wall cost is batches, not rows; the multi-batch
-    // state path itself is pinned by StreamingSpec on MemoryStreams)
-    sentinel(1)
-    sentinel(2)
-    try withConf(spark, ShufflePartitions -> "2") {
-      val q = ev
-        .withWatermark("ts", "1 second")
-        .groupBy(session_window(col("ts"), "30 minutes").as("w"), col("user_id"))
-        .agg(count(lit(1)).as("n_events"))
-        .select(
-          unix_timestamp(col("w.start")).as("session_start"),
-          col("user_id"),
-          col("n_events"))
-        .writeStream
-        .outputMode("append")
-        .format("memory")
-        .queryName(name)
-        .start()
-      // data batch + watermark-advance flush batch
-      try q.processAllAvailable() finally q.stop()
-    } finally rmTree(stage)
-    streaming.EventStreams.drainMemorySink(spark, name).filter(col("user_id") >= 0)
-  }
+    replayEvents(spark, dir, Seq(ShufflePartitions -> "2")) { (stage, ev) =>
+      // sentinels are staged BEFORE the query starts: the watermark is 0
+      // throughout the initial batch (no state evicts inside it), advances
+      // past every real session when the batch commits, and the engine's
+      // no-data micro-batch (run exactly because the watermark moved)
+      // flushes the closed sessions — same cross-batch eviction semantics
+      // as the old drain-sentinel-drain loop at a third of the micro-batch
+      // count (the gate's wall cost is batches, not rows; the multi-batch
+      // state path itself is pinned by StreamingSpec on MemoryStreams)
+      stageSentinels(spark, dir, stage, "qe6")((n, us) => Seq((-n, us, -1L, "s")))
+      // NO sentinel filter inside the streaming plan: Catalyst pushes a
+      // user_id predicate below the EventTimeWatermark node, and filtered
+      // sentinel rows then never advance the watermark (caught live: the 7
+      // final sessions of the gate data stayed open forever). Sentinels
+      // flow through the full plan and their session rows are excluded from
+      // the drained table afterwards.
+      streaming.EventStreams.drain(
+        ev.withWatermark("ts", "1 second")
+          .groupBy(session_window(col("ts"), "30 minutes").as("w"), col("user_id"))
+          .agg(count(lit(1)).as("n_events"))
+          .select(
+            unix_timestamp(col("w.start")).as("session_start"),
+            col("user_id"),
+            col("n_events")),
+        OutputMode.Append)
+    }.filter(col("user_id") >= 0)
 
   /** §2.10 through the ORACLE, part 2 — a REAL stream-stream interval
     * join inside the gate ([[streaming.EventStreams.clickToPurchaseJoin]]):
-    * the events parquet is staged into a file-source dir and read as TWO
-    * watermarked streams (clicks / purchases) joined on user within a
-    * 10-minute window after the click. Inner stream-stream joins emit
-    * matches EAGERLY (the watermark only bounds join state, it doesn't
-    * gate emission), so a bounded replay needs no sentinels — one
-    * `processAllAvailable` drain yields every matched pair. Lineage of
-    * this gate's rows therefore includes an actual stream-stream join,
-    * the shape qe4 only exercises in batch form. The query runs with
-    * no-data micro-batches off: with every match emitted in its data
-    * batch, the trailing no-data batch would only evict join state.
+    * the replayed events are read as TWO watermarked streams (clicks /
+    * purchases) joined on user within a 10-minute window after the
+    * click. Inner stream-stream joins emit matches EAGERLY (the
+    * watermark only bounds join state, it doesn't gate emission), so a
+    * bounded replay needs no sentinels — one drain yields every matched
+    * pair. Lineage of this gate's rows therefore includes an actual
+    * stream-stream join, the shape qe4 only exercises in batch form. The
+    * query runs with no-data micro-batches off: with every match emitted
+    * in its data batch, the trailing no-data batch would only evict join
+    * state.
     */
-  private def qe7StreamJoin(spark: SparkSession, dir: String): DataFrame = {
-    val stage = stageEvents(dir)
-    val schema = Tables.schema(spark, dir, "events")
+  private def qe7StreamJoin(spark: SparkSession, dir: String): DataFrame =
     // stream-stream joins keep FOUR state stores per partition (both
     // sides × key/index maps), so per-partition checkpoint fan-out costs
     // 4× qe6's; 2 partitions suffice for the gate volumes (the state is
-    // per-user rows within a 10-min horizon). Restored after the run.
-    val name = s"qe7_mem_${System.nanoTime()}"
-    val ev = Tables.normalizeTs(spark.readStream.schema(schema).parquet(stage.toString))
-    try withConf(spark, ShufflePartitions -> "2", NoDataBatches -> "false") {
-      val q = streaming.EventStreams
-        .clickToPurchaseJoin(ev, windowSec = 600)
-        .select(
-          col("click_id"), col("user_id"), col("purchase_id"),
-          round(col("value"), 2).as("value"))
-        .writeStream
-        .outputMode("append")
-        .format("memory")
-        .queryName(name)
-        .start()
-      try q.processAllAvailable() finally q.stop()
-    } finally rmTree(stage)
-    streaming.EventStreams.drainMemorySink(spark, name)
-  }
+    // per-user rows within a 10-min horizon)
+    replayEvents(spark, dir, Seq(ShufflePartitions -> "2", NoDataBatches -> "false")) {
+      (_, ev) => drainClickPurchase(ev)
+    }
 
   /** CHAINED STATEFUL STREAMING — watermarked dedup feeding a
     * stream-stream interval join in ONE query (two stateful operators
@@ -625,42 +648,27 @@ object SparkEntry {
     * a small delay; the big one here only pins state for the ~10k-row
     * staged replay.)
     */
-  private def qe18StreamDedupJoin(spark: SparkSession, dir: String): DataFrame = {
-    import java.nio.file.{Files, StandardCopyOption}
-    val stage = stageEvents(dir)
-    val schema = Tables.schema(spark, dir, "events")
-    // inject byte-identical duplicates as a LATER file (newer mtime ⇒
-    // later micro-batch under maxFilesPerTrigger=1)
-    val dups = spark.read.parquet(stage.toString).filter(col("event_id") % 5 === 0)
-    val tmp = Files.createTempDirectory("graft-qe18-dup")
-    dups.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-    Files.list(tmp).forEach { p =>
-      if (p.toString.endsWith(".parquet"))
-        Files.move(p, stage.resolve(s"zz_dup_${p.getFileName}"),
-          StandardCopyOption.REPLACE_EXISTING)
+  private def qe18StreamDedupJoin(spark: SparkSession, dir: String): DataFrame =
+    replayEvents(spark, dir, Seq(ShufflePartitions -> "2"), oneFilePerTrigger = true) {
+      (stage, ev) =>
+        import java.nio.file.{Files, StandardCopyOption}
+        // inject byte-identical duplicates as a LATER file (newer mtime ⇒
+        // later micro-batch under maxFilesPerTrigger=1)
+        val dups = spark.read.parquet(stage.toString).filter(col("event_id") % 5 === 0)
+        val tmp = Files.createTempDirectory("graft-qe18-dup")
+        try {
+          dups.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
+          val ls = Files.list(tmp)
+          try ls.forEach { p =>
+            if (p.toString.endsWith(".parquet"))
+              Files.move(p, stage.resolve(s"zz_dup_${p.getFileName}"),
+                StandardCopyOption.REPLACE_EXISTING)
+          } finally ls.close()
+        } finally rmTree(tmp)
+        drainClickPurchase(
+          ev.withWatermark("ts", "45 days").dropDuplicatesWithinWatermark("event_id"),
+          preWatermarked = true)
     }
-    rmTree(tmp)
-    val name = s"qe18_mem_${System.nanoTime()}"
-    val ev = Tables.normalizeTs(
-      spark.readStream.schema(schema).option("maxFilesPerTrigger", 1)
-        .parquet(stage.toString))
-      .withWatermark("ts", "45 days")
-      .dropDuplicatesWithinWatermark("event_id")
-    try withConf(spark, ShufflePartitions -> "2") {
-      val q = streaming.EventStreams
-        .clickToPurchaseJoin(ev, windowSec = 600, preWatermarked = true)
-        .select(
-          col("click_id"), col("user_id"), col("purchase_id"),
-          round(col("value"), 2).as("value"))
-        .writeStream
-        .outputMode("append")
-        .format("memory")
-        .queryName(name)
-        .start()
-      try q.processAllAvailable() finally q.stop()
-    } finally rmTree(stage)
-    streaming.EventStreams.drainMemorySink(spark, name)
-  }
 
   /** §2.10 through the ORACLE, part 6 — the stream-stream LEFT OUTER
     * interval join ([[streaming.EventStreams.clickToPurchaseJoin]] with
@@ -677,58 +685,16 @@ object SparkEntry {
     * eager null (emitted before the window closed) all break the
     * compare.
     */
-  private def qe13StreamLeftJoin(spark: SparkSession, dir: String): DataFrame = {
-    import java.nio.file.{Files, StandardCopyOption}
-    val stage = stageEvents(dir)
-    val schema = Tables.schema(spark, dir, "events")
-    val tsType = schema("ts").dataType
-    val tsIsLong = tsType == org.apache.spark.sql.types.LongType
-    val maxUs = eventsMaxUs(spark, dir)
-    def sentinel(n: Int): Unit = {
-      // cache key shared with qe17 — identical click+purchase content
-      val src = cachedSentinel(s"cp|$dir|$n") { tmp =>
-        import spark.implicits._
-        val us = maxUs + 86400L * 1000000L * (100 + n)
-        // one click + one purchase, both on out-of-domain users, so BOTH
-        // sides' watermarks jump past every real event
-        val df = Seq(
-          (-2L * n, if (tsIsLong) us * 1000 else us, -1L, "click", 0.0, "{}"),
-          (-2L * n - 1, if (tsIsLong) (us + 1000000L) * 1000 else us + 1000000L,
-            -2L, "purchase", 0.0, "{}"))
-          .toDF("event_id", "ts", "user_id", "event_type", "value", "props")
-        val one =
-          if (tsIsLong) df
-          else df.withColumn("ts", timestamp_micros(col("ts")).cast(tsType))
-        one.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-      }
-      Files.copy(src, stage.resolve(s"zz_sentinel_$n.parquet"),
-        StandardCopyOption.REPLACE_EXISTING)
-    }
-    val name = s"qe13_mem_${System.nanoTime()}"
-    // sentinels staged BEFORE the query: the watermark stays 0 through
-    // the initial batch (matches emit eagerly, nothing evicts), jumps
-    // past every real click window at batch commit, and the engine's
-    // no-data micro-batch flushes the null-padded non-converters — the
-    // same cross-batch eviction at a third of the micro-batch count
-    sentinel(1)
-    sentinel(2)
-    val ev = Tables.normalizeTs(spark.readStream.schema(schema).parquet(stage.toString))
-    try withConf(spark, ShufflePartitions -> "2") {
-      val q = streaming.EventStreams
-        .clickToPurchaseJoin(ev, windowSec = 600, joinType = "left_outer")
-        .select(
-          col("click_id"), col("user_id"), col("purchase_id"),
-          round(col("value"), 2).as("value"))
-        .writeStream
-        .outputMode("append")
-        .format("memory")
-        .queryName(name)
-        .start()
-      // data batch + watermark-advance flush batch
-      try q.processAllAvailable() finally q.stop()
-    } finally rmTree(stage)
-    streaming.EventStreams.drainMemorySink(spark, name).filter(col("user_id") >= 0)
-  }
+  private def qe13StreamLeftJoin(spark: SparkSession, dir: String): DataFrame =
+    replayEvents(spark, dir, Seq(ShufflePartitions -> "2")) { (stage, ev) =>
+      // sentinels staged BEFORE the query: the watermark stays 0 through
+      // the initial batch (matches emit eagerly, nothing evicts), jumps
+      // past every real click window at batch commit, and the engine's
+      // no-data micro-batch flushes the null-padded non-converters — the
+      // same cross-batch eviction at a third of the micro-batch count
+      stageSentinels(spark, dir, stage, "cp")(clickPurchaseSentinels)
+      drainClickPurchase(ev, joinType = "left_outer")
+    }.filter(col("user_id") >= 0)
 
   /** Stream-stream FULL OUTER interval join — completes the join-type
     * family (qe7 inner, qe13 left): BOTH unmatched sides may only emit
@@ -738,52 +704,11 @@ object SparkEntry {
     * the batch FULL JOIN: a lost null row on EITHER side, a duplicate
     * from state re-emission, or an eager null each break the compare.
     */
-  private def qe17StreamFullJoin(spark: SparkSession, dir: String): DataFrame = {
-    import java.nio.file.{Files, StandardCopyOption}
-    val stage = stageEvents(dir)
-    val schema = Tables.schema(spark, dir, "events")
-    val tsType = schema("ts").dataType
-    val tsIsLong = tsType == org.apache.spark.sql.types.LongType
-    val maxUs = eventsMaxUs(spark, dir)
-    def sentinel(n: Int): Unit = {
-      // same cached click+purchase pair as qe13 (identical content)
-      val src = cachedSentinel(s"cp|$dir|$n") { tmp =>
-        import spark.implicits._
-        val us = maxUs + 86400L * 1000000L * (100 + n)
-        val df = Seq(
-          (-2L * n, if (tsIsLong) us * 1000 else us, -1L, "click", 0.0, "{}"),
-          (-2L * n - 1, if (tsIsLong) (us + 1000000L) * 1000 else us + 1000000L,
-            -2L, "purchase", 0.0, "{}"))
-          .toDF("event_id", "ts", "user_id", "event_type", "value", "props")
-        val one =
-          if (tsIsLong) df
-          else df.withColumn("ts", timestamp_micros(col("ts")).cast(tsType))
-        one.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-      }
-      Files.copy(src, stage.resolve(s"zz_sentinel_$n.parquet"),
-        StandardCopyOption.REPLACE_EXISTING)
-    }
-    val name = s"qe17_mem_${System.nanoTime()}"
-    // sentinels staged upfront + single drain — see qe13's rationale
-    sentinel(1)
-    sentinel(2)
-    val ev = Tables.normalizeTs(spark.readStream.schema(schema).parquet(stage.toString))
-    try withConf(spark, ShufflePartitions -> "2") {
-      val q = streaming.EventStreams
-        .clickToPurchaseJoin(ev, windowSec = 600, joinType = "full_outer")
-        .select(
-          col("click_id"), col("user_id"), col("purchase_id"),
-          round(col("value"), 2).as("value"))
-        .writeStream
-        .outputMode("append")
-        .format("memory")
-        .queryName(name)
-        .start()
-      // data batch + watermark-advance flush batch
-      try q.processAllAvailable() finally q.stop()
-    } finally rmTree(stage)
-    streaming.EventStreams.drainMemorySink(spark, name).filter(col("user_id") >= 0)
-  }
+  private def qe17StreamFullJoin(spark: SparkSession, dir: String): DataFrame =
+    replayEvents(spark, dir, Seq(ShufflePartitions -> "2")) { (stage, ev) =>
+      stageSentinels(spark, dir, stage, "cp")(clickPurchaseSentinels)
+      drainClickPurchase(ev, joinType = "full_outer")
+    }.filter(col("user_id") >= 0)
 
   /** §2.10 through the ORACLE, part 5 — the STREAM-STATIC enrich join
     * ([[streaming.EventStreams.enrichStream]]): the events file-stream
@@ -795,30 +720,18 @@ object SparkEntry {
     * windowed agg, sessions, stream-stream join, dedup, stream-static
     * join.
     */
-  private def qe10StreamEnrich(spark: SparkSession, dir: String): DataFrame = {
-    val stage = stageEvents(dir)
-    val schema = Tables.schema(spark, dir, "events")
-    val name = s"qe10_mem_${System.nanoTime()}"
-    val ev = Tables.normalizeTs(spark.readStream.schema(schema).parquet(stage.toString))
-    val dim = t(spark, dir, "customer").select(col("c_custkey"), col("c_mktsegment"))
-    val q = streaming.EventStreams
-      .enrichStream(ev, dim, "user_id", "c_custkey")
-      .select(
-        col("event_id"), col("user_id"),
-        col("c_mktsegment").as("segment"),
-        round(col("value"), 2).as("value"))
-      .writeStream
-      .outputMode("append")
-      .format("memory")
-      .queryName(name)
-      .start()
-    try q.processAllAvailable()
-    finally {
-      q.stop()
-      rmTree(stage)
+  private def qe10StreamEnrich(spark: SparkSession, dir: String): DataFrame =
+    replayEvents(spark, dir) { (_, ev) =>
+      val dim = t(spark, dir, "customer").select(col("c_custkey"), col("c_mktsegment"))
+      streaming.EventStreams.drain(
+        streaming.EventStreams
+          .enrichStream(ev, dim, "user_id", "c_custkey")
+          .select(
+            col("event_id"), col("user_id"),
+            col("c_mktsegment").as("segment"),
+            round(col("value"), 2).as("value")),
+        OutputMode.Append)
     }
-    streaming.EventStreams.drainMemorySink(spark, name)
-  }
 
   /** §2.10 through the ORACLE, part 3 — the REAL watermarked streaming
     * tumbling-window aggregation ([[streaming.EventStreams.runWindowedStream]],
@@ -828,18 +741,12 @@ object SparkEntry {
     * shape a CORRECTNESS row whose lineage includes an actual
     * `writeStream` run, not just a batch twin.
     */
-  private def qe8StreamWindow(spark: SparkSession, dir: String): DataFrame = {
-    val stage = stageEvents(dir)
-    val schema = Tables.schema(spark, dir, "events")
-    val t =
-      try withConf(spark, ShufflePartitions -> "8") {
-        streaming.EventStreams.runWindowedStream(
-          spark, stage.toString, schema, s"qe8_mem_${System.nanoTime()}")
-      } finally rmTree(stage)
-    t.select(
+  private def qe8StreamWindow(spark: SparkSession, dir: String): DataFrame =
+    replayEvents(spark, dir, Seq(ShufflePartitions -> "8")) {
+      (_, ev) => streaming.EventStreams.runWindowedStream(ev)
+    }.select(
       unix_timestamp(col("window_start")).as("window_start"),
       col("event_type"), col("n"), col("value_sum"))
-  }
 
   /** §2.10 through the ORACLE, part 4 — REAL streaming dedup
     * ([[streaming.EventStreams.dedupStream]], `dropDuplicatesWithinWatermark`
@@ -853,36 +760,31 @@ object SparkEntry {
     * micro-batches off: the trailing one would only evict expired state,
     * and one micro-batch drains the whole replay.
     */
-  private def qe9StreamDedup(spark: SparkSession, dir: String): DataFrame = {
-    import java.nio.file.{Files, StandardCopyOption}
-    val stage = stageEvents(dir)
-    // duplicate every staged file under a shifted name: 2× arrival of
-    // every event id, the exactly-once contract under test
-    Files.list(stage).forEach { p =>
-      if (p.toString.endsWith(".parquet"))
-        Files.copy(p, stage.resolve(s"dup_${p.getFileName}"), StandardCopyOption.REPLACE_EXISTING)
-    }
-    val schema = Tables.schema(spark, dir, "events")
-    val name = s"qe9_mem_${System.nanoTime()}"
-    val ev = Tables.normalizeTs(spark.readStream.schema(schema).parquet(stage.toString))
+  private def qe9StreamDedup(spark: SparkSession, dir: String): DataFrame =
     // 2 state-store partitions, the qe6 rationale: the batch's state
     // work fans out per partition (sf0.01, 4 cores: the query drains in
     // 0.87 s at 8 partitions, 0.63 s at 2, medians of 6)
-    try withConf(spark, ShufflePartitions -> "2", NoDataBatches -> "false") {
-      val q = streaming.EventStreams
-        .dedupStream(ev, "event_id")
-        .select(
-          col("event_id"), col("user_id"), col("event_type"),
-          round(col("value"), 2).as("value"))
-        .writeStream
-        .outputMode("append")
-        .format("memory")
-        .queryName(name)
-        .start()
-      try q.processAllAvailable() finally q.stop()
-    } finally rmTree(stage)
-    streaming.EventStreams.drainMemorySink(spark, name)
-  }
+    replayEvents(spark, dir, Seq(ShufflePartitions -> "2", NoDataBatches -> "false")) {
+      (stage, ev) =>
+        import java.nio.file.{Files, StandardCopyOption}
+        // duplicate every staged file under a shifted name: 2× arrival of
+        // every event id, the exactly-once contract under test
+        import scala.jdk.CollectionConverters._
+        val ls = Files.list(stage)
+        val files =
+          try ls.iterator().asScala.filter(_.toString.endsWith(".parquet")).toList
+          finally ls.close()
+        files.foreach { p =>
+          Files.copy(p, stage.resolve(s"dup_${p.getFileName}"), StandardCopyOption.REPLACE_EXISTING)
+        }
+        streaming.EventStreams.drain(
+          streaming.EventStreams
+            .dedupStream(ev, "event_id")
+            .select(
+              col("event_id"), col("user_id"), col("event_type"),
+              round(col("value"), 2).as("value")),
+          OutputMode.Append)
+    }
 
   /** §2.10 through the ORACLE, part 6 — EXACTLY-ONCE FILE SINK
     * ([[streaming.EventStreams.idempotentParquetSink]]): the events
@@ -895,31 +797,18 @@ object SparkEntry {
     * events table exactly once per row (the oracle). The redelivery
     * overwrite contract itself is pinned in StreamingSpec.
     */
-  private def qe11BatchSink(spark: SparkSession, dir: String): DataFrame = {
-    val stage = stageEvents(dir)
-    val out = java.nio.file.Files.createTempDirectory("graft-qe11-out")
-    val ckpt = java.nio.file.Files.createTempDirectory("graft-qe11-ckpt")
-    val schema = Tables.schema(spark, dir, "events")
-    val ev = Tables.normalizeTs(
-      spark.readStream.schema(schema).option("maxFilesPerTrigger", "1")
-        .parquet(stage.toString))
-    val q = streaming.EventStreams.idempotentParquetSink(
-      ev.select(
-        col("event_id"), col("user_id"), col("event_type"),
-        round(col("value"), 2).as("value")),
-      out.toString, ckpt.toString)
-    try q.processAllAvailable()
-    finally {
-      q.stop()
-      rmTree(stage)
+  private def qe11BatchSink(spark: SparkSession, dir: String): DataFrame =
+    staged(spark, "qe11") { tmp =>
+      replayEvents(spark, dir, oneFilePerTrigger = true) { (_, ev) =>
+        val out = tmp.resolve("out").toString
+        streaming.EventStreams.awaitAll(streaming.EventStreams.idempotentParquetSink(
+          ev.select(
+            col("event_id"), col("user_id"), col("event_type"),
+            round(col("value"), 2).as("value")),
+          out, tmp.resolve("ckpt").toString))
+        spark.read.parquet(out).drop("batch_id")
+      }
     }
-    val res = spark.read.parquet(out.toString).drop("batch_id")
-    val rows = res.collect()
-    rmTree(out)
-    rmTree(ckpt)
-    spark.createDataFrame(
-      spark.sparkContext.parallelize(rows.toIndexedSeq, 4), res.schema)
-  }
 
   /** Exactly-once STREAMING INGEST INTO THE TX-LOG TABLE
     * ([[streaming.EventStreams.txLogSink]] over
@@ -933,44 +822,27 @@ object SparkEntry {
     * upgrade of qe11: readers see whole committed versions, never a
     * half-written batch dir.
     */
-  private def qe12StreamTxlog(spark: SparkSession, dir: String): DataFrame = {
-    val stage = stageEvents(dir)
-    val wh = java.nio.file.Files.createTempDirectory("graft-qe12")
-    val ckpt = java.nio.file.Files.createTempDirectory("graft-qe12-ckpt")
-    try {
-      val root = wh.resolve("tbl").toString
-      val schema = Tables.schema(spark, dir, "events")
-      val ev = Tables.normalizeTs(
-        spark.readStream.schema(schema).option("maxFilesPerTrigger", "1")
-          .parquet(stage.toString))
-        .select(
+  private def qe12StreamTxlog(spark: SparkSession, dir: String): DataFrame =
+    staged(spark, "qe12") { tmp =>
+      replayEvents(spark, dir, oneFilePerTrigger = true) { (_, ev) =>
+        val root = tmp.resolve("tbl").toString
+        val rows = ev.select(
           col("event_id"), col("user_id"), col("event_type"),
           round(col("value"), 2).as("value"))
-      val outSchema = ev.schema
-      operators.TxLog.create(
-        spark, root,
-        spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], outSchema))
-      val q = streaming.EventStreams.txLogSink(ev, root, ckpt.toString)
-      try q.processAllAvailable()
-      finally {
-        q.stop()
-        rmTree(stage)
+        operators.TxLog.create(
+          spark, root,
+          spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], rows.schema))
+        streaming.EventStreams.awaitAll(
+          streaming.EventStreams.txLogSink(rows, root, tmp.resolve("ckpt").toString))
+        // redelivery probe: batch 0 arrives again (poison payload) — the
+        // claimed version makes it a no-op; a duplicate would fail the oracle
+        val poison = spark.createDataFrame(
+          spark.sparkContext.parallelize(Seq(
+            org.apache.spark.sql.Row(-999L, -1L, "poison", 0.0)), 1), rows.schema)
+        operators.TxLog.appendStreamBatch(spark, root, poison, batchId = 0L)
+        operators.TxLog.snapshot(spark, root)
       }
-      // redelivery probe: batch 0 arrives again (poison payload) — the
-      // claimed version makes it a no-op; a duplicate would fail the oracle
-      val poison = spark.createDataFrame(
-        spark.sparkContext.parallelize(Seq(
-          org.apache.spark.sql.Row(-999L, -1L, "poison", 0.0)), 1), outSchema)
-      operators.TxLog.appendStreamBatch(spark, root, poison, batchId = 0L)
-      val res = operators.TxLog.snapshot(spark, root)
-      val rows = res.collect()
-      spark.createDataFrame(
-        spark.sparkContext.parallelize(rows.toIndexedSeq, 4), res.schema)
-    } finally {
-      rmTree(wh)
-      rmTree(ckpt)
     }
-  }
 
   /** As-of join — for each click, the user's latest purchase at-or-before
     * it (µs-integer event times; right side pre-deduped per instant).
@@ -1270,9 +1142,7 @@ object SparkEntry {
     * single-row compare, and n_nodes/n_edges pin the canonicalization.
     */
   private def qg10Triangles(spark: SparkSession, dir: String): DataFrame = {
-    val edges = t(spark, dir, "orders")
-      .filter(col("o_orderkey") % 3 === 0)
-      .select((col("o_custkey") % 80).as("x"), (col("o_orderkey") % 80).as("y"))
+    val edges = ordersGraph(spark, dir, 3, 80)
     graph.Triangles.count(edges, "x", "y")
   }
 
@@ -1641,9 +1511,7 @@ object SparkEntry {
     * coef = 2t/(d(d−1)), degree-<2 nodes null.
     */
   private def qg17ClusteringCoef(spark: SparkSession, dir: String): DataFrame = {
-    val edges = t(spark, dir, "orders")
-      .filter(col("o_orderkey") % 3 === 0)
-      .select((col("o_custkey") % 80).as("x"), (col("o_orderkey") % 80).as("y"))
+    val edges = ordersGraph(spark, dir, 3, 80)
     graph.Triangles.perNode(edges, "x", "y")
   }
 
@@ -1757,11 +1625,7 @@ object SparkEntry {
     * per iteration — frontier-style recursion multiplies paths).
     */
   private def qg18Bfs(spark: SparkSession, dir: String): DataFrame = {
-    val edges = t(spark, dir, "orders")
-      .filter(col("o_orderkey") % 11 === 0)
-      .select(
-        (col("o_custkey") % 500).as("x"),
-        (col("o_orderkey") % 500).as("y"))
+    val edges = ordersGraph(spark, dir, 11, 500)
     graph.Bfs.hops(edges, "x", "y", source = 0L)
   }
 
@@ -1781,11 +1645,7 @@ object SparkEntry {
     * boundary question and needs that validation re-run.
     */
   private def qg21Betweenness(spark: SparkSession, dir: String): DataFrame = {
-    val edges = t(spark, dir, "orders")
-      .filter(col("o_orderkey") % 29 === 0)
-      .select(
-        (col("o_custkey") % 150).as("x"),
-        (col("o_orderkey") % 150).as("y"))
+    val edges = ordersGraph(spark, dir, 29, 150)
     // 2×diameter eager frame rounds over ≤ 150² state rows: at 32
     // shuffle partitions the wall is TASK COUNT, not data (measured
     // 6.5 → 4.5 s at 8) — the qe6 small-state override, restored after
@@ -1808,11 +1668,7 @@ object SparkEntry {
     * cross-derivation check.
     */
   private def qg34WeightedBetweenness(spark: SparkSession, dir: String): DataFrame = {
-    val edges = t(spark, dir, "orders")
-      .filter(col("o_orderkey") % 29 === 0)
-      .select(
-        (col("o_custkey") % 150).as("x"),
-        (col("o_orderkey") % 150).as("y"))
+    val edges = ordersGraph(spark, dir, 29, 150)
       .withColumn("w", (lit(1) + (col("x") + col("y")) % 7).cast("double"))
     withConf(spark, ShufflePartitions -> "8") {
       graph.Betweenness.runWeighted(edges, "x", "y", "w", pivots = 0)
@@ -1830,11 +1686,7 @@ object SparkEntry {
     * wedge, or a degree off by one moves a score.
     */
   private def qg35LinkPred(spark: SparkSession, dir: String): DataFrame = {
-    val edges = t(spark, dir, "orders")
-      .filter(col("o_orderkey") % 5 === 0)
-      .select(
-        (col("o_custkey") % 200).as("x"),
-        (col("o_orderkey") % 200).as("y"))
+    val edges = ordersGraph(spark, dir, 5, 200)
     graph.Structure.linkPrediction(edges, "x", "y", minCommon = 2)
   }
 
@@ -1846,11 +1698,7 @@ object SparkEntry {
     * EXISTS flag and the J division at 6 dp.
     */
   private def qg39NeighborhoodJaccard(spark: SparkSession, dir: String): DataFrame = {
-    val edges = t(spark, dir, "orders")
-      .filter(col("o_orderkey") % 5 === 0)
-      .select(
-        (col("o_custkey") % 200).as("x"),
-        (col("o_orderkey") % 200).as("y"))
+    val edges = ordersGraph(spark, dir, 5, 200)
     graph.Structure.neighborhoodJaccard(edges, "x", "y", minCommon = 3)
   }
 
@@ -1862,11 +1710,7 @@ object SparkEntry {
     * explicit multiply (never libm pow) for the same reason.
     */
   private def qg36Assortativity(spark: SparkSession, dir: String): DataFrame = {
-    val edges = t(spark, dir, "orders")
-      .filter(col("o_orderkey") % 3 === 0)
-      .select(
-        (col("o_custkey") % 80).as("x"),
-        (col("o_orderkey") % 80).as("y"))
+    val edges = ordersGraph(spark, dir, 3, 80)
     graph.Structure.assortativity(edges, "x", "y")
   }
 
@@ -1877,11 +1721,7 @@ object SparkEntry {
     * division chain per row, replayed literally by the oracle.
     */
   private def qg37Modularity(spark: SparkSession, dir: String): DataFrame = {
-    val edges = t(spark, dir, "orders")
-      .filter(col("o_orderkey") % 3 === 0)
-      .select(
-        (col("o_custkey") % 80).as("x"),
-        (col("o_orderkey") % 80).as("y"))
+    val edges = ordersGraph(spark, dir, 3, 80)
     val labels = spark.range(80)
       .select(col("id").as("v"), (col("id") % 8).as("c"))
     graph.Structure.modularity(edges, "x", "y", labels, "v", "c")
@@ -1895,11 +1735,7 @@ object SparkEntry {
     * one mis-chosen neighbor anywhere breaks rows.
     */
   private def qg38RandomWalks(spark: SparkSession, dir: String): DataFrame = {
-    val edges = t(spark, dir, "orders")
-      .filter(col("o_orderkey") % 3 === 0)
-      .select(
-        (col("o_custkey") % 80).as("x"),
-        (col("o_orderkey") % 80).as("y"))
+    val edges = ordersGraph(spark, dir, 3, 80)
     withConf(spark, ShufflePartitions -> "8") {
       graph.Walks.randomWalks(edges, "x", "y", walksPerNode = 2, length = 8)
     }
@@ -1914,11 +1750,7 @@ object SparkEntry {
     * list_reduce fold (the qp14 ordered-fold contract).
     */
   private def qg22Centrality(spark: SparkSession, dir: String): DataFrame = {
-    val edges = t(spark, dir, "orders")
-      .filter(col("o_orderkey") % 29 === 0)
-      .select(
-        (col("o_custkey") % 150).as("x"),
-        (col("o_orderkey") % 150).as("y"))
+    val edges = ordersGraph(spark, dir, 29, 150)
     // small-state override (the qg21 rationale: diameter eager BFS
     // rounds over ≤ 150² rows are task-count-bound at 32 partitions)
     withConf(spark, ShufflePartitions -> "8") {
@@ -1941,11 +1773,7 @@ object SparkEntry {
     * exact tier is CentralitySpec's error-band pin, not the gate's.
     */
   private def qg23HyperBall(spark: SparkSession, dir: String): DataFrame = {
-    val edges = t(spark, dir, "orders")
-      .filter(col("o_orderkey") % 29 === 0)
-      .select(
-        (col("o_custkey") % 150).as("x"),
-        (col("o_orderkey") % 150).as("y"))
+    val edges = ordersGraph(spark, dir, 29, 150)
     // small-state override (the qg21 rationale: diameter eager rounds
     // over ≤ 150·2^p register rows are task-count-bound at 32)
     withConf(spark, ShufflePartitions -> "8") {
@@ -1968,11 +1796,7 @@ object SparkEntry {
     * exact integers.
     */
   private def qg24EffDiameter(spark: SparkSession, dir: String): DataFrame = {
-    val edges = t(spark, dir, "orders")
-      .filter(col("o_orderkey") % 29 === 0)
-      .select(
-        (col("o_custkey") % 150).as("x"),
-        (col("o_orderkey") % 150).as("y"))
+    val edges = ordersGraph(spark, dir, 29, 150)
     withConf(spark, ShufflePartitions -> "8") {
       graph.Centrality.effectiveDiameterHyperBall(
         edges, "x", "y", alpha = 0.9, p = 6)
@@ -2015,11 +1839,7 @@ object SparkEntry {
     * 6-dp round.
     */
   private def qg25Eigenvector(spark: SparkSession, dir: String): DataFrame = {
-    val edges = t(spark, dir, "orders")
-      .filter(col("o_orderkey") % 29 === 0)
-      .select(
-        (col("o_custkey") % 150).as("x"),
-        (col("o_orderkey") % 150).as("y"))
+    val edges = ordersGraph(spark, dir, 29, 150)
     withConf(spark, ShufflePartitions -> "8") {
       graph.Centrality.eigenvectorCentrality(edges, "x", "y", iters = 8)
     }
@@ -2056,11 +1876,7 @@ object SparkEntry {
     * FP anywhere.
     */
   private def qg28Scc(spark: SparkSession, dir: String): DataFrame = {
-    val edges = t(spark, dir, "orders")
-      .filter(col("o_orderkey") % 97 === 0)
-      .select(
-        (col("o_custkey") % 60).as("s"),
-        (col("o_orderkey") % 60).as("d"))
+    val edges = ordersGraph(spark, dir, 97, 60).toDF("s", "d")
     // small-state fixpoint rounds over ≤ 60 label rows — task-count-
     // bound at 32 shuffle partitions (the qg21/qg23 rationale)
     withConf(spark, ShufflePartitions -> "8")(graph.Scc.run(edges, "s", "d"))
@@ -2074,11 +1890,7 @@ object SparkEntry {
     * lengthwise), so the fixpoint round count is scale-stable.
     */
   private def qg29DagLayer(spark: SparkSession, dir: String): DataFrame = {
-    val edges = t(spark, dir, "orders")
-      .filter(col("o_orderkey") % 11 === 0)
-      .select(
-        (col("o_custkey") % 500).as("s"),
-        (col("o_orderkey") % 500).as("d"))
+    val edges = ordersGraph(spark, dir, 11, 500).toDF("s", "d")
       .filter(floor(col("s") / 50) < floor(col("d") / 50))
     // small-state fixpoint rounds over ≤ 500 layer rows (the qg28
     // rationale)
@@ -2091,11 +1903,7 @@ object SparkEntry {
     * (earliest-start scheduling).
     */
   private def qg31CriticalPath(spark: SparkSession, dir: String): DataFrame = {
-    val edges = t(spark, dir, "orders")
-      .filter(col("o_orderkey") % 11 === 0)
-      .select(
-        (col("o_custkey") % 500).as("s"),
-        (col("o_orderkey") % 500).as("d"))
+    val edges = ordersGraph(spark, dir, 11, 500).toDF("s", "d")
       .filter(floor(col("s") / 50) < floor(col("d") / 50))
       .withColumn("w", (lit(1) + (col("s") + col("d")) % 5).cast("double"))
     withConf(spark, ShufflePartitions -> "8")(graph.Dag.criticalPath(edges, "s", "d", "w"))
@@ -2108,11 +1916,7 @@ object SparkEntry {
     * executor's CSR.
     */
   private def qg30Sssp(spark: SparkSession, dir: String): DataFrame = {
-    val edges = t(spark, dir, "orders")
-      .filter(col("o_orderkey") % 11 === 0)
-      .select(
-        (col("o_custkey") % 500).as("x"),
-        (col("o_orderkey") % 500).as("y"))
+    val edges = ordersGraph(spark, dir, 11, 500)
       .select(least(col("x"), col("y")).as("s"), greatest(col("x"), col("y")).as("d"))
       .filter(col("s") =!= col("d"))
       .withColumn("w", (lit(1) + (col("s") + col("d")) % 7).cast("double"))
@@ -2131,11 +1935,7 @@ object SparkEntry {
     * structural, not data-dependent).
     */
   private def qg32WeightedCentrality(spark: SparkSession, dir: String): DataFrame = {
-    val edges = t(spark, dir, "orders")
-      .filter(col("o_orderkey") % 29 === 0)
-      .select(
-        (col("o_custkey") % 150).as("x"),
-        (col("o_orderkey") % 150).as("y"))
+    val edges = ordersGraph(spark, dir, 29, 150)
       .withColumn("w", (lit(1) + (col("x") + col("y")) % 7).cast("double"))
     withConf(spark, ShufflePartitions -> "8") {
       graph.Centrality.weightedDistanceCentralities(edges, "x", "y", "w")
@@ -2151,11 +1951,7 @@ object SparkEntry {
     * CTE re-aggregated with max, same n-derived iteration bound.
     */
   private def qg33WeightedEcc(spark: SparkSession, dir: String): DataFrame = {
-    val edges = t(spark, dir, "orders")
-      .filter(col("o_orderkey") % 29 === 0)
-      .select(
-        (col("o_custkey") % 150).as("x"),
-        (col("o_orderkey") % 150).as("y"))
+    val edges = ordersGraph(spark, dir, 29, 150)
       .withColumn("w", (lit(1) + (col("x") + col("y")) % 7).cast("double"))
     withConf(spark, ShufflePartitions -> "8") {
       graph.Centrality.weightedEccentricity(edges, "x", "y", "w")
@@ -2310,11 +2106,7 @@ object SparkEntry {
     * star-contraction label table, aggregated twice.
     */
   private def qg19Components(spark: SparkSession, dir: String): DataFrame = {
-    val edges = t(spark, dir, "orders")
-      .filter(col("o_orderkey") % 53 === 0)
-      .select(
-        (col("o_custkey") % 500).as("x"),
-        (col("o_orderkey") % 500).as("y"))
+    val edges = ordersGraph(spark, dir, 53, 500)
     val pairs = edges
       .select(least(col("x"), col("y")).as("a"), greatest(col("x"), col("y")).as("b"))
       .filter(col("a") =!= col("b"))
@@ -2401,11 +2193,7 @@ object SparkEntry {
     * any graph's shape (hub detection, power-law eyeballing).
     */
   private def qg20DegreeHist(spark: SparkSession, dir: String): DataFrame = {
-    val e = t(spark, dir, "orders")
-      .filter(col("o_orderkey") % 11 === 0)
-      .select(
-        (col("o_custkey") % 500).as("x"),
-        (col("o_orderkey") % 500).as("y"))
+    val e = ordersGraph(spark, dir, 11, 500)
       .select(least(col("x"), col("y")).as("a"), greatest(col("x"), col("y")).as("b"))
       .filter(col("a") =!= col("b"))
       .distinct()
@@ -2740,19 +2528,12 @@ object SparkEntry {
     * the batch registers — which is what lets the DuckDB batch oracle
     * gate a STREAMING approximate answer hash-exactly.
     */
-  private def qe24StreamHll(spark: SparkSession, dir: String): DataFrame = {
-    val stage = stageEvents(dir)
-    val schema = Tables.schema(spark, dir, "events")
-    val t =
-      try withConf(spark, ShufflePartitions -> "8") {
-        streaming.EventStreams.runHllStream(
-          spark, stage.toString, schema, p = 4,
-          queryName = s"qe24_mem_${System.nanoTime()}")
-      } finally rmTree(stage)
-    t.select(
+  private def qe24StreamHll(spark: SparkSession, dir: String): DataFrame =
+    replayEvents(spark, dir, Seq(ShufflePartitions -> "8")) {
+      (_, ev) => streaming.EventStreams.runHllStream(ev, p = 4)
+    }.select(
       unix_timestamp(col("window_start")).as("window_start"),
       col("n_registers"), col("est_distinct"))
-  }
 
   /** STREAMING QUANTILE SKETCH through the oracle ([[streaming
     * .EventStreams.runQuantileStream]], k = 8, q ∈ {0.5, 0.95} — k
@@ -2768,19 +2549,12 @@ object SparkEntry {
     * count-driven level (integer bit-length form — no float log2),
     * the same tz ≥ L retained set, and the same nearest-rank index.
     */
-  private def qe51StreamQuantile(spark: SparkSession, dir: String): DataFrame = {
-    val stage = stageEvents(dir)
-    val schema = Tables.schema(spark, dir, "events")
-    val t =
-      try withConf(spark, ShufflePartitions -> "8") {
-        streaming.EventStreams.runQuantileStream(
-          spark, stage.toString, schema, k = 8, qs = Seq(0.5, 0.95),
-          queryName = s"qe51_mem_${System.nanoTime()}")
-      } finally rmTree(stage)
-    t.select(
+  private def qe51StreamQuantile(spark: SparkSession, dir: String): DataFrame =
+    replayEvents(spark, dir, Seq(ShufflePartitions -> "8"), oneFilePerTrigger = true) {
+      (_, ev) => streaming.EventStreams.runQuantileStream(ev, k = 8, qs = Seq(0.5, 0.95))
+    }.select(
       unix_timestamp(col("window_start")).as("window_start"),
       col("q"), col("n"), col("level"), col("n_sample"), col("est"))
-  }
 
   /** FORWARD as-of join ([[operators.Temporal.asofJoinForward]]):
     * qe2's click→purchase lookup mirrored in time — for each click the
@@ -2859,19 +2633,12 @@ object SparkEntry {
     * (est DESC, term) rank cut. Eviction/merge-error behavior is
     * StreamingSpec's deterministic-fixture job, not the gate's.
     */
-  private def qe52StreamTopk(spark: SparkSession, dir: String): DataFrame = {
-    val stage = stageEvents(dir)
-    val schema = Tables.schema(spark, dir, "events")
-    val t =
-      try withConf(spark, ShufflePartitions -> "8") {
-        streaming.EventStreams.runTopKStream(
-          spark, stage.toString, schema, m = 64, k = 5,
-          queryName = s"qe52_mem_${System.nanoTime()}")
-      } finally rmTree(stage)
-    t.select(
+  private def qe52StreamTopk(spark: SparkSession, dir: String): DataFrame =
+    replayEvents(spark, dir, Seq(ShufflePartitions -> "8")) {
+      (_, ev) => streaming.EventStreams.runTopKStream(ev, m = 64, k = 5)
+    }.select(
       unix_timestamp(col("window_start")).as("window_start"),
       col("rank"), col("term"), col("est"), col("err"))
-  }
 
   /** STREAMING COUNT-MIN through the oracle ([[streaming.EventStreams
     * .runCmsStream]]): the sum-merge sibling of qe24 — per-hour
@@ -2880,21 +2647,13 @@ object SparkEntry {
     * batch min over the drained cells. Addition being the CMS merge is
     * what makes the micro-batched cells equal the batch cells exactly.
     */
-  private def qe27StreamCms(spark: SparkSession, dir: String): DataFrame = {
-    val stage = stageEvents(dir)
-    val schema = Tables.schema(spark, dir, "events")
-    val t =
-      try withConf(spark, ShufflePartitions -> "8") {
-        streaming.EventStreams.runCmsStream(
-          spark, stage.toString, schema,
-          probes = Seq("click", "purchase", "zzz_missing"),
-          depth = 4, width = 64,
-          queryName = s"qe27_mem_${System.nanoTime()}")
-      } finally rmTree(stage)
-    t.select(
+  private def qe27StreamCms(spark: SparkSession, dir: String): DataFrame =
+    replayEvents(spark, dir, Seq(ShufflePartitions -> "8")) { (_, ev) =>
+      streaming.EventStreams.runCmsStream(
+        ev, probes = Seq("click", "purchase", "zzz_missing"), depth = 4, width = 64)
+    }.select(
       unix_timestamp(col("window_start")).as("window_start"),
       col("term"), col("est"))
-  }
 
   /** Histogram-quantile sketch ([[operators.Sketches
     * .histogramQuantile]], 64 bins over [0, 110000), q ∈
@@ -3116,9 +2875,7 @@ object SparkEntry {
     * TrussSpec's job.
     */
   private def qg13KTruss(spark: SparkSession, dir: String): DataFrame = {
-    val edges = t(spark, dir, "orders")
-      .filter(col("o_orderkey") % 15 === 0)
-      .select((col("o_custkey") % 100).as("x"), (col("o_orderkey") % 100).as("y"))
+    val edges = ordersGraph(spark, dir, 15, 100)
     graph.Truss.decompose(edges, "x", "y", 6)
   }
 

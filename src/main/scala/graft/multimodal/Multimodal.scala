@@ -262,28 +262,33 @@ object Multimodal {
     }
   }
 
-  /** JPEG media fixture: one 32×32 block-constant grayscale JPEG per
-    * document, encoded EXECUTOR-SIDE by [[graft.sources.Jpeg.encodeGray]]
-    * — a distributed encode→decode round-trip whose pixel statistics stay
-    * SQL-replayable (block-constant content is exact through JPEG).
+  /** The skeleton of the codec fixtures: `encode(doc_id)` per document,
+    * run on the executors.
     */
-  def jpegMediaFromDocuments(spark: SparkSession, docs: DataFrame): Dataset[Media] = {
+  private def encodedFixture(spark: SparkSession, docs: DataFrame)(
+      encode: Long => Media): Dataset[Media] = {
     import spark.implicits._
     docs.select(col("doc_id")).as[Long]
       // a small parquet lands in ONE partition; the per-row codec work
       // is the expensive part, so spread it across the cluster first
       .repartition(spark.sparkContext.defaultParallelism)
-      .mapPartitions { it =>
-      it.map { id =>
-        val w = 32; val h = 32
-        val px = Array.tabulate(w * h) { i =>
-          val bc = (i % w) / 8; val br = (i / w) / 8
-          ((bc * 5 + br * 7 + id) % 251).toInt
-        }
-        Media(id, MediaMeta("image", w, h, 0), graft.sources.Jpeg.encodeGray(px, w, h))
-      }
-    }
+      .mapPartitions(_.map(encode))
   }
+
+  /** JPEG media fixture: one 32×32 block-constant grayscale JPEG per
+    * document, encoded EXECUTOR-SIDE by [[graft.sources.Jpeg.encodeGray]]
+    * — a distributed encode→decode round-trip whose pixel statistics stay
+    * SQL-replayable (block-constant content is exact through JPEG).
+    */
+  def jpegMediaFromDocuments(spark: SparkSession, docs: DataFrame): Dataset[Media] =
+    encodedFixture(spark, docs) { id =>
+      val w = 32; val h = 32
+      val px = Array.tabulate(w * h) { i =>
+        val bc = (i % w) / 8; val br = (i / w) / 8
+        ((bc * 5 + br * 7 + id) % 251).toInt
+      }
+      Media(id, MediaMeta("image", w, h, 0), graft.sources.Jpeg.encodeGray(px, w, h))
+    }
 
   case class AudioFeatures(
       media_id: Long,
@@ -410,6 +415,24 @@ object Multimodal {
     out
   }
 
+  /** The aHash bits of one decoded frame: '1' for each box mean above
+    * the frame's integer mean box value, else '0', in box order.
+    */
+  private def meanBits(px: Array[Byte], w: Int, h: Int, factor: Int): String = {
+    val means = boxMeans(px, w, h, factor)
+    var sum = 0L
+    var i = 0
+    while (i < means.length) { sum += means(i); i += 1 }
+    val mean = sum / means.length
+    val bits = new StringBuilder(means.length)
+    i = 0
+    while (i < means.length) {
+      bits.append(if (means(i) > mean) '1' else '0')
+      i += 1
+    }
+    bits.toString
+  }
+
   def resizeDecoded(media: Dataset[Media], factor: Int): Dataset[Media] = {
     import media.sparkSession.implicits._
     require(factor >= 1)
@@ -464,18 +487,7 @@ object Multimodal {
       (imageDims(bytes), decodeImage(bytes)) match {
         case (Some((_, w, h)), Some(px))
             if w % factor == 0 && h % factor == 0 && w >= factor && h >= factor =>
-          val means = boxMeans(px, w, h, factor)
-          var sum = 0L
-          var i = 0
-          while (i < means.length) { sum += means(i); i += 1 }
-          val mean = sum / means.length
-          val bits = new StringBuilder(means.length)
-          i = 0
-          while (i < means.length) {
-            bits.append(if (means(i) > mean) '1' else '0')
-            i += 1
-          }
-          Some((m.media_id, bits.toString))
+          Some((m.media_id, meanBits(px, w, h, factor)))
         case _ => None
       }
     }.toDF("media_id", "hash_bits")
@@ -826,25 +838,19 @@ object Multimodal {
     * (1000 % 16 ≠ 0). The trim's window boundaries drift ≤ 24 samples
     * into neighboring blocks, flipping at most a couple of bits.
     */
-  def wavMediaTrimNearDupFromDocuments(spark: SparkSession, docs: DataFrame): Dataset[Media] = {
-    import spark.implicits._
-    docs.select(col("doc_id")).as[Long]
-      .repartition(spark.sparkContext.defaultParallelism)
-      .mapPartitions { it =>
-        it.map { id =>
-          val base = id % 50
-          val n = if (id >= 50) 1000 else 1024
-          val pat = base * 2654435761L % 65536L
-          val samples = Array.tabulate(n) { i =>
-            val w = i / 64
-            val amp = if (((pat >> w) & 1L) == 1L) 32768 else 256
-            ((i * 2731 + 5 * base) % (2 * amp) - amp).toShort
-          }
-          Media(id, MediaMeta("audio", 0, 0, 16000),
-            graft.sources.Wav.encodeMono16(samples, 16000))
-        }
+  def wavMediaTrimNearDupFromDocuments(spark: SparkSession, docs: DataFrame): Dataset[Media] =
+    encodedFixture(spark, docs) { id =>
+      val base = id % 50
+      val n = if (id >= 50) 1000 else 1024
+      val pat = base * 2654435761L % 65536L
+      val samples = Array.tabulate(n) { i =>
+        val w = i / 64
+        val amp = if (((pat >> w) & 1L) == 1L) 32768 else 256
+        ((i * 2731 + 5 * base) % (2 * amp) - amp).toShort
       }
-  }
+      Media(id, MediaMeta("audio", 0, 0, 16000),
+        graft.sources.Wav.encodeMono16(samples, 16000))
+    }
 
   /** The [[pngMediaFromDocuments]] generator with PLANTED NEAR-DUPS for
     * the image-dedup gate: ids < 50 are bases with per-id PATTERNS
@@ -856,23 +862,17 @@ object Multimodal {
     * one-block retouch that moves a handful of aHash bits, never the
     * whole fingerprint.
     */
-  def pngMediaNearDupFromDocuments(spark: SparkSession, docs: DataFrame): Dataset[Media] = {
-    import spark.implicits._
-    docs.select(col("doc_id")).as[Long]
-      .repartition(spark.sparkContext.defaultParallelism)
-      .mapPartitions { it =>
-        it.map { id =>
-          val base = id % 50
-          val bump = if (id >= 50) 40 else 0
-          val w = 32; val h = 32
-          val px = Array.tabulate(w * h) { i =>
-            val p = ((i * (7919 + 16 * base) + 3 * base) % 256).toInt
-            if (i < 16) math.min(p + bump, 255) else p
-          }
-          Media(id, MediaMeta("image", w, h, 0), graft.sources.Png.encodeGray(px, w, h))
-        }
+  def pngMediaNearDupFromDocuments(spark: SparkSession, docs: DataFrame): Dataset[Media] =
+    encodedFixture(spark, docs) { id =>
+      val base = id % 50
+      val bump = if (id >= 50) 40 else 0
+      val w = 32; val h = 32
+      val px = Array.tabulate(w * h) { i =>
+        val p = ((i * (7919 + 16 * base) + 3 * base) % 256).toInt
+        if (i < 16) math.min(p + bump, 255) else p
       }
-  }
+      Media(id, MediaMeta("image", w, h, 0), graft.sources.Png.encodeGray(px, w, h))
+    }
 
   /** VIDEO NEAR-DUP CLUSTERS — the quartet's last member (text qd2,
     * image qm17, audio qm18): cluster clips whose per-frame [[aHash]]
@@ -901,20 +901,7 @@ object Multimodal {
         case Some((w, h, frames))
             if frames.nonEmpty && w % factor == 0 && h % factor == 0
               && w >= factor && h >= factor =>
-          val sb = new StringBuilder(frames.length * (w / factor) * (h / factor))
-          frames.foreach { px =>
-            val means = boxMeans(px, w, h, factor)
-            var sum = 0L
-            var i = 0
-            while (i < means.length) { sum += means(i); i += 1 }
-            val mean = sum / means.length
-            i = 0
-            while (i < means.length) {
-              sb.append(if (means(i) > mean) '1' else '0')
-              i += 1
-            }
-          }
-          Some((m.media_id, sb.toString))
+          Some((m.media_id, frames.map(meanBits(_, w, h, factor)).mkString))
         case _ => None
       }
     }.toDF("media_id", "hash_bits")
@@ -931,30 +918,24 @@ object Multimodal {
     * brightened by +100 (clipped at 250) — a one-block retouch whose
     * flipped bits all land in the first frame's hash.
     */
-  def aviMediaNearDupFromDocuments(spark: SparkSession, docs: DataFrame): Dataset[Media] = {
-    import spark.implicits._
-    docs.select(col("doc_id")).as[Long]
-      .repartition(spark.sparkContext.defaultParallelism)
-      .mapPartitions { it =>
-        it.map { id =>
-          val base = id % 50
-          val w = 32; val h = 32
-          val frames = (0 until 4).map { f =>
-            val px = Array.tabulate(w * h) { i =>
-              val bc = (i % 32) / 8
-              val br = (i / 32) / 8
-              val v = (((bc + 4 * br + 16 * f) * (7919 + 16 * base)
-                + 3 * base) % 251).toInt
-              if (id >= 50 && f == 0 && br == 0 && bc == 0) math.min(v + 100, 250)
-              else v
-            }
-            graft.sources.Jpeg.encodeGray(px, w, h)
-          }
-          Media(id, MediaMeta("video", w, h, 0),
-            graft.sources.Avi.encodeMjpeg(frames, w, h))
+  def aviMediaNearDupFromDocuments(spark: SparkSession, docs: DataFrame): Dataset[Media] =
+    encodedFixture(spark, docs) { id =>
+      val base = id % 50
+      val w = 32; val h = 32
+      val frames = (0 until 4).map { f =>
+        val px = Array.tabulate(w * h) { i =>
+          val bc = (i % 32) / 8
+          val br = (i / 32) / 8
+          val v = (((bc + 4 * br + 16 * f) * (7919 + 16 * base)
+            + 3 * base) % 251).toInt
+          if (id >= 50 && f == 0 && br == 0 && bc == 0) math.min(v + 100, 250)
+          else v
         }
+        graft.sources.Jpeg.encodeGray(px, w, h)
       }
-  }
+      Media(id, MediaMeta("video", w, h, 0),
+        graft.sources.Avi.encodeMjpeg(frames, w, h))
+    }
 
   /** TRIM-INVARIANT VIDEO NEAR-DUP CLUSTERS — [[videoNearDupClusters]]
     * over the FRAME-SAMPLED fingerprint: the concatenated form hashes
@@ -996,23 +977,8 @@ object Multimodal {
         case Some((w, h, frames))
             if frames.nonEmpty && w % factor == 0 && h % factor == 0
               && w >= factor && h >= factor =>
-          val sb = new StringBuilder(nFrames * (w / factor) * (h / factor))
-          var j = 0
-          while (j < nFrames) {
-            val px = frames((j * frames.length / nFrames).toInt)
-            val means = boxMeans(px, w, h, factor)
-            var sum = 0L
-            var i = 0
-            while (i < means.length) { sum += means(i); i += 1 }
-            val mean = sum / means.length
-            i = 0
-            while (i < means.length) {
-              sb.append(if (means(i) > mean) '1' else '0')
-              i += 1
-            }
-            j += 1
-          }
-          Some((m.media_id, sb.toString))
+          val sampled = (0 until nFrames).map(j => frames(j * frames.length / nFrames))
+          Some((m.media_id, sampled.map(meanBits(_, w, h, factor)).mkString))
         case _ => None
       }
     }.toDF("media_id", "hash_bits")
@@ -1028,29 +994,23 @@ object Multimodal {
     * exactly the pair the concatenated fingerprint (length 5·64 vs
     * 4·64) can never merge.
     */
-  def aviMediaTrimNearDupFromDocuments(spark: SparkSession, docs: DataFrame): Dataset[Media] = {
-    import spark.implicits._
-    docs.select(col("doc_id")).as[Long]
-      .repartition(spark.sparkContext.defaultParallelism)
-      .mapPartitions { it =>
-        it.map { id =>
-          val base = id % 50
-          val nf = if (id >= 50) 4 else 5
-          val w = 32; val h = 32
-          val frames = (0 until nf).map { f =>
-            val px = Array.tabulate(w * h) { i =>
-              val bc = (i % 32) / 8
-              val br = (i / 32) / 8
-              (((bc + 4 * br + 16 * f) * (7919 + 16 * base)
-                + 3 * base) % 251).toInt
-            }
-            graft.sources.Jpeg.encodeGray(px, w, h)
-          }
-          Media(id, MediaMeta("video", w, h, 0),
-            graft.sources.Avi.encodeMjpeg(frames, w, h))
+  def aviMediaTrimNearDupFromDocuments(spark: SparkSession, docs: DataFrame): Dataset[Media] =
+    encodedFixture(spark, docs) { id =>
+      val base = id % 50
+      val nf = if (id >= 50) 4 else 5
+      val w = 32; val h = 32
+      val frames = (0 until nf).map { f =>
+        val px = Array.tabulate(w * h) { i =>
+          val bc = (i % 32) / 8
+          val br = (i / 32) / 8
+          (((bc + 4 * br + 16 * f) * (7919 + 16 * base)
+            + 3 * base) % 251).toInt
         }
+        graft.sources.Jpeg.encodeGray(px, w, h)
       }
-  }
+      Media(id, MediaMeta("video", w, h, 0),
+        graft.sources.Avi.encodeMjpeg(frames, w, h))
+    }
 
   /** OTSU BINARIZATION THRESHOLD over decoded grayscale pixels — the
     * classic foreground/background split point (argmax of between-class
@@ -1118,18 +1078,12 @@ object Multimodal {
     * [[pngMediaFromDocuments]] ramp gives every image the same
     * threshold). Same real encode path.
     */
-  def pngMediaSkewed(spark: SparkSession, docs: DataFrame): Dataset[Media] = {
-    import spark.implicits._
-    docs.select(col("doc_id")).as[Long]
-      .repartition(spark.sparkContext.defaultParallelism)
-      .mapPartitions { it =>
-        it.map { id =>
-          val w = 32; val h = 32
-          val px = Array.tabulate(w * h)(i => ((i.toLong * i + 31L * id) % 256L).toInt)
-          Media(id, MediaMeta("image", w, h, 0), graft.sources.Png.encodeGray(px, w, h))
-        }
-      }
-  }
+  def pngMediaSkewed(spark: SparkSession, docs: DataFrame): Dataset[Media] =
+    encodedFixture(spark, docs) { id =>
+      val w = 32; val h = 32
+      val px = Array.tabulate(w * h)(i => ((i.toLong * i + 31L * id) % 256L).toInt)
+      Media(id, MediaMeta("image", w, h, 0), graft.sources.Png.encodeGray(px, w, h))
+    }
 
   /** REAL video decode tier: AVI/MJPEG payloads split into per-frame JPEG
     * streams by the [[graft.sources.Avi]] container walk, each frame
@@ -1151,26 +1105,18 @@ object Multimodal {
     * the video twin of [[jpegMediaFromDocuments]], same exact-through-JPEG
     * contract per frame.
     */
-  def aviMediaFromDocuments(spark: SparkSession, docs: DataFrame): Dataset[Media] = {
-    import spark.implicits._
-    docs.select(col("doc_id")).as[Long]
-      // a small parquet lands in ONE partition; the per-row codec work
-      // is the expensive part, so spread it across the cluster first
-      .repartition(spark.sparkContext.defaultParallelism)
-      .mapPartitions { it =>
-      it.map { id =>
-        val w = 32; val h = 32
-        val frames = (0 until 4).map { f =>
-          val px = Array.tabulate(w * h) { i =>
-            val bc = (i % w) / 8; val br = (i / w) / 8
-            ((bc * 5 + br * 7 + id + f * 13) % 251).toInt
-          }
-          graft.sources.Jpeg.encodeGray(px, w, h)
+  def aviMediaFromDocuments(spark: SparkSession, docs: DataFrame): Dataset[Media] =
+    encodedFixture(spark, docs) { id =>
+      val w = 32; val h = 32
+      val frames = (0 until 4).map { f =>
+        val px = Array.tabulate(w * h) { i =>
+          val bc = (i % w) / 8; val br = (i / w) / 8
+          ((bc * 5 + br * 7 + id + f * 13) % 251).toInt
         }
-        Media(id, MediaMeta("video", w, h, 0), graft.sources.Avi.encodeMjpeg(frames, w, h))
+        graft.sources.Jpeg.encodeGray(px, w, h)
       }
+      Media(id, MediaMeta("video", w, h, 0), graft.sources.Avi.encodeMjpeg(frames, w, h))
     }
-  }
 
   /** The WAV fixture with PLANTED NEAR-DUPS for the audio-dedup gate:
     * ids < 50 are bases whose ENERGY ENVELOPE carries the id — window w
@@ -1186,43 +1132,29 @@ object Multimodal {
     * a one-segment retouch that moves a couple of hash bits, never
     * the whole fingerprint.
     */
-  def wavMediaNearDupFromDocuments(spark: SparkSession, docs: DataFrame): Dataset[Media] = {
-    import spark.implicits._
-    docs.select(col("doc_id")).as[Long]
-      .repartition(spark.sparkContext.defaultParallelism)
-      .mapPartitions { it =>
-        it.map { id =>
-          val base = id % 50
-          val boost = if (id >= 50) 8000 else 0
-          val pat = base * 2654435761L % 65536L
-          val samples = Array.tabulate(1024) { i =>
-            val w = i / 64
-            val amp = if (((pat >> w) & 1L) == 1L) 32768 else 256
-            val v = ((i * 2731 + 5 * base) % (2 * amp) - amp).toInt
-            (if (i < 64) math.min(v + boost, 32767) else v).toShort
-          }
-          Media(id, MediaMeta("audio", 0, 0, 16000),
-            graft.sources.Wav.encodeMono16(samples, 16000))
-        }
+  def wavMediaNearDupFromDocuments(spark: SparkSession, docs: DataFrame): Dataset[Media] =
+    encodedFixture(spark, docs) { id =>
+      val base = id % 50
+      val boost = if (id >= 50) 8000 else 0
+      val pat = base * 2654435761L % 65536L
+      val samples = Array.tabulate(1024) { i =>
+        val w = i / 64
+        val amp = if (((pat >> w) & 1L) == 1L) 32768 else 256
+        val v = ((i * 2731 + 5 * base) % (2 * amp) - amp).toInt
+        (if (i < 64) math.min(v + boost, 32767) else v).toShort
       }
-  }
+      Media(id, MediaMeta("audio", 0, 0, 16000),
+        graft.sources.Wav.encodeMono16(samples, 16000))
+    }
 
   /** WAV media fixture: 1024 deterministic PCM16 samples per document,
     * encoded executor-side — the audio twin of [[pngMediaFromDocuments]].
     */
-  def wavMediaFromDocuments(spark: SparkSession, docs: DataFrame): Dataset[Media] = {
-    import spark.implicits._
-    docs.select(col("doc_id")).as[Long]
-      // a small parquet lands in ONE partition; the per-row codec work
-      // is the expensive part, so spread it across the cluster first
-      .repartition(spark.sparkContext.defaultParallelism)
-      .mapPartitions { it =>
-      it.map { id =>
-        val samples = Array.tabulate(1024)(i => (((i * 2731 + id * 17) % 65536) - 32768).toShort)
-        Media(id, MediaMeta("audio", 0, 0, 16000), graft.sources.Wav.encodeMono16(samples, 16000))
-      }
+  def wavMediaFromDocuments(spark: SparkSession, docs: DataFrame): Dataset[Media] =
+    encodedFixture(spark, docs) { id =>
+      val samples = Array.tabulate(1024)(i => (((i * 2731 + id * 17) % 65536) - 32768).toShort)
+      Media(id, MediaMeta("audio", 0, 0, 16000), graft.sources.Wav.encodeMono16(samples, 16000))
     }
-  }
 
   /** FLAC media fixture: the WAV fixture's contract through the FLAC
     * codec — 1024 deterministic PCM16 samples per document, encoded
@@ -1230,19 +1162,11 @@ object Multimodal {
     * lossless, so the decoded samples ARE the formula values and the
     * audio stats replay exactly in SQL.
     */
-  def flacMediaFromDocuments(spark: SparkSession, docs: DataFrame): Dataset[Media] = {
-    import spark.implicits._
-    docs.select(col("doc_id")).as[Long]
-      // a small parquet lands in ONE partition; the per-row codec work
-      // is the expensive part, so spread it across the cluster first
-      .repartition(spark.sparkContext.defaultParallelism)
-      .mapPartitions { it =>
-      it.map { id =>
-        val samples = Array.tabulate(1024)(i => (((i * 2731 + id * 29) % 65536) - 32768).toShort)
-        Media(id, MediaMeta("audio", 0, 0, 16000), graft.sources.Flac.encodeMono16(samples, 16000))
-      }
+  def flacMediaFromDocuments(spark: SparkSession, docs: DataFrame): Dataset[Media] =
+    encodedFixture(spark, docs) { id =>
+      val samples = Array.tabulate(1024)(i => (((i * 2731 + id * 29) % 65536) - 32768).toShort)
+      Media(id, MediaMeta("audio", 0, 0, 16000), graft.sources.Flac.encodeMono16(samples, 16000))
     }
-  }
 
   /** Stereo-LPC FLAC fixture: 1024 deterministic PCM16 samples PER
     * CHANNEL per document, encoded executor-side with quantized-LPC
@@ -1253,73 +1177,43 @@ object Multimodal {
     * exclusively — and losslessness means the decoded channels ARE the
     * formula values, so per-channel stats replay exactly in SQL.
     */
-  def flacStereoMediaFromDocuments(spark: SparkSession, docs: DataFrame): Dataset[Media] = {
-    import spark.implicits._
-    docs.select(col("doc_id")).as[Long]
-      .repartition(spark.sparkContext.defaultParallelism)
-      .mapPartitions { it =>
-        it.map { id =>
-          val l = Array.tabulate(1024)(i => (((i * 2731 + id * 29) % 65536) - 32768).toShort)
-          val r = Array.tabulate(1024)(i => (((i * 1663 + id * 101) % 65536) - 32768).toShort)
-          Media(id, MediaMeta("audio", 0, 0, 44100),
-            graft.sources.Flac.encodeStereo16(l, r, 44100, blockSize = 256))
-        }
-      }
-  }
+  def flacStereoMediaFromDocuments(spark: SparkSession, docs: DataFrame): Dataset[Media] =
+    encodedFixture(spark, docs) { id =>
+      val l = Array.tabulate(1024)(i => (((i * 2731 + id * 29) % 65536) - 32768).toShort)
+      val r = Array.tabulate(1024)(i => (((i * 1663 + id * 101) % 65536) - 32768).toShort)
+      Media(id, MediaMeta("audio", 0, 0, 44100),
+        graft.sources.Flac.encodeStereo16(l, r, 44100, blockSize = 256))
+    }
 
   /** BMP media fixture: uncompressed palette BMP — the lossless contract
     * a third time, through the raw-row/bottom-up/stride-padding path.
     */
-  def bmpMediaFromDocuments(spark: SparkSession, docs: DataFrame): Dataset[Media] = {
-    import spark.implicits._
-    docs.select(col("doc_id")).as[Long]
-      // a small parquet lands in ONE partition; the per-row codec work
-      // is the expensive part, so spread it across the cluster first
-      .repartition(spark.sparkContext.defaultParallelism)
-      .mapPartitions { it =>
-      it.map { id =>
-        val w = 32; val h = 32
-        val px = Array.tabulate(w * h)(i => ((i * 59 + id * 11) % 256).toInt)
-        Media(id, MediaMeta("image", w, h, 0), graft.sources.Bmp.encodeGray(px, w, h))
-      }
+  def bmpMediaFromDocuments(spark: SparkSession, docs: DataFrame): Dataset[Media] =
+    encodedFixture(spark, docs) { id =>
+      val w = 32; val h = 32
+      val px = Array.tabulate(w * h)(i => ((i * 59 + id * 11) % 256).toInt)
+      Media(id, MediaMeta("image", w, h, 0), graft.sources.Bmp.encodeGray(px, w, h))
     }
-  }
 
   /** GIF media fixture: palette GIF is lossless over 8-bit indices, so
     * arbitrary per-document pixels replay exactly — same contract as
     * [[pngMediaFromDocuments]] but through the LZW path.
     */
-  def gifMediaFromDocuments(spark: SparkSession, docs: DataFrame): Dataset[Media] = {
-    import spark.implicits._
-    docs.select(col("doc_id")).as[Long]
-      // a small parquet lands in ONE partition; the per-row codec work
-      // is the expensive part, so spread it across the cluster first
-      .repartition(spark.sparkContext.defaultParallelism)
-      .mapPartitions { it =>
-      it.map { id =>
-        val w = 32; val h = 32
-        val px = Array.tabulate(w * h)(i => ((i * 101 + id * 3) % 256).toInt)
-        Media(id, MediaMeta("image", w, h, 0), graft.sources.Gif.encodeGray(px, w, h))
-      }
+  def gifMediaFromDocuments(spark: SparkSession, docs: DataFrame): Dataset[Media] =
+    encodedFixture(spark, docs) { id =>
+      val w = 32; val h = 32
+      val px = Array.tabulate(w * h)(i => ((i * 101 + id * 3) % 256).toInt)
+      Media(id, MediaMeta("image", w, h, 0), graft.sources.Gif.encodeGray(px, w, h))
     }
-  }
 
   /** PNG media fixture: PNG is lossless, so the pixels are ARBITRARY
     * per-document values (no block-constant constraint like the JPEG
     * fixture) — every pixel still replays in SQL.
     */
-  def pngMediaFromDocuments(spark: SparkSession, docs: DataFrame): Dataset[Media] = {
-    import spark.implicits._
-    docs.select(col("doc_id")).as[Long]
-      // a small parquet lands in ONE partition; the per-row codec work
-      // is the expensive part, so spread it across the cluster first
-      .repartition(spark.sparkContext.defaultParallelism)
-      .mapPartitions { it =>
-      it.map { id =>
-        val w = 32; val h = 32
-        val px = Array.tabulate(w * h)(i => ((i * 7919 + id) % 256).toInt)
-        Media(id, MediaMeta("image", w, h, 0), graft.sources.Png.encodeGray(px, w, h))
-      }
+  def pngMediaFromDocuments(spark: SparkSession, docs: DataFrame): Dataset[Media] =
+    encodedFixture(spark, docs) { id =>
+      val w = 32; val h = 32
+      val px = Array.tabulate(w * h)(i => ((i * 7919 + id) % 256).toInt)
+      Media(id, MediaMeta("image", w, h, 0), graft.sources.Png.encodeGray(px, w, h))
     }
-  }
 }

@@ -1419,7 +1419,7 @@ object Dedup {
           / (col("n_a") + col("n_b") - col("shared")), 6).as("jaccard"))
       .localCheckpoint(true)
     // fpAll's checkpoint blocks free when the frame is GC'd (the
-    // drainMemorySink rationale) — out no longer references them
+    // EventStreams.drain rationale) — out no longer references them
     out
   }
 

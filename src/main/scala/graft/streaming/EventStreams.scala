@@ -1,8 +1,8 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.OutputMode
+import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery}
 
 /** Structured-Streaming surface (SURVEY.md §2.10 — beyond-reference
   * capability; the reference has no event-time processing).
@@ -10,6 +10,14 @@ import org.apache.spark.sql.streaming.OutputMode
   * The same transform functions serve batch DataFrames and streaming
   * readStream DataFrames — the Spark contract that makes a batch oracle
   * meaningful for the streaming path.
+  *
+  * The `run*Stream` runners take the stream (`ts` already a TIMESTAMP,
+  * see [[graft.Tables.normalizeTs]]) and replay it to the end of its
+  * bounded input through [[drain]], which owns the rest of a replay's
+  * lifecycle: the sink's query name, `stop`, and dropping the sink's
+  * temp view, on failure as on success. Source options such as
+  * `maxFilesPerTrigger` and the session confs a query pins at start
+  * belong to the caller.
   */
 object EventStreams {
 
@@ -171,20 +179,28 @@ object EventStreams {
       }
       .start()
 
-  /** Materialize a drained memory-sink table and DROP its temp view:
-    * memory sinks register a catalog table under `queryName`, and the
-    * bench sweeps invoke these runners repeatedly with unique
-    * nanoTime-suffixed names — without the drop, every invocation
-    * leaked a cached result table into the session catalog for its
-    * lifetime. `localCheckpoint` first (eager) so the returned frame —
-    * and every lazy plan built over it — no longer references the
-    * view; the drained results are bounded by contract (register /
-    * cell / retained-sample rows), so the checkpoint is small.
+  /** Runs `q` until its bounded input is consumed, then stops it,
+    * thrown or not. The one await for every sink, memory or
+    * foreachBatch.
     */
-  private[graft] def drainMemorySink(spark: SparkSession, queryName: String): DataFrame = {
-    val out = spark.table(queryName).localCheckpoint(true)
-    spark.catalog.dropTempView(queryName)
-    out
+  private[graft] def awaitAll(q: StreamingQuery): Unit =
+    try q.processAllAvailable() finally q.stop()
+
+  /** Replays `plan` into a memory sink and returns the drained rows.
+    * The sink's temp view gets a generated name and is dropped whether
+    * or not the query fails, so repeated runs leak nothing into the
+    * session catalog. `localCheckpoint` (eager) materializes the rows
+    * first, so the result and every plan built over it no longer
+    * reference the view; drained results are bounded by contract
+    * (register / cell / retained-sample rows).
+    */
+  private[graft] def drain(plan: DataFrame, mode: OutputMode): DataFrame = {
+    val spark = plan.sparkSession
+    val name = s"graft_drain_${java.util.UUID.randomUUID().toString.replace("-", "")}"
+    try {
+      awaitAll(plan.writeStream.outputMode(mode).format("memory").queryName(name).start())
+      spark.table(name).localCheckpoint(true)
+    } finally spark.catalog.dropTempView(name)
   }
 
   /** STREAMING HLL — per-hour distinct-user estimates where the
@@ -202,25 +218,11 @@ object EventStreams {
     * replay, as [[runWindowedStream]] (append would withhold the tail
     * windows past the final watermark).
     */
-  def runHllStream(
-      spark: SparkSession,
-      dir: String,
-      schema: org.apache.spark.sql.types.StructType,
-      p: Int = 4,
-      queryName: String = "hll_events"): DataFrame = {
-    val stream = spark.readStream.schema(schema).parquet(dir)
-    val src = graft.Tables.normalizeTs(stream)
-      .select(window(col("ts"), "1 hour").as("__w"), col("user_id"))
+  def runHllStream(events: DataFrame, p: Int = 4): DataFrame = {
+    val src = events.select(window(col("ts"), "1 hour").as("__w"), col("user_id"))
     val regs = graft.operators.Sketches.hllRegisters(src, "__w", "user_id", p)
-    val q = regs.writeStream
-      .outputMode(OutputMode.Complete)
-      .format("memory")
-      .queryName(queryName)
-      .start()
-    q.processAllAvailable()
-    q.stop()
     graft.operators.Sketches
-      .hllEstimate(drainMemorySink(spark, queryName), Seq("__w"), p)
+      .hllEstimate(drain(regs, OutputMode.Complete), Seq("__w"), p)
       .select(
         col("__w.start").as("window_start"),
         col("n_registers"),
@@ -241,19 +243,16 @@ object EventStreams {
     * streaming sketch.
     */
   def runCmsStream(
-      spark: SparkSession,
-      dir: String,
-      schema: org.apache.spark.sql.types.StructType,
+      events: DataFrame,
       probes: Seq[String],
       tokenCol: String = "event_type",
       depth: Int = 4,
-      width: Int = 64,
-      queryName: String = "cms_events"): DataFrame = {
+      width: Int = 64): DataFrame = {
     require(probes.nonEmpty, "probes must be non-empty")
     require(depth >= 1 && width >= 2, s"bad sketch dims d=$depth w=$width")
+    val spark = events.sparkSession
     import spark.implicits._
-    val stream = spark.readStream.schema(schema).parquet(dir)
-    val cells = graft.Tables.normalizeTs(stream)
+    val cells = events
       .filter(col(tokenCol).isNotNull)
       .select(window(col("ts"), "1 hour").as("__w"), col(tokenCol).as("__tok"))
       .select(col("__w"), col("__tok"),
@@ -262,20 +261,13 @@ object EventStreams {
         graft.operators.Sketches.cmsBucket(col("__tok"), col("__r"), width)
           .as("__bucket"))
       .agg(count(lit(1)).as("__cnt"))
-    val q = cells.writeStream
-      .outputMode(OutputMode.Complete)
-      .format("memory")
-      .queryName(queryName)
-      .start()
-    q.processAllAvailable()
-    q.stop()
     // the drained table appears on BOTH sides of the finalize join
     // (distinct windows × probes, left-joined back to the cells);
     // re-wrapping one side gives it fresh attribute ids — both
     // branches otherwise carry identical exprIds and analysis fails
     // with conflicting references. The table is ≤ windows·depth·width
     // rows, so the non-codegen hop is free.
-    val cellsTbl = drainMemorySink(spark, queryName)
+    val cellsTbl = drain(cells, OutputMode.Complete)
     val drained = spark.createDataFrame(cellsTbl.rdd, cellsTbl.schema)
     val probe = probes.toDF("term")
       .select(col("term"), explode(sequence(lit(0), lit(depth - 1))).as("__r"))
@@ -304,17 +296,12 @@ object EventStreams {
     * redelivery is NOT idempotent (the CMS caveat, not HLL's).
     */
   def runQuantileStream(
-      spark: SparkSession,
-      dir: String,
-      schema: org.apache.spark.sql.types.StructType,
+      events: DataFrame,
       k: Int = 64,
-      qs: Seq[Double] = Seq(0.5, 0.95),
-      queryName: String = "quantile_events"): DataFrame = {
+      qs: Seq[Double] = Seq(0.5, 0.95)): DataFrame = {
     require(qs.nonEmpty && qs.forall(q => q > 0.0 && q <= 1.0),
       s"quantiles must be in (0, 1], got $qs")
-    val stream = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 1).parquet(dir)
-    val src = graft.Tables.normalizeTs(stream)
+    val src = events
       .filter(col("value").isNotNull && col("event_id").isNotNull)
       .select(window(col("ts"), "1 hour").as("__w"),
         col("value").cast("double").as("__v"),
@@ -325,18 +312,11 @@ object EventStreams {
         .otherwise(length(bin(h.bitwiseAND(-h))) - lit(1))
         .cast("int").as("__tz"))
     val sk = udaf(new graft.operators.LevelSampleAgg(k))
-    val q = withTz
+    val states = withTz
       .groupBy(col("__w"))
       .agg(sk(col("__tz"), col("__v"), col("__id")).as("__st"))
-      .writeStream
-      .outputMode(OutputMode.Complete)
-      .format("memory")
-      .queryName(queryName)
-      .start()
-    q.processAllAvailable()
-    q.stop()
     val w = org.apache.spark.sql.expressions.Window
-    val sampled = drainMemorySink(spark, queryName)
+    val sampled = drain(states, OutputMode.Complete)
       .select(col("__w"), col("__st._1").as("n"), col("__st._2").as("level"),
         explode(col("__st._3")).as("__r"))
       .select(col("__w"), col("n"), col("level"),
@@ -381,33 +361,21 @@ object EventStreams {
     * (the CMS caveat).
     */
   def runTopKStream(
-      spark: SparkSession,
-      dir: String,
-      schema: org.apache.spark.sql.types.StructType,
+      events: DataFrame,
       m: Int = 64,
       k: Int = 5,
-      tokenCol: String = "event_type",
-      queryName: String = "topk_events"): DataFrame = {
+      tokenCol: String = "event_type"): DataFrame = {
     require(k >= 1, s"k must be >= 1, got $k")
-    val stream = spark.readStream.schema(schema).parquet(dir)
-    val src = graft.Tables.normalizeTs(stream)
+    val src = events
       .filter(col(tokenCol).isNotNull)
       .select(window(col("ts"), "1 hour").as("__w"),
         col(tokenCol).cast("string").as("__tok"))
     val ss = udaf(new graft.operators.SpaceSavingAgg(m))
-    val q = src.groupBy(col("__w"))
-      .agg(ss(col("__tok")).as("__ss"))
-      .writeStream
-      .outputMode(OutputMode.Complete)
-      .format("memory")
-      .queryName(queryName)
-      .start()
-    q.processAllAvailable()
-    q.stop()
+    val summaries = src.groupBy(col("__w")).agg(ss(col("__tok")).as("__ss"))
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("__w"))
       .orderBy(col("est").desc, col("term"))
-    drainMemorySink(spark, queryName)
+    drain(summaries, OutputMode.Complete)
       .select(col("__w"), explode(col("__ss")).as("__e"))
       .select(col("__w"), col("__e._1").as("term"),
         col("__e._2").as("est"), col("__e._3").as("err"))
@@ -417,25 +385,11 @@ object EventStreams {
         col("term"), col("est"), col("err"))
   }
 
-  /** The windowed aggregation as a real streaming query over a parquet
-    * directory (memory sink): the drained table (qe8).
+  /** The windowed aggregation as a real streaming query: the drained
+    * table (qe8). Complete mode: append would withhold windows newer
+    * than the final watermark, so a bounded replay would lose the tail
+    * windows.
     */
-  def runWindowedStream(
-      spark: SparkSession,
-      dir: String,
-      schema: org.apache.spark.sql.types.StructType,
-      queryName: String = "windowed_events"): DataFrame = {
-    val stream = spark.readStream.schema(schema).parquet(dir)
-    val withTs = graft.Tables.normalizeTs(stream)
-    // Complete mode: append would withhold windows newer than the final
-    // watermark, so a bounded replay would lose the tail windows
-    val q = windowedCounts(withTs, watermark = true).writeStream
-      .outputMode(OutputMode.Complete)
-      .format("memory")
-      .queryName(queryName)
-      .start()
-    q.processAllAvailable()
-    q.stop()
-    drainMemorySink(spark, queryName)
-  }
+  def runWindowedStream(events: DataFrame): DataFrame =
+    drain(windowedCounts(events, watermark = true), OutputMode.Complete)
 }

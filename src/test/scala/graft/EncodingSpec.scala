@@ -19,7 +19,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * returns identical rows on each. The engine must be invariant to the
   * producer's timestamp encoding, provably.
   */
-class EncodingSpec extends AnyFunSuite {
+class EncodingSpec extends AnyFunSuite with TempDirs {
   private lazy val spark = GraftSession.local(4, "encoding-spec")
   private val sf = "/root/testdata/sf0.001"
 
@@ -28,7 +28,7 @@ class EncodingSpec extends AnyFunSuite {
     * nothing else).
     */
   private def stage(transform: DataFrame => DataFrame): String = {
-    val dir = java.nio.file.Files.createTempDirectory("graft-enc").toString
+    val dir = tempDir("graft-enc").toString
     val ev = Tables.normalizeTs(Tables.events(spark, sf))
     transform(ev).write.mode("overwrite").parquet(s"$dir/events.parquet")
     dir
@@ -92,7 +92,7 @@ class EncodingSpec extends AnyFunSuite {
     * bit-identical across the two encodings.
     */
   private lazy val embDouble: String = {
-    val dir = java.nio.file.Files.createTempDirectory("graft-enc-emb").toString
+    val dir = tempDir("graft-enc-emb").toString
     Tables
       .embeddings(spark, sf)
       .withColumn("embedding", col("embedding").cast("array<double>"))
@@ -127,7 +127,7 @@ class EncodingSpec extends AnyFunSuite {
     * driver's schema compare engine-wide.
     */
   test("q1_agg is invariant under a DECIMAL(12,2) lineitem regeneration") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-enc-dec").toString
+    val dir = tempDir("graft-enc-dec").toString
     val li = Tables.lineitem(spark, sf)
     li.schema.fields.filter(_.dataType == org.apache.spark.sql.types.DoubleType)
       .foldLeft(li)((d, f) => d.withColumn(f.name, col(f.name).cast("decimal(12,2)")))
@@ -153,7 +153,7 @@ class EncodingSpec extends AnyFunSuite {
     * TZ for all three encodings.
     */
   private def stageDates(cast: String): String = {
-    val dir = java.nio.file.Files.createTempDirectory("graft-enc-date").toString
+    val dir = tempDir("graft-enc-date").toString
     Tables.lineitem(spark, sf)
       .withColumn("l_shipdate", col("l_shipdate").cast(cast))
       .write.mode("overwrite").parquet(s"$dir/lineitem.parquet")

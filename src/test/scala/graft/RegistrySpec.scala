@@ -74,7 +74,8 @@ class RegistrySpec extends AnyFunSuite {
   /** The gates that write and re-read files stage them under a `graft-*`
     * temp dir; a dir left behind is a table copy leaked per bench run.
     * `graft-sent-cache` is the stream gates' sentinel store, kept for the
-    * JVM's lifetime on purpose.
+    * JVM's lifetime on purpose. The stream gates also must leave no
+    * query running and no memory-sink view in the session catalog.
     */
   test("gates that stage files leave no graft-* entry in the temp dir") {
     import scala.jdk.CollectionConverters._
@@ -84,7 +85,12 @@ class RegistrySpec extends AnyFunSuite {
       "qz8_focal", "qf1_shapefile", "qf2_geojson", "qf3_osmxml",
       "qf4_vector_tile", "qf6_orc_roundtrip", "qf7_compact",
       "qf8_polygon_holes", "qf9_shapefile_v2", "qy2_bucket_join", "qy3_zbox",
-      "qy7_hilbert_box")
+      "qy7_hilbert_box",
+      "qe6_stream_sessions", "qe7_stream_join", "qe8_stream_window",
+      "qe9_stream_dedup", "qe10_stream_enrich", "qe11_batch_sink",
+      "qe12_stream_txlog", "qe13_stream_left_join", "qe17_stream_full_join",
+      "qe18_stream_dedup_join", "qe24_stream_hll", "qe27_stream_cms",
+      "qe51_stream_quantile", "qe52_stream_topk")
     val tmp = java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"))
     def staged(): Set[String] = {
       val ls = java.nio.file.Files.list(tmp)
@@ -93,9 +99,16 @@ class RegistrySpec extends AnyFunSuite {
       finally ls.close()
     }
     val spark = GraftSession.local(2, "registry-spec")
+    def views(): Set[String] =
+      spark.catalog.listTables().collect().filter(_.isTemporary).map(_.name).toSet
     val before = staged()
+    val viewsBefore = views()
     gates.foreach(g => SparkEntry.queries(g)(spark, "/root/testdata/sf0.001").collect())
     val leaked = staged() -- before
     assert(leaked.isEmpty, s"staging dirs left behind: ${leaked.toSeq.sorted}")
+    assert(spark.streams.active.isEmpty,
+      s"queries left running: ${spark.streams.active.map(_.name).toSeq}")
+    val leakedViews = views() -- viewsBefore
+    assert(leakedViews.isEmpty, s"sink views left behind: ${leakedViews.toSeq.sorted}")
   }
 }

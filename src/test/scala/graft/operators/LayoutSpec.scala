@@ -3,14 +3,14 @@ package graft.operators
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.GraftSession
+import graft.{GraftSession, TempDirs}
 
 /** Layout-tier contracts: Z-order bit exactness vs a loop reference,
   * disjoint Z ranges after clustering (the file-pruning precondition),
   * a measured pruning win vs round-robin layout, shuffle-free compaction,
   * and the no-Exchange bucketed join.
   */
-class LayoutSpec extends AnyFunSuite {
+class LayoutSpec extends AnyFunSuite with TempDirs {
   private lazy val spark = GraftSession.local(4, "layout-spec")
   import spark.implicits._
 
@@ -137,7 +137,7 @@ class LayoutSpec extends AnyFunSuite {
   }
 
   test("boxQuery over a z-clustered table: pushed z intervals, exact result") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-zbox").toString
+    val dir = tempDir("graft-zbox").toString
     val rnd = new scala.util.Random(23)
     val pts = rnd.shuffle(for { x <- 0 until 128; y <- 0 until 128 } yield (x, y))
     Layout.clusterByZorderKeep(pts.toDF("x", "y"), Seq($"x", $"y"), numFiles = 16)
@@ -154,8 +154,8 @@ class LayoutSpec extends AnyFunSuite {
   }
 
   test("compact coalesces a small-files directory without a shuffle") {
-    val in = java.nio.file.Files.createTempDirectory("graft-compact-in").toString
-    val out = java.nio.file.Files.createTempDirectory("graft-compact-out").toString
+    val in = tempDir("graft-compact-in").toString
+    val out = tempDir("graft-compact-out").toString
     spark.range(10000).select($"id", ($"id" % 97).as("k"))
       .repartition(32).write.mode("overwrite").parquet(in)
     val inFiles = new java.io.File(in).listFiles.count(_.getName.endsWith(".parquet"))
@@ -192,8 +192,8 @@ class LayoutSpec extends AnyFunSuite {
   }
 
   test("compact sizes PARTITIONED layouts correctly (nested data files, not 0 bytes)") {
-    val in = java.nio.file.Files.createTempDirectory("graft-compact-part").toString
-    val out = java.nio.file.Files.createTempDirectory("graft-compact-part-out").toString
+    val in = tempDir("graft-compact-part").toString
+    val out = tempDir("graft-compact-part-out").toString
     spark.range(20000).select($"id", ($"id" % 4).as("p"), ($"id" % 97).as("k"))
       .repartition(8).write.mode("overwrite").partitionBy("p").parquet(in)
     // data files live under p=*/ subdirectories; a top-level listing sees 0
@@ -211,14 +211,14 @@ class LayoutSpec extends AnyFunSuite {
     assert(pruned.queryExecution.executedPlan.toString.contains("PartitionFilters: [isnotnull(p"),
       "partition filter did not reach the scan")
     // an empty directory fails loudly instead of planning a 1-file rewrite
-    val empty = java.nio.file.Files.createTempDirectory("graft-compact-empty").toString
+    val empty = tempDir("graft-compact-empty").toString
     val ex = intercept[IllegalArgumentException](
       Layout.compact(spark, empty, out, targetBytes = 1024))
     assert(ex.getMessage.contains("no .parquet"))
   }
 
   test("bloom index: point lookup scans candidate files only, result == full-scan filter") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-bloom").toString
+    val dir = tempDir("graft-bloom").toString
     // high-cardinality key with NO ordering: min/max file stats are
     // useless (every file spans ~the full key range), only the bloom prunes
     val df = spark.range(50000)
@@ -245,7 +245,7 @@ class LayoutSpec extends AnyFunSuite {
   }
 
   test("minmax index: range lookup scans overlapping files only, result == full-scan filter") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-minmax").toString
+    val dir = tempDir("graft-minmax").toString
     val df = spark.range(50000).select($"id".as("k"), ($"id" * 7).as("payload"))
     Layout.writeMinMaxIndexed(df, "k", dir, numFiles = 16)
 
@@ -289,7 +289,7 @@ class LayoutSpec extends AnyFunSuite {
   }
 
   test("bucketed tables join with no Exchange on either side") {
-    val wh = java.nio.file.Files.createTempDirectory("graft-bucket").toString
+    val wh = tempDir("graft-bucket").toString
     val facts = spark.range(20000).select($"id".as("k"), ($"id" * 7 % 1000).as("v"))
     val dims = spark.range(5000).select($"id".as("k"), concat(lit("n"), $"id").as("name"))
     Layout.writeBucketed(facts, "layoutspec_facts", "k", 8, wh)
@@ -408,7 +408,7 @@ class LayoutSpec extends AnyFunSuite {
   }
 
   test("hilbertBoxQuery over a clustered table: pushed h intervals, exact result") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-hbox").toString
+    val dir = tempDir("graft-hbox").toString
     val rnd = new scala.util.Random(41)
     val pts = rnd.shuffle(for { x <- 0 until 128; y <- 0 until 128 } yield (x, y))
     Layout.clusterByHilbertKeep(pts.toDF("x", "y"), Seq($"x", $"y"), numFiles = 16, order = 8)

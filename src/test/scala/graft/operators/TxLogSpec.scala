@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.GraftSession
+import graft.{GraftSession, TempDirs}
 
 /** Transaction-log table contracts: time-travel exactness, partial
   * rewrite reusing clean files BY REFERENCE, optimistic-concurrency
@@ -11,12 +11,12 @@ import graft.GraftSession
   * staged data never appears), vacuum reclaiming only unreferenced
   * files, and the rewrite-to-empty edge.
   */
-class TxLogSpec extends AnyFunSuite {
+class TxLogSpec extends AnyFunSuite with TempDirs {
   private lazy val spark = GraftSession.local(4, "txlog-spec")
   import spark.implicits._
 
   private def tmp(): String =
-    java.nio.file.Files.createTempDirectory("graft-txlog").resolve("tbl").toString
+    tempDir("graft-txlog").resolve("tbl").toString
 
   private def liveNames(dir: String, v: Long): Set[String] =
     TxLog.snapshot(spark, dir, Some(v))
@@ -49,7 +49,7 @@ class TxLogSpec extends AnyFunSuite {
     // paths relative to the WRONG anchor — snapshots then re-resolved
     // them against the root (FileNotFound) and DV (file,pos) keys split.
     // Identity is now anchored on the table root itself.
-    val dir = java.nio.file.Files.createTempDirectory("graft-txlog")
+    val dir = tempDir("graft-txlog")
       .resolve("data").resolve("cache").resolve("tbl").toString
     TxLog.create(spark, dir, (1L to 10L).map(i => (i, s"s$i")).toDF("id", "s"))
     TxLog.append(spark, dir, Seq((11L, "s11")).toDF("id", "s"))

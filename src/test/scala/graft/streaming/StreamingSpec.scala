@@ -1,14 +1,38 @@
 package graft.streaming
 
-import graft.{GraftSession, Tables}
+import graft.{GraftSession, Tables, TempDirs}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-class StreamingSpec extends AnyFunSuite {
+class StreamingSpec extends AnyFunSuite with TempDirs {
   private lazy val spark = GraftSession.local(4, "streaming-spec")
   private val sfDir = "/root/testdata/sf0.001"
 
   private def events = Tables.normalizeTs(Tables.events(spark, sfDir))
+
+  /** A fresh dir holding one copy of the sf events file per name (file
+    * stream sources need a directory, not a single file).
+    */
+  private def eventsDir(names: String*): java.nio.file.Path = {
+    val dir = tempDir("graft-events")
+    names.foreach(n =>
+      java.nio.file.Files.copy(java.nio.file.Paths.get(s"$sfDir/events.parquet"), dir.resolve(n)))
+    dir
+  }
+
+  /** The events file stream over `dir`, `ts` normalized as the runners
+    * expect.
+    */
+  private def fileStream(dir: java.nio.file.Path, oneFilePerTrigger: Boolean = false): DataFrame = {
+    val reader = spark.readStream.schema(Tables.events(spark, sfDir).schema)
+    Tables.normalizeTs(
+      (if (oneFilePerTrigger) reader.option("maxFilesPerTrigger", 1) else reader)
+        .parquet(dir.toString))
+  }
+
+  private def tempViews(): Set[String] =
+    spark.catalog.listTables().collect().filter(_.isTemporary).map(_.name).toSet
 
   test("stateful sessionization matches the batch window-function form") {
     import spark.implicits._
@@ -61,7 +85,7 @@ class StreamingSpec extends AnyFunSuite {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     implicit val sqlCtx: org.apache.spark.sql.SQLContext =
       spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession].sqlContext
-    val out = java.nio.file.Files.createTempDirectory("graft-e1o").toString
+    val out = tempDir("graft-e1o").toString
 
     // the per-batch kernel: same batchId redelivered ⇒ same final rows
     val b0 = Seq((1L, "a"), (2L, "b")).toDF("id", "v")
@@ -73,8 +97,8 @@ class StreamingSpec extends AnyFunSuite {
     assert(rows == Set((1L, "a", 0), (2L, "b", 0), (3L, "c", 1)))
 
     // end-to-end: a real writeStream through the sink lands each input once
-    val out2 = java.nio.file.Files.createTempDirectory("graft-e1o-2").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("graft-e1o-ck").toString
+    val out2 = tempDir("graft-e1o-2").toString
+    val ckpt = tempDir("graft-e1o-ck").toString
     val mem = MemoryStream[(Long, String)]
     val q = EventStreams.idempotentParquetSink(mem.toDF().toDF("id", "v"), out2, ckpt)
     try {
@@ -96,7 +120,7 @@ class StreamingSpec extends AnyFunSuite {
     import graft.operators.TxLog
     implicit val sqlCtx: org.apache.spark.sql.SQLContext =
       spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession].sqlContext
-    val dir = java.nio.file.Files.createTempDirectory("graft-txsink").resolve("tbl").toString
+    val dir = tempDir("graft-txsink").resolve("tbl").toString
 
     // per-batch kernel: batch b commits as version b+1; redelivery no-ops
     TxLog.create(spark, dir, Seq.empty[(Long, String)].toDF("id", "v"))
@@ -112,8 +136,8 @@ class StreamingSpec extends AnyFunSuite {
       Set((1L, "a"), (2L, "b")))
 
     // end-to-end: a real writeStream through the sink, one version per batch
-    val dir2 = java.nio.file.Files.createTempDirectory("graft-txsink2").resolve("tbl").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("graft-txsink-ck").toString
+    val dir2 = tempDir("graft-txsink2").resolve("tbl").toString
+    val ckpt = tempDir("graft-txsink-ck").toString
     TxLog.create(spark, dir2, Seq.empty[(Long, String)].toDF("id", "v"))
     val mem = MemoryStream[(Long, String)]
     val q = EventStreams.txLogSink(mem.toDF().toDF("id", "v"), dir2, ckpt)
@@ -136,7 +160,7 @@ class StreamingSpec extends AnyFunSuite {
     // {09:00} and {10:00, 10:10} — the compact lastEpoch state cannot
     // recover this, the buffered variant must
     def ts(hhmm: String) = Timestamp.valueOf(s"2024-01-01 $hhmm:00")
-    val dir = java.nio.file.Files.createTempDirectory("buffered-sessions").toString
+    val dir = tempDir("buffered-sessions").toString
     def writeBatch(name: String, rows: Seq[StatefulSessions.Event], mtime: Long): Unit = {
       val sub = s"$dir/$name"
       rows.toDS().repartition(1).write.parquet(sub)
@@ -172,7 +196,7 @@ class StreamingSpec extends AnyFunSuite {
     import spark.implicits._
     import java.sql.Timestamp
     def ts(hhmm: String) = Timestamp.valueOf(s"2024-01-01 $hhmm:00")
-    val dir = java.nio.file.Files.createTempDirectory("buffered-compact").toString
+    val dir = tempDir("buffered-compact").toString
     def writeBatch(name: String, rows: Seq[StatefulSessions.Event], mtime: Long): Unit = {
       val sub = s"$dir/$name"
       rows.toDS().repartition(1).write.parquet(sub)
@@ -210,14 +234,8 @@ class StreamingSpec extends AnyFunSuite {
   }
 
   test("streaming windowed aggregation equals the batch q17 aggregation") {
-    val raw = Tables.events(spark, sfDir)
-    // file stream sources need a directory, not a single file
-    val dir = java.nio.file.Files.createTempDirectory("events-stream")
-    java.nio.file.Files.copy(
-      java.nio.file.Paths.get(s"$sfDir/events.parquet"),
-      dir.resolve("events.parquet"))
     val streamed = EventStreams
-      .runWindowedStream(spark, dir.toString, raw.schema)
+      .runWindowedStream(fileStream(eventsDir("events.parquet")))
       .collect()
       .map(r => (r.getTimestamp(0), r.getString(1), r.getLong(2), r.getDouble(3)))
       .toSet
@@ -230,20 +248,12 @@ class StreamingSpec extends AnyFunSuite {
   }
 
   test("streaming HLL: drained registers equal the batch sketch; duplicate files are free") {
-    val raw = Tables.events(spark, sfDir)
-    val dir = java.nio.file.Files.createTempDirectory("events-hll-stream")
     // the SAME file staged twice: every user id arrives twice, and the
     // register max must absorb the repeats — the merge-idempotence that
     // makes the sketch safe under redelivery
-    java.nio.file.Files.copy(
-      java.nio.file.Paths.get(s"$sfDir/events.parquet"),
-      dir.resolve("events.parquet"))
-    java.nio.file.Files.copy(
-      java.nio.file.Paths.get(s"$sfDir/events.parquet"),
-      dir.resolve("events_again.parquet"))
+    val dir = eventsDir("events.parquet", "events_again.parquet")
     val streamed = EventStreams
-      .runHllStream(spark, dir.toString, raw.schema, p = 4,
-        queryName = s"hll_spec_${System.nanoTime()}")
+      .runHllStream(fileStream(dir), p = 4)
       .collect()
       .map(r => (r.getTimestamp(0), r.getLong(1), r.getDouble(2)))
       .toSet
@@ -260,7 +270,6 @@ class StreamingSpec extends AnyFunSuite {
 
   test("streaming top-k: exact-regime drain equals batch counts with the " +
     "same rank cut; redelivery DOUBLES estimates (sum-merge)") {
-    val raw = Tables.events(spark, sfDir)
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("__w")).orderBy(col("est").desc, col("term"))
     def batchTopk(times: Int) = events
@@ -275,13 +284,9 @@ class StreamingSpec extends AnyFunSuite {
       .collect()
       .map(r => (r.getTimestamp(0), r.getLong(1), r.getString(2), r.getLong(3)))
       .toSet
-    val dir = java.nio.file.Files.createTempDirectory("events-topk-stream")
-    java.nio.file.Files.copy(
-      java.nio.file.Paths.get(s"$sfDir/events.parquet"),
-      dir.resolve("events.parquet"))
+    val dir = eventsDir("events.parquet")
     def streamed() = EventStreams
-      .runTopKStream(spark, dir.toString, raw.schema, m = 64, k = 3,
-        queryName = s"topk_spec_${System.nanoTime()}")
+      .runTopKStream(fileStream(dir), m = 64, k = 3)
       .collect()
       .map { r =>
         assert(r.getLong(4) == 0L) // exact regime: every err 0
@@ -304,15 +309,14 @@ class StreamingSpec extends AnyFunSuite {
     val raw = Tables.events(spark, sfDir)
     // TWO staged files + maxFilesPerTrigger=1 => the merge path (not
     // just reduce) carries state across micro-batches
-    val dir = java.nio.file.Files.createTempDirectory("events-q-stream")
+    val dir = tempDir("graft-events-q")
     raw.repartition(2).write.mode("overwrite").parquet(dir.toString)
     // k = 64: every sf0.001 window is below k — the exact path.
     // k = 2: windows exceed k — the level-rise/prune/merge path.
     for (k <- Seq(64, 2)) {
     val streamed = EventStreams
-      .runQuantileStream(spark, dir.toString, raw.schema, k = k,
-        qs = Seq(0.5, 0.95),
-        queryName = s"q_spec_${System.nanoTime()}")
+      .runQuantileStream(fileStream(dir, oneFilePerTrigger = true), k = k,
+        qs = Seq(0.5, 0.95))
       .collect()
       .map(r => (r.getTimestamp(0), r.getDouble(1), r.getLong(2),
         r.getLong(3), r.getLong(4), r.getDouble(5)))
@@ -365,53 +369,44 @@ class StreamingSpec extends AnyFunSuite {
   }
 
   test("streaming CMS: deterministic drain; redelivery DOUBLES estimates (sum-merge, unlike HLL's max)") {
-    val raw = Tables.events(spark, sfDir)
-    val once = java.nio.file.Files.createTempDirectory("events-cms-once")
-    val twice = java.nio.file.Files.createTempDirectory("events-cms-twice")
-    java.nio.file.Files.copy(
-      java.nio.file.Paths.get(s"$sfDir/events.parquet"),
-      once.resolve("events.parquet"))
-    java.nio.file.Files.copy(
-      java.nio.file.Paths.get(s"$sfDir/events.parquet"),
-      twice.resolve("events.parquet"))
-    java.nio.file.Files.copy(
-      java.nio.file.Paths.get(s"$sfDir/events.parquet"),
-      twice.resolve("events_again.parquet"))
-    def run(dir: java.nio.file.Path, tag: String) = EventStreams
-      .runCmsStream(spark, dir.toString, raw.schema,
-        probes = Seq("click", "purchase", "zzz_missing"),
-        queryName = s"cms_spec_${tag}_${System.nanoTime()}")
+    val once = eventsDir("events.parquet")
+    val twice = eventsDir("events.parquet", "events_again.parquet")
+    def run(dir: java.nio.file.Path) = EventStreams
+      .runCmsStream(fileStream(dir),
+        probes = Seq("click", "purchase", "zzz_missing"))
       .collect()
       .map(r => (r.getTimestamp(0), r.getString(1)) -> r.getLong(2))
       .toMap
-    val single = run(once, "a")
+    val single = run(once)
     // deterministic: a second drain of the same files reproduces it
-    assert(run(once, "b") == single)
+    assert(run(once) == single)
     // sum is the CMS merge: every cell doubles, so every min doubles —
     // the at-least-once caveat the HLL sketch (register max) does NOT
     // have; exactly-once delivery is the qe12 sink's job, not the
     // sketch's
-    val doubled = run(twice, "c")
+    val doubled = run(twice)
     assert(doubled.keySet == single.keySet)
     single.foreach { case (k, v) => assert(doubled(k) == 2 * v, s"$k") }
     // the present probes are genuinely counted somewhere
     assert(single.exists { case ((_, t), v) => t == "click" && v > 0 })
     intercept[IllegalArgumentException](
-      EventStreams.runCmsStream(spark, once.toString, raw.schema, probes = Seq.empty))
+      EventStreams.runCmsStream(fileStream(once), probes = Seq.empty))
+  }
+
+  test("a failed replay stops its query and leaves no sink view in the catalog") {
+    val dir = eventsDir("events.parquet")
+    java.nio.file.Files.write(dir.resolve("corrupt.parquet"), "not parquet".getBytes("UTF-8"))
+    val viewsBefore = tempViews()
+    intercept[org.apache.spark.sql.streaming.StreamingQueryException](
+      EventStreams.runWindowedStream(fileStream(dir)))
+    assert(spark.streams.active.isEmpty, "the failed query is still active")
+    assert(tempViews() == viewsBefore,
+      s"views left behind: ${(tempViews() -- viewsBefore).toSeq.sorted}")
   }
 
   test("streaming dedup drops duplicate event ids within the watermark") {
-    val raw = Tables.events(spark, sfDir)
-    val dir = java.nio.file.Files.createTempDirectory("events-dedup")
-    java.nio.file.Files.copy(
-      java.nio.file.Paths.get(s"$sfDir/events.parquet"),
-      dir.resolve("a.parquet"))
     // duplicate the whole file: every event id appears twice in the stream
-    java.nio.file.Files.copy(
-      java.nio.file.Paths.get(s"$sfDir/events.parquet"),
-      dir.resolve("b.parquet"))
-    val stream = spark.readStream.schema(raw.schema).parquet(dir.toString)
-    val withTs = Tables.normalizeTs(stream)
+    val withTs = fileStream(eventsDir("a.parquet", "b.parquet"))
     val q = EventStreams
       .dedupStream(withTs, "event_id")
       .writeStream.outputMode("append").format("memory").queryName("dedup_events").start()
@@ -421,16 +416,12 @@ class StreamingSpec extends AnyFunSuite {
   }
 
   test("watermark dedup with no-data batches off drains in one micro-batch, each id once") {
-    val raw = Tables.events(spark, sfDir)
-    val dir = java.nio.file.Files.createTempDirectory("events-dedup-nodata")
-    for (f <- Seq("a.parquet", "b.parquet"))
-      java.nio.file.Files.copy(java.nio.file.Paths.get(s"$sfDir/events.parquet"), dir.resolve(f))
+    val dir = eventsDir("a.parquet", "b.parquet")
     def drain(noDataBatches: String): (Int, Array[Long]) =
       graft.SparkEntry.withConf(
           spark, "spark.sql.streaming.noDataMicroBatches.enabled" -> noDataBatches) {
         val name = s"dedup_nodata_$noDataBatches"
-        val stream = Tables.normalizeTs(spark.readStream.schema(raw.schema).parquet(dir.toString))
-        val q = EventStreams.dedupStream(stream, "event_id")
+        val q = EventStreams.dedupStream(fileStream(dir), "event_id")
           .writeStream.outputMode("append").format("memory").queryName(name).start()
         try q.processAllAvailable() finally q.stop()
         val ids = spark.table(name).select("event_id").collect().map(_.getLong(0))
@@ -499,13 +490,7 @@ class StreamingSpec extends AnyFunSuite {
   }
 
   test("stream-stream interval join equals the batch equivalent") {
-    val raw = Tables.events(spark, sfDir)
-    val dir = java.nio.file.Files.createTempDirectory("events-ssj")
-    java.nio.file.Files.copy(
-      java.nio.file.Paths.get(s"$sfDir/events.parquet"), dir.resolve("e.parquet"))
-    val stream = Tables.normalizeTs(
-      spark.readStream.schema(raw.schema).parquet(dir.toString))
-    val q = EventStreams.clickToPurchaseJoin(stream)
+    val q = EventStreams.clickToPurchaseJoin(fileStream(eventsDir("e.parquet")))
       .writeStream.outputMode("append").format("memory").queryName("ssj").start()
     q.processAllAvailable(); q.stop()
     val streamed = spark.table("ssj").collect()
@@ -654,7 +639,7 @@ class StreamingSpec extends AnyFunSuite {
   test("multimodal: imageDims reads TIFF and WebP headers without a codec") {
     import graft.multimodal.Multimodal.imageDims
     // TIFF both byte orders: real header built by the engine's own writer
-    val dir = java.nio.file.Files.createTempDirectory("dims")
+    val dir = tempDir("dims")
     val p = dir.resolve("t.tif").toString
     graft.sources.GeoTiff.write(p, 19, 7, Array.fill(19 * 7)(1.0f), 1.0, 1.0, 0.0, 7.0)
     assert(imageDims(java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(p)))

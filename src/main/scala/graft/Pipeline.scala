@@ -64,11 +64,12 @@ object Pipeline {
       s"criticality_rows=${wayStats.collect().length} eaul_rows=${eaul.collect().length} -> $outDir")
   }
 
-  /** Serialize the grid(6) demo network to OSM XML in a temp dir —
-    * the self-contained input for demo runs and the end-to-end spec.
+  /** Serialize the grid(6) demo network to OSM XML in `dir` (a fresh
+    * temp dir by default) — the self-contained input for demo runs and
+    * the end-to-end spec, which passes a dir it deletes.
     */
-  def demoOsmDir(): String = {
-    val dir = java.nio.file.Files.createTempDirectory("pipeline-osm")
+  def demoOsmDir(
+      dir: java.nio.file.Path = java.nio.file.Files.createTempDirectory("pipeline-osm")): String = {
     val nodes = graft.graph.DemoNetwork.grid(6)._1
     val osmNodes = (0 until nodes.numNodes).map(i => OsmXml.OsmNode(i.toLong, nodes.nodeLon(i), nodes.nodeLat(i)))
     val osmWays = nodes.ways.map { w =>

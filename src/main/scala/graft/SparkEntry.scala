@@ -82,6 +82,19 @@ object SparkEntry {
       .filter(col("o_orderkey") % every === 0)
       .select((col("o_custkey") % mod).as("x"), (col("o_orderkey") % mod).as("y"))
 
+  /** The nation trade graph the PageRank, HITS and message-passing gates
+    * run on: orders ⋈ customer ⋈ lineitem ⋈ supplier grouped into one
+    * edge (src = customer nation, dst = supplier nation) with weight
+    * `weight` as `w`. Each gate's oracle SQL replays the same join.
+    */
+  private def nationGraph(spark: SparkSession, dir: String, weight: Column): DataFrame =
+    t(spark, dir, "orders")
+      .join(t(spark, dir, "customer"), col("o_custkey") === col("c_custkey"))
+      .join(t(spark, dir, "lineitem"), col("l_orderkey") === col("o_orderkey"))
+      .join(t(spark, dir, "supplier"), col("l_suppkey") === col("s_suppkey"))
+      .groupBy(col("c_nationkey").as("src"), col("s_nationkey").as("dst"))
+      .agg(weight.as("w"))
+
   private val ShufflePartitions = "spark.sql.shuffle.partitions"
   private val NoDataBatches = "spark.sql.streaming.noDataMicroBatches.enabled"
 
@@ -506,6 +519,18 @@ object SparkEntry {
         spark.sparkContext.parallelize(out.collect().toIndexedSeq, 1), out.schema)
     } finally rmTree(dir)
   }
+
+  /** The tx-log gates' fixture: inside [[staged]], the table root `tbl`
+    * under the stage dir and the orders (key, customer, price) columns
+    * the gate commits into it.
+    */
+  private def stagedOrdersTxLog(spark: SparkSession, dir: String, name: String)(
+      body: (String, DataFrame) => DataFrame): DataFrame =
+    staged(spark, name) { wh =>
+      val orders = t(spark, dir, "orders")
+        .select(col("o_orderkey"), col("o_custkey"), col("o_totalprice"))
+      body(wh.resolve("tbl").toString, orders)
+    }
 
   /** The bounded replay behind every stream gate: the events parquet
     * (file or directory) is copied into a fresh `graft-events-src` dir
@@ -2450,12 +2475,7 @@ object SparkEntry {
     * aggregation — 2-hop upstream structural signatures per nation.
     */
   private def qg16MsgPass(spark: SparkSession, dir: String): DataFrame = {
-    val edges = t(spark, dir, "orders")
-      .join(t(spark, dir, "customer"), col("o_custkey") === col("c_custkey"))
-      .join(t(spark, dir, "lineitem"), col("l_orderkey") === col("o_orderkey"))
-      .join(t(spark, dir, "supplier"), col("l_suppkey") === col("s_suppkey"))
-      .groupBy(col("c_nationkey").as("src"), col("s_nationkey").as("dst"))
-      .agg(count(lit(1)).as("w"))
+    val edges = nationGraph(spark, dir, count(lit(1)))
     graph.MessagePassing.run(edges, "src", "dst", "w", rounds = 2)
   }
 
@@ -2812,11 +2832,8 @@ object SparkEntry {
     * aggregate. History preservation and CDF-of-restore are
     * TxLogSpec's job.
     */
-  private def qf17TxlogRestore(spark: SparkSession, dir: String): DataFrame = {
-    staged(spark, "qf17") { wh =>
-      val root = wh.resolve("tbl").toString
-      val orders = t(spark, dir, "orders")
-        .select(col("o_orderkey"), col("o_custkey"), col("o_totalprice"))
+  private def qf17TxlogRestore(spark: SparkSession, dir: String): DataFrame =
+    stagedOrdersTxLog(spark, dir, "qf17") { (root, orders) =>
       operators.TxLog.create(
         spark, root,
         orders.filter(col("o_orderkey") % 3 === 0)
@@ -2831,7 +2848,6 @@ object SparkEntry {
           count(lit(1)).as("n"),
           round(sum(col("o_totalprice")), 2).as("sum_price"))
     }
-  }
 
   /** Composed partition + stats pruning
     * ([[operators.TxLog.snapshotWhereRange]]): the table partitions by
@@ -4592,11 +4608,8 @@ object SparkEntry {
     * concurrency / vacuum / partial-rewrite file identity are
     * TxLogSpec's job.
     */
-  private def qf11Txlog(spark: SparkSession, dir: String): DataFrame = {
-    staged(spark, "qf11") { wh =>
-      val root = wh.resolve("tbl").toString
-      val orders = t(spark, dir, "orders")
-        .select(col("o_orderkey"), col("o_custkey"), col("o_totalprice"))
+  private def qf11Txlog(spark: SparkSession, dir: String): DataFrame =
+    stagedOrdersTxLog(spark, dir, "qf11") { (root, orders) =>
       operators.TxLog.create(spark, root, orders.filter(col("o_orderkey") % 3 === 0))
       operators.TxLog.append(spark, root, orders.filter(col("o_orderkey") % 3 === 1))
       operators.TxLog.rewrite(spark, root, col("o_totalprice") >= 150000.0)
@@ -4608,7 +4621,6 @@ object SparkEntry {
           .select(lit(v).as("version"), col("n"), col("sum_price"))
       }.reduce(_ unionByName _)
     }
-  }
 
   /** Manifest-stats range scan over the tx-log table
     * ([[operators.TxLog.snapshotRange]]): orders commit in two versions
@@ -4680,11 +4692,8 @@ object SparkEntry {
     * — breaks count/sum/hash. File-count, history, and refreshed-stats
     * contracts are TxLogSpec's job.
     */
-  private def qf12TxlogOptimize(spark: SparkSession, dir: String): DataFrame = {
-    staged(spark, "qf12") { wh =>
-      val root = wh.resolve("tbl").toString
-      val orders = t(spark, dir, "orders")
-        .select(col("o_orderkey"), col("o_custkey"), col("o_totalprice"))
+  private def qf12TxlogOptimize(spark: SparkSession, dir: String): DataFrame =
+    stagedOrdersTxLog(spark, dir, "qf12") { (root, orders) =>
       operators.TxLog.create(
         spark, root, orders.filter(col("o_orderkey") % 4 === 0).repartition(6),
         statsCol = Some("o_orderkey"))
@@ -4700,7 +4709,6 @@ object SparkEntry {
           count(lit(1)).as("n"),
           round(sum(col("o_totalprice")), 2).as("sum_price"))
     }
-  }
 
   /** Tx-log MERGE (upsert) end-to-end ([[operators.TxLog.merge]]): the
     * orderkey%4=0 slice becomes the standing table (range-partitioned
@@ -4714,11 +4722,8 @@ object SparkEntry {
     * the hash. Dirty-file bounding / source-key-uniqueness / empty-edge
     * contracts are TxLogSpec's job.
     */
-  private def qf13TxlogMerge(spark: SparkSession, dir: String): DataFrame = {
-    staged(spark, "qf13") { wh =>
-      val root = wh.resolve("tbl").toString
-      val orders = t(spark, dir, "orders")
-        .select(col("o_orderkey"), col("o_custkey"), col("o_totalprice"))
+  private def qf13TxlogMerge(spark: SparkSession, dir: String): DataFrame =
+    stagedOrdersTxLog(spark, dir, "qf13") { (root, orders) =>
       operators.TxLog.create(
         spark, root,
         orders.filter(col("o_orderkey") % 4 === 0)
@@ -4729,7 +4734,6 @@ object SparkEntry {
       operators.TxLog.snapshot(spark, root)
         .select(col("o_orderkey"), col("o_custkey"), col("o_totalprice"))
     }
-  }
 
   /** Row-level change data feed over the tx-log table
     * ([[operators.TxLog.changes]]): v1 appends the %4=1 slice, v2
@@ -4743,11 +4747,8 @@ object SparkEntry {
     * compare. Upsert-as-delete+insert and optimize-as-empty-feed are
     * TxLogSpec's job.
     */
-  private def qf14TxlogCdf(spark: SparkSession, dir: String): DataFrame = {
-    staged(spark, "qf14") { wh =>
-      val root = wh.resolve("tbl").toString
-      val orders = t(spark, dir, "orders")
-        .select(col("o_orderkey"), col("o_custkey"), col("o_totalprice"))
+  private def qf14TxlogCdf(spark: SparkSession, dir: String): DataFrame =
+    stagedOrdersTxLog(spark, dir, "qf14") { (root, orders) =>
       operators.TxLog.create(
         spark, root,
         orders.filter(col("o_orderkey") % 4 === 0)
@@ -4758,7 +4759,6 @@ object SparkEntry {
         .select(col("_commit_version"), col("_change_type"),
           col("o_orderkey"), col("o_custkey"), col("o_totalprice"))
     }
-  }
 
   /** Partitioned tx-log table ([[operators.TxLog.snapshotWhere]]): the
     * table is created partitioned by o_orderstatus — files land under
@@ -5476,12 +5476,7 @@ object SparkEntry {
     * persist-per-iteration scale contract is PageRankSpec's job.
     */
   private def qg9PageRank(spark: SparkSession, dir: String): DataFrame = {
-    val edges = t(spark, dir, "orders")
-      .join(t(spark, dir, "customer"), col("o_custkey") === col("c_custkey"))
-      .join(t(spark, dir, "lineitem"), col("l_orderkey") === col("o_orderkey"))
-      .join(t(spark, dir, "supplier"), col("l_suppkey") === col("s_suppkey"))
-      .groupBy(col("c_nationkey").as("src"), col("s_nationkey").as("dst"))
-      .agg(count(lit(1)).as("w"))
+    val edges = nationGraph(spark, dir, count(lit(1)))
     graph.PageRank.run(edges, "src", "dst", "w", iterations = 5)
       .select(col("node"), round(col("rank"), 6).as("rank"))
   }
@@ -5496,12 +5491,7 @@ object SparkEntry {
     * the dangling term.
     */
   private def qg26WeightedPagerank(spark: SparkSession, dir: String): DataFrame = {
-    val edges = t(spark, dir, "orders")
-      .join(t(spark, dir, "customer"), col("o_custkey") === col("c_custkey"))
-      .join(t(spark, dir, "lineitem"), col("l_orderkey") === col("o_orderkey"))
-      .join(t(spark, dir, "supplier"), col("l_suppkey") === col("s_suppkey"))
-      .groupBy(col("c_nationkey").as("src"), col("s_nationkey").as("dst"))
-      .agg(sum(col("l_quantity")).as("w"))
+    val edges = nationGraph(spark, dir, sum(col("l_quantity")))
     graph.PageRank.run(edges, "src", "dst", "w", iterations = 5)
       .select(col("node"), round(col("rank"), 6).as("rank"))
   }
@@ -5512,12 +5502,7 @@ object SparkEntry {
     * seed-expansion complement of qg9's global rank.
     */
   private def qg15Ppr(spark: SparkSession, dir: String): DataFrame = {
-    val edges = t(spark, dir, "orders")
-      .join(t(spark, dir, "customer"), col("o_custkey") === col("c_custkey"))
-      .join(t(spark, dir, "lineitem"), col("l_orderkey") === col("o_orderkey"))
-      .join(t(spark, dir, "supplier"), col("l_suppkey") === col("s_suppkey"))
-      .groupBy(col("c_nationkey").as("src"), col("s_nationkey").as("dst"))
-      .agg(count(lit(1)).as("w"))
+    val edges = nationGraph(spark, dir, count(lit(1)))
     graph.PageRank.run(edges, "src", "dst", "w", iterations = 5,
         personalizedTo = Some(0L))
       .select(col("node"), round(col("rank"), 6).as("rank"))
@@ -5529,12 +5514,7 @@ object SparkEntry {
     * centrality roles PageRank's single score conflates.
     */
   private def qg14Hits(spark: SparkSession, dir: String): DataFrame = {
-    val edges = t(spark, dir, "orders")
-      .join(t(spark, dir, "customer"), col("o_custkey") === col("c_custkey"))
-      .join(t(spark, dir, "lineitem"), col("l_orderkey") === col("o_orderkey"))
-      .join(t(spark, dir, "supplier"), col("l_suppkey") === col("s_suppkey"))
-      .groupBy(col("c_nationkey").as("src"), col("s_nationkey").as("dst"))
-      .agg(count(lit(1)).as("w"))
+    val edges = nationGraph(spark, dir, count(lit(1)))
     graph.Hits.run(edges, "src", "dst", "w", iterations = 4)
       .select(col("node"), round(col("hub"), 6).as("hub"),
         round(col("authority"), 6).as("authority"))
@@ -6135,6 +6115,625 @@ object SparkEntry {
       |FROM cells JOIN zones
       |  ON x > rx1 AND x < rx2 AND y > ry1 AND y < ry2
       |GROUP BY zone_id""".stripMargin
+
+  // Oracle SQL builders: each writes one CTE family that several gates'
+  // oracles share. Every oracle still expands to one standalone string;
+  // the builders only keep the family's text in one place.
+
+  private def cteAs(materialized: Boolean): String =
+    if (materialized) "AS MATERIALIZED" else "AS"
+
+  /** `raw`/`e`: the gate-side `ordersGraph(spark, dir, every, mod)`
+    * projection, deduplicated into undirected edges a < b.
+    */
+  private def ordersGraphCtes(every: Int, mod: Int): String =
+    s"""raw AS (
+       |  SELECT o_custkey % $mod AS x, o_orderkey % $mod AS y
+       |  FROM orders WHERE o_orderkey % $every = 0),
+       |e AS (
+       |  SELECT DISTINCT least(x, y) AS a, greatest(x, y) AS b
+       |  FROM raw WHERE x <> y)""".stripMargin
+
+  private lazy val symCte: String =
+    """sym AS MATERIALIZED (
+      |  SELECT a AS v, b AS w FROM e UNION ALL SELECT b, a FROM e)""".stripMargin
+
+  /** The %150/29 orders graph, its `nodes`, and the multi-source hop
+    * distance table `dist(p, v, d)` (qg21–qg24): the qg18 min-fold keyed
+    * by pivot, bound 40 = 8× the projection's measured max eccentricity.
+    */
+  private lazy val hopDistCtes: String =
+    s"""${ordersGraphCtes(29, 150)},
+       |$symCte,
+       |nodes AS MATERIALIZED (SELECT DISTINCT v FROM sym),
+       |lab(it, p, node, d) AS (
+       |  SELECT 0, v, v, 0 FROM nodes
+       |  UNION ALL
+       |  SELECT it + 1, p, node, min(d) FROM (
+       |    SELECT l.it, l.p, l.node, l.d FROM lab l
+       |    UNION ALL
+       |    SELECT l.it, l.p, s.w AS node, l.d + 1
+       |    FROM lab l JOIN sym s ON s.v = l.node
+       |  ) t(it, p, node, d)
+       |  WHERE it < 40
+       |  GROUP BY it, p, node),
+       |dist AS MATERIALIZED (
+       |  SELECT p, node AS v, min(d) AS d FROM lab GROUP BY p, node)""".stripMargin
+
+  /** The orders graph with integer-valued edge costs 1 + (a + b) % 7,
+    * symmetrized as `sym(v, t, w)` (qg30, qg32–qg34).
+    */
+  private def weightedGraphCtes(every: Int, mod: Int): String =
+    s"""${ordersGraphCtes(every, mod)},
+       |we AS (SELECT a, b, CAST(1 + (a + b) % 7 AS DOUBLE) AS w FROM e),
+       |sym AS MATERIALIZED (
+       |  SELECT a AS v, b AS t, w FROM we UNION ALL SELECT b, a, w FROM we)""".stripMargin
+
+  /** The multi-source min-plus distance table `dist(p, v, d)` over the
+    * weighted %150/29 graph (qg32–qg34): one edge hop per iteration with
+    * min-merge, bound 150 = the projection's node-count ceiling.
+    */
+  private def costDistCtes(materialized: Boolean): String =
+    s"""${weightedGraphCtes(29, 150)},
+       |nodes AS MATERIALIZED (SELECT DISTINCT v FROM sym),
+       |lab(it, p, node, c) AS (
+       |  SELECT 0, v, v, CAST(0 AS DOUBLE) FROM nodes
+       |  UNION ALL
+       |  SELECT it + 1, p, node, min(c) FROM (
+       |    SELECT l.it, l.p, l.node, l.c FROM lab l
+       |    UNION ALL
+       |    SELECT l.it, l.p, s.t AS node, l.c + s.w
+       |    FROM lab l JOIN sym s ON s.v = l.node
+       |  ) t(it, p, node, c)
+       |  WHERE it < 150
+       |  GROUP BY it, p, node),
+       |dist ${cteAs(materialized)} (
+       |  SELECT p, node AS v, min(c) AS d FROM lab GROUP BY p, node)""".stripMargin
+
+  /** Min-label connected components over `nodes(id)` and the undirected
+    * `sym(u, v)`: every node starts as its own label and takes the least
+    * label of itself and its neighbours each round, `rounds` rounds (the
+    * qd6 label-prop min-fold). `sep` closes `lab` and opens `final`;
+    * the caller closes `final(id, lb)`, each node's component label.
+    */
+  private def componentCtes(sep: String, rounds: Int = 20): String =
+    s"""lab(it, id, lb) AS (
+       |  SELECT 0, id, id FROM nodes
+       |  UNION ALL
+       |  SELECT it + 1, id, min(lb) FROM (
+       |    SELECT l.it, l.id, l.lb FROM lab l
+       |    UNION ALL
+       |    SELECT l.it, s.v AS id, l.lb FROM lab l JOIN sym s ON s.u = l.id
+       |  ) t(it, id, lb)
+       |  WHERE it < $rounds
+       |  GROUP BY it, id${sep}final AS (SELECT id, min(lb) AS lb FROM lab GROUP BY id""".stripMargin
+
+  /** qd6's MinHash band buckets (4 signature rows per band), the pairs
+    * that share a bucket, and their components (qd6, qd20, qd22).
+    */
+  private lazy val minhashComponentCtes: String =
+    s"""buckets AS (
+       |  SELECT doc_id, k // 4 AS band, string_agg(v::VARCHAR, ',' ORDER BY k) AS bkey
+       |  FROM sig GROUP BY doc_id, k // 4
+       |), pairs AS (
+       |  SELECT DISTINCT a.doc_id AS a, b.doc_id AS b
+       |  FROM buckets a JOIN buckets b ON a.band = b.band AND a.bkey = b.bkey AND a.doc_id > b.doc_id
+       |), nodes AS (SELECT DISTINCT id FROM (SELECT a AS id FROM pairs UNION ALL SELECT b FROM pairs)
+       |), sym AS MATERIALIZED (SELECT a AS u, b AS v FROM pairs UNION ALL SELECT b, a FROM pairs
+       |), ${componentCtes("\n), ")}""".stripMargin
+
+  /** Components over the media near-dup `pairs(ga, gb)` (qm17–qm22). */
+  private lazy val mediaComponentCtes: String =
+    s"""nodes AS (SELECT DISTINCT id FROM (SELECT ga AS id FROM pairs UNION ALL SELECT gb FROM pairs)),
+       |sym AS MATERIALIZED (SELECT ga AS u, gb AS v FROM pairs UNION ALL SELECT gb, ga FROM pairs),
+       |${componentCtes("),\n")})""".stripMargin
+
+  /** Exact per-character hamming distance of two bit strings of `bits`
+    * characters.
+    */
+  private def hammingSql(a: String, b: String, bits: Int): String =
+    s"""list_sum(list_transform(generate_series(1, $bits), j ->
+       |      CASE WHEN substr($a, j, 1) = substr($b, j, 1) THEN 0 ELSE 1 END))""".stripMargin
+
+  /** The media near-dup chain over `bits(gid, hb)` (qm17–qm21): `bands`
+    * substrings of `width` chars, candidate pairs sharing one, exact
+    * hamming <= `maxHam`, then components; an unpaired gid clusters as
+    * itself.
+    */
+  private def mediaClusterSql(width: Int, bands: Int, maxHam: Int): String =
+    s"""banded AS (
+       |  SELECT gid, b, substr(hb, b * $width + 1, $width) AS bk
+       |  FROM bits, unnest(generate_series(0, ${bands - 1})) s(b)),
+       |cand AS (
+       |  SELECT DISTINCT a.gid AS ga, b.gid AS gb
+       |  FROM banded a JOIN banded b ON a.b = b.b AND a.bk = b.bk AND a.gid > b.gid),
+       |ham AS (
+       |  SELECT c.ga, c.gb,
+       |    ${hammingSql("ha.hb", "h2.hb", width * bands)} AS d
+       |  FROM cand c JOIN bits ha ON ha.gid = c.ga JOIN bits h2 ON h2.gid = c.gb),
+       |pairs AS (SELECT ga, gb FROM ham WHERE d <= $maxHam),
+       |$mediaComponentCtes
+       |SELECT g.gid AS media_id,
+       |  CAST(coalesce(f.lb, g.gid) AS BIGINT) AS cluster
+       |FROM gids g LEFT JOIN final f ON f.id = g.gid""".stripMargin
+
+  /** The qm14 aHash recipe with the planted retouch (first 16 pixels of
+    * ids >= 50 brightened by 40, clipped) as `bits(gid, hb)` (qm17, qm22).
+    */
+  private lazy val retouchedImageBitsCtes: String =
+    """WITH RECURSIVE gids AS (
+      |  SELECT DISTINCT doc_id % 100 AS gid FROM documents),
+      |px AS (
+      |  SELECT gid, i,
+      |    CASE WHEN i < 16
+      |      THEN least((i * (7919 + 16 * (gid % 50)) + 3 * (gid % 50)) % 256
+      |             + CASE WHEN gid >= 50 THEN 40 ELSE 0 END, 255)
+      |      ELSE (i * (7919 + 16 * (gid % 50)) + 3 * (gid % 50)) % 256 END AS p
+      |  FROM gids, unnest(generate_series(0, 1023)) t(i)),
+      |r2 AS (
+      |  SELECT gid, (i // 32) // 4 AS ry, (i % 32) // 4 AS rx,
+      |    CAST(sum(p) AS BIGINT) // 16 AS rp
+      |  FROM px GROUP BY 1, 2, 3),
+      |mn AS (SELECT gid, CAST(sum(rp) AS BIGINT) // 64 AS mean
+      |       FROM r2 GROUP BY 1),
+      |bits AS MATERIALIZED (
+      |  SELECT r2.gid,
+      |    string_agg(CASE WHEN rp > mean THEN '1' ELSE '0' END, ''
+      |      ORDER BY ry, rx) AS hb
+      |  FROM r2 JOIN mn USING (gid) GROUP BY r2.gid)""".stripMargin
+
+  /** Lossless pixel-codec replay (qm5, qm8, qm9): the 1024 per-doc bytes
+    * from `pixel` (over doc `d`, index `t.i`), mean, byte entropy, and the
+    * norm of the 16 chunk means.
+    */
+  private def pixelStatsSql(pixel: String): String =
+    s"""WITH px AS (
+       |  SELECT d.doc_id, t.i AS idx, $pixel AS v
+       |  FROM documents d CROSS JOIN generate_series(0, 1023) t(i)
+       |), stats AS (
+       |  SELECT doc_id, sum(v) / 1024.0 AS mean_byte FROM px GROUP BY doc_id
+       |), counts AS (
+       |  SELECT doc_id, v, count(*)::DOUBLE AS c FROM px GROUP BY doc_id, v
+       |), ent AS (
+       |  SELECT doc_id, sum(-(c / 1024.0) * ln(c / 1024.0) / ln(2)) AS entropy
+       |  FROM counts GROUP BY doc_id
+       |), chunkf AS (
+       |  SELECT doc_id, idx // 64 AS ch, CAST(sum(v) / 64.0 / 255.0 AS FLOAT) AS f
+       |  FROM px GROUP BY doc_id, idx // 64
+       |), nrm AS (
+       |  SELECT doc_id, sqrt(sum(CAST(f AS DOUBLE) * CAST(f AS DOUBLE))) AS fn
+       |  FROM chunkf GROUP BY doc_id
+       |)
+       |SELECT s.doc_id AS media_id,
+       |  round(s.mean_byte, 4) AS mean_byte,
+       |  round(e.entropy, 4) AS byte_entropy,
+       |  round(n.fn, 4) AS feature_norm
+       |FROM stats s JOIN ent e USING (doc_id) JOIN nrm n USING (doc_id)""".stripMargin
+
+  /** The nation graph of the orders⋈customer⋈lineitem⋈supplier join
+    * (qg9, qg14–qg16, qg26): one edge per (customer nation, supplier
+    * nation), weight `weight`; the gate-side `nationGraph` builds the same.
+    */
+  private def nationEdgesCte(weight: String, materialized: Boolean): String =
+    s"""edges ${cteAs(materialized)} (
+       |  SELECT c_nationkey AS src, s_nationkey AS dst,
+       |    $weight AS w
+       |  FROM orders
+       |  JOIN customer ON o_custkey = c_custkey
+       |  JOIN lineitem ON l_orderkey = o_orderkey
+       |  JOIN supplier ON l_suppkey = s_suppkey
+       |  GROUP BY 1, 2)""".stripMargin
+
+  /** qg9's 5-round unrolled PageRank over the nation graph weighted by
+    * `weight` (qg9, qg26): uniform restart, dangling mass spread evenly.
+    */
+  private def pageRankSql(weight: String): String = {
+    def iter(i: Int): String =
+      s""",
+         |r$i AS (
+         |  SELECT nd.node,
+         |    (1 - 0.85) / (SELECT n FROM cnt)
+         |    + 0.85 * coalesce(s.inflow, 0)
+         |    + 0.85 * (SELECT coalesce(sum(r.rank), 0) FROM r${i - 1} r
+         |              WHERE r.node NOT IN (SELECT src FROM trans))
+         |      / (SELECT n FROM cnt) AS rank
+         |  FROM nodes nd LEFT JOIN (
+         |    SELECT t.dst AS node, sum(r.rank * t.p) AS inflow
+         |    FROM r${i - 1} r JOIN trans t ON r.node = t.src GROUP BY 1) s
+         |    ON nd.node = s.node)""".stripMargin
+    s"""WITH ${nationEdgesCte(weight, materialized = false)},
+       |nodes AS (SELECT src AS node FROM edges UNION SELECT dst FROM edges),
+       |cnt AS (SELECT CAST(count(*) AS DOUBLE) AS n FROM nodes),
+       |trans AS (
+       |  SELECT src, dst, w / sum(w) OVER (PARTITION BY src) AS p FROM edges),
+       |r0 AS (SELECT node, 1.0 / (SELECT n FROM cnt) AS rank FROM nodes)""".stripMargin +
+      (1 to 5).map(iter).mkString +
+      "\nSELECT node, round(rank, 6) AS rank FROM r5"
+  }
+
+  /** The EAUL upgrade catalogue (qg3, qg6). */
+  private lazy val eaulUpgradesCte: String =
+    """ups(uidx, uid, uruc, usurface) AS (
+      |  SELECT * FROM (VALUES (0,'upgrade-rehab-asphalt',0.23,'paved'),
+      |                        (1,'upgrade-rehab-gravel',0.27,'unpaved'),
+      |                        (2,'rehab-earth',0.30,'unpaved')))""".stripMargin
+
+  /** The EAUL route matrices (qg3, qg6): hop-bounded Bellman-Ford per
+    * (way sw, upgrade uidx, flood fl) scenario from every OD source, the
+    * upgraded way's cost rescaled by uruc/ruc; `passable`, appended to
+    * the relaxation's edge join condition (over `r` and `e`), removes the
+    * flooded edges. `mat` is every scenario's OD cost, NULL where
+    * unroutable.
+    */
+  private def eaulRouteCtes(passable: String, hopBound: Int): String =
+    s"""r(sw, uidx, fl, it, s, node, cost) AS (
+       |  SELECT sw, uidx, fl, 0, idx, node, CAST(0.0 AS DOUBLE) FROM scen CROSS JOIN od
+       |  UNION ALL
+       |  SELECT sw, uidx, fl, it + 1, s, node, min(cost) FROM (
+       |    SELECT sw, uidx, fl, it, s, node, cost FROM r
+       |    UNION ALL
+       |    SELECT r.sw, r.uidx, r.fl, r.it, r.s, e.dst,
+       |      r.cost + CASE WHEN e.way = r.sw THEN e.w * (u.uruc / e.ruc) ELSE e.w END
+       |    FROM r JOIN edges e ON e.src = r.node$passable
+       |    LEFT JOIN ups u ON u.uidx = r.uidx
+       |  ) t(sw, uidx, fl, it, s, node, cost)
+       |  WHERE it < $hopBound
+       |  GROUP BY sw, uidx, fl, it, s, node
+       |),
+       |sp AS (SELECT sw, uidx, fl, s, node, min(cost) AS cost FROM r GROUP BY sw, uidx, fl, s, node),
+       |tri AS (SELECT a.idx AS o, b.idx AS d, b.node AS dnode FROM od a JOIN od b ON a.idx < b.idx),
+       |mat AS (
+       |  SELECT sc.sw, sc.uidx, sc.fl, t.o, t.d, sp.cost
+       |  FROM scen sc CROSS JOIN tri t
+       |  LEFT JOIN sp ON sp.sw = sc.sw AND sp.uidx = sc.uidx AND sp.fl = sc.fl
+       |              AND sp.s = t.o AND sp.node = t.dnode
+       |)""".stripMargin
+
+  /** `n` gaussian hyperplanes over 64 dims from the same Random(42)
+    * sequence the engine's hyperplaneSignature draws.
+    */
+  private def hyperplanes(n: Int): Seq[Array[Double]] = {
+    val rnd = new scala.util.Random(42L)
+    Seq.fill(n)(Array.fill(64)(rnd.nextGaussian()))
+  }
+
+  /** `planes` as `(b, i, c)` VALUES rows, i 1-based. */
+  private def planeValues(planes: Seq[Array[Double]]): String =
+    planes.zipWithIndex.flatMap { case (p, b) =>
+      p.zipWithIndex.map { case (c, i) => s"($b,${i + 1},$c)" }
+    }.mkString(",")
+
+  /** The 8-plane signature of every embedding, `sigs(vec_id, sig)` with
+    * bit b set iff the dot with plane b is >= 0 (qs4, qs18–qs21).
+    */
+  private def hyperplaneSigCtes(materialized: Boolean): String =
+    s"""planes(b, i, c) AS (SELECT * FROM (VALUES ${planeValues(hyperplanes(8))})),
+       |dots AS (
+       |  SELECT e.vec_id, p.b, sum(CAST(e.embedding[p.i] AS DOUBLE) * p.c) AS d
+       |  FROM embeddings e CROSS JOIN planes p GROUP BY e.vec_id, p.b),
+       |sigs ${cteAs(materialized)} (
+       |  SELECT vec_id, sum(CASE WHEN d >= 0.0 THEN (1::BIGINT << b) ELSE 0::BIGINT END) AS sig
+       |  FROM dots GROUP BY vec_id)""".stripMargin
+
+  /** The ANN gates' signatures and their 16 lowest-id queries `q(qid, qv)`
+    * (qs18, qs19, qs21).
+    */
+  private lazy val annQueryCtes: String =
+    s"""WITH ${hyperplaneSigCtes(materialized = true)},
+       |q AS MATERIALIZED (
+       |  SELECT vec_id AS qid, embedding AS qv FROM embeddings ORDER BY vec_id LIMIT 16)""".stripMargin
+
+  /** The multi-probe set (qs19, qs21): per query-bit µ-margin
+    * floor(|dot|*1e6 + 0.5), mask score Σ µ² over set bits, the 9
+    * lowest (score, mask) masks as `probes(qid, m)`.
+    */
+  private lazy val annProbeCtes: String =
+    """qmu AS (
+      |  SELECT d.vec_id AS qid, d.b,
+      |    CAST(floor(abs(d.d) * 1000000 + 0.5) AS BIGINT) AS mu
+      |  FROM dots d JOIN q ON q.qid = d.vec_id),
+      |mscore AS (
+      |  SELECT q.qid, m.m,
+      |    coalesce(sum(CASE WHEN (m.m >> qmu.b) & 1 = 1
+      |      THEN qmu.mu * qmu.mu ELSE 0 END), 0) AS s
+      |  FROM q
+      |  CROSS JOIN generate_series(0, 255) m(m)
+      |  LEFT JOIN qmu ON qmu.qid = q.qid
+      |  GROUP BY q.qid, m.m),
+      |probes AS MATERIALIZED (
+      |  SELECT qid, m FROM (
+      |    SELECT qid, m, row_number() OVER (PARTITION BY qid ORDER BY s, m) AS r
+      |    FROM mscore) WHERE r <= 9)""".stripMargin
+
+  /** The brute-force truth of the recall gates (qs18, qs19): every
+    * query's 6-dp cosine to every other vector, top 10 by (sim DESC,
+    * vec_id).
+    */
+  private lazy val annTruthCtes: String =
+    """s0 AS (
+      |  SELECT q.qid, c.vec_id,
+      |    sum(CAST(c.embedding[t.i] AS DOUBLE) * CAST(q.qv[t.i] AS DOUBLE)) AS dot,
+      |    sum(CAST(c.embedding[t.i] AS DOUBLE) * CAST(c.embedding[t.i] AS DOUBLE)) AS na,
+      |    sum(CAST(q.qv[t.i] AS DOUBLE) * CAST(q.qv[t.i] AS DOUBLE)) AS nb
+      |  FROM embeddings c
+      |  CROSS JOIN q
+      |  CROSS JOIN generate_series(1, 64) AS t(i)
+      |  WHERE c.vec_id <> q.qid
+      |  GROUP BY q.qid, c.vec_id),
+      |sims AS MATERIALIZED (
+      |  SELECT qid, vec_id,
+      |    round(CASE WHEN sqrt(na) * sqrt(nb) = 0 THEN 0
+      |               ELSE dot / (sqrt(na) * sqrt(nb)) END, 6) AS sim
+      |  FROM s0),
+      |truth AS (
+      |  SELECT qid, vec_id FROM (
+      |    SELECT qid, vec_id,
+      |      row_number() OVER (PARTITION BY qid ORDER BY sim DESC, vec_id) AS r
+      |    FROM sims) WHERE r <= 10)""".stripMargin
+
+  /** The recall tail (qs18, qs19): the candidates' top 10 on the same
+    * (sim DESC, vec_id) contract, intersected with `truth`.
+    */
+  private lazy val annRecallSql: String =
+    """approx AS (
+      |  SELECT qid, vec_id FROM (
+      |    SELECT c.qid, c.vec_id,
+      |      row_number() OVER (PARTITION BY c.qid ORDER BY s.sim DESC, c.vec_id) AS r
+      |    FROM cand c JOIN sims s ON s.qid = c.qid AND s.vec_id = c.vec_id)
+      |  WHERE r <= 10),
+      |hits AS (
+      |  SELECT t.qid, count(a.vec_id) AS n_hit
+      |  FROM truth t LEFT JOIN approx a ON a.qid = t.qid AND a.vec_id = t.vec_id
+      |  GROUP BY t.qid)
+      |SELECT q.qid AS query_id,
+      |  CAST(coalesce(h.n_hit, 0) AS BIGINT) AS n_hit,
+      |  round(coalesce(h.n_hit, 0) / 10.0, 6) AS recall
+      |FROM q LEFT JOIN hits h ON h.qid = q.qid
+      |ORDER BY query_id""".stripMargin
+
+  /** The IVF query sin(i + 1) and its cell and per-plane µ-margins under
+    * the 8 hyperplanes, with the engine's sequential double arithmetic.
+    */
+  private lazy val ivfQuery: Array[Double] = Array.tabulate(64)(i => math.sin(i + 1.0))
+
+  private lazy val (ivfQueryCell, ivfQueryMicro): (Long, Array[Long]) = {
+    var qCell = 0L
+    val micro = new Array[Long](8)
+    hyperplanes(8).zipWithIndex.foreach { case (p, b) =>
+      var d = 0.0
+      var i = 0
+      while (i < 64) { d += ivfQuery(i) * p(i); i += 1 }
+      if (d >= 0.0) qCell |= 1L << b
+      micro(b) = math.floor(math.abs(d) * 1e6 + 0.5).toLong
+    }
+    (qCell, micro)
+  }
+
+  /** The IVF gates (qs4, qs20): exact cosine to the literal query over
+    * the vectors whose signature passes `cellFilter`, top 100.
+    */
+  private def ivfSql(cellFilter: String): String = {
+    val qv = ivfQuery.map(_.toString).mkString("[", ", ", "]")
+    s"""WITH ${hyperplaneSigCtes(materialized = false)},
+       |cand AS (SELECT vec_id FROM sigs WHERE $cellFilter),
+       |s AS (
+       |  SELECT q.vec_id,
+       |    sum(CAST(q.embedding[t.i] AS DOUBLE) * q.qv[t.i]) AS dot,
+       |    sum(CAST(q.embedding[t.i] AS DOUBLE) * CAST(q.embedding[t.i] AS DOUBLE)) AS na,
+       |    sum(q.qv[t.i] * q.qv[t.i]) AS nb
+       |  FROM (SELECT e.vec_id, e.embedding, $qv::DOUBLE[] AS qv
+       |        FROM embeddings e JOIN cand USING (vec_id)) q
+       |  CROSS JOIN generate_series(1, 64) AS t(i)
+       |  GROUP BY q.vec_id)
+       |SELECT vec_id,
+       |  round(CASE WHEN sqrt(na) * sqrt(nb) = 0 THEN 0
+       |             ELSE dot / (sqrt(na) * sqrt(nb)) END, 6) AS sim
+       |FROM s ORDER BY sim DESC, vec_id LIMIT 100""".stripMargin
+  }
+
+  /** The PQ gates' probe sin(i * 0.3 + 2) as a DuckDB list literal. */
+  private lazy val pqQuery: String = Array.tabulate(64)(i => math.sin(i * 0.3 + 2.0))
+    .map(_.toString)
+    .mkString("[", ", ", "]")
+
+  /** The qs7 PQ encoding and ADC (qs7, qs15): codebook = the 8 subvectors
+    * of the 16 lowest-id vectors, per-subspace 6-dp L2² argmin (ties to
+    * the lowest code) of every vector in `encoded`, `adc0(vec_id, adc)`
+    * the 6-dp sum of the query's per-subspace tables.
+    */
+  private def pqAdcCtes(encoded: String): String =
+    s"""seeds AS (
+       |  SELECT embedding, row_number() OVER (ORDER BY vec_id) - 1 AS c
+       |  FROM (SELECT vec_id, embedding FROM embeddings ORDER BY vec_id LIMIT 16)),
+       |cb AS (
+       |  SELECT s.s, seeds.c,
+       |    list_transform(generate_series(1, 8),
+       |      j -> CAST(embedding[s.s * 8 + j] AS DOUBLE)) AS cent
+       |  FROM seeds CROSS JOIN generate_series(0, 7) AS s(s)),
+       |dists AS (
+       |  SELECT e.vec_id, cb.s, cb.c,
+       |    round(list_sum(list_transform(generate_series(1, 8), j ->
+       |      pow(CAST(e.embedding[cb.s * 8 + j] AS DOUBLE) - cb.cent[j], 2))), 6) AS d2
+       |  FROM $encoded),
+       |enc AS (
+       |  SELECT vec_id, s, c FROM (
+       |    SELECT *, row_number() OVER (PARTITION BY vec_id, s ORDER BY d2, c) AS rn
+       |    FROM dists)
+       |  WHERE rn = 1),
+       |qd AS (
+       |  SELECT cb.s, cb.c,
+       |    round(list_sum(list_transform(generate_series(1, 8), j ->
+       |      pow(qv[cb.s * 8 + j] - cb.cent[j], 2))), 6) AS qdist
+       |  FROM cb CROSS JOIN (SELECT $pqQuery::DOUBLE[] AS qv)),
+       |adc0 AS (
+       |  SELECT e.vec_id, round(sum(q.qdist), 6) AS adc
+       |  FROM enc e JOIN qd q ON e.s = q.s AND e.c = q.c
+       |  GROUP BY e.vec_id)""".stripMargin
+
+  /** The qsp1 way/area overlay (qp1, qsp1): each synthetic way's
+    * haversine-length share inside each area box times the area value,
+    * summed per way as `contrib(way_id, value)`.
+    */
+  private lazy val overlayCtes: String =
+    """ways AS (
+      |  SELECT s_suppkey AS way_id,
+      |    (s_suppkey % 13) + 0.25 AS y,
+      |    CAST(s_suppkey % 17 AS DOUBLE) AS x1,
+      |    CAST((s_suppkey % 17) + 1 + (s_suppkey % 4) AS DOUBLE) AS x2
+      |  FROM supplier),
+      |areas AS (
+      |  SELECT n_nationkey AS area_id,
+      |    CAST(n_nationkey % 10 AS DOUBLE) AS rx1,
+      |    CAST((n_nationkey % 10) + 2 + (n_nationkey % 3) AS DOUBLE) AS rx2,
+      |    (n_nationkey % 11) - 0.2 AS ry1,
+      |    (n_nationkey % 11) + 1.2 + (n_nationkey % 2) AS ry2,
+      |    CAST((n_nationkey % 7) + 1 AS DOUBLE) AS value
+      |  FROM nation),
+      |contrib AS (
+      |  SELECT way_id, sum(
+      |    (2*6371.0088*asin(least(1.0, sqrt(cos(radians(y))*cos(radians(y))*
+      |       pow(sin(radians(least(x2,rx2)-greatest(x1,rx1))/2),2))))) /
+      |    (2*6371.0088*asin(least(1.0, sqrt(cos(radians(y))*cos(radians(y))*
+      |       pow(sin(radians(x2-x1)/2),2))))) * value) AS value
+      |  FROM ways JOIN areas
+      |    ON greatest(x1,rx1) < least(x2,rx2) AND y > ry1 AND y < ry2
+      |  GROUP BY way_id)""".stripMargin
+
+  /** The qv1 expected-annual-damage replay (qp1, qv1): per-way road and
+    * bridge damage at each return period, trapezoid over 1/T as
+    * `tz(s, road_ead, bridge_ead)`.
+    */
+  private lazy val eadCtes: String =
+    """rp(i, t) AS (VALUES (0,5),(1,10),(2,20),(3,50),(4,75),
+      |  (5,100),(6,200),(7,250),(8,500),(9,1000)),
+      |w AS (SELECT s_suppkey AS s,
+      |    CASE WHEN s_suppkey % 2 = 0 THEN 'paved' ELSE 'unpaved' END AS surface,
+      |    CASE WHEN s_suppkey % 3 = 0 THEN 0.3
+      |         WHEN s_suppkey % 3 = 1 THEN 0.5 ELSE 0.7 END AS condrate,
+      |    s_suppkey % 4 < 3 AS has_bridge,
+      |    CASE WHEN s_suppkey % 2 = 0 THEN 'bridge' ELSE 'culvert' END AS btype,
+      |    5 + s_suppkey % 25 AS blen
+      |  FROM supplier),
+      |d AS (SELECT s, i, t, surface, condrate, has_bridge, btype, blen,
+      |    ((s*7 + i*13) % 40)/10.0 AS depth,
+      |    ((s*3 + i*5) % 100)/10.0 AS len,
+      |    ((s*7 + (CASE WHEN btype = 'bridge' THEN 5 ELSE 2 END)*13) % 40)/10.0 AS wld
+      |  FROM w CROSS JOIN rp),
+      |dmg AS (SELECT s, i, t,
+      |    CASE WHEN depth < 0.2 THEN 0
+      |         WHEN depth > 1.5 THEN len * (CASE WHEN surface = 'paved' THEN 20000 ELSE 55000 END)
+      |         WHEN depth > 0.5 THEN len * (CASE WHEN surface = 'paved' THEN 4000 ELSE 27000 END)
+      |         ELSE len * (CASE WHEN surface = 'paved' THEN 2000 ELSE 15000 END) END AS road_dmg,
+      |    CASE WHEN has_bridge THEN greatest(0, (depth - wld*0.7) / condrate *
+      |         (CASE WHEN btype = 'bridge' THEN blen*44000 ELSE 10000 END)) ELSE 0 END AS bridge_dmg
+      |  FROM d),
+      |tz AS (SELECT s,
+      |    sum((1.0/prev_t - 1.0/t) * (prev_rd + road_dmg)) / 2 AS road_ead,
+      |    sum((1.0/prev_t - 1.0/t) * (prev_bd + bridge_dmg)) / 2 AS bridge_ead
+      |  FROM (SELECT *,
+      |      lag(t) OVER (PARTITION BY s ORDER BY i) AS prev_t,
+      |      lag(road_dmg) OVER (PARTITION BY s ORDER BY i) AS prev_rd,
+      |      lag(bridge_dmg) OVER (PARTITION BY s ORDER BY i) AS prev_bd
+      |    FROM dmg)
+      |  GROUP BY s)""".stripMargin
+
+  /** qd9's MinHash agreement estimate for each doc and its successor,
+    * `est(a_id, e)`, next to the exact shingle sizes `shc` and overlaps
+    * `inter` (qd9, qd18).
+    */
+  private lazy val minhashPairCtes: String =
+    """pair AS (
+      |  SELECT a.doc_id AS a_id, b.doc_id AS b_id
+      |  FROM documents a JOIN documents b ON b.doc_id = a.doc_id + 1
+      |), est AS (
+      |  SELECT p.a_id, sum(CASE WHEN sa.v = sb.v THEN 1 ELSE 0 END) / 16.0 AS e
+      |  FROM pair p
+      |  JOIN sig sa ON sa.doc_id = p.a_id
+      |  JOIN sig sb ON sb.doc_id = p.b_id AND sb.k = sa.k
+      |  GROUP BY p.a_id
+      |), shc AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY doc_id
+      |), inter AS (
+      |  SELECT p.a_id, count(*) AS ni
+      |  FROM pair p
+      |  JOIN sh sa ON sa.doc_id = p.a_id
+      |  JOIN sh sb ON sb.doc_id = p.b_id AND sb.sh = sa.sh
+      |  GROUP BY p.a_id
+      |)""".stripMargin
+
+  /** HyperBall registers (p=6, m=64, α=0.709) over the hop `dist` table
+    * (qg23, qg24): per pivot and round t, the HLL of the ball
+    * {v: d(p,v) <= t} up to p's eccentricity, and qk4's estimator at m=64
+    * as `est(p, t, est)`; `ts` lists the columns of `ts`.
+    */
+  private def hyperBallCtes(ts: String): String =
+    s"""hr AS MATERIALIZED (
+       |  SELECT v, hv // 67108864 AS b,
+       |    CASE WHEN hv % 67108864 = 0 THEN 27
+       |      ELSE 27 - length(bin(hv % 67108864)) END AS r
+       |  FROM (SELECT v,
+       |      CAST('0x' || substring(md5(CAST(v AS VARCHAR)), 1, 8)
+       |        AS BIGINT) AS hv
+       |    FROM nodes)),
+       |ts AS (
+       |  SELECT $ts, unnest(generate_series(0, ecc)) AS t
+       |  FROM (SELECT p, max(d) AS ecc FROM dist GROUP BY p)),
+       |regs AS (
+       |  SELECT ts.p, ts.t, hr.b, max(hr.r) AS m
+       |  FROM ts
+       |  JOIN dist ON dist.p = ts.p AND dist.d <= ts.t
+       |  JOIN hr ON hr.v = dist.v
+       |  GROUP BY ts.p, ts.t, hr.b),
+       |s AS (
+       |  SELECT p, t, CAST(count(*) AS BIGINT) AS n,
+       |    sum(1.0 / CAST(1::BIGINT << m AS DOUBLE)) AS sp
+       |  FROM regs GROUP BY p, t),
+       |est AS (
+       |  SELECT p, t,
+       |    CASE WHEN (0.709 * 64.0 * 64.0 /
+       |          (sp + (64.0 - CAST(n AS DOUBLE)))) <= 160.0 AND (64 - n) > 0
+       |      THEN 64.0 * ln(64.0 / CAST(64 - n AS DOUBLE))
+       |      ELSE 0.709 * 64.0 * 64.0 /
+       |        (sp + (64.0 - CAST(n AS DOUBLE))) END AS est
+       |  FROM s)""".stripMargin
+
+  /** Hop-bounded Bellman-Ford from every `od` node over `edges`, the
+    * full per-node min table each iteration (qg1, qg5), and the route
+    * matrix over the od pairs.
+    */
+  private def routeMatrixSql(hopBound: Int): String =
+    s"""r(it, s, node, cost) AS (
+       |    SELECT 0, idx, node, CAST(0.0 AS DOUBLE) FROM od
+       |    UNION ALL
+       |    SELECT it + 1, s, node, min(cost) FROM (
+       |      SELECT it, s, node, cost FROM r
+       |      UNION ALL
+       |      SELECT r.it, r.s, e.dst, r.cost + e.w FROM r JOIN edges e ON e.src = r.node
+       |    ) t(it, s, node, cost)
+       |    WHERE it < $hopBound
+       |    GROUP BY it, s, node
+       |), sp AS (SELECT s, node, min(cost) AS cost FROM r GROUP BY s, node)
+       |SELECT a.idx AS o_idx, b.idx AS d_idx, TRUE AS routable, sp.cost AS ruc
+       |FROM od a JOIN od b ON a.idx < b.idx
+       |JOIN sp ON sp.s = a.idx AND sp.node = b.node""".stripMargin
+
+  /** Exact double-cast cosine of every `cand(a_id, b_id)` pair over the
+    * rows of `vectors`; `dups(a_id)` are the a sides at >= `minSim`
+    * (qd5, qd14, qd15).
+    */
+  private def cosineDupsCtes(vectors: String, minSim: String): String =
+    s"""cosim AS (
+       |  SELECT c.a_id,
+       |    sum(CAST(ea.embedding[t.i] AS DOUBLE) * CAST(eb.embedding[t.i] AS DOUBLE)) AS dt,
+       |    sum(CAST(ea.embedding[t.i] AS DOUBLE) * CAST(ea.embedding[t.i] AS DOUBLE)) AS na,
+       |    sum(CAST(eb.embedding[t.i] AS DOUBLE) * CAST(eb.embedding[t.i] AS DOUBLE)) AS nb
+       |  FROM cand c
+       |  JOIN $vectors ea ON ea.vec_id = c.a_id
+       |  JOIN $vectors eb ON eb.vec_id = c.b_id
+       |  CROSS JOIN generate_series(1, 64) t(i)
+       |  GROUP BY c.a_id, c.b_id),
+       |dups AS (
+       |  SELECT DISTINCT a_id FROM cosim
+       |  WHERE (CASE WHEN sqrt(na) * sqrt(nb) = 0 THEN 0 ELSE dt / (sqrt(na) * sqrt(nb)) END) >= $minSim)""".stripMargin
 
   def oracleSql: Map[String, String] = Map(
     "qz4_raster_parallel" -> qzDeflateGridSql,
@@ -6777,84 +7376,31 @@ object SparkEntry {
         |  event_type, count(*) AS n, round(sum(value), 2) AS value_sum
         |FROM events GROUP BY 1, 2""".stripMargin,
     "qp1_pipeline" ->
-      """WITH ways AS (
-        |  SELECT s_suppkey AS way_id,
-        |    (s_suppkey % 13) + 0.25 AS y,
-        |    CAST(s_suppkey % 17 AS DOUBLE) AS x1,
-        |    CAST((s_suppkey % 17) + 1 + (s_suppkey % 4) AS DOUBLE) AS x2
-        |  FROM supplier),
-        |areas AS (
-        |  SELECT n_nationkey AS area_id,
-        |    CAST(n_nationkey % 10 AS DOUBLE) AS rx1,
-        |    CAST((n_nationkey % 10) + 2 + (n_nationkey % 3) AS DOUBLE) AS rx2,
-        |    (n_nationkey % 11) - 0.2 AS ry1,
-        |    (n_nationkey % 11) + 1.2 + (n_nationkey % 2) AS ry2,
-        |    CAST((n_nationkey % 7) + 1 AS DOUBLE) AS value
-        |  FROM nation),
-        |contrib AS (
-        |  SELECT way_id, sum(
-        |    (2*6371.0088*asin(least(1.0, sqrt(cos(radians(y))*cos(radians(y))*
-        |       pow(sin(radians(least(x2,rx2)-greatest(x1,rx1))/2),2))))) /
-        |    (2*6371.0088*asin(least(1.0, sqrt(cos(radians(y))*cos(radians(y))*
-        |       pow(sin(radians(x2-x1)/2),2))))) * value) AS value
-        |  FROM ways JOIN areas
-        |    ON greatest(x1,rx1) < least(x2,rx2) AND y > ry1 AND y < ry2
-        |  GROUP BY way_id),
-        |fish AS (
-        |  SELECT way_id,
-        |    round(value / (SELECT max(value) FROM contrib) * 100, 2) AS score
-        |  FROM contrib),
-        |rp(i, t) AS (VALUES (0,5),(1,10),(2,20),(3,50),(4,75),
-        |  (5,100),(6,200),(7,250),(8,500),(9,1000)),
-        |w AS (SELECT s_suppkey AS s,
-        |    CASE WHEN s_suppkey % 2 = 0 THEN 'paved' ELSE 'unpaved' END AS surface,
-        |    CASE WHEN s_suppkey % 3 = 0 THEN 0.3
-        |         WHEN s_suppkey % 3 = 1 THEN 0.5 ELSE 0.7 END AS condrate,
-        |    s_suppkey % 4 < 3 AS has_bridge,
-        |    CASE WHEN s_suppkey % 2 = 0 THEN 'bridge' ELSE 'culvert' END AS btype,
-        |    5 + s_suppkey % 25 AS blen
-        |  FROM supplier),
-        |d AS (SELECT s, i, t, surface, condrate, has_bridge, btype, blen,
-        |    ((s*7 + i*13) % 40)/10.0 AS depth,
-        |    ((s*3 + i*5) % 100)/10.0 AS len,
-        |    ((s*7 + (CASE WHEN btype = 'bridge' THEN 5 ELSE 2 END)*13) % 40)/10.0 AS wld
-        |  FROM w CROSS JOIN rp),
-        |dmg AS (SELECT s, i, t,
-        |    CASE WHEN depth < 0.2 THEN 0
-        |         WHEN depth > 1.5 THEN len * (CASE WHEN surface = 'paved' THEN 20000 ELSE 55000 END)
-        |         WHEN depth > 0.5 THEN len * (CASE WHEN surface = 'paved' THEN 4000 ELSE 27000 END)
-        |         ELSE len * (CASE WHEN surface = 'paved' THEN 2000 ELSE 15000 END) END AS road_dmg,
-        |    CASE WHEN has_bridge THEN greatest(0, (depth - wld*0.7) / condrate *
-        |         (CASE WHEN btype = 'bridge' THEN blen*44000 ELSE 10000 END)) ELSE 0 END AS bridge_dmg
-        |  FROM d),
-        |tz AS (SELECT s,
-        |    sum((1.0/prev_t - 1.0/t) * (prev_rd + road_dmg)) / 2 AS road_ead,
-        |    sum((1.0/prev_t - 1.0/t) * (prev_bd + bridge_dmg)) / 2 AS bridge_ead
-        |  FROM (SELECT *,
-        |      lag(t) OVER (PARTITION BY s ORDER BY i) AS prev_t,
-        |      lag(road_dmg) OVER (PARTITION BY s ORDER BY i) AS prev_rd,
-        |      lag(bridge_dmg) OVER (PARTITION BY s ORDER BY i) AS prev_bd
-        |    FROM dmg)
-        |  GROUP BY s),
-        |ead AS (SELECT s AS way_id,
-        |    CAST(floor(bridge_ead + road_ead) AS BIGINT) AS value
-        |  FROM tz),
-        |eads AS (SELECT way_id, value,
-        |    round(value / (SELECT max(value) FROM ead) * 100, 2) AS score
-        |  FROM ead),
-        |aadt AS (SELECT s_suppkey AS way_id,
-        |    -- + 0.0 normalizes IEEE -0.0 (negative acctbal rounding to
-        |    -- zero) to +0.0: Spark's round goes through BigDecimal, which
-        |    -- has no signed zero
-        |    round(s_acctbal / (SELECT max(s_acctbal) FROM supplier
-        |                       WHERE NOT isnan(s_acctbal)) * 100) + 0.0 AS score
-        |  FROM supplier)
-        |SELECT s_suppkey AS way_id, f.score AS fish_score,
-        |  e.value AS ead_value, e.score AS ead_score, a.score AS aadt_score
-        |FROM supplier
-        |LEFT JOIN fish f ON s_suppkey = f.way_id
-        |LEFT JOIN eads e ON s_suppkey = e.way_id
-        |LEFT JOIN aadt a ON s_suppkey = a.way_id""".stripMargin,
+      s"""WITH $overlayCtes,
+         |fish AS (
+         |  SELECT way_id,
+         |    round(value / (SELECT max(value) FROM contrib) * 100, 2) AS score
+         |  FROM contrib),
+         |$eadCtes,
+         |ead AS (SELECT s AS way_id,
+         |    CAST(floor(bridge_ead + road_ead) AS BIGINT) AS value
+         |  FROM tz),
+         |eads AS (SELECT way_id, value,
+         |    round(value / (SELECT max(value) FROM ead) * 100, 2) AS score
+         |  FROM ead),
+         |aadt AS (SELECT s_suppkey AS way_id,
+         |    -- + 0.0 normalizes IEEE -0.0 (negative acctbal rounding to
+         |    -- zero) to +0.0: Spark's round goes through BigDecimal, which
+         |    -- has no signed zero
+         |    round(s_acctbal / (SELECT max(s_acctbal) FROM supplier
+         |                       WHERE NOT isnan(s_acctbal)) * 100) + 0.0 AS score
+         |  FROM supplier)
+         |SELECT s_suppkey AS way_id, f.score AS fish_score,
+         |  e.value AS ead_value, e.score AS ead_score, a.score AS aadt_score
+         |FROM supplier
+         |LEFT JOIN fish f ON s_suppkey = f.way_id
+         |LEFT JOIN eads e ON s_suppkey = e.way_id
+         |LEFT JOIN aadt a ON s_suppkey = a.way_id""".stripMargin,
     "qr1_range_join" ->
       """SELECT n_nationkey AS band_id, count(*) AS n,
         |  round(sum(l_extendedprice), 2) AS price_sum
@@ -6988,40 +7534,9 @@ object SparkEntry {
         |  WHERE pp.user_id = c.user_id AND pp.tus >= c.tus
         |  ORDER BY pp.tus LIMIT 1) p ON true""".stripMargin,
     "qv1_ead" ->
-      """WITH rp(i, t) AS (VALUES (0,5),(1,10),(2,20),(3,50),(4,75),
-        |  (5,100),(6,200),(7,250),(8,500),(9,1000)),
-        |w AS (SELECT s_suppkey AS s,
-        |    CASE WHEN s_suppkey % 2 = 0 THEN 'paved' ELSE 'unpaved' END AS surface,
-        |    CASE WHEN s_suppkey % 3 = 0 THEN 0.3
-        |         WHEN s_suppkey % 3 = 1 THEN 0.5 ELSE 0.7 END AS condrate,
-        |    s_suppkey % 4 < 3 AS has_bridge,
-        |    CASE WHEN s_suppkey % 2 = 0 THEN 'bridge' ELSE 'culvert' END AS btype,
-        |    5 + s_suppkey % 25 AS blen
-        |  FROM supplier),
-        |d AS (SELECT s, i, t, surface, condrate, has_bridge, btype, blen,
-        |    ((s*7 + i*13) % 40)/10.0 AS depth,
-        |    ((s*3 + i*5) % 100)/10.0 AS len,
-        |    ((s*7 + (CASE WHEN btype = 'bridge' THEN 5 ELSE 2 END)*13) % 40)/10.0 AS wld
-        |  FROM w CROSS JOIN rp),
-        |dmg AS (SELECT s, i, t,
-        |    CASE WHEN depth < 0.2 THEN 0
-        |         WHEN depth > 1.5 THEN len * (CASE WHEN surface = 'paved' THEN 20000 ELSE 55000 END)
-        |         WHEN depth > 0.5 THEN len * (CASE WHEN surface = 'paved' THEN 4000 ELSE 27000 END)
-        |         ELSE len * (CASE WHEN surface = 'paved' THEN 2000 ELSE 15000 END) END AS road_dmg,
-        |    CASE WHEN has_bridge THEN greatest(0, (depth - wld*0.7) / condrate *
-        |         (CASE WHEN btype = 'bridge' THEN blen*44000 ELSE 10000 END)) ELSE 0 END AS bridge_dmg
-        |  FROM d),
-        |tz AS (SELECT s,
-        |    sum((1.0/prev_t - 1.0/t) * (prev_rd + road_dmg)) / 2 AS road_ead,
-        |    sum((1.0/prev_t - 1.0/t) * (prev_bd + bridge_dmg)) / 2 AS bridge_ead
-        |  FROM (SELECT *,
-        |      lag(t) OVER (PARTITION BY s ORDER BY i) AS prev_t,
-        |      lag(road_dmg) OVER (PARTITION BY s ORDER BY i) AS prev_rd,
-        |      lag(bridge_dmg) OVER (PARTITION BY s ORDER BY i) AS prev_bd
-        |    FROM dmg)
-        |  GROUP BY s)
-        |SELECT s AS way_id, CAST(floor(bridge_ead + road_ead) AS BIGINT) AS value
-        |FROM tz""".stripMargin,
+      s"""WITH $eadCtes
+         |SELECT s AS way_id, CAST(floor(bridge_ead + road_ead) AS BIGINT) AS value
+         |FROM tz""".stripMargin,
     "q20_sliding_window" ->
       """SELECT ws AS window_start, event_type, count(*) AS n
         |FROM (
@@ -7385,79 +7900,16 @@ object SparkEntry {
     // BMP raw rows are lossless: same replay shape, exercising stride
     // padding + bottom-up row order + palette quads.
     "qm9_bmp_pixels" ->
-      """WITH px AS (
-        |  SELECT d.doc_id, t.i AS idx, (t.i * 59 + d.doc_id * 11) % 256 AS v
-        |  FROM documents d CROSS JOIN generate_series(0, 1023) t(i)
-        |), stats AS (
-        |  SELECT doc_id, sum(v) / 1024.0 AS mean_byte FROM px GROUP BY doc_id
-        |), counts AS (
-        |  SELECT doc_id, v, count(*)::DOUBLE AS c FROM px GROUP BY doc_id, v
-        |), ent AS (
-        |  SELECT doc_id, sum(-(c / 1024.0) * ln(c / 1024.0) / ln(2)) AS entropy
-        |  FROM counts GROUP BY doc_id
-        |), chunkf AS (
-        |  SELECT doc_id, idx // 64 AS ch, CAST(sum(v) / 64.0 / 255.0 AS FLOAT) AS f
-        |  FROM px GROUP BY doc_id, idx // 64
-        |), nrm AS (
-        |  SELECT doc_id, sqrt(sum(CAST(f AS DOUBLE) * CAST(f AS DOUBLE))) AS fn
-        |  FROM chunkf GROUP BY doc_id
-        |)
-        |SELECT s.doc_id AS media_id,
-        |  round(s.mean_byte, 4) AS mean_byte,
-        |  round(e.entropy, 4) AS byte_entropy,
-        |  round(n.fn, 4) AS feature_norm
-        |FROM stats s JOIN ent e USING (doc_id) JOIN nrm n USING (doc_id)""".stripMargin,
+      pixelStatsSql("(t.i * 59 + d.doc_id * 11) % 256"),
     // GIF-LZW is lossless over palette indices: identical replay shape to
     // qm5, exercising the LZW dictionary instead of zlib.
     "qm8_gif_pixels" ->
-      """WITH px AS (
-        |  SELECT d.doc_id, t.i AS idx, (t.i * 101 + d.doc_id * 3) % 256 AS v
-        |  FROM documents d CROSS JOIN generate_series(0, 1023) t(i)
-        |), stats AS (
-        |  SELECT doc_id, sum(v) / 1024.0 AS mean_byte FROM px GROUP BY doc_id
-        |), counts AS (
-        |  SELECT doc_id, v, count(*)::DOUBLE AS c FROM px GROUP BY doc_id, v
-        |), ent AS (
-        |  SELECT doc_id, sum(-(c / 1024.0) * ln(c / 1024.0) / ln(2)) AS entropy
-        |  FROM counts GROUP BY doc_id
-        |), chunkf AS (
-        |  SELECT doc_id, idx // 64 AS ch, CAST(sum(v) / 64.0 / 255.0 AS FLOAT) AS f
-        |  FROM px GROUP BY doc_id, idx // 64
-        |), nrm AS (
-        |  SELECT doc_id, sqrt(sum(CAST(f AS DOUBLE) * CAST(f AS DOUBLE))) AS fn
-        |  FROM chunkf GROUP BY doc_id
-        |)
-        |SELECT s.doc_id AS media_id,
-        |  round(s.mean_byte, 4) AS mean_byte,
-        |  round(e.entropy, 4) AS byte_entropy,
-        |  round(n.fn, 4) AS feature_norm
-        |FROM stats s JOIN ent e USING (doc_id) JOIN nrm n USING (doc_id)""".stripMargin,
+      pixelStatsSql("(t.i * 101 + d.doc_id * 3) % 256"),
     // PNG is lossless: all 1024 per-doc pixels replay individually.
     // Chunk i covers bytes 64i..64i+63 (1024/16); power-of-two divisors
     // keep every division exact, same as the qm4 contract.
     "qm5_png_pixels" ->
-      """WITH px AS (
-        |  SELECT d.doc_id, t.i AS idx, (t.i * 7919 + d.doc_id) % 256 AS v
-        |  FROM documents d CROSS JOIN generate_series(0, 1023) t(i)
-        |), stats AS (
-        |  SELECT doc_id, sum(v) / 1024.0 AS mean_byte FROM px GROUP BY doc_id
-        |), counts AS (
-        |  SELECT doc_id, v, count(*)::DOUBLE AS c FROM px GROUP BY doc_id, v
-        |), ent AS (
-        |  SELECT doc_id, sum(-(c / 1024.0) * ln(c / 1024.0) / ln(2)) AS entropy
-        |  FROM counts GROUP BY doc_id
-        |), chunkf AS (
-        |  SELECT doc_id, idx // 64 AS ch, CAST(sum(v) / 64.0 / 255.0 AS FLOAT) AS f
-        |  FROM px GROUP BY doc_id, idx // 64
-        |), nrm AS (
-        |  SELECT doc_id, sqrt(sum(CAST(f AS DOUBLE) * CAST(f AS DOUBLE))) AS fn
-        |  FROM chunkf GROUP BY doc_id
-        |)
-        |SELECT s.doc_id AS media_id,
-        |  round(s.mean_byte, 4) AS mean_byte,
-        |  round(e.entropy, 4) AS byte_entropy,
-        |  round(n.fn, 4) AS feature_norm
-        |FROM stats s JOIN ent e USING (doc_id) JOIN nrm n USING (doc_id)""".stripMargin,
+      pixelStatsSql("(t.i * 7919 + d.doc_id) % 256"),
     "qz1_zonal" ->
       """WITH cells AS (
         |  SELECT (p_partkey % 17) + 0.5 AS x, (p_partkey % 11) + 0.5 AS y,
@@ -7505,32 +7957,10 @@ object SparkEntry {
     // value formula; compression must be invisible to the result
     "qz3_raster_deflate" -> qzDeflateGridSql,
     "qsp1_overlay" ->
-      """WITH ways AS (
-        |  SELECT s_suppkey AS way_id,
-        |    (s_suppkey % 13) + 0.25 AS y,
-        |    CAST(s_suppkey % 17 AS DOUBLE) AS x1,
-        |    CAST((s_suppkey % 17) + 1 + (s_suppkey % 4) AS DOUBLE) AS x2
-        |  FROM supplier),
-        |areas AS (
-        |  SELECT n_nationkey AS area_id,
-        |    CAST(n_nationkey % 10 AS DOUBLE) AS rx1,
-        |    CAST((n_nationkey % 10) + 2 + (n_nationkey % 3) AS DOUBLE) AS rx2,
-        |    (n_nationkey % 11) - 0.2 AS ry1,
-        |    (n_nationkey % 11) + 1.2 + (n_nationkey % 2) AS ry2,
-        |    CAST((n_nationkey % 7) + 1 AS DOUBLE) AS value
-        |  FROM nation),
-        |contrib AS (
-        |  SELECT way_id, sum(
-        |    (2*6371.0088*asin(least(1.0, sqrt(cos(radians(y))*cos(radians(y))*
-        |       pow(sin(radians(least(x2,rx2)-greatest(x1,rx1))/2),2))))) /
-        |    (2*6371.0088*asin(least(1.0, sqrt(cos(radians(y))*cos(radians(y))*
-        |       pow(sin(radians(x2-x1)/2),2))))) * value) AS value
-        |  FROM ways JOIN areas
-        |    ON greatest(x1,rx1) < least(x2,rx2) AND y > ry1 AND y < ry2
-        |  GROUP BY way_id)
-        |SELECT way_id, round(value, 4) AS value,
-        |  round(value / (SELECT max(value) FROM contrib) * 100, 2) AS score
-        |FROM contrib""".stripMargin,
+      s"""WITH $overlayCtes
+         |SELECT way_id, round(value, 4) AS value,
+         |  round(value / (SELECT max(value) FROM contrib) * 100, 2) AS score
+         |FROM contrib""".stripMargin,
     "qsp2_nearest" ->
       """WITH cust AS (
         |  SELECT c_custkey,
@@ -7772,20 +8202,15 @@ object SparkEntry {
     // canonical a<b edges, one row per triangle a<b<c — the engine's
     // degree-ordered orientation must reach the same count exactly.
     "qg10_triangles" ->
-      """WITH raw AS (
-        |  SELECT o_custkey % 80 AS x, o_orderkey % 80 AS y
-        |  FROM orders WHERE o_orderkey % 3 = 0),
-        |e AS (
-        |  SELECT DISTINCT least(x, y) AS a, greatest(x, y) AS b
-        |  FROM raw WHERE x <> y),
-        |n AS (SELECT count(DISTINCT v) AS n_nodes FROM
-        |  (SELECT a AS v FROM e UNION ALL SELECT b FROM e)),
-        |m AS (SELECT count(*) AS n_edges FROM e),
-        |t AS (SELECT count(*) AS triangles
-        |  FROM e e1
-        |  JOIN e e2 ON e2.a = e1.a AND e2.b > e1.b
-        |  JOIN e e3 ON e3.a = e1.b AND e3.b = e2.b)
-        |SELECT n_nodes, n_edges, triangles FROM n, m, t""".stripMargin,
+      s"""WITH ${ordersGraphCtes(3, 80)},
+         |n AS (SELECT count(DISTINCT v) AS n_nodes FROM
+         |  (SELECT a AS v FROM e UNION ALL SELECT b FROM e)),
+         |m AS (SELECT count(*) AS n_edges FROM e),
+         |t AS (SELECT count(*) AS triangles
+         |  FROM e e1
+         |  JOIN e e2 ON e2.a = e1.a AND e2.b > e1.b
+         |  JOIN e e3 ON e3.a = e1.b AND e3.b = e2.b)
+         |SELECT n_nodes, n_edges, triangles FROM n, m, t""".stripMargin,
     // K-truss: 10 unrolled peels (fixpoint at 5 measured), per round
     // re-counting each edge's common neighbours WITHIN the surviving
     // set via the doubled-adjacency wedge join; zero-support edges
@@ -8615,37 +9040,30 @@ object SparkEntry {
     // edges MATERIALIZED (referenced every round; DuckDB inlines plain
     // CTEs and re-expands the join chain each reference).
     "qg16_msg_pass" ->
-      """WITH edges AS MATERIALIZED (
-        |  SELECT c_nationkey AS src, s_nationkey AS dst,
-        |    CAST(count(*) AS BIGINT) AS w
-        |  FROM orders
-        |  JOIN customer ON o_custkey = c_custkey
-        |  JOIN lineitem ON l_orderkey = o_orderkey
-        |  JOIN supplier ON l_suppkey = s_suppkey
-        |  GROUP BY 1, 2),
-        |nodes AS MATERIALIZED (
-        |  SELECT src AS node FROM edges
-        |  UNION SELECT dst FROM edges),
-        |h0 AS MATERIALIZED (
-        |  SELECT n.node, CAST(coalesce(o.s, 0) AS BIGINT) AS feature
-        |  FROM nodes n LEFT JOIN (
-        |    SELECT src AS node, CAST(sum(w) AS BIGINT) AS s
-        |    FROM edges GROUP BY 1) o ON o.node = n.node),
-        |h1 AS MATERIALIZED (
-        |  SELECT h.node,
-        |    CAST(h.feature + coalesce(m.s, 0) AS BIGINT) AS feature
-        |  FROM h0 h LEFT JOIN (
-        |    SELECT e.dst AS node, CAST(sum(e.w * h.feature) AS BIGINT) AS s
-        |    FROM edges e JOIN h0 h ON h.node = e.src GROUP BY 1) m
-        |    ON m.node = h.node),
-        |h2 AS (
-        |  SELECT h.node,
-        |    CAST(h.feature + coalesce(m.s, 0) AS BIGINT) AS feature
-        |  FROM h1 h LEFT JOIN (
-        |    SELECT e.dst AS node, CAST(sum(e.w * h.feature) AS BIGINT) AS s
-        |    FROM edges e JOIN h1 h ON h.node = e.src GROUP BY 1) m
-        |    ON m.node = h.node)
-        |SELECT CAST(node AS BIGINT) AS node, feature FROM h2""".stripMargin,
+      s"""WITH ${nationEdgesCte("CAST(count(*) AS BIGINT)", materialized = true)},
+         |nodes AS MATERIALIZED (
+         |  SELECT src AS node FROM edges
+         |  UNION SELECT dst FROM edges),
+         |h0 AS MATERIALIZED (
+         |  SELECT n.node, CAST(coalesce(o.s, 0) AS BIGINT) AS feature
+         |  FROM nodes n LEFT JOIN (
+         |    SELECT src AS node, CAST(sum(w) AS BIGINT) AS s
+         |    FROM edges GROUP BY 1) o ON o.node = n.node),
+         |h1 AS MATERIALIZED (
+         |  SELECT h.node,
+         |    CAST(h.feature + coalesce(m.s, 0) AS BIGINT) AS feature
+         |  FROM h0 h LEFT JOIN (
+         |    SELECT e.dst AS node, CAST(sum(e.w * h.feature) AS BIGINT) AS s
+         |    FROM edges e JOIN h0 h ON h.node = e.src GROUP BY 1) m
+         |    ON m.node = h.node),
+         |h2 AS (
+         |  SELECT h.node,
+         |    CAST(h.feature + coalesce(m.s, 0) AS BIGINT) AS feature
+         |  FROM h1 h LEFT JOIN (
+         |    SELECT e.dst AS node, CAST(sum(e.w * h.feature) AS BIGINT) AS s
+         |    FROM edges e JOIN h1 h ON h.node = e.src GROUP BY 1) m
+         |    ON m.node = h.node)
+         |SELECT CAST(node AS BIGINT) AS node, feature FROM h2""".stripMargin,
     // MMR: pool + pairwise sims are the qs1 rounded-cosine replay; the
     // greedy replays as a recursive CTE carrying the picked set as a
     // LIST, argmax per step as max over a (score, -id) struct — the
@@ -9171,30 +9589,25 @@ object SparkEntry {
     // enumerated as ordered triples (a<b<c by the join structure), each
     // crediting its three corners; coef = 2t/(d(d-1)), deg<2 null
     "qg17_clustering_coef" ->
-      """WITH raw AS (
-        |  SELECT o_custkey % 80 AS x, o_orderkey % 80 AS y
-        |  FROM orders WHERE o_orderkey % 3 = 0),
-        |e AS (
-        |  SELECT DISTINCT least(x, y) AS a, greatest(x, y) AS b
-        |  FROM raw WHERE x <> y),
-        |deg AS (
-        |  SELECT v, CAST(count(*) AS BIGINT) AS deg FROM (
-        |    SELECT a AS v FROM e UNION ALL SELECT b AS v FROM e) GROUP BY v),
-        |tri AS (
-        |  SELECT e1.a AS x, e1.b AS y, e2.b AS z
-        |  FROM e e1
-        |  JOIN e e2 ON e2.a = e1.b
-        |  JOIN e e3 ON e3.a = e1.a AND e3.b = e2.b),
-        |tpn AS (
-        |  SELECT v, CAST(count(*) AS BIGINT) AS t FROM (
-        |    SELECT x AS v FROM tri UNION ALL SELECT y AS v FROM tri
-        |    UNION ALL SELECT z AS v FROM tri) GROUP BY v)
-        |SELECT d.v AS node, d.deg,
-        |  CAST(coalesce(t.t, 0) AS BIGINT) AS triangles,
-        |  CASE WHEN d.deg >= 2 THEN
-        |    round(CAST(2 * coalesce(t.t, 0) AS DOUBLE)
-        |      / CAST(d.deg * (d.deg - 1) AS DOUBLE), 6) END AS clustering_coef
-        |FROM deg d LEFT JOIN tpn t ON t.v = d.v""".stripMargin,
+      s"""WITH ${ordersGraphCtes(3, 80)},
+         |deg AS (
+         |  SELECT v, CAST(count(*) AS BIGINT) AS deg FROM (
+         |    SELECT a AS v FROM e UNION ALL SELECT b AS v FROM e) GROUP BY v),
+         |tri AS (
+         |  SELECT e1.a AS x, e1.b AS y, e2.b AS z
+         |  FROM e e1
+         |  JOIN e e2 ON e2.a = e1.b
+         |  JOIN e e3 ON e3.a = e1.a AND e3.b = e2.b),
+         |tpn AS (
+         |  SELECT v, CAST(count(*) AS BIGINT) AS t FROM (
+         |    SELECT x AS v FROM tri UNION ALL SELECT y AS v FROM tri
+         |    UNION ALL SELECT z AS v FROM tri) GROUP BY v)
+         |SELECT d.v AS node, d.deg,
+         |  CAST(coalesce(t.t, 0) AS BIGINT) AS triangles,
+         |  CASE WHEN d.deg >= 2 THEN
+         |    round(CAST(2 * coalesce(t.t, 0) AS DOUBLE)
+         |      / CAST(d.deg * (d.deg - 1) AS DOUBLE), 6) END AS clustering_coef
+         |FROM deg d LEFT JOIN tpn t ON t.v = d.v""".stripMargin,
     // Bollinger: identical ROWS-frame window power sums (exact Longs),
     // the same fixed mean/sd/band IEEE tree, full windows only, and the
     // breakout compares the same quantized doubles
@@ -9314,10 +9727,7 @@ object SparkEntry {
     // argmin) + the query's own 2-probe cell pick by the same rule,
     // then the qs7 fine ADC (16-seed 8-subspace codebook) over the
     // probed subset only
-    "qs15_ivfpq" -> {
-      val qv = Array.tabulate(64)(i => math.sin(i * 0.3 + 2.0))
-        .map(_.toString)
-        .mkString("[", ", ", "]")
+    "qs15_ivfpq" ->
       s"""WITH cseeds AS (
          |  SELECT embedding, row_number() OVER (ORDER BY vec_id) - 1 AS cc
          |  FROM (SELECT vec_id, embedding FROM embeddings ORDER BY vec_id LIMIT 8)),
@@ -9337,41 +9747,12 @@ object SparkEntry {
          |      row_number() OVER (ORDER BY
          |        round(list_sum(list_transform(generate_series(1, 64), j ->
          |          pow(qv[j] - CAST(s.embedding[j] AS DOUBLE), 2))), 6), cc) AS rn
-         |    FROM cseeds s CROSS JOIN (SELECT $qv::DOUBLE[] AS qv))
+         |    FROM cseeds s CROSS JOIN (SELECT $pqQuery::DOUBLE[] AS qv))
          |  WHERE rn <= 2),
          |sub AS (
          |  SELECT vec_id FROM assign WHERE cc IN (SELECT cc FROM qp)),
-         |seeds AS (
-         |  SELECT embedding, row_number() OVER (ORDER BY vec_id) - 1 AS c
-         |  FROM (SELECT vec_id, embedding FROM embeddings ORDER BY vec_id LIMIT 16)),
-         |cb AS (
-         |  SELECT s.s, seeds.c,
-         |    list_transform(generate_series(1, 8),
-         |      j -> CAST(embedding[s.s * 8 + j] AS DOUBLE)) AS cent
-         |  FROM seeds CROSS JOIN generate_series(0, 7) AS s(s)),
-         |dists AS (
-         |  SELECT e.vec_id, cb.s, cb.c,
-         |    round(list_sum(list_transform(generate_series(1, 8), j ->
-         |      pow(CAST(e.embedding[cb.s * 8 + j] AS DOUBLE) - cb.cent[j], 2))), 6) AS d2
-         |  FROM embeddings e
-         |  JOIN sub USING (vec_id)
-         |  CROSS JOIN cb),
-         |enc AS (
-         |  SELECT vec_id, s, c FROM (
-         |    SELECT *, row_number() OVER (PARTITION BY vec_id, s ORDER BY d2, c) AS rn
-         |    FROM dists)
-         |  WHERE rn = 1),
-         |qd AS (
-         |  SELECT cb.s, cb.c,
-         |    round(list_sum(list_transform(generate_series(1, 8), j ->
-         |      pow(qv[cb.s * 8 + j] - cb.cent[j], 2))), 6) AS qdist
-         |  FROM cb CROSS JOIN (SELECT $qv::DOUBLE[] AS qv)),
-         |adc0 AS (
-         |  SELECT e.vec_id, round(sum(q.qdist), 6) AS adc
-         |  FROM enc e JOIN qd q ON e.s = q.s AND e.c = q.c
-         |  GROUP BY e.vec_id)
-         |SELECT vec_id, adc FROM adc0 ORDER BY adc, vec_id LIMIT 50""".stripMargin
-    },
+         |${pqAdcCtes("embeddings e\n  JOIN sub USING (vec_id)\n  CROSS JOIN cb")}
+         |SELECT vec_id, adc FROM adc0 ORDER BY adc, vec_id LIMIT 50""".stripMargin,
     // Focal mean: the raster regenerates from its formula (the qz2
     // contract), grid coords replay the half-pixel-centered floor,
     // neighbors via a banded self-join, integer deci-sums, one divide
@@ -9552,25 +9933,19 @@ object SparkEntry {
     // a too-small oracle bound silently truncates distant nodes); the
     // GROUP BY collapse keeps extra iterations O(V) each.
     "qg18_bfs" ->
-      """WITH RECURSIVE raw AS (
-        |  SELECT o_custkey % 500 AS x, o_orderkey % 500 AS y
-        |  FROM orders WHERE o_orderkey % 11 = 0),
-        |e AS (
-        |  SELECT DISTINCT least(x, y) AS a, greatest(x, y) AS b
-        |  FROM raw WHERE x <> y),
-        |sym AS MATERIALIZED (
-        |  SELECT a AS v, b AS w FROM e UNION ALL SELECT b, a FROM e),
-        |lab(it, node, d) AS (
-        |  SELECT 0, CAST(0 AS BIGINT), 0
-        |  UNION ALL
-        |  SELECT it + 1, node, min(d) FROM (
-        |    SELECT l.it, l.node, l.d FROM lab l
-        |    UNION ALL
-        |    SELECT l.it, s.w AS node, l.d + 1 FROM lab l JOIN sym s ON s.v = l.node
-        |  ) t(it, node, d)
-        |  WHERE it < 40
-        |  GROUP BY it, node)
-        |SELECT node, min(d) AS dist FROM lab GROUP BY node""".stripMargin,
+      s"""WITH RECURSIVE ${ordersGraphCtes(11, 500)},
+         |$symCte,
+         |lab(it, node, d) AS (
+         |  SELECT 0, CAST(0 AS BIGINT), 0
+         |  UNION ALL
+         |  SELECT it + 1, node, min(d) FROM (
+         |    SELECT l.it, l.node, l.d FROM lab l
+         |    UNION ALL
+         |    SELECT l.it, s.w AS node, l.d + 1 FROM lab l JOIN sym s ON s.v = l.node
+         |  ) t(it, node, d)
+         |  WHERE it < 40
+         |  GROUP BY it, node)
+         |SELECT node, min(d) AS dist FROM lab GROUP BY node""".stripMargin,
     // Betweenness: no backward-pass replay — layered σ DP over the
     // converged multi-source distance table (the qg18 min-fold, keyed
     // by pivot), then the Brandes pair-sum identity as one triple
@@ -9582,47 +9957,26 @@ object SparkEntry {
     // Validated bit-identical (at 6 dp) against an independent
     // hand-rolled Brandes implementation on the same edge set.
     "qg21_betweenness" ->
-      """WITH RECURSIVE raw AS (
-        |  SELECT o_custkey % 150 AS x, o_orderkey % 150 AS y
-        |  FROM orders WHERE o_orderkey % 29 = 0),
-        |e AS (
-        |  SELECT DISTINCT least(x, y) AS a, greatest(x, y) AS b
-        |  FROM raw WHERE x <> y),
-        |sym AS MATERIALIZED (
-        |  SELECT a AS v, b AS w FROM e UNION ALL SELECT b, a FROM e),
-        |nodes AS MATERIALIZED (SELECT DISTINCT v FROM sym),
-        |lab(it, p, node, d) AS (
-        |  SELECT 0, v, v, 0 FROM nodes
-        |  UNION ALL
-        |  SELECT it + 1, p, node, min(d) FROM (
-        |    SELECT l.it, l.p, l.node, l.d FROM lab l
-        |    UNION ALL
-        |    SELECT l.it, l.p, s.w AS node, l.d + 1
-        |    FROM lab l JOIN sym s ON s.v = l.node
-        |  ) t(it, p, node, d)
-        |  WHERE it < 40
-        |  GROUP BY it, p, node),
-        |dist AS MATERIALIZED (
-        |  SELECT p, node AS v, min(d) AS d FROM lab GROUP BY p, node),
-        |sig(d, p, v, sigma) AS (
-        |  SELECT 0, v, v, CAST(1 AS BIGINT) FROM nodes
-        |  UNION ALL
-        |  SELECT s.d + 1, s.p, sym.w, CAST(sum(s.sigma) AS BIGINT)
-        |  FROM sig s
-        |  JOIN sym ON sym.v = s.v
-        |  JOIN dist ON dist.p = s.p AND dist.v = sym.w AND dist.d = s.d + 1
-        |  GROUP BY s.d + 1, s.p, sym.w),
-        |bc AS (
-        |  SELECT sv.v AS node,
-        |    sum(CAST(sv.sigma AS DOUBLE) * CAST(vt.sigma AS DOUBLE)
-        |        / CAST(st.sigma AS DOUBLE)) / 2.0 AS b
-        |  FROM sig sv
-        |  JOIN sig vt ON vt.p = sv.v AND vt.d > 0
-        |  JOIN sig st ON st.p = sv.p AND st.v = vt.v AND st.d = sv.d + vt.d
-        |  WHERE sv.d > 0
-        |  GROUP BY sv.v)
-        |SELECT n.v AS node, round(coalesce(bc.b, 0.0), 6) AS betweenness
-        |FROM nodes n LEFT JOIN bc ON bc.node = n.v""".stripMargin,
+      s"""WITH RECURSIVE $hopDistCtes,
+         |sig(d, p, v, sigma) AS (
+         |  SELECT 0, v, v, CAST(1 AS BIGINT) FROM nodes
+         |  UNION ALL
+         |  SELECT s.d + 1, s.p, sym.w, CAST(sum(s.sigma) AS BIGINT)
+         |  FROM sig s
+         |  JOIN sym ON sym.v = s.v
+         |  JOIN dist ON dist.p = s.p AND dist.v = sym.w AND dist.d = s.d + 1
+         |  GROUP BY s.d + 1, s.p, sym.w),
+         |bc AS (
+         |  SELECT sv.v AS node,
+         |    sum(CAST(sv.sigma AS DOUBLE) * CAST(vt.sigma AS DOUBLE)
+         |        / CAST(st.sigma AS DOUBLE)) / 2.0 AS b
+         |  FROM sig sv
+         |  JOIN sig vt ON vt.p = sv.v AND vt.d > 0
+         |  JOIN sig st ON st.p = sv.p AND st.v = vt.v AND st.d = sv.d + vt.d
+         |  WHERE sv.d > 0
+         |  GROUP BY sv.v)
+         |SELECT n.v AS node, round(coalesce(bc.b, 0.0), 6) AS betweenness
+         |FROM nodes n LEFT JOIN bc ON bc.node = n.v""".stripMargin,
     // Closeness + harmonic: qg21's multi-source distance table, then
     // per-vertex (distance, count) rows — n_reached/sum_dist exact
     // BIGINTs, closeness one IEEE divide, harmonic a list_reduce left
@@ -9631,44 +9985,23 @@ object SparkEntry {
     // exact, so DuckDB's first-element-init fold equals Spark's
     // 0.0-init fold term for term)
     "qg22_centrality" ->
-      """WITH RECURSIVE raw AS (
-        |  SELECT o_custkey % 150 AS x, o_orderkey % 150 AS y
-        |  FROM orders WHERE o_orderkey % 29 = 0),
-        |e AS (
-        |  SELECT DISTINCT least(x, y) AS a, greatest(x, y) AS b
-        |  FROM raw WHERE x <> y),
-        |sym AS MATERIALIZED (
-        |  SELECT a AS v, b AS w FROM e UNION ALL SELECT b, a FROM e),
-        |nodes AS MATERIALIZED (SELECT DISTINCT v FROM sym),
-        |lab(it, p, node, d) AS (
-        |  SELECT 0, v, v, 0 FROM nodes
-        |  UNION ALL
-        |  SELECT it + 1, p, node, min(d) FROM (
-        |    SELECT l.it, l.p, l.node, l.d FROM lab l
-        |    UNION ALL
-        |    SELECT l.it, l.p, s.w AS node, l.d + 1
-        |    FROM lab l JOIN sym s ON s.v = l.node
-        |  ) t(it, p, node, d)
-        |  WHERE it < 40
-        |  GROUP BY it, p, node),
-        |dist AS MATERIALIZED (
-        |  SELECT p, node AS v, min(d) AS d FROM lab GROUP BY p, node),
-        |cnts AS (
-        |  SELECT v, d, CAST(count(*) AS BIGINT) AS cnt
-        |  FROM dist WHERE d > 0 GROUP BY v, d),
-        |per AS (
-        |  SELECT v,
-        |    CAST(sum(cnt) AS BIGINT) AS n_reached,
-        |    CAST(sum(cnt * d) AS BIGINT) AS sum_dist,
-        |    list_sort(list(struct_pack(dist := d, cnt := cnt))) AS t
-        |  FROM cnts GROUP BY v)
-        |SELECT v AS node, n_reached, sum_dist,
-        |  round(CAST(n_reached AS DOUBLE) / CAST(sum_dist AS DOUBLE), 6)
-        |    AS closeness,
-        |  round(list_reduce(
-        |    list_transform(t, x -> CAST(x.cnt AS DOUBLE) / CAST(x.dist AS DOUBLE)),
-        |    (acc, e) -> acc + e), 6) AS harmonic
-        |FROM per""".stripMargin,
+      s"""WITH RECURSIVE $hopDistCtes,
+         |cnts AS (
+         |  SELECT v, d, CAST(count(*) AS BIGINT) AS cnt
+         |  FROM dist WHERE d > 0 GROUP BY v, d),
+         |per AS (
+         |  SELECT v,
+         |    CAST(sum(cnt) AS BIGINT) AS n_reached,
+         |    CAST(sum(cnt * d) AS BIGINT) AS sum_dist,
+         |    list_sort(list(struct_pack(dist := d, cnt := cnt))) AS t
+         |  FROM cnts GROUP BY v)
+         |SELECT v AS node, n_reached, sum_dist,
+         |  round(CAST(n_reached AS DOUBLE) / CAST(sum_dist AS DOUBLE), 6)
+         |    AS closeness,
+         |  round(list_reduce(
+         |    list_transform(t, x -> CAST(x.cnt AS DOUBLE) / CAST(x.dist AS DOUBLE)),
+         |    (acc, e) -> acc + e), 6) AS harmonic
+         |FROM per""".stripMargin,
     // HyperBall (p=6, m=64, α=0.709): the register state of vertex v at
     // round t IS the HLL sketch of the exact-distance ball {w: d(v,w)≤t}
     // (register union = ball union), so the oracle rebuilds per-round
@@ -9684,75 +10017,26 @@ object SparkEntry {
     // the delta/divide/add chain is the same IEEE op sequence as the
     // engine's per-round update.
     "qg23_hyperball" ->
-      """WITH RECURSIVE raw AS (
-        |  SELECT o_custkey % 150 AS x, o_orderkey % 150 AS y
-        |  FROM orders WHERE o_orderkey % 29 = 0),
-        |e AS (
-        |  SELECT DISTINCT least(x, y) AS a, greatest(x, y) AS b
-        |  FROM raw WHERE x <> y),
-        |sym AS MATERIALIZED (
-        |  SELECT a AS v, b AS w FROM e UNION ALL SELECT b, a FROM e),
-        |nodes AS MATERIALIZED (SELECT DISTINCT v FROM sym),
-        |lab(it, p, node, d) AS (
-        |  SELECT 0, v, v, 0 FROM nodes
-        |  UNION ALL
-        |  SELECT it + 1, p, node, min(d) FROM (
-        |    SELECT l.it, l.p, l.node, l.d FROM lab l
-        |    UNION ALL
-        |    SELECT l.it, l.p, s.w AS node, l.d + 1
-        |    FROM lab l JOIN sym s ON s.v = l.node
-        |  ) t(it, p, node, d)
-        |  WHERE it < 40
-        |  GROUP BY it, p, node),
-        |dist AS MATERIALIZED (
-        |  SELECT p, node AS v, min(d) AS d FROM lab GROUP BY p, node),
-        |hr AS MATERIALIZED (
-        |  SELECT v, hv // 67108864 AS b,
-        |    CASE WHEN hv % 67108864 = 0 THEN 27
-        |      ELSE 27 - length(bin(hv % 67108864)) END AS r
-        |  FROM (SELECT v,
-        |      CAST('0x' || substring(md5(CAST(v AS VARCHAR)), 1, 8)
-        |        AS BIGINT) AS hv
-        |    FROM nodes)),
-        |ts AS (
-        |  SELECT p, unnest(generate_series(0, ecc)) AS t
-        |  FROM (SELECT p, max(d) AS ecc FROM dist GROUP BY p)),
-        |regs AS (
-        |  SELECT ts.p, ts.t, hr.b, max(hr.r) AS m
-        |  FROM ts
-        |  JOIN dist ON dist.p = ts.p AND dist.d <= ts.t
-        |  JOIN hr ON hr.v = dist.v
-        |  GROUP BY ts.p, ts.t, hr.b),
-        |s AS (
-        |  SELECT p, t, CAST(count(*) AS BIGINT) AS n,
-        |    sum(1.0 / CAST(1::BIGINT << m AS DOUBLE)) AS sp
-        |  FROM regs GROUP BY p, t),
-        |est AS (
-        |  SELECT p, t,
-        |    CASE WHEN (0.709 * 64.0 * 64.0 /
-        |          (sp + (64.0 - CAST(n AS DOUBLE)))) <= 160.0 AND (64 - n) > 0
-        |      THEN 64.0 * ln(64.0 / CAST(64 - n AS DOUBLE))
-        |      ELSE 0.709 * 64.0 * 64.0 /
-        |        (sp + (64.0 - CAST(n AS DOUBLE))) END AS est
-        |  FROM s),
-        |mx AS (
-        |  SELECT p, t, max(est) OVER (PARTITION BY p ORDER BY t) AS m
-        |  FROM est),
-        |dl AS (
-        |  SELECT p, t, m,
-        |    (m - lag(m) OVER (PARTITION BY p ORDER BY t))
-        |      / CAST(t AS DOUBLE) AS term
-        |  FROM mx),
-        |per AS (
-        |  SELECT p,
-        |    list_sort(list(struct_pack(t := t, term := term))) AS l,
-        |    max(m) AS mfin
-        |  FROM dl WHERE t > 0 GROUP BY p)
-        |SELECT p AS node,
-        |  round(list_reduce(list_transform(l, x -> x.term),
-        |    (acc, e) -> acc + e), 6) AS harmonic_est,
-        |  round(mfin - 1.0, 6) AS reached_est
-        |FROM per""".stripMargin,
+      s"""WITH RECURSIVE $hopDistCtes,
+         |${hyperBallCtes("p")},
+         |mx AS (
+         |  SELECT p, t, max(est) OVER (PARTITION BY p ORDER BY t) AS m
+         |  FROM est),
+         |dl AS (
+         |  SELECT p, t, m,
+         |    (m - lag(m) OVER (PARTITION BY p ORDER BY t))
+         |      / CAST(t AS DOUBLE) AS term
+         |  FROM mx),
+         |per AS (
+         |  SELECT p,
+         |    list_sort(list(struct_pack(t := t, term := term))) AS l,
+         |    max(m) AS mfin
+         |  FROM dl WHERE t > 0 GROUP BY p)
+         |SELECT p AS node,
+         |  round(list_reduce(list_transform(l, x -> x.term),
+         |    (acc, e) -> acc + e), 6) AS harmonic_est,
+         |  round(mfin - 1.0, 6) AS reached_est
+         |FROM per""".stripMargin,
     // HyperANF effective diameter: the same per-round running-max
     // register estimates as qg23, quantized to micro-units BEFORE the
     // global sum (exact integer N(t), order-free), each node's series
@@ -9760,86 +10044,37 @@ object SparkEntry {
     // there — the engine's fixpoint loop sees the same constants), then
     // the same pick + interpolation on exact integers.
     "qg24_eff_diameter" ->
-      """WITH RECURSIVE raw AS (
-        |  SELECT o_custkey % 150 AS x, o_orderkey % 150 AS y
-        |  FROM orders WHERE o_orderkey % 29 = 0),
-        |e AS (
-        |  SELECT DISTINCT least(x, y) AS a, greatest(x, y) AS b
-        |  FROM raw WHERE x <> y),
-        |sym AS MATERIALIZED (
-        |  SELECT a AS v, b AS w FROM e UNION ALL SELECT b, a FROM e),
-        |nodes AS MATERIALIZED (SELECT DISTINCT v FROM sym),
-        |lab(it, p, node, d) AS (
-        |  SELECT 0, v, v, 0 FROM nodes
-        |  UNION ALL
-        |  SELECT it + 1, p, node, min(d) FROM (
-        |    SELECT l.it, l.p, l.node, l.d FROM lab l
-        |    UNION ALL
-        |    SELECT l.it, l.p, s.w AS node, l.d + 1
-        |    FROM lab l JOIN sym s ON s.v = l.node
-        |  ) t(it, p, node, d)
-        |  WHERE it < 40
-        |  GROUP BY it, p, node),
-        |dist AS MATERIALIZED (
-        |  SELECT p, node AS v, min(d) AS d FROM lab GROUP BY p, node),
-        |hr AS MATERIALIZED (
-        |  SELECT v, hv // 67108864 AS b,
-        |    CASE WHEN hv % 67108864 = 0 THEN 27
-        |      ELSE 27 - length(bin(hv % 67108864)) END AS r
-        |  FROM (SELECT v,
-        |      CAST('0x' || substring(md5(CAST(v AS VARCHAR)), 1, 8)
-        |        AS BIGINT) AS hv
-        |    FROM nodes)),
-        |ts AS (
-        |  SELECT p, ecc, unnest(generate_series(0, ecc)) AS t
-        |  FROM (SELECT p, max(d) AS ecc FROM dist GROUP BY p)),
-        |regs AS (
-        |  SELECT ts.p, ts.t, hr.b, max(hr.r) AS m
-        |  FROM ts
-        |  JOIN dist ON dist.p = ts.p AND dist.d <= ts.t
-        |  JOIN hr ON hr.v = dist.v
-        |  GROUP BY ts.p, ts.t, hr.b),
-        |s AS (
-        |  SELECT p, t, CAST(count(*) AS BIGINT) AS n,
-        |    sum(1.0 / CAST(1::BIGINT << m AS DOUBLE)) AS sp
-        |  FROM regs GROUP BY p, t),
-        |est AS (
-        |  SELECT p, t,
-        |    CASE WHEN (0.709 * 64.0 * 64.0 /
-        |          (sp + (64.0 - CAST(n AS DOUBLE)))) <= 160.0 AND (64 - n) > 0
-        |      THEN 64.0 * ln(64.0 / CAST(64 - n AS DOUBLE))
-        |      ELSE 0.709 * 64.0 * 64.0 /
-        |        (sp + (64.0 - CAST(n AS DOUBLE))) END AS est
-        |  FROM s),
-        |mx AS MATERIALIZED (
-        |  SELECT p, t,
-        |    CAST(round(max(est) OVER (PARTITION BY p ORDER BY t)
-        |      * 1000000.0) AS BIGINT) AS m6
-        |  FROM est),
-        |axis AS (
-        |  SELECT unnest(generate_series(0,
-        |    (SELECT max(t) FROM mx))) AS t),
-        |ecc2 AS (SELECT p, max(t) AS ecc FROM mx GROUP BY p),
-        |nf AS MATERIALIZED (
-        |  SELECT a.t, CAST(sum(x.m6) AS BIGINT) AS nft
-        |  FROM axis a
-        |  JOIN ecc2 c ON true
-        |  JOIN mx x ON x.p = c.p AND x.t = least(a.t, c.ecc)
-        |  GROUP BY a.t),
-        |fin AS (SELECT max(nft) AS nfin FROM nf),
-        |cr AS (
-        |  SELECT t, nft, lag(nft) OVER (ORDER BY t) AS prev FROM nf),
-        |pick AS (
-        |  SELECT t, nft, prev FROM cr, fin
-        |  WHERE CAST(nft AS DOUBLE) >= 0.9 * CAST(nfin AS DOUBLE)
-        |  ORDER BY t LIMIT 1)
-        |SELECT CAST(0.9 AS DOUBLE) AS alpha, fin.nfin AS nf_final,
-        |  round(CASE WHEN pick.t = 0 THEN 0.0
-        |    ELSE (pick.t - 1)
-        |      + (0.9 * CAST(fin.nfin AS DOUBLE) - CAST(pick.prev AS DOUBLE))
-        |        / (CAST(pick.nft AS DOUBLE) - CAST(pick.prev AS DOUBLE))
-        |    END, 6) AS eff_diameter
-        |FROM pick, fin""".stripMargin,
+      s"""WITH RECURSIVE $hopDistCtes,
+         |${hyperBallCtes("p, ecc")},
+         |mx AS MATERIALIZED (
+         |  SELECT p, t,
+         |    CAST(round(max(est) OVER (PARTITION BY p ORDER BY t)
+         |      * 1000000.0) AS BIGINT) AS m6
+         |  FROM est),
+         |axis AS (
+         |  SELECT unnest(generate_series(0,
+         |    (SELECT max(t) FROM mx))) AS t),
+         |ecc2 AS (SELECT p, max(t) AS ecc FROM mx GROUP BY p),
+         |nf AS MATERIALIZED (
+         |  SELECT a.t, CAST(sum(x.m6) AS BIGINT) AS nft
+         |  FROM axis a
+         |  JOIN ecc2 c ON true
+         |  JOIN mx x ON x.p = c.p AND x.t = least(a.t, c.ecc)
+         |  GROUP BY a.t),
+         |fin AS (SELECT max(nft) AS nfin FROM nf),
+         |cr AS (
+         |  SELECT t, nft, lag(nft) OVER (ORDER BY t) AS prev FROM nf),
+         |pick AS (
+         |  SELECT t, nft, prev FROM cr, fin
+         |  WHERE CAST(nft AS DOUBLE) >= 0.9 * CAST(nfin AS DOUBLE)
+         |  ORDER BY t LIMIT 1)
+         |SELECT CAST(0.9 AS DOUBLE) AS alpha, fin.nfin AS nf_final,
+         |  round(CASE WHEN pick.t = 0 THEN 0.0
+         |    ELSE (pick.t - 1)
+         |      + (0.9 * CAST(fin.nfin AS DOUBLE) - CAST(pick.prev AS DOUBLE))
+         |        / (CAST(pick.nft AS DOUBLE) - CAST(pick.prev AS DOUBLE))
+         |    END, 6) AS eff_diameter
+         |FROM pick, fin""".stripMargin,
     // TextRank: unrolled MATERIALIZED score CTEs (the qg14 pattern);
     // integer pair counts/strengths, (1.0 - 0.85) written as the same
     // IEEE subtraction the engine folds, per-node neighbor sums carry
@@ -9936,17 +10171,12 @@ object SparkEntry {
     // Degree histogram: canonical distinct undirected edges, degree =
     // rows in the symmetric list, all-integer
     "qg20_degree_hist" ->
-      """WITH raw AS (
-        |  SELECT o_custkey % 500 AS x, o_orderkey % 500 AS y
-        |  FROM orders WHERE o_orderkey % 11 = 0),
-        |e AS (
-        |  SELECT DISTINCT least(x, y) AS a, greatest(x, y) AS b
-        |  FROM raw WHERE x <> y),
-        |d AS (
-        |  SELECT node, CAST(count(*) AS BIGINT) AS deg FROM (
-        |    SELECT a AS node FROM e UNION ALL SELECT b FROM e) GROUP BY node)
-        |SELECT deg AS degree, CAST(count(*) AS BIGINT) AS n_nodes
-        |FROM d GROUP BY deg""".stripMargin,
+      s"""WITH ${ordersGraphCtes(11, 500)},
+         |d AS (
+         |  SELECT node, CAST(count(*) AS BIGINT) AS deg FROM (
+         |    SELECT a AS node FROM e UNION ALL SELECT b FROM e) GROUP BY node)
+         |SELECT deg AS degree, CAST(count(*) AS BIGINT) AS n_nodes
+         |FROM d GROUP BY deg""".stripMargin,
     // Sequence packing: pure integer pipeline — token counts, a
     // windowed prefix sum ordered by the unique doc_id, floor division
     // (// here, div in Spark — both truncate-toward-zero on the
@@ -10046,39 +10276,29 @@ object SparkEntry {
     "qd25_incr_winnow" ->
       (s"WITH RECURSIVE ${winnowingCtesFor("c", "doc_id % 3 = 0")},\n" +
         s"${winnowingCtesFor("b", "doc_id % 3 <> 0")}," +
-        """
-          |cfp AS (SELECT DISTINCT unnest(fps) AS fingerprint FROM winsc),
-          |bfp AS (SELECT doc_id, unnest(fps) AS fingerprint FROM winsb),
-          |hit AS (
-          |  SELECT b.doc_id FROM bfp b JOIN cfp c USING (fingerprint)
-          |  GROUP BY b.doc_id HAVING count(*) >= 3),
-          |novel AS (
-          |  SELECT * FROM bfp
-          |  WHERE doc_id NOT IN (SELECT doc_id FROM hit)),
-          |pairs AS (
-          |  SELECT a.doc_id AS a, b.doc_id AS b
-          |  FROM novel a JOIN novel b ON b.fingerprint = a.fingerprint
-          |    AND a.doc_id < b.doc_id
-          |  GROUP BY 1, 2 HAVING count(*) >= 3),
-          |nodes AS (SELECT DISTINCT id FROM
-          |  (SELECT a AS id FROM pairs UNION ALL SELECT b FROM pairs)),
-          |sym AS MATERIALIZED (
-          |  SELECT a AS u, b AS v FROM pairs UNION ALL SELECT b, a FROM pairs),
-          |lab(it, id, lb) AS (
-          |  SELECT 0, id, id FROM nodes
-          |  UNION ALL
-          |  SELECT it + 1, id, min(lb) FROM (
-          |    SELECT l.it, l.id, l.lb FROM lab l
-          |    UNION ALL
-          |    SELECT l.it, s.v AS id, l.lb FROM lab l JOIN sym s ON s.u = l.id
-          |  ) t(it, id, lb)
-          |  WHERE it < 20
-          |  GROUP BY it, id),
-          |final AS (SELECT id, min(lb) AS lb FROM lab GROUP BY id)
-          |SELECT d.doc_id, d.n_chars FROM documents d
-          |JOIN (SELECT DISTINCT doc_id FROM novel) nv ON nv.doc_id = d.doc_id
-          |LEFT JOIN final ON final.id = d.doc_id
-          |WHERE final.id IS NULL OR final.lb = d.doc_id""".stripMargin),
+        s"""
+           |cfp AS (SELECT DISTINCT unnest(fps) AS fingerprint FROM winsc),
+           |bfp AS (SELECT doc_id, unnest(fps) AS fingerprint FROM winsb),
+           |hit AS (
+           |  SELECT b.doc_id FROM bfp b JOIN cfp c USING (fingerprint)
+           |  GROUP BY b.doc_id HAVING count(*) >= 3),
+           |novel AS (
+           |  SELECT * FROM bfp
+           |  WHERE doc_id NOT IN (SELECT doc_id FROM hit)),
+           |pairs AS (
+           |  SELECT a.doc_id AS a, b.doc_id AS b
+           |  FROM novel a JOIN novel b ON b.fingerprint = a.fingerprint
+           |    AND a.doc_id < b.doc_id
+           |  GROUP BY 1, 2 HAVING count(*) >= 3),
+           |nodes AS (SELECT DISTINCT id FROM
+           |  (SELECT a AS id FROM pairs UNION ALL SELECT b FROM pairs)),
+           |sym AS MATERIALIZED (
+           |  SELECT a AS u, b AS v FROM pairs UNION ALL SELECT b, a FROM pairs),
+           |${componentCtes("),\n")})
+           |SELECT d.doc_id, d.n_chars FROM documents d
+           |JOIN (SELECT DISTINCT doc_id FROM novel) nv ON nv.doc_id = d.doc_id
+           |LEFT JOIN final ON final.id = d.doc_id
+           |WHERE final.id IS NULL OR final.lb = d.doc_id""".stripMargin),
     // SRM replay: VALUES allocation table, exact counts, the identical
     // (o − n·share)²/(n·share) tree at 6 dp.
     "qp19_srm" ->
@@ -10432,34 +10652,18 @@ object SparkEntry {
         |  w0 AS n_below, round(bv / 1048576.0, 6) AS var_norm
         |FROM best WHERE rn = 1""".stripMargin,
     // Component sizes: the qg18 edge set through the qd6 label-prop
-    // min-fold, sizes aggregated twice (per-label, then per-size)
+    // min-fold, sizes aggregated twice (per-label, then per-size). The
+    // %53 graph has ~26-node components: label-prop needs diameter
+    // rounds, so this oracle (alone) runs 40 iterations.
     "qg19_components" ->
-      """WITH RECURSIVE raw AS (
-        |  SELECT o_custkey % 500 AS x, o_orderkey % 500 AS y
-        |  FROM orders WHERE o_orderkey % 53 = 0),
-        |e AS (
-        |  SELECT DISTINCT least(x, y) AS a, greatest(x, y) AS b
-        |  FROM raw WHERE x <> y),
-        |nodes AS (
-        |  SELECT DISTINCT id FROM (SELECT a AS id FROM e UNION ALL SELECT b FROM e)),
-        |sym AS MATERIALIZED (SELECT a AS u, b AS v FROM e UNION ALL SELECT b, a FROM e),
-        |lab(it, id, lb) AS (
-        |  SELECT 0, id, id FROM nodes
-        |  UNION ALL
-        |  SELECT it + 1, id, min(lb) FROM (
-        |    SELECT l.it, l.id, l.lb FROM lab l
-        |    UNION ALL
-        |    SELECT l.it, s.v AS id, l.lb FROM lab l JOIN sym s ON s.u = l.id
-        |  ) t(it, id, lb)
-        |  WHERE it < 20
-        |  GROUP BY it, id),
-        |final AS (SELECT id, min(lb) AS lb FROM lab GROUP BY id),
-        |sz AS (SELECT lb, CAST(count(*) AS BIGINT) AS sz FROM final GROUP BY lb)
-        |SELECT sz AS component_size, CAST(count(*) AS BIGINT) AS n_components
-        |FROM sz GROUP BY sz""".stripMargin
-        // the %53 graph has ~26-node components: label-prop needs
-        // diameter rounds, so this oracle (alone) runs 40 iterations
-        .replace("WHERE it < 20", "WHERE it < 40"),
+      s"""WITH RECURSIVE ${ordersGraphCtes(53, 500)},
+         |nodes AS (
+         |  SELECT DISTINCT id FROM (SELECT a AS id FROM e UNION ALL SELECT b FROM e)),
+         |sym AS MATERIALIZED (SELECT a AS u, b AS v FROM e UNION ALL SELECT b, a FROM e),
+         |${componentCtes("),\n", rounds = 40)}),
+         |sz AS (SELECT lb, CAST(count(*) AS BIGINT) AS sz FROM final GROUP BY lb)
+         |SELECT sz AS component_size, CAST(count(*) AS BIGINT) AS n_components
+         |FROM sz GROUP BY sz""".stripMargin,
     // Quality rules: one aggregate row, unpivoted; CASE WHEN counts
     // nulls as FAIL exactly like the engine's when/otherwise
     "qp16_quality" ->
@@ -11275,39 +11479,9 @@ object SparkEntry {
     // codebook = subvectors of the 16 lowest-id vectors; per-subspace L2^2
     // rounded to 6 before the argmin (ties -> lowest code); ADC = sum of
     // per-subspace query tables, rounded to 6 — all three rules replayed
-    "qs7_pq_adc" -> {
-      val qv = Array.tabulate(64)(i => math.sin(i * 0.3 + 2.0)) // same probe as qs7
-        .map(_.toString)
-        .mkString("[", ", ", "]")
-      s"""WITH seeds AS (
-         |  SELECT embedding, row_number() OVER (ORDER BY vec_id) - 1 AS c
-         |  FROM (SELECT vec_id, embedding FROM embeddings ORDER BY vec_id LIMIT 16)),
-         |cb AS (
-         |  SELECT s.s, seeds.c,
-         |    list_transform(generate_series(1, 8),
-         |      j -> CAST(embedding[s.s * 8 + j] AS DOUBLE)) AS cent
-         |  FROM seeds CROSS JOIN generate_series(0, 7) AS s(s)),
-         |dists AS (
-         |  SELECT e.vec_id, cb.s, cb.c,
-         |    round(list_sum(list_transform(generate_series(1, 8), j ->
-         |      pow(CAST(e.embedding[cb.s * 8 + j] AS DOUBLE) - cb.cent[j], 2))), 6) AS d2
-         |  FROM embeddings e CROSS JOIN cb),
-         |enc AS (
-         |  SELECT vec_id, s, c FROM (
-         |    SELECT *, row_number() OVER (PARTITION BY vec_id, s ORDER BY d2, c) AS rn
-         |    FROM dists)
-         |  WHERE rn = 1),
-         |qd AS (
-         |  SELECT cb.s, cb.c,
-         |    round(list_sum(list_transform(generate_series(1, 8), j ->
-         |      pow(qv[cb.s * 8 + j] - cb.cent[j], 2))), 6) AS qdist
-         |  FROM cb CROSS JOIN (SELECT $qv::DOUBLE[] AS qv)),
-         |adc0 AS (
-         |  SELECT e.vec_id, round(sum(q.qdist), 6) AS adc
-         |  FROM enc e JOIN qd q ON e.s = q.s AND e.c = q.c
-         |  GROUP BY e.vec_id)
-         |SELECT vec_id, adc FROM adc0 ORDER BY adc, vec_id LIMIT 100""".stripMargin
-    },
+    "qs7_pq_adc" ->
+      s"""WITH ${pqAdcCtes("embeddings e CROSS JOIN cb")}
+         |SELECT vec_id, adc FROM adc0 ORDER BY adc, vec_id LIMIT 100""".stripMargin,
     "qs3_dot_topk" -> {
       val qv = Array.tabulate(64)(i => math.cos(i * 0.5 + 1.0)) // same probe as qs3
         .map(_.toString)
@@ -11356,31 +11530,18 @@ object SparkEntry {
     // over the same candidate set). Hop bound 70 > any useful path length
     // (cheapest edge 0.4994, costliest shortest path ~11.3 ⇒ ≤23 hops).
     "qg1_route_matrix" ->
-      """WITH RECURSIVE h AS (
-        |  SELECT i*8+j AS src, i*8+j+1 AS dst,
-        |         (0.5 + ((i*31 + j*17) % 100)/100.0) * 0.99888 AS w
-        |  FROM generate_series(0,7) s(i), generate_series(0,6) t(j)
-        |), v AS (
-        |  SELECT i*8+j AS src, (i+1)*8+j AS dst,
-        |         (0.5 + ((j*31 + i*17) % 100)/100.0) * 0.99888 AS w
-        |  FROM generate_series(0,6) s(i), generate_series(0,7) t(j)
-        |), e0 AS (SELECT * FROM h UNION ALL SELECT * FROM v),
-        |edges AS (SELECT src, dst, w FROM e0 UNION ALL SELECT dst, src, w FROM e0),
-        |od(idx, node) AS (SELECT * FROM (VALUES (0,0),(1,7),(2,56),(3,63),(4,36))),
-        |r(it, s, node, cost) AS (
-        |    SELECT 0, idx, node, CAST(0.0 AS DOUBLE) FROM od
-        |    UNION ALL
-        |    SELECT it + 1, s, node, min(cost) FROM (
-        |      SELECT it, s, node, cost FROM r
-        |      UNION ALL
-        |      SELECT r.it, r.s, e.dst, r.cost + e.w FROM r JOIN edges e ON e.src = r.node
-        |    ) t(it, s, node, cost)
-        |    WHERE it < 70
-        |    GROUP BY it, s, node
-        |), sp AS (SELECT s, node, min(cost) AS cost FROM r GROUP BY s, node)
-        |SELECT a.idx AS o_idx, b.idx AS d_idx, TRUE AS routable, sp.cost AS ruc
-        |FROM od a JOIN od b ON a.idx < b.idx
-        |JOIN sp ON sp.s = a.idx AND sp.node = b.node""".stripMargin,
+      s"""WITH RECURSIVE h AS (
+         |  SELECT i*8+j AS src, i*8+j+1 AS dst,
+         |         (0.5 + ((i*31 + j*17) % 100)/100.0) * 0.99888 AS w
+         |  FROM generate_series(0,7) s(i), generate_series(0,6) t(j)
+         |), v AS (
+         |  SELECT i*8+j AS src, (i+1)*8+j AS dst,
+         |         (0.5 + ((j*31 + i*17) % 100)/100.0) * 0.99888 AS w
+         |  FROM generate_series(0,6) s(i), generate_series(0,7) t(j)
+         |), e0 AS (SELECT * FROM h UNION ALL SELECT * FROM v),
+         |edges AS (SELECT src, dst, w FROM e0 UNION ALL SELECT dst, src, w FROM e0),
+         |od(idx, node) AS (SELECT * FROM (VALUES (0,0),(1,7),(2,56),(3,63),(4,36))),
+         |${routeMatrixSql(70)}""".stripMargin,
     // leave-one-out criticality: scenario dimension sw = way removed (-1 =
     // benchmark), edges filtered per scenario inside the relaxation; then
     // the reference's exact scoring (criticality.js:93-110) in SQL. One
@@ -11478,18 +11639,11 @@ object SparkEntry {
            |    SELECT e.src AS node, sum(e.w * p.a) / (SELECT sw FROM sw) AS v
            |    FROM a$i p JOIN edges e ON p.node = e.dst GROUP BY 1) s
            |    ON nd.node = s.node)""".stripMargin
-      """WITH edges AS MATERIALIZED (
-        |  SELECT c_nationkey AS src, s_nationkey AS dst,
-        |    CAST(count(*) AS DOUBLE) AS w
-        |  FROM orders
-        |  JOIN customer ON o_custkey = c_custkey
-        |  JOIN lineitem ON l_orderkey = o_orderkey
-        |  JOIN supplier ON l_suppkey = s_suppkey
-        |  GROUP BY 1, 2),
-        |nodes AS MATERIALIZED (
-        |  SELECT src AS node FROM edges UNION SELECT dst FROM edges),
-        |sw AS MATERIALIZED (SELECT sum(w) AS sw FROM edges),
-        |h0 AS (SELECT node, CAST(1.0 AS DOUBLE) AS h FROM nodes)""".stripMargin +
+      s"""WITH ${nationEdgesCte("CAST(count(*) AS DOUBLE)", materialized = true)},
+         |nodes AS MATERIALIZED (
+         |  SELECT src AS node FROM edges UNION SELECT dst FROM edges),
+         |sw AS MATERIALIZED (SELECT sum(w) AS sw FROM edges),
+         |h0 AS (SELECT node, CAST(1.0 AS DOUBLE) AS h FROM nodes)""".stripMargin +
         (1 to 4).map(iter).mkString +
         """,
           |m AS (SELECT max(h) AS mh, max(a) AS ma
@@ -11517,87 +11671,24 @@ object SparkEntry {
            |    SELECT t.dst AS node, sum(r.rank * t.p) AS inflow
            |    FROM r${i - 1} r JOIN trans t ON r.node = t.src GROUP BY 1) s
            |    ON nd.node = s.node)""".stripMargin
-      """WITH edges AS (
-        |  SELECT c_nationkey AS src, s_nationkey AS dst,
-        |    CAST(count(*) AS DOUBLE) AS w
-        |  FROM orders
-        |  JOIN customer ON o_custkey = c_custkey
-        |  JOIN lineitem ON l_orderkey = o_orderkey
-        |  JOIN supplier ON l_suppkey = s_suppkey
-        |  GROUP BY 1, 2),
-        |nodes AS (SELECT src AS node FROM edges UNION SELECT dst FROM edges),
-        |trans AS (
-        |  SELECT src, dst, w / sum(w) OVER (PARTITION BY src) AS p FROM edges),
-        |r0 AS (
-        |  SELECT node, CASE WHEN node = 0 THEN 1.0 ELSE 0.0 END AS rank
-        |  FROM nodes)""".stripMargin +
+      s"""WITH ${nationEdgesCte("CAST(count(*) AS DOUBLE)", materialized = false)},
+         |nodes AS (SELECT src AS node FROM edges UNION SELECT dst FROM edges),
+         |trans AS (
+         |  SELECT src, dst, w / sum(w) OVER (PARTITION BY src) AS p FROM edges),
+         |r0 AS (
+         |  SELECT node, CASE WHEN node = 0 THEN 1.0 ELSE 0.0 END AS rank
+         |  FROM nodes)""".stripMargin +
         (1 to 5).map(iter).mkString +
         "\nSELECT node, round(rank, 6) AS rank FROM r5"
     },
-    "qg9_pagerank" -> {
-      def iter(i: Int): String =
-        s""",
-           |r$i AS (
-           |  SELECT nd.node,
-           |    (1 - 0.85) / (SELECT n FROM cnt)
-           |    + 0.85 * coalesce(s.inflow, 0)
-           |    + 0.85 * (SELECT coalesce(sum(r.rank), 0) FROM r${i - 1} r
-           |              WHERE r.node NOT IN (SELECT src FROM trans))
-           |      / (SELECT n FROM cnt) AS rank
-           |  FROM nodes nd LEFT JOIN (
-           |    SELECT t.dst AS node, sum(r.rank * t.p) AS inflow
-           |    FROM r${i - 1} r JOIN trans t ON r.node = t.src GROUP BY 1) s
-           |    ON nd.node = s.node)""".stripMargin
-      """WITH edges AS (
-        |  SELECT c_nationkey AS src, s_nationkey AS dst,
-        |    CAST(count(*) AS DOUBLE) AS w
-        |  FROM orders
-        |  JOIN customer ON o_custkey = c_custkey
-        |  JOIN lineitem ON l_orderkey = o_orderkey
-        |  JOIN supplier ON l_suppkey = s_suppkey
-        |  GROUP BY 1, 2),
-        |nodes AS (SELECT src AS node FROM edges UNION SELECT dst FROM edges),
-        |cnt AS (SELECT CAST(count(*) AS DOUBLE) AS n FROM nodes),
-        |trans AS (
-        |  SELECT src, dst, w / sum(w) OVER (PARTITION BY src) AS p FROM edges),
-        |r0 AS (SELECT node, 1.0 / (SELECT n FROM cnt) AS rank FROM nodes)""".stripMargin +
-        (1 to 5).map(iter).mkString +
-        "\nSELECT node, round(rank, 6) AS rank FROM r5"
-    },
+    "qg9_pagerank" ->
+      pageRankSql("CAST(count(*) AS DOUBLE)"),
     // Strength-weighted PageRank: identical unrolled recurrence, edge
     // weight = sum(l_quantity) — integer-valued doubles, so the per-pair
     // sums, the per-src outflow normalizer, and the transition ratios
     // are all exact in both engines
-    "qg26_weighted_pagerank" -> {
-      def iter(i: Int): String =
-        s""",
-           |r$i AS (
-           |  SELECT nd.node,
-           |    (1 - 0.85) / (SELECT n FROM cnt)
-           |    + 0.85 * coalesce(s.inflow, 0)
-           |    + 0.85 * (SELECT coalesce(sum(r.rank), 0) FROM r${i - 1} r
-           |              WHERE r.node NOT IN (SELECT src FROM trans))
-           |      / (SELECT n FROM cnt) AS rank
-           |  FROM nodes nd LEFT JOIN (
-           |    SELECT t.dst AS node, sum(r.rank * t.p) AS inflow
-           |    FROM r${i - 1} r JOIN trans t ON r.node = t.src GROUP BY 1) s
-           |    ON nd.node = s.node)""".stripMargin
-      """WITH edges AS (
-        |  SELECT c_nationkey AS src, s_nationkey AS dst,
-        |    CAST(sum(l_quantity) AS DOUBLE) AS w
-        |  FROM orders
-        |  JOIN customer ON o_custkey = c_custkey
-        |  JOIN lineitem ON l_orderkey = o_orderkey
-        |  JOIN supplier ON l_suppkey = s_suppkey
-        |  GROUP BY 1, 2),
-        |nodes AS (SELECT src AS node FROM edges UNION SELECT dst FROM edges),
-        |cnt AS (SELECT CAST(count(*) AS DOUBLE) AS n FROM nodes),
-        |trans AS (
-        |  SELECT src, dst, w / sum(w) OVER (PARTITION BY src) AS p FROM edges),
-        |r0 AS (SELECT node, 1.0 / (SELECT n FROM cnt) AS rank FROM nodes)""".stripMargin +
-        (1 to 5).map(iter).mkString +
-        "\nSELECT node, round(rank, 6) AS rank FROM r5"
-    },
+    "qg26_weighted_pagerank" ->
+      pageRankSql("CAST(sum(l_quantity) AS DOUBLE)"),
     "qg8_scenario_overrides" ->
       """WITH ov AS (
         |  SELECT 'w' || CAST(n_nationkey % 7 AS VARCHAR) AS way_id,
@@ -11828,26 +11919,8 @@ object SparkEntry {
           |JOIN wtot tb ON tb.doc_id = c.b_id
           |LEFT JOIN winter wi ON wi.a_id = c.a_id AND wi.b_id = c.b_id""".stripMargin),
     "qd6_cluster_dedup" ->
-      (s"WITH RECURSIVE $minhashOracleCtes" +
-        """, buckets AS (
-          |  SELECT doc_id, k // 4 AS band, string_agg(v::VARCHAR, ',' ORDER BY k) AS bkey
-          |  FROM sig GROUP BY doc_id, k // 4
-          |), pairs AS (
-          |  SELECT DISTINCT a.doc_id AS a, b.doc_id AS b
-          |  FROM buckets a JOIN buckets b ON a.band = b.band AND a.bkey = b.bkey AND a.doc_id > b.doc_id
-          |), nodes AS (SELECT DISTINCT id FROM (SELECT a AS id FROM pairs UNION ALL SELECT b FROM pairs)
-          |), sym AS MATERIALIZED (SELECT a AS u, b AS v FROM pairs UNION ALL SELECT b, a FROM pairs
-          |), lab(it, id, lb) AS (
-          |  SELECT 0, id, id FROM nodes
-          |  UNION ALL
-          |  SELECT it + 1, id, min(lb) FROM (
-          |    SELECT l.it, l.id, l.lb FROM lab l
-          |    UNION ALL
-          |    SELECT l.it, s.v AS id, l.lb FROM lab l JOIN sym s ON s.u = l.id
-          |  ) t(it, id, lb)
-          |  WHERE it < 20
-          |  GROUP BY it, id
-          |), final AS (SELECT id, min(lb) AS lb FROM lab GROUP BY id)
+      (s"WITH RECURSIVE $minhashOracleCtes, $minhashComponentCtes" +
+        """)
           |SELECT d.doc_id FROM documents d
           |LEFT JOIN final ON final.id = d.doc_id
           |WHERE final.id IS NULL OR final.lb = d.doc_id""".stripMargin),
@@ -11855,26 +11928,8 @@ object SparkEntry {
     // labeled (singletons = own id), then the md5 bucket of the cluster
     // label picks the split by cumulative 8/1/1 thresholds
     "qd22_leakage_split" ->
-      (s"WITH RECURSIVE $minhashOracleCtes" +
-        """, buckets AS (
-          |  SELECT doc_id, k // 4 AS band, string_agg(v::VARCHAR, ',' ORDER BY k) AS bkey
-          |  FROM sig GROUP BY doc_id, k // 4
-          |), pairs AS (
-          |  SELECT DISTINCT a.doc_id AS a, b.doc_id AS b
-          |  FROM buckets a JOIN buckets b ON a.band = b.band AND a.bkey = b.bkey AND a.doc_id > b.doc_id
-          |), nodes AS (SELECT DISTINCT id FROM (SELECT a AS id FROM pairs UNION ALL SELECT b FROM pairs)
-          |), sym AS MATERIALIZED (SELECT a AS u, b AS v FROM pairs UNION ALL SELECT b, a FROM pairs
-          |), lab(it, id, lb) AS (
-          |  SELECT 0, id, id FROM nodes
-          |  UNION ALL
-          |  SELECT it + 1, id, min(lb) FROM (
-          |    SELECT l.it, l.id, l.lb FROM lab l
-          |    UNION ALL
-          |    SELECT l.it, s.v AS id, l.lb FROM lab l JOIN sym s ON s.u = l.id
-          |  ) t(it, id, lb)
-          |  WHERE it < 20
-          |  GROUP BY it, id
-          |), final AS (SELECT id, min(lb) AS lb FROM lab GROUP BY id
+      (s"WITH RECURSIVE $minhashOracleCtes, $minhashComponentCtes" +
+        """
           |), allc AS (
           |  SELECT d.doc_id AS id, coalesce(final.lb, d.doc_id) AS cluster
           |  FROM documents d LEFT JOIN final ON final.id = d.doc_id
@@ -11889,26 +11944,8 @@ object SparkEntry {
     // Keep-best canonicalization: qd6's bucket pairs + label-prop CC,
     // then each cluster's survivor = (length(text) DESC, doc_id) top-1
     "qd20_keep_best" ->
-      (s"WITH RECURSIVE $minhashOracleCtes" +
-        """, buckets AS (
-          |  SELECT doc_id, k // 4 AS band, string_agg(v::VARCHAR, ',' ORDER BY k) AS bkey
-          |  FROM sig GROUP BY doc_id, k // 4
-          |), pairs AS (
-          |  SELECT DISTINCT a.doc_id AS a, b.doc_id AS b
-          |  FROM buckets a JOIN buckets b ON a.band = b.band AND a.bkey = b.bkey AND a.doc_id > b.doc_id
-          |), nodes AS (SELECT DISTINCT id FROM (SELECT a AS id FROM pairs UNION ALL SELECT b FROM pairs)
-          |), sym AS MATERIALIZED (SELECT a AS u, b AS v FROM pairs UNION ALL SELECT b, a FROM pairs
-          |), lab(it, id, lb) AS (
-          |  SELECT 0, id, id FROM nodes
-          |  UNION ALL
-          |  SELECT it + 1, id, min(lb) FROM (
-          |    SELECT l.it, l.id, l.lb FROM lab l
-          |    UNION ALL
-          |    SELECT l.it, s.v AS id, l.lb FROM lab l JOIN sym s ON s.u = l.id
-          |  ) t(it, id, lb)
-          |  WHERE it < 20
-          |  GROUP BY it, id
-          |), final AS (SELECT id, min(lb) AS lb FROM lab GROUP BY id
+      (s"WITH RECURSIVE $minhashOracleCtes, $minhashComponentCtes" +
+        """
           |), mem AS (
           |  SELECT f.lb AS cluster, d.doc_id, length(d.text) AS ln
           |  FROM final f JOIN documents d ON d.doc_id = f.id
@@ -11994,13 +12031,9 @@ object SparkEntry {
     // the "non-SQL-expressible" part of LSH was only the RNG, and the
     // oracle builder runs in Scala where the RNG lives
     "qd5_embed_dedup" -> {
-      val rnd = new scala.util.Random(42L)
-      val planes = Seq.fill(16)(Array.fill(64)(rnd.nextGaussian()))
-      val planeValues = planes.zipWithIndex.flatMap { case (p, b) =>
-        p.zipWithIndex.map { case (c, i) => s"($b,${i + 1},$c)" }
-      }.mkString(",")
+      val values = planeValues(hyperplanes(16))
       s"""WITH planes(b, i, c) AS (
-         |  SELECT * FROM (VALUES $planeValues)),
+         |  SELECT * FROM (VALUES $values)),
          |dots AS (
          |  SELECT e.vec_id, p.b, sum(CAST(e.embedding[p.i] AS DOUBLE) * p.c) AS d
          |  FROM embeddings e CROSS JOIN planes p
@@ -12011,19 +12044,7 @@ object SparkEntry {
          |cand AS (
          |  SELECT a.vec_id AS a_id, b.vec_id AS b_id
          |  FROM sigs a JOIN sigs b ON a.sig = b.sig AND a.vec_id > b.vec_id),
-         |cosim AS (
-         |  SELECT c.a_id,
-         |    sum(CAST(ea.embedding[t.i] AS DOUBLE) * CAST(eb.embedding[t.i] AS DOUBLE)) AS dt,
-         |    sum(CAST(ea.embedding[t.i] AS DOUBLE) * CAST(ea.embedding[t.i] AS DOUBLE)) AS na,
-         |    sum(CAST(eb.embedding[t.i] AS DOUBLE) * CAST(eb.embedding[t.i] AS DOUBLE)) AS nb
-         |  FROM cand c
-         |  JOIN embeddings ea ON ea.vec_id = c.a_id
-         |  JOIN embeddings eb ON eb.vec_id = c.b_id
-         |  CROSS JOIN generate_series(1, 64) t(i)
-         |  GROUP BY c.a_id, c.b_id),
-         |dups AS (
-         |  SELECT DISTINCT a_id FROM cosim
-         |  WHERE (CASE WHEN sqrt(na) * sqrt(nb) = 0 THEN 0 ELSE dt / (sqrt(na) * sqrt(nb)) END) >= 0.98)
+         |${cosineDupsCtes("embeddings", "0.98")}
          |SELECT vec_id FROM embeddings
          |WHERE vec_id NOT IN (SELECT a_id FROM dups)""".stripMargin
     },
@@ -12034,13 +12055,9 @@ object SparkEntry {
     // 500-node component's eccentricity), border = min core-neighbor
     // label, everything else noise
     "qs16_dbscan" -> {
-      val rnd = new scala.util.Random(42L)
-      val planes = Seq.fill(4)(Array.fill(64)(rnd.nextGaussian()))
-      val planeValues = planes.zipWithIndex.flatMap { case (p, b) =>
-        p.zipWithIndex.map { case (c, i) => s"($b,${i + 1},$c)" }
-      }.mkString(",")
+      val values = planeValues(hyperplanes(4))
       s"""WITH RECURSIVE planes(b, i, c) AS (
-         |  SELECT * FROM (VALUES $planeValues)),
+         |  SELECT * FROM (VALUES $values)),
          |dots AS (
          |  SELECT e.vec_id, p.b, sum(CAST(e.embedding[p.i] AS DOUBLE) * p.c) AS d
          |  FROM embeddings e CROSS JOIN planes p
@@ -12129,59 +12146,22 @@ object SparkEntry {
     // round (order-free), per-node neighbor sums under the qg9
     // bounded-fan-in 6-dp contract; x0 forced DOUBLE so no DECIMAL
     // arithmetic leaks into the chain
-    "qg25_eigenvector" ->
-      """WITH raw AS (
-        |  SELECT o_custkey % 150 AS x, o_orderkey % 150 AS y
-        |  FROM orders WHERE o_orderkey % 29 = 0),
-        |e AS (
-        |  SELECT DISTINCT least(x, y) AS a, greatest(x, y) AS b
-        |  FROM raw WHERE x <> y),
-        |sym AS MATERIALIZED (
-        |  SELECT a AS v, b AS w FROM e UNION ALL SELECT b, a FROM e),
-        |nodes AS MATERIALIZED (SELECT DISTINCT v FROM sym),
-        |x0 AS (SELECT v, CAST(1.0 AS DOUBLE) AS x FROM nodes),
-        |s1 AS MATERIALIZED (
-        |  SELECT s.v, sum(p.x) AS s
-        |  FROM sym s JOIN x0 p ON p.v = s.w GROUP BY s.v),
-        |x1 AS MATERIALIZED (
-        |  SELECT v, s / (SELECT max(s) FROM s1) AS x FROM s1),
-        |s2 AS MATERIALIZED (
-        |  SELECT s.v, sum(p.x) AS s
-        |  FROM sym s JOIN x1 p ON p.v = s.w GROUP BY s.v),
-        |x2 AS MATERIALIZED (
-        |  SELECT v, s / (SELECT max(s) FROM s2) AS x FROM s2),
-        |s3 AS MATERIALIZED (
-        |  SELECT s.v, sum(p.x) AS s
-        |  FROM sym s JOIN x2 p ON p.v = s.w GROUP BY s.v),
-        |x3 AS MATERIALIZED (
-        |  SELECT v, s / (SELECT max(s) FROM s3) AS x FROM s3),
-        |s4 AS MATERIALIZED (
-        |  SELECT s.v, sum(p.x) AS s
-        |  FROM sym s JOIN x3 p ON p.v = s.w GROUP BY s.v),
-        |x4 AS MATERIALIZED (
-        |  SELECT v, s / (SELECT max(s) FROM s4) AS x FROM s4),
-        |s5 AS MATERIALIZED (
-        |  SELECT s.v, sum(p.x) AS s
-        |  FROM sym s JOIN x4 p ON p.v = s.w GROUP BY s.v),
-        |x5 AS MATERIALIZED (
-        |  SELECT v, s / (SELECT max(s) FROM s5) AS x FROM s5),
-        |s6 AS MATERIALIZED (
-        |  SELECT s.v, sum(p.x) AS s
-        |  FROM sym s JOIN x5 p ON p.v = s.w GROUP BY s.v),
-        |x6 AS MATERIALIZED (
-        |  SELECT v, s / (SELECT max(s) FROM s6) AS x FROM s6),
-        |s7 AS MATERIALIZED (
-        |  SELECT s.v, sum(p.x) AS s
-        |  FROM sym s JOIN x6 p ON p.v = s.w GROUP BY s.v),
-        |x7 AS MATERIALIZED (
-        |  SELECT v, s / (SELECT max(s) FROM s7) AS x FROM s7),
-        |s8 AS MATERIALIZED (
-        |  SELECT s.v, sum(p.x) AS s
-        |  FROM sym s JOIN x7 p ON p.v = s.w GROUP BY s.v),
-        |x8 AS MATERIALIZED (
-        |  SELECT v, s / (SELECT max(s) FROM s8) AS x FROM s8)
-        |SELECT v AS node, round(x, 6) AS score
-        |FROM x8""".stripMargin,
+    "qg25_eigenvector" -> {
+      val rounds = (1 to 8).map { i =>
+        s"""s$i AS MATERIALIZED (
+           |  SELECT s.v, sum(p.x) AS s
+           |  FROM sym s JOIN x${i - 1} p ON p.v = s.w GROUP BY s.v),
+           |x$i AS MATERIALIZED (
+           |  SELECT v, s / (SELECT max(s) FROM s$i) AS x FROM s$i)""".stripMargin
+      }.mkString(",\n")
+      s"""WITH ${ordersGraphCtes(29, 150)},
+         |$symCte,
+         |nodes AS MATERIALIZED (SELECT DISTINCT v FROM sym),
+         |x0 AS (SELECT v, CAST(1.0 AS DOUBLE) AS x FROM nodes),
+         |$rounds
+         |SELECT v AS node, round(x, 6) AS score
+         |FROM x8""".stripMargin
+    },
     // Weighted eigenvector: qg25's unrolled power iteration with the
     // neighbor sum picking up the summed pair-multiplicity weight
     // (exact BIGINT counts, both orientations added) — Σ w·x under the
@@ -12284,285 +12264,186 @@ object SparkEntry {
     // derivation-independent of the engine's backward-δ pass (the
     // qg21 cross-check). Hop bound 150 = node-count ceiling.
     "qg34_weighted_betweenness" ->
-      """WITH RECURSIVE raw AS (
-        |  SELECT o_custkey % 150 AS x, o_orderkey % 150 AS y
-        |  FROM orders WHERE o_orderkey % 29 = 0),
-        |e AS (
-        |  SELECT DISTINCT least(x, y) AS a, greatest(x, y) AS b
-        |  FROM raw WHERE x <> y),
-        |we AS (SELECT a, b, CAST(1 + (a + b) % 7 AS DOUBLE) AS w FROM e),
-        |sym AS MATERIALIZED (
-        |  SELECT a AS v, b AS t, w FROM we UNION ALL SELECT b, a, w FROM we),
-        |nodes AS MATERIALIZED (SELECT DISTINCT v FROM sym),
-        |lab(it, p, node, c) AS (
-        |  SELECT 0, v, v, CAST(0 AS DOUBLE) FROM nodes
-        |  UNION ALL
-        |  SELECT it + 1, p, node, min(c) FROM (
-        |    SELECT l.it, l.p, l.node, l.c FROM lab l
-        |    UNION ALL
-        |    SELECT l.it, l.p, s.t AS node, l.c + s.w
-        |    FROM lab l JOIN sym s ON s.v = l.node
-        |  ) t(it, p, node, c)
-        |  WHERE it < 150
-        |  GROUP BY it, p, node),
-        |dist AS MATERIALIZED (
-        |  SELECT p, node AS v, min(c) AS d FROM lab GROUP BY p, node),
-        |sig(h, p, v, sigma) AS (
-        |  SELECT 0, v, v, CAST(1 AS BIGINT) FROM nodes
-        |  UNION ALL
-        |  SELECT s.h + 1, s.p, sym.t, CAST(sum(s.sigma) AS BIGINT)
-        |  FROM sig s
-        |  JOIN sym ON sym.v = s.v
-        |  JOIN dist du ON du.p = s.p AND du.v = s.v
-        |  JOIN dist dv ON dv.p = s.p AND dv.v = sym.t
-        |    AND dv.d = du.d + sym.w
-        |  WHERE s.h < 150
-        |  GROUP BY s.h + 1, s.p, sym.t),
-        |tot AS MATERIALIZED (
-        |  SELECT s.p, s.v, CAST(sum(s.sigma) AS BIGINT) AS sg, max(d.d) AS d
-        |  FROM sig s JOIN dist d ON d.p = s.p AND d.v = s.v
-        |  GROUP BY s.p, s.v),
-        |bc AS (
-        |  SELECT sv.v AS node,
-        |    sum(CAST(sv.sg AS DOUBLE) * CAST(vt.sg AS DOUBLE)
-        |        / CAST(st.sg AS DOUBLE)) / 2.0 AS b
-        |  FROM tot sv
-        |  JOIN tot vt ON vt.p = sv.v AND vt.d > 0
-        |  JOIN tot st ON st.p = sv.p AND st.v = vt.v AND st.d = sv.d + vt.d
-        |  WHERE sv.d > 0
-        |  GROUP BY sv.v)
-        |SELECT n.v AS node, round(coalesce(bc.b, 0.0), 6) AS betweenness
-        |FROM nodes n LEFT JOIN bc ON bc.node = n.v""".stripMargin,
+      s"""WITH RECURSIVE ${costDistCtes(materialized = true)},
+         |sig(h, p, v, sigma) AS (
+         |  SELECT 0, v, v, CAST(1 AS BIGINT) FROM nodes
+         |  UNION ALL
+         |  SELECT s.h + 1, s.p, sym.t, CAST(sum(s.sigma) AS BIGINT)
+         |  FROM sig s
+         |  JOIN sym ON sym.v = s.v
+         |  JOIN dist du ON du.p = s.p AND du.v = s.v
+         |  JOIN dist dv ON dv.p = s.p AND dv.v = sym.t
+         |    AND dv.d = du.d + sym.w
+         |  WHERE s.h < 150
+         |  GROUP BY s.h + 1, s.p, sym.t),
+         |tot AS MATERIALIZED (
+         |  SELECT s.p, s.v, CAST(sum(s.sigma) AS BIGINT) AS sg, max(d.d) AS d
+         |  FROM sig s JOIN dist d ON d.p = s.p AND d.v = s.v
+         |  GROUP BY s.p, s.v),
+         |bc AS (
+         |  SELECT sv.v AS node,
+         |    sum(CAST(sv.sg AS DOUBLE) * CAST(vt.sg AS DOUBLE)
+         |        / CAST(st.sg AS DOUBLE)) / 2.0 AS b
+         |  FROM tot sv
+         |  JOIN tot vt ON vt.p = sv.v AND vt.d > 0
+         |  JOIN tot st ON st.p = sv.p AND st.v = vt.v AND st.d = sv.d + vt.d
+         |  WHERE sv.d > 0
+         |  GROUP BY sv.v)
+         |SELECT n.v AS node, round(coalesce(bc.b, 0.0), 6) AS betweenness
+         |FROM nodes n LEFT JOIN bc ON bc.node = n.v""".stripMargin,
     // Weighted eccentricity replay: the qg32 CTE with the tail swapped
     // to count + max per target node — ecc is a MAX of bit-exact
     // distances, no summation anywhere.
     "qg33_weighted_ecc" ->
-      """WITH RECURSIVE raw AS (
-        |  SELECT o_custkey % 150 AS x, o_orderkey % 150 AS y
-        |  FROM orders WHERE o_orderkey % 29 = 0),
-        |e AS (
-        |  SELECT DISTINCT least(x, y) AS a, greatest(x, y) AS b
-        |  FROM raw WHERE x <> y),
-        |we AS (SELECT a, b, CAST(1 + (a + b) % 7 AS DOUBLE) AS w FROM e),
-        |sym AS MATERIALIZED (
-        |  SELECT a AS v, b AS t, w FROM we UNION ALL SELECT b, a, w FROM we),
-        |nodes AS MATERIALIZED (SELECT DISTINCT v FROM sym),
-        |lab(it, p, node, c) AS (
-        |  SELECT 0, v, v, CAST(0 AS DOUBLE) FROM nodes
-        |  UNION ALL
-        |  SELECT it + 1, p, node, min(c) FROM (
-        |    SELECT l.it, l.p, l.node, l.c FROM lab l
-        |    UNION ALL
-        |    SELECT l.it, l.p, s.t AS node, l.c + s.w
-        |    FROM lab l JOIN sym s ON s.v = l.node
-        |  ) t(it, p, node, c)
-        |  WHERE it < 150
-        |  GROUP BY it, p, node),
-        |dist AS (
-        |  SELECT p, node AS v, min(c) AS d FROM lab GROUP BY p, node)
-        |SELECT v AS node,
-        |  CAST(count(*) AS BIGINT) AS n_reached,
-        |  round(max(d), 6) AS ecc
-        |FROM dist WHERE p <> v GROUP BY v""".stripMargin,
+      s"""WITH RECURSIVE ${costDistCtes(materialized = false)}
+         |SELECT v AS node,
+         |  CAST(count(*) AS BIGINT) AS n_reached,
+         |  round(max(d), 6) AS ecc
+         |FROM dist WHERE p <> v GROUP BY v""".stripMargin,
     // Link-prediction replay: the same wedge self-join over the
     // symmetrized adjacency, NOT EXISTS against the canonical edge list,
     // and the identical 1/ln(deg) + 1/deg sums at 6 dp.
     "qg35_link_pred" ->
-      """WITH raw AS (
-        |  SELECT o_custkey % 200 AS x, o_orderkey % 200 AS y
-        |  FROM orders WHERE o_orderkey % 5 = 0),
-        |e AS (
-        |  SELECT DISTINCT least(x, y) AS a, greatest(x, y) AS b
-        |  FROM raw WHERE x <> y),
-        |adj AS (SELECT a AS v, b AS t FROM e UNION ALL SELECT b, a FROM e),
-        |deg AS (SELECT v, count(*) AS deg FROM adj GROUP BY v),
-        |wedge AS (
-        |  SELECT a1.t AS a, a2.t AS b, d.deg
-        |  FROM adj a1 JOIN adj a2 ON a2.v = a1.v AND a1.t < a2.t
-        |  JOIN deg d ON d.v = a1.v),
-        |cand AS (
-        |  SELECT w.a, w.b, w.deg FROM wedge w
-        |  WHERE NOT EXISTS (SELECT 1 FROM e WHERE e.a = w.a AND e.b = w.b))
-        |SELECT a, b, count(*) AS cn,
-        |  round(sum(1.0 / ln(deg)), 6) AS adamic_adar,
-        |  round(sum(1.0 / deg), 6) AS resource_alloc
-        |FROM cand GROUP BY a, b HAVING count(*) >= 2""".stripMargin,
+      s"""WITH ${ordersGraphCtes(5, 200)},
+         |adj AS (SELECT a AS v, b AS t FROM e UNION ALL SELECT b, a FROM e),
+         |deg AS (SELECT v, count(*) AS deg FROM adj GROUP BY v),
+         |wedge AS (
+         |  SELECT a1.t AS a, a2.t AS b, d.deg
+         |  FROM adj a1 JOIN adj a2 ON a2.v = a1.v AND a1.t < a2.t
+         |  JOIN deg d ON d.v = a1.v),
+         |cand AS (
+         |  SELECT w.a, w.b, w.deg FROM wedge w
+         |  WHERE NOT EXISTS (SELECT 1 FROM e WHERE e.a = w.a AND e.b = w.b))
+         |SELECT a, b, count(*) AS cn,
+         |  round(sum(1.0 / ln(deg)), 6) AS adamic_adar,
+         |  round(sum(1.0 / deg), 6) AS resource_alloc
+         |FROM cand GROUP BY a, b HAVING count(*) >= 2""".stripMargin,
     // Neighborhood-Jaccard replay: qg35's wedge count WITHOUT the
     // NOT EXISTS, both degree joins, the EXISTS adjacency flag, one
     // division at 6 dp.
     "qg39_nbr_jaccard" ->
-      """WITH raw AS (
-        |  SELECT o_custkey % 200 AS x, o_orderkey % 200 AS y
-        |  FROM orders WHERE o_orderkey % 5 = 0),
-        |e AS (
-        |  SELECT DISTINCT least(x, y) AS a, greatest(x, y) AS b
-        |  FROM raw WHERE x <> y),
-        |adj AS (SELECT a AS v, b AS t FROM e UNION ALL SELECT b, a FROM e),
-        |deg AS (SELECT v, count(*) AS deg FROM adj GROUP BY v),
-        |wedge AS (
-        |  SELECT a1.t AS a, a2.t AS b
-        |  FROM adj a1 JOIN adj a2 ON a2.v = a1.v AND a1.t < a2.t),
-        |cn AS (
-        |  SELECT a, b, count(*) AS cn FROM wedge
-        |  GROUP BY a, b HAVING count(*) >= 3)
-        |SELECT cn.a, cn.b, cn.cn, da.deg AS deg_a, db.deg AS deg_b,
-        |  EXISTS (SELECT 1 FROM e WHERE e.a = cn.a AND e.b = cn.b)
-        |    AS adjacent,
-        |  round(CAST(cn.cn AS DOUBLE) / (da.deg + db.deg - cn.cn), 6)
-        |    AS jaccard
-        |FROM cn
-        |JOIN deg da ON da.v = cn.a
-        |JOIN deg db ON db.v = cn.b""".stripMargin,
+      s"""WITH ${ordersGraphCtes(5, 200)},
+         |adj AS (SELECT a AS v, b AS t FROM e UNION ALL SELECT b, a FROM e),
+         |deg AS (SELECT v, count(*) AS deg FROM adj GROUP BY v),
+         |wedge AS (
+         |  SELECT a1.t AS a, a2.t AS b
+         |  FROM adj a1 JOIN adj a2 ON a2.v = a1.v AND a1.t < a2.t),
+         |cn AS (
+         |  SELECT a, b, count(*) AS cn FROM wedge
+         |  GROUP BY a, b HAVING count(*) >= 3)
+         |SELECT cn.a, cn.b, cn.cn, da.deg AS deg_a, db.deg AS deg_b,
+         |  EXISTS (SELECT 1 FROM e WHERE e.a = cn.a AND e.b = cn.b)
+         |    AS adjacent,
+         |  round(CAST(cn.cn AS DOUBLE) / (da.deg + db.deg - cn.cn), 6)
+         |    AS jaccard
+         |FROM cn
+         |JOIN deg da ON da.v = cn.a
+         |JOIN deg db ON db.v = cn.b""".stripMargin,
     // Assortativity replay: integer moments (DuckDB sums BIGINT into
     // HUGEINT — exact, mirroring the engine's DECIMAL(38,0)), mean² as
     // an explicit multiply, nullif for the regular-graph degenerate.
     "qg36_assortativity" ->
-      """WITH raw AS (
-        |  SELECT o_custkey % 80 AS x, o_orderkey % 80 AS y
-        |  FROM orders WHERE o_orderkey % 3 = 0),
-        |e AS (
-        |  SELECT DISTINCT least(x, y) AS a, greatest(x, y) AS b
-        |  FROM raw WHERE x <> y),
-        |adj AS (SELECT a AS v, b AS t FROM e UNION ALL SELECT b, a FROM e),
-        |deg AS (SELECT v, count(*) AS deg FROM adj GROUP BY v),
-        |dd AS (
-        |  SELECT dv.deg AS dx, dt.deg AS dy
-        |  FROM adj JOIN deg dv ON dv.v = adj.v JOIN deg dt ON dt.v = adj.t),
-        |mom AS (
-        |  SELECT count(*) AS m2, sum(dx) AS sx, sum(dx * dx) AS sx2,
-        |    sum(dx * dy) AS sxy
-        |  FROM dd),
-        |n AS (SELECT count(*) AS n_nodes FROM deg),
-        |m AS (SELECT count(*) AS n_edges FROM e)
-        |SELECT n_nodes, n_edges,
-        |  round((CAST(sxy AS DOUBLE) / m2
-        |          - (CAST(sx AS DOUBLE) / m2) * (CAST(sx AS DOUBLE) / m2))
-        |        / nullif(CAST(sx2 AS DOUBLE) / m2
-        |          - (CAST(sx AS DOUBLE) / m2) * (CAST(sx AS DOUBLE) / m2), 0),
-        |    6) AS assortativity
-        |FROM mom, n, m""".stripMargin,
+      s"""WITH ${ordersGraphCtes(3, 80)},
+         |adj AS (SELECT a AS v, b AS t FROM e UNION ALL SELECT b, a FROM e),
+         |deg AS (SELECT v, count(*) AS deg FROM adj GROUP BY v),
+         |dd AS (
+         |  SELECT dv.deg AS dx, dt.deg AS dy
+         |  FROM adj JOIN deg dv ON dv.v = adj.v JOIN deg dt ON dt.v = adj.t),
+         |mom AS (
+         |  SELECT count(*) AS m2, sum(dx) AS sx, sum(dx * dx) AS sx2,
+         |    sum(dx * dy) AS sxy
+         |  FROM dd),
+         |n AS (SELECT count(*) AS n_nodes FROM deg),
+         |m AS (SELECT count(*) AS n_edges FROM e)
+         |SELECT n_nodes, n_edges,
+         |  round((CAST(sxy AS DOUBLE) / m2
+         |          - (CAST(sx AS DOUBLE) / m2) * (CAST(sx AS DOUBLE) / m2))
+         |        / nullif(CAST(sx2 AS DOUBLE) / m2
+         |          - (CAST(sx AS DOUBLE) / m2) * (CAST(sx AS DOUBLE) / m2), 0),
+         |    6) AS assortativity
+         |FROM mom, n, m""".stripMargin,
     // Modularity replay: v mod 8 labeling, per-community degree mass +
     // intra count, q_term's division chain written literally.
     "qg37_modularity" ->
-      """WITH raw AS (
-        |  SELECT o_custkey % 80 AS x, o_orderkey % 80 AS y
-        |  FROM orders WHERE o_orderkey % 3 = 0),
-        |e AS (
-        |  SELECT DISTINCT least(x, y) AS a, greatest(x, y) AS b
-        |  FROM raw WHERE x <> y),
-        |el AS (SELECT a, b, a % 8 AS ca, b % 8 AS cb FROM e),
-        |m AS (SELECT count(*) AS m FROM el),
-        |degc AS (
-        |  SELECT c, count(DISTINCT v) AS n_nodes, count(*) AS deg_sum FROM (
-        |    SELECT a AS v, ca AS c FROM el UNION ALL SELECT b, cb FROM el)
-        |  GROUP BY c),
-        |intra AS (
-        |  SELECT ca AS c, count(*) AS intra_edges FROM el
-        |  WHERE ca = cb GROUP BY ca)
-        |SELECT d.c AS community, d.n_nodes,
-        |  CAST(coalesce(i.intra_edges, 0) AS BIGINT) AS intra_edges,
-        |  d.deg_sum,
-        |  round(CAST(coalesce(i.intra_edges, 0) AS DOUBLE) / m.m
-        |        - (CAST(d.deg_sum AS DOUBLE) / (2 * m.m))
-        |          * (CAST(d.deg_sum AS DOUBLE) / (2 * m.m)),
-        |    6) AS q_term
-        |FROM degc d LEFT JOIN intra i ON i.c = d.c CROSS JOIN m""".stripMargin,
+      s"""WITH ${ordersGraphCtes(3, 80)},
+         |el AS (SELECT a, b, a % 8 AS ca, b % 8 AS cb FROM e),
+         |m AS (SELECT count(*) AS m FROM el),
+         |degc AS (
+         |  SELECT c, count(DISTINCT v) AS n_nodes, count(*) AS deg_sum FROM (
+         |    SELECT a AS v, ca AS c FROM el UNION ALL SELECT b, cb FROM el)
+         |  GROUP BY c),
+         |intra AS (
+         |  SELECT ca AS c, count(*) AS intra_edges FROM el
+         |  WHERE ca = cb GROUP BY ca)
+         |SELECT d.c AS community, d.n_nodes,
+         |  CAST(coalesce(i.intra_edges, 0) AS BIGINT) AS intra_edges,
+         |  d.deg_sum,
+         |  round(CAST(coalesce(i.intra_edges, 0) AS DOUBLE) / m.m
+         |        - (CAST(d.deg_sum AS DOUBLE) / (2 * m.m))
+         |          * (CAST(d.deg_sum AS DOUBLE) / (2 * m.m)),
+         |    6) AS q_term
+         |FROM degc d LEFT JOIN intra i ON i.c = d.c CROSS JOIN m""".stripMargin,
     // Random-walk replay: the same sorted adjacency lists, the same
     // md5(start|walk|step|current) mod degree neighbor pick, one CTE
     // step per walk hop.
     "qg38_random_walks" ->
-      """WITH RECURSIVE raw AS (
-        |  SELECT o_custkey % 80 AS x, o_orderkey % 80 AS y
-        |  FROM orders WHERE o_orderkey % 3 = 0),
-        |e AS (
-        |  SELECT DISTINCT least(x, y) AS a, greatest(x, y) AS b
-        |  FROM raw WHERE x <> y),
-        |sym AS (SELECT a AS v, b AS t FROM e UNION ALL SELECT b, a FROM e),
-        |adj AS MATERIALIZED (
-        |  SELECT v, list(t ORDER BY t) AS nbrs, count(*) AS deg
-        |  FROM sym GROUP BY v),
-        |wk(start, walk, step, node) AS (
-        |  SELECT v, w.j, 0, v FROM adj CROSS JOIN generate_series(0, 1) w(j)
-        |  UNION ALL
-        |  SELECT wk.start, wk.walk, wk.step + 1,
-        |    a.nbrs[CAST(
-        |      (CAST('0x' || substring(md5(
-        |         CAST(wk.start AS VARCHAR) || '|'
-        |         || CAST(wk.walk AS VARCHAR) || '|'
-        |         || CAST(wk.step + 1 AS VARCHAR) || '|'
-        |         || CAST(wk.node AS VARCHAR)),
-        |       1, 8) AS BIGINT) % a.deg) + 1 AS INT)]
-        |  FROM wk JOIN adj a ON a.v = wk.node
-        |  WHERE wk.step < 7)
-        |SELECT CAST(start AS BIGINT) AS start, CAST(walk AS BIGINT) AS walk,
-        |  CAST(step AS BIGINT) AS step, CAST(node AS BIGINT) AS node
-        |FROM wk""".stripMargin,
+      s"""WITH RECURSIVE ${ordersGraphCtes(3, 80)},
+         |sym AS (SELECT a AS v, b AS t FROM e UNION ALL SELECT b, a FROM e),
+         |adj AS MATERIALIZED (
+         |  SELECT v, list(t ORDER BY t) AS nbrs, count(*) AS deg
+         |  FROM sym GROUP BY v),
+         |wk(start, walk, step, node) AS (
+         |  SELECT v, w.j, 0, v FROM adj CROSS JOIN generate_series(0, 1) w(j)
+         |  UNION ALL
+         |  SELECT wk.start, wk.walk, wk.step + 1,
+         |    a.nbrs[CAST(
+         |      (CAST('0x' || substring(md5(
+         |         CAST(wk.start AS VARCHAR) || '|'
+         |         || CAST(wk.walk AS VARCHAR) || '|'
+         |         || CAST(wk.step + 1 AS VARCHAR) || '|'
+         |         || CAST(wk.node AS VARCHAR)),
+         |       1, 8) AS BIGINT) % a.deg) + 1 AS INT)]
+         |  FROM wk JOIN adj a ON a.v = wk.node
+         |  WHERE wk.step < 7)
+         |SELECT CAST(start AS BIGINT) AS start, CAST(walk AS BIGINT) AS walk,
+         |  CAST(step AS BIGINT) AS step, CAST(node AS BIGINT) AS node
+         |FROM wk""".stripMargin,
     "qg32_weighted_centrality" ->
-      """WITH RECURSIVE raw AS (
-        |  SELECT o_custkey % 150 AS x, o_orderkey % 150 AS y
-        |  FROM orders WHERE o_orderkey % 29 = 0),
-        |e AS (
-        |  SELECT DISTINCT least(x, y) AS a, greatest(x, y) AS b
-        |  FROM raw WHERE x <> y),
-        |we AS (SELECT a, b, CAST(1 + (a + b) % 7 AS DOUBLE) AS w FROM e),
-        |sym AS MATERIALIZED (
-        |  SELECT a AS v, b AS t, w FROM we UNION ALL SELECT b, a, w FROM we),
-        |nodes AS MATERIALIZED (SELECT DISTINCT v FROM sym),
-        |lab(it, p, node, c) AS (
-        |  SELECT 0, v, v, CAST(0 AS DOUBLE) FROM nodes
-        |  UNION ALL
-        |  SELECT it + 1, p, node, min(c) FROM (
-        |    SELECT l.it, l.p, l.node, l.c FROM lab l
-        |    UNION ALL
-        |    SELECT l.it, l.p, s.t AS node, l.c + s.w
-        |    FROM lab l JOIN sym s ON s.v = l.node
-        |  ) t(it, p, node, c)
-        |  WHERE it < 150
-        |  GROUP BY it, p, node),
-        |dist AS MATERIALIZED (
-        |  SELECT p, node AS v, min(c) AS d FROM lab GROUP BY p, node),
-        |cnts AS (
-        |  SELECT v, d, CAST(count(*) AS BIGINT) AS cnt
-        |  FROM dist WHERE p <> v GROUP BY v, d),
-        |per AS (
-        |  SELECT v,
-        |    CAST(sum(cnt) AS BIGINT) AS n_reached,
-        |    list_sort(list(struct_pack(dist := d, cnt := cnt))) AS t
-        |  FROM cnts GROUP BY v),
-        |sd AS (
-        |  SELECT v, n_reached, t,
-        |    list_reduce(
-        |      list_transform(t, x -> x.dist * CAST(x.cnt AS DOUBLE)),
-        |      (acc, e) -> acc + e) AS sdv
-        |  FROM per)
-        |SELECT v AS node, n_reached,
-        |  round(sdv, 6) AS sum_dist,
-        |  round(CAST(n_reached AS DOUBLE) / sdv, 6) AS closeness,
-        |  round(list_reduce(
-        |    list_transform(t, x -> CAST(x.cnt AS DOUBLE) / x.dist),
-        |    (acc, e) -> acc + e), 6) AS harmonic
-        |FROM sd""".stripMargin,
+      s"""WITH RECURSIVE ${costDistCtes(materialized = true)},
+         |cnts AS (
+         |  SELECT v, d, CAST(count(*) AS BIGINT) AS cnt
+         |  FROM dist WHERE p <> v GROUP BY v, d),
+         |per AS (
+         |  SELECT v,
+         |    CAST(sum(cnt) AS BIGINT) AS n_reached,
+         |    list_sort(list(struct_pack(dist := d, cnt := cnt))) AS t
+         |  FROM cnts GROUP BY v),
+         |sd AS (
+         |  SELECT v, n_reached, t,
+         |    list_reduce(
+         |      list_transform(t, x -> x.dist * CAST(x.cnt AS DOUBLE)),
+         |      (acc, e) -> acc + e) AS sdv
+         |  FROM per)
+         |SELECT v AS node, n_reached,
+         |  round(sdv, 6) AS sum_dist,
+         |  round(CAST(n_reached AS DOUBLE) / sdv, 6) AS closeness,
+         |  round(list_reduce(
+         |    list_transform(t, x -> CAST(x.cnt AS DOUBLE) / x.dist),
+         |    (acc, e) -> acc + e), 6) AS harmonic
+         |FROM sd""".stripMargin,
     "qg30_sssp" ->
-      """WITH RECURSIVE raw AS (
-        |  SELECT o_custkey % 500 AS x, o_orderkey % 500 AS y
-        |  FROM orders WHERE o_orderkey % 11 = 0),
-        |e AS (
-        |  SELECT DISTINCT least(x, y) AS a, greatest(x, y) AS b
-        |  FROM raw WHERE x <> y),
-        |we AS (SELECT a, b, CAST(1 + (a + b) % 7 AS DOUBLE) AS w FROM e),
-        |sym AS MATERIALIZED (
-        |  SELECT a AS v, b AS t, w FROM we UNION ALL SELECT b, a, w FROM we),
-        |r(it, node, cost) AS (
-        |  SELECT 0, CAST(0 AS BIGINT), CAST(0 AS DOUBLE)
-        |  UNION ALL
-        |  SELECT it + 1, node, min(cost) FROM (
-        |    SELECT r.it, r.node, r.cost FROM r
-        |    UNION ALL
-        |    SELECT r.it, s.t AS node, r.cost + s.w FROM r JOIN sym s ON s.v = r.node
-        |  ) q(it, node, cost)
-        |  WHERE it < 500
-        |  GROUP BY it, node)
-        |SELECT node, min(cost) AS dist FROM r GROUP BY node""".stripMargin,
+      s"""WITH RECURSIVE ${weightedGraphCtes(11, 500)},
+         |r(it, node, cost) AS (
+         |  SELECT 0, CAST(0 AS BIGINT), CAST(0 AS DOUBLE)
+         |  UNION ALL
+         |  SELECT it + 1, node, min(cost) FROM (
+         |    SELECT r.it, r.node, r.cost FROM r
+         |    UNION ALL
+         |    SELECT r.it, s.t AS node, r.cost + s.w FROM r JOIN sym s ON s.v = r.node
+         |  ) q(it, node, cost)
+         |  WHERE it < 500
+         |  GROUP BY it, node)
+         |SELECT node, min(cost) AS dist FROM r GROUP BY node""".stripMargin,
     // ^ bound = the %500 projection's node-count ceiling: any shortest
     // path has <= n - 1 hops, so it < 500 is structural at EVERY scale
     // factor (the old it < 40 leaned on data-dependent connectivity — a
@@ -12600,202 +12481,140 @@ object SparkEntry {
     // qd5's exact double-cast cosine, but candidate pairs come from
     // cluster equality instead of LSH signature equality
     "qd14_semdedup" ->
-      """WITH seeds AS (
-        |  SELECT embedding, row_number() OVER (ORDER BY vec_id) - 1 AS cidx
-        |  FROM (SELECT vec_id, embedding FROM embeddings ORDER BY vec_id LIMIT 8)),
-        |dists AS (
-        |  SELECT e.vec_id, s.cidx,
-        |    round(list_sum(list_transform(generate_series(1, 64), j ->
-        |      pow(CAST(e.embedding[j] AS DOUBLE) - CAST(s.embedding[j] AS DOUBLE), 2))), 6) AS d2
-        |  FROM embeddings e CROSS JOIN seeds s),
-        |assign AS (
-        |  SELECT vec_id, cidx AS cluster FROM (
-        |    SELECT *, row_number() OVER (PARTITION BY vec_id ORDER BY d2, cidx) AS rn
-        |    FROM dists)
-        |  WHERE rn = 1),
-        |cand AS (
-        |  SELECT a.vec_id AS a_id, b.vec_id AS b_id
-        |  FROM assign a JOIN assign b ON a.cluster = b.cluster AND a.vec_id > b.vec_id),
-        |cosim AS (
-        |  SELECT c.a_id,
-        |    sum(CAST(ea.embedding[t.i] AS DOUBLE) * CAST(eb.embedding[t.i] AS DOUBLE)) AS dt,
-        |    sum(CAST(ea.embedding[t.i] AS DOUBLE) * CAST(ea.embedding[t.i] AS DOUBLE)) AS na,
-        |    sum(CAST(eb.embedding[t.i] AS DOUBLE) * CAST(eb.embedding[t.i] AS DOUBLE)) AS nb
-        |  FROM cand c
-        |  JOIN embeddings ea ON ea.vec_id = c.a_id
-        |  JOIN embeddings eb ON eb.vec_id = c.b_id
-        |  CROSS JOIN generate_series(1, 64) t(i)
-        |  GROUP BY c.a_id, c.b_id),
-        |dups AS (
-        |  SELECT DISTINCT a_id FROM cosim
-        |  WHERE (CASE WHEN sqrt(na) * sqrt(nb) = 0 THEN 0 ELSE dt / (sqrt(na) * sqrt(nb)) END) >= 0.4)
-        |SELECT a.vec_id, CAST(a.cluster AS INTEGER) AS cluster FROM assign a
-        |WHERE a.vec_id NOT IN (SELECT a_id FROM dups)""".stripMargin,
+      s"""WITH seeds AS (
+         |  SELECT embedding, row_number() OVER (ORDER BY vec_id) - 1 AS cidx
+         |  FROM (SELECT vec_id, embedding FROM embeddings ORDER BY vec_id LIMIT 8)),
+         |dists AS (
+         |  SELECT e.vec_id, s.cidx,
+         |    round(list_sum(list_transform(generate_series(1, 64), j ->
+         |      pow(CAST(e.embedding[j] AS DOUBLE) - CAST(s.embedding[j] AS DOUBLE), 2))), 6) AS d2
+         |  FROM embeddings e CROSS JOIN seeds s),
+         |assign AS (
+         |  SELECT vec_id, cidx AS cluster FROM (
+         |    SELECT *, row_number() OVER (PARTITION BY vec_id ORDER BY d2, cidx) AS rn
+         |    FROM dists)
+         |  WHERE rn = 1),
+         |cand AS (
+         |  SELECT a.vec_id AS a_id, b.vec_id AS b_id
+         |  FROM assign a JOIN assign b ON a.cluster = b.cluster AND a.vec_id > b.vec_id),
+         |${cosineDupsCtes("embeddings", "0.4")}
+         |SELECT a.vec_id, CAST(a.cluster AS INTEGER) AS cluster FROM assign a
+         |WHERE a.vec_id NOT IN (SELECT a_id FROM dups)""".stripMargin,
     // incremental SemDeDup: corpus/batch split + corpus-seeded assignment
     // + both prune paths (vs corpus, within batch) replayed
     "qd15_incr_semdedup" ->
-      """WITH corpus AS (
-        |  SELECT vec_id, embedding FROM embeddings WHERE vec_id % 5 <> 0),
-        |batch AS (
-        |  SELECT vec_id + 1000000 AS vec_id, embedding FROM embeddings
-        |  WHERE vec_id % 5 = 0),
-        |seeds AS (
-        |  SELECT embedding, row_number() OVER (ORDER BY vec_id) - 1 AS cidx
-        |  FROM (SELECT vec_id, embedding FROM corpus ORDER BY vec_id LIMIT 8)),
-        |call AS (SELECT * FROM corpus UNION ALL SELECT * FROM batch),
-        |dists AS (
-        |  SELECT e.vec_id, s.cidx,
-        |    round(list_sum(list_transform(generate_series(1, 64), j ->
-        |      pow(CAST(e.embedding[j] AS DOUBLE) - CAST(s.embedding[j] AS DOUBLE), 2))), 6) AS d2
-        |  FROM call e CROSS JOIN seeds s),
-        |assign AS (
-        |  SELECT vec_id, cidx AS cluster FROM (
-        |    SELECT *, row_number() OVER (PARTITION BY vec_id ORDER BY d2, cidx) AS rn
-        |    FROM dists)
-        |  WHERE rn = 1),
-        |cand AS (
-        |  SELECT b.vec_id AS a_id, o.vec_id AS b_id
-        |  FROM assign b JOIN assign o ON b.cluster = o.cluster
-        |  JOIN batch bb ON bb.vec_id = b.vec_id
-        |  WHERE (o.vec_id < 1000000 OR (o.vec_id >= 1000000 AND o.vec_id < b.vec_id))
-        |    AND o.vec_id <> b.vec_id),
-        |cosim AS (
-        |  SELECT c.a_id,
-        |    sum(CAST(ea.embedding[t.i] AS DOUBLE) * CAST(eb.embedding[t.i] AS DOUBLE)) AS dt,
-        |    sum(CAST(ea.embedding[t.i] AS DOUBLE) * CAST(ea.embedding[t.i] AS DOUBLE)) AS na,
-        |    sum(CAST(eb.embedding[t.i] AS DOUBLE) * CAST(eb.embedding[t.i] AS DOUBLE)) AS nb
-        |  FROM cand c
-        |  JOIN call ea ON ea.vec_id = c.a_id
-        |  JOIN call eb ON eb.vec_id = c.b_id
-        |  CROSS JOIN generate_series(1, 64) t(i)
-        |  GROUP BY c.a_id, c.b_id),
-        |dups AS (
-        |  SELECT DISTINCT a_id FROM cosim
-        |  WHERE (CASE WHEN sqrt(na) * sqrt(nb) = 0 THEN 0 ELSE dt / (sqrt(na) * sqrt(nb)) END) >= 0.4)
-        |SELECT b.vec_id, CAST(a.cluster AS INTEGER) AS cluster
-        |FROM batch b JOIN assign a ON a.vec_id = b.vec_id
-        |WHERE b.vec_id NOT IN (SELECT a_id FROM dups)""".stripMargin,
+      s"""WITH corpus AS (
+         |  SELECT vec_id, embedding FROM embeddings WHERE vec_id % 5 <> 0),
+         |batch AS (
+         |  SELECT vec_id + 1000000 AS vec_id, embedding FROM embeddings
+         |  WHERE vec_id % 5 = 0),
+         |seeds AS (
+         |  SELECT embedding, row_number() OVER (ORDER BY vec_id) - 1 AS cidx
+         |  FROM (SELECT vec_id, embedding FROM corpus ORDER BY vec_id LIMIT 8)),
+         |call AS (SELECT * FROM corpus UNION ALL SELECT * FROM batch),
+         |dists AS (
+         |  SELECT e.vec_id, s.cidx,
+         |    round(list_sum(list_transform(generate_series(1, 64), j ->
+         |      pow(CAST(e.embedding[j] AS DOUBLE) - CAST(s.embedding[j] AS DOUBLE), 2))), 6) AS d2
+         |  FROM call e CROSS JOIN seeds s),
+         |assign AS (
+         |  SELECT vec_id, cidx AS cluster FROM (
+         |    SELECT *, row_number() OVER (PARTITION BY vec_id ORDER BY d2, cidx) AS rn
+         |    FROM dists)
+         |  WHERE rn = 1),
+         |cand AS (
+         |  SELECT b.vec_id AS a_id, o.vec_id AS b_id
+         |  FROM assign b JOIN assign o ON b.cluster = o.cluster
+         |  JOIN batch bb ON bb.vec_id = b.vec_id
+         |  WHERE (o.vec_id < 1000000 OR (o.vec_id >= 1000000 AND o.vec_id < b.vec_id))
+         |    AND o.vec_id <> b.vec_id),
+         |${cosineDupsCtes("call", "0.4")}
+         |SELECT b.vec_id, CAST(a.cluster AS INTEGER) AS cluster
+         |FROM batch b JOIN assign a ON a.vec_id = b.vec_id
+         |WHERE b.vec_id NOT IN (SELECT a_id FROM dups)""".stripMargin,
     // the reference's golden 10-segment network: edge list as VALUES with
     // the identical ruc·lenM/1000.0 cost expression (literal simplification
     // like 0.8·1000/1000 → 0.8 would NOT be ulp-identical), BF as in qg1
     "qg5_golden_routes" ->
-      """WITH RECURSIVE e0(src, dst, ruc, lenm) AS (
-        |  SELECT * FROM (VALUES
-        |    (0,1,1.25,1000),(1,2,1.25,1000),(2,3,1.25,1000),
-        |    (1,4,0.75,1000),(4,5,0.75,2000),(5,3,0.75,1000),
-        |    (1,6,0.8,1000),(6,7,0.8,2000),(7,3,0.8,1000),(8,2,0.8,500))),
-        |edges AS (
-        |  SELECT src, dst, CAST(ruc AS DOUBLE) * lenm / 1000.0 AS w FROM e0
-        |  UNION ALL
-        |  SELECT dst, src, CAST(ruc AS DOUBLE) * lenm / 1000.0 AS w FROM e0
-        |),
-        |od(idx, node) AS (SELECT * FROM (VALUES (0,0),(1,3),(2,8))),
-        |r(it, s, node, cost) AS (
-        |    SELECT 0, idx, node, CAST(0.0 AS DOUBLE) FROM od
-        |    UNION ALL
-        |    SELECT it + 1, s, node, min(cost) FROM (
-        |      SELECT it, s, node, cost FROM r
-        |      UNION ALL
-        |      SELECT r.it, r.s, e.dst, r.cost + e.w FROM r JOIN edges e ON e.src = r.node
-        |    ) t(it, s, node, cost)
-        |    WHERE it < 20
-        |    GROUP BY it, s, node
-        |), sp AS (SELECT s, node, min(cost) AS cost FROM r GROUP BY s, node)
-        |SELECT a.idx AS o_idx, b.idx AS d_idx, TRUE AS routable, sp.cost AS ruc
-        |FROM od a JOIN od b ON a.idx < b.idx
-        |JOIN sp ON sp.s = a.idx AND sp.node = b.node""".stripMargin,
+      s"""WITH RECURSIVE e0(src, dst, ruc, lenm) AS (
+         |  SELECT * FROM (VALUES
+         |    (0,1,1.25,1000),(1,2,1.25,1000),(2,3,1.25,1000),
+         |    (1,4,0.75,1000),(4,5,0.75,2000),(5,3,0.75,1000),
+         |    (1,6,0.8,1000),(6,7,0.8,2000),(7,3,0.8,1000),(8,2,0.8,500))),
+         |edges AS (
+         |  SELECT src, dst, CAST(ruc AS DOUBLE) * lenm / 1000.0 AS w FROM e0
+         |  UNION ALL
+         |  SELECT dst, src, CAST(ruc AS DOUBLE) * lenm / 1000.0 AS w FROM e0
+         |),
+         |od(idx, node) AS (SELECT * FROM (VALUES (0,0),(1,3),(2,8))),
+         |${routeMatrixSql(20)}""".stripMargin,
     // golden-fixture EAUL: two DISTINCT impassable sets (RP500: ways 2,3;
     // RP1000: 2,3,5 — fl dimension 0/1/2), A-C and B-C disconnect under
     // flood and are globally excluded (gu), per-period repair times from
     // the documented way lengths/percents. Same bit-exact BF core.
     "qg6_golden_eaul" ->
-      """WITH RECURSIVE ways(way, name, src, dst, ruc, lenm) AS (
-        |  SELECT * FROM (VALUES
-        |    (0,'1',0,1,1.25,1000),(1,'2',1,2,1.25,1000),(2,'3',2,3,1.25,1000),
-        |    (3,'4',1,4,0.75,1000),(4,'5',4,5,0.75,2000),(5,'6',5,3,0.75,1000),
-        |    (6,'7',1,6,0.8,1000),(7,'8',6,7,0.8,2000),(8,'9',7,3,0.8,1000),
-        |    (9,'10',8,2,0.8,500))),
-        |edges AS (
-        |  SELECT way, src, dst, CAST(ruc AS DOUBLE) AS ruc, CAST(ruc AS DOUBLE) * lenm / 1000.0 AS w FROM ways
-        |  UNION ALL
-        |  SELECT way, dst, src, CAST(ruc AS DOUBLE), CAST(ruc AS DOUBLE) * lenm / 1000.0 FROM ways
-        |),
-        |imp(fl, way) AS (SELECT * FROM (VALUES (1,1),(1,2),(2,1),(2,2),(2,4))),
-        |pct(fl, way, p) AS (SELECT * FROM (VALUES (1,1,50.0),(1,2,50.0),(2,1,100.0),(2,2,100.0),(2,4,100.0))),
-        |ups(uidx, uid, uruc, usurface) AS (
-        |  SELECT * FROM (VALUES (0,'upgrade-rehab-asphalt',0.23,'paved'),
-        |                        (1,'upgrade-rehab-gravel',0.27,'unpaved'),
-        |                        (2,'rehab-earth',0.30,'unpaved'))),
-        |scen AS (
-        |  SELECT -1 AS sw, -1 AS uidx, fl FROM (VALUES (0),(1),(2)) f(fl)
-        |  UNION ALL
-        |  SELECT w.way, u.uidx, f.fl FROM (SELECT DISTINCT way FROM ways) w(way)
-        |  CROSS JOIN ups u CROSS JOIN (VALUES (0),(1),(2)) f(fl)
-        |),
-        |od(idx, node) AS (SELECT * FROM (VALUES (0,0),(1,3),(2,8))),
-        |r(sw, uidx, fl, it, s, node, cost) AS (
-        |  SELECT sw, uidx, fl, 0, idx, node, CAST(0.0 AS DOUBLE) FROM scen CROSS JOIN od
-        |  UNION ALL
-        |  SELECT sw, uidx, fl, it + 1, s, node, min(cost) FROM (
-        |    SELECT sw, uidx, fl, it, s, node, cost FROM r
-        |    UNION ALL
-        |    SELECT r.sw, r.uidx, r.fl, r.it, r.s, e.dst,
-        |      r.cost + CASE WHEN e.way = r.sw THEN e.w * (u.uruc / e.ruc) ELSE e.w END
-        |    FROM r JOIN edges e ON e.src = r.node
-        |      AND NOT EXISTS (SELECT 1 FROM imp WHERE imp.fl = r.fl AND imp.way = e.way)
-        |    LEFT JOIN ups u ON u.uidx = r.uidx
-        |  ) t(sw, uidx, fl, it, s, node, cost)
-        |  WHERE it < 15
-        |  GROUP BY sw, uidx, fl, it, s, node
-        |),
-        |sp AS (SELECT sw, uidx, fl, s, node, min(cost) AS cost FROM r GROUP BY sw, uidx, fl, s, node),
-        |tri AS (SELECT a.idx AS o, b.idx AS d, b.node AS dnode FROM od a JOIN od b ON a.idx < b.idx),
-        |mat AS (
-        |  SELECT sc.sw, sc.uidx, sc.fl, t.o, t.d, sp.cost
-        |  FROM scen sc CROSS JOIN tri t
-        |  LEFT JOIN sp ON sp.sw = sc.sw AND sp.uidx = sc.uidx AND sp.fl = sc.fl
-        |              AND sp.s = t.o AND sp.node = t.dnode
-        |),
-        |gu AS (SELECT DISTINCT o, d FROM mat WHERE sw = -1 AND uidx = -1 AND fl IN (1,2) AND cost IS NULL),
-        |fsum AS (
-        |  SELECT f.sw, f.uidx, f.fl,
-        |    sum((coalesce(f.cost, 0) - coalesce(b.cost, 0)) * 73000.0) AS s
-        |  FROM mat f
-        |  JOIN mat b ON b.sw = f.sw AND b.uidx = f.uidx AND b.fl = 0 AND b.o = f.o AND b.d = f.d
-        |  WHERE f.fl IN (1,2) AND NOT EXISTS (SELECT 1 FROM gu WHERE gu.o = f.o AND gu.d = f.d)
-        |  GROUP BY f.sw, f.uidx, f.fl
-        |),
-        |rep AS (
-        |  SELECT q.sw, q.uidx, q.fl,
-        |    max(CAST(q.lenm AS DOUBLE) * q.p / 100.0 / 1000.0 * q.rt / 24.0) AS r
-        |  FROM (
-        |    SELECT sc.sw, sc.uidx, i.fl, w.lenm, pct.p,
-        |      CASE WHEN (CASE WHEN w.way = sc.sw THEN u.usurface ELSE 'unpaved' END) = 'paved'
-        |           THEN 1056.0 ELSE 4320.0 END AS rt
-        |    FROM (SELECT DISTINCT sw, uidx FROM scen) sc
-        |    CROSS JOIN imp i
-        |    JOIN ways w ON w.way = i.way
-        |    JOIN pct ON pct.fl = i.fl AND pct.way = i.way
-        |    LEFT JOIN ups u ON u.uidx = sc.uidx
-        |  ) q
-        |  GROUP BY q.sw, q.uidx, q.fl
-        |),
-        |eauls AS (
-        |  SELECT f5.sw, f5.uidx,
-        |    0.5 * ((1.0/250 - 1.0/500) * (0.0 + r5.r * f5.s)
-        |         + (1.0/500 - 1.0/1000) * (r5.r * f5.s + r10.r * f10.s)) AS raw
-        |  FROM fsum f5
-        |  JOIN fsum f10 ON f10.sw = f5.sw AND f10.uidx = f5.uidx AND f10.fl = 2
-        |  JOIN rep r5 ON r5.sw = f5.sw AND r5.uidx = f5.uidx AND r5.fl = 1
-        |  JOIN rep r10 ON r10.sw = f5.sw AND r10.uidx = f5.uidx AND r10.fl = 2
-        |  WHERE f5.fl = 1
-        |)
-        |SELECT w.name AS way_id, u.uid AS upgrade,
-        |  round(CASE WHEN abs(raw) < 1 THEN 0.0 ELSE raw END, 6) AS eaul
-        |FROM eauls JOIN ups u USING (uidx) JOIN (SELECT DISTINCT way, name FROM ways) w ON w.way = eauls.sw
-        |WHERE sw >= 0
-        |UNION ALL
-        |SELECT 'baseline', 'baseline', round(raw, 6) FROM eauls WHERE sw = -1""".stripMargin,
+      s"""WITH RECURSIVE ways(way, name, src, dst, ruc, lenm) AS (
+         |  SELECT * FROM (VALUES
+         |    (0,'1',0,1,1.25,1000),(1,'2',1,2,1.25,1000),(2,'3',2,3,1.25,1000),
+         |    (3,'4',1,4,0.75,1000),(4,'5',4,5,0.75,2000),(5,'6',5,3,0.75,1000),
+         |    (6,'7',1,6,0.8,1000),(7,'8',6,7,0.8,2000),(8,'9',7,3,0.8,1000),
+         |    (9,'10',8,2,0.8,500))),
+         |edges AS (
+         |  SELECT way, src, dst, CAST(ruc AS DOUBLE) AS ruc, CAST(ruc AS DOUBLE) * lenm / 1000.0 AS w FROM ways
+         |  UNION ALL
+         |  SELECT way, dst, src, CAST(ruc AS DOUBLE), CAST(ruc AS DOUBLE) * lenm / 1000.0 FROM ways
+         |),
+         |imp(fl, way) AS (SELECT * FROM (VALUES (1,1),(1,2),(2,1),(2,2),(2,4))),
+         |pct(fl, way, p) AS (SELECT * FROM (VALUES (1,1,50.0),(1,2,50.0),(2,1,100.0),(2,2,100.0),(2,4,100.0))),
+         |$eaulUpgradesCte,
+         |scen AS (
+         |  SELECT -1 AS sw, -1 AS uidx, fl FROM (VALUES (0),(1),(2)) f(fl)
+         |  UNION ALL
+         |  SELECT w.way, u.uidx, f.fl FROM (SELECT DISTINCT way FROM ways) w(way)
+         |  CROSS JOIN ups u CROSS JOIN (VALUES (0),(1),(2)) f(fl)
+         |),
+         |od(idx, node) AS (SELECT * FROM (VALUES (0,0),(1,3),(2,8))),
+         |${eaulRouteCtes("\n      AND NOT EXISTS (SELECT 1 FROM imp WHERE imp.fl = r.fl AND imp.way = e.way)", 15)},
+         |gu AS (SELECT DISTINCT o, d FROM mat WHERE sw = -1 AND uidx = -1 AND fl IN (1,2) AND cost IS NULL),
+         |fsum AS (
+         |  SELECT f.sw, f.uidx, f.fl,
+         |    sum((coalesce(f.cost, 0) - coalesce(b.cost, 0)) * 73000.0) AS s
+         |  FROM mat f
+         |  JOIN mat b ON b.sw = f.sw AND b.uidx = f.uidx AND b.fl = 0 AND b.o = f.o AND b.d = f.d
+         |  WHERE f.fl IN (1,2) AND NOT EXISTS (SELECT 1 FROM gu WHERE gu.o = f.o AND gu.d = f.d)
+         |  GROUP BY f.sw, f.uidx, f.fl
+         |),
+         |rep AS (
+         |  SELECT q.sw, q.uidx, q.fl,
+         |    max(CAST(q.lenm AS DOUBLE) * q.p / 100.0 / 1000.0 * q.rt / 24.0) AS r
+         |  FROM (
+         |    SELECT sc.sw, sc.uidx, i.fl, w.lenm, pct.p,
+         |      CASE WHEN (CASE WHEN w.way = sc.sw THEN u.usurface ELSE 'unpaved' END) = 'paved'
+         |           THEN 1056.0 ELSE 4320.0 END AS rt
+         |    FROM (SELECT DISTINCT sw, uidx FROM scen) sc
+         |    CROSS JOIN imp i
+         |    JOIN ways w ON w.way = i.way
+         |    JOIN pct ON pct.fl = i.fl AND pct.way = i.way
+         |    LEFT JOIN ups u ON u.uidx = sc.uidx
+         |  ) q
+         |  GROUP BY q.sw, q.uidx, q.fl
+         |),
+         |eauls AS (
+         |  SELECT f5.sw, f5.uidx,
+         |    0.5 * ((1.0/250 - 1.0/500) * (0.0 + r5.r * f5.s)
+         |         + (1.0/500 - 1.0/1000) * (r5.r * f5.s + r10.r * f10.s)) AS raw
+         |  FROM fsum f5
+         |  JOIN fsum f10 ON f10.sw = f5.sw AND f10.uidx = f5.uidx AND f10.fl = 2
+         |  JOIN rep r5 ON r5.sw = f5.sw AND r5.uidx = f5.uidx AND r5.fl = 1
+         |  JOIN rep r10 ON r10.sw = f5.sw AND r10.uidx = f5.uidx AND r10.fl = 2
+         |  WHERE f5.fl = 1
+         |)
+         |SELECT w.name AS way_id, u.uid AS upgrade,
+         |  round(CASE WHEN abs(raw) < 1 THEN 0.0 ELSE raw END, 6) AS eaul
+         |FROM eauls JOIN ups u USING (uidx) JOIN (SELECT DISTINCT way, name FROM ways) w ON w.way = eauls.sw
+         |WHERE sw >= 0
+         |UNION ALL
+         |SELECT 'baseline', 'baseline', round(raw, 6) FROM eauls WHERE sw = -1""".stripMargin,
     // EAUL sweep on grid(6): scenario = (way sw, upgrade uidx, flooded fl).
     // Demo flood stats sever ways only at RP 500/1000 with the same
     // impassable set, so per scenario exactly two route matrices exist
@@ -12807,98 +12626,74 @@ object SparkEntry {
     // unroutable exclusion, and the |eaul|<1 neglect threshold all replay
     // with the reference's exact arithmetic shape.
     "qg3_eaul" ->
-      """WITH RECURSIVE wayedges AS (
-        |  SELECT row_number() OVER (ORDER BY i, j, kind) - 1 AS way, src, dst, ruc, ruc * 0.99888 AS w
-        |  FROM (
-        |    SELECT i, j, 0 AS kind, i*6+j AS src, i*6+j+1 AS dst,
-        |           0.5 + ((i*31 + j*17) % 100)/100.0 AS ruc
-        |    FROM generate_series(0,5) s(i), generate_series(0,4) t(j)
-        |    UNION ALL
-        |    SELECT i, j, 1, i*6+j, (i+1)*6+j,
-        |           0.5 + ((j*31 + i*17) % 100)/100.0
-        |    FROM generate_series(0,4) s(i), generate_series(0,5) t(j)
-        |  ) raw(i, j, kind, src, dst, ruc)
-        |),
-        |ways AS (
-        |  SELECT way, min(ruc) AS ruc,
-        |         CASE WHEN way % 3 = 0 THEN 'paved' ELSE 'unpaved' END AS surface,
-        |         (way % 7 = 0) AS flooded
-        |  FROM wayedges GROUP BY way
-        |),
-        |edges AS (
-        |  SELECT we.way, we.src, we.dst, we.ruc, we.w, wy.flooded
-        |  FROM wayedges we JOIN ways wy USING (way)
-        |  UNION ALL
-        |  SELECT we.way, we.dst, we.src, we.ruc, we.w, wy.flooded
-        |  FROM wayedges we JOIN ways wy USING (way)
-        |),
-        |ups(uidx, uid, uruc, usurface) AS (
-        |  SELECT * FROM (VALUES (0,'upgrade-rehab-asphalt',0.23,'paved'),
-        |                        (1,'upgrade-rehab-gravel',0.27,'unpaved'),
-        |                        (2,'rehab-earth',0.30,'unpaved'))),
-        |scen AS (
-        |  SELECT -1 AS sw, -1 AS uidx, fl FROM (VALUES (0),(1)) f(fl)
-        |  UNION ALL
-        |  SELECT w.way, u.uidx, f.fl FROM ways w CROSS JOIN ups u CROSS JOIN (VALUES (0),(1)) f(fl)
-        |),
-        |od(idx, node) AS (SELECT * FROM (VALUES (0,0),(1,5),(2,30),(3,35),(4,21))),
-        |r(sw, uidx, fl, it, s, node, cost) AS (
-        |  SELECT sw, uidx, fl, 0, idx, node, CAST(0.0 AS DOUBLE) FROM scen CROSS JOIN od
-        |  UNION ALL
-        |  SELECT sw, uidx, fl, it + 1, s, node, min(cost) FROM (
-        |    SELECT sw, uidx, fl, it, s, node, cost FROM r
-        |    UNION ALL
-        |    SELECT r.sw, r.uidx, r.fl, r.it, r.s, e.dst,
-        |      r.cost + CASE WHEN e.way = r.sw THEN e.w * (u.uruc / e.ruc) ELSE e.w END
-        |    FROM r JOIN edges e ON e.src = r.node AND NOT (r.fl = 1 AND e.flooded)
-        |    LEFT JOIN ups u ON u.uidx = r.uidx
-        |  ) t(sw, uidx, fl, it, s, node, cost)
-        |  WHERE it < 40
-        |  GROUP BY sw, uidx, fl, it, s, node
-        |),
-        |sp AS (SELECT sw, uidx, fl, s, node, min(cost) AS cost FROM r GROUP BY sw, uidx, fl, s, node),
-        |tri AS (SELECT a.idx AS o, b.idx AS d, b.node AS dnode FROM od a JOIN od b ON a.idx < b.idx),
-        |mat AS (
-        |  SELECT sc.sw, sc.uidx, sc.fl, t.o, t.d, sp.cost
-        |  FROM scen sc CROSS JOIN tri t
-        |  LEFT JOIN sp ON sp.sw = sc.sw AND sp.uidx = sc.uidx AND sp.fl = sc.fl
-        |              AND sp.s = t.o AND sp.node = t.dnode
-        |),
-        |gu AS (SELECT o, d FROM mat WHERE sw = -1 AND uidx = -1 AND fl = 1 AND cost IS NULL),
-        |fsum AS (
-        |  SELECT f.sw, f.uidx,
-        |    sum((coalesce(f.cost, 0) - coalesce(b.cost, 0)) * 36500.0) AS s
-        |  FROM mat f
-        |  JOIN mat b ON b.sw = f.sw AND b.uidx = f.uidx AND b.fl = 0 AND b.o = f.o AND b.d = f.d
-        |  WHERE f.fl = 1 AND NOT EXISTS (SELECT 1 FROM gu WHERE gu.o = f.o AND gu.d = f.d)
-        |  GROUP BY f.sw, f.uidx
-        |),
-        |rep AS (
-        |  SELECT q.sw, q.uidx,
-        |    max(1000.0 * 50.0 / 100.0 / 1000.0 * q.rt / 24.0) AS r500,
-        |    max(1000.0 * 100.0 / 100.0 / 1000.0 * q.rt / 24.0) AS r1000
-        |  FROM (
-        |    SELECT sc.sw, sc.uidx,
-        |      CASE WHEN (CASE WHEN w.way = sc.sw THEN u.usurface ELSE w.surface END) = 'paved'
-        |           THEN 1056.0 ELSE 4320.0 END AS rt
-        |    FROM (SELECT DISTINCT sw, uidx FROM scen) sc
-        |    CROSS JOIN ways w
-        |    LEFT JOIN ups u ON u.uidx = sc.uidx
-        |    WHERE w.flooded
-        |  ) q
-        |  GROUP BY q.sw, q.uidx
-        |),
-        |eauls AS (
-        |  SELECT f.sw, f.uidx,
-        |    0.5 * ((1.0/250 - 1.0/500) * (0.0 + rep.r500 * f.s)
-        |         + (1.0/500 - 1.0/1000) * (rep.r500 * f.s + rep.r1000 * f.s)) AS raw
-        |  FROM fsum f JOIN rep ON rep.sw = f.sw AND rep.uidx = f.uidx
-        |)
-        |SELECT 'w' || sw AS way_id, u.uid AS upgrade,
-        |  round(CASE WHEN abs(raw) < 1 THEN 0.0 ELSE raw END, 6) AS eaul
-        |FROM eauls JOIN ups u USING (uidx) WHERE sw >= 0
-        |UNION ALL
-        |SELECT 'baseline', 'baseline', round(raw, 6) FROM eauls WHERE sw = -1""".stripMargin,
+      s"""WITH RECURSIVE wayedges AS (
+         |  SELECT row_number() OVER (ORDER BY i, j, kind) - 1 AS way, src, dst, ruc, ruc * 0.99888 AS w
+         |  FROM (
+         |    SELECT i, j, 0 AS kind, i*6+j AS src, i*6+j+1 AS dst,
+         |           0.5 + ((i*31 + j*17) % 100)/100.0 AS ruc
+         |    FROM generate_series(0,5) s(i), generate_series(0,4) t(j)
+         |    UNION ALL
+         |    SELECT i, j, 1, i*6+j, (i+1)*6+j,
+         |           0.5 + ((j*31 + i*17) % 100)/100.0
+         |    FROM generate_series(0,4) s(i), generate_series(0,5) t(j)
+         |  ) raw(i, j, kind, src, dst, ruc)
+         |),
+         |ways AS (
+         |  SELECT way, min(ruc) AS ruc,
+         |         CASE WHEN way % 3 = 0 THEN 'paved' ELSE 'unpaved' END AS surface,
+         |         (way % 7 = 0) AS flooded
+         |  FROM wayedges GROUP BY way
+         |),
+         |edges AS (
+         |  SELECT we.way, we.src, we.dst, we.ruc, we.w, wy.flooded
+         |  FROM wayedges we JOIN ways wy USING (way)
+         |  UNION ALL
+         |  SELECT we.way, we.dst, we.src, we.ruc, we.w, wy.flooded
+         |  FROM wayedges we JOIN ways wy USING (way)
+         |),
+         |$eaulUpgradesCte,
+         |scen AS (
+         |  SELECT -1 AS sw, -1 AS uidx, fl FROM (VALUES (0),(1)) f(fl)
+         |  UNION ALL
+         |  SELECT w.way, u.uidx, f.fl FROM ways w CROSS JOIN ups u CROSS JOIN (VALUES (0),(1)) f(fl)
+         |),
+         |od(idx, node) AS (SELECT * FROM (VALUES (0,0),(1,5),(2,30),(3,35),(4,21))),
+         |${eaulRouteCtes(" AND NOT (r.fl = 1 AND e.flooded)", 40)},
+         |gu AS (SELECT o, d FROM mat WHERE sw = -1 AND uidx = -1 AND fl = 1 AND cost IS NULL),
+         |fsum AS (
+         |  SELECT f.sw, f.uidx,
+         |    sum((coalesce(f.cost, 0) - coalesce(b.cost, 0)) * 36500.0) AS s
+         |  FROM mat f
+         |  JOIN mat b ON b.sw = f.sw AND b.uidx = f.uidx AND b.fl = 0 AND b.o = f.o AND b.d = f.d
+         |  WHERE f.fl = 1 AND NOT EXISTS (SELECT 1 FROM gu WHERE gu.o = f.o AND gu.d = f.d)
+         |  GROUP BY f.sw, f.uidx
+         |),
+         |rep AS (
+         |  SELECT q.sw, q.uidx,
+         |    max(1000.0 * 50.0 / 100.0 / 1000.0 * q.rt / 24.0) AS r500,
+         |    max(1000.0 * 100.0 / 100.0 / 1000.0 * q.rt / 24.0) AS r1000
+         |  FROM (
+         |    SELECT sc.sw, sc.uidx,
+         |      CASE WHEN (CASE WHEN w.way = sc.sw THEN u.usurface ELSE w.surface END) = 'paved'
+         |           THEN 1056.0 ELSE 4320.0 END AS rt
+         |    FROM (SELECT DISTINCT sw, uidx FROM scen) sc
+         |    CROSS JOIN ways w
+         |    LEFT JOIN ups u ON u.uidx = sc.uidx
+         |    WHERE w.flooded
+         |  ) q
+         |  GROUP BY q.sw, q.uidx
+         |),
+         |eauls AS (
+         |  SELECT f.sw, f.uidx,
+         |    0.5 * ((1.0/250 - 1.0/500) * (0.0 + rep.r500 * f.s)
+         |         + (1.0/500 - 1.0/1000) * (rep.r500 * f.s + rep.r1000 * f.s)) AS raw
+         |  FROM fsum f JOIN rep ON rep.sw = f.sw AND rep.uidx = f.uidx
+         |)
+         |SELECT 'w' || sw AS way_id, u.uid AS upgrade,
+         |  round(CASE WHEN abs(raw) < 1 THEN 0.0 ELSE raw END, 6) AS eaul
+         |FROM eauls JOIN ups u USING (uidx) WHERE sw >= 0
+         |UNION ALL
+         |SELECT 'baseline', 'baseline', round(raw, 6) FROM eauls WHERE sw = -1""".stripMargin,
     "qt4_redact" ->
       """WITH red AS (
         |  SELECT doc_id, regexp_replace(regexp_replace(regexp_replace(
@@ -12943,24 +12738,8 @@ object SparkEntry {
     // MinHash estimate (shared sig/sh CTEs): agreement-count/16 is a
     // dyadic rational — exact in both engines
     "qd9_minhash_estimate" ->
-      (s"WITH RECURSIVE $minhashOracleCtes" +
-        """, pair AS (
-          |  SELECT a.doc_id AS a_id, b.doc_id AS b_id
-          |  FROM documents a JOIN documents b ON b.doc_id = a.doc_id + 1
-          |), est AS (
-          |  SELECT p.a_id, sum(CASE WHEN sa.v = sb.v THEN 1 ELSE 0 END) / 16.0 AS e
-          |  FROM pair p
-          |  JOIN sig sa ON sa.doc_id = p.a_id
-          |  JOIN sig sb ON sb.doc_id = p.b_id AND sb.k = sa.k
-          |  GROUP BY p.a_id
-          |), shc AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY doc_id
-          |), inter AS (
-          |  SELECT p.a_id, count(*) AS ni
-          |  FROM pair p
-          |  JOIN sh sa ON sa.doc_id = p.a_id
-          |  JOIN sh sb ON sb.doc_id = p.b_id AND sb.sh = sa.sh
-          |  GROUP BY p.a_id
-          |)
+      (s"WITH RECURSIVE $minhashOracleCtes, $minhashPairCtes" +
+        """
           |SELECT e.a_id AS doc_id, round(e.e, 6) AS mh_est,
           |  round(coalesce(i.ni, 0)::DOUBLE /
           |        (na.n + nb.n - coalesce(i.ni, 0)), 6) AS exact_j
@@ -12972,24 +12751,8 @@ object SparkEntry {
     // formula is one ordered divide chain over the identical J estimate
     // and integer sizes, so it matches bit-for-bit before the round.
     "qd18_contain_est" ->
-      (s"WITH RECURSIVE $minhashOracleCtes" +
-        """, pair AS (
-          |  SELECT a.doc_id AS a_id, b.doc_id AS b_id
-          |  FROM documents a JOIN documents b ON b.doc_id = a.doc_id + 1
-          |), est AS (
-          |  SELECT p.a_id, sum(CASE WHEN sa.v = sb.v THEN 1 ELSE 0 END) / 16.0 AS e
-          |  FROM pair p
-          |  JOIN sig sa ON sa.doc_id = p.a_id
-          |  JOIN sig sb ON sb.doc_id = p.b_id AND sb.k = sa.k
-          |  GROUP BY p.a_id
-          |), shc AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY doc_id
-          |), inter AS (
-          |  SELECT p.a_id, count(*) AS ni
-          |  FROM pair p
-          |  JOIN sh sa ON sa.doc_id = p.a_id
-          |  JOIN sh sb ON sb.doc_id = p.b_id AND sb.sh = sa.sh
-          |  GROUP BY p.a_id
-          |)
+      (s"WITH RECURSIVE $minhashOracleCtes, $minhashPairCtes" +
+        """
           |SELECT e.a_id AS doc_id,
           |  round((e.e * (na.n + nb.n)) / ((1 + e.e) * na.n), 6) AS cont_est,
           |  round(coalesce(i.ni, 0)::DOUBLE / na.n, 6) AS exact_c
@@ -13013,225 +12776,117 @@ object SparkEntry {
     // off-divisible lengths), then the qm18 band/hamming/component
     // chain.
     "qm21_audio_trim_dedup" ->
-      """WITH RECURSIVE gids AS (
-        |  SELECT DISTINCT doc_id % 100 AS gid FROM documents),
-        |par AS (
-        |  SELECT gid,
-        |    CASE WHEN gid >= 50 THEN 1000 ELSE 1024 END AS n,
-        |    (gid % 50) * 2654435761 % 65536 AS pat
-        |  FROM gids),
-        |smp AS (
-        |  SELECT p.gid, p.n, i.i,
-        |    abs((i.i * 2731) % (2 * CASE WHEN (pat >> (i.i // 64)) & 1 = 1
-        |          THEN 32768 ELSE 256 END)
-        |        - CASE WHEN (pat >> (i.i // 64)) & 1 = 1
-        |          THEN 32768 ELSE 256 END) AS av,
-        |    (i.i * 16) // p.n AS w
-        |  FROM par p JOIN generate_series(0, 1023) i(i) ON i.i < p.n),
-        |en AS (
-        |  SELECT gid, w, CAST(sum(av) AS BIGINT) AS e,
-        |    CAST(count(*) AS BIGINT) AS cw, max(n) AS n
-        |  FROM smp GROUP BY gid, w),
-        |tot AS (SELECT gid, CAST(sum(e) AS BIGINT) AS total FROM en GROUP BY gid),
-        |bits AS MATERIALIZED (
-        |  SELECT en.gid,
-        |    string_agg(CASE WHEN e * n > total * cw THEN '1' ELSE '0' END, ''
-        |      ORDER BY w) AS hb
-        |  FROM en JOIN tot USING (gid) GROUP BY en.gid),
-        |banded AS (
-        |  SELECT gid, b, substr(hb, b * 4 + 1, 4) AS bk
-        |  FROM bits, unnest(generate_series(0, 3)) s(b)),
-        |cand AS (
-        |  SELECT DISTINCT a.gid AS ga, b.gid AS gb
-        |  FROM banded a JOIN banded b ON a.b = b.b AND a.bk = b.bk AND a.gid > b.gid),
-        |ham AS (
-        |  SELECT c.ga, c.gb,
-        |    list_sum(list_transform(generate_series(1, 16), j ->
-        |      CASE WHEN substr(ha.hb, j, 1) = substr(h2.hb, j, 1) THEN 0 ELSE 1 END)) AS d
-        |  FROM cand c JOIN bits ha ON ha.gid = c.ga JOIN bits h2 ON h2.gid = c.gb),
-        |pairs AS (SELECT ga, gb FROM ham WHERE d <= 3),
-        |nodes AS (SELECT DISTINCT id FROM (SELECT ga AS id FROM pairs UNION ALL SELECT gb FROM pairs)),
-        |sym AS MATERIALIZED (SELECT ga AS u, gb AS v FROM pairs UNION ALL SELECT gb, ga FROM pairs),
-        |lab(it, id, lb) AS (
-        |  SELECT 0, id, id FROM nodes
-        |  UNION ALL
-        |  SELECT it + 1, id, min(lb) FROM (
-        |    SELECT l.it, l.id, l.lb FROM lab l
-        |    UNION ALL
-        |    SELECT l.it, s.v AS id, l.lb FROM lab l JOIN sym s ON s.u = l.id
-        |  ) t(it, id, lb)
-        |  WHERE it < 20
-        |  GROUP BY it, id),
-        |final AS (SELECT id, min(lb) AS lb FROM lab GROUP BY id)
-        |SELECT g.gid AS media_id,
-        |  CAST(coalesce(f.lb, g.gid) AS BIGINT) AS cluster
-        |FROM gids g LEFT JOIN final f ON f.id = g.gid""".stripMargin,
+      s"""WITH RECURSIVE gids AS (
+         |  SELECT DISTINCT doc_id % 100 AS gid FROM documents),
+         |par AS (
+         |  SELECT gid,
+         |    CASE WHEN gid >= 50 THEN 1000 ELSE 1024 END AS n,
+         |    (gid % 50) * 2654435761 % 65536 AS pat
+         |  FROM gids),
+         |smp AS (
+         |  SELECT p.gid, p.n, i.i,
+         |    abs((i.i * 2731) % (2 * CASE WHEN (pat >> (i.i // 64)) & 1 = 1
+         |          THEN 32768 ELSE 256 END)
+         |        - CASE WHEN (pat >> (i.i // 64)) & 1 = 1
+         |          THEN 32768 ELSE 256 END) AS av,
+         |    (i.i * 16) // p.n AS w
+         |  FROM par p JOIN generate_series(0, 1023) i(i) ON i.i < p.n),
+         |en AS (
+         |  SELECT gid, w, CAST(sum(av) AS BIGINT) AS e,
+         |    CAST(count(*) AS BIGINT) AS cw, max(n) AS n
+         |  FROM smp GROUP BY gid, w),
+         |tot AS (SELECT gid, CAST(sum(e) AS BIGINT) AS total FROM en GROUP BY gid),
+         |bits AS MATERIALIZED (
+         |  SELECT en.gid,
+         |    string_agg(CASE WHEN e * n > total * cw THEN '1' ELSE '0' END, ''
+         |      ORDER BY w) AS hb
+         |  FROM en JOIN tot USING (gid) GROUP BY en.gid),
+         |${mediaClusterSql(4, 4, 3)}""".stripMargin,
     // Trim-invariant video near-dup replay: the qm19 block-formula
     // pixels over the SAMPLED frame indices floor(j*F/4), F = 5 for
     // bases / 4 for end-trims — the indices coincide (= j), so a trim
     // and its base rebuild identical 256-bit fingerprints; then the
     // shared band/hamming/component chain.
     "qm20_video_trim_dedup" ->
-      """WITH RECURSIVE gids AS (
-        |  SELECT DISTINCT doc_id % 100 AS gid FROM documents),
-        |cells AS (
-        |  SELECT gid, j.j, cy.cy, cx.cx,
-        |    ((cx.cx // 2 + 4 * (cy.cy // 2)
-        |       + 16 * ((j.j * (CASE WHEN gid >= 50 THEN 4 ELSE 5 END)) // 4))
-        |      * (7919 + 16 * (gid % 50)) + 3 * (gid % 50)) % 251 AS v
-        |  FROM gids
-        |  CROSS JOIN generate_series(0, 3) j(j)
-        |  CROSS JOIN generate_series(0, 7) cy(cy)
-        |  CROSS JOIN generate_series(0, 7) cx(cx)),
-        |mn AS (
-        |  SELECT gid, j, CAST(sum(v) AS BIGINT) // 64 AS mean
-        |  FROM cells GROUP BY 1, 2),
-        |fb AS (
-        |  SELECT cells.gid, cells.j,
-        |    string_agg(CASE WHEN v > mean THEN '1' ELSE '0' END, ''
-        |      ORDER BY cy, cx) AS b
-        |  FROM cells JOIN mn USING (gid, j) GROUP BY 1, 2),
-        |bits AS MATERIALIZED (
-        |  SELECT gid, string_agg(b, '' ORDER BY j) AS hb FROM fb GROUP BY 1),
-        |banded AS (
-        |  SELECT gid, b, substr(hb, b * 32 + 1, 32) AS bk
-        |  FROM bits, unnest(generate_series(0, 7)) s(b)),
-        |cand AS (
-        |  SELECT DISTINCT a.gid AS ga, b.gid AS gb
-        |  FROM banded a JOIN banded b ON a.b = b.b AND a.bk = b.bk AND a.gid > b.gid),
-        |ham AS (
-        |  SELECT c.ga, c.gb,
-        |    list_sum(list_transform(generate_series(1, 256), j ->
-        |      CASE WHEN substr(ha.hb, j, 1) = substr(h2.hb, j, 1) THEN 0 ELSE 1 END)) AS d
-        |  FROM cand c JOIN bits ha ON ha.gid = c.ga JOIN bits h2 ON h2.gid = c.gb),
-        |pairs AS (SELECT ga, gb FROM ham WHERE d <= 16),
-        |nodes AS (SELECT DISTINCT id FROM (SELECT ga AS id FROM pairs UNION ALL SELECT gb FROM pairs)),
-        |sym AS MATERIALIZED (SELECT ga AS u, gb AS v FROM pairs UNION ALL SELECT gb, ga FROM pairs),
-        |lab(it, id, lb) AS (
-        |  SELECT 0, id, id FROM nodes
-        |  UNION ALL
-        |  SELECT it + 1, id, min(lb) FROM (
-        |    SELECT l.it, l.id, l.lb FROM lab l
-        |    UNION ALL
-        |    SELECT l.it, s.v AS id, l.lb FROM lab l JOIN sym s ON s.u = l.id
-        |  ) t(it, id, lb)
-        |  WHERE it < 20
-        |  GROUP BY it, id),
-        |final AS (SELECT id, min(lb) AS lb FROM lab GROUP BY id)
-        |SELECT g.gid AS media_id,
-        |  CAST(coalesce(f.lb, g.gid) AS BIGINT) AS cluster
-        |FROM gids g LEFT JOIN final f ON f.id = g.gid""".stripMargin,
+      s"""WITH RECURSIVE gids AS (
+         |  SELECT DISTINCT doc_id % 100 AS gid FROM documents),
+         |cells AS (
+         |  SELECT gid, j.j, cy.cy, cx.cx,
+         |    ((cx.cx // 2 + 4 * (cy.cy // 2)
+         |       + 16 * ((j.j * (CASE WHEN gid >= 50 THEN 4 ELSE 5 END)) // 4))
+         |      * (7919 + 16 * (gid % 50)) + 3 * (gid % 50)) % 251 AS v
+         |  FROM gids
+         |  CROSS JOIN generate_series(0, 3) j(j)
+         |  CROSS JOIN generate_series(0, 7) cy(cy)
+         |  CROSS JOIN generate_series(0, 7) cx(cx)),
+         |mn AS (
+         |  SELECT gid, j, CAST(sum(v) AS BIGINT) // 64 AS mean
+         |  FROM cells GROUP BY 1, 2),
+         |fb AS (
+         |  SELECT cells.gid, cells.j,
+         |    string_agg(CASE WHEN v > mean THEN '1' ELSE '0' END, ''
+         |      ORDER BY cy, cx) AS b
+         |  FROM cells JOIN mn USING (gid, j) GROUP BY 1, 2),
+         |bits AS MATERIALIZED (
+         |  SELECT gid, string_agg(b, '' ORDER BY j) AS hb FROM fb GROUP BY 1),
+         |${mediaClusterSql(32, 8, 16)}""".stripMargin,
     "qm19_video_dedup" ->
-      """WITH RECURSIVE gids AS (
-        |  SELECT DISTINCT doc_id % 100 AS gid FROM documents),
-        |cells AS (
-        |  SELECT gid, f.f, cy.cy, cx.cx,
-        |    CASE WHEN gid >= 50 AND f.f = 0 AND cy.cy < 2 AND cx.cx < 2
-        |      THEN least(((cx.cx // 2 + 4 * (cy.cy // 2) + 16 * f.f)
-        |             * (7919 + 16 * (gid % 50)) + 3 * (gid % 50)) % 251 + 100, 250)
-        |      ELSE ((cx.cx // 2 + 4 * (cy.cy // 2) + 16 * f.f)
-        |             * (7919 + 16 * (gid % 50)) + 3 * (gid % 50)) % 251
-        |    END AS v
-        |  FROM gids
-        |  CROSS JOIN generate_series(0, 3) f(f)
-        |  CROSS JOIN generate_series(0, 7) cy(cy)
-        |  CROSS JOIN generate_series(0, 7) cx(cx)),
-        |mn AS (
-        |  SELECT gid, f, CAST(sum(v) AS BIGINT) // 64 AS mean
-        |  FROM cells GROUP BY 1, 2),
-        |fb AS (
-        |  SELECT cells.gid, cells.f,
-        |    string_agg(CASE WHEN v > mean THEN '1' ELSE '0' END, ''
-        |      ORDER BY cy, cx) AS b
-        |  FROM cells JOIN mn USING (gid, f) GROUP BY 1, 2),
-        |bits AS MATERIALIZED (
-        |  SELECT gid, string_agg(b, '' ORDER BY f) AS hb FROM fb GROUP BY 1),
-        |banded AS (
-        |  SELECT gid, b, substr(hb, b * 32 + 1, 32) AS bk
-        |  FROM bits, unnest(generate_series(0, 7)) s(b)),
-        |cand AS (
-        |  SELECT DISTINCT a.gid AS ga, b.gid AS gb
-        |  FROM banded a JOIN banded b ON a.b = b.b AND a.bk = b.bk AND a.gid > b.gid),
-        |ham AS (
-        |  SELECT c.ga, c.gb,
-        |    list_sum(list_transform(generate_series(1, 256), j ->
-        |      CASE WHEN substr(ha.hb, j, 1) = substr(h2.hb, j, 1) THEN 0 ELSE 1 END)) AS d
-        |  FROM cand c JOIN bits ha ON ha.gid = c.ga JOIN bits h2 ON h2.gid = c.gb),
-        |pairs AS (SELECT ga, gb FROM ham WHERE d <= 16),
-        |nodes AS (SELECT DISTINCT id FROM (SELECT ga AS id FROM pairs UNION ALL SELECT gb FROM pairs)),
-        |sym AS MATERIALIZED (SELECT ga AS u, gb AS v FROM pairs UNION ALL SELECT gb, ga FROM pairs),
-        |lab(it, id, lb) AS (
-        |  SELECT 0, id, id FROM nodes
-        |  UNION ALL
-        |  SELECT it + 1, id, min(lb) FROM (
-        |    SELECT l.it, l.id, l.lb FROM lab l
-        |    UNION ALL
-        |    SELECT l.it, s.v AS id, l.lb FROM lab l JOIN sym s ON s.u = l.id
-        |  ) t(it, id, lb)
-        |  WHERE it < 20
-        |  GROUP BY it, id),
-        |final AS (SELECT id, min(lb) AS lb FROM lab GROUP BY id)
-        |SELECT g.gid AS media_id,
-        |  CAST(coalesce(f.lb, g.gid) AS BIGINT) AS cluster
-        |FROM gids g LEFT JOIN final f ON f.id = g.gid""".stripMargin,
+      s"""WITH RECURSIVE gids AS (
+         |  SELECT DISTINCT doc_id % 100 AS gid FROM documents),
+         |cells AS (
+         |  SELECT gid, f.f, cy.cy, cx.cx,
+         |    CASE WHEN gid >= 50 AND f.f = 0 AND cy.cy < 2 AND cx.cx < 2
+         |      THEN least(((cx.cx // 2 + 4 * (cy.cy // 2) + 16 * f.f)
+         |             * (7919 + 16 * (gid % 50)) + 3 * (gid % 50)) % 251 + 100, 250)
+         |      ELSE ((cx.cx // 2 + 4 * (cy.cy // 2) + 16 * f.f)
+         |             * (7919 + 16 * (gid % 50)) + 3 * (gid % 50)) % 251
+         |    END AS v
+         |  FROM gids
+         |  CROSS JOIN generate_series(0, 3) f(f)
+         |  CROSS JOIN generate_series(0, 7) cy(cy)
+         |  CROSS JOIN generate_series(0, 7) cx(cx)),
+         |mn AS (
+         |  SELECT gid, f, CAST(sum(v) AS BIGINT) // 64 AS mean
+         |  FROM cells GROUP BY 1, 2),
+         |fb AS (
+         |  SELECT cells.gid, cells.f,
+         |    string_agg(CASE WHEN v > mean THEN '1' ELSE '0' END, ''
+         |      ORDER BY cy, cx) AS b
+         |  FROM cells JOIN mn USING (gid, f) GROUP BY 1, 2),
+         |bits AS MATERIALIZED (
+         |  SELECT gid, string_agg(b, '' ORDER BY f) AS hb FROM fb GROUP BY 1),
+         |${mediaClusterSql(32, 8, 16)}""".stripMargin,
     // Audio near-dup replay: the synthetic PCM16 formula (first 64
     // samples of ids >= 50 boosted +8000, clipped), 16-window |v| energy
     // sums, bit = e*16 > total (strict, division-free), 4 bands of 4
     // chars, exact hamming <= 3, the qd6 component CTE.
     "qm18_audio_dedup" ->
-      """WITH RECURSIVE gids AS (
-        |  SELECT DISTINCT doc_id % 100 AS gid FROM documents),
-        |amp AS (
-        |  SELECT gid, i,
-        |    CASE WHEN (((gid % 50) * 2654435761 % 65536)
-        |        // CAST(pow(2, i // 64) AS BIGINT)) % 2 = 1
-        |      THEN 32768 ELSE 256 END AS a
-        |  FROM gids, unnest(generate_series(0, 1023)) t(i)),
-        |smp AS (
-        |  SELECT gid, i,
-        |    CASE WHEN i < 64
-        |      THEN least((i * 2731 + 5 * (gid % 50)) % (2 * a) - a
-        |             + CASE WHEN gid >= 50 THEN 8000 ELSE 0 END, 32767)
-        |      ELSE (i * 2731 + 5 * (gid % 50)) % (2 * a) - a
-        |    END AS v
-        |  FROM amp),
-        |en AS (
-        |  SELECT gid, i // 64 AS w, CAST(sum(abs(v)) AS BIGINT) AS e
-        |  FROM smp GROUP BY 1, 2),
-        |tot AS (SELECT gid, CAST(sum(e) AS BIGINT) AS total FROM en GROUP BY 1),
-        |bits AS MATERIALIZED (
-        |  SELECT en.gid,
-        |    string_agg(CASE WHEN e * 16 > total THEN '1' ELSE '0' END, ''
-        |      ORDER BY w) AS hb
-        |  FROM en JOIN tot USING (gid) GROUP BY en.gid),
-        |banded AS (
-        |  SELECT gid, b, substr(hb, b * 4 + 1, 4) AS bk
-        |  FROM bits, unnest(generate_series(0, 3)) s(b)),
-        |cand AS (
-        |  SELECT DISTINCT a.gid AS ga, b.gid AS gb
-        |  FROM banded a JOIN banded b ON a.b = b.b AND a.bk = b.bk AND a.gid > b.gid),
-        |ham AS (
-        |  SELECT c.ga, c.gb,
-        |    list_sum(list_transform(generate_series(1, 16), j ->
-        |      CASE WHEN substr(ha.hb, j, 1) = substr(h2.hb, j, 1) THEN 0 ELSE 1 END)) AS d
-        |  FROM cand c JOIN bits ha ON ha.gid = c.ga JOIN bits h2 ON h2.gid = c.gb),
-        |pairs AS (SELECT ga, gb FROM ham WHERE d <= 3),
-        |nodes AS (SELECT DISTINCT id FROM (SELECT ga AS id FROM pairs UNION ALL SELECT gb FROM pairs)),
-        |sym AS MATERIALIZED (SELECT ga AS u, gb AS v FROM pairs UNION ALL SELECT gb, ga FROM pairs),
-        |lab(it, id, lb) AS (
-        |  SELECT 0, id, id FROM nodes
-        |  UNION ALL
-        |  SELECT it + 1, id, min(lb) FROM (
-        |    SELECT l.it, l.id, l.lb FROM lab l
-        |    UNION ALL
-        |    SELECT l.it, s.v AS id, l.lb FROM lab l JOIN sym s ON s.u = l.id
-        |  ) t(it, id, lb)
-        |  WHERE it < 20
-        |  GROUP BY it, id),
-        |final AS (SELECT id, min(lb) AS lb FROM lab GROUP BY id)
-        |SELECT g.gid AS media_id,
-        |  CAST(coalesce(f.lb, g.gid) AS BIGINT) AS cluster
-        |FROM gids g LEFT JOIN final f ON f.id = g.gid""".stripMargin,
+      s"""WITH RECURSIVE gids AS (
+         |  SELECT DISTINCT doc_id % 100 AS gid FROM documents),
+         |amp AS (
+         |  SELECT gid, i,
+         |    CASE WHEN (((gid % 50) * 2654435761 % 65536)
+         |        // CAST(pow(2, i // 64) AS BIGINT)) % 2 = 1
+         |      THEN 32768 ELSE 256 END AS a
+         |  FROM gids, unnest(generate_series(0, 1023)) t(i)),
+         |smp AS (
+         |  SELECT gid, i,
+         |    CASE WHEN i < 64
+         |      THEN least((i * 2731 + 5 * (gid % 50)) % (2 * a) - a
+         |             + CASE WHEN gid >= 50 THEN 8000 ELSE 0 END, 32767)
+         |      ELSE (i * 2731 + 5 * (gid % 50)) % (2 * a) - a
+         |    END AS v
+         |  FROM amp),
+         |en AS (
+         |  SELECT gid, i // 64 AS w, CAST(sum(abs(v)) AS BIGINT) AS e
+         |  FROM smp GROUP BY 1, 2),
+         |tot AS (SELECT gid, CAST(sum(e) AS BIGINT) AS total FROM en GROUP BY 1),
+         |bits AS MATERIALIZED (
+         |  SELECT en.gid,
+         |    string_agg(CASE WHEN e * 16 > total THEN '1' ELSE '0' END, ''
+         |      ORDER BY w) AS hb
+         |  FROM en JOIN tot USING (gid) GROUP BY en.gid),
+         |${mediaClusterSql(4, 4, 3)}""".stripMargin,
     // Image near-dup replay: the qm14 aHash recipe with the planted
     // retouch (first 16 pixels of ids >= 50 brightened by 40, clipped),
     // banded into 8 substrings, exact per-character hamming <= 10, then
@@ -13243,121 +12898,42 @@ object SparkEntry {
     // exact hamming <= 10 drops; survivors cluster within the batch
     // (the qm17 chain) and only min-label representatives remain.
     "qm22_incr_image_dedup" ->
-      """WITH RECURSIVE gids AS (
-        |  SELECT DISTINCT doc_id % 100 AS gid FROM documents),
-        |px AS (
-        |  SELECT gid, i,
-        |    CASE WHEN i < 16
-        |      THEN least((i * (7919 + 16 * (gid % 50)) + 3 * (gid % 50)) % 256
-        |             + CASE WHEN gid >= 50 THEN 40 ELSE 0 END, 255)
-        |      ELSE (i * (7919 + 16 * (gid % 50)) + 3 * (gid % 50)) % 256 END AS p
-        |  FROM gids, unnest(generate_series(0, 1023)) t(i)),
-        |r2 AS (
-        |  SELECT gid, (i // 32) // 4 AS ry, (i % 32) // 4 AS rx,
-        |    CAST(sum(p) AS BIGINT) // 16 AS rp
-        |  FROM px GROUP BY 1, 2, 3),
-        |mn AS (SELECT gid, CAST(sum(rp) AS BIGINT) // 64 AS mean
-        |       FROM r2 GROUP BY 1),
-        |bits AS MATERIALIZED (
-        |  SELECT r2.gid,
-        |    string_agg(CASE WHEN rp > mean THEN '1' ELSE '0' END, ''
-        |      ORDER BY ry, rx) AS hb
-        |  FROM r2 JOIN mn USING (gid) GROUP BY r2.gid),
-        |corp AS (SELECT DISTINCT hb FROM bits WHERE gid < 25),
-        |bat AS MATERIALIZED (SELECT gid, hb FROM bits WHERE gid >= 50),
-        |batfp AS (SELECT DISTINCT hb FROM bat),
-        |bband AS (
-        |  SELECT hb, b, substr(hb, b * 8 + 1, 8) AS bk
-        |  FROM batfp, unnest(generate_series(0, 7)) s(b)),
-        |cband AS (
-        |  SELECT hb, b, substr(hb, b * 8 + 1, 8) AS bk
-        |  FROM corp, unnest(generate_series(0, 7)) s(b)),
-        |crossfp AS (
-        |  SELECT DISTINCT bb.hb AS bh, cb.hb AS ch
-        |  FROM bband bb JOIN cband cb ON cb.b = bb.b AND cb.bk = bb.bk),
-        |dupf AS (
-        |  SELECT DISTINCT bh FROM crossfp
-        |  WHERE list_sum(list_transform(generate_series(1, 64), j ->
-        |    CASE WHEN substr(bh, j, 1) = substr(ch, j, 1) THEN 0 ELSE 1 END)) <= 10),
-        |surv AS MATERIALIZED (
-        |  SELECT gid, hb FROM bat WHERE hb NOT IN (SELECT bh FROM dupf)),
-        |sband AS (
-        |  SELECT gid, b, substr(hb, b * 8 + 1, 8) AS bk
-        |  FROM surv, unnest(generate_series(0, 7)) s(b)),
-        |scand AS (
-        |  SELECT DISTINCT a.gid AS ga, b.gid AS gb
-        |  FROM sband a JOIN sband b ON a.b = b.b AND a.bk = b.bk AND a.gid > b.gid),
-        |sham AS (
-        |  SELECT c.ga, c.gb,
-        |    list_sum(list_transform(generate_series(1, 64), j ->
-        |      CASE WHEN substr(ha.hb, j, 1) = substr(h2.hb, j, 1) THEN 0 ELSE 1 END)) AS d
-        |  FROM scand c JOIN surv ha ON ha.gid = c.ga JOIN surv h2 ON h2.gid = c.gb),
-        |pairs AS (SELECT ga, gb FROM sham WHERE d <= 10),
-        |nodes AS (SELECT DISTINCT id FROM (SELECT ga AS id FROM pairs UNION ALL SELECT gb FROM pairs)),
-        |sym AS MATERIALIZED (SELECT ga AS u, gb AS v FROM pairs UNION ALL SELECT gb, ga FROM pairs),
-        |lab(it, id, lb) AS (
-        |  SELECT 0, id, id FROM nodes
-        |  UNION ALL
-        |  SELECT it + 1, id, min(lb) FROM (
-        |    SELECT l.it, l.id, l.lb FROM lab l
-        |    UNION ALL
-        |    SELECT l.it, s.v AS id, l.lb FROM lab l JOIN sym s ON s.u = l.id
-        |  ) t(it, id, lb)
-        |  WHERE it < 20
-        |  GROUP BY it, id),
-        |final AS (SELECT id, min(lb) AS lb FROM lab GROUP BY id)
-        |SELECT s.gid AS media_id, s.hb AS hash_bits
-        |FROM surv s LEFT JOIN final f ON f.id = s.gid
-        |WHERE coalesce(f.lb, s.gid) = s.gid""".stripMargin,
+      s"""$retouchedImageBitsCtes,
+         |corp AS (SELECT DISTINCT hb FROM bits WHERE gid < 25),
+         |bat AS MATERIALIZED (SELECT gid, hb FROM bits WHERE gid >= 50),
+         |batfp AS (SELECT DISTINCT hb FROM bat),
+         |bband AS (
+         |  SELECT hb, b, substr(hb, b * 8 + 1, 8) AS bk
+         |  FROM batfp, unnest(generate_series(0, 7)) s(b)),
+         |cband AS (
+         |  SELECT hb, b, substr(hb, b * 8 + 1, 8) AS bk
+         |  FROM corp, unnest(generate_series(0, 7)) s(b)),
+         |crossfp AS (
+         |  SELECT DISTINCT bb.hb AS bh, cb.hb AS ch
+         |  FROM bband bb JOIN cband cb ON cb.b = bb.b AND cb.bk = bb.bk),
+         |dupf AS (
+         |  SELECT DISTINCT bh FROM crossfp
+         |  WHERE list_sum(list_transform(generate_series(1, 64), j ->
+         |    CASE WHEN substr(bh, j, 1) = substr(ch, j, 1) THEN 0 ELSE 1 END)) <= 10),
+         |surv AS MATERIALIZED (
+         |  SELECT gid, hb FROM bat WHERE hb NOT IN (SELECT bh FROM dupf)),
+         |sband AS (
+         |  SELECT gid, b, substr(hb, b * 8 + 1, 8) AS bk
+         |  FROM surv, unnest(generate_series(0, 7)) s(b)),
+         |scand AS (
+         |  SELECT DISTINCT a.gid AS ga, b.gid AS gb
+         |  FROM sband a JOIN sband b ON a.b = b.b AND a.bk = b.bk AND a.gid > b.gid),
+         |sham AS (
+         |  SELECT c.ga, c.gb,
+         |    ${hammingSql("ha.hb", "h2.hb", 64)} AS d
+         |  FROM scand c JOIN surv ha ON ha.gid = c.ga JOIN surv h2 ON h2.gid = c.gb),
+         |pairs AS (SELECT ga, gb FROM sham WHERE d <= 10),
+         |$mediaComponentCtes
+         |SELECT s.gid AS media_id, s.hb AS hash_bits
+         |FROM surv s LEFT JOIN final f ON f.id = s.gid
+         |WHERE coalesce(f.lb, s.gid) = s.gid""".stripMargin,
     "qm17_image_dedup" ->
-      """WITH RECURSIVE gids AS (
-        |  SELECT DISTINCT doc_id % 100 AS gid FROM documents),
-        |px AS (
-        |  SELECT gid, i,
-        |    CASE WHEN i < 16
-        |      THEN least((i * (7919 + 16 * (gid % 50)) + 3 * (gid % 50)) % 256
-        |             + CASE WHEN gid >= 50 THEN 40 ELSE 0 END, 255)
-        |      ELSE (i * (7919 + 16 * (gid % 50)) + 3 * (gid % 50)) % 256 END AS p
-        |  FROM gids, unnest(generate_series(0, 1023)) t(i)),
-        |r2 AS (
-        |  SELECT gid, (i // 32) // 4 AS ry, (i % 32) // 4 AS rx,
-        |    CAST(sum(p) AS BIGINT) // 16 AS rp
-        |  FROM px GROUP BY 1, 2, 3),
-        |mn AS (SELECT gid, CAST(sum(rp) AS BIGINT) // 64 AS mean
-        |       FROM r2 GROUP BY 1),
-        |bits AS MATERIALIZED (
-        |  SELECT r2.gid,
-        |    string_agg(CASE WHEN rp > mean THEN '1' ELSE '0' END, ''
-        |      ORDER BY ry, rx) AS hb
-        |  FROM r2 JOIN mn USING (gid) GROUP BY r2.gid),
-        |banded AS (
-        |  SELECT gid, b, substr(hb, b * 8 + 1, 8) AS bk
-        |  FROM bits, unnest(generate_series(0, 7)) s(b)),
-        |cand AS (
-        |  SELECT DISTINCT a.gid AS ga, b.gid AS gb
-        |  FROM banded a JOIN banded b ON a.b = b.b AND a.bk = b.bk AND a.gid > b.gid),
-        |ham AS (
-        |  SELECT c.ga, c.gb,
-        |    list_sum(list_transform(generate_series(1, 64), j ->
-        |      CASE WHEN substr(ha.hb, j, 1) = substr(h2.hb, j, 1) THEN 0 ELSE 1 END)) AS d
-        |  FROM cand c JOIN bits ha ON ha.gid = c.ga JOIN bits h2 ON h2.gid = c.gb),
-        |pairs AS (SELECT ga, gb FROM ham WHERE d <= 10),
-        |nodes AS (SELECT DISTINCT id FROM (SELECT ga AS id FROM pairs UNION ALL SELECT gb FROM pairs)),
-        |sym AS MATERIALIZED (SELECT ga AS u, gb AS v FROM pairs UNION ALL SELECT gb, ga FROM pairs),
-        |lab(it, id, lb) AS (
-        |  SELECT 0, id, id FROM nodes
-        |  UNION ALL
-        |  SELECT it + 1, id, min(lb) FROM (
-        |    SELECT l.it, l.id, l.lb FROM lab l
-        |    UNION ALL
-        |    SELECT l.it, s.v AS id, l.lb FROM lab l JOIN sym s ON s.u = l.id
-        |  ) t(it, id, lb)
-        |  WHERE it < 20
-        |  GROUP BY it, id),
-        |final AS (SELECT id, min(lb) AS lb FROM lab GROUP BY id)
-        |SELECT g.gid AS media_id,
-        |  CAST(coalesce(f.lb, g.gid) AS BIGINT) AS cluster
-        |FROM gids g LEFT JOIN final f ON f.id = g.gid""".stripMargin,
+      s"$retouchedImageBitsCtes,\n${mediaClusterSql(8, 8, 10)}",
     "qm14_perceptual_hash" ->
       """WITH cnt AS (
         |  SELECT doc_id % 100 AS gid, CAST(count(*) AS BIGINT) AS c
@@ -13520,114 +13096,24 @@ object SparkEntry {
     // engine-boundary rounding, same risk class as qs18's sign test),
     // mask score = Σ µ² over set bits (BIGINT, order-free), top 9 by
     // (score, mask), probe cells = xor(qsig, mask).
-    "qs19_ann_multiprobe" -> {
-      val rnd = new scala.util.Random(42L)
-      val planes = Seq.fill(8)(Array.fill(64)(rnd.nextGaussian()))
-      val planeValues = planes.zipWithIndex.flatMap { case (p, b) =>
-        p.zipWithIndex.map { case (c, i) => s"($b,${i + 1},$c)" }
-      }.mkString(",")
-      s"""WITH planes(b, i, c) AS (SELECT * FROM (VALUES $planeValues)),
-         |dots AS (
-         |  SELECT e.vec_id, p.b, sum(CAST(e.embedding[p.i] AS DOUBLE) * p.c) AS d
-         |  FROM embeddings e CROSS JOIN planes p GROUP BY e.vec_id, p.b),
-         |sigs AS MATERIALIZED (
-         |  SELECT vec_id, sum(CASE WHEN d >= 0.0 THEN (1::BIGINT << b) ELSE 0::BIGINT END) AS sig
-         |  FROM dots GROUP BY vec_id),
-         |q AS MATERIALIZED (
-         |  SELECT vec_id AS qid, embedding AS qv FROM embeddings ORDER BY vec_id LIMIT 16),
-         |qmu AS (
-         |  SELECT d.vec_id AS qid, d.b,
-         |    CAST(floor(abs(d.d) * 1000000 + 0.5) AS BIGINT) AS mu
-         |  FROM dots d JOIN q ON q.qid = d.vec_id),
-         |mscore AS (
-         |  SELECT q.qid, m.m,
-         |    coalesce(sum(CASE WHEN (m.m >> qmu.b) & 1 = 1
-         |      THEN qmu.mu * qmu.mu ELSE 0 END), 0) AS s
-         |  FROM q
-         |  CROSS JOIN generate_series(0, 255) m(m)
-         |  LEFT JOIN qmu ON qmu.qid = q.qid
-         |  GROUP BY q.qid, m.m),
-         |probes AS MATERIALIZED (
-         |  SELECT qid, m FROM (
-         |    SELECT qid, m, row_number() OVER (PARTITION BY qid ORDER BY s, m) AS r
-         |    FROM mscore) WHERE r <= 9),
-         |s0 AS (
-         |  SELECT q.qid, c.vec_id,
-         |    sum(CAST(c.embedding[t.i] AS DOUBLE) * CAST(q.qv[t.i] AS DOUBLE)) AS dot,
-         |    sum(CAST(c.embedding[t.i] AS DOUBLE) * CAST(c.embedding[t.i] AS DOUBLE)) AS na,
-         |    sum(CAST(q.qv[t.i] AS DOUBLE) * CAST(q.qv[t.i] AS DOUBLE)) AS nb
-         |  FROM embeddings c
-         |  CROSS JOIN q
-         |  CROSS JOIN generate_series(1, 64) AS t(i)
-         |  WHERE c.vec_id <> q.qid
-         |  GROUP BY q.qid, c.vec_id),
-         |sims AS MATERIALIZED (
-         |  SELECT qid, vec_id,
-         |    round(CASE WHEN sqrt(na) * sqrt(nb) = 0 THEN 0
-         |               ELSE dot / (sqrt(na) * sqrt(nb)) END, 6) AS sim
-         |  FROM s0),
-         |truth AS (
-         |  SELECT qid, vec_id FROM (
-         |    SELECT qid, vec_id,
-         |      row_number() OVER (PARTITION BY qid ORDER BY sim DESC, vec_id) AS r
-         |    FROM sims) WHERE r <= 10),
+    "qs19_ann_multiprobe" ->
+      s"""$annQueryCtes,
+         |$annProbeCtes,
+         |$annTruthCtes,
          |cand AS (
          |  SELECT q.qid, sv.vec_id FROM q
          |  JOIN sigs sq ON sq.vec_id = q.qid
          |  JOIN probes p ON p.qid = q.qid
          |  JOIN sigs sv ON sv.sig = xor(sq.sig, CAST(p.m AS BIGINT))
          |  WHERE sv.vec_id <> q.qid),
-         |approx AS (
-         |  SELECT qid, vec_id FROM (
-         |    SELECT c.qid, c.vec_id,
-         |      row_number() OVER (PARTITION BY c.qid ORDER BY s.sim DESC, c.vec_id) AS r
-         |    FROM cand c JOIN sims s ON s.qid = c.qid AND s.vec_id = c.vec_id)
-         |  WHERE r <= 10),
-         |hits AS (
-         |  SELECT t.qid, count(a.vec_id) AS n_hit
-         |  FROM truth t LEFT JOIN approx a ON a.qid = t.qid AND a.vec_id = t.vec_id
-         |  GROUP BY t.qid)
-         |SELECT q.qid AS query_id,
-         |  CAST(coalesce(h.n_hit, 0) AS BIGINT) AS n_hit,
-         |  round(coalesce(h.n_hit, 0) / 10.0, 6) AS recall
-         |FROM q LEFT JOIN hits h ON h.qid = q.qid
-         |ORDER BY query_id""".stripMargin
-    },
+         |$annRecallSql""".stripMargin,
     // Multi-probe kNN-join replay: qs19's plane/sig/margin/probe CTEs,
     // tail swapped to the per-query top-10 rows themselves (self
     // included — the qs5 knnJoin contract), ranked by (6-dp sim DESC,
     // vec_id ASC).
-    "qs21_mp_knn_join" -> {
-      val rnd = new scala.util.Random(42L)
-      val planes = Seq.fill(8)(Array.fill(64)(rnd.nextGaussian()))
-      val planeValues = planes.zipWithIndex.flatMap { case (p, b) =>
-        p.zipWithIndex.map { case (c, i) => s"($b,${i + 1},$c)" }
-      }.mkString(",")
-      s"""WITH planes(b, i, c) AS (SELECT * FROM (VALUES $planeValues)),
-         |dots AS (
-         |  SELECT e.vec_id, p.b, sum(CAST(e.embedding[p.i] AS DOUBLE) * p.c) AS d
-         |  FROM embeddings e CROSS JOIN planes p GROUP BY e.vec_id, p.b),
-         |sigs AS MATERIALIZED (
-         |  SELECT vec_id, sum(CASE WHEN d >= 0.0 THEN (1::BIGINT << b) ELSE 0::BIGINT END) AS sig
-         |  FROM dots GROUP BY vec_id),
-         |q AS MATERIALIZED (
-         |  SELECT vec_id AS qid, embedding AS qv FROM embeddings ORDER BY vec_id LIMIT 16),
-         |qmu AS (
-         |  SELECT d.vec_id AS qid, d.b,
-         |    CAST(floor(abs(d.d) * 1000000 + 0.5) AS BIGINT) AS mu
-         |  FROM dots d JOIN q ON q.qid = d.vec_id),
-         |mscore AS (
-         |  SELECT q.qid, m.m,
-         |    coalesce(sum(CASE WHEN (m.m >> qmu.b) & 1 = 1
-         |      THEN qmu.mu * qmu.mu ELSE 0 END), 0) AS s
-         |  FROM q
-         |  CROSS JOIN generate_series(0, 255) m(m)
-         |  LEFT JOIN qmu ON qmu.qid = q.qid
-         |  GROUP BY q.qid, m.m),
-         |probes AS MATERIALIZED (
-         |  SELECT qid, m FROM (
-         |    SELECT qid, m, row_number() OVER (PARTITION BY qid ORDER BY s, m) AS r
-         |    FROM mscore) WHERE r <= 9),
+    "qs21_mp_knn_join" ->
+      s"""$annQueryCtes,
+         |$annProbeCtes,
          |cand AS (
          |  SELECT q.qid, sv.vec_id FROM q
          |  JOIN sigs sq ON sq.vec_id = q.qid
@@ -13651,64 +13137,16 @@ object SparkEntry {
          |SELECT qid AS query_id, vec_id, sim FROM (
          |  SELECT qid, vec_id, sim,
          |    row_number() OVER (PARTITION BY qid ORDER BY sim DESC, vec_id) AS r
-         |  FROM sims) WHERE r <= 10""".stripMargin
-    },
-    "qs18_ann_recall" -> {
-      val rnd = new scala.util.Random(42L)
-      val planes = Seq.fill(8)(Array.fill(64)(rnd.nextGaussian()))
-      val planeValues = planes.zipWithIndex.flatMap { case (p, b) =>
-        p.zipWithIndex.map { case (c, i) => s"($b,${i + 1},$c)" }
-      }.mkString(",")
-      s"""WITH planes(b, i, c) AS (SELECT * FROM (VALUES $planeValues)),
-         |dots AS (
-         |  SELECT e.vec_id, p.b, sum(CAST(e.embedding[p.i] AS DOUBLE) * p.c) AS d
-         |  FROM embeddings e CROSS JOIN planes p GROUP BY e.vec_id, p.b),
-         |sigs AS MATERIALIZED (
-         |  SELECT vec_id, sum(CASE WHEN d >= 0.0 THEN (1::BIGINT << b) ELSE 0::BIGINT END) AS sig
-         |  FROM dots GROUP BY vec_id),
-         |q AS MATERIALIZED (
-         |  SELECT vec_id AS qid, embedding AS qv FROM embeddings ORDER BY vec_id LIMIT 16),
-         |s0 AS (
-         |  SELECT q.qid, c.vec_id,
-         |    sum(CAST(c.embedding[t.i] AS DOUBLE) * CAST(q.qv[t.i] AS DOUBLE)) AS dot,
-         |    sum(CAST(c.embedding[t.i] AS DOUBLE) * CAST(c.embedding[t.i] AS DOUBLE)) AS na,
-         |    sum(CAST(q.qv[t.i] AS DOUBLE) * CAST(q.qv[t.i] AS DOUBLE)) AS nb
-         |  FROM embeddings c
-         |  CROSS JOIN q
-         |  CROSS JOIN generate_series(1, 64) AS t(i)
-         |  WHERE c.vec_id <> q.qid
-         |  GROUP BY q.qid, c.vec_id),
-         |sims AS MATERIALIZED (
-         |  SELECT qid, vec_id,
-         |    round(CASE WHEN sqrt(na) * sqrt(nb) = 0 THEN 0
-         |               ELSE dot / (sqrt(na) * sqrt(nb)) END, 6) AS sim
-         |  FROM s0),
-         |truth AS (
-         |  SELECT qid, vec_id FROM (
-         |    SELECT qid, vec_id,
-         |      row_number() OVER (PARTITION BY qid ORDER BY sim DESC, vec_id) AS r
-         |    FROM sims) WHERE r <= 10),
+         |  FROM sims) WHERE r <= 10""".stripMargin,
+    "qs18_ann_recall" ->
+      s"""$annQueryCtes,
+         |$annTruthCtes,
          |cand AS (
          |  SELECT q.qid, sv.vec_id FROM q
          |  JOIN sigs sq ON sq.vec_id = q.qid
          |  JOIN sigs sv ON bit_count(xor(sv.sig, sq.sig)) <= 1
          |  WHERE sv.vec_id <> q.qid),
-         |approx AS (
-         |  SELECT qid, vec_id FROM (
-         |    SELECT c.qid, c.vec_id,
-         |      row_number() OVER (PARTITION BY c.qid ORDER BY s.sim DESC, c.vec_id) AS r
-         |    FROM cand c JOIN sims s ON s.qid = c.qid AND s.vec_id = c.vec_id)
-         |  WHERE r <= 10),
-         |hits AS (
-         |  SELECT t.qid, count(a.vec_id) AS n_hit
-         |  FROM truth t LEFT JOIN approx a ON a.qid = t.qid AND a.vec_id = t.vec_id
-         |  GROUP BY t.qid)
-         |SELECT q.qid AS query_id,
-         |  CAST(coalesce(h.n_hit, 0) AS BIGINT) AS n_hit,
-         |  round(coalesce(h.n_hit, 0) / 10.0, 6) AS recall
-         |FROM q LEFT JOIN hits h ON h.qid = q.qid
-         |ORDER BY query_id""".stripMargin
-    },
+         |$annRecallSql""".stripMargin,
     // Embedding-drift replay: micro-quantized per-(side, dim) integer
     // sums (order-free), one divide per mean, drift of 6-dp-rounded
     // means, (drift DESC, dim) top-16.
@@ -13736,82 +13174,12 @@ object SparkEntry {
     // integer mask ranking as the engine) and land in the SQL as an IN
     // list; the corpus signatures still replay per-row in SQL.
     "qs20_ivf_multiprobe" -> {
-      val rnd = new scala.util.Random(42L)
-      val planes = Seq.fill(8)(Array.fill(64)(rnd.nextGaussian()))
-      val query = Array.tabulate(64)(i => math.sin(i + 1.0))
-      var qCell = 0L
-      val micro = new Array[Long](8)
-      planes.zipWithIndex.foreach { case (p, b) =>
-        var d = 0.0
-        var i = 0
-        while (i < 64) { d += query(i) * p(i); i += 1 }
-        if (d >= 0.0) qCell |= 1L << b
-        micro(b) = math.floor(math.abs(d) * 1e6 + 0.5).toLong
-      }
-      val cells = operators.Similarity.multiProbeMasks(micro, 8, 9)
-        .map(m => qCell ^ m).mkString(", ")
-      val planeValues = planes.zipWithIndex.flatMap { case (p, b) =>
-        p.zipWithIndex.map { case (c, i) => s"($b,${i + 1},$c)" }
-      }.mkString(",")
-      val qv = query.map(_.toString).mkString("[", ", ", "]")
-      s"""WITH planes(b, i, c) AS (SELECT * FROM (VALUES $planeValues)),
-         |dots AS (
-         |  SELECT e.vec_id, p.b, sum(CAST(e.embedding[p.i] AS DOUBLE) * p.c) AS d
-         |  FROM embeddings e CROSS JOIN planes p GROUP BY e.vec_id, p.b),
-         |sigs AS (
-         |  SELECT vec_id, sum(CASE WHEN d >= 0.0 THEN (1::BIGINT << b) ELSE 0::BIGINT END) AS sig
-         |  FROM dots GROUP BY vec_id),
-         |cand AS (SELECT vec_id FROM sigs WHERE sig IN ($cells)),
-         |s AS (
-         |  SELECT q.vec_id,
-         |    sum(CAST(q.embedding[t.i] AS DOUBLE) * q.qv[t.i]) AS dot,
-         |    sum(CAST(q.embedding[t.i] AS DOUBLE) * CAST(q.embedding[t.i] AS DOUBLE)) AS na,
-         |    sum(q.qv[t.i] * q.qv[t.i]) AS nb
-         |  FROM (SELECT e.vec_id, e.embedding, $qv::DOUBLE[] AS qv
-         |        FROM embeddings e JOIN cand USING (vec_id)) q
-         |  CROSS JOIN generate_series(1, 64) AS t(i)
-         |  GROUP BY q.vec_id)
-         |SELECT vec_id,
-         |  round(CASE WHEN sqrt(na) * sqrt(nb) = 0 THEN 0
-         |             ELSE dot / (sqrt(na) * sqrt(nb)) END, 6) AS sim
-         |FROM s ORDER BY sim DESC, vec_id LIMIT 100""".stripMargin
+      val cells = operators.Similarity.multiProbeMasks(ivfQueryMicro, 8, 9)
+        .map(m => ivfQueryCell ^ m).mkString(", ")
+      ivfSql(s"sig IN ($cells)")
     },
-    "qs4_ivf" -> {
-      val rnd = new scala.util.Random(42L)
-      val planes = Seq.fill(8)(Array.fill(64)(rnd.nextGaussian()))
-      val query = Array.tabulate(64)(i => math.sin(i + 1.0))
-      val qCell = planes.zipWithIndex.map { case (p, b) =>
-        var d = 0.0
-        var i = 0
-        while (i < 64) { d += query(i) * p(i); i += 1 }
-        if (d >= 0.0) 1L << b else 0L
-      }.sum
-      val planeValues = planes.zipWithIndex.flatMap { case (p, b) =>
-        p.zipWithIndex.map { case (c, i) => s"($b,${i + 1},$c)" }
-      }.mkString(",")
-      val qv = query.map(_.toString).mkString("[", ", ", "]")
-      s"""WITH planes(b, i, c) AS (SELECT * FROM (VALUES $planeValues)),
-         |dots AS (
-         |  SELECT e.vec_id, p.b, sum(CAST(e.embedding[p.i] AS DOUBLE) * p.c) AS d
-         |  FROM embeddings e CROSS JOIN planes p GROUP BY e.vec_id, p.b),
-         |sigs AS (
-         |  SELECT vec_id, sum(CASE WHEN d >= 0.0 THEN (1::BIGINT << b) ELSE 0::BIGINT END) AS sig
-         |  FROM dots GROUP BY vec_id),
-         |cand AS (SELECT vec_id FROM sigs WHERE bit_count(xor(sig, $qCell)) <= 1),
-         |s AS (
-         |  SELECT q.vec_id,
-         |    sum(CAST(q.embedding[t.i] AS DOUBLE) * q.qv[t.i]) AS dot,
-         |    sum(CAST(q.embedding[t.i] AS DOUBLE) * CAST(q.embedding[t.i] AS DOUBLE)) AS na,
-         |    sum(q.qv[t.i] * q.qv[t.i]) AS nb
-         |  FROM (SELECT e.vec_id, e.embedding, $qv::DOUBLE[] AS qv
-         |        FROM embeddings e JOIN cand USING (vec_id)) q
-         |  CROSS JOIN generate_series(1, 64) AS t(i)
-         |  GROUP BY q.vec_id)
-         |SELECT vec_id,
-         |  round(CASE WHEN sqrt(na) * sqrt(nb) = 0 THEN 0
-         |             ELSE dot / (sqrt(na) * sqrt(nb)) END, 6) AS sim
-         |FROM s ORDER BY sim DESC, vec_id LIMIT 100""".stripMargin
-    },
+    "qs4_ivf" ->
+      ivfSql(s"bit_count(xor(sig, $ivfQueryCell)) <= 1"),
     // WordPiece greedy longest-prefix-match replay: tokenize each DISTINCT
     // word once via a recursive CTE whose step advances by the LONGEST
     // vocab entry prefixing the remainder (LEFT JOIN + max(length), 1-char

@@ -200,28 +200,6 @@ object TextFunctions {
   def fingerprint(text: Column): Column =
     xxhash64(regexp_replace(lower(trim(text)), "\\s+", " "))
 
-  /** Character shingles (n-grams) of the normalized text, as an array.
-    * Only its own spec case reaches it: a deletion candidate
-    * (ROADMAP direction 4).
-    */
-  def charShingles(text: Column, n: Int): Column = {
-    val norm = regexp_replace(lower(trim(text)), "\\s+", " ")
-    val len = length(norm)
-    when(len < n, array(norm))
-      .otherwise(transform(sequence(lit(1), len - n + 1), i => norm.substr(i, lit(n))))
-  }
-
-  /** Word shingles (n-gram strings over whitespace tokens).
-    * Only its own spec case reaches it: a deletion candidate
-    * (ROADMAP direction 4).
-    */
-  def wordShingles(text: Column, n: Int): Column = {
-    val toks = split(lower(trim(text)), "\\s+")
-    val cnt = size(toks)
-    when(cnt < n, array(array_join(toks, " ")))
-      .otherwise(transform(sequence(lit(0), cnt - n), i => array_join(slice(toks, i + 1, lit(n)), " ")))
-  }
-
   // ------------------------------------------------------ URL curation
 
   /** Canonical URL for crawl dedup — the standard normalization chain a

@@ -16,22 +16,11 @@ object VectorFunctions {
   def dot(a: Column, b: Column): Column =
     graft.functions.expressions.VectorExpressions.dotProduct(a, b)
 
-  /** L2 norm. Only its own spec case reaches it: a deletion
-    * candidate (ROADMAP direction 4).
-    */
-  def l2Norm(a: Column): Column = sqrt(dot(a, a))
-
   /** Cosine similarity in [-1, 1]; 0 when either vector is all-zero —
     * single fused pass (dot + both norms in one loop).
     */
   def cosine(a: Column, b: Column): Column =
     graft.functions.expressions.VectorExpressions.cosineSimilarity(a, b)
-
-  /** Squared euclidean distance. Only its own spec case reaches it: a
-    * deletion candidate (ROADMAP direction 4).
-    */
-  def l2Sq(a: Column, b: Column): Column =
-    aggregate(zip_with(a, b, (x, y) => (x - y) * (x - y)), lit(0.0), (acc, v) => acc + v)
 
   /** Random-hyperplane signature for cosine LSH: `bits(v)[i] = sign(v·hᵢ)`
     * packed into a Long. Hyperplanes are generated driver-side from a fixed

@@ -301,31 +301,6 @@ object TextAnalysis {
       .select(col("term"), col("cnt"))
   }
 
-  /** Apply learned merges: segment each word of `text` with the ranked
-    * merge list (sequential application in rank order — equivalent to the
-    * usual lowest-rank-first priority encode, since training itself
-    * produced the rules by sequential application). Returns the subword
-    * token count per row, the trained-tokenizer analogue of
-    * `TextFunctions.wordpieceCount`.
-    * Only its own spec case reaches it: a deletion candidate
-    * (ROADMAP direction 4).
-    */
-  def bpeSubwordCountUdf(merges: Seq[(String, String)]): org.apache.spark.sql.expressions.UserDefinedFunction =
-    udf { (text: String) =>
-      if (text == null) 0L
-      else {
-        val words = text.trim.toLowerCase(java.util.Locale.ROOT)
-          .replaceAll("[^a-z0-9 ]", " ").split("\\s+").filter(_.nonEmpty)
-        var total = 0L
-        words.foreach { w =>
-          var toks = w.map(_.toString).toArray
-          merges.foreach { case (a, b) => toks = mergePair(toks, a, b) }
-          total += toks.length
-        }
-        total
-      }
-    }
-
   /** TF-IDF: top-`k` terms per document, `tfidf = tf · ln(N / df)`.
     * Whitespace tokenization on the lowercased, trimmed text (matching
     * `TextFunctions.tokenCount` semantics). Scores are rounded to 6

@@ -15,7 +15,7 @@ import scala.jdk.CollectionConverters._
   * egress — asserting the egressed ARTIFACTS (what a downstream tile
   * builder would consume), not just in-memory frames.
   */
-class PipelineSpec extends AnyFunSuite {
+class PipelineSpec extends AnyFunSuite with TempDirs {
   private lazy val spark = GraftSession.local(4, "pipeline-spec")
 
   /** What `body` ran: the ids of the jobs that read input records, the
@@ -70,8 +70,8 @@ class PipelineSpec extends AnyFunSuite {
   }
 
   test("five-stage pipeline egresses merged indicators and EAUL results") {
-    val outDir = java.nio.file.Files.createTempDirectory("pipeline-out").toString
-    val shape = jobShape(Pipeline.run(spark, Pipeline.demoOsmDir(), outDir))
+    val outDir = tempDir("pipeline-out").toString
+    val shape = jobShape(Pipeline.run(spark, Pipeline.demoOsmDir(tempDir("pipeline-osm")), outDir))
     // Spark work only where the routing is: one parse of the OSM input, no
     // count job, and no stage wider than the cores (grid(6) has 60 ways,
     // so 60 criticality and 180 EAUL scenarios)
@@ -99,15 +99,15 @@ class PipelineSpec extends AnyFunSuite {
   }
 
   test("an OSM input with no nodes is rejected, naming the input") {
-    val osmDir = java.nio.file.Files.createTempDirectory("pipeline-empty")
+    val osmDir = tempDir("pipeline-empty")
     OsmXml.write(Nil, Nil, osmDir.resolve("empty.osm").toString)
-    val outDir = java.nio.file.Files.createTempDirectory("pipeline-out").toString
+    val outDir = tempDir("pipeline-out").toString
     val e = intercept[IllegalArgumentException](Pipeline.run(spark, osmDir.toString, outDir))
     assert(e.getMessage.contains(osmDir.toString), e.getMessage)
   }
 
   test("curation pipeline egresses a deduped, sharded corpus and its PQ index, stages monotone") {
-    val outDir = java.nio.file.Files.createTempDirectory("curation-out").toString
+    val outDir = tempDir("curation-out").toString
     val counts = CurationPipeline.run(spark, "/root/testdata/sf0.001", outDir)
     // every stage can only shrink the corpus, and none may empty it
     assert(counts("input") >= counts("after_quality"))
@@ -144,7 +144,7 @@ class PipelineSpec extends AnyFunSuite {
 
   test("incremental curation: batches append atomically to the tx-log corpus, dups die against it") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("curation-incr").resolve("tbl").toString
+    val dir = tempDir("curation-incr").resolve("tbl").toString
     // quality floor is 20 words + >=2 Gopher stopwords — survivors get a
     // stopword-bearing preamble plus 20 unique body words
     def doc(seed: Int, n: Int = 20) =

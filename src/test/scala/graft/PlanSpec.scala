@@ -9,7 +9,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * broadcast that falls back to shuffle) fails the suite rather than only
   * showing up at 100 TB.
   */
-class PlanSpec extends AnyFunSuite {
+class PlanSpec extends AnyFunSuite with TempDirs {
   private lazy val spark = GraftSession.local(2, "plan-spec")
   private val sf = "/root/testdata/sf0.001"
 
@@ -463,7 +463,7 @@ class PlanSpec extends AnyFunSuite {
       (1L, "a b c d e a b c d e a b c d e extra words here now ok"),
       (2L, "the quick brown fox jumps over the lazy dog repeatedly fine"),
       (3L, "x y z w v x y z w v x y z w v")).toDF("doc_id", "text")
-    val tmp = java.nio.file.Files.createTempDirectory("qt46-planspec")
+    val tmp = tempDir("qt46-planspec")
     val pq = tmp.resolve("documents.parquet").toString
     docs.write.mode("overwrite").parquet(pq)
     val df = operators.TextAnalysis.repetitionSignals(

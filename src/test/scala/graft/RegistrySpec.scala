@@ -32,6 +32,32 @@ class RegistrySpec extends AnyFunSuite {
       s"gates declared but never verified (run Verify with SPARK_GRAFT_ONLY=${unverified.toSeq.sorted.mkString(",")} then oracle_check): ${unverified.toSeq.sorted}")
   }
 
+  /** Every gate's oracle text is pinned by its sha256 in
+    * `tools/oracle_sql.sha256` (`<sha256>  <gate>`, one line per gate,
+    * sorted by gate). The oracle is built from shared SQL builders, so an
+    * edit to one builder can change many gates' SQL at once; this names
+    * each gate whose text moved, and a deliberate oracle change shows up
+    * in review as the lines of that file it rewrites.
+    */
+  test("every oracle's SQL matches its digest in tools/oracle_sql.sha256") {
+    def sha256(s: String): String =
+      java.security.MessageDigest.getInstance("SHA-256")
+        .digest(s.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+        .map(b => f"${b & 0xff}%02x").mkString
+    val pinned = java.nio.file.Files.readString(java.nio.file.Paths.get("tools", "oracle_sql.sha256"))
+      .split("\n").filter(_.nonEmpty)
+      .map { line => val Array(digest, gate) = line.split("  "); gate -> digest }
+      .toMap
+    val actual = SparkEntry.oracleSql.map { case (gate, sql) => gate -> sha256(sql) }
+    assert(pinned.keySet == actual.keySet,
+      s"gates without a digest: ${(actual.keySet -- pinned.keySet).toSeq.sorted}; " +
+        s"digests without a gate: ${(pinned.keySet -- actual.keySet).toSeq.sorted}")
+    val moved = actual.keys.filter(g => pinned(g) != actual(g)).toSeq.sorted
+    assert(moved.isEmpty,
+      s"oracle SQL changed for ${moved.mkString(", ")}; if intended, the new lines are:\n" +
+        moved.map(g => s"${actual(g)}  $g").mkString("\n"))
+  }
+
   /** "Verify dumps the plans Bench times" holds only while every main
     * builds its session through `GraftSession.local`; a second builder in
     * `src/main` would let the confs drift apart again.

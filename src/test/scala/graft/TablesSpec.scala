@@ -2,7 +2,7 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-class TablesSpec extends AnyFunSuite {
+class TablesSpec extends AnyFunSuite with TempDirs {
   private lazy val spark = GraftSession.local(2, "tables-spec")
 
   /** The footer read behind a parquet schema is a Spark job; `Tables`
@@ -13,7 +13,7 @@ class TablesSpec extends AnyFunSuite {
     */
   test("a second Tables.load of a table starts no job; a new path reads its own schema") {
     import spark.implicits._
-    val root = java.nio.file.Files.createTempDirectory("tables-spec")
+    val root = tempDir("tables-spec")
     try {
       val (a, b) = (root.resolve("a").toString, root.resolve("b").toString)
       Seq((1L, 2.5)).toDF("id", "x").write.parquet(s"$a/t.parquet")

@@ -1,6 +1,6 @@
 package graft.graph
 
-import graft.GraftSession
+import graft.{GraftSession, TempDirs}
 import graft.sources.OsmXml
 import java.util.concurrent.ConcurrentLinkedQueue
 import java.util.concurrent.atomic.AtomicInteger
@@ -14,7 +14,7 @@ import scala.jdk.CollectionConverters._
   * Catalyst route-matrix operator, criticality scoring, EAUL sweep — on the
   * golden network.
   */
-class SparkGraphSpec extends AnyFunSuite {
+class SparkGraphSpec extends AnyFunSuite with TempDirs {
   private lazy val spark = GraftSession.local(4, "graph-spec")
 
   private def featuresDf = {
@@ -129,7 +129,7 @@ class SparkGraphSpec extends AnyFunSuite {
 
   test("sweep results are materialized once: count and write run no fan-out stage") {
     val parallelism = spark.sparkContext.defaultParallelism
-    val out = java.nio.file.Files.createTempDirectory("sweep-out").toString
+    val out = tempDir("sweep-out").toString
     val (grid, gridOd) = DemoNetwork.grid(6)
     // 30 EAUL scenarios on the golden network, 60 criticality ones on grid(6)
     val sweeps = Seq[(String, () => DataFrame)](
@@ -157,7 +157,7 @@ class SparkGraphSpec extends AnyFunSuite {
   }
 
   private def osmGraph(ways: Seq[OsmXml.OsmWay]): CsrGraph = {
-    val dir = java.nio.file.Files.createTempDirectory("osm-bad")
+    val dir = tempDir("osm-bad")
     val nodes = Seq(OsmXml.OsmNode(1, 0.0, 0.0), OsmXml.OsmNode(2, 0.01, 0.0))
     OsmXml.write(nodes, ways, dir.resolve("net.osm").toString)
     val (nDf, wDf) = OsmXml.read(spark, dir.toString)
@@ -200,7 +200,7 @@ class SparkGraphSpec extends AnyFunSuite {
   }
 
   test("G2→G1: OSM-shaped ingestion routes the golden network at 3.75") {
-    val dir = java.nio.file.Files.createTempDirectory("osm-golden")
+    val dir = tempDir("osm-golden")
     val nodes = GoldenNetwork.nodeCoords.zipWithIndex.map { case ((lon, lat), i) =>
       OsmXml.OsmNode(100 + i, lon, lat)
     }
@@ -229,7 +229,7 @@ class SparkGraphSpec extends AnyFunSuite {
         |<node id="2" lat="0.0" lon="1.0"/>
         |<way id="10"><nd ref="1"/><nd ref="2"/><tag k="NAME" v="seg-a"/><tag k="RUC" v="1.5"/></way>
         |</osm>""".stripMargin
-    val dir = java.nio.file.Files.createTempDirectory("osm").toFile
+    val dir = tempDir("osm").toFile
     val fw = new java.io.FileWriter(new java.io.File(dir, "net.osm"))
     fw.write(xml); fw.close()
     val (nodes, ways) = OsmXml.read(spark, dir.getAbsolutePath)

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{GraftSession, Tables}
+import graft.{GraftSession, Tables, TempDirs}
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 import org.apache.spark.sql.functions._
@@ -11,7 +11,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * answer to "this join shuffles every run". Verified by asserting the
   * physical plan contains zero ShuffleExchange operators.
   */
-class BucketingSpec extends AnyFunSuite {
+class BucketingSpec extends AnyFunSuite with TempDirs {
   private lazy val spark = GraftSession.local(4, "bucketing-spec")
 
   test("bucketed fact-fact join plans without any shuffle exchange") {
@@ -56,7 +56,7 @@ class BucketingSpec extends AnyFunSuite {
     // equality/IN predicate skip whole directories at planning time — at
     // 100 TB a lang='en' filter reads only the en/ partition, zero I/O on
     // the rest. Verified via the scan's reported partition count.
-    val dir = java.nio.file.Files.createTempDirectory("part_prune").toString
+    val dir = tempDir("part_prune").toString
     Tables.documents(spark, "/root/testdata/sf0.001")
       .write.mode("overwrite").partitionBy("lang").parquet(dir)
     val read = spark.read.parquet(dir).filter(col("lang") === "en")

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.GraftSession
+import graft.{GraftSession, TempDirs}
 import graft.graph.ScenarioWeights
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -9,7 +9,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * no dedicated oracle query: exercised through the public API with
   * reference-documented expectations.
   */
-class OperatorsSpec extends AnyFunSuite {
+class OperatorsSpec extends AnyFunSuite with TempDirs {
   private lazy val spark = GraftSession.local(2, "operators-spec")
 
   test("F3/F4/F5/S6: bridge prep (prep-bridge.js semantics)") {
@@ -43,7 +43,7 @@ class OperatorsSpec extends AnyFunSuite {
   test("S4+F3-F5: bridges.csv header contract end-to-end through the CSV scan") {
     // header shape per the reference source table (SURVEY §1.1:
     // Str_ID,Link_ID,...,GPS_E,GPS_S,...,Over_Length,...,Des_Type,Mat_Type)
-    val dir = java.nio.file.Files.createTempDirectory("bridges")
+    val dir = tempDir("bridges")
     java.nio.file.Files.writeString(
       dir.resolve("bridges.csv"),
       """Str_ID,Link_ID,District,GPS_E,GPS_S,Over_Length,Des_Type,Mat_Type
@@ -64,7 +64,7 @@ class OperatorsSpec extends AnyFunSuite {
     import spark.implicits._
     val edges = Seq(("w1", 0, 1, 2.0), ("w2", 1, 2, 3.0)).toDF("way_id", "src", "dst", "weight")
     val overrides = Seq(("w1", 5.0)).toDF("way_id", "speed")
-    val dir = java.nio.file.Files.createTempDirectory("speed").toString + "/profile"
+    val dir = tempDir("speed").toString + "/profile"
     graft.graph.ScenarioWeights.writeSpeedProfile(edges, overrides, dir)
     val back = spark.read.csv(dir).collect().map(r => (r.getString(0), r.getString(1), r.getString(2))).toSet
     assert(back == Set(("0", "1", "5.0"), ("1", "0", "5.0"))) // fwd + reverse, only w1
@@ -432,7 +432,7 @@ class OperatorsSpec extends AnyFunSuite {
 
   test("S10: OSM-XML write → read round-trip") {
     import graft.sources.OsmXml
-    val dir = java.nio.file.Files.createTempDirectory("osmw")
+    val dir = tempDir("osmw")
     val nodes = Seq(OsmXml.OsmNode(1, 0.5, -0.5), OsmXml.OsmNode(2, 1.5, -1.5))
     val ways = Seq(OsmXml.OsmWay(10, Seq(1L, 2L), Map("NAME" -> "seg<a>", "RUC" -> "1.2")))
     OsmXml.write(nodes, ways, dir.resolve("g.osm").toString)
@@ -445,7 +445,7 @@ class OperatorsSpec extends AnyFunSuite {
   test("J3: per-key result-file join (merge-eaul shape)") {
     import spark.implicits._
     // one JSON file per way, read as one DataFrame, left-join onto RN
-    val dir = java.nio.file.Files.createTempDirectory("eaulres")
+    val dir = tempDir("eaulres")
     java.nio.file.Files.writeString(dir.resolve("result--w1.json"), """{"name":"w1","eaul_baseline":10.5}""")
     java.nio.file.Files.writeString(dir.resolve("result--w2.json"), """{"name":"w2","eaul_baseline":20.5}""")
     val results = spark.read.json(dir.toString + "/*.json")
@@ -629,7 +629,7 @@ class OperatorsSpec extends AnyFunSuite {
   test("IVF scale path: cluster-partitioned write gives scan-time partition pruning") {
     val embs = graft.Tables.embeddings(spark, "/root/testdata/sf0.001")
     val (_, assigned) = Similarity.kmeans(embs, "vec_id", "embedding", k = 4, iters = 2)
-    val dir = java.nio.file.Files.createTempDirectory("ivf-part").toString
+    val dir = tempDir("ivf-part").toString
     embs.join(assigned, Seq("vec_id"))
       .write.mode("overwrite").partitionBy("cluster").parquet(dir)
     val probed = spark.read.parquet(dir).filter(col("cluster").isin(0, 1))
@@ -976,7 +976,7 @@ class OperatorsSpec extends AnyFunSuite {
     val embs = graft.Tables.embeddings(spark, "/root/testdata/sf0.001")
     val q = Array.tabulate(64)(i => math.sin(i + 1.0))
     val (bits, nProbe) = (6, 2)
-    val dir = java.nio.file.Files.createTempDirectory("ivfpart").toString
+    val dir = tempDir("ivfpart").toString
     SimilarityVariants.writeCellPartitioned(embs, "vec_id", "embedding", dir, bits)
     // the driver-side cell twin matches the Column expression exactly
     val spCell = embs.limit(1)

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.GraftSession
+import graft.{GraftSession, TempDirs}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Quantified ANN recall: `ivfTopK` and `ivfKmeansTopK` trade recall for
@@ -16,7 +16,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * exact answer. Recall is monotone in nProbe — probing more cells only
   * ever adds candidates.
   */
-class RecallSpec extends AnyFunSuite {
+class RecallSpec extends AnyFunSuite with TempDirs {
 
   private lazy val spark = GraftSession.local(2, "recall-spec")
 
@@ -297,7 +297,7 @@ class RecallSpec extends AnyFunSuite {
   test("PQ: ADC over a STORED codes table equals the inline-encode path") {
     val q = queries.head
     val cb = Similarity.pqCodebook(embsPq, "vec_id", "embedding", m = 4, k = 16)
-    val dir = java.nio.file.Files.createTempDirectory("pq-codes").toString + "/codes"
+    val dir = tempDir("pq-codes").toString + "/codes"
     // ingest-time encode, persisted: queries scan m bytes + id per vector
     Similarity.pqEncode(embsPq, "vec_id", "embedding", cb).write.parquet(dir)
     val stored = Similarity
@@ -338,7 +338,7 @@ class RecallSpec extends AnyFunSuite {
   test("SQ: top-k over a STORED int8 codes table equals the inline path") {
     val q = queries.head
     val (qc, qm) = Similarity.sqQuantizeQuery(q)
-    val dir = java.nio.file.Files.createTempDirectory("sq-codes").toString + "/codes"
+    val dir = tempDir("sq-codes").toString + "/codes"
     val enc = SimilarityVariants.sqEncode(embs, "vec_id", "embedding")
     // the artifact really is int8 + one scale (the 4× claim)
     assert(enc.schema("codes").dataType ==

@@ -1,10 +1,10 @@
 package graft.operators
 
-import graft.GraftSession
+import graft.{GraftSession, TempDirs}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-class SpatialSpec extends AnyFunSuite {
+class SpatialSpec extends AnyFunSuite with TempDirs {
   private lazy val spark = GraftSession.local(4, "spatial-spec")
 
   private def randBoxes(n: Int, seed: Int, prefix: String) = {
@@ -50,7 +50,7 @@ class SpatialSpec extends AnyFunSuite {
 
   test("GeoJSON source round-trip (S2/S3)") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("geojson")
+    val dir = tempDir("geojson")
     val fc =
       """{"type":"FeatureCollection","features":[
         |{"type":"Feature","geometry":{"type":"LineString","coordinates":[[0,0],[1,1]]},
@@ -101,7 +101,7 @@ class SpatialSpec extends AnyFunSuite {
   }
 
   test("§3.2 end-to-end: GeoJSON files → typed coords → weighted overlay") {
-    val dir = java.nio.file.Files.createTempDirectory("overlay-e2e")
+    val dir = tempDir("overlay-e2e")
     java.nio.file.Files.writeString(
       dir.resolve("ways.geojson"),
       """{"type":"FeatureCollection","features":[

@@ -1,10 +1,10 @@
 package graft.operators
 
-import graft.GraftSession
+import graft.{GraftSession, TempDirs}
 import org.apache.spark.sql.functions.col
 import org.scalatest.funsuite.AnyFunSuite
 
-class TextAnalysisSpec extends AnyFunSuite {
+class TextAnalysisSpec extends AnyFunSuite with TempDirs {
   private lazy val spark = GraftSession.local(2, "textanalysis-spec")
 
   test("tf-idf: hand-computed scores, rank order, and k-cut") {
@@ -215,20 +215,6 @@ class TextAnalysisSpec extends AnyFunSuite {
     val out = TextAnalysis.heavyHitters(docs, "text", 0.25)
       .collect().map(r => (r.getString(0), r.getLong(1)))
     assert(out.toSeq === Seq(("hot", 40L)))
-  }
-
-  test("bpeSubwordCount applies learned merges and lower-bounds at word count") {
-    import spark.implicits._
-    import org.apache.spark.sql.functions.col
-    val docs = Seq((1L, "low low lower")).toDF("doc_id", "text")
-    val merges = TextAnalysis.bpeTrain(docs, "text", 6)
-      .collect().map(r => (r.getString(1), r.getString(2))).toSeq
-    val counts = docs
-      .select(col("doc_id"), TextAnalysis.bpeSubwordCountUdf(merges)(col("text")).as("n"))
-      .collect().map(_.getLong(1))
-    // 6 merges on this tiny corpus fully merge "low" and reach "lower":
-    // low=1 piece ×2, lower ≤ 2 pieces
-    assert(counts(0) >= 3L && counts(0) <= 4L)
   }
 
   test("bm25Rank matches a hand-computed score on a 3-doc corpus") {
@@ -594,7 +580,7 @@ class TextAnalysisSpec extends AnyFunSuite {
 
   test("incremental index from the change feed == full rebuild, incl. upsert-then-delete") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-incridx").resolve("t").toString
+    val dir = tempDir("graft-incridx").resolve("t").toString
     TxLog.create(spark, dir, Seq(
       (1L, "alpha beta"), (2L, "gamma delta"), (3L, "epsilon zeta"), (4L, "eta theta"))
       .toDF("doc_id", "text").repartition(2))

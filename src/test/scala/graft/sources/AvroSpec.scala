@@ -4,19 +4,19 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.GraftSession
+import graft.{GraftSession, TempDirs}
 
 /** Avro connector contracts: typed round-trip equality across every
   * supported Spark type (incl. nulls, arrays, NTZ timestamps, binary),
   * schema translation in both directions, file-per-partition layout, and
   * loud rejection of out-of-scope types.
   */
-class AvroSpec extends AnyFunSuite {
+class AvroSpec extends AnyFunSuite with TempDirs {
   private lazy val spark = GraftSession.local(4, "avro-spec")
   import spark.implicits._
 
   test("round trip: all supported types, nulls, arrays — value-exact") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-avro").toString
+    val dir = tempDir("graft-avro").toString
     val df = spark.range(200).select(
       $"id".as("k"),
       ($"id" % 7).cast("int").as("i"),
@@ -55,7 +55,7 @@ class AvroSpec extends AnyFunSuite {
     assert(avro.getField("b").schema().getType == org.apache.avro.Schema.Type.STRING)
     assert(Avro.sparkSchema(avro) == st)
 
-    val empty = java.nio.file.Files.createTempDirectory("graft-avro-empty").toString
+    val empty = tempDir("graft-avro-empty").toString
     val ex = intercept[IllegalArgumentException](Avro.readAvro(spark, empty))
     assert(ex.getMessage.contains("no .avro"))
   }

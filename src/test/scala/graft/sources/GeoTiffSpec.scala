@@ -1,14 +1,14 @@
 package graft.sources
 
 import java.nio.{ByteBuffer, ByteOrder}
-import graft.GraftSession
+import graft.{GraftSession, TempDirs}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** S11: synthetic spec-conformant GeoTIFFs (built byte-by-byte from the
   * public TIFF 6.0 layout — strip AND tile variants) round-trip through
   * the distributed reader and feed zonal statistics end-to-end.
   */
-class GeoTiffSpec extends AnyFunSuite {
+class GeoTiffSpec extends AnyFunSuite with TempDirs {
   private lazy val spark = GraftSession.local(2, "geotiff-spec")
 
   private case class E(tag: Int, typ: Int, values: Seq[Double], ascii: Option[String] = None)
@@ -117,7 +117,7 @@ class GeoTiffSpec extends AnyFunSuite {
   }
 
   test("strip float32 raster: values, pixel-center georeferencing, nodata skipped") {
-    val dir = java.nio.file.Files.createTempDirectory("gtiff")
+    val dir = tempDir("gtiff")
     java.nio.file.Files.write(dir.resolve("flood.tif"), stripTiff())
     val df = GeoTiff.read(spark, dir.toString, globFilter = Some("*.tif"))
     val rows = df.collect().map(r => (r.getDouble(1), r.getDouble(2), r.getDouble(3)))
@@ -140,7 +140,7 @@ class GeoTiffSpec extends AnyFunSuite {
 
   test("raster → zonalStats end-to-end matches a directly-built cell table") {
     import org.apache.spark.sql.functions._
-    val dir = java.nio.file.Files.createTempDirectory("gtiff2")
+    val dir = tempDir("gtiff2")
     java.nio.file.Files.write(dir.resolve("flood.tif"), stripTiff())
     val cells = GeoTiff.read(spark, dir.toString, globFilter = Some("*.tif")).select("x", "y", "value")
     val polys = {
@@ -205,7 +205,7 @@ class GeoTiffSpec extends AnyFunSuite {
   test("deflate-written raster decodes identically to its uncompressed twin") {
     val w = 16; val h = 9
     val vals = Array.tabulate(w * h)(i => ((i * 37 % 101) / 7.0).toFloat)
-    val dir = java.nio.file.Files.createTempDirectory("gtiffz")
+    val dir = tempDir("gtiffz")
     GeoTiff.write(dir.resolve("plain.tif").toString, w, h, vals, 0.5, 0.5, 10.0, 20.0)
     GeoTiff.write(dir.resolve("zip.tif").toString, w, h, vals, 0.5, 0.5, 10.0, 20.0,
       deflate = true)
@@ -308,7 +308,7 @@ class GeoTiffSpec extends AnyFunSuite {
   }
 
   test("readParallel: segment-fanned decode ≡ whole-file read on strip, tile and deflate rasters") {
-    val dir = java.nio.file.Files.createTempDirectory("gtiffpar")
+    val dir = tempDir("gtiffpar")
     // multi-strip float32 (3 strips of 1 row), via rowsPerStrip = 1
     val px = Array.tabulate(12)(i => if (i == 5) -1.0f else i.toFloat)
     val stripPayload = ByteBuffer.allocate(px.length * 4).order(ByteOrder.LITTLE_ENDIAN)
@@ -395,7 +395,7 @@ class GeoTiffSpec extends AnyFunSuite {
   test("writer multi-strip mode: per-strip deflate round-trips and fans out in readParallel") {
     val w = 10; val h = 23 // 23 rows / 5 per strip = 5 strips, last ragged
     val vals = Array.tabulate(w * h)(i => ((i * 13 % 97) / 3.0).toFloat)
-    val dir = java.nio.file.Files.createTempDirectory("gtiffms")
+    val dir = tempDir("gtiffms")
     GeoTiff.write(dir.resolve("ms.tif").toString, w, h, vals, 1.0, 1.0, 0.0, h.toDouble,
       deflate = true, rowsPerStrip = 5)
     val bytes = java.nio.file.Files.readAllBytes(dir.resolve("ms.tif"))
@@ -412,7 +412,7 @@ class GeoTiffSpec extends AnyFunSuite {
   test("BigTIFF (version 43): 64-bit framing round-trips, multi-strip fans out") {
     val w = 9; val h = 17 // 17 rows / 4 per strip = 5 strips, last ragged
     val vals = Array.tabulate(w * h)(i => ((i * 31 % 89) / 4.0).toFloat)
-    val dir = java.nio.file.Files.createTempDirectory("gtiffbig")
+    val dir = tempDir("gtiffbig")
     // single strip: LONG8 offset/count inline in the 8-byte value field
     GeoTiffFixtures.writeBig(dir.resolve("one.tif").toString, w, h, vals, 0.5, 0.25, 3.0, 9.0)
     val one = java.nio.file.Files.readAllBytes(dir.resolve("one.tif"))
@@ -439,7 +439,7 @@ class GeoTiffSpec extends AnyFunSuite {
   test("BigTIFF with a corrupt 64-bit IFD offset fails loudly, not with an AIOOBE") {
     val w = 4; val h = 4
     val vals = Array.fill(w * h)(1.0f)
-    val dir = java.nio.file.Files.createTempDirectory("gtiffcorrupt")
+    val dir = tempDir("gtiffcorrupt")
     GeoTiffFixtures.writeBig(dir.resolve("c.tif").toString, w, h, vals, 1.0, 1.0, 0.0, h.toDouble)
     val bytes = java.nio.file.Files.readAllBytes(dir.resolve("c.tif"))
     val buf = java.nio.ByteBuffer.wrap(bytes).order(java.nio.ByteOrder.LITTLE_ENDIAN)
@@ -476,7 +476,7 @@ class GeoTiffSpec extends AnyFunSuite {
   test("multi-band chunky round-trip: writeBands -> cellsBands, per-band values exact") {
     val w = 8; val h = 4
     val bands = Array.tabulate(3)(b => Array.tabulate(w * h)(i => (i * 0.25f + b * 100f)))
-    val dir = java.nio.file.Files.createTempDirectory("mbtiff")
+    val dir = tempDir("mbtiff")
     val p = dir.resolve("rgb.tif").toString
     GeoTiff.writeBands(p, w, h, bands, 1.0, 1.0, 0.0, h.toDouble, deflate = true)
     val bytes = java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(p))
@@ -499,7 +499,7 @@ class GeoTiffSpec extends AnyFunSuite {
   test("readBandsParallel: multi-strip multi-band deflate fans out, output ≡ readBands") {
     val w = 10; val h = 21 // 21 rows / 6 per strip = 4 strips, last ragged
     val bands = Array.tabulate(3)(b => Array.tabulate(w * h)(i => (i * 0.5f + b * 1000f)))
-    val dir = java.nio.file.Files.createTempDirectory("mbtiffpar")
+    val dir = tempDir("mbtiffpar")
     val p = dir.resolve("rgb.tif").toString
     GeoTiff.writeBands(p, w, h, bands, 1.0, 1.0, 0.0, h.toDouble,
       deflate = true, rowsPerStrip = 6)

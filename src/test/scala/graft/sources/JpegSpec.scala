@@ -1,10 +1,10 @@
 package graft.sources
 
-import graft.GraftSession
+import graft.{GraftSession, TempDirs}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Baseline-JPEG codec + JPEG-in-TIFF (Compression=7) integration. */
-class JpegSpec extends AnyFunSuite {
+class JpegSpec extends AnyFunSuite with TempDirs {
   private lazy val spark = GraftSession.local(2, "jpeg-spec")
 
   test("block-constant image round-trips exactly (the qz5 oracle contract)") {
@@ -206,7 +206,7 @@ class JpegSpec extends AnyFunSuite {
       val bc = (i % w) / 8; val br = (i / w) / 8
       (bc * 5 + br * 11) % 256
     }
-    val dir = java.nio.file.Files.createTempDirectory("jpegtiff")
+    val dir = tempDir("jpegtiff")
     GeoTiff.writeJpeg(dir.resolve("r.tif").toString, w, h, px, 1.0, 1.0, 0.0, h.toDouble,
       rowsPerStrip = 16)
     val a = GeoTiff.read(spark, dir.toString, globFilter = Some("*.tif"))
@@ -226,7 +226,7 @@ class JpegSpec extends AnyFunSuite {
 
   test("JPEG TIFF with a predictor or non-8-bit samples is rejected at header parse") {
     // hand-tweak a valid header: flip compression to 7 on a float32 raster
-    val dir = java.nio.file.Files.createTempDirectory("jpegbad")
+    val dir = tempDir("jpegbad")
     val p = dir.resolve("f.tif").toString
     GeoTiff.write(p, 8, 8, Array.fill(64)(1.0f), 1.0, 1.0, 0.0, 8.0)
     val bytes = java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(p))

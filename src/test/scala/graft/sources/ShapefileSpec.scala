@@ -1,13 +1,13 @@
 package graft.sources
 
 import java.nio.{ByteBuffer, ByteOrder}
-import graft.GraftSession
+import graft.{GraftSession, TempDirs}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Round-trip: write a minimal spec-conformant .shp/.dbf pair, read it
   * back through the distributed reader.
   */
-class ShapefileSpec extends AnyFunSuite {
+class ShapefileSpec extends AnyFunSuite with TempDirs {
   private lazy val spark = GraftSession.local(2, "shp-spec")
 
   private def writeShp(path: java.nio.file.Path): Unit = {
@@ -77,7 +77,7 @@ class ShapefileSpec extends AnyFunSuite {
   }
 
   test("S1: shapefile + dbf round-trip") {
-    val dir = java.nio.file.Files.createTempDirectory("shp")
+    val dir = tempDir("shp")
     writeShp(dir.resolve("roads.shp"))
     writeDbf(dir.resolve("roads.dbf"))
     val df = Shapefile.read(spark, dir.toString + "/*")
@@ -95,7 +95,7 @@ class ShapefileSpec extends AnyFunSuite {
   }
 
   test("S1: dbf column pruning decodes ONLY the projected fields, values unchanged") {
-    val dir = java.nio.file.Files.createTempDirectory("shp-prune")
+    val dir = tempDir("shp-prune")
     writeShp(dir.resolve("roads.shp"))
     writeDbf(dir.resolve("roads.dbf"))
     // reader-level projection: only NAME survives the parse
@@ -117,7 +117,7 @@ class ShapefileSpec extends AnyFunSuite {
   }
 
   test("S1: writePoints emits the dBase III EOF marker (0x1A) at the dbf tail") {
-    val dir = java.nio.file.Files.createTempDirectory("shpw")
+    val dir = tempDir("shpw")
     val shp = dir.resolve("pts.shp").toString
     Shapefile.writePoints(shp, Seq((1.0, 2.0), (3.0, 4.0)),
       attrs = Seq(Map("NAME" -> "a"), Map("NAME" -> "b")), fieldLens = Seq("NAME" -> 4))
@@ -162,7 +162,7 @@ class ShapefileSpec extends AnyFunSuite {
     val lonLat = Seq((32.57, -25.97), (33.0, -15.0), (34.7, -11.2))
     val p36s = CrsForward.utmZone(36, south = true)
     val projected = lonLat.map { case (lon, lat) => CrsForward.tmForward(lon, lat, p36s) }
-    val dir = java.nio.file.Files.createTempDirectory("shp-utm")
+    val dir = tempDir("shp-utm")
     writeShpPoints(dir.resolve("roads.shp"), projected)
     java.nio.file.Files.writeString(
       dir.resolve("roads.prj"),
@@ -184,7 +184,7 @@ class ShapefileSpec extends AnyFunSuite {
   }
 
   test("S1 V2: format(graft-shapefile) equals the RDD reader, attrs as typed columns") {
-    val dir = java.nio.file.Files.createTempDirectory("shp-v2")
+    val dir = tempDir("shp-v2")
     writeShp(dir.resolve("roads.shp"))
     writeDbf(dir.resolve("roads.dbf"))
     val v2 = spark.read.format("graft-shapefile").load(dir.toString)
@@ -205,7 +205,7 @@ class ShapefileSpec extends AnyFunSuite {
   }
 
   test("S1 V2: Catalyst prunes un-selected dbf columns into the scan") {
-    val dir = java.nio.file.Files.createTempDirectory("shp-v2-prune")
+    val dir = tempDir("shp-v2-prune")
     writeShp(dir.resolve("roads.shp"))
     writeDbf(dir.resolve("roads.dbf"))
     val q = spark.read.format("graft-shapefile").load(dir.toString).select("NAME")
@@ -225,7 +225,7 @@ class ShapefileSpec extends AnyFunSuite {
     val lonLat = Seq((32.57, -25.97), (33.0, -15.0))
     val p36s = CrsForward.utmZone(36, south = true)
     val projected = lonLat.map { case (lon, lat) => CrsForward.tmForward(lon, lat, p36s) }
-    val dir = java.nio.file.Files.createTempDirectory("shp-v2-utm")
+    val dir = tempDir("shp-v2-utm")
     writeShpPoints(dir.resolve("roads.shp"), projected)
     java.nio.file.Files.writeString(
       dir.resolve("roads.prj"),
@@ -246,7 +246,7 @@ class ShapefileSpec extends AnyFunSuite {
   }
 
   test("F15/S1: unsupported .prj projection fails the read loudly") {
-    val dir = java.nio.file.Files.createTempDirectory("shp-badprj")
+    val dir = tempDir("shp-badprj")
     writeShpPoints(dir.resolve("roads.shp"), Seq((1.0, 2.0), (3.0, 4.0)))
     java.nio.file.Files.writeString(
       dir.resolve("roads.prj"),
@@ -262,7 +262,7 @@ class ShapefileSpec extends AnyFunSuite {
     // at 100 TB some records are always malformed — the ingest contract is
     // PERMISSIVE + _corrupt_record: bad lines are quarantined as data (for
     // a dead-letter sink), never fail the job, never poison good rows
-    val dir = java.nio.file.Files.createTempDirectory("jsonl")
+    val dir = tempDir("jsonl")
     java.nio.file.Files.write(
       dir.resolve("part.json"),
       java.util.Arrays.asList(

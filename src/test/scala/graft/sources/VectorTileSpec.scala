@@ -1,12 +1,12 @@
 package graft.sources
 
-import graft.GraftSession
+import graft.{GraftSession, TempDirs}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** MVT sink: wire-format anchors from the public spec, encode/decode
   * round-trips, and the distributed per-tile writer.
   */
-class VectorTileSpec extends AnyFunSuite {
+class VectorTileSpec extends AnyFunSuite with TempDirs {
   private lazy val spark = GraftSession.local(2, "mvt-spec")
 
   test("geometry command stream matches the spec's worked example") {
@@ -54,7 +54,7 @@ class VectorTileSpec extends AnyFunSuite {
 
   test("distributed writeTiles: per-tile files, features land in the right tile") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("mvt").toString
+    val dir = tempDir("mvt").toString
     // four points in distinct z1 tiles (quadrants)
     val df = Seq(
       (1L, -90.0, 40.0, "nw"),
@@ -104,7 +104,7 @@ class VectorTileSpec extends AnyFunSuite {
 
   test("writeGeomTiles: null/empty/single-point rows drop instead of failing the job") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("mvt-degenerate").toString
+    val dir = tempDir("mvt-degenerate").toString
     val df = Seq(
       (1L, Seq(Seq(10.0, 10.0), Seq(20.0, 20.0)), "ok"),
       (2L, Seq.empty[Seq[Double]], "empty"),
@@ -118,7 +118,7 @@ class VectorTileSpec extends AnyFunSuite {
 
   test("distributed writeGeomTiles: spanning polygon clips into both tiles, line re-entry splits") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("mvt-geom").toString
+    val dir = tempDir("mvt-geom").toString
     // at z1, lon 0 is the tile-0/tile-1 boundary; a lon [-45, 45] square
     // at northern lats spans tiles (0,0) and (1,0)
     val poly = Seq((7L, Seq(
@@ -145,7 +145,7 @@ class VectorTileSpec extends AnyFunSuite {
     val line = Seq((9L, Seq(
       Seq(-40.0, 40.0), Seq(30.0, 40.0), Seq(30.0, 55.0), Seq(-40.0, 55.0)), "zig"))
       .toDF("id", "coords", "name")
-    val dir2 = java.nio.file.Files.createTempDirectory("mvt-line").toString
+    val dir2 = tempDir("mvt-line").toString
     VectorTile.writeGeomTiles(line, "id", geomType = 2, "coords", Seq("name"), zoom = 1, dir = dir2)
     def readTile2(tx: Int, ty: Int) = VectorTile.decodeTile(java.nio.file.Files.readAllBytes(
       java.nio.file.Paths.get(dir2, "1", tx.toString, s"$ty.mvt"))).head
@@ -161,7 +161,7 @@ class VectorTileSpec extends AnyFunSuite {
     // z0: whole world is one tile. Exterior lon/lat box with a hole box.
     val exterior = Seq(Seq(-60.0, -30.0), Seq(60.0, -30.0), Seq(60.0, 50.0), Seq(-60.0, 50.0))
     val hole = Seq(Seq(-20.0, 0.0), Seq(20.0, 0.0), Seq(20.0, 30.0), Seq(-20.0, 30.0))
-    val dir = java.nio.file.Files.createTempDirectory("mvt-holes").toString
+    val dir = tempDir("mvt-holes").toString
     VectorTile.writePolygonTiles(
       Seq((5L, Seq(exterior, hole), "donut")).toDF("id", "rings", "name"),
       "id", "rings", Seq("name"), zoom = 0, dir = dir)
@@ -175,7 +175,7 @@ class VectorTileSpec extends AnyFunSuite {
 
     // z1: the same donut spans the lon-0 boundary — both tiles keep a
     // fragment of exterior AND hole (the hole straddles lon 0 too)
-    val dir2 = java.nio.file.Files.createTempDirectory("mvt-holes2").toString
+    val dir2 = tempDir("mvt-holes2").toString
     VectorTile.writePolygonTiles(
       Seq((6L, Seq(exterior, hole), "donut")).toDF("id", "rings", "name"),
       "id", "rings", Seq("name"), zoom = 1, dir = dir2)
@@ -190,7 +190,7 @@ class VectorTileSpec extends AnyFunSuite {
     }
 
     // a hole-only row (no usable exterior) writes nothing rather than failing
-    val dir3 = java.nio.file.Files.createTempDirectory("mvt-holes3").toString
+    val dir3 = tempDir("mvt-holes3").toString
     VectorTile.writePolygonTiles(
       Seq((7L, Seq(Seq(Seq(0.0, 0.0)), hole), "bad")).toDF("id", "rings", "name"),
       "id", "rings", Seq("name"), zoom = 0, dir = dir3)
@@ -206,7 +206,7 @@ class VectorTileSpec extends AnyFunSuite {
     // ~41 px of the line must appear in tile 1's buffer margin.
     val line = Seq((9L, Seq(Seq(-40.0, 40.0), Seq(-1.0, 40.0)), "edge"))
       .toDF("id", "coords", "name")
-    val dirB = java.nio.file.Files.createTempDirectory("mvt-buf").toString
+    val dirB = tempDir("mvt-buf").toString
     VectorTile.writeGeomTiles(line, "id", geomType = 2, "coords", Seq("name"),
       zoom = 1, dir = dirB, buffer = 64)
     val neighbor = java.nio.file.Paths.get(dirB, "1", "1", "0.mvt")
@@ -217,7 +217,7 @@ class VectorTileSpec extends AnyFunSuite {
     assert(frag.size >= 2 && frag.forall { case (x, _) => x >= -64 && x < 0 },
       s"margin fragment must sit wholly in tile 1's buffer zone, got $frag")
     // same feature, buffer = 0: the neighbor tile must NOT exist
-    val dir0 = java.nio.file.Files.createTempDirectory("mvt-buf0").toString
+    val dir0 = tempDir("mvt-buf0").toString
     VectorTile.writeGeomTiles(line, "id", geomType = 2, "coords", Seq("name"),
       zoom = 1, dir = dir0, buffer = 0)
     assert(!java.nio.file.Files.exists(java.nio.file.Paths.get(dir0, "1", "1", "0.mvt")))
@@ -244,7 +244,7 @@ class VectorTileSpec extends AnyFunSuite {
       Seq(-45.0, 20.0), Seq(-45.0, 60.0), Seq(45.0, 60.0), Seq(45.0, 20.0))
     val ringCw = ringCcwOnScreen.head +: ringCcwOnScreen.tail.reverse
     def render(ring: Seq[Seq[Double]]): Array[Byte] = {
-      val dir = java.nio.file.Files.createTempDirectory("mvt-wind").toString
+      val dir = tempDir("mvt-wind").toString
       VectorTile.writeGeomTiles(
         Seq((3L, ring, "w")).toDF("id", "coords", "name"),
         "id", geomType = 3, "coords", Seq("name"), zoom = 0, dir = dir)

@@ -5981,19 +5981,7 @@ object SparkEntry {
        |    FROM (SELECT doc_id, tk, unnest(generate_series(1, greatest(len(tk) - 2, 1))) AS i FROM toks))
        |), strs(s, ln) AS (
        |  SELECT DISTINCT sh, length(sh) FROM sh
-       |), f(s, ln, i, u) AS (
-       |  SELECT s, ln, 0, CAST('14695981039346656037' AS HUGEINT) FROM strs
-       |  UNION ALL
-       |  SELECT s, ln, i + 1,
-       |    ((CASE WHEN xr < 0 THEN CAST(xr AS HUGEINT) + CAST('18446744073709551616' AS HUGEINT)
-       |           ELSE CAST(xr AS HUGEINT) END) * 1099511628211) % CAST('18446744073709551616' AS HUGEINT)
-       |  FROM (
-       |    SELECT s, ln, i,
-       |      xor(CAST(CASE WHEN u >= CAST('9223372036854775808' AS HUGEINT)
-       |               THEN u - CAST('18446744073709551616' AS HUGEINT) ELSE u END AS BIGINT),
-       |          unicode(substr(s, i + 1, 1))::BIGINT) AS xr
-       |    FROM f WHERE i < ln
-       |  )
+       |), $fnvCte
        |), hx AS (
        |  -- engine finalizer replay: h ^ (h >>> 32) == xor(signed(u), u // 2^32)
        |  SELECT s, CAST(((hf % 2147483647) + 2147483647) % 2147483647 AS BIGINT) AS x
@@ -6094,27 +6082,14 @@ object SparkEntry {
     * identical raster, identical zones — the SCAN STRATEGY must be
     * invisible to the result.
     */
-  private val qzDeflateGridSql: String =
-    """WITH cols AS (SELECT unnest(generate_series(0, 79)) AS c),
-      |rows_ AS (SELECT unnest(generate_series(0, 39)) AS r),
-      |cells AS (
-      |  SELECT c + 0.5 AS x, 40 - (r + 0.5) AS y,
-      |    CAST(CAST(CAST((c*11 + r*7) % 50 AS DOUBLE) / 10.0 AS REAL) AS DOUBLE) AS value
-      |  FROM cols, rows_),
-      |zones AS (
-      |  SELECT n_nationkey AS zone_id,
-      |    CAST(n_nationkey % 10 AS DOUBLE) AS rx1,
-      |    CAST((n_nationkey % 10) + 2 + (n_nationkey % 3) AS DOUBLE) AS rx2,
-      |    (n_nationkey % 11) - 0.2 AS ry1,
-      |    (n_nationkey % 11) + 1.2 + (n_nationkey % 2) AS ry2
-      |  FROM nation)
-      |SELECT zone_id, count(*) AS n_cells,
-      |  round(avg(value), 4) AS mean_value,
-      |  min(value) AS min_value, max(value) AS max_value,
-      |  round(count(*) * 100.0 / (SELECT count(*) FROM cells), 4) AS percent
-      |FROM cells JOIN zones
-      |  ON x > rx1 AND x < rx2 AND y > ry1 AND y < ry2
-      |GROUP BY zone_id""".stripMargin
+  private lazy val qzDeflateGridSql: String =
+    s"""WITH cols AS (SELECT unnest(generate_series(0, 79)) AS c),
+       |rows_ AS (SELECT unnest(generate_series(0, 39)) AS r),
+       |cells AS (
+       |  SELECT c + 0.5 AS x, 40 - (r + 0.5) AS y,
+       |    CAST(CAST(CAST((c*11 + r*7) % 50 AS DOUBLE) / 10.0 AS REAL) AS DOUBLE) AS value
+       |  FROM cols, rows_),
+       |${zonalSql("cells")}""".stripMargin
 
   // Oracle SQL builders: each writes one CTE family that several gates'
   // oracles share. Every oracle still expands to one standalone string;
@@ -6734,6 +6709,128 @@ object SparkEntry {
        |dups AS (
        |  SELECT DISTINCT a_id FROM cosim
        |  WHERE (CASE WHEN sqrt(na) * sqrt(nb) = 0 THEN 0 ELSE dt / (sqrt(na) * sqrt(nb)) END) >= $minSim)""".stripMargin
+
+  /** 30-minute session windows per user over the events (qe3, and its
+    * streaming twin qe6): a gap of >= 1800 s opens a session.
+    */
+  private lazy val sessionWindowSql: String =
+    """WITH e AS (
+      |  SELECT user_id, event_id, epoch_us(ts) AS tus FROM events),
+      |f AS (
+      |  SELECT *, CASE WHEN prev IS NULL OR tus - prev >= 1800000000
+      |                 THEN 1 ELSE 0 END AS ns
+      |  FROM (SELECT *, lag(tus) OVER (
+      |          PARTITION BY user_id ORDER BY tus, event_id) AS prev
+      |        FROM e)),
+      |s AS (
+      |  SELECT *, sum(ns) OVER (
+      |      PARTITION BY user_id ORDER BY tus, event_id
+      |      ROWS UNBOUNDED PRECEDING) AS sid
+      |  FROM f)
+      |SELECT CAST(min(tus) // 1000000 AS BIGINT) AS session_start,
+      |  user_id, count(*) AS n_events
+      |FROM s GROUP BY user_id, sid""".stripMargin
+
+  /** Each click joined to the same user's purchases within the next
+    * 600 s (qe7, qe18).
+    */
+  private lazy val clickPurchaseJoinSql: String =
+    """WITH e AS (
+      |  SELECT event_id, user_id, event_type, value, epoch_us(ts) AS us
+      |  FROM events),
+      |c AS (SELECT event_id AS click_id, user_id, us AS cus FROM e
+      |      WHERE event_type = 'click'),
+      |p AS (SELECT event_id AS purchase_id, user_id, us AS pus, value
+      |      FROM e WHERE event_type = 'purchase')
+      |SELECT c.click_id, c.user_id, p.purchase_id, round(p.value, 2) AS value
+      |FROM c JOIN p USING (user_id)
+      |WHERE p.pus >= c.cus AND p.pus <= c.cus + 600 * 1000000""".stripMargin
+
+  /** Zonal statistics of `cells(x, y, value)` per nation zone box (qz1,
+    * qz2, qz3, qz4): count, mean, min, max, and the share of all rows of
+    * `total` the zone covers.
+    */
+  private def zonalSql(total: String): String =
+    s"""zones AS (
+       |  SELECT n_nationkey AS zone_id,
+       |    CAST(n_nationkey % 10 AS DOUBLE) AS rx1,
+       |    CAST((n_nationkey % 10) + 2 + (n_nationkey % 3) AS DOUBLE) AS rx2,
+       |    (n_nationkey % 11) - 0.2 AS ry1,
+       |    (n_nationkey % 11) + 1.2 + (n_nationkey % 2) AS ry2
+       |  FROM nation)
+       |SELECT zone_id, count(*) AS n_cells,
+       |  round(avg(value), 4) AS mean_value,
+       |  min(value) AS min_value, max(value) AS max_value,
+       |  round(count(*) * 100.0 / (SELECT count(*) FROM $total), 4) AS percent
+       |FROM cells JOIN zones
+       |  ON x > rx1 AND x < rx2 AND y > ry1 AND y < ry2
+       |GROUP BY zone_id""".stripMargin
+
+  /** BM25 (k1 = 1.2, b = 0.75) of the four query terms per document,
+    * summed and replayed through DECIMAL(28,12) to 6 dp as
+    * `summed(doc_id, score)` (qt15, qt33); the caller closes `summed`.
+    */
+  private lazy val bm25Ctes: String =
+    """tok AS (
+      |  SELECT doc_id, term FROM (
+      |    SELECT doc_id,
+      |      unnest(string_split_regex(lower(trim(text)), '\s+')) AS term
+      |    FROM documents)
+      |  WHERE length(term) > 0
+      |), tf AS (
+      |  SELECT doc_id, term, count(*)::DOUBLE AS tf FROM tok GROUP BY doc_id, term
+      |), dlen AS (
+      |  SELECT doc_id, sum(tf) AS len FROM tf GROUP BY doc_id
+      |), n AS (SELECT count(*)::DOUBLE AS nn FROM documents),
+      |tot AS (SELECT count(*)::DOUBLE AS tot FROM tok),
+      |qt AS (
+      |  SELECT tf.doc_id, tf.term, tf.tf, dlen.len,
+      |    CAST(count(*) OVER (PARTITION BY tf.term) AS DOUBLE) AS df
+      |  FROM tf JOIN dlen USING (doc_id)
+      |  WHERE tf.term IN ('spark', 'query', 'join', 'window')
+      |), scored AS (
+      |  SELECT doc_id,
+      |    ln(1 + (n.nn - df + 0.5) / (df + 0.5)) * (tf * 2.2) /
+      |      (tf + 1.2 * (1 - 0.75 + 0.75 * len / (tot.tot / n.nn))) AS tscore
+      |  FROM qt CROSS JOIN n CROSS JOIN tot
+      |), summed AS (
+      |  SELECT doc_id,
+      |    CAST(round(CAST(sum(tscore) AS DECIMAL(28,12)), 6) AS DOUBLE) AS score
+      |  FROM scored GROUP BY doc_id""".stripMargin
+
+  /** `s(vec_id, dot, na, nb)`: every embedding's dot product with the
+    * literal query list `qv` and both squared norms, per term in double
+    * (qs1, qs9, qt33); the caller closes `s`.
+    */
+  private def queryCosineCte(qv: String): String =
+    s"""s AS (
+       |  SELECT vec_id,
+       |    sum(CAST(embedding[t.i] AS DOUBLE) * qv[t.i]) AS dot,
+       |    sum(CAST(embedding[t.i] AS DOUBLE) * CAST(embedding[t.i] AS DOUBLE)) AS na,
+       |    sum(qv[t.i] * qv[t.i]) AS nb
+       |  FROM (SELECT vec_id, embedding, $qv::DOUBLE[] AS qv FROM embeddings)
+       |  CROSS JOIN generate_series(1, 64) AS t(i)
+       |  GROUP BY vec_id""".stripMargin
+
+  /** `f(s, ln, i, u)`: the engine's 64-bit FNV-1a of each `strs(s, ln)`
+    * string, one character per recursion step in HUGEINT wrap
+    * arithmetic; `u` at i = ln is the unsigned hash (the MinHash family
+    * through `minhashOracleCtes`, and qd3).
+    */
+  private lazy val fnvCte: String =
+    """f(s, ln, i, u) AS (
+      |  SELECT s, ln, 0, CAST('14695981039346656037' AS HUGEINT) FROM strs
+      |  UNION ALL
+      |  SELECT s, ln, i + 1,
+      |    ((CASE WHEN xr < 0 THEN CAST(xr AS HUGEINT) + CAST('18446744073709551616' AS HUGEINT)
+      |           ELSE CAST(xr AS HUGEINT) END) * 1099511628211) % CAST('18446744073709551616' AS HUGEINT)
+      |  FROM (
+      |    SELECT s, ln, i,
+      |      xor(CAST(CASE WHEN u >= CAST('9223372036854775808' AS HUGEINT)
+      |               THEN u - CAST('18446744073709551616' AS HUGEINT) ELSE u END AS BIGINT),
+      |          unicode(substr(s, i + 1, 1))::BIGINT) AS xr
+      |    FROM f WHERE i < ln
+      |  )""".stripMargin
 
   def oracleSql: Map[String, String] = Map(
     "qz4_raster_parallel" -> qzDeflateGridSql,
@@ -7408,70 +7505,18 @@ object SparkEntry {
         |  ON l_extendedprice >= CAST(n_nationkey * 2000 AS DOUBLE)
         | AND l_extendedprice <= CAST(n_nationkey * 2000 + 1500 + (n_nationkey % 3) * 300 AS DOUBLE)
         |GROUP BY n_nationkey""".stripMargin,
-    "qe3_session_window" ->
-      """WITH e AS (
-        |  SELECT user_id, event_id, epoch_us(ts) AS tus FROM events),
-        |f AS (
-        |  SELECT *, CASE WHEN prev IS NULL OR tus - prev >= 1800000000
-        |                 THEN 1 ELSE 0 END AS ns
-        |  FROM (SELECT *, lag(tus) OVER (
-        |          PARTITION BY user_id ORDER BY tus, event_id) AS prev
-        |        FROM e)),
-        |s AS (
-        |  SELECT *, sum(ns) OVER (
-        |      PARTITION BY user_id ORDER BY tus, event_id
-        |      ROWS UNBOUNDED PRECEDING) AS sid
-        |  FROM f)
-        |SELECT CAST(min(tus) // 1000000 AS BIGINT) AS session_start,
-        |  user_id, count(*) AS n_events
-        |FROM s GROUP BY user_id, sid""".stripMargin,
+    "qe3_session_window" -> sessionWindowSql,
     // streaming twin of qe3: the session set a real watermarked
     // append-mode streaming query emits must equal the batch sessions
-    "qe6_stream_sessions" ->
-      """WITH e AS (
-        |  SELECT user_id, event_id, epoch_us(ts) AS tus FROM events),
-        |f AS (
-        |  SELECT *, CASE WHEN prev IS NULL OR tus - prev >= 1800000000
-        |                 THEN 1 ELSE 0 END AS ns
-        |  FROM (SELECT *, lag(tus) OVER (
-        |          PARTITION BY user_id ORDER BY tus, event_id) AS prev
-        |        FROM e)),
-        |s AS (
-        |  SELECT *, sum(ns) OVER (
-        |      PARTITION BY user_id ORDER BY tus, event_id
-        |      ROWS UNBOUNDED PRECEDING) AS sid
-        |  FROM f)
-        |SELECT CAST(min(tus) // 1000000 AS BIGINT) AS session_start,
-        |  user_id, count(*) AS n_events
-        |FROM s GROUP BY user_id, sid""".stripMargin,
+    "qe6_stream_sessions" -> sessionWindowSql,
     // streaming twin of qe4's join shape: the matched pairs a real
     // watermarked stream-stream interval join emits must equal the batch
     // interval join over the same events
-    "qe7_stream_join" ->
-      """WITH e AS (
-        |  SELECT event_id, user_id, event_type, value, epoch_us(ts) AS us
-        |  FROM events),
-        |c AS (SELECT event_id AS click_id, user_id, us AS cus FROM e
-        |      WHERE event_type = 'click'),
-        |p AS (SELECT event_id AS purchase_id, user_id, us AS pus, value
-        |      FROM e WHERE event_type = 'purchase')
-        |SELECT c.click_id, c.user_id, p.purchase_id, round(p.value, 2) AS value
-        |FROM c JOIN p USING (user_id)
-        |WHERE p.pus >= c.cus AND p.pus <= c.cus + 600 * 1000000""".stripMargin,
+    "qe7_stream_join" -> clickPurchaseJoinSql,
     // Chained dedup→join: the oracle is the plain batch join over the
     // ORIGINAL events — the injected duplicate slice must vanish in the
     // stream's dedup state or it joins into extra rows.
-    "qe18_stream_dedup_join" ->
-      """WITH e AS (
-        |  SELECT event_id, user_id, event_type, value, epoch_us(ts) AS us
-        |  FROM events),
-        |c AS (SELECT event_id AS click_id, user_id, us AS cus FROM e
-        |      WHERE event_type = 'click'),
-        |p AS (SELECT event_id AS purchase_id, user_id, us AS pus, value
-        |      FROM e WHERE event_type = 'purchase')
-        |SELECT c.click_id, c.user_id, p.purchase_id, round(p.value, 2) AS value
-        |FROM c JOIN p USING (user_id)
-        |WHERE p.pus >= c.cus AND p.pus <= c.cus + 600 * 1000000""".stripMargin,
+    "qe18_stream_dedup_join" -> clickPurchaseJoinSql,
     // Stream-stream LEFT OUTER join: the oracle is the batch left join —
     // the streaming side must emit every match eagerly AND every
     // non-converting click exactly once after watermark eviction.
@@ -7911,48 +7956,22 @@ object SparkEntry {
     "qm5_png_pixels" ->
       pixelStatsSql("(t.i * 7919 + d.doc_id) % 256"),
     "qz1_zonal" ->
-      """WITH cells AS (
-        |  SELECT (p_partkey % 17) + 0.5 AS x, (p_partkey % 11) + 0.5 AS y,
-        |    p_retailprice AS value
-        |  FROM part),
-        |zones AS (
-        |  SELECT n_nationkey AS zone_id,
-        |    CAST(n_nationkey % 10 AS DOUBLE) AS rx1,
-        |    CAST((n_nationkey % 10) + 2 + (n_nationkey % 3) AS DOUBLE) AS rx2,
-        |    (n_nationkey % 11) - 0.2 AS ry1,
-        |    (n_nationkey % 11) + 1.2 + (n_nationkey % 2) AS ry2
-        |  FROM nation)
-        |SELECT zone_id, count(*) AS n_cells,
-        |  round(avg(value), 4) AS mean_value,
-        |  min(value) AS min_value, max(value) AS max_value,
-        |  round(count(*) * 100.0 / (SELECT count(*) FROM part), 4) AS percent
-        |FROM cells JOIN zones
-        |  ON x > rx1 AND x < rx2 AND y > ry1 AND y < ry2
-        |GROUP BY zone_id""".stripMargin,
+      s"""WITH cells AS (
+         |  SELECT (p_partkey % 17) + 0.5 AS x, (p_partkey % 11) + 0.5 AS y,
+         |    p_retailprice AS value
+         |  FROM part),
+         |${zonalSql("part")}""".stripMargin,
     // regenerates the engine's deterministic raster grid in SQL; value
     // passes through REAL so the float32 quantization of the GeoTIFF
     // payload is replayed bit-exactly
     "qz2_raster_zonal" ->
-      """WITH cols AS (SELECT unnest(generate_series(0, 63)) AS c),
-        |rows_ AS (SELECT unnest(generate_series(0, 47)) AS r),
-        |cells AS (
-        |  SELECT c + 0.5 AS x, 48 - (r + 0.5) AS y,
-        |    CAST(CAST(CAST((c*7 + r*13) % 40 AS DOUBLE) / 10.0 AS REAL) AS DOUBLE) AS value
-        |  FROM cols, rows_),
-        |zones AS (
-        |  SELECT n_nationkey AS zone_id,
-        |    CAST(n_nationkey % 10 AS DOUBLE) AS rx1,
-        |    CAST((n_nationkey % 10) + 2 + (n_nationkey % 3) AS DOUBLE) AS rx2,
-        |    (n_nationkey % 11) - 0.2 AS ry1,
-        |    (n_nationkey % 11) + 1.2 + (n_nationkey % 2) AS ry2
-        |  FROM nation)
-        |SELECT zone_id, count(*) AS n_cells,
-        |  round(avg(value), 4) AS mean_value,
-        |  min(value) AS min_value, max(value) AS max_value,
-        |  round(count(*) * 100.0 / (SELECT count(*) FROM cells), 4) AS percent
-        |FROM cells JOIN zones
-        |  ON x > rx1 AND x < rx2 AND y > ry1 AND y < ry2
-        |GROUP BY zone_id""".stripMargin,
+      s"""WITH cols AS (SELECT unnest(generate_series(0, 63)) AS c),
+         |rows_ AS (SELECT unnest(generate_series(0, 47)) AS r),
+         |cells AS (
+         |  SELECT c + 0.5 AS x, 48 - (r + 0.5) AS y,
+         |    CAST(CAST(CAST((c*7 + r*13) % 40 AS DOUBLE) / 10.0 AS REAL) AS DOUBLE) AS value
+         |  FROM cols, rows_),
+         |${zonalSql("cells")}""".stripMargin,
     // identical contract to qz2 (value through REAL), different grid +
     // value formula; compression must be invisible to the result
     "qz3_raster_deflate" -> qzDeflateGridSql,
@@ -8046,14 +8065,7 @@ object SparkEntry {
       val qv = Array.tabulate(64)(i => math.sin(i + 1.0)) // same probe as qs1
         .map(_.toString)
         .mkString("[", ", ", "]")
-      s"""WITH s AS (
-         |  SELECT vec_id,
-         |    sum(CAST(embedding[t.i] AS DOUBLE) * qv[t.i]) AS dot,
-         |    sum(CAST(embedding[t.i] AS DOUBLE) * CAST(embedding[t.i] AS DOUBLE)) AS na,
-         |    sum(qv[t.i] * qv[t.i]) AS nb
-         |  FROM (SELECT vec_id, embedding, $qv::DOUBLE[] AS qv FROM embeddings)
-         |  CROSS JOIN generate_series(1, 64) AS t(i)
-         |  GROUP BY vec_id)
+      s"""WITH ${queryCosineCte(qv)})
          |SELECT vec_id,
          |  round(CASE WHEN sqrt(na) * sqrt(nb) = 0 THEN 0
          |             ELSE dot / (sqrt(na) * sqrt(nb)) END, 6) AS sim
@@ -8121,44 +8133,12 @@ object SparkEntry {
       val qv = Array.tabulate(64)(i => math.sin(i * 0.45 + 1.5)) // same probe as qt33
         .map(_.toString)
         .mkString("[", ", ", "]")
-      s"""WITH tok AS (
-         |  SELECT doc_id, term FROM (
-         |    SELECT doc_id,
-         |      unnest(string_split_regex(lower(trim(text)), '\\s+')) AS term
-         |    FROM documents)
-         |  WHERE length(term) > 0
-         |), tf AS (
-         |  SELECT doc_id, term, count(*)::DOUBLE AS tf FROM tok GROUP BY doc_id, term
-         |), dlen AS (
-         |  SELECT doc_id, sum(tf) AS len FROM tf GROUP BY doc_id
-         |), n AS (SELECT count(*)::DOUBLE AS nn FROM documents),
-         |tot AS (SELECT count(*)::DOUBLE AS tot FROM tok),
-         |qt AS (
-         |  SELECT tf.doc_id, tf.term, tf.tf, dlen.len,
-         |    CAST(count(*) OVER (PARTITION BY tf.term) AS DOUBLE) AS df
-         |  FROM tf JOIN dlen USING (doc_id)
-         |  WHERE tf.term IN ('spark', 'query', 'join', 'window')
-         |), scored AS (
-         |  SELECT doc_id,
-         |    ln(1 + (n.nn - df + 0.5) / (df + 0.5)) * (tf * 2.2) /
-         |      (tf + 1.2 * (1 - 0.75 + 0.75 * len / (tot.tot / n.nn))) AS tscore
-         |  FROM qt CROSS JOIN n CROSS JOIN tot
-         |), summed AS (
-         |  SELECT doc_id,
-         |    CAST(round(CAST(sum(tscore) AS DECIMAL(28,12)), 6) AS DOUBLE) AS score
-         |  FROM scored GROUP BY doc_id
+      s"""WITH $bm25Ctes
          |), bmr AS (
          |  SELECT doc_id, row_number() OVER (ORDER BY score DESC, doc_id) AS rb
          |  FROM summed
          |  QUALIFY row_number() OVER (ORDER BY score DESC, doc_id) <= 30
-         |), s AS (
-         |  SELECT vec_id,
-         |    sum(CAST(embedding[t.i] AS DOUBLE) * qv[t.i]) AS dot,
-         |    sum(CAST(embedding[t.i] AS DOUBLE) * CAST(embedding[t.i] AS DOUBLE)) AS na,
-         |    sum(qv[t.i] * qv[t.i]) AS nb
-         |  FROM (SELECT vec_id, embedding, $qv::DOUBLE[] AS qv FROM embeddings)
-         |  CROSS JOIN generate_series(1, 64) AS t(i)
-         |  GROUP BY vec_id
+         |), ${queryCosineCte(qv)}
          |), sims AS (
          |  SELECT vec_id,
          |    round(CASE WHEN sqrt(na) * sqrt(nb) = 0 THEN 0
@@ -8183,14 +8163,7 @@ object SparkEntry {
       val qv = Array.tabulate(64)(i => math.sin(i * 1.3 + 0.25)) // same probe as qs9
         .map(_.toString)
         .mkString("[", ", ", "]")
-      s"""WITH s AS (
-         |  SELECT vec_id,
-         |    sum(CAST(embedding[t.i] AS DOUBLE) * qv[t.i]) AS dot,
-         |    sum(CAST(embedding[t.i] AS DOUBLE) * CAST(embedding[t.i] AS DOUBLE)) AS na,
-         |    sum(qv[t.i] * qv[t.i]) AS nb
-         |  FROM (SELECT vec_id, embedding, $qv::DOUBLE[] AS qv FROM embeddings)
-         |  CROSS JOIN generate_series(1, 64) AS t(i)
-         |  GROUP BY vec_id)
+      s"""WITH ${queryCosineCte(qv)})
          |SELECT vec_id,
          |  round(CASE WHEN sqrt(na) * sqrt(nb) = 0 THEN 0
          |             ELSE dot / (sqrt(na) * sqrt(nb)) END, 6) AS sim
@@ -11972,19 +11945,7 @@ object SparkEntry {
          |  SELECT doc_id, tok, count(*) AS cnt FROM toksm GROUP BY doc_id, tok
          |), strs(s, ln) AS (
          |  SELECT DISTINCT tok, length(tok) FROM tc
-         |), f(s, ln, i, u) AS (
-         |  SELECT s, ln, 0, CAST('14695981039346656037' AS HUGEINT) FROM strs
-         |  UNION ALL
-         |  SELECT s, ln, i + 1,
-         |    ((CASE WHEN xr < 0 THEN CAST(xr AS HUGEINT) + CAST('18446744073709551616' AS HUGEINT)
-         |           ELSE CAST(xr AS HUGEINT) END) * 1099511628211) % CAST('18446744073709551616' AS HUGEINT)
-         |  FROM (
-         |    SELECT s, ln, i,
-         |      xor(CAST(CASE WHEN u >= CAST('9223372036854775808' AS HUGEINT)
-         |               THEN u - CAST('18446744073709551616' AS HUGEINT) ELSE u END AS BIGINT),
-         |          unicode(substr(s, i + 1, 1))::BIGINT) AS xr
-         |    FROM f WHERE i < ln
-         |  )
+         |), $fnvCte
          |), th AS MATERIALIZED (
          |  -- engine finalizer replay: h ^ (h >>> 32), re-expressed unsigned
          |  SELECT s, CASE WHEN hf < 0 THEN CAST(hf AS HUGEINT) + CAST('18446744073709551616' AS HUGEINT)
@@ -13295,34 +13256,9 @@ object SparkEntry {
     // ~1e-15 relative here, and the DECIMAL(28,12) two-step replays
     // Spark's shortest-repr round at 6 dp (the established contract)
     "qt15_bm25" ->
-      """WITH tok AS (
-        |  SELECT doc_id, term FROM (
-        |    SELECT doc_id,
-        |      unnest(string_split_regex(lower(trim(text)), '\s+')) AS term
-        |    FROM documents)
-        |  WHERE length(term) > 0
-        |), tf AS (
-        |  SELECT doc_id, term, count(*)::DOUBLE AS tf FROM tok GROUP BY doc_id, term
-        |), dlen AS (
-        |  SELECT doc_id, sum(tf) AS len FROM tf GROUP BY doc_id
-        |), n AS (SELECT count(*)::DOUBLE AS nn FROM documents),
-        |tot AS (SELECT count(*)::DOUBLE AS tot FROM tok),
-        |qt AS (
-        |  SELECT tf.doc_id, tf.term, tf.tf, dlen.len,
-        |    CAST(count(*) OVER (PARTITION BY tf.term) AS DOUBLE) AS df
-        |  FROM tf JOIN dlen USING (doc_id)
-        |  WHERE tf.term IN ('spark', 'query', 'join', 'window')
-        |), scored AS (
-        |  SELECT doc_id,
-        |    ln(1 + (n.nn - df + 0.5) / (df + 0.5)) * (tf * 2.2) /
-        |      (tf + 1.2 * (1 - 0.75 + 0.75 * len / (tot.tot / n.nn))) AS tscore
-        |  FROM qt CROSS JOIN n CROSS JOIN tot
-        |), summed AS (
-        |  SELECT doc_id,
-        |    CAST(round(CAST(sum(tscore) AS DECIMAL(28,12)), 6) AS DOUBLE) AS score
-        |  FROM scored GROUP BY doc_id)
-        |SELECT doc_id, score FROM summed
-        |QUALIFY row_number() OVER (ORDER BY score DESC, doc_id) <= 20""".stripMargin,
+      s"""WITH $bm25Ctes)
+         |SELECT doc_id, score FROM summed
+         |QUALIFY row_number() OVER (ORDER BY score DESC, doc_id) <= 20""".stripMargin,
     "qd10_dup_report" ->
       """SELECT source, count(*) AS n_docs,
         |  count(DISTINCT regexp_replace(lower(trim(text)), '\s+', ' ', 'g')) AS n_distinct,

@@ -7,13 +7,15 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.OutputMode
 
-/** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
+/** The gate registry and its oracles (SURVEY.md §7 states the contract).
   *
   * Each entry in `queries` demonstrates one operator family from
-  * SURVEY.md §2 on the harness testdata; `oracleSql` carries the DuckDB
-  * equivalent (same column names — the driver hash-compares after sorting
-  * columns by name). Non-SQL-expressible ops (LSH dedup, routing, …) have
-  * no oracle → rows-only check.
+  * SURVEY.md §2 on the harness testdata, and `oracleSql` holds its DuckDB
+  * equivalent with the same column names: every gate's rows are
+  * hash-compared after sorting columns by name. Every gate has an oracle,
+  * the LSH, routing and graph gates included (their oracles replay the
+  * seeded planes, the recursive shortest paths and the fixpoints in SQL);
+  * RegistrySpec fails on a gate without one or an oracle without a gate.
   *
   * Float policy: every aggregated double is `round(x, N)` in BOTH Spark and
   * SQL so partial-aggregation order differences (Spark) vs sequential sums

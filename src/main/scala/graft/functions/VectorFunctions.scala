@@ -29,13 +29,18 @@ object VectorFunctions {
     */
   def hyperplaneSignature(v: Column, dim: Int, bits: Int, seed: Long = 42L): Column = {
     require(bits <= 63, "signature packs into a Long")
-    val rnd = new scala.util.Random(seed)
-    // gaussian hyperplanes, one per bit
-    val planes: Seq[Array[Double]] = Seq.fill(bits)(Array.fill(dim)(rnd.nextGaussian()))
-    val bitCols = planes.zipWithIndex.map { case (plane, i) =>
-      val planeCol = array(plane.map(lit): _*)
+    val bitCols = hyperplanes(dim, bits, seed).zipWithIndex.map { case (plane, i) =>
+      val planeCol = array(plane.toIndexedSeq.map(lit): _*)
       when(dot(v, planeCol) >= 0.0, shiftleft(lit(1L), i)).otherwise(lit(0L))
     }
     bitCols.reduce(_.bitwiseOR(_))
+  }
+
+  /** The `bits` gaussian hyperplanes (`dim` doubles each) of `seed`: the
+    * one source of the planes behind every signature and probe set.
+    */
+  private[graft] def hyperplanes(dim: Int, bits: Int, seed: Long): Seq[Array[Double]] = {
+    val rnd = new scala.util.Random(seed)
+    Seq.fill(bits)(Array.fill(dim)(rnd.nextGaussian()))
   }
 }

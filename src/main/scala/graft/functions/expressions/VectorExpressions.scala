@@ -1,158 +1,124 @@
 package graft.functions.expressions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.graft.ColumnBridge
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType}
 
-/** Native Catalyst expression for cosine similarity over dense embedding
-  * arrays (`array<float>` or `array<double>`, mixed sides allowed).
+/** The shared half of the fused embedding kernels ([[CosineSimilarity]],
+  * [[DotProduct]]): both operands `array<float>` or `array<double>`
+  * (mixed sides allowed), a double result, elements widened to double.
   *
   * Why an Expression and not `zip_with`/`aggregate` column math: Spark's
   * array higher-order functions are `CodegenFallback` — every element hop
-  * is an interpreted expression-tree walk. This node emits a tight fused
-  * JVM loop via `doGenCode` (one pass computes dot, |a|², |b|²), keeping
-  * the ANN scan inside whole-stage codegen. Preference order per
-  * SURVEY §7.3: compose built-ins (done where cheap) → custom Expression
-  * (this) → custom physical operator (not needed here).
+  * is an interpreted expression-tree walk. Each kernel emits one fused JVM
+  * loop via `doGenCode`, keeping the ANN scan inside whole-stage codegen.
   *
   * Null semantics: null array → null result (BinaryExpression default);
   * elements are assumed non-null (embedding contract). Unequal lengths
-  * compare the common prefix. All-zero vector → 0.0.
+  * use the common prefix.
   */
-case class CosineSimilarity(left: Expression, right: Expression) extends BinaryExpression {
+private[expressions] trait VectorPairKernel extends BinaryExpression {
+  protected def kernelName: String
 
   override def dataType: DataType = DoubleType
 
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult = {
-    def ok(t: DataType) = t match {
-      case ArrayType(FloatType | DoubleType, _) => true
-      case _ => false
-    }
-    if (ok(left.dataType) && ok(right.dataType))
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
+  override def checkInputDataTypes(): TypeCheckResult =
+    if (VectorExpressions.isVector(left.dataType) && VectorExpressions.isVector(right.dataType))
+      TypeCheckResult.TypeCheckSuccess
     else
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-        s"cosine_similarity expects array<float|double>, got ${left.dataType} / ${right.dataType}")
-  }
+      TypeCheckResult.TypeCheckFailure(
+        s"$kernelName expects array<float|double>, got ${left.dataType} / ${right.dataType}")
 
-  private def isFloat(e: Expression): Boolean = e.dataType match {
-    case ArrayType(FloatType, _) => true
-    case _ => false
-  }
-
-  override protected def nullSafeEval(a: Any, b: Any): Any = {
+  /** The interpreted loop: `step(xᵢ, yᵢ)` over the common prefix, in order. */
+  protected final def foreachPair(a: Any, b: Any)(step: (Double, Double) => Unit): Unit = {
     val x = a.asInstanceOf[ArrayData]
     val y = b.asInstanceOf[ArrayData]
+    val lf = VectorExpressions.isFloat(left.dataType)
+    val rf = VectorExpressions.isFloat(right.dataType)
     val n = math.min(x.numElements(), y.numElements())
-    val lf = isFloat(left)
-    val rf = isFloat(right)
+    var i = 0
+    while (i < n) {
+      step(VectorExpressions.elem(x, lf, i), VectorExpressions.elem(y, rf, i))
+      i += 1
+    }
+  }
+
+  /** The generated loop: `accs` double accumulators start at 0.0, `step`
+    * runs per element of the common prefix on the widened operands
+    * (`xi`, `yi`), then `finish` assigns the result to `ev.value`.
+    */
+  protected final def genLoop(ctx: CodegenContext, ev: ExprCode, accs: Int)(
+      step: (Seq[String], String, String) => String)(
+      finish: Seq[String] => String): ExprCode = {
+    val lGet = VectorExpressions.getter(left.dataType)
+    val rGet = VectorExpressions.getter(right.dataType)
+    nullSafeCodeGen(ctx, ev, (a, b) => {
+      val Seq(n, i, xi, yi) = Seq("n", "i", "xi", "yi").map(ctx.freshName)
+      val acc = Seq.fill(accs)(ctx.freshName("acc"))
+      s"""
+         |int $n = java.lang.Math.min($a.numElements(), $b.numElements());
+         |${acc.map(v => s"double $v = 0.0;").mkString(" ")}
+         |for (int $i = 0; $i < $n; $i++) {
+         |  double $xi = (double) $a.$lGet($i);
+         |  double $yi = (double) $b.$rGet($i);
+         |  ${step(acc, xi, yi)}
+         |}
+         |${finish(acc)}
+       """.stripMargin
+    })
+  }
+}
+
+/** Cosine similarity in [-1, 1], one pass computing dot, |a|² and |b|²;
+  * an all-zero vector gives 0.0.
+  */
+case class CosineSimilarity(left: Expression, right: Expression) extends VectorPairKernel {
+  override protected def kernelName: String = "cosine_similarity"
+
+  override protected def nullSafeEval(a: Any, b: Any): Any = {
     var dot = 0.0
     var nx = 0.0
     var ny = 0.0
-    var i = 0
-    while (i < n) {
-      val xi = if (lf) x.getFloat(i).toDouble else x.getDouble(i)
-      val yi = if (rf) y.getFloat(i).toDouble else y.getDouble(i)
+    foreachPair(a, b) { (xi, yi) =>
       dot += xi * yi
       nx += xi * xi
       ny += yi * yi
-      i += 1
     }
     val denom = math.sqrt(nx) * math.sqrt(ny)
     if (denom == 0.0) 0.0 else dot / denom
   }
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val lGet = if (isFloat(left)) "getFloat" else "getDouble"
-    val rGet = if (isFloat(right)) "getFloat" else "getDouble"
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val n = ctx.freshName("n")
-      val i = ctx.freshName("i")
-      val dot = ctx.freshName("dot")
-      val nx = ctx.freshName("nx")
-      val ny = ctx.freshName("ny")
-      val xi = ctx.freshName("xi")
-      val yi = ctx.freshName("yi")
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    genLoop(ctx, ev, 3) { case (Seq(dot, nx, ny), xi, yi) =>
+      s"$dot += $xi * $yi; $nx += $xi * $xi; $ny += $yi * $yi;"
+    } { case Seq(dot, nx, ny) =>
       val denom = ctx.freshName("denom")
-      s"""
-         |int $n = java.lang.Math.min($a.numElements(), $b.numElements());
-         |double $dot = 0.0, $nx = 0.0, $ny = 0.0;
-         |for (int $i = 0; $i < $n; $i++) {
-         |  double $xi = (double) $a.$lGet($i);
-         |  double $yi = (double) $b.$rGet($i);
-         |  $dot += $xi * $yi;
-         |  $nx += $xi * $xi;
-         |  $ny += $yi * $yi;
-         |}
-         |double $denom = java.lang.Math.sqrt($nx) * java.lang.Math.sqrt($ny);
-         |${ev.value} = ($denom == 0.0) ? 0.0 : $dot / $denom;
-       """.stripMargin
-    })
-  }
+      s"""double $denom = java.lang.Math.sqrt($nx) * java.lang.Math.sqrt($ny);
+         |${ev.value} = ($denom == 0.0) ? 0.0 : $dot / $denom;""".stripMargin
+    }
 
   override protected def withNewChildrenInternal(newLeft: Expression, newRight: Expression): Expression =
     copy(left = newLeft, right = newRight)
 }
 
-/** Fused dot product — same rationale and contracts as [[CosineSimilarity]]. */
-case class DotProduct(left: Expression, right: Expression) extends BinaryExpression {
-
-  override def dataType: DataType = DoubleType
-
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult = {
-    def ok(t: DataType) = t match {
-      case ArrayType(FloatType | DoubleType, _) => true
-      case _ => false
-    }
-    if (ok(left.dataType) && ok(right.dataType))
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-        s"dot_product expects array<float|double>, got ${left.dataType} / ${right.dataType}")
-  }
-
-  private def isFloat(e: Expression): Boolean = e.dataType match {
-    case ArrayType(FloatType, _) => true
-    case _ => false
-  }
+/** Fused dot product Σ aᵢ·bᵢ. */
+case class DotProduct(left: Expression, right: Expression) extends VectorPairKernel {
+  override protected def kernelName: String = "dot_product"
 
   override protected def nullSafeEval(a: Any, b: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]
-    val y = b.asInstanceOf[ArrayData]
-    val n = math.min(x.numElements(), y.numElements())
-    val lf = isFloat(left)
-    val rf = isFloat(right)
     var dot = 0.0
-    var i = 0
-    while (i < n) {
-      dot += (if (lf) x.getFloat(i).toDouble else x.getDouble(i)) *
-        (if (rf) y.getFloat(i).toDouble else y.getDouble(i))
-      i += 1
-    }
+    foreachPair(a, b)((xi, yi) => dot += xi * yi)
     dot
   }
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val lGet = if (isFloat(left)) "getFloat" else "getDouble"
-    val rGet = if (isFloat(right)) "getFloat" else "getDouble"
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val n = ctx.freshName("n")
-      val i = ctx.freshName("i")
-      val dot = ctx.freshName("dot")
-      s"""
-         |int $n = java.lang.Math.min($a.numElements(), $b.numElements());
-         |double $dot = 0.0;
-         |for (int $i = 0; $i < $n; $i++) {
-         |  $dot += ((double) $a.$lGet($i)) * ((double) $b.$rGet($i));
-         |}
-         |${ev.value} = $dot;
-       """.stripMargin
-    })
-  }
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    genLoop(ctx, ev, 1) { case (Seq(dot), xi, yi) => s"$dot += $xi * $yi;" } {
+      case Seq(dot) => s"${ev.value} = $dot;"
+    }
 
   override protected def withNewChildrenInternal(newLeft: Expression, newRight: Expression): Expression =
     copy(left = newLeft, right = newRight)
@@ -182,23 +148,15 @@ case class NearestCells(child: Expression, seeds: Array[Array[Double]], p: Int)
 
   override def dataType: DataType = ArrayType(org.apache.spark.sql.types.IntegerType, containsNull = false)
 
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case ArrayType(FloatType | DoubleType, _) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case t =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"nearest_cells expects array<float|double>, got $t")
-    }
-
-  private def isFloat: Boolean = child.dataType match {
-    case ArrayType(FloatType, _) => true
-    case _ => false
-  }
+  override def checkInputDataTypes(): TypeCheckResult =
+    if (VectorExpressions.isVector(child.dataType)) TypeCheckResult.TypeCheckSuccess
+    else TypeCheckResult.TypeCheckFailure(
+      s"nearest_cells expects array<float|double>, got ${child.dataType}")
 
   override protected def nullSafeEval(input: Any): Any = {
     val v = input.asInstanceOf[ArrayData]
-    val f = isFloat // hoisted: the dataType pattern match must not run per element
+    val f = VectorExpressions.isFloat(child.dataType) // once, not per element
+    val x: Int => Double = j => VectorExpressions.elem(v, f, j)
     // null-element pre-scan: ONE pass per vector, not per (vector, seed)
     var g = 0
     val nv = v.numElements()
@@ -212,17 +170,8 @@ case class NearestCells(child: Expression, seeds: Array[Array[Double]], p: Int)
     val bestI = Array.fill(p)(-1)
     var c = 0
     while (c < seeds.length) {
-      val cent = seeds(c)
-      val n = math.min(cent.length, v.numElements())
-      var d = 0.0
-      var j = 0
-      while (j < n) {
-        val xj = if (f) v.getFloat(j).toDouble else v.getDouble(j)
-        val diff = xj - cent(j)
-        d += diff * diff
-        j += 1
-      }
-      val rd = math.floor(d * 1e6 + 0.5) / 1e6
+      val rd = VectorExpressions.round6(
+        VectorExpressions.sqL2(x, 0, seeds(c), math.min(seeds(c).length, v.numElements())))
       // strict < at each slot keeps the earlier (lower) index on ties
       var k = 0
       while (k < p && !(rd < bestD(k))) k += 1
@@ -240,7 +189,7 @@ case class NearestCells(child: Expression, seeds: Array[Array[Double]], p: Int)
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
     val cbRef = ctx.addReferenceObj("seeds", seeds, "double[][]")
-    val get = if (isFloat) "getFloat" else "getDouble"
+    val get = VectorExpressions.getter(child.dataType)
     nullSafeCodeGen(ctx, ev, v => {
       val bestD = ctx.freshName("bestD")
       val bestI = ctx.freshName("bestI")
@@ -301,6 +250,42 @@ case class NearestCells(child: Expression, seeds: Array[Array[Double]], p: Int)
 }
 
 object VectorExpressions {
+  private[expressions] def isVector(t: DataType): Boolean = t match {
+    case ArrayType(FloatType | DoubleType, _) => true
+    case _ => false
+  }
+
+  private[expressions] def isFloat(t: DataType): Boolean = t match {
+    case ArrayType(FloatType, _) => true
+    case _ => false
+  }
+
+  /** The ArrayData getter generated code calls for an operand of type `t`. */
+  private[expressions] def getter(t: DataType): String =
+    if (isFloat(t)) "getFloat" else "getDouble"
+
+  /** Element `i` as a double: float elements widen exactly. */
+  private[expressions] def elem(a: ArrayData, float: Boolean, i: Int): Double =
+    if (float) a.getFloat(i).toDouble else a.getDouble(i)
+
+  /** Σ (x(off + j) − c(j))² for j < n, folded in element order: the one
+    * squared-L2 loop behind the driver-side argmins, the k-means and PQ
+    * UDFs and [[NearestCells]]' interpreted path.
+    */
+  private[graft] def sqL2(x: Int => Double, off: Int, c: Array[Double], n: Int): Double = {
+    var d = 0.0
+    var j = 0
+    while (j < n) {
+      val diff = x(off + j) - c(j)
+      d += diff * diff
+      j += 1
+    }
+    d
+  }
+
+  /** ⌊x·10⁶ + ½⌋ / 10⁶: the 6-dp round every L2² argmin ranks on. */
+  private[graft] def round6(x: Double): Double = math.floor(x * 1e6 + 0.5) / 1e6
+
   /** Column-facing constructors. */
   def cosineSimilarity(a: Column, b: Column): Column =
     ColumnBridge.column(CosineSimilarity(ColumnBridge.expression(a), ColumnBridge.expression(b)))

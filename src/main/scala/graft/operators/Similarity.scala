@@ -1,55 +1,83 @@
 package graft.operators
 
 import graft.functions.VectorFunctions
+import graft.functions.expressions.VectorExpressions.{round6, sqL2}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-/** Similarity search over an embedding column (`array<float>`).
+/** Similarity search over an embedding column (`array<float>` or
+  * `array<double>`). Every search is the same three steps:
   *
-  *  - `bruteForceTopK`: exact cosine top-k against a literal query vector.
-  *    One scan + one tree-aggregated top-k (no full sort: `sort_array` never
-  *    appears; Spark's TakeOrderedAndProject handles the global k). This is
-  *    the correctness baseline.
-  *  - `knnJoin`: exact k-NN for EVERY row of a (small, broadcastable) query
-  *    set against the corpus — broadcast-nested-loop + a BOUNDED per-query
-  *    top-k Aggregator with map-side partials. At 100 TB the corpus side
-  *    streams; only queries broadcast and only k rows per (query,
-  *    partition) ever reach the shuffle.
-  *  - `ivfTopK`: IVF-style scale path — corpus pre-clustered by nearest of
-  *    `nCentroids` seeded pseudo-centroids (deterministic hyperplane-LSH
-  *    cells); the query probes only its own cell ± nProbe neighbors,
-  *    cutting the scan by the cell fan-out. Recall < 1.0 by construction;
-  *    pair with bruteForceTopK when exactness matters. MEASURED operating
-  *    point (RecallSpec, seed-pinned clustered corpus): recall@10 ≥ 0.9
-  *    at bits=6/nProbe=2 scoring ~22/64 cells; nProbe=bits probes the
-  *    full ball and is exactly brute force. Recall is monotone in nProbe.
+  *  1. CANDIDATES — which corpus rows a query scores: the whole corpus
+  *     (`bruteForceTopK`, `bruteForceTopKDot`, `sqTopK`, `knnJoin`,
+  *     `hardNegatives`), a column prefix (`prefixRerankTopK`), the
+  *     hyperplane cells within hamming `nProbe` of the query's
+  *     (`ivfTopK`, `annRecall`), the margin-ranked probe cells
+  *     (`multiProbeTopK`, `annRecallMultiProbe`, `multiProbeKnnJoin`),
+  *     the shared seed cells (`mutualKnn`) or the coarse PQ cells
+  *     (`ivfPqTopK`).
+  *  2. SCORE — an exact score rounded to 6 dp before any cut, so the
+  *     ranking is FP-stable and replays in SQL: cosine or dot through the
+  *     codegen kernels, the int8 dot of `sqTopK`, or the PQ ADC lookup-sum.
+  *  3. BOUNDED TOP-K on (score desc, id asc): for one literal query,
+  *     `orderBy(...).limit(k)`, which plans as TakeOrderedAndProject;
+  *     for a query table, the [[TopKByScore]] aggregator per query, whose
+  *     map-side partials ship ≤ k rows per (query, partition) whatever
+  *     the candidate count.
+  *
+  * The rest builds on those tails: `annRecall*` intersect an approximate
+  * top-k with the exact one, `mutualKnn` transposes its edge list,
+  * `ndcgAtK` and `mmrRerank` re-rank a brute-force pool, and `kmeans`
+  * and the PQ codebooks are the cell quantizers.
   */
 object Similarity {
 
+  // ------------------------------------------------------ the shared tail
+
+  /** The exact score every cosine path ranks on. */
+  private def sim6(a: Column, b: Column): Column = round(VectorFunctions.cosine(a, b), 6)
+
+  private def literal(v: Array[Double]): Column = array(v.toIndexedSeq.map(lit): _*)
+
+  /** The global k-cut: TakeOrdered by (score desc, id asc), or ascending
+    * for a distance.
+    */
+  private def topK(scored: DataFrame, score: String, id: String, k: Int,
+      ascending: Boolean = false): DataFrame =
+    scored.orderBy(if (ascending) col(score) else desc(score), col(id)).limit(k)
+
+  /** Score every candidate into `name` and keep `(id, name)` for the top k. */
+  private def scoreTopK(cands: DataFrame, idCol: String, name: String, score: Column,
+      k: Int): DataFrame =
+    topK(cands.withColumn(name, score).select(col(idCol), col(name)), name, idCol, k)
+
+  /** The per-query k-cut: per `group` value the top k (score desc, id
+    * asc) through the bounded [[TopKByScore]] aggregator, as rows
+    * `(group, id, score, rank)` with the input's column names, `id` cast
+    * to long and `rank` from 1. `distinct` collapses a (score, id) pair a
+    * candidate generator emits twice.
+    */
+  private[operators] def topKPerGroup(scored: DataFrame, group: String, score: String,
+      id: String, k: Int, distinct: Boolean = false): DataFrame =
+    scored
+      .groupBy(col(group))
+      .agg(udaf(new TopKByScore(k, distinct)).apply(col(score), col(id).cast("long")).as("__topk"))
+      .select(col(group), posexplode(col("__topk")))
+      .select(col(group), col("col._2").as(id), col("col._1").as(score),
+        (col("pos") + 1).cast("long").as("rank"))
+
+  // ------------------------------------------------ one literal query
 
   /** Exact top-k by cosine against one literal query vector. */
-  def bruteForceTopK(embs: DataFrame, idCol: String, vecCol: String, query: Array[Double], k: Int): DataFrame = {
-    val q = array(query.map(lit): _*)
-    embs
-      .withColumn("sim", round(VectorFunctions.cosine(col(vecCol), q), 6))
-      .select(col(idCol), col("sim"))
-      .orderBy(desc("sim"), col(idCol))
-      .limit(k)
-  }
+  def bruteForceTopK(embs: DataFrame, idCol: String, vecCol: String, query: Array[Double], k: Int): DataFrame =
+    scoreTopK(embs, idCol, "sim", sim6(col(vecCol), literal(query)), k)
 
-  /** MATRYOSHKA two-stage search (Kusupati et al. 2022's MRL
-    * deployment pattern): rank by the cosine of the FIRST `dPrefix`
-    * dimensions, keep `candidates`, re-score those with the full
-    * vector, return the top `k`. MRL-trained embeddings concentrate
-    * coarse semantics in the prefix, so the cheap stage reads/multiplies
-    * dPrefix/d of the data and the exact stage touches only the
-    * candidate set — at 100 TB, store the prefix as its own parquet
-    * column and stage 1 becomes a column-pruned scan that never
-    * deserializes the full vectors (the readSchema win qs4's cell
-    * pruning gets from partitioning). Both cuts rank on 6-dp-rounded
-    * scores with id tie-breaks — engine-stable boundaries, the qs1
-    * discipline. Recall vs brute force is RecallSpec territory; the
-    * gate hash-compares the approximate answer exactly.
+  /** MATRYOSHKA two-stage search (Kusupati et al. 2022): rank by the
+    * cosine of the first `dPrefix` dimensions, keep `candidates`, re-score
+    * those with the full vector and return the top `k`. MRL-trained
+    * embeddings concentrate coarse semantics in the prefix, so the cheap
+    * stage reads dPrefix/d of the data; at scale the prefix is its own
+    * parquet column and stage 1 is a column-pruned scan.
     */
   def prefixRerankTopK(
       embs: DataFrame, idCol: String, vecCol: String, query: Array[Double],
@@ -57,66 +85,41 @@ object Similarity {
     require(dPrefix >= 1 && dPrefix <= query.length,
       s"dPrefix must be in [1, ${query.length}], got $dPrefix")
     require(candidates >= k, s"candidates ($candidates) must be >= k ($k)")
-    val qPre = array(query.take(dPrefix).map(lit): _*)
-    val qFull = array(query.map(lit): _*)
-    embs
-      .withColumn("sim_prefix",
-        round(VectorFunctions.cosine(slice(col(vecCol), 1, dPrefix), qPre), 6))
-      .orderBy(desc("sim_prefix"), col(idCol))
-      .limit(candidates)
-      .withColumn("sim", round(VectorFunctions.cosine(col(vecCol), qFull), 6))
-      .select(col(idCol), col("sim_prefix"), col("sim"))
-      .orderBy(desc("sim"), col(idCol))
-      .limit(k)
+    val pool = topK(embs.withColumn("sim_prefix",
+      sim6(slice(col(vecCol), 1, dPrefix), literal(query.take(dPrefix)))),
+      "sim_prefix", idCol, candidates)
+    topK(pool.withColumn("sim", sim6(col(vecCol), literal(query)))
+      .select(col(idCol), col("sim_prefix"), col("sim")), "sim", idCol, k)
   }
 
-  /** RANGE (radius) SEARCH — every corpus vector within a cosine
-    * threshold of the query, the other half of the ANN query surface
-    * (top-k answers "the best k"; radius answers "everything this
-    * similar", the semantic-dedup / recall-sweep primitive). Shape
-    * matters at scale: a pure scan + codegen filter — no top-k cut, no
-    * sort, no shuffle, no driver state — so it streams at any corpus
-    * size and the parquet scan prunes to (id, vec) columns. The
-    * threshold compares the ROUNDED similarity (6 dp, like every ANN
-    * gate) so the boundary is engine-stable.
+  /** RANGE SEARCH — every corpus vector whose 6-dp cosine to the query is
+    * at least `minSim`: a scan plus a codegen filter, with no cut, sort,
+    * shuffle or driver state, so it streams at any corpus size.
     */
   def radiusSearch(
       embs: DataFrame, idCol: String, vecCol: String,
-      query: Array[Double], minSim: Double): DataFrame = {
-    val q = array(query.map(lit): _*)
+      query: Array[Double], minSim: Double): DataFrame =
     embs
-      .withColumn("sim", round(VectorFunctions.cosine(col(vecCol), q), 6))
+      .withColumn("sim", sim6(col(vecCol), literal(query)))
       .filter(col("sim") >= minSim)
       .select(col(idCol), col("sim"))
-  }
 
   /** RANDOM-PROJECTION dimensionality reduction (Johnson–Lindenstrauss
-    * with an Achlioptas ±1 sign matrix): out_j = (Σᵢ vᵢ·s_ij)/√d' —
-    * the pre-ANN shrink that cuts a 64-float embedding to d' dims while
-    * preserving pairwise distances within the JL bound. The sign matrix
-    * is DERIVED, not stored: s_ij = ±1 from the parity of an md5-prefix
-    * hash of (j, i), computed once at plan-build time and entering the
-    * plan as literal arrays, so the projection is a pure zero-exchange
-    * codegen multiply-add fold — reproducible across engines
-    * bit-for-bit: the inner sum is a SEQUENTIAL left fold and DuckDB
-    * replays it term-for-term (same md5-parity signs, index lambda +
-    * list_reduce). Output long-form `(id, dim 1..d', proj)` (array
-    * outputs break the driver's row compare). √d' is exact in FP when
-    * d' is a perfect square (the qs11 gate uses 16); for other d' the
-    * constant must be matched across engines. `inDims` must equal the
-    * vector length — a shorter vector null-poisons its rows LOUDLY
-    * (zip_with pads), never silently truncates.
+    * with an Achlioptas ±1 sign matrix): out_j = (Σᵢ vᵢ·s_ij)/√d'. The
+    * sign matrix is derived, not stored: s_ij = ±1 from the parity of an
+    * md5 prefix of "j|i", computed once at plan-build time and entering
+    * the plan as literal arrays (computed per row it cost 2.5 s at 50k
+    * vectors). The inner sum is a sequential left fold, which the oracle
+    * replays term for term. Output is long-form `(id, dim 1..d', proj)`.
+    * √d' is exact when d' is a perfect square (the qs11 gate uses 16).
+    * `inDims` must equal the vector length: a shorter vector null-poisons
+    * its rows (zip_with pads) instead of silently truncating.
     */
   def randomProjection(
       embs: DataFrame, idCol: String, vecCol: String, outDims: Int,
       inDims: Int = 64): DataFrame = {
     require(outDims >= 1, s"outDims must be >= 1, got $outDims")
     require(inDims >= 1, s"inDims must be >= 1, got $inDims")
-    // the sign matrix is computed ONCE here with the identical md5-parity
-    // formula the oracle replays, and enters the plan as LITERAL arrays —
-    // the first cut recomputed outDims·inDims md5s PER ROW inside the
-    // lambda (measured 2.5 s at 50k vectors for 51M hash calls); as
-    // literals the row work is a pure multiply-add fold
     val md = java.security.MessageDigest.getInstance("MD5")
     def sgn(j: Int, i: Int): Double = {
       val h = md.digest(s"$j|$i".getBytes(java.nio.charset.StandardCharsets.UTF_8))
@@ -141,43 +144,26 @@ object Similarity {
         round(col("__p.v"), 6).as("proj"))
   }
 
-  /** Exact top-k by raw dot product (maximum inner-product search — the
-    * right metric when embeddings are pre-normalized or magnitude carries
-    * signal). Same scan + TakeOrderedAndProject shape as the cosine form;
-    * scoring runs through the codegen DotProduct expression.
+  /** Exact top-k by raw dot product (maximum inner-product search), for
+    * pre-normalized embeddings or when magnitude carries signal.
     */
-  def bruteForceTopKDot(embs: DataFrame, idCol: String, vecCol: String, query: Array[Double], k: Int): DataFrame = {
-    val q = array(query.map(lit): _*)
-    embs
-      .withColumn("dot", round(VectorFunctions.dot(col(vecCol), q), 6))
-      .select(col(idCol), col("dot"))
-      .orderBy(desc("dot"), col(idCol))
-      .limit(k)
-  }
+  def bruteForceTopKDot(embs: DataFrame, idCol: String, vecCol: String, query: Array[Double], k: Int): DataFrame =
+    scoreTopK(embs, idCol, "dot", round(VectorFunctions.dot(col(vecCol), literal(query)), 6), k)
 
-  /** SCALAR-QUANTIZED (int8) top-k — the memory tier between full-float
-    * brute force and PQ: each vector stores as 64 one-byte codes + one
-    * float scale (max-abs symmetric quantization, `code_i =
-    * round(127·v_i / max|v|)`), a 4× cut with far better fidelity than
-    * PQ's 32×. Query-time score is an INTEGER dot product over codes,
-    * de-scaled once per row (`S·m·qm / 127²`) — SIMD-friendly byte
-    * arithmetic in a columnar engine, and here a pure builtin
-    * `zip_with`/`aggregate` fold inside codegen with every intermediate
-    * exact (|S| ≤ 64·127², far inside ANSI range). Rounded to 6 dp
-    * before the TakeOrdered k-cut like every ANN gate, and fully
-    * deterministic: the corpus quantization is replayed term-for-term by
-    * the qs8 oracle, while the QUERY's codes are quantized ONCE on the
-    * driver and passed as the same literal array to both engines (Scala
-    * `math.round` rounds half-UP, SQL `round` half-AWAY — pre-quantizing
-    * the query removes the one place that difference could bite).
-    * Zero-vectors (m = 0) are unrankable under any scaled metric and are
-    * filtered, matching the oracle.
+  /** SCALAR-QUANTIZED (int8) top-k — the memory tier between float brute
+    * force and PQ: each vector is 64 one-byte codes plus one scale
+    * (max-abs symmetric, `code_i = round(127·v_i / max|v|)`), a 4× cut.
+    * The score is an integer dot over codes, de-scaled once per row
+    * (`S·m·qm / 127²`), every intermediate exact. The query's codes come
+    * from [[sqQuantizeQuery]] on the driver and reach both engines as the
+    * same literal (Scala rounds half up, SQL half away from zero).
+    * Zero vectors (m = 0) cannot be ranked and are dropped.
     */
   def sqTopK(
       embs: DataFrame, idCol: String, vecCol: String,
       queryCodes: Array[Long], queryScale: Double, k: Int): DataFrame = {
-    val qc = array(queryCodes.map(lit): _*)
-    embs
+    val qc = array(queryCodes.toIndexedSeq.map(lit): _*)
+    val coded = embs
       .withColumn("__m",
         array_max(transform(col(vecCol), x => abs(x.cast("double")))))
       .filter(col("__m") > 0)
@@ -187,11 +173,8 @@ object Similarity {
       .withColumn("__s",
         aggregate(zip_with(col("__codes"), qc, (a, b) => a * b),
           lit(0L), (acc, x) => acc + x))
-      .withColumn("approx",
-        round(col("__s") * col("__m") * lit(queryScale) / lit(16129.0), 6))
-      .select(col(idCol), col("approx"))
-      .orderBy(desc("approx"), col(idCol))
-      .limit(k)
+    scoreTopK(coded, idCol, "approx",
+      round(col("__s") * col("__m") * lit(queryScale) / lit(16129.0), 6), k)
   }
 
   /** Driver-side query quantization for [[sqTopK]]: (codes, maxAbs). */
@@ -201,113 +184,62 @@ object Similarity {
     (query.map(x => math.round(127.0 * x / m)), m)
   }
 
-  /** Exact k-NN join: for each row in `queries` (small side), the top-k
-    * corpus rows by cosine, tie-broken by ascending corpus id. Queries are
-    * broadcast (nested-loop, never shuffled); the corpus is scanned once
-    * and each partition reduces its candidates into a BOUNDED k-entry
-    * buffer via a typed Aggregator BEFORE any exchange (ObjectHashAggregate
-    * partial → shuffle of ≤ k rows per (query, partition) → final merge).
-    * Exchanged volume is O(|queries| · partitions · k), independent of
-    * corpus size — the window-over-crossJoin alternative would exchange
-    * every |corpus|·|queries| candidate row just to discard all but k.
-    *
-    * Similarities are rounded to 6 dp BEFORE ranking so the k-cut is
-    * FP-stable (same contract as [[bruteForceTopK]]). `idCol` must be an
-    * integral (long-castable) column.
+  // ------------------------------------------------ a table of queries
+
+  /** Exact k-NN join: for each row of the small `queries` side, the top k
+    * corpus rows by cosine, ties to the lower corpus id. Queries broadcast
+    * into a nested loop, the corpus scans once, and the per-query cut
+    * rides [[topKPerGroup]], so the exchange carries O(|queries| ·
+    * partitions · k) rows however large the corpus is. `idCol` must be
+    * long-castable.
     */
   def knnJoin(corpus: DataFrame, queries: DataFrame, idCol: String, vecCol: String, qIdCol: String, qVecCol: String, k: Int): DataFrame =
     knnDirected(corpus, queries, idCol, vecCol, qIdCol, qVecCol, k, excludeSelf = false)
 
-  /** The shared directed-kNN kernel behind [[knnJoin]] and the
-    * brute-force mutual-kNN reference: broadcast-queries nested loop, bounded
-    * per-partition top-k buffers, optional self-match exclusion
-    * BEFORE the k-cut (k means k OTHER vectors when the queries are
-    * the corpus itself).
+  /** The directed kNN behind [[knnJoin]], recall truth and the spec's
+    * brute mutual-kNN: `excludeSelf` drops the self pair before the cut,
+    * so k means k OTHER vectors when the queries are the corpus.
     */
   private[operators] def knnDirected(
-      corpus: DataFrame,
-      queries: DataFrame,
-      idCol: String,
-      vecCol: String,
-      qIdCol: String,
-      qVecCol: String,
-      k: Int,
-      excludeSelf: Boolean): DataFrame = {
-    val topk = udaf(new TopKByScore(k))
+      corpus: DataFrame, queries: DataFrame, idCol: String, vecCol: String,
+      qIdCol: String, qVecCol: String, k: Int, excludeSelf: Boolean): DataFrame = {
     val joined = corpus.crossJoin(broadcast(queries))
     val cands = if (excludeSelf) joined.filter(col(idCol) =!= col(qIdCol)) else joined
-    cands
-      .withColumn("sim", round(VectorFunctions.cosine(col(vecCol), col(qVecCol)), 6))
-      .groupBy(col(qIdCol))
-      .agg(topk(col("sim"), col(idCol).cast("long")).as("__topk"))
-      .select(col(qIdCol), posexplode(col("__topk")))
-      .select(
-        col(qIdCol),
-        col("col._2").as(idCol),
-        col("col._1").as("sim"),
-        (col("pos") + 1).cast("long").as("rank"))
+    topKPerGroup(cands.withColumn("sim", sim6(col(vecCol), col(qVecCol))),
+      qIdCol, "sim", idCol, k)
   }
 
-  /** MUTUAL k-NN PAIRS, cell-bucketed — the pairs (a, b) where each is
-    * in the other's top-k by cosine AMONG ITS CELL-CANDIDATES: the
-    * reciprocal-neighbour criterion behind density-aware dedup
-    * clustering and kNN-graph construction (a one-way neighbour of a
-    * hub is usually noise; a MUTUAL pair is structure). Self-matches
-    * are excluded before the k-cut — k means k OTHER vectors.
+  /** MUTUAL k-NN PAIRS — the pairs (a, b) where each is in the other's
+    * top k by cosine among its candidates, self excluded: the reciprocal
+    * criterion behind density-aware dedup and kNN-graph construction.
     *
-    * Candidate generation is the qd14 seed-cell recipe made
-    * MULTI-PROBE: cells are the `nCells` lowest-id vectors (the
-    * [[pqCodebook]] m = 1 contract — argmin of 6-dp-rounded L2²,
-    * lowest index on ties), and each vector probes its `nProbe`
-    * nearest cells, so a pair is a candidate iff the two probe sets
-    * intersect. Shared-cell is symmetric, so the candidate graph is
-    * undirected and a mutual pair can never be split by one direction
-    * missing the other's candidate set. Exact cosine scores the
-    * candidates; the k-cut runs in bounded per-partition buffers
-    * ([[TopKDistinctByScore]] — a pair sharing BOTH probed cells
-    * enters the join twice and must occupy one rank slot, not two);
-    * the directed edge list equi-joins its transpose and each pair
-    * emits once (a < b). Cosine is symmetric bit-for-bit (per-element
-    * multiply commutes, the fold order is the element order both
-    * ways), so the two directions carry the same rounded similarity.
+    * Candidates: the cells are the `nCells` lowest-id vectors (argmin of
+    * 6-dp L2², lowest index on ties, the [[pqCodebook]] m = 1 contract),
+    * each vector probes its `nProbe` nearest cells, and a pair is a
+    * candidate iff the two probe sets intersect. That relation is
+    * symmetric, so one direction can never miss the other's candidate.
+    * A pair sharing both probed cells enters the join twice, so the cut
+    * runs with `distinct`. Cosine is symmetric bit for bit, so the
+    * transpose join sees the same rounded score both ways.
     *
-    * RECALL CONTRACT: ranks are exact within the candidate graph; a
-    * true global neighbour whose probe set is disjoint from the
-    * query's is NOT a candidate (multi-probe makes that rare — both
-    * sides must miss all of each other's cells). `nCells` should grow
-    * with the corpus (cell occupancy ~ nProbe·n/nCells bounds the
-    * per-cell quadratic term at (nProbe·n/nCells)²·nCells — pick
-    * nCells ≈ n / desired_cell_size); with nCells = 1 the candidate
-    * graph is complete and the output is exactly the brute-force self-kNN
-    * (RecallSpec pins both that equivalence and a constructed miss).
-    *
-    * Scale shape: NO full-corpus broadcast and NO cartesian anywhere
-    * (PlanSpec-pinned) — seeds are an nCells-row driver collect (the
-    * sanctioned bounded-side pattern), the cell join shuffles
-    * n·nProbe rows on the cell key, and the exchange after scoring
-    * carries ≤ k rows per (query, partition).
+    * Recall: ranks are exact within the candidate graph; a true neighbour
+    * whose probe set is disjoint from the query's is missed. Grow
+    * `nCells` with the corpus (occupancy ~ nProbe·n/nCells); nCells = 1
+    * is exactly the brute-force self-kNN (RecallSpec pins both that and
+    * a constructed miss). No full-corpus broadcast and no cartesian
+    * (PlanSpec): the seeds are an nCells-row collect and the cell join
+    * shuffles n·nProbe rows.
     */
   def mutualKnn(
-      embs: DataFrame,
-      idCol: String,
-      vecCol: String,
-      k: Int,
-      nCells: Int = 64,
+      embs: DataFrame, idCol: String, vecCol: String, k: Int, nCells: Int = 64,
       nProbe: Int = 2): DataFrame =
     mutualizeDirected(mutualKnnEdges(embs, idCol, vecCol, k, nCells, nProbe))
 
-  /** The directed candidate-kNN edge list behind [[mutualKnn]], BEFORE
-    * the transpose checkpoint — exposed (package-private) so PlanSpec
-    * can assert the candidate plan's shape (the eager checkpoint in
-    * [[mutualizeDirected]] hides this subtree from the gate's executed
-    * plan).
+  /** The directed edge list behind [[mutualKnn]], before the transpose
+    * checkpoint hides it from the gate plan (PlanSpec reads its shape).
     */
   private[graft] def mutualKnnEdges(
-      embs: DataFrame,
-      idCol: String,
-      vecCol: String,
-      k: Int,
-      nCells: Int,
+      embs: DataFrame, idCol: String, vecCol: String, k: Int, nCells: Int,
       nProbe: Int): DataFrame = {
     require(nCells >= 1, s"nCells must be >= 1, got $nCells")
     require(nProbe >= 1 && nProbe <= nCells,
@@ -318,39 +250,25 @@ object Similarity {
       .select(col(vecCol).cast("array<double>"))
       .collect()
       .map(_.getSeq[Double](0).toArray)
-    val p = math.min(nProbe, seeds.length)
-    // top-p cells by (6-dp-rounded L2², index) — the pqEncode argmin
-    // contract extended to a p-deep selection, same rounding, same
-    // ties, fused into one codegen loop (the probe is n·nCells·dim
-    // work and nCells grows with the corpus — a boxed UDF here
-    // dominated the whole operator at sf1)
+    // the probe is n·nCells·dim work, so it runs in the codegen kernel
     val cells = embs
       .select(col(idCol), col(vecCol))
-      .withColumn("__cell",
-        explode(graft.functions.expressions.VectorExpressions
-          .nearestCells(col(vecCol), seeds, p)))
+      .withColumn("__cell", explode(graft.functions.expressions.VectorExpressions
+        .nearestCells(col(vecCol), seeds, math.min(nProbe, seeds.length))))
     val a = cells.select(col(idCol).as("__qid"), col(vecCol).as("__qv"), col("__cell"))
     val b = cells.select(col(idCol).as("__nid"), col(vecCol).as("__nv"), col("__cell"))
-    val topk = udaf(new TopKDistinctByScore(k))
-    val knn = a.join(b, Seq("__cell"))
+    val cands = a.join(b, Seq("__cell"))
       .filter(col("__qid") =!= col("__nid"))
-      .withColumn("sim", round(VectorFunctions.cosine(col("__qv"), col("__nv")), 6))
-      .groupBy(col("__qid"))
-      .agg(topk(col("sim"), col("__nid").cast("long")).as("__topk"))
-      .select(col("__qid"), posexplode(col("__topk")))
-      .select(col("__qid"), col("col._2").as("__nid"),
-        col("col._1").as("sim"), (col("pos") + 1).cast("long").as("__rank"))
-    knn
+      .withColumn("sim", sim6(col("__qv"), col("__nv")))
+    topKPerGroup(cands, "__qid", "sim", "__nid", k, distinct = true)
+      .withColumnRenamed("rank", "__rank")
   }
 
-  /** Transpose-join a directed (__qid, __nid, sim, __rank) edge list
-    * into mutual pairs (a < b). The edge list `localCheckpoint`s FIRST:
-    * fwd and rev are two reads of the same frame, and without the cut
-    * Catalyst plans the whole candidate-generation + scoring pipeline
-    * TWICE (no exchange reuse across the differing projections —
-    * measured 2× the cosine work). Edges are n·k rows — node-scale,
-    * not candidate-scale — so the materialization is the cheap side;
-    * blocks free when the frame is GC'd.
+  /** Transpose-join a directed (__qid, __nid, sim, __rank) edge list into
+    * mutual pairs (a < b). The edges `localCheckpoint` first: fwd and rev
+    * read the same frame, and without the cut Catalyst plans candidate
+    * generation and scoring twice. Edges are n·k rows, so the
+    * materialization is the cheap side.
     */
   private[operators] def mutualizeDirected(knn: DataFrame): DataFrame = {
     val edges = knn.localCheckpoint(true)
@@ -365,99 +283,55 @@ object Similarity {
         col("rank_ab"), col("rank_ba"))
   }
 
-  /** HARD-NEGATIVE MINING — per anchor, the top-k corpus vectors inside
-    * a SIMILARITY BAND `lo ≤ cosine < hi`: the contrastive-training
-    * staple (negatives similar enough to teach the margin, dissimilar
-    * enough to not be latent positives — the reason the band excludes
-    * the near-dup region, and why a plain kNN is the wrong tool).
-    * Self-pairs are excluded before the band. Scores round to 6 dp
-    * before the cut (the qt36 libm-ulp lesson) and tie-break on
-    * ascending id, so the selected SET replays across engines.
-    *
-    * Scale shape = [[knnJoin]]'s: anchors broadcast, the band filter
-    * and score stay in the one corpus scan, and the k-cut rides the
-    * bounded [[TopKByScore]] Aggregator — ≤ k rows per (anchor,
-    * partition) cross the shuffle. Swap the scan for the IVF cell
-    * probe when the corpus is cell-partitioned (same contract as
-    * qs4's pruned tier).
+  /** HARD-NEGATIVE MINING — per anchor, the top k corpus vectors inside
+    * the similarity band `lo ≤ cosine < hi`: similar enough to teach the
+    * margin, below the near-duplicate region. Self pairs are excluded
+    * before the band; the shape is [[knnJoin]]'s.
     */
   def hardNegatives(
-      corpus: DataFrame,
-      anchors: DataFrame,
-      idCol: String,
-      vecCol: String,
-      anchorIdCol: String,
-      anchorVecCol: String,
-      lo: Double,
-      hi: Double,
+      corpus: DataFrame, anchors: DataFrame, idCol: String, vecCol: String,
+      anchorIdCol: String, anchorVecCol: String, lo: Double, hi: Double,
       k: Int): DataFrame = {
     require(k > 0, s"k must be positive, got $k")
     require(lo < hi, s"need lo < hi, got [$lo, $hi)")
-    val topk = udaf(new TopKByScore(k))
-    val sim = round(VectorFunctions.cosine(col(vecCol), col(anchorVecCol)), 6)
-    corpus.crossJoin(broadcast(anchors))
+    val cands = corpus.crossJoin(broadcast(anchors))
       .filter(col(idCol) =!= col(anchorIdCol))
-      .withColumn("__sim", sim)
+      .withColumn("__sim", sim6(col(vecCol), col(anchorVecCol)))
       .filter(col("__sim") >= lo && col("__sim") < hi)
-      .groupBy(col(anchorIdCol))
-      .agg(topk(col("__sim"), col(idCol).cast("long")).as("__topk"))
-      .select(col(anchorIdCol), posexplode(col("__topk")))
+    topKPerGroup(cands, anchorIdCol, "__sim", idCol, k)
       .select(
         col(anchorIdCol).as("anchor_id"),
-        col("col._2").as("neg_id"),
-        col("col._1").as("sim"),
-        (col("pos") + 1).cast("long").as("rank"))
+        col(idCol).as("neg_id"),
+        col("__sim").as("sim"),
+        col("rank"))
   }
 
   /** BUCKETED DBSCAN over an embedding column — density-based cluster
-    * labels without a preset cluster count, the standard shape for
-    * "group the near-duplicate neighborhoods, flag the rest as noise"
-    * (qd20 keeps one doc per cluster; THIS names the clusters and the
-    * outliers). Cosine-similarity DBSCAN with the neighbor graph
-    * BUCKETED by the deterministic hyperplane signature (the qd5 LSH):
+    * labels with no preset cluster count. Neighbours of a are the vectors
+    * b ≠ a sharing a's `bits`-bit hyperplane signature (the qd5 LSH) with
+    * cosine ≥ `simThreshold`; cross-bucket pairs are out of scope by
+    * design, which keeps the pair stage Θ(bucket²), never Θ(n²).
     *
-    *  - neighbors(a) = vectors b ≠ a sharing a's `bits`-bit signature
-    *    with cosine(a, b) ≥ `simThreshold` — the LSH bucket IS part of
-    *    the operator's contract (the qd5/qs14 candidate semantics:
-    *    cross-bucket near-pairs are out of scope by design, which is
-    *    what keeps the pair stage Θ(bucket²), never Θ(n²));
-    *  - core ⟺ at least `minPts` neighbors (OTHER vectors — the
-    *    classic count-includes-self convention minus one);
-    *  - clusters = connected components over core–core neighbor edges
-    *    ([[Dedup.connectedComponents]] min-label; a core with no core
-    *    neighbor keeps its own id);
-    *  - border = non-core with ≥ 1 core neighbor, labeled by its
-    *    MINIMUM core neighbor's cluster (deterministic, no "first
-    *    visitor wins" order dependence — the known DBSCAN wrinkle,
-    *    pinned instead of inherited);
+    *  - core ⟺ at least `minPts` neighbours (other vectors);
+    *  - clusters = connected components over core–core edges
+    *    ([[Dedup.connectedComponents]]; a lone core keeps its own id);
+    *  - border = non-core with a core neighbour, labelled by its MINIMUM
+    *    core neighbour's cluster (no visit-order dependence);
     *  - everything else is noise, cluster −1.
     *
-    * Output `(vec_id, role ∈ core|border|noise, cluster)`. Scale: one
-    * signature projection (codegen literals), one bucket equi-join,
-    * degree/label joins keyed by id, star-contraction components —
-    * every stage keyed. The pair stage is Θ(n · occupancy) where
-    * occupancy = n/2^bits, so `bits` MUST grow with log₂(n) to hold
-    * occupancy constant (the qs14 nCells lesson: a fixed bucket count
-    * is a hidden n²). The similarity scale probe (git 3e96ab2) ran
-    * bits = ⌈log₂(n/64)⌉ and its wall tracked rows.
+    * Output `(vec_id, role ∈ core|border|noise, cluster)`. The pair stage
+    * is Θ(n · n/2^bits), so `bits` must grow with log₂(n).
     */
   def dbscanCosine(
-      embs: DataFrame,
-      idCol: String,
-      vecCol: String,
-      dim: Int,
-      simThreshold: Double,
-      minPts: Int,
-      bits: Int = 8,
-      seed: Long = 42L): DataFrame = {
+      embs: DataFrame, idCol: String, vecCol: String, dim: Int, simThreshold: Double,
+      minPts: Int, bits: Int = 8, seed: Long = 42L): DataFrame = {
     require(minPts >= 1, s"minPts must be >= 1, got $minPts")
     val sigs = embs
       .select(col(idCol).cast("long").as("__id"), col(vecCol).as("__v"))
       .withColumn("__sig",
         VectorFunctions.hyperplaneSignature(col("__v"), dim, bits, seed))
-    // bucket-local similarity edges, BOTH directions (degree counting
-    // reads one direction); eager checkpoint — consumed by three
-    // downstream branches (degrees, core-core edges, border labels)
+    // bucket-local edges, both directions; checkpointed because degrees,
+    // core-core edges and border labels all read them
     val nbr = sigs.select(col("__sig"), col("__id").as("__a"), col("__v").as("__va"))
       .join(sigs.select(col("__sig"), col("__id").as("__b"), col("__v").as("__vb")),
         Seq("__sig"))
@@ -494,41 +368,37 @@ object Similarity {
         coalesce(col("__core_lbl"), col("__blbl"), lit(-1L)).as("cluster"))
   }
 
-  /** Distributed Lloyd's k-means over an embedding column: centroids stay
-    * a driver-side k×dim array (tiny) broadcast into a compiled assignment
-    * UDF; the update step is a distributed posexplode + per-(cluster, dim)
-    * average. Deterministic: init = the k lowest-id vectors.
+  /** Index of the smallest `dist(c)` for c < n, the first one on ties. */
+  private def argmin(n: Int)(dist: Int => Double): Int = {
+    var best = 0
+    var bestD = Double.MaxValue
+    var c = 0
+    while (c < n) {
+      val d = dist(c)
+      if (d < bestD) { bestD = d; best = c }
+      c += 1
+    }
+    best
+  }
+
+  /** Distributed Lloyd's k-means over an embedding column: the k×dim
+    * centroids stay on the driver and enter a compiled assignment UDF; the
+    * update is a distributed posexplode + per-(cluster, dim) average.
+    * Deterministic: init = the k lowest-id vectors.
     *
     * Returns (centroids, assignments(id, cluster)).
     */
   def kmeans(
-      embs: DataFrame,
-      idCol: String,
-      vecCol: String,
-      k: Int,
+      embs: DataFrame, idCol: String, vecCol: String, k: Int,
       iters: Int = 5): (Array[Array[Double]], DataFrame) = {
     def assignUdf(cents: Array[Array[Double]]) = udf { (v: Seq[Float]) =>
-      var best = 0
-      var bestD = Double.MaxValue
-      var c = 0
-      while (c < cents.length) {
-        var d = 0.0
-        var i = 0
-        val cent = cents(c)
-        val n = math.min(cent.length, v.length)
-        while (i < n) { val diff = v(i) - cent(i); d += diff * diff; i += 1 }
-        if (d < bestD) { bestD = d; best = c }
-        c += 1
-      }
-      best
+      argmin(cents.length)(c =>
+        sqL2(i => v(i), 0, cents(c), math.min(cents(c).length, v.length)))
     }
 
-    // Lloyd iterates over the SAME corpus iters+1 times: persist the
-    // projected (id, vec) once so the source is scanned a single time (the
-    // init job below materializes the cache as a side effect) instead of
-    // re-reading 100 TB per iteration. Unpersisted before return; the
-    // returned lazy assignment recomputes from source lineage when the
-    // caller evaluates it (one scan, unavoidable for a lazy result).
+    // Lloyd scans the same corpus iters + 1 times: persist the projected
+    // (id, vec) once (the init job below fills the cache) and release it
+    // before returning; the lazy assignment recomputes from the source
     val proj = embs.select(col(idCol), col(vecCol))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val centroids =
@@ -554,341 +424,198 @@ object Similarity {
         }
         cents
       } finally proj.unpersist(blocking = false)
-    // assign against the FINAL centroids: assignments computed inside the
-    // loop came from the pre-update centroids, so without this the returned
-    // (centroids, assignments) would be mutually inconsistent and IVF
-    // probing against final centroids would hit stale cells. Built from
-    // `embs` (source lineage), not the cache released above.
+    // assign against the FINAL centroids, so the pair is consistent
     val assigned = embs.withColumn("cluster", assignUdf(centroids)(col(vecCol)))
     (centroids, assigned.select(col(idCol), col("cluster")))
   }
 
-  /** IVF/LSH-bucketed approximate top-k for one literal query: corpus rows
-    * hash to a `bits`-bit hyperplane cell; only rows whose cell is within
-    * hamming `nProbe` of the query's cell are scored. The cell projection
-    * is a pure column expression, so partition pruning applies if the
-    * corpus is written bucketed by cell.
+  // ------------------------------------------------ hyperplane cells
+
+  /** IVF/LSH-bucketed top-k for one literal query: only corpus rows whose
+    * `bits`-bit hyperplane cell is within hamming `nProbe` of the query's
+    * are scored. The cell is a pure column expression, so a corpus written
+    * bucketed by cell prunes partitions. Recall < 1 by construction
+    * (RecallSpec: recall@10 ≥ 0.9 at bits = 6, nProbe = 2 on its
+    * clustered corpus); nProbe = bits probes every cell and is brute force.
     */
   def ivfTopK(
-      embs: DataFrame,
-      idCol: String,
-      vecCol: String,
-      query: Array[Double],
-      k: Int,
-      bits: Int = 8,
-      nProbe: Int = 1): DataFrame = {
+      embs: DataFrame, idCol: String, vecCol: String, query: Array[Double], k: Int,
+      bits: Int = 8, nProbe: Int = 1): DataFrame = {
     val dim = query.length
-    val q = array(query.map(lit): _*)
-    val cells = embs.withColumn("__cell", VectorFunctions.hyperplaneSignature(col(vecCol), dim, bits))
-    // query cell computed the same deterministic way, driver-side constants
+    val q = literal(query)
     val qCell = VectorFunctions.hyperplaneSignature(q, dim, bits)
-    cells
+    val cands = embs
+      .withColumn("__cell", VectorFunctions.hyperplaneSignature(col(vecCol), dim, bits))
       .filter(bit_count(col("__cell").bitwiseXOR(qCell)) <= nProbe)
-      .withColumn("sim", round(VectorFunctions.cosine(col(vecCol), q), 6))
-      .select(col(idCol), col("sim"))
-      .orderBy(desc("sim"), col(idCol))
-      .limit(k)
+    scoreTopK(cands, idCol, "sim", sim6(col(vecCol), q), k)
   }
 
-  /** MULTI-PROBE IVF TOP-K — the SEARCH-path twin of
-    * [[annRecallMultiProbe]]'s evaluation: one literal query, probe
-    * cells chosen by the query's hyperplane margins instead of
-    * [[ivfTopK]]'s blind hamming ball — the same `nCand`-cell budget
-    * buys measurably more recall (the qs18/qs19 adjudication:
-    * 0.8583 → 1.0000 mean recall@10 at 11/1024 cells on the clustered
-    * RecallSpec corpus). The margin computation and mask ranking run
-    * driver-side over the LITERAL query (exact integer µ-margin
-    * scoring, [[multiProbeMasks]]), so the probe set lands in the plan
-    * as `isin` LITERALS on the signature column — partition pruning
-    * against a corpus written partitioned by cell, with zero candidate
-    * rows read outside the probed cells. Tail is the qs4 contract: exact cosine inside the
-    * probed cells, TakeOrdered on (6-dp sim DESC, id ASC).
+  /** The hyperplanes of a multi-probe search, after its shared checks. */
+  private def probePlanes(dim: Int, bits: Int, nCand: Int, seed: Long): Seq[Array[Double]] = {
+    require(bits >= 1 && bits <= 16,
+      s"bits must be in [1, 16] (probe enumeration is 2^bits per query), got $bits")
+    require(nCand >= 1 && nCand <= (1 << bits),
+      s"nCand must be in [1, 2^bits], got $nCand")
+    VectorFunctions.hyperplanes(dim, bits, seed)
+  }
+
+  /** The `nCand` cells one query probes: its own hyperplane cell xor each
+    * of the [[multiProbeMasks]] ranked by its µ-margins ⌊|q·p|·10⁶ + ½⌋.
+    * The bits match [[VectorFunctions.hyperplaneSignature]]'s (same
+    * planes, same fold order).
+    */
+  private def probeCells(planes: Seq[Array[Double]], q: Array[Double], nCand: Int): Seq[Long] = {
+    val dots = planes.map { p =>
+      var dot = 0.0; var j = 0
+      while (j < p.length) { dot += q(j) * p(j); j += 1 }
+      dot
+    }
+    val cell = dots.zipWithIndex.foldLeft(0L) { case (c, (d, b)) =>
+      if (d >= 0.0) c | (1L << b) else c
+    }
+    val micro = dots.map(d => math.floor(math.abs(d) * 1e6 + 0.5).toLong).toArray
+    multiProbeMasks(micro, planes.length, nCand).map(cell ^ _)
+  }
+
+  /** `(__qid, __cell)` for every probe cell of every row of `queries`
+    * (`__qid`, `__qv`), computed on the driver over the collected rows:
+    * queries are the bounded side of every search in this tier.
+    */
+  private def probeTable(queries: DataFrame, planes: Seq[Array[Double]], nCand: Int): DataFrame = {
+    val spark = queries.sparkSession
+    import spark.implicits._
+    queries
+      .select(col("__qid").cast("long"), col("__qv").cast("array<double>"))
+      .collect()
+      .flatMap(r => probeCells(planes, r.getSeq[Double](1).toArray, nCand).map((r.getLong(0), _)))
+      .toSeq.toDF("__qid", "__cell")
+  }
+
+  /** MULTI-PROBE top-k for one literal query: the probe cells are the
+    * `nCand` chosen by the query's hyperplane margins instead of
+    * [[ivfTopK]]'s blind hamming ball, which buys more recall at the same
+    * cell budget (0.8583 → 1.0000 mean recall@10 at 11/1024 cells on the
+    * clustered RecallSpec corpus). They enter the plan as `isin` literals
+    * on the signature column, so a cell-partitioned corpus is read only in
+    * the probed cells.
     */
   def multiProbeTopK(
-      embs: DataFrame,
-      idCol: String,
-      vecCol: String,
-      query: Array[Double],
-      k: Int,
-      bits: Int = 8,
-      nCand: Int = 9,
-      seed: Long = 42L): DataFrame = {
+      embs: DataFrame, idCol: String, vecCol: String, query: Array[Double], k: Int,
+      bits: Int = 8, nCand: Int = 9, seed: Long = 42L): DataFrame = {
     require(k >= 1, s"k must be >= 1, got $k")
-    require(bits >= 1 && bits <= 16,
-      s"bits must be in [1, 16] (probe enumeration is 2^bits), got $bits")
-    require(nCand >= 1 && nCand <= (1 << bits),
-      s"nCand must be in [1, 2^bits], got $nCand")
     val dim = query.length
-    val rnd = new scala.util.Random(seed)
-    val planes = Seq.fill(bits)(Array.fill(dim)(rnd.nextGaussian()))
-    var qCell = 0L
-    val micro = new Array[Long](bits)
-    planes.zipWithIndex.foreach { case (p, b) =>
-      var dot = 0.0; var j = 0
-      while (j < dim) { dot += query(j) * p(j); j += 1 }
-      if (dot >= 0.0) qCell |= 1L << b
-      micro(b) = math.floor(math.abs(dot) * 1e6 + 0.5).toLong
-    }
-    val probeCells = multiProbeMasks(micro, bits, nCand).map(qCell ^ _)
-    val q = array(query.map(lit): _*)
-    embs
+    val probes = probeCells(probePlanes(dim, bits, nCand, seed), query, nCand)
+    val cands = embs
       .withColumn("__cell",
         VectorFunctions.hyperplaneSignature(col(vecCol), dim, bits, seed))
-      .filter(col("__cell").isin(probeCells.map(java.lang.Long.valueOf): _*))
-      .withColumn("sim", round(VectorFunctions.cosine(col(vecCol), q), 6))
-      .select(col(idCol), col("sim"))
-      .orderBy(desc("sim"), col(idCol))
-      .limit(k)
+      .filter(col("__cell").isin(probes.map(java.lang.Long.valueOf): _*))
+    scoreTopK(cands, idCol, "sim", sim6(col(vecCol), literal(query)), k)
   }
 
-  /** ANN RECALL@K EVALUATION — the index-quality measurement every
-    * approximate-nearest-neighbor deployment needs before trusting its
-    * candidates: for each of the `numQueries` lowest-id corpus vectors,
-    * compute the EXACT cosine top-k (self excluded) and the
-    * hyperplane-cell approximate top-k ([[ivfTopK]]'s candidate rule:
-    * corpus rows within hamming `nProbe` of the query's `bits`-bit
-    * signature, scored by exact cosine), and report
-    * `recall = |approx ∩ exact| / k` per query. Tuning loop: raise
-    * `bits` to shrink cells, raise `nProbe` to widen the probe ball,
-    * re-read recall — this operator IS that read.
-    *
-    * Determinism: both sides rank on (6-dp-rounded sim DESC, id ASC) —
-    * the qs5 tie contract — and the query set is an id order-by, so the
-    * row set is replayable cross-engine. Recall is an IEEE divide of
-    * exact integers, rounded 6 dp.
-    *
-    * Scale shape: queries are a bounded broadcast (`numQueries` rows by
-    * contract); the corpus scans TWICE (once per side), each side
-    * reducing through the bounded [[TopKByScore]] aggregator so the
-    * only exchanges carry ≤ k rows per (query, partition) — no Window
-    * over the corpus, no cartesian beyond the broadcast nested loop,
-    * no full candidate set materialized. The signature column rides
-    * the scan (codegen'd dot products per bit).
+  /** Recall@k of an approximate candidate rule for the `numQueries`
+    * lowest-id corpus vectors: `candidates(queries)` joins the signed
+    * corpus (`__sig`) to the queries (`__qid`, `__qv`, `__qsig`); both it
+    * and the exact truth cut self-excluded 6-dp cosine top k, and
+    * `recall = |approx ∩ exact| / k` per query, rounded to 6 dp.
+    */
+  private def recallAtK(embs: DataFrame, idCol: String, vecCol: String, sigd: DataFrame,
+      k: Int, numQueries: Int)(candidates: DataFrame => DataFrame): DataFrame = {
+    require(k >= 1, s"k must be >= 1, got $k")
+    require(numQueries >= 1, s"numQueries must be >= 1, got $numQueries")
+    val queries = sigd
+      .orderBy(col(idCol))
+      .limit(numQueries)
+      .select(col(idCol).as("__qid"), col(vecCol).as("__qv"),
+        col("__sig").as("__qsig"))
+    val truth = knnDirected(
+      embs, queries.select(col("__qid"), col("__qv")),
+      idCol, vecCol, "__qid", "__qv", k, excludeSelf = true)
+      .select(col("__qid"), col(idCol))
+    val approx = topKPerGroup(
+      candidates(queries)
+        .filter(col(idCol) =!= col("__qid"))
+        .withColumn("sim", sim6(col(vecCol), col("__qv"))),
+      "__qid", "sim", idCol, k)
+      .select(col("__qid"), col(idCol))
+    val hits = truth
+      .join(approx, Seq("__qid", idCol), "left_semi")
+      .groupBy(col("__qid"))
+      .agg(count(lit(1)).as("n_hit"))
+    queries
+      .select(col("__qid"))
+      .join(hits, Seq("__qid"), "left")
+      .na.fill(0L, Seq("n_hit"))
+      .select(col("__qid").as("query_id"), col("n_hit"),
+        round(col("n_hit").cast("double") / lit(k.toDouble), 6).as("recall"))
+      .orderBy(col("query_id"))
+  }
+
+  /** ANN RECALL@K of [[ivfTopK]]'s candidate rule (corpus rows within
+    * hamming `nProbe` of the query's `bits`-bit signature): the read that
+    * tunes `bits` and `nProbe`. Queries broadcast into the ball filter.
     */
   def annRecall(
-      embs: DataFrame,
-      idCol: String,
-      vecCol: String,
-      dim: Int,
-      k: Int,
-      bits: Int = 8,
-      nProbe: Int = 1,
-      numQueries: Int = 16): DataFrame = {
-    require(k >= 1, s"k must be >= 1, got $k")
-    require(numQueries >= 1, s"numQueries must be >= 1, got $numQueries")
-    val topk = udaf(new TopKByScore(k))
+      embs: DataFrame, idCol: String, vecCol: String, dim: Int, k: Int, bits: Int = 8,
+      nProbe: Int = 1, numQueries: Int = 16): DataFrame = {
     val sigd = embs.withColumn(
       "__sig", VectorFunctions.hyperplaneSignature(col(vecCol), dim, bits))
-    val queries = sigd
-      .orderBy(col(idCol))
-      .limit(numQueries)
-      .select(col(idCol).as("__qid"), col(vecCol).as("__qv"),
-        col("__sig").as("__qsig"))
-    val truth = knnDirected(
-      embs, queries.select(col("__qid"), col("__qv")),
-      idCol, vecCol, "__qid", "__qv", k, excludeSelf = true)
-      .select(col("__qid"), col(idCol))
-    val approx = sigd
-      .crossJoin(broadcast(queries))
-      .filter(col(idCol) =!= col("__qid") &&
-        bit_count(col("__sig").bitwiseXOR(col("__qsig"))) <= nProbe)
-      .withColumn("sim", round(VectorFunctions.cosine(col(vecCol), col("__qv")), 6))
-      .groupBy(col("__qid"))
-      .agg(topk(col("sim"), col(idCol).cast("long")).as("__topk"))
-      .select(col("__qid"), explode(col("__topk")).as("__e"))
-      .select(col("__qid"), col("__e._2").as(idCol))
-    val hits = truth
-      .join(approx, Seq("__qid", idCol), "left_semi")
-      .groupBy(col("__qid"))
-      .agg(count(lit(1)).as("n_hit"))
-    queries
-      .select(col("__qid"))
-      .join(hits, Seq("__qid"), "left")
-      .na.fill(0L, Seq("n_hit"))
-      .select(col("__qid").as("query_id"), col("n_hit"),
-        round(col("n_hit").cast("double") / lit(k.toDouble), 6).as("recall"))
-      .orderBy(col("query_id"))
+    recallAtK(embs, idCol, vecCol, sigd, k, numQueries)(queries =>
+      sigd.crossJoin(broadcast(queries))
+        .filter(bit_count(col("__sig").bitwiseXOR(col("__qsig"))) <= nProbe))
   }
 
-  /** MULTI-PROBE ANN RECALL@K — [[annRecall]] with the probe set chosen
-    * by QUERY MARGINS instead of a blind hamming ball (Lv et al. 2007,
-    * "Multi-probe LSH: efficient indexing for high-dimensional
-    * similarity search"): a hyperplane bit is likely WRONG exactly when
-    * the query sits close to that plane (small |dot|), so the best T
-    * probe cells are the signature perturbations minimizing the summed
-    * squared margins of the flipped bits — not all Hamming-1 neighbors
-    * are equally likely to hold neighbors, and a 2-bit flip of two
-    * near-zero margins often beats a 1-bit flip of a confident bit.
+  /** MULTI-PROBE ANN RECALL@K — [[annRecall]] with the probe set chosen by
+    * query margins (Lv et al. 2007, "Multi-probe LSH"): a bit is likely
+    * wrong exactly when the query sits close to its plane, so the best
+    * probes minimize the summed squared margins of the flipped bits.
+    * Measured at a fixed cell budget, mean recall@10: RecallSpec's
+    * clustered corpus (dim 16, bits 10, 11/1024 cells) 0.8583 → 1.0000;
+    * the qs18/qs19 gates (sf0.01, dim 64, bits 8, 9/256 cells) 0.0500 →
+    * 0.0625, where the near-uniform corpus bounds any 9-cell scheme.
     *
-    * Measured at FIXED cell budget, mean recall@10 (the qt46
-    * adjudication discipline — before/after, same budget):
-    *
-    *   - RecallSpec mixture-of-Gaussians corpus (dim 16, bits 10,
-    *     12 queries, budget 11/1024 cells): hamming-1 ball **0.8583**
-    *     → multi-probe **1.0000**
-    *   - qs18/qs19 gate read (sf0.01 embeddings, dim 64, bits 8,
-    *     16 queries, budget 9/256 cells): ball **0.0500** (8 hits)
-    *     → multi-probe **0.0625** (10 hits) — the near-uniform
-    *     synthetic corpus bounds ANY 9-cell scheme near 9/256 ≈ 3.5%
-    *     of mass; the +25% relative is the margin information
-    *
-    * Per-query candidate counts differ only with cell occupancy; the
-    * ball never wins (its probe set is a feasible multi-probe choice).
-    *
-    * Probe selection runs driver-side over the COLLECTED query rows
-    * (bounded `numQueries` by contract, the sanctioned pattern):
-    * µ-margins are integer micro-units (⌊|dot|·10⁶ + ½⌋ — so the mask
-    * ranking is an EXACT integer sort an SQL oracle replays), all
-    * 2^bits masks are scored by Σ µ_b² over set bits and the `nCand`
-    * lowest (score, mask) win; mask 0 (the query's own cell) always
-    * probes first. `bits` ≤ 16 keeps enumeration trivial (65536 masks
-    * × 16 queries); past that, restrict enumeration to the
-    * lowest-margin bits.
-    *
-    * Scale shape: the probe set is a broadcast (`numQueries`·`nCand`
-    * rows); candidates come from an EQUI-join corpus.__sig = probe
-    * cell — against a corpus written partitioned by cell this is
-    * directory pruning, strictly
-    * better than the ball filter's broadcast nested loop. A corpus row
-    * matches at most one cell per query (masks are distinct), so no
-    * dedup is needed. Both top-k sides reduce through the bounded
-    * [[TopKByScore]] aggregator; no Window over the corpus.
+    * The probe masks are an exact integer ranking on the driver
+    * ([[multiProbeMasks]]; `bits` ≤ 16 keeps the 2^bits enumeration
+    * trivial), and candidates come from a broadcast EQUI-join on the cell
+    * key, which is directory pruning against a cell-partitioned corpus.
+    * Masks are distinct, so a corpus row matches one probe per query.
     */
   def annRecallMultiProbe(
-      embs: DataFrame,
-      idCol: String,
-      vecCol: String,
-      dim: Int,
-      k: Int,
-      bits: Int = 8,
-      nCand: Int = 9,
-      numQueries: Int = 16,
-      seed: Long = 42L): DataFrame = {
-    require(k >= 1, s"k must be >= 1, got $k")
-    require(numQueries >= 1, s"numQueries must be >= 1, got $numQueries")
-    require(bits >= 1 && bits <= 16,
-      s"bits must be in [1, 16] (probe enumeration is 2^bits per query), got $bits")
-    require(nCand >= 1 && nCand <= (1 << bits),
-      s"nCand must be in [1, 2^bits], got $nCand")
-    val spark = embs.sparkSession
-    import spark.implicits._
-    val topk = udaf(new TopKByScore(k))
+      embs: DataFrame, idCol: String, vecCol: String, dim: Int, k: Int, bits: Int = 8,
+      nCand: Int = 9, numQueries: Int = 16, seed: Long = 42L): DataFrame = {
+    val planes = probePlanes(dim, bits, nCand, seed)
     val sigd = embs.withColumn(
       "__sig", VectorFunctions.hyperplaneSignature(col(vecCol), dim, bits, seed))
-    val queries = sigd
-      .orderBy(col(idCol))
-      .limit(numQueries)
-      .select(col(idCol).as("__qid"), col(vecCol).as("__qv"),
-        col("__sig").as("__qsig"))
-    // bounded collect (numQueries rows by contract): margins + probe
-    // masks are a driver-side integer computation over 2^bits masks
-    val qrows = queries
-      .select(col("__qid").cast("long"), col("__qv").cast("array<double>"),
-        col("__qsig"))
-      .collect()
-      .map(r => (r.getLong(0), r.getSeq[Double](1).toArray, r.getLong(2)))
-    val rnd = new scala.util.Random(seed)
-    val planes = Seq.fill(bits)(Array.fill(dim)(rnd.nextGaussian()))
-    val probeRows = qrows.flatMap { case (qid, qv, qsig) =>
-      val micro = planes.map { p =>
-        var dot = 0.0; var j = 0
-        while (j < dim) { dot += qv(j) * p(j); j += 1 }
-        math.floor(math.abs(dot) * 1e6 + 0.5).toLong
-      }.toArray
-      multiProbeMasks(micro, bits, nCand).map(m => (qid, qsig ^ m))
+    recallAtK(embs, idCol, vecCol, sigd, k, numQueries) { queries =>
+      val qv = queries.select(col("__qid"), col("__qv"))
+      val probes = probeTable(qv, planes, nCand)
+      sigd
+        .join(broadcast(probes), sigd("__sig") === probes("__cell"))
+        .join(broadcast(qv), Seq("__qid"))
     }
-    val probes = probeRows.toSeq.toDF("__qid", "__cell")
-    val truth = knnDirected(
-      embs, queries.select(col("__qid"), col("__qv")),
-      idCol, vecCol, "__qid", "__qv", k, excludeSelf = true)
-      .select(col("__qid"), col(idCol))
-    val approx = sigd
-      .join(broadcast(probes), sigd("__sig") === probes("__cell"))
-      .join(broadcast(queries.select(col("__qid"), col("__qv"))), Seq("__qid"))
-      .filter(col(idCol) =!= col("__qid"))
-      .withColumn("sim", round(VectorFunctions.cosine(col(vecCol), col("__qv")), 6))
-      .groupBy(col("__qid"))
-      .agg(topk(col("sim"), col(idCol).cast("long")).as("__topk"))
-      .select(col("__qid"), explode(col("__topk")).as("__e"))
-      .select(col("__qid"), col("__e._2").as(idCol))
-    val hits = truth
-      .join(approx, Seq("__qid", idCol), "left_semi")
-      .groupBy(col("__qid"))
-      .agg(count(lit(1)).as("n_hit"))
-    queries
-      .select(col("__qid"))
-      .join(hits, Seq("__qid"), "left")
-      .na.fill(0L, Seq("n_hit"))
-      .select(col("__qid").as("query_id"), col("n_hit"),
-        round(col("n_hit").cast("double") / lit(k.toDouble), 6).as("recall"))
-      .orderBy(col("query_id"))
   }
 
-  /** MULTI-PROBE kNN JOIN — the BATCH search path completing the
-    * multi-probe trio ([[annRecallMultiProbe]] evaluates,
-    * [[multiProbeTopK]] serves one query, this serves a query TABLE):
-    * per query row, the approximate cosine top-k from the
-    * margin-ranked probe cells, at the same fixed `nCand`-cell budget.
-    * Queries are COLLECTED driver-side to compute margins and probe
-    * masks (the [[annRecallMultiProbe]] bounded-queries contract —
-    * queries are the small side of every kNN join in this tier); the
-    * probe set broadcasts and candidates come from the `__sig` EQUI
-    * join, so a cell-partitioned corpus partition-prunes per batch.
-    * Output `(query_id, <idCol>, sim)` — ≤ k rows per query, ranked by
-    * the (6-dp sim DESC, id ASC) tie contract inside the bounded
-    * [[TopKByScore]] aggregator; no Window over the corpus.
+  /** MULTI-PROBE kNN JOIN — [[multiProbeTopK]] for a query table: per
+    * query row, the approximate cosine top k from its margin-ranked probe
+    * cells. Queries collect to the driver for their probe masks, the
+    * probe set broadcasts and candidates come from the `__sig` equi-join.
+    * Output `(query_id, <idCol>, sim)`, ≤ k rows per query.
     */
   def multiProbeKnnJoin(
-      corpus: DataFrame,
-      queries: DataFrame,
-      idCol: String,
-      vecCol: String,
-      qIdCol: String,
-      qVecCol: String,
-      dim: Int,
-      k: Int,
-      bits: Int = 8,
-      nCand: Int = 9,
+      corpus: DataFrame, queries: DataFrame, idCol: String, vecCol: String,
+      qIdCol: String, qVecCol: String, dim: Int, k: Int, bits: Int = 8, nCand: Int = 9,
       seed: Long = 42L): DataFrame = {
     require(k >= 1, s"k must be >= 1, got $k")
-    require(bits >= 1 && bits <= 16,
-      s"bits must be in [1, 16] (probe enumeration is 2^bits per query), got $bits")
-    require(nCand >= 1 && nCand <= (1 << bits),
-      s"nCand must be in [1, 2^bits], got $nCand")
-    val spark = corpus.sparkSession
-    import spark.implicits._
-    val topk = udaf(new TopKByScore(k))
-    val sigd = corpus.withColumn(
-      "__sig", VectorFunctions.hyperplaneSignature(col(vecCol), dim, bits, seed))
-    val qrows = queries
-      .select(col(qIdCol).cast("long").as("__qid"),
-        col(qVecCol).cast("array<double>").as("__qv"))
-      .collect()
-      .map(r => (r.getLong(0), r.getSeq[Double](1).toArray))
-    val rnd = new scala.util.Random(seed)
-    val planes = Seq.fill(bits)(Array.fill(dim)(rnd.nextGaussian()))
-    val probeRows = qrows.flatMap { case (qid, qv) =>
-      var qCell = 0L
-      val micro = new Array[Long](bits)
-      planes.zipWithIndex.foreach { case (p, b) =>
-        var dot = 0.0; var j = 0
-        while (j < dim) { dot += qv(j) * p(j); j += 1 }
-        if (dot >= 0.0) qCell |= 1L << b
-        micro(b) = math.floor(math.abs(dot) * 1e6 + 0.5).toLong
-      }
-      multiProbeMasks(micro, bits, nCand).map(m => (qid, qCell ^ m))
-    }
-    val probes = probeRows.toSeq.toDF("__qid", "__cell")
     val qv = queries.select(col(qIdCol).cast("long").as("__qid"),
       col(qVecCol).as("__qv"))
-    sigd
+    val probes = probeTable(qv, probePlanes(dim, bits, nCand, seed), nCand)
+    val sigd = corpus.withColumn(
+      "__sig", VectorFunctions.hyperplaneSignature(col(vecCol), dim, bits, seed))
+    val cands = sigd
       .join(broadcast(probes), sigd("__sig") === probes("__cell"))
       .join(broadcast(qv), Seq("__qid"))
-      .withColumn("sim", round(VectorFunctions.cosine(col(vecCol), col("__qv")), 6))
-      .groupBy(col("__qid"))
-      .agg(topk(col("sim"), col(idCol).cast("long")).as("__topk"))
-      .select(col("__qid").as("query_id"), explode(col("__topk")).as("__e"))
-      .select(col("query_id"), col("__e._2").as(idCol), col("__e._1").as("sim"))
+      .withColumn("sim", sim6(col(vecCol), col("__qv")))
+    topKPerGroup(cands, "__qid", "sim", idCol, k)
+      .select(col("__qid").as("query_id"), col(idCol), col("sim"))
   }
 
   /** The `nCand` lowest-(Σ flipped µ-margin², mask) probe masks over
@@ -917,21 +644,14 @@ object Similarity {
 
   // ------------------------------------------------ product quantization
 
-  /** Deterministic PQ codebook (Jégou et al. 2011, "Product Quantization
-    * for Nearest Neighbor Search"): the vector space splits into `m`
-    * subspaces and each subspace gets `k` centroids. Centroids here are
-    * the subvectors of the `k` LOWEST-ID corpus vectors — a deterministic
-    * seed codebook, the same replayability trade [[ivfTopK]] makes with
-    * hyperplane pseudo-centroids (an SQL oracle can re-derive it exactly;
-    * swap in [[kmeans]]-refined sub-codebooks when recall matters more
-    * than oracle-exactness). Collected driver-side: k rows by contract,
-    * the sanctioned bounded-side pattern. Returns `[subspace][code][dsub]`.
+  /** Deterministic PQ codebook (Jégou et al. 2011): the space splits into
+    * `m` subspaces with `k` centroids each, taken from the `k` lowest-id
+    * vectors, so an SQL oracle re-derives it exactly ([[pqCodebookKmeans]]
+    * trades that for recall). Collected on the driver (k rows). Returns
+    * `[subspace][code][dsub]`.
     */
   def pqCodebook(
-      embs: DataFrame,
-      idCol: String,
-      vecCol: String,
-      m: Int,
+      embs: DataFrame, idCol: String, vecCol: String, m: Int,
       k: Int): Array[Array[Array[Double]]] = {
     val seeds = embs
       .orderBy(col(idCol))
@@ -944,21 +664,14 @@ object Similarity {
     Array.tabulate(m, k)((s, c) => seeds(c).slice(s * dsub, (s + 1) * dsub))
   }
 
-  /** Lloyd-refined PQ codebook — the PRODUCTION codebook: per subspace,
-    * [[kmeans]] over the corpus's subvectors (deterministic init = the k
-    * lowest-id subvectors, so the whole artifact is reproducible).
-    * Higher recall than the seed codebook at the same code budget
-    * (RecallSpec measures both); the trade is SQL-replayability, which
-    * is why the oracle gate (qs7) keeps the seed form. m driver-looped
-    * Lloyd runs = m·iters small jobs — ingest-time cost, amortized over
-    * every query against the stored codes.
+  /** Lloyd-refined PQ codebook: per subspace, [[kmeans]] over the
+    * corpus's subvectors (init = the k lowest-id subvectors, so it is
+    * reproducible). Higher recall than [[pqCodebook]] at the same code
+    * budget (RecallSpec), at the cost of SQL replay; m·iters small jobs
+    * at ingest.
     */
   def pqCodebookKmeans(
-      embs: DataFrame,
-      idCol: String,
-      vecCol: String,
-      m: Int,
-      k: Int,
+      embs: DataFrame, idCol: String, vecCol: String, m: Int, k: Int,
       iters: Int = 4): Array[Array[Array[Double]]] = {
     val dim = embs.select(size(col(vecCol))).first().getInt(0)
     val dsub = dim / m
@@ -970,41 +683,20 @@ object Similarity {
     }
   }
 
-  /** PQ-encode the corpus: each vector becomes `m` small codes (one byte
-    * each at k ≤ 256) — the 100 TB ANN memory story: a 64-float vector
-    * (256 B) compresses to m = 8 bytes, so the scan side of a query reads
-    * 32× less. Per (vector, subspace) the code is the argmin-L2² centroid,
-    * distances rounded to 6 dp before the argmin so FP summation order can
-    * never flip a near-tie (ties then break toward the lowest code — both
-    * rules replayed exactly by the SQL oracle).
+  /** PQ-encode the corpus: each vector becomes `m` codes, a 64-float
+    * vector (256 B) m = 8 bytes. Per (vector, subspace) the code is the
+    * argmin of the 6-dp-rounded L2² to each centroid, lowest code on ties,
+    * both rules the oracle replays.
     */
   def pqEncode(
-      embs: DataFrame,
-      idCol: String,
-      vecCol: String,
+      embs: DataFrame, idCol: String, vecCol: String,
       codebook: Array[Array[Array[Double]]]): DataFrame = {
     val bc = embs.sparkSession.sparkContext.broadcast(codebook)
     val enc = udf { (v: Seq[Double]) =>
       val cb = bc.value
-      val m = cb.length
       val dsub = cb(0)(0).length
-      Array.tabulate(m) { s =>
-        var best = 0
-        var bestD = Double.MaxValue
-        var c = 0
-        while (c < cb(s).length) {
-          var d = 0.0
-          var j = 0
-          while (j < dsub) {
-            val diff = v(s * dsub + j) - cb(s)(c)(j)
-            d += diff * diff
-            j += 1
-          }
-          val dr = math.floor(d * 1e6 + 0.5) / 1e6
-          if (dr < bestD) { bestD = dr; best = c }
-          c += 1
-        }
-        best
+      Array.tabulate(cb.length) { s =>
+        argmin(cb(s).length)(c => round6(sqL2(v, s * dsub, cb(s)(c), dsub)))
       }
     }
     embs.select(
@@ -1012,54 +704,29 @@ object Similarity {
       enc(col(vecCol).cast("array<double>")).as("codes"))
   }
 
-  /** Asymmetric-distance (ADC) approximate top-k over PQ codes: the query
-    * is NOT quantized — per subspace a 256-entry table of exact
-    * query-to-centroid L2² distances is computed once on the driver
-    * (k·m doubles, broadcast with the codebook), and a candidate's
-    * distance is the sum of m table lookups. The corpus-side work is a
-    * lookup-sum over m bytes per vector — no float vector is ever read
-    * at query time — followed by TakeOrdered for the k-cut. Per-subspace
-    * table entries and the final sum are rounded to 6 dp (the qs1
-    * contract) so the ranking is FP-stable and SQL-replayable; ties break
-    * on ascending id.
+  /** Asymmetric-distance (ADC) top-k over PQ codes: the query is not
+    * quantized; per subspace the exact query-to-centroid L2² table is
+    * built once on the driver, and a candidate's distance is the sum of
+    * its m lookups — no float vector is read at query time. Table entries
+    * and sums round to 6 dp; ties break on ascending id.
     */
   def pqTopK(
-      embs: DataFrame,
-      idCol: String,
-      vecCol: String,
-      query: Array[Double],
-      topK: Int,
-      m: Int = 8,
-      k: Int = 16): DataFrame = {
+      embs: DataFrame, idCol: String, vecCol: String, query: Array[Double], topK: Int,
+      m: Int = 8, k: Int = 16): DataFrame = {
     val codebook = pqCodebook(embs, idCol, vecCol, m, k)
     pqTopKFromCodes(pqEncode(embs, idCol, vecCol, codebook), idCol, codebook, query, topK)
   }
 
-  /** ADC top-k over a STORED codes table — the amortized production
-    * shape: [[pqEncode]] runs once at ingest and the codes parquet (m
-    * bytes + id per vector) is what every query scans; no float vector
-    * is read at query time at all. [[pqTopK]] is this plus an inline
-    * encode (what the oracle gate exercises); at 100 TB the inline form
-    * is only for one-off queries — persist the codes.
+  /** ADC top-k over a STORED codes table: [[pqEncode]] runs once at
+    * ingest and queries scan m bytes + id per vector; [[pqTopK]] is this
+    * plus an inline encode.
     */
   def pqTopKFromCodes(
-      codes: DataFrame,
-      idCol: String,
-      codebook: Array[Array[Array[Double]]],
-      query: Array[Double],
-      topK: Int): DataFrame = {
-    val m = codebook.length
-    val k = codebook(0).length
-    val dsub = query.length / m
-    val table = Array.tabulate(m, k) { (s, c) =>
-      var d = 0.0
-      var j = 0
-      while (j < dsub) {
-        val diff = query(s * dsub + j) - codebook(s)(c)(j)
-        d += diff * diff
-        j += 1
-      }
-      math.floor(d * 1e6 + 0.5) / 1e6
+      codes: DataFrame, idCol: String, codebook: Array[Array[Array[Double]]],
+      query: Array[Double], topK: Int): DataFrame = {
+    val dsub = query.length / codebook.length
+    val table = Array.tabulate(codebook.length, codebook(0).length) { (s, c) =>
+      round6(sqL2(query(_), s * dsub, codebook(s)(c), dsub))
     }
     val bc = codes.sparkSession.sparkContext.broadcast(table)
     val adc = udf { (cs: Seq[Int]) =>
@@ -1067,54 +734,27 @@ object Similarity {
       var acc = 0.0
       var s = 0
       while (s < cs.length) { acc += t(s)(cs(s)); s += 1 }
-      math.floor(acc * 1e6 + 0.5) / 1e6
+      round6(acc)
     }
-    codes
-      .select(col(idCol), adc(col("codes")).as("adc"))
-      .orderBy(col("adc"), col(idCol))
-      .limit(topK)
+    this.topK(codes.select(col(idCol), adc(col("codes")).as("adc")), "adc", idCol, topK,
+      ascending = true)
   }
 
-  /** IVF·PQ — the FAISS-standard two-level composition: a COARSE
-    * seed-cell quantizer prunes the corpus to the query's `nProbe`
-    * nearest cells (partition pruning when the codes table is written
-    * partitioned by cell), then ADC over the FINE per-subspace codes
-    * ranks only the survivors. The memory story multiplies: the scan
-    * reads nProbe/nCells of the corpus AND m bytes per vector instead
-    * of the float row — at 100 TB that is the difference between a
-    * full-table scan and a few directory reads.
-    *
-    * Replay contract: the coarse quantizer is the qd14 seed-cell
-    * assignment (argmin of 6-dp-rounded L2², lowest index ties; the
-    * query's probe set uses the SAME rule driver-side), and the fine
-    * stage is [[pqTopKFromCodes]] with the qs7 full-corpus seed
-    * codebook — both rules an SQL oracle re-derives exactly.
+  /** IVF·PQ — the FAISS two-level composition: a coarse seed-cell
+    * quantizer keeps the corpus rows in the query's `nProbe` nearest cells
+    * (the [[mutualKnn]] assignment rule, used for the query's probes too),
+    * then [[pqTopKFromCodes]] with the full-corpus seed codebook ranks the
+    * survivors. Both rules replay in SQL.
     */
   def ivfPqTopK(
-      embs: DataFrame,
-      idCol: String,
-      vecCol: String,
-      query: Array[Double],
-      topK: Int,
-      nCells: Int = 8,
-      nProbe: Int = 2,
-      m: Int = 8,
-      k: Int = 16): DataFrame = {
+      embs: DataFrame, idCol: String, vecCol: String, query: Array[Double], topK: Int,
+      nCells: Int = 8, nProbe: Int = 2, m: Int = 8, k: Int = 16): DataFrame = {
     require(nProbe >= 1 && nProbe <= nCells,
       s"nProbe must be in [1, nCells], got $nProbe")
-    val coarse = pqCodebook(embs, idCol, vecCol, 1, nCells)
-    val probes = coarse(0).zipWithIndex
-      .map { case (cent, i) =>
-        var d = 0.0
-        var j = 0
-        val n = math.min(cent.length, query.length)
-        while (j < n) { val diff = query(j) - cent(j); d += diff * diff; j += 1 }
-        (math.floor(d * 1e6 + 0.5) / 1e6, i)
-      }
-      .sortBy(identity)
-      .take(nProbe)
-      .map(_._2)
-    val probedIds = pqEncode(embs, idCol, vecCol, coarse)
+    val coarse = pqCodebook(embs, idCol, vecCol, 1, nCells)(0)
+    def dist(i: Int) = round6(sqL2(query(_), 0, coarse(i), math.min(coarse(i).length, query.length)))
+    val probes = coarse.indices.sortBy(i => (dist(i), i)).take(nProbe)
+    val probedIds = pqEncode(embs, idCol, vecCol, Array(coarse))
       .select(col(idCol), col("codes").getItem(0).as("__cell"))
       .filter(col("__cell").isin(probes.map(Integer.valueOf): _*))
       .select(col(idCol))
@@ -1123,28 +763,21 @@ object Similarity {
     pqTopKFromCodes(pqEncode(subset, idCol, vecCol, fine), idCol, fine, query, topK)
   }
 
+  // ------------------------------------------------ re-ranking a pool
+
   /** Discount weights 1/log₂(i+1) for NDCG ranks 1..10 as exact
-    * shortest-repr DOUBLE LITERALS — computing log₂ at runtime hands
-    * the constant to libm (not correctly-rounded across engines);
-    * parsing the same decimal string yields the same double everywhere.
+    * shortest-repr double literals: log₂ at runtime goes to libm, which
+    * is not correctly rounded across engines.
     */
   private val NdcgWeights = Seq(
     1.0, 0.6309297535714575, 0.5, 0.43067655807339306,
     0.38685280723454163, 0.3562071871080222, 0.3333333333333333,
     0.31546487678572877, 0.3010299956639812, 0.2890648263178879)
 
-  /** NDCG@k — the graded ranking-quality metric (Järvelin & Kekäläinen
-    * 2002): how close the similarity ranking's relevance ordering is to
-    * ideal, `NDCG = Σ relᵢ·wᵢ / Σ rel*ᵢ·wᵢ` with logarithmic discounts
-    * and the ideal being the corpus's best-possible top-k. The standard
-    * retrieval-eval readout next to recall (RecallSpec) and calibration
-    * (qp8).
-    *
-    * Cross-engine exact: the ranking cut is the qs1 rounded-cosine
-    * contract, relevance labels are integers, discounts are LITERAL
-    * doubles, and both DCG sums fold in RANK ORDER (never an unordered
-    * double aggregate). One corpus scan per ranking (the top-k cuts are
-    * TakeOrdered), k-row folds after.
+  /** NDCG@k (Järvelin & Kekäläinen 2002) of the cosine top k against
+    * integer relevance labels: `Σ relᵢ·wᵢ / Σ rel*ᵢ·wᵢ`, the ideal being
+    * the corpus's best-possible top k. Both sums fold in RANK ORDER over
+    * literal discounts, never as an unordered double aggregate.
     */
   def ndcgAtK(
       embs: DataFrame, idCol: String, vecCol: String, labelCol: String,
@@ -1182,31 +815,20 @@ object Similarity {
         lit(k).as("k"))
   }
 
-  /** MMR DIVERSITY RE-RANKING (Carbonell & Goldstein 1998) — the
-    * redundancy-aware top-k every retrieval/RAG stack ships: from a
-    * relevance-ranked candidate pool, greedily pick
-    * `argmax λ·rel(c) − (1−λ)·max_{s∈picked} sim(c, s)` so each next
-    * result is relevant AND far from what's already chosen (plain
-    * top-k returns k near-duplicates of the best hit).
+  /** MMR DIVERSITY RE-RANKING (Carbonell & Goldstein 1998): from the
+    * cosine top-`poolK` pool, greedily pick
+    * `argmax λ·rel(c) − (1−λ)·max_{s∈picked} sim(c, s)`, so each next
+    * result is relevant AND far from what is already chosen.
     *
-    * Sequential BY DEFINITION (each pick changes the next objective),
-    * so it runs as k let-bound fold steps over ONE packed candidate
-    * row — the qe28 idiom, each step's state bound as a lambda var the
-    * optimizer cannot inline. Cross-engine exact: the pool cut and all
-    * pairwise similarities are 6-dp-ROUNDED cosines (the qs1 replay
-    * chain), λ is dyadic, and the greedy compares the one-subtract
-    * IEEE objective on those identical operands with a smallest-id tie
-    * break — the qe30-style argmax-as-max(struct) replays in SQL.
-    *
-    * Scale shape: the expensive part stays the distributed pool scan
-    * ([[bruteForceTopK]]); the greedy is O(k·poolK) cosines over one
-    * poolK-row packed array — driver-free, shuffle-free, constant-
-    * bounded by contract (poolK ≤ 1000).
+    * Sequential by definition, so it runs as k let-bound fold steps over
+    * one packed candidate row (the qe28 idiom). Cross-engine exact: every
+    * similarity is a 6-dp cosine, λ is dyadic and ties go to the smallest
+    * id. The distributed cost is the pool scan; the greedy is O(k·poolK)
+    * cosines over one row (poolK ≤ 1000).
     */
   def mmrRerank(
       embs: DataFrame, idCol: String, vecCol: String,
-      query: Array[Double], poolK: Int, k: Int,
-      lambda: Double): DataFrame = {
+      query: Array[Double], poolK: Int, k: Int, lambda: Double): DataFrame = {
     require(k >= 1 && poolK >= k && poolK <= 1000,
       s"need 1 <= k <= poolK <= 1000, got k=$k poolK=$poolK")
     def dyadic(x: Double) = (x * 1024.0) == math.rint(x * 1024.0)
@@ -1230,8 +852,7 @@ object Similarity {
           e => !exists(p, q => q("id") === e("id")))
         val bestOf = array_max(transform(remaining, e => {
           val ms = coalesce(
-            array_max(transform(p,
-              q => round(VectorFunctions.cosine(e("emb"), q("emb")), 6))),
+            array_max(transform(p, q => sim6(e("emb"), q("emb")))),
             lit(0.0))
           struct(
             (lit(lambda) * e("rel") - lit(mu) * ms).as("s"),
@@ -1254,14 +875,21 @@ object Similarity {
   }
 }
 
-/** Bounded top-k by (score desc, id asc) as a typed Aggregator. The buffer
-  * never exceeds k entries, so the partial→final shuffle carries at most
-  * k rows per (group, partition) regardless of input cardinality — this is
-  * what makes [[Similarity.knnJoin]] scale-safe. Buffer is kept sorted
-  * best-first; the common full-buffer-and-worse-than-last case is a single
+/** Bounded top-k by (score desc, id asc) as a typed Aggregator: the
+  * buffer never exceeds k entries, so the partial → final shuffle carries
+  * at most k rows per (group, partition). The buffer stays sorted
+  * best-first, and the common full-and-worse-than-last case is one
   * comparison with no allocation.
+  *
+  * `distinct` makes an incoming (score, id) already in the buffer a
+  * no-op, for candidate generators that emit the same pair twice (the
+  * multi-probe cell join of [[Similarity.mutualKnn]]; the score is a pure
+  * function of the pair, so the copies are equal). Two ids with equal
+  * scores still take two slots. `merge` re-checks membership, so copies
+  * split across partitions merge into one, and a copy whose twin was
+  * evicted meets the same rejection.
   */
-final class TopKByScore(k: Int)
+final class TopKByScore(k: Int, distinct: Boolean = false)
     extends org.apache.spark.sql.expressions.Aggregator[(Double, Long), Seq[(Double, Long)], Seq[(Double, Long)]] {
   require(k > 0, s"k must be positive, got $k")
 
@@ -1275,50 +903,7 @@ final class TopKByScore(k: Int)
 
   private def insert(buf: Seq[(Double, Long)], in: (Double, Long)): Seq[(Double, Long)] = {
     if (buf.length >= k && !better(in, buf.last)) buf // hot path: no alloc
-    else {
-      val i = buf.indexWhere(e => better(in, e))
-      val grown = if (i < 0) buf :+ in else (buf.take(i) :+ in) ++ buf.drop(i)
-      if (grown.length > k) grown.take(k) else grown
-    }
-  }
-
-  override def zero: Seq[(Double, Long)] = Vector.empty
-  override def reduce(buf: Seq[(Double, Long)], in: (Double, Long)): Seq[(Double, Long)] = insert(buf, in)
-  override def merge(a: Seq[(Double, Long)], b: Seq[(Double, Long)]): Seq[(Double, Long)] = b.foldLeft(a)(insert)
-  override def finish(r: Seq[(Double, Long)]): Seq[(Double, Long)] = r
-  override def bufferEncoder: org.apache.spark.sql.Encoder[Seq[(Double, Long)]] =
-    org.apache.spark.sql.catalyst.encoders.ExpressionEncoder()
-  override def outputEncoder: org.apache.spark.sql.Encoder[Seq[(Double, Long)]] =
-    org.apache.spark.sql.catalyst.encoders.ExpressionEncoder()
-}
-
-/** [[TopKByScore]] with EXACT-DUPLICATE suppression: an incoming
-  * (score, id) already present in the buffer is a no-op instead of
-  * occupying a second rank slot. Exists for candidate generators that
-  * can emit the same pair more than once (multi-probe cell joins in
-  * [[Similarity.mutualKnn]] — a pair sharing both probed cells arrives
-  * twice with the SAME rounded score, because the score is a pure
-  * function of the pair). Only exact duplicates are suppressed; two
-  * distinct ids with equal scores still take two slots, tie-broken by
-  * ascending id as in the base aggregator.
-  *
-  * Correctness under partial aggregation: duplicates split across
-  * partitions each enter their partial buffer once; `merge` re-checks
-  * membership, so the merged buffer holds one copy. A duplicate whose
-  * twin was evicted re-evaluates to the same rejection the twin got.
-  */
-final class TopKDistinctByScore(k: Int)
-    extends org.apache.spark.sql.expressions.Aggregator[(Double, Long), Seq[(Double, Long)], Seq[(Double, Long)]] {
-  require(k > 0, s"k must be positive, got $k")
-
-  private def better(a: (Double, Long), b: (Double, Long)): Boolean = {
-    val c = java.lang.Double.compare(a._1, b._1)
-    c > 0 || (c == 0 && a._2 < b._2)
-  }
-
-  private def insert(buf: Seq[(Double, Long)], in: (Double, Long)): Seq[(Double, Long)] = {
-    if (buf.length >= k && !better(in, buf.last)) buf
-    else if (buf.contains(in)) buf
+    else if (distinct && buf.contains(in)) buf
     else {
       val i = buf.indexWhere(e => better(in, e))
       val grown = if (i < 0) buf :+ in else (buf.take(i) :+ in) ++ buf.drop(i)

@@ -1464,7 +1464,7 @@ object TextAnalysis {
     * 6-dp round exists to close.
     *
     * Scale shape: where qt45's global form cuts with TakeOrdered, the
-    * per-key cut rides the qs5 BOUNDED AGGREGATOR ([[TopKByScore]] —
+    * per-key cut rides the qs5 BOUNDED AGGREGATOR ([[Similarity.topKPerGroup]] —
     * ≤ k entries per (key, partition) cross the shuffle, map-side
     * partials), NOT a per-key window: a window form would sort every
     * key's full row set, one task per key — the qp-family superlinear
@@ -1492,14 +1492,9 @@ object TextAnalysis {
         && col(idCol).isNotNull)
       .select(col(keyCol).as("__g"), col(idCol).cast("long").as("__id"),
         round(log(u) / col(weightCol).cast("double"), 6).as("__key"))
-    val topk = udaf(new TopKByScore(k))
-    val sel = keyed
-      .groupBy(col("__g"))
-      .agg(topk(col("__key"), col("__id")).as("__topk"))
-      .select(col("__g"), posexplode(col("__topk")))
-      .select(col("__g"), col("col._2").as("id"),
-        col("col._1").as("sample_key"),
-        (col("pos") + 1).cast("long").as("rank"))
+    val sel = Similarity.topKPerGroup(keyed, "__g", "__key", "__id", k)
+      .select(col("__g"), col("__id").as("id"), col("__key").as("sample_key"),
+        col("rank"))
     docs
       .filter(col(weightCol).isNotNull && col(weightCol) > 0
         && col(idCol).isNotNull)

@@ -879,6 +879,33 @@ class OperatorsSpec extends AnyFunSuite with TempDirs {
     }
   }
 
+  test("TopKByScore over 3 partitions: (score desc, id asc), NaN first, " +
+      "at most k, distinct drops a split duplicate but not a score tie") {
+    import spark.implicits._
+    // one group in three slices; (0.5, 7) sits in slices 0 and 2, so the
+    // distinct check must hold across the partial → final merge
+    val rows = Seq(
+      (0.5, 7L), (0.9, 3L), (Double.NaN, 9L),
+      (0.9, 1L), (0.2, 4L), (Double.NegativeInfinity, 2L),
+      (0.5, 7L), (0.5, 6L), (1.0, 8L))
+    val df = spark.sparkContext.parallelize(rows, 3).toDF("score", "id")
+    assert(df.rdd.getNumPartitions == 3)
+    def top(f: org.apache.spark.sql.expressions.UserDefinedFunction): Seq[(Double, Long)] =
+      df.groupBy(lit(1)).agg(f(col("score"), col("id")).as("t")).select("t")
+        .head().getSeq[org.apache.spark.sql.Row](0)
+        .map(r => (r.getDouble(0), r.getLong(1)))
+    def ids(s: Seq[(Double, Long)]) = s.map(_._2)
+    assert(top(udaf(new TopKByScore(7))).head._1.isNaN)
+    assert(ids(top(udaf(new TopKByScore(7)))) == Seq(9L, 8L, 1L, 3L, 6L, 7L, 7L))
+    assert(ids(top(udaf(new TopKByScore(20)))) == Seq(9L, 8L, 1L, 3L, 6L, 7L, 7L, 4L, 2L))
+    assert(ids(top(udaf(new TopKByScore(2)))) == Seq(9L, 8L))
+    val distinct7 = top(udaf(new TopKByScore(7, distinct = true)))
+    assert(ids(distinct7) == Seq(9L, 8L, 1L, 3L, 6L, 7L, 4L))
+    assert(distinct7.count(_ == ((0.5, 7L))) == 1)
+    assert(ids(top(udaf(new TopKByScore(20, distinct = true)))) ==
+      Seq(9L, 8L, 1L, 3L, 6L, 7L, 4L, 2L))
+  }
+
   test("mutualKnn: reciprocal pairs only, no self-match, symmetric sim, " +
       "hub's one-way neighbour excluded") {
     import spark.implicits._

@@ -1,16 +1,20 @@
-package graft.graph
+package graft
 
 import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions.{array, col, count, count_if, explode, greatest, least, lit, struct}
 import org.slf4j.LoggerFactory
 
-/** The graph tier's shared fixpoint machinery: data-sized partition
-  * counts, the checkpointed probe tables every iterative operator reads
-  * each round, and the two round drivers — [[fixedRounds]] for a fixed
-  * round count, [[untilStable]] for a fixpoint — that checkpoint each
-  * round, observe convergence and enforce the round bound.
+/** The engine's one round loop and materialize-and-count module:
+  * data-sized partition counts, [[checkpointCounted]] (materialize a
+  * frame and learn its size in the same job), the checkpointed probe
+  * tables every iterative operator reads each round, and the two round
+  * drivers — [[fixedRounds]] for a fixed round count, [[untilStable]]
+  * for a fixpoint — that checkpoint each round, observe convergence and
+  * enforce the round bound. The graph tier's fixpoints, TextRank and
+  * the dedup tier's star contraction all run on these drivers; the few
+  * round loops left outside say why in their scaladoc.
   */
-private[graph] object Iterate {
+private[graft] object Iterate {
   private val log = LoggerFactory.getLogger(getClass)
 
   /** Partition count for a frame of `rows` rows: one partition per
@@ -24,8 +28,10 @@ private[graph] object Iterate {
 
   /** `df` `localCheckpoint`ed, plus its row count observed inside the
     * checkpoint's own job — sizing a table costs no separate count job.
+    * The one materialize-and-count call: a `checkpoint; count()` pair
+    * or a `cache(); count()` pair is two jobs where this is one.
     */
-  private def checkpointCounted(df: DataFrame): (DataFrame, Long) = {
+  def checkpointCounted(df: DataFrame): (DataFrame, Long) = {
     val obs = new Observation()
     val cp = df.observe(obs, count(lit(1)).as("rows")).localCheckpoint(true)
     (cp, obs.get("rows").asInstanceOf[Long])
@@ -91,7 +97,7 @@ private[graph] object Iterate {
     * the first round that flags no row and does not shrink the state.
     * A loop that adds or improves rows flags them; a peel that only
     * removes rows flags nothing and stops on the first round that
-    * removes none. Growth alone does not count: [[Bfs.minPlus]] adds
+    * removes none. Growth alone does not count: [[graph.Bfs.minPlus]] adds
     * rows in the first of its two steps and is stable when the second
     * improves nothing.
     *

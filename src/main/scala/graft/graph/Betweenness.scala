@@ -3,6 +3,8 @@ package graft.graph
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.Iterate
+
 /** BETWEENNESS CENTRALITY by pivot sampling (Brandes 2001 for the
   * per-source dependency accumulation; Brandes & Pich 2007 for the
   * pivot estimator) — the shortest-path brokerage score: how many
@@ -20,8 +22,11 @@ import org.apache.spark.sql.functions._
   * pivot count, and the σ counts sum map-side. The backward pass walks
   * BFS layers deepest-first, each layer one join against the layer
   * below (δ(v) = Σ_{w∈succ(v)} σ_v/σ_w·(1+δ_w)). Rounds are bounded by
-  * the DIAMETER both ways, and every round's state `localCheckpoint`s —
-  * K rounds never stack K join plans (the qg9 lineage lesson). Total
+  * the DIAMETER both ways: the forward BFS runs on
+  * [[Iterate.untilStable]], the backward sweep on [[Iterate.fixedRounds]]
+  * (one round per layer, the count known once the BFS has stopped), so
+  * every round's state `localCheckpoint`s — K rounds never stack K join
+  * plans (the qg9 lineage lesson). Total
   * state is |S|·n rows max; at 100 TB-scale graphs |S| is the knob that
   * keeps it executor-resident, and the estimator's error shrinks as
   * O(1/√|S|) (Brandes-Pich), independent of n.
@@ -123,14 +128,16 @@ object Betweenness {
 
     // backward dependency accumulation, deepest layer first:
     // δ(v) = Σ over successors w (dist(w) = dist(v)+1, edge v–w) of
-    // σ_v/σ_w · (1 + δ_w); the deepest layer has no successors (δ = 0)
-    var below = bfs.filter(col("dist") === maxD)
-      .select(col("p"), col("v"), col("sigma"), lit(0.0).as("delta"))
-      .localCheckpoint(true)
-    var acc = below
-    var layerD = maxD - 1
-    while (layerD >= 0) {
-      val layer = bfs.filter(col("dist") === layerD)
+    // σ_v/σ_w · (1 + δ_w); the deepest layer has no successors (δ = 0).
+    // Round r computes layer maxD − r from `below`, the checkpointed
+    // layer under it, and gathers `below` into the union
+    var layers = Vector.empty[DataFrame]
+    val top = Iterate.fixedRounds(
+      bfs.filter(col("dist") === maxD)
+        .select(col("p"), col("v"), col("sigma"), lit(0.0).as("delta")),
+      maxD, "Betweenness.run backward") { (below, round) =>
+      layers :+= below
+      val layer = bfs.filter(col("dist") === maxD - round)
       val contrib = layer
         .join(ed, Seq("v"))
         .join(
@@ -140,15 +147,12 @@ object Betweenness {
         .groupBy("p", "v")
         .agg(sum(col("sigma").cast("double") / col("__sw") * (lit(1.0) + col("__dw")))
           .as("__contrib"))
-      val layerDelta = layer
+      layer
         .join(contrib, Seq("p", "v"), "left_outer")
         .select(col("p"), col("v"), col("sigma"),
           coalesce(col("__contrib"), lit(0.0)).as("delta"))
-        .localCheckpoint(true)
-      acc = acc.unionAll(layerDelta)
-      below = layerDelta
-      layerD -= 1
     }
+    val acc = (layers :+ top).reduce(_ unionAll _)
     // endpoints excluded (v = p is the dist-0 row); halve the directed
     // sum (each unordered pair counted from both ends in an undirected
     // graph), scale the pivot estimate by n/k

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions.{col, greatest, least, lit, min, when}
 import org.apache.spark.sql.types.{DoubleType, IntegerType, LongType, StructField, StructType}
 
+import graft.Iterate
+
 /** SINGLE-SOURCE BFS HOP DISTANCE — unweighted shortest-path layers
   * from one source over an undirected graph: the reachability/radius
   * primitive under "how many hops from the seed set?" curation
@@ -16,11 +18,12 @@ import org.apache.spark.sql.types.{DoubleType, IntegerType, LongType, StructFiel
   * worst) against the adjacency list on the node key, anti-joins the
   * visited set, and the new layer becomes round d+1's frontier. Every
   * join is id-keyed (the edge payload never travels wider than
-  * (v, w)); the visited table `localCheckpoint`s per round so D
-  * rounds never stack D join plans (the qg9/KCore lineage lesson).
+  * (v, w)); each new layer `localCheckpoint`s, so D rounds never
+  * stack D join plans (the qg9/KCore lineage lesson).
   * Rounds are bounded by the graph's eccentricity from the source,
-  * not the vertex count. One `count()` action per round detects the
-  * empty frontier.
+  * not the vertex count. Each round is one job: the new layer's size,
+  * which detects the empty frontier, is observed inside its own
+  * checkpoint ([[Iterate.checkpointCounted]]).
   *
   * Unreachable nodes emit nothing; the source emits (source, 0) even
   * when isolated (BFS of a seed is defined on the seed).
@@ -32,6 +35,11 @@ object Bfs {
     * self-loops — canonicalized first. Throws if the frontier is still
     * non-empty after `maxDepth` rounds (a diameter guard, not a
     * truncation — silent cutoffs would mislabel distances).
+    *
+    * The round loop stays outside [[Iterate]]'s drivers, which
+    * checkpoint the whole state every round: `hops` unions checkpointed
+    * layers so it never rewrites `visited`, where a round driver would
+    * re-materialize every earlier layer each round — O(D·V) writes.
     */
   def hops(
       edges: DataFrame,
@@ -56,15 +64,13 @@ object Bfs {
     var d = 0
     var grew = true
     while (grew) {
-      val next = ed
+      val (next, n) = Iterate.checkpointCounted(ed
         .join(frontier.select(col("node").as("v")), Seq("v"))
         .select(col("w").as("node"))
         .distinct()
         .join(visited, Seq("node"), "left_anti")
         .select(col("node"), lit(d + 1).as("dist"))
-        .coalesce(parts)
-        .localCheckpoint(true)
-      val n = next.count()
+        .coalesce(parts))
       grew = n > 0L
       if (grew) {
         d += 1

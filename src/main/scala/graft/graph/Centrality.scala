@@ -3,6 +3,7 @@ package graft.graph
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.Iterate
 import graft.operators.Sketches
 
 /** DISTANCE-BASED CENTRALITIES — closeness and harmonic: how NEAR a
@@ -446,6 +447,13 @@ object Centrality {
     * reads N(t)) skips the per-round global sum over the n-row state —
     * one action fewer per distance layer; the returned vector is
     * empty. Only [[effectiveDiameterHyperBall]] pays for N(t).
+    *
+    * The loop stays off [[Iterate]]'s drivers: `maxIter` truncates
+    * (the estimate at round `maxIter` is the answer) where
+    * [[Iterate.untilStable]]'s bound throws, and each round
+    * checkpoints two tables — the registers and the per-node
+    * accumulator, which reads the checkpointed registers — where a
+    * round driver carries one state.
     */
   private def hyperBallLoop(
       edges: DataFrame, aCol: String, bCol: String,

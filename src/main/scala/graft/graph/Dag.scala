@@ -3,6 +3,8 @@ package graft.graph
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.Iterate
+
 /** TOPOLOGICAL LAYERING of a DAG — per node, the length of the LONGEST
   * directed path ending at it (sources = layer 0): the scheduling
   * primitive behind dependency-graph wave execution ("everything in
@@ -32,7 +34,9 @@ import org.apache.spark.sql.functions._
   * Scale shape: state is Θ(n) rows keyed by node; each round is one
   * edge-keyed equi-join + one node-keyed max aggregate,
   * localCheckpointed so plans never stack (the qg9 lineage lesson). No
-  * driver-side graph — the only driver value is the node count; the
+  * driver-side graph — the only driver value is the node count, observed
+  * inside the node table's own checkpoint job
+  * ([[Iterate.checkpointCounted]]), so no count job runs; the
   * changed-row count is observed inside each round's checkpoint job.
   * Rounds = the longest path length L + 1 (inherent to
   * label propagation; a 100 TB dependency corpus is wide and shallow,
@@ -51,13 +55,11 @@ object Dag {
       .filter(col("s").isNotNull && col("d").isNotNull)
       .distinct()
       .localCheckpoint(true)
-    val nodes = typed
+    val (nodes, nNodes) = Iterate.checkpointCounted(typed
       .select(col("s").as("node"))
       .unionAll(typed.select(col("d").as("node")))
       .filter(col("node").isNotNull)
-      .distinct()
-      .localCheckpoint(true)
-    val nNodes = nodes.count()
+      .distinct())
 
     untilAcyclic(nodes.select(col("node"), lit(0L).as("layer")),
         nNodes, maxRounds, "longestPathLayer") { layer =>
@@ -134,13 +136,11 @@ object Dag {
       .groupBy(col("s"), col("d"))
       .agg(max(col("w")).as("w")) // parallel tasks: the slowest binds
       .localCheckpoint(true)
-    val nodes = typed
+    val (nodes, nNodes) = Iterate.checkpointCounted(typed
       .select(col("s").as("node"))
       .unionAll(typed.select(col("d").as("node")))
       .filter(col("node").isNotNull)
-      .distinct()
-      .localCheckpoint(true)
-    val nNodes = nodes.count()
+      .distinct())
 
     untilAcyclic(nodes.select(col("node"), lit(0L).as("layer"), lit(0.0).as("cost")),
         nNodes, maxRounds, "criticalPath") { state =>

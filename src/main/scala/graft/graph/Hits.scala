@@ -4,6 +4,8 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
+import graft.Iterate
+
 /** HITS (Kleinberg 1999) over a weighted edge table — hubs point at
   * good authorities, authorities are pointed at by good hubs: the
   * directed-graph complement of PageRank's stationary-flow rank (qg9).

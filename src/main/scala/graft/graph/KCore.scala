@@ -3,6 +3,8 @@ package graft.graph
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.{col, count => fcount, lit}
 
+import graft.Iterate
+
 /** K-CORE DECOMPOSITION — the maximal subgraph in which every vertex
   * keeps degree ≥ k, computed by the standard iterative peel (Seidman
   * 1983; the distributed form is Montresor et al. 2013): repeatedly

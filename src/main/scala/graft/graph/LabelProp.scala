@@ -3,6 +3,8 @@ package graft.graph
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.Iterate
+
 /** SYNCHRONOUS LABEL PROPAGATION (Raghavan et al. 2007) — the
   * linear-time community-detection screen: every vertex starts as its
   * own label and each round simultaneously adopts the most frequent

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
+import graft.Iterate
+
 /** WEIGHTED PAGERANK over an edge table — the global-centrality
   * complement of the reference's per-way leave-one-out criticality
   * (reference `scripts/criticality/criticality.js` ranks ways by

@@ -123,7 +123,7 @@ object RoadGraph {
       .sortWithinPartitions("kx", "ky")
     val spark = features.sparkSession
     val nodes = spark.createDataFrame(
-      distinctKeys.rdd.zipWithIndex.map { case (r, i) =>
+      distinctKeys.rdd.zipWithIndex().map { case (r, i) =>
         org.apache.spark.sql.Row.fromSeq(r.toSeq :+ i.toInt)
       },
       distinctKeys.schema.add("node_id", org.apache.spark.sql.types.IntegerType, nullable = false))

@@ -3,6 +3,8 @@ package graft.graph
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.Iterate
+
 /** STRONGLY CONNECTED COMPONENTS of a DIRECTED graph — the directed
   * sibling of the min-label connected components the dedup tier runs
   * (`Dedup.connectedComponents`): u and v share a component iff each
@@ -58,6 +60,13 @@ import org.apache.spark.sql.functions._
   */
 object Scc {
 
+  /** `(node, scc)` per distinct endpoint. The three phases run on
+    * [[Iterate.untilStable]]; the outer peel stays a hand-written loop
+    * because a round carries three tables (live nodes, live edges and
+    * the retired assignments) and runs three fixpoints, which no
+    * one-state round driver holds, and it stops on an emptiness probe
+    * per outer round rather than on a flagged-row count.
+    */
   def run(
       edges: DataFrame, srcCol: String, dstCol: String,
       maxRounds: Int = 256): DataFrame = {

@@ -3,6 +3,8 @@ package graft.graph
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.Iterate
+
 /** K-TRUSS DECOMPOSITION (Cohen 2008) — the maximal subgraph in which
   * every edge participates in ≥ k−2 triangles: the EDGE-cohesion
   * sibling of the k-core's vertex degrees, and the standard "community

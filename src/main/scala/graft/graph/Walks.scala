@@ -3,6 +3,8 @@ package graft.graph
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.Iterate
+
 /** DETERMINISTIC RANDOM-WALK corpus generation — the DeepWalk/node2vec
   * input stage (Perozzi et al. 2014): W walks of fixed length from every
   * node, each step choosing a uniform neighbor. The "random" choice is
@@ -14,8 +16,10 @@ import org.apache.spark.sql.functions._
   * Plan shape: one adjacency aggregate (sorted neighbor list + degree
   * per node), then length−1 keyed joins of the Θ(n·W) walk frontier
   * against the adjacency — each step one equi-join on the current node,
-  * localCheckpointed so the lineage stays flat (the PageRank/Bfs round
-  * discipline). Per-node state is its full neighbor list, the same
+  * a round of [[Iterate.fixedRounds]], so every step's frontier is
+  * checkpointed and the lineage stays flat; the output is the union of
+  * those checkpointed frontiers, gathered as the rounds run. Per-node
+  * state is its full neighbor list, the same
   * bounded-array contract Triangles' compact-forward orientation
   * carries; a celebrity node's list rides once into each walk standing
   * on it, never a wedge blowup.
@@ -49,18 +53,18 @@ object Walks {
       .agg(sort_array(collect_list(col("t"))).as("nbrs"),
         org.apache.spark.sql.functions.count(lit(1)).as("deg"))
       .localCheckpoint(true)
-    var frontier = adj.select(col("v").as("start"))
+    val start = adj.select(col("v").as("start"))
       .crossJoin(
         adj.sparkSession.range(walksPerNode).select(col("id").as("walk")))
       .select(col("start"), col("walk"), lit(0L).as("step"),
         col("start").as("node"))
-      .localCheckpoint(true)
-    var out = frontier
-    var s = 1
-    while (s < length) {
+    // each round's input is the previous step's checkpointed frontier
+    var walked = Vector.empty[DataFrame]
+    val last = Iterate.fixedRounds(start, length - 1, "Walks.randomWalks") { (frontier, s) =>
+      walked :+= frontier
       // uniform choice: md5(start|walk|step|current) mod degree — a pure
       // function of the position, never an RNG
-      frontier = frontier
+      frontier
         .join(adj, col("v") === col("node"))
         .select(col("start"), col("walk"), lit(s.toLong).as("step"),
           element_at(col("nbrs"),
@@ -71,10 +75,7 @@ object Walks {
                 lit(s).cast("string"), lit("|"),
                 col("node").cast("string"))),
               col("deg")) + lit(1L)).cast("int")).as("node"))
-        .localCheckpoint(true)
-      out = out.unionAll(frontier)
-      s += 1
     }
-    out
+    (walked :+ last).reduce(_ unionAll _)
   }
 }

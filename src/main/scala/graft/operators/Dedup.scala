@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.Iterate
 import graft.functions.{TextFunctions, VectorFunctions}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.{UserDefinedFunction, Window}
@@ -88,8 +89,8 @@ object Dedup {
     val cols = docs.columns
     docs
       .groupBy(TextFunctions.fingerprint(col(textCol)).as("__fp"))
-      .agg(min_by(struct(cols.map(col): _*), col(idCol)).as("__row"))
-      .select(cols.map(c => col(s"__row.$c")): _*)
+      .agg(min_by(struct(cols.map(col).toIndexedSeq: _*), col(idCol)).as("__row"))
+      .select(cols.map(c => col(s"__row.$c")).toIndexedSeq: _*)
   }
 
   /** INCREMENTAL exact dedup — the growing-corpus shape: keep the `batch`
@@ -717,68 +718,63 @@ object Dedup {
 
   /** Connected-components clustering over a candidate-pair edge list:
     * each doc converges to the min id reachable through candidate edges.
-    * The distributed path is the alternating large-star/small-star
-    * contraction (Kiveris et al., "Connected Components in MapReduce and
-    * Beyond") — O(log²) rounds in the worst case, ~2-4 rounds in practice
-    * because every round rewires nodes straight at the current component
-    * minimum, not one hop at a time. Throws if the fixpoint is not reached
-    * within `maxIter` rounds rather than silently returning partial labels.
+    * Near-dup candidate graphs are tiny relative to the corpus (they only
+    * contain docs that LSH-collided): up to [[localPairs]] pairs a
+    * driver-side union-find beats 5+ distributed rounds' scheduling
+    * overhead by an order of magnitude; above it the pairs go to
+    * [[distributedComponents]]. Both paths produce identical min-label
+    * output. Throws if the distributed fixpoint is not reached within
+    * `maxIter` rounds rather than silently returning partial labels.
     *
     * Use after any LSH candidate generator when cluster-level dedup
     * (keep ONE doc per transitive near-dup cluster) is wanted instead of
     * the pairwise policy.
     */
   def connectedComponents(
-      pairs: DataFrame,
-      aCol: String,
-      bCol: String,
-      maxIter: Int = 20,
-      localThreshold: Long = 2000000): DataFrame = {
+      pairs: DataFrame, aCol: String, bCol: String, maxIter: Int = 20): DataFrame = {
     val spark = pairs.sparkSession
-    // Near-dup candidate graphs are tiny relative to the corpus (they only
-    // contain docs that LSH-collided). Below the threshold, a driver-side
-    // union-find beats 5+ distributed iterations' scheduling overhead by
-    // an order of magnitude; above it, fall through to the large/small-star
-    // loop. Both paths produce identical min-label output.
-    // Cache: the count action and the collect (or first star round) both
-    // consume `pairs`, which usually sits on top of an LSH candidate join —
-    // without the cache that join runs twice end-to-end.
-    val cached = pairs.select(col(aCol), col(bCol)).cache()
-    val nPairs = cached.count()
-    if (nPairs <= localThreshold) {
-      val edgeList = cached
-        .select(col(aCol).cast("long"), col(bCol).cast("long"))
-        .collect()
-        .map(r => (r.getLong(0), r.getLong(1)))
-      cached.unpersist(blocking = false)
-      val parent = scala.collection.mutable.HashMap.empty[Long, Long]
-      def find(x: Long): Long = {
-        var r = x
-        while (parent.getOrElse(r, r) != r) r = parent(r)
-        var c = x
-        while (parent.getOrElse(c, c) != c) { val n = parent(c); parent(c) = r; c = n }
-        r
-      }
-      edgeList.foreach { case (a, b) =>
-        parent.getOrElseUpdate(a, a)
-        parent.getOrElseUpdate(b, b)
-        val ra = find(a)
-        val rb = find(b)
-        if (ra != rb) { if (ra < rb) parent(rb) = ra else parent(ra) = rb }
-      }
-      // min-label per component: roots are already component minima only if
-      // union always attached the larger root — enforced above
-      val rows = parent.keys.toSeq.map(id => (id, find(id)))
-      import spark.implicits._
-      return rows.toDF("id", "label")
+    // checkpointed and counted in one job: the collect (or the first star
+    // round) reads `pairs` again, and it usually sits on top of an LSH
+    // candidate join that would otherwise run twice end-to-end
+    val (cp, nPairs) = Iterate.checkpointCounted(pairs.select(col(aCol), col(bCol)))
+    if (nPairs > localPairs) return distributedComponents(cp, aCol, bCol, maxIter)
+    val edgeList = cp
+      .select(col(aCol).cast("long"), col(bCol).cast("long"))
+      .collect()
+      .map(r => (r.getLong(0), r.getLong(1)))
+    val parent = scala.collection.mutable.HashMap.empty[Long, Long]
+    def find(x: Long): Long = {
+      var r = x
+      while (parent.getOrElse(r, r) != r) r = parent(r)
+      var c = x
+      while (parent.getOrElse(c, c) != c) { val n = parent(c); parent(c) = r; c = n }
+      r
     }
-    val out = distributedComponents(cached, aCol, bCol, maxIter)
-    cached.unpersist(blocking = false)
-    out
+    edgeList.foreach { case (a, b) =>
+      parent.getOrElseUpdate(a, a)
+      parent.getOrElseUpdate(b, b)
+      val ra = find(a)
+      val rb = find(b)
+      if (ra != rb) { if (ra < rb) parent(rb) = ra else parent(ra) = rb }
+    }
+    // min-label per component: roots are already component minima only if
+    // union always attached the larger root — enforced above
+    val rows = parent.keys.toSeq.map(id => (id, find(id)))
+    import spark.implicits._
+    rows.toDF("id", "label")
   }
 
-  /** Large-star/small-star contraction. Edge set is kept canonically
-    * oriented (u > v); one round = large-star then small-star:
+  /** Pair count up to which [[connectedComponents]] runs the driver-side
+    * union-find instead of the distributed star contraction.
+    */
+  private val localPairs = 2000000L
+
+  /** Large-star/small-star contraction (Kiveris et al., "Connected
+    * Components in MapReduce and Beyond", SoCC 2014) — O(log²) rounds in
+    * the worst case, ~2-4 rounds in practice because every round rewires
+    * nodes straight at the current component minimum, not one hop at a
+    * time. The edge set is kept canonically oriented (u > v); one round
+    * of [[Iterate.untilStable]] = large-star then small-star:
     *
     *  - large-star(u): over the SYMMETRIC neighborhood, every neighbor
     *    v > u is rewired to m = min(N(u) ∪ {u});
@@ -786,87 +782,57 @@ object Dedup {
     *    u and all its smaller neighbors are rewired to the minimum m.
     *
     * At the fixpoint the canonical edges ARE (node → component-min) star
-    * edges. Convergence is detected by (count, xor-of-hashes) signature
-    * equality of the canonical edge set across rounds — an order-free
-    * set signature, no except() anti-join needed.
+    * edges. The old edge set rides the round's dedup under a tag, so an
+    * edge it lacks is flagged `__imp` and counted inside the round's
+    * checkpoint job: a round that flags nothing and keeps every row
+    * returned its input set, the fixpoint. Still changing after `maxIter`
+    * rounds throws, naming `maxIter`.
     */
-  private def distributedComponents(pairs: DataFrame, aCol: String, bCol: String, maxIter: Int): DataFrame = {
+  private[operators] def distributedComponents(
+      pairs: DataFrame, aCol: String, bCol: String, maxIter: Int): DataFrame = {
     val a = col(aCol)
     val b = col(bCol)
-    val allNodes = pairs.select(a.as("id")).union(pairs.select(b.as("id"))).distinct().cache()
-    // localCheckpoint (not cache): each round's edge set feeds the next
-    // round's plan 6-ways (sym twice, afterLarge three times), so without
-    // lineage TRUNCATION the logical plan grows ~6× per round and AQE's
-    // plan-string rendering alone OOMs after a few rounds. Checkpointing
-    // materializes the rows and cuts the plan back to a leaf each round.
-    var edges = pairs
+    val init = pairs
       .select(greatest(a, b).as("u"), least(a, b).as("v"))
       .filter(col("u") =!= col("v"))
       .distinct()
-      .localCheckpoint(true)
-
-    def signature(e: DataFrame): (Long, Long) = {
-      // bit_xor, not sum: order-free over a distinct set AND overflow-free
-      // under ANSI mode (sum of 64-bit hashes throws on long overflow)
-      val r = e.agg(
-        count(lit(1)),
-        coalesce(expr("bit_xor(xxhash64(u, v))"), lit(0L))).head()
-      (r.getLong(0), r.getLong(1))
-    }
-
-    var sig = signature(edges)
-    var converged = false
-    var iter = 0
-    while (!converged && iter < maxIter) {
-      // large-star over the symmetric neighborhood
-      val sym = edges.select(col("u"), col("v"))
-        .union(edges.select(col("v").as("u"), col("u").as("v")))
-      val mins = sym.groupBy("u").agg(min("v").as("__mn"))
-        .select(col("u"), least(col("__mn"), col("u")).as("m"))
-      // cached: consumed twice below (smallMins + the rewire join)
-      val afterLarge = sym
-        .join(mins, Seq("u"))
-        .filter(col("v") > col("u"))
-        .select(col("v").as("u"), col("m").as("v")) // v > u ≥ m ⇒ already canonical
-        .filter(col("u") =!= col("v"))
-        .distinct()
-        .cache()
-      // small-star over the canonical orientation: u and every smaller
-      // neighbor attach to the neighborhood minimum
-      val smallMins = afterLarge.groupBy("u").agg(min("v").as("m"))
-      val next = afterLarge
-        .join(smallMins, Seq("u"))
-        .select(col("v").as("u"), col("m").as("v")) // (v, m) per smaller neighbor; v==m self-loops filtered below
-        .union(smallMins.select(col("u"), col("m").as("v"))) // (u, m)
-        .filter(col("u") =!= col("v"))
-        .distinct()
-        .localCheckpoint(true) // materializes AND truncates lineage
-      val nextSig = signature(next)
-      afterLarge.unpersist(blocking = false)
-      edges = next // previous checkpoint blocks are GC'd by the ContextCleaner
-      converged = nextSig == sig
-      sig = nextSig
-      iter += 1
-    }
-    if (!converged)
-      throw new IllegalStateException(
-        s"distributedComponents did not converge within $maxIter large/small-star rounds " +
-          s"(edge-set signature still changing); raise maxIter")
+    val stars =
+      try Iterate.untilStable(init, maxIter, "distributedComponents") { (edges, _) =>
+        // large-star over the symmetric neighborhood
+        val sym = edges.select(col("u"), col("v"))
+          .union(edges.select(col("v").as("u"), col("u").as("v")))
+        val mins = sym.groupBy("u").agg(min("v").as("__mn"))
+          .select(col("u"), least(col("__mn"), col("u")).as("m"))
+        val afterLarge = sym
+          .join(mins, Seq("u"))
+          .filter(col("v") > col("u"))
+          .select(col("v").as("u"), col("m").as("v")) // v > u ≥ m ⇒ already canonical
+          .filter(col("u") =!= col("v"))
+          .distinct()
+        // small-star over the canonical orientation: u and every smaller
+        // neighbor attach to the neighborhood minimum
+        val smallMins = afterLarge.groupBy("u").agg(min("v").as("m"))
+        afterLarge
+          .join(smallMins, Seq("u"))
+          .select(col("v").as("u"), col("m").as("v")) // (v, m) per smaller neighbor; v==m self-loops filtered below
+          .union(smallMins.select(col("u"), col("m").as("v"))) // (u, m)
+          .filter(col("u") =!= col("v"))
+          .select(col("u"), col("v"), lit(true).as("__new"))
+          .unionAll(edges.select(col("u"), col("v"), lit(false).as("__new")))
+          .groupBy("u", "v")
+          .agg(max(col("__new")).as("__new"), min(col("__new")).as("__imp"))
+          .filter(col("__new"))
+          .select(col("u"), col("v"), col("__imp"))
+      } catch {
+        case e: IllegalStateException =>
+          throw new IllegalStateException(
+            s"distributedComponents did not converge within maxIter=$maxIter " +
+              "large/small-star rounds (edge set still changing); raise maxIter", e)
+      }
     // star edges: u → component min. Nodes never appearing as u are roots.
-    // Materialize the (small) label table BEFORE dropping the upstream
-    // caches — unpersisting first would force the caller's first action to
-    // recompute the whole candidate-pair lineage from scratch.
-    // localCheckpoint, NOT cache: a cache would pin executor storage until
-    // some caller unpersists, and no caller holds that contract (a 64-query
-    // bench loop would accumulate one pinned label table per invocation).
-    // Checkpoint blocks are reclaimed by the ContextCleaner as soon as the
-    // returned frame is unreferenced — same materialization, no leak.
-    val labels = allNodes
-      .join(edges.select(col("u").as("id"), col("v").as("__root")), Seq("id"), "left")
+    pairs.select(a.as("id")).union(pairs.select(b.as("id"))).distinct()
+      .join(stars.select(col("u").as("id"), col("v").as("__root")), Seq("id"), "left")
       .select(col("id"), coalesce(col("__root"), col("id")).as("label"))
-      .localCheckpoint(true)
-    allNodes.unpersist(blocking = false)
-    labels
   }
 
   /** Cross-corpus n-gram decontamination (the GPT-3 / Gopher method): an

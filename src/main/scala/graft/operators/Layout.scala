@@ -338,7 +338,7 @@ object Layout {
       .repartitionByRange(col("__sk"), col(idCol))
       .sortWithinPartitions(col("__sk"), col(idCol))
     val withPos = spark.createDataFrame(
-      keyed.rdd.zipWithIndex.map { case (r, i) =>
+      keyed.rdd.zipWithIndex().map { case (r, i) =>
         org.apache.spark.sql.Row.fromSeq(r.toSeq :+ i)
       },
       keyed.schema.add("shuffle_pos", org.apache.spark.sql.types.LongType, nullable = false))

@@ -513,7 +513,8 @@ object Similarity {
   }
 
   /** Recall@k of an approximate candidate rule for the `numQueries`
-    * lowest-id corpus vectors: `candidates(queries)` joins the signed
+    * lowest-id corpus vectors, which one ordered-limit job collects to a
+    * local relation: `candidates(queries)` joins the signed
     * corpus (`__sig`) to the queries (`__qid`, `__qv`, `__qsig`); both it
     * and the exact truth cut self-excluded 6-dp cosine top k, and
     * `recall = |approx ∩ exact| / k` per query, rounded to 6 dp.
@@ -522,11 +523,16 @@ object Similarity {
       k: Int, numQueries: Int)(candidates: DataFrame => DataFrame): DataFrame = {
     require(k >= 1, s"k must be >= 1, got $k")
     require(numQueries >= 1, s"numQueries must be >= 1, got $numQueries")
-    val queries = sigd
+    // the ≤ numQueries query rows, collected once into a local relation
+    // that truth, candidates and the recall tail all read: a shared lazy
+    // frame would re-run the ordered limit over a full corpus scan in each
+    val top = sigd
       .orderBy(col(idCol))
       .limit(numQueries)
       .select(col(idCol).as("__qid"), col(vecCol).as("__qv"),
         col("__sig").as("__qsig"))
+    val queries = sigd.sparkSession.createDataFrame(
+      java.util.Arrays.asList(top.collect(): _*), top.schema)
     val truth = knnDirected(
       embs, queries.select(col("__qid"), col("__qv")),
       idCol, vecCol, "__qid", "__qv", k, excludeSelf = true)
@@ -903,7 +909,10 @@ final class TopKByScore(k: Int, distinct: Boolean = false)
 
   private def insert(buf: Seq[(Double, Long)], in: (Double, Long)): Seq[(Double, Long)] = {
     if (buf.length >= k && !better(in, buf.last)) buf // hot path: no alloc
-    else if (distinct && buf.contains(in)) buf
+    // Double.compare again: tuple == is false for NaN == NaN, so a NaN
+    // duplicate would take a second slot
+    else if (distinct && buf.exists(e =>
+        e._2 == in._2 && java.lang.Double.compare(e._1, in._1) == 0)) buf
     else {
       val i = buf.indexWhere(e => better(in, e))
       val grown = if (i < 0) buf :+ in else (buf.take(i) :+ in) ++ buf.drop(i)

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.Iterate
+
 /** Corpus-level text analytics for training-data pipelines (beyond the
   * reference's surface — the §"training-data pipeline operators" mandate):
   * term statistics that need the WHOLE corpus, not just one row, unlike
@@ -152,6 +154,12 @@ object TextAnalysis {
     * a 1-row argmax collect, and a compiled merge map. Lineage is
     * truncated per iteration (`localCheckpoint`) so K iterations never
     * stack K UDF plans. Driver traffic is 1 row per merge.
+    *
+    * The merge loop stays off [[Iterate]]'s drivers: each merge is
+    * decided on the driver (the argmax collect) before the step can be
+    * built, and the loop ends early once no pair is left — on
+    * [[Iterate.fixedRounds]] every round after exhaustion would still
+    * checkpoint, and an early exit would be a shape only this loop uses.
     */
   def bpeTrain(docs: DataFrame, textCol: String, numMerges: Int): DataFrame = {
     val spark = docs.sparkSession
@@ -1192,9 +1200,10 @@ object TextAnalysis {
     *
     * Scale shape: the pair builder is a per-doc positional self-join
     * (doc-key-bounded, window-bounded fan-out); each iteration is one
-    * edge⋈score join + a node-keyed sum, score table localCheckpoints
-    * (the qg9 lineage cut). Vocab-sized state, corpus-sized only in
-    * the first aggregation.
+    * edge⋈score join + a node-keyed sum, one round of
+    * [[Iterate.fixedRounds]], which checkpoints the score table
+    * every round (the qg9 lineage cut). Vocab-sized state,
+    * corpus-sized only in the first aggregation.
     */
   def textRank(
       docs: DataFrame,
@@ -1237,18 +1246,17 @@ object TextAnalysis {
     val strength = sym.groupBy(col("__u")).agg(sum(col("__c")).as("__st"))
     // directed contribution edges u -> v with u's strength attached
     val contrib = sym.join(strength, Seq("__u")).localCheckpoint(true)
-    var score = strength.select(col("__u").as("__w"), lit(1.0).as("__s"))
-      .localCheckpoint(true)
-    for (_ <- 1 to iterations) {
-      score = contrib
-        .join(score.select(col("__w").as("__u"), col("__s")), Seq("__u"))
+    val score = Iterate.fixedRounds(
+      strength.select(col("__u").as("__w"), lit(1.0).as("__s")),
+      iterations, "TextAnalysis.textRank") { (cur, _) =>
+      contrib
+        .join(cur.select(col("__w").as("__u"), col("__s")), Seq("__u"))
         .groupBy(col("__v"))
         .agg(sum(col("__c").cast("double") / col("__st").cast("double") * col("__s"))
           .as("__in"))
         .select(
           col("__v").as("__w"),
           (lit(1.0 - damping) + lit(damping) * col("__in")).as("__s"))
-        .localCheckpoint(true)
     }
     score
       .join(strength.select(col("__u").as("__w"), col("__st")), Seq("__w"))

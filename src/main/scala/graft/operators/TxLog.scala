@@ -115,7 +115,7 @@ object TxLog {
       val stats = Option(node.get("stats")).filterNot(_.isNull) match {
         case None => Map.empty[String, (Long, Long)]
         case Some(s) =>
-          val it = s.fields()
+          val it = s.properties().iterator()
           val b = Map.newBuilder[String, (Long, Long)]
           while (it.hasNext) {
             val e = it.next()
@@ -344,7 +344,7 @@ object TxLog {
       val stats = Option(node.get("stats")).filterNot(_.isNull) match {
         case None => Map.empty[String, (Long, Long)]
         case Some(s) =>
-          val it = s.fields()
+          val it = s.properties().iterator()
           val b = Map.newBuilder[String, (Long, Long)]
           while (it.hasNext) {
             val e = it.next()

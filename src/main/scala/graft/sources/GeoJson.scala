@@ -39,7 +39,7 @@ object GeoJson {
           val propMap: Map[String, String] =
             if (props == null || props.isNull) Map.empty
             else {
-              val it = props.fields()
+              val it = props.properties().iterator()
               val b = Map.newBuilder[String, String]
               while (it.hasNext) {
                 val e = it.next()
@@ -88,7 +88,7 @@ object GeoJson {
         lit("""{"type":"Feature","geometry":"""),
         col(geomJsonCol),
         lit(""","properties":"""),
-        to_json(struct(props.map(col): _*)),
+        to_json(struct(props.map(col).toIndexedSeq: _*)),
         lit("}")).as("feature"))
     val joined = features
       .agg(concat_ws(",", collect_list(col("feature"))).as("joined"))

@@ -690,12 +690,26 @@ class OperatorsSpec extends AnyFunSuite with TempDirs {
     import spark.implicits._
     // two chains: 1-2-3-4 (via pairwise links) and 10-11; singleton 99 absent
     val pairs = Seq((2L, 1L), (3L, 2L), (4L, 3L), (11L, 10L)).toDF("a", "b")
-    Seq(0L, 100L).foreach { threshold => // 0 forces distributed, 100 local
-      val labels = Dedup.connectedComponents(pairs, "a", "b", localThreshold = threshold)
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      assert(Seq(1L, 2L, 3L, 4L).forall(labels(_) == 1L), s"threshold=$threshold")
-      assert(labels(10L) == 10L && labels(11L) == 10L, s"threshold=$threshold")
+    Seq(
+      "local" -> Dedup.connectedComponents(pairs, "a", "b"),
+      "distributed" -> Dedup.distributedComponents(pairs, "a", "b", maxIter = 20)
+    ).foreach { case (path, comps) =>
+      val labels = comps.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      assert(Seq(1L, 2L, 3L, 4L).forall(labels(_) == 1L), path)
+      assert(labels(10L) == 10L && labels(11L) == 10L, path)
     }
+  }
+
+  test("distributed connected components: still changing past maxIter throws naming maxIter") {
+    import spark.implicits._
+    // the chain 1-2-3-4 takes two rewiring rounds plus the stable one
+    val pairs = Seq((2L, 1L), (3L, 2L), (4L, 3L)).toDF("a", "b")
+    val ex = intercept[IllegalStateException](
+      Dedup.distributedComponents(pairs, "a", "b", maxIter = 2))
+    assert(ex.getMessage.contains("maxIter=2"), ex.getMessage)
+    val labels = Dedup.distributedComponents(pairs, "a", "b", maxIter = 3)
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(labels == (1L to 4L).map(_ -> 1L).toMap)
   }
 
   test("grouped percentile filter matches per-group reference nearest-rank") {
@@ -904,6 +918,20 @@ class OperatorsSpec extends AnyFunSuite with TempDirs {
     assert(distinct7.count(_ == ((0.5, 7L))) == 1)
     assert(ids(top(udaf(new TopKByScore(20, distinct = true)))) ==
       Seq(9L, 8L, 1L, 3L, 6L, 7L, 4L, 2L))
+  }
+
+  test("TopKByScore distinct collapses a NaN-scored duplicate to one entry") {
+    import spark.implicits._
+    // slice 0 holds (NaN, 7) twice (the reduce path), slice 1 once more
+    // (the merge path); NaN is never == NaN, so equality must compare bits
+    val rows = Seq((Double.NaN, 7L), (Double.NaN, 7L), (0.5, 3L), (Double.NaN, 7L))
+    val df = spark.sparkContext.parallelize(rows, 2).toDF("score", "id")
+    val topK = udaf(new TopKByScore(3, distinct = true))
+    val top = df.groupBy(lit(1)).agg(topK(col("score"), col("id")).as("t"))
+      .select("t").head().getSeq[org.apache.spark.sql.Row](0)
+      .map(r => (r.getDouble(0), r.getLong(1)))
+    assert(top.map(_._2) == Seq(7L, 3L), top)
+    assert(top.head._1.isNaN)
   }
 
   test("mutualKnn: reciprocal pairs only, no self-match, symmetric sim, " +

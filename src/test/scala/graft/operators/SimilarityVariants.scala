@@ -39,7 +39,7 @@ object SimilarityVariants {
   def sqTopKFromCodes(
       codes: DataFrame, idCol: String,
       queryCodes: Array[Long], queryScale: Double, k: Int): DataFrame = {
-    val qc = array(queryCodes.map(lit): _*)
+    val qc = array(queryCodes.map(lit).toIndexedSeq: _*)
     codes
       .withColumn("__s",
         aggregate(zip_with(col("codes"), qc, (a, b) => a.cast("long") * b),
@@ -106,7 +106,7 @@ object SimilarityVariants {
       .take(nProbe)
       .map(_._1)
     val subset = embs.join(
-      assigned.filter(col("cluster").isin(probes.map(Integer.valueOf): _*)),
+      assigned.filter(col("cluster").isin(probes.map(Integer.valueOf).toIndexedSeq: _*)),
       Seq(idCol),
       "left_semi")
     bruteForceTopK(subset, idCol, vecCol, query, k)
@@ -174,7 +174,7 @@ object SimilarityVariants {
       nProbe: Int = 1,
       seed: Long = 42L): DataFrame = {
     val probeCells = cellsWithinHamming(hyperplaneCellLocal(query, bits, seed), bits, nProbe)
-    val q = array(query.map(lit): _*)
+    val q = array(query.map(lit).toIndexedSeq: _*)
     spark.read.parquet(path)
       .filter(col("__cell").isin(probeCells: _*))
       .withColumn("sim", round(VectorFunctions.cosine(col(vecCol), q), 6))
@@ -206,7 +206,7 @@ object SimilarityVariants {
     val cb = codebook.getOrElse(pqCodebook(embs, idCol, vecCol, m, k))
     val ids = pqTopKFromCodes(pqEncode(embs, idCol, vecCol, cb), idCol, cb, query, shortlist)
       .select(col(idCol))
-    val q = array(query.map(lit): _*)
+    val q = array(query.map(lit).toIndexedSeq: _*)
     val qq = query.map(x => x * x).sum
     embs
       .join(broadcast(ids), Seq(idCol), "left_semi")

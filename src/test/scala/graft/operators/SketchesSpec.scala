@@ -260,7 +260,7 @@ class SketchesSpec extends AnyFunSuite {
     val byTz = rows.groupBy(_._2).filter(_._2.length >= count)
     assert(byTz.nonEmpty, "no tz class large enough — widen the id range")
     // the LARGEST qualifying tz, so the tied value is the group maximum
-    byTz.maxBy(_._1)._2.sortBy(_._1).take(count).map(_._1)
+    byTz.maxBy(_._1)._2.sortBy(_._1).take(count).map(_._1).toIndexedSeq
   }
 
   test("quantile sketch: more than k rows tied at the maximum tz still " +

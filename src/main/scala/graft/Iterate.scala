@@ -1,14 +1,15 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
-import org.apache.spark.sql.functions.{array, col, count, count_if, explode, greatest, least, lit, struct}
+import org.apache.spark.sql.functions.{col, count, count_if, lit}
 import org.slf4j.LoggerFactory
 
 /** The engine's one round loop and materialize-and-count module:
   * data-sized partition counts, [[checkpointCounted]] (materialize a
-  * frame and learn its size in the same job), the checkpointed probe
-  * tables every iterative operator reads each round, and the two round
-  * drivers — [[fixedRounds]] for a fixed round count, [[untilStable]]
+  * frame and learn its size in the same job), [[sized]] (the
+  * checkpointed, data-partitioned probe table an iterative operator
+  * reads each round; the graph tier builds its edge tables in
+  * `graph.Edges`), and the two round drivers — [[fixedRounds]] for a fixed round count, [[untilStable]]
   * for a fixpoint — that checkpoint each round, observe convergence and
   * enforce the round bound. The graph tier's fixpoints, TextRank and
   * the dedup tier's star contraction all run on these drivers; the few
@@ -38,34 +39,16 @@ private[graft] object Iterate {
   }
 
   /** `df` `localCheckpoint`ed once and coalesced to the [[parts]] of
-    * its row count, plus that partition count: the probe table a loop
-    * reads every round computes exactly once, and each round's scan of
-    * it runs data-sized tasks instead of shuffle.partitions KB blocks.
+    * its row count, plus that partition count and the row count: the
+    * probe table a loop reads every round computes exactly once, each
+    * round's scan of it runs data-sized tasks instead of
+    * shuffle.partitions KB blocks, and a caller that branches on an
+    * empty table reads the count instead of probing it.
     */
-  def sized(df: DataFrame): (DataFrame, Int) = {
+  def sized(df: DataFrame): (DataFrame, Int, Long) = {
     val (cp, rows) = checkpointCounted(df)
     val n = parts(df.sparkSession, rows)
-    (cp.coalesce(n), n)
-  }
-
-  /** Canonical undirected adjacency `(v, w)` — each edge in both
-    * orientations, self-loops and duplicates dropped — [[sized]]: one
-    * checkpoint job computes and counts it, so every round of the
-    * caller's loop reads a few cached blocks and the input computes
-    * exactly once. No cast: the endpoint type is the caller's.
-    */
-  def adjacency(edges: DataFrame, aCol: String, bCol: String): (DataFrame, Int) = {
-    val e = edges
-      .select(
-        least(col(aCol), col(bCol)).as("a"),
-        greatest(col(aCol), col(bCol)).as("b"))
-      .filter(col("a") =!= col("b"))
-      .distinct()
-    sized(e
-      .select(explode(array(
-        struct(col("a").as("v"), col("b").as("w")),
-        struct(col("b").as("v"), col("a").as("w")))).as("__e"))
-      .select(col("__e.v"), col("__e.w")))
+    (cp.coalesce(n), n, rows)
   }
 
   /** Applies `step(state, round)` (round 1-based) `rounds` times from

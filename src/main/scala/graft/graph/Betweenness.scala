@@ -59,12 +59,7 @@ object Betweenness {
   def run(
       edges: DataFrame, aCol: String, bCol: String,
       pivots: Int = 0, seed: Long = 42L): DataFrame =
-    core(edges, aCol, bCol, nodes =>
-      if (pivots <= 0) nodes.select(col("v").as("p"))
-      else nodes
-        .orderBy(xxhash64(col("v"), lit(seed)), col("v"))
-        .limit(pivots)
-        .select(col("v").as("p")))
+    core(edges, aCol, bCol, byHash(pivots, seed))
 
   /** [[run]] with an EXPLICIT pivot set (deduplicated; ids that aren't
     * vertices are ignored) — for stratified pivot choices, and for
@@ -78,33 +73,26 @@ object Betweenness {
       edges: DataFrame, aCol: String, bCol: String,
       pivotIds: Seq[Long]): DataFrame = {
     require(pivotIds.nonEmpty, "pivotIds must be non-empty")
-    core(edges, aCol, bCol,
-      nodes => nodes.filter(col("v").isin(pivotIds.distinct: _*))
-        .select(col("v").as("p")))
+    core(edges, aCol, bCol, Some(_.filter(col("v").isin(pivotIds.distinct: _*))))
   }
 
+  /** The unweighted estimator for a pivot choice: `choosePivots`
+    * narrows the node table `(v)` to the pivot set, and `None` takes
+    * every node, so k = n with no second count.
+    */
   private def core(
       edges: DataFrame, aCol: String, bCol: String,
-      choosePivots: DataFrame => DataFrame): DataFrame = {
+      choosePivots: Option[DataFrame => DataFrame]): DataFrame = {
     val spark = edges.sparkSession
-    val e = edges
-      .select(
-        least(col(aCol), col(bCol)).as("a"),
-        greatest(col(aCol), col(bCol)).as("b"))
-      .filter(col("a") =!= col("b"))
-      .distinct()
     // eager + size-partitioned: the BFS and dependency loops probe ed
     // every round
-    val (ed, _) = Iterate.sized(e.select(col("a").as("v"), col("b").as("w"))
-      .unionAll(e.select(col("b").as("v"), col("a").as("w"))))
-    val nodes = ed.select(col("v")).distinct()
-    val n = nodes.count()
+    val (ed, _, _) = Edges.adjacency(edges, aCol, bCol)
+    val (nodes, n) = Iterate.checkpointCounted(ed.select(col("v")).distinct())
     if (n == 0L) {
       return spark.range(0).select(col("id").as("node"),
         lit(0.0).as("betweenness"))
     }
-    val pivotSet = choosePivots(nodes)
-    val k = pivotSet.count()
+    val (pivotSet, k) = pivotsOf(nodes, n, choosePivots)
     require(k > 0L, "pivot set selected no graph vertices")
 
     // forward multi-source BFS: (p, v, dist, sigma = #shortest s→v
@@ -124,6 +112,8 @@ object Betweenness {
         .unionAll(next.select(col("p"), col("v"), lit(round).as("dist"),
           col("sigma"), lit(true).as("__imp")))
     }
+    // the deepest layer is the forward loop's improving-round count; a
+    // driver read until the round drivers return their per-round trace
     val maxD = bfs.agg(max(col("dist"))).head().getInt(0)
 
     // backward dependency accumulation, deepest layer first:
@@ -152,19 +142,43 @@ object Betweenness {
         .select(col("p"), col("v"), col("sigma"),
           coalesce(col("__contrib"), lit(0.0)).as("delta"))
     }
-    val acc = (layers :+ top).reduce(_ unionAll _)
-    // endpoints excluded (v = p is the dist-0 row); halve the directed
-    // sum (each unordered pair counted from both ends in an undirected
-    // graph), scale the pivot estimate by n/k
-    val scale = n.toDouble / k.toDouble / 2.0
-    val out = acc
+    estimate((layers :+ top).reduce(_ unionAll _), n, k)
+  }
+
+  /** The [[run]] pivot choice: the `pivots` smallest nodes by
+    * `xxhash64(v, seed)`, or every node (`None`) for `pivots <= 0`.
+    */
+  private def byHash(pivots: Int, seed: Long): Option[DataFrame => DataFrame] =
+    if (pivots <= 0) None
+    else Some(_.orderBy(xxhash64(col("v"), lit(seed)), col("v")).limit(pivots))
+
+  /** The pivot set `(p)` chosen from the checkpointed node table
+    * `(v)` of `n` rows, and its size k: `None` takes every node, so
+    * k = n is known without a count.
+    */
+  private def pivotsOf(
+      nodes: DataFrame, n: Long,
+      choose: Option[DataFrame => DataFrame]): (DataFrame, Long) =
+    choose match {
+      case None => (nodes.select(col("v").as("p")), n)
+      case Some(f) =>
+        val chosen = f(nodes).select(col("v").as("p"))
+        (chosen, chosen.count())
+    }
+
+  /** `(node, betweenness)` from the per-pivot dependencies
+    * `(p, v, delta)`: endpoints excluded (v = p is the pivot's own row),
+    * the directed sum halved (an undirected graph counts each unordered
+    * pair from both ends) and the pivot estimate scaled by n/k.
+    */
+  private def estimate(delta: DataFrame, n: Long, k: Long): DataFrame =
+    delta
       .filter(col("v") =!= col("p"))
       .groupBy(col("v"))
-      .agg((coalesce(sum(col("delta")), lit(0.0)) * lit(scale)).as("betweenness"))
+      .agg((coalesce(sum(col("delta")), lit(0.0)) * lit(n.toDouble / k.toDouble / 2.0))
+        .as("betweenness"))
       .select(col("v").as("node"), col("betweenness"))
       .localCheckpoint(true)
-    out
-  }
 
   /** WEIGHTED betweenness (Brandes 2001 over COST shortest paths, the
     * pivot estimator as [[run]]): brokerage under the cost metric the
@@ -200,18 +214,13 @@ object Betweenness {
       pivots: Int = 0, seed: Long = 42L, maxRounds: Int = 128): DataFrame = {
     require(maxRounds >= 1, s"maxRounds must be >= 1, got $maxRounds")
     val spark = edges.sparkSession
-    val ed = Bfs.positiveAdjacency(edges, aCol, bCol, wCol, "runWeighted")
-    val nodes = ed.select(col("v")).distinct()
-    val n = nodes.count()
+    val (ed, _) = Bfs.positiveAdjacency(edges, aCol, bCol, wCol, "runWeighted")
+    val (nodes, n) = Iterate.checkpointCounted(ed.select(col("v")).distinct())
     if (n == 0L) {
       return spark.range(0).select(col("id").as("node"),
         lit(0.0).as("betweenness"))
     }
-    val pivotSet =
-      (if (pivots <= 0) nodes
-       else nodes.orderBy(xxhash64(col("v"), lit(seed)), col("v")).limit(pivots))
-        .select(col("v").as("p"))
-    val k = pivotSet.count()
+    val (pivotSet, k) = pivotsOf(nodes, n, byHash(pivots, seed))
 
     // 1. cost distances from every pivot
     val dist = Bfs.minPlus(ed,
@@ -287,13 +296,6 @@ object Betweenness {
           (coalesce(col("__acc"), lit(0.0)) =!= col("__od")).as("__imp"))
     }
 
-    val scale = n.toDouble / k.toDouble / 2.0
-    val out = delta
-      .filter(col("v") =!= col("p"))
-      .groupBy(col("v"))
-      .agg((coalesce(sum(col("delta")), lit(0.0)) * lit(scale)).as("betweenness"))
-      .select(col("v").as("node"), col("betweenness"))
-      .localCheckpoint(true)
-    out
+    estimate(delta, n, k)
   }
 }

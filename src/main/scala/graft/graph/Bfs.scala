@@ -1,7 +1,7 @@
 package graft.graph
 
 import org.apache.spark.sql.{DataFrame, Row}
-import org.apache.spark.sql.functions.{col, greatest, least, lit, min, when}
+import org.apache.spark.sql.functions.{col, lit, min, when}
 import org.apache.spark.sql.types.{DoubleType, IntegerType, LongType, StructField, StructType}
 
 import graft.Iterate
@@ -49,7 +49,7 @@ object Bfs {
       maxDepth: Int = 64): DataFrame = {
     require(maxDepth >= 1, s"maxDepth must be >= 1, got $maxDepth")
     val spark = edges.sparkSession
-    val (ed, parts) = Iterate.adjacency(
+    val (ed, parts, _) = Edges.adjacency(
       edges.select(col(aCol).cast("long").as("a"), col(bCol).cast("long").as("b")),
       "a", "b")
 
@@ -137,7 +137,7 @@ object Bfs {
         col(wCol).cast("double").as("__w"))
       .filter(col("v").isNotNull && col("t").isNotNull && col("__w").isNotNull)
       .filter(col("v") =!= col("t"))
-    val (ed, _) = Iterate.sized(
+    val (ed, _, _) = Iterate.sized(
       (if (directed) typed
        else typed.unionAll(typed.select(col("t").as("v"), col("v").as("t"), col("__w"))))
         .groupBy(col("v"), col("t"))
@@ -170,27 +170,22 @@ object Bfs {
   }
 
   /** Symmetric min-weight adjacency `(v, t, __w)` for the weighted
-    * all-pairs and betweenness fixpoints: endpoints cast to long, null
-    * endpoints/weights and self-loops dropped, parallel edges collapsed
-    * to their min weight, checkpointed once. Rejects any weight ≤ 0 up front, naming `caller`: a zero
-    * weight puts distinct vertices at distance 0 (harmonic diverges,
-    * σ counts infinitely many equal-cost paths) and an undirected
-    * negative edge is a negative cycle.
+    * all-pairs and betweenness fixpoints, plus its row count (zero: no
+    * node has an edge): endpoints cast to long, null endpoints/weights
+    * and self-loops dropped, parallel edges collapsed to their min
+    * weight, [[Iterate.sized]] once. Rejects any weight ≤ 0 up front,
+    * naming `caller`: a zero weight puts distinct vertices at distance
+    * 0 (harmonic diverges, σ counts infinitely many equal-cost paths)
+    * and an undirected negative edge is a negative cycle.
     */
   private[graph] def positiveAdjacency(
       edges: DataFrame, aCol: String, bCol: String, wCol: String,
-      caller: String): DataFrame = {
-    val e = edges
-      .select(
-        least(col(aCol), col(bCol)).cast("long").as("a"),
-        greatest(col(aCol), col(bCol)).cast("long").as("b"),
-        col(wCol).cast("double").as("__w"))
-      .filter(col("a").isNotNull && col("b").isNotNull && col("__w").isNotNull)
-      .filter(col("a") =!= col("b"))
-      .groupBy(col("a"), col("b"))
-      .agg(min(col("__w")).as("__w"))
-    val (ed, _) = Iterate.sized(e.select(col("a").as("v"), col("b").as("t"), col("__w"))
-      .unionAll(e.select(col("b").as("v"), col("a").as("t"), col("__w"))))
+      caller: String): (DataFrame, Long) = {
+    val longs = edges.select(
+      col(aCol).cast("long").as("a"), col(bCol).cast("long").as("b"), col(wCol).as("__w"))
+    // min skips null weights, so a pair left null had only null weights
+    val (ed, _, rows) = Iterate.sized(
+      Edges.weighted(longs, "a", "b", "__w", min, "t").filter(col("__w").isNotNull))
     val minW = ed.agg(min(col("__w"))).head()
     if (!minW.isNullAt(0) && minW.getDouble(0) <= 0.0) {
       throw new IllegalArgumentException(
@@ -199,7 +194,7 @@ object Bfs {
           "distance 0 and ties infinitely many equal-cost paths; negative " +
           "forms a cycle)")
     }
-    ed
+    (ed, rows)
   }
 
   /** The min-plus distance fixpoint behind [[sssp]], all-pairs

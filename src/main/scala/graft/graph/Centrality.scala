@@ -1,6 +1,6 @@
 package graft.graph
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.Iterate
@@ -32,42 +32,6 @@ import graft.operators.Sketches
   */
 object Centrality {
 
-  /** Canonicalized symmetric WEIGHTED edge list (v, w, __w): self-loops
-    * dropped, duplicate orientations and parallel edges collapse by
-    * SUMMING their weights (the strength-graph convention — an A→B
-    * order and a B→A order both add to the undirected {A,B} tie).
-    * Exactness: the per-pair weight sum is order-dependent for general
-    * doubles; integer-valued weights (counts, quantities — the gate
-    * diet) sum exactly, the qg14 Σw·score contract.
-    */
-  private def symmetrizeWeighted(
-      edges: DataFrame, aCol: String, bCol: String,
-      wCol: String): DataFrame = {
-    val e = edges
-      .select(
-        least(col(aCol), col(bCol)).as("a"),
-        greatest(col(aCol), col(bCol)).as("b"),
-        col(wCol).cast("double").as("__w"))
-      .filter(col("a") =!= col("b"))
-      .groupBy(col("a"), col("b"))
-      .agg(sum(col("__w")).as("__w"))
-    e.select(col("a").as("v"), col("b").as("w"), col("__w"))
-      .unionAll(e.select(col("b").as("v"), col("a").as("w"), col("__w")))
-  }
-
-  /** Canonicalized symmetric edge list (v, w), self-loops and dup
-    * orientations dropped — the [[Betweenness]] normalization. */
-  private def symmetrize(edges: DataFrame, aCol: String, bCol: String): DataFrame = {
-    val e = edges
-      .select(
-        least(col(aCol), col(bCol)).as("a"),
-        greatest(col(aCol), col(bCol)).as("b"))
-      .filter(col("a") =!= col("b"))
-      .distinct()
-    e.select(col("a").as("v"), col("b").as("w"))
-      .unionAll(e.select(col("b").as("v"), col("a").as("w")))
-  }
-
   /** EXACT closeness + harmonic per vertex:
     * `(node, n_reached, sum_dist, closeness, harmonic)`. Undirected,
     * unweighted; isolated vertices don't appear (no edges → no rows).
@@ -88,9 +52,8 @@ object Centrality {
       edges: DataFrame, aCol: String, bCol: String): DataFrame = {
     val spark = edges.sparkSession
     // eager + size-partitioned: the layer loop probes ed every round
-    val (ed, _) = Iterate.sized(symmetrize(edges, aCol, bCol))
-    val nodes = ed.select(col("v")).distinct()
-    if (nodes.isEmpty) {
+    val (ed, _, rows) = Edges.adjacency(edges, aCol, bCol)
+    if (rows == 0L) {
       return spark.range(0).select(
         col("id").as("node"), lit(0L).as("n_reached"),
         lit(0L).as("sum_dist"), lit(0.0).as("closeness"),
@@ -99,7 +62,8 @@ object Centrality {
     // __imp marks the layer added this round; a round that adds no
     // (source, node) pair is the fixpoint, reached within the diameter
     val bfs = Iterate.untilStable(
-      nodes.select(col("v").as("p"), col("v"), lit(0).as("dist"), lit(true).as("__imp")),
+      ed.select(col("v")).distinct()
+        .select(col("v").as("p"), col("v"), lit(0).as("dist"), lit(true).as("__imp")),
       Int.MaxValue, "distanceCentralities") { (s, round) =>
       val next = s.filter(col("__imp"))
         .join(ed, Seq("v"))
@@ -228,13 +192,13 @@ object Centrality {
       edges: DataFrame, aCol: String, bCol: String, wCol: String,
       maxRounds: Int, caller: String): DataFrame = {
     require(maxRounds >= 1, s"maxRounds must be >= 1, got $maxRounds")
-    val ed = Bfs.positiveAdjacency(edges, aCol, bCol, wCol, caller)
-    val nodes = ed.select(col("v")).distinct()
-    if (nodes.isEmpty) {
+    val (ed, rows) = Bfs.positiveAdjacency(edges, aCol, bCol, wCol, caller)
+    if (rows == 0L) {
       return edges.sparkSession.range(0).select(
         col("id").as("p"), col("id").as("v"), lit(0.0).as("dist"))
     }
-    Bfs.minPlus(ed, nodes.select(col("v").as("p"), col("v"), lit(0.0).as("dist")),
+    Bfs.minPlus(ed,
+      ed.select(col("v")).distinct().select(col("v").as("p"), col("v"), lit(0.0).as("dist")),
       maxRounds, caller)
   }
 
@@ -389,10 +353,10 @@ object Centrality {
     * each round so iters never stack join plans.
     *
     * `weightCol` makes it the STRENGTH eigenvector (x ← A_w·x, the
-    * weighted adjacency of [[symmetrizeWeighted]] — parallel edges and
-    * both orientations sum): the flagship road graph's RUC·length ties
-    * and every link/citation corpus are weighted, so the unweighted
-    * form is the special case w ≡ 1, not the norm. Same iteration,
+    * weighted adjacency [[Edges.weighted]] builds with `sum` — parallel
+    * edges and both orientations sum): the flagship road graph's
+    * RUC·length ties and every link/citation corpus are weighted, so the
+    * unweighted form is the special case w ≡ 1, not the norm. Same iteration,
     * same plan shape — the neighbor sum picks up a per-edge factor
     * (Σ w·x, the qg14 HITS arithmetic) and nothing else changes.
     * Weights are used AS GIVEN (the [[Hits]] contract): null weights
@@ -406,9 +370,9 @@ object Centrality {
     // eager (the PageRank/Hits rationale): computed once, the 8 eigenStep
     // rounds and the node derivation all read checkpointed blocks —
     // through a data-sized coalesce view (the PageRank transV rationale)
-    val (ed, edParts) = Iterate.sized(weightCol match {
-      case Some(w) => symmetrizeWeighted(edges, aCol, bCol, w)
-      case None => symmetrize(edges, aCol, bCol).withColumn("__w", lit(1.0))
+    val (ed, edParts, _) = Iterate.sized(weightCol match {
+      case Some(w) => Edges.weighted(edges, aCol, bCol, w, sum)
+      case None => Edges.symmetric(Edges.canonical(edges, aCol, bCol)).withColumn("__w", lit(1.0))
     })
     val nodes = ed.select(col("v")).distinct()
     // coalesced like the Hits/PageRank vectors: the aggregate's
@@ -461,11 +425,11 @@ object Centrality {
       trackNf: Boolean): Option[(DataFrame, Vector[Long])] = {
     require(p >= 4 && p <= 12, s"p must be in [4, 12], got $p")
     // eager + size-partitioned: every round probes ed
-    val (ed, _) = Iterate.sized(symmetrize(edges, aCol, bCol))
-    val nodes = ed.select(col("v")).distinct()
-    if (nodes.isEmpty) {
+    val (ed, _, rows) = Edges.adjacency(edges, aCol, bCol)
+    if (rows == 0L) {
       return None
     }
+    val nodes = ed.select(col("v")).distinct()
     def estimate(regs: DataFrame): DataFrame =
       Sketches.hllEstimate(regs, Seq("__k"), p)
         .select(col("__k"), col("__est"))

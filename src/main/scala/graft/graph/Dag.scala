@@ -55,11 +55,7 @@ object Dag {
       .filter(col("s").isNotNull && col("d").isNotNull)
       .distinct()
       .localCheckpoint(true)
-    val (nodes, nNodes) = Iterate.checkpointCounted(typed
-      .select(col("s").as("node"))
-      .unionAll(typed.select(col("d").as("node")))
-      .filter(col("node").isNotNull)
-      .distinct())
+    val (nodes, nNodes) = Iterate.checkpointCounted(Edges.endpoints(typed))
 
     untilAcyclic(nodes.select(col("node"), lit(0L).as("layer")),
         nNodes, maxRounds, "longestPathLayer") { layer =>
@@ -136,11 +132,7 @@ object Dag {
       .groupBy(col("s"), col("d"))
       .agg(max(col("w")).as("w")) // parallel tasks: the slowest binds
       .localCheckpoint(true)
-    val (nodes, nNodes) = Iterate.checkpointCounted(typed
-      .select(col("s").as("node"))
-      .unionAll(typed.select(col("d").as("node")))
-      .filter(col("node").isNotNull)
-      .distinct())
+    val (nodes, nNodes) = Iterate.checkpointCounted(Edges.endpoints(typed))
 
     untilAcyclic(nodes.select(col("node"), lit(0L).as("layer"), lit(0.0).as("cost")),
         nNodes, maxRounds, "criticalPath") { state =>

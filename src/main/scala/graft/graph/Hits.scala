@@ -62,7 +62,7 @@ object Hits {
     // and race the cache fill — the caller's (possibly 4-table) edge
     // build would run up to twice before the cache lands; data-sized so
     // every gather probes it with data-shaped tasks
-    val (e, _) = Iterate.sized(edges
+    val (e, _, _) = Iterate.sized(edges
       .select(col(srcCol).as("src"), col(dstCol).as("dst"),
         col(wCol).cast("double").as("w"))
       .groupBy("src", "dst").agg(sum("w").as("w")))

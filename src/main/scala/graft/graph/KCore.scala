@@ -38,7 +38,7 @@ object KCore {
   def decompose(edges: DataFrame, aCol: String, bCol: String, k: Int): DataFrame = {
     require(k >= 1, s"k must be >= 1, got $k")
     // the peel loop probes ed every round
-    val (ed, parts) = Iterate.adjacency(edges, aCol, bCol)
+    val (ed, parts, _) = Edges.adjacency(edges, aCol, bCol)
 
     // no row is flagged: the peel only shrinks the live set, so an
     // unchanged size is the fixpoint

@@ -36,7 +36,7 @@ object LabelProp {
   def run(edges: DataFrame, aCol: String, bCol: String, rounds: Int): DataFrame = {
     require(rounds >= 0, s"rounds must be >= 0, got $rounds")
     // the propagation loop joins ed every round
-    val (ed, parts) = Iterate.adjacency(edges, aCol, bCol)
+    val (ed, parts, _) = Edges.adjacency(edges, aCol, bCol)
 
     val (init, steps) =
       if (rounds == 0) (ed.select(col("v")).distinct().withColumn("lbl", col("v")), 0)

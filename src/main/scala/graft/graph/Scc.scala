@@ -48,8 +48,9 @@ import graft.Iterate
   * the trim), run by
   * [[Iterate.untilStable]]: localCheckpointed so plans never stack,
   * with the changed-row and row counts observed inside each round's
-  * checkpoint job. No driver-side graph, no adjacency collect; the
-  * only driver reads are one emptiness probe per phase boundary. The
+  * checkpoint job. No driver-side graph, no adjacency collect, and no
+  * probe job: the live node and edge counts that end the outer loop are
+  * observed inside the checkpoints that narrow those tables. The
   * three phases share one `maxRounds` budget of inner rounds, each
   * phase's last (stable) round included. Worst case is
   * a long chain of SCCs (rounds ~ chain length — inherent to the
@@ -64,8 +65,8 @@ object Scc {
     * [[Iterate.untilStable]]; the outer peel stays a hand-written loop
     * because a round carries three tables (live nodes, live edges and
     * the retired assignments) and runs three fixpoints, which no
-    * one-state round driver holds, and it stops on an emptiness probe
-    * per outer round rather than on a flagged-row count.
+    * one-state round driver holds, and it stops when a round leaves no
+    * live node rather than on a flagged-row count.
     */
   def run(
       edges: DataFrame, srcCol: String, dstCol: String,
@@ -98,24 +99,21 @@ object Scc {
       .distinct()
       .localCheckpoint(true)
     // self-loop-only / isolated-in-edge-list nodes still get a row
-    var nodes = typed
-      .select(col("s").as("node"))
-      .unionAll(typed.select(col("d").as("node")))
-      .filter(col("node").isNotNull)
-      .distinct()
-      .localCheckpoint(true)
+    var (nodes, nLive) = Iterate.checkpointCounted(Edges.endpoints(typed))
     val assigned = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
 
-    // narrows the unassigned nodes to `live` and the edges to those among them
-    def keepOnly(live: DataFrame): Unit = {
+    // narrows the unassigned nodes to `live` and the edges to those
+    // among them; returns that edge count
+    def keepOnly(live: DataFrame): Long = {
       nodes = live
-      remaining = remaining
+      val (among, m) = Iterate.checkpointCounted(remaining
         .join(live.select(col("node").as("s")), Seq("s"), "left_semi")
-        .join(live.select(col("node").as("d")), Seq("d"), "left_semi")
-        .localCheckpoint(true)
+        .join(live.select(col("node").as("d")), Seq("d"), "left_semi"))
+      remaining = among
+      m
     }
 
-    while (!nodes.isEmpty) {
+    while (nLive > 0L) {
       // ---- 1. trim to fixpoint: a node with no in-edge or no out-edge
       // among the live ones is a singleton; the live set only shrinks
       // (no row is flagged), so an unchanged size is the fixpoint
@@ -130,8 +128,10 @@ object Scc {
       }
       assigned += nodes.join(live, Seq("node"), "left_anti")
         .select(col("node"), col("node").as("scc"))
-      keepOnly(live)
-      if (!nodes.isEmpty) {
+      // every node the trim keeps has an out-edge to another kept node,
+      // so the kept nodes are empty exactly when their edges are
+      if (keepOnly(live) == 0L) nLive = 0L
+      else {
         // ---- 2. forward min-label coloring to fixpoint; the old label
         // rides the merge under a tag, so "improved" is a column
         val f = phase(nodes.select(col("node"), col("node").as("lb")), "coloring") { f =>
@@ -164,7 +164,9 @@ object Scc {
           .select(col("node"), col("lb").as("scc"))
           .localCheckpoint(true)
         assigned += members
-        keepOnly(nodes.join(members, Seq("node"), "left_anti").localCheckpoint(true))
+        val (rest, n) = Iterate.checkpointCounted(nodes.join(members, Seq("node"), "left_anti"))
+        nLive = n
+        keepOnly(rest)
       }
     }
     if (assigned.isEmpty) spark.emptyDataset[(Long, Long)].toDF("node", "scc")

@@ -15,20 +15,18 @@ import org.apache.spark.sql.functions._
   * Reference: no analog (the reference's graph tier is routing); this
   * extends the beyond-reference graph-analytics rows qg9–qg34.
   *
-  * All three canonicalize to simple undirected edges (dedupe both
-  * orientations, drop self-loops) exactly as [[Triangles.count]] does,
-  * so mixed-orientation inputs score identically.
+  * All four read the graph tier's one edge policy: endpoints cast to
+  * long, then [[Edges.canonical]] (both orientations merged, self-loops
+  * and null endpoints dropped), so mixed-orientation inputs score
+  * identically; the wedge and moment readouts take its
+  * [[Edges.symmetric]] orientation and [[Edges.degrees]].
   */
 object Structure {
 
-  private def canonical(edges: DataFrame, aCol: String, bCol: String): DataFrame =
-    edges
-      .select(
-        least(col(aCol), col(bCol)).cast("long").as("a"),
-        greatest(col(aCol), col(bCol)).cast("long").as("b"))
-      .filter(col("a").isNotNull && col("b").isNotNull)
-      .filter(col("a") =!= col("b"))
-      .distinct()
+  // the canonical edge set over long endpoints
+  private def longEdges(edges: DataFrame, aCol: String, bCol: String): DataFrame =
+    Edges.canonical(
+      edges.select(col(aCol).cast("long").as("a"), col(bCol).cast("long").as("b")), "a", "b")
 
   /** Common-neighbor link prediction: for every NON-adjacent unordered
     * pair (a < b) sharing at least `minCommon` neighbors, the three
@@ -58,11 +56,9 @@ object Structure {
     // eager (the neighborhoodJaccard rationale): the final action's
     // concurrent broadcast builds must read a materialized e, not race
     // a lazy cache fill
-    val e = canonical(edges, aCol, bCol).localCheckpoint(true)
-    val adj = e.select(col("a").as("v"), col("b").as("t"))
-      .unionAll(e.select(col("b").as("v"), col("a").as("t")))
-    val deg = adj.groupBy(col("v"))
-      .agg(org.apache.spark.sql.functions.count(lit(1)).as("deg"))
+    val e = longEdges(edges, aCol, bCol).localCheckpoint(true)
+    val adj = Edges.symmetric(e, "t")
+    val deg = Edges.degrees(e)
     // wedge x1 —w— x2 with x1 < x2: each shared neighbor w of a candidate
     // pair emits exactly one row carrying deg(w)
     val adjD = adj.join(deg, Seq("v")).filter(col("deg") <= maxDegree)
@@ -109,11 +105,9 @@ object Structure {
     // local cores the event log showed 10× the 8-core summed task time,
     // the slots parked on cache-fill block locks. Checkpointed, e is
     // computed exactly once before any consumer plans against it.
-    val e = canonical(edges, aCol, bCol).localCheckpoint(true)
-    val adj = e.select(col("a").as("v"), col("b").as("t"))
-      .unionAll(e.select(col("b").as("v"), col("a").as("t")))
-    val deg = adj.groupBy(col("v"))
-      .agg(org.apache.spark.sql.functions.count(lit(1)).as("deg"))
+    val e = longEdges(edges, aCol, bCol).localCheckpoint(true)
+    val adj = Edges.symmetric(e, "t")
+    val deg = Edges.degrees(e)
     val adjD = adj.join(deg, Seq("v")).filter(col("deg") <= maxDegree)
     val wedges = adjD.select(col("v"), col("t").as("x"))
       .join(adjD.select(col("v"), col("t").as("y")), Seq("v"))
@@ -151,11 +145,9 @@ object Structure {
   def assortativity(edges: DataFrame, aCol: String, bCol: String): DataFrame = {
     // eager (the neighborhoodJaccard rationale): the moment fold and
     // both 1-row crossJoin subqueries read e concurrently
-    val e = canonical(edges, aCol, bCol).localCheckpoint(true)
-    val adj = e.select(col("a").as("v"), col("b").as("t"))
-      .unionAll(e.select(col("b").as("v"), col("a").as("t")))
-    val deg = adj.groupBy(col("v"))
-      .agg(org.apache.spark.sql.functions.count(lit(1)).as("deg"))
+    val e = longEdges(edges, aCol, bCol).localCheckpoint(true)
+    val adj = Edges.symmetric(e, "t")
+    val deg = Edges.degrees(e)
     val dd = adj
       .join(deg, Seq("v"))
       .join(
@@ -217,7 +209,7 @@ object Structure {
       .select(col(vCol).cast("long").as("v"), col(cCol).as("c"))
       .filter(col("v").isNotNull && col("c").isNotNull)
       .groupBy(col("v")).agg(first(col("c"), ignoreNulls = true).as("c"))
-    val eLab = canonical(edges, aCol, bCol)
+    val eLab = longEdges(edges, aCol, bCol)
       .join(lab.select(col("v").as("a"), col("c").as("ca")), Seq("a"))
       .join(lab.select(col("v").as("b"), col("c").as("cb")), Seq("b"))
       // eager (the neighborhoodJaccard rationale): m, degC and intra all

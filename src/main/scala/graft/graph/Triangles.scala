@@ -41,29 +41,9 @@ object Triangles {
     // Structure.neighborhoodJaccard as ~10× summed task time at 32
     // local cores (slots parked on cache-fill block locks). Blocks free
     // on GC like every checkpoint in this tier.
-    val e = edges
-      .select(
-        least(col(aCol), col(bCol)).as("a"),
-        greatest(col(aCol), col(bCol)).as("b"))
-      .filter(col("a") =!= col("b"))
-      .distinct()
-      .localCheckpoint(true)
-
-    val deg = e.select(col("a").as("v"))
-      .unionAll(e.select(col("b").as("v")))
-      .groupBy("v").agg(org.apache.spark.sql.functions.count(lit(1)).as("deg"))
-
-    // orient each edge from its (deg, id)-smaller endpoint
-    val dir = e
-      .join(deg.select(col("v").as("a"), col("deg").as("da")), "a")
-      .join(deg.select(col("v").as("b"), col("deg").as("db")), "b")
-      .select(
-        when(col("da") < col("db") ||
-            (col("da") === col("db") && col("a") < col("b")),
-          struct(col("a").as("s"), col("b").as("d")))
-          .otherwise(struct(col("b").as("s"), col("a").as("d"))).as("e"))
-      .select(col("e.s").as("src"), col("e.d").as("dst"))
-      .localCheckpoint(true)
+    val e = Edges.canonical(edges, aCol, bCol).localCheckpoint(true)
+    val deg = Edges.degrees(e)
+    val dir = Edges.oriented(e, deg).localCheckpoint(true)
 
     // EDGE-ITERATOR closing: triangles(x<y<z) = Σ over directed edges
     // (u→v) of |N⁺(u) ∩ N⁺(v)|. The alternative — materializing wedges
@@ -73,25 +53,18 @@ object Triangles {
     // the |E| edge rows and the intersection runs inside codegen —
     // same asymptotic work, two orders of magnitude less data moved
     // (10⁷ edges: 217 s → see ENGINE.md).
-    val adj = dir.groupBy(col("src"))
-      .agg(collect_list(col("dst")).as("nbrs"))
-      .localCheckpoint(true)
-    val tri = dir
-      .join(adj.select(col("src"), col("nbrs").as("__nu")), Seq("src"))
-      // inner on dst: an edge whose head has no out-neighbours closes
-      // nothing and may drop
-      .join(adj.select(col("src").as("dst"), col("nbrs").as("__nv")), Seq("dst"))
+    val out = Edges.outLists(dir).localCheckpoint(true)
+    val tri = Edges.closing(dir, out)
       .select(size(array_intersect(col("__nu"), col("__nv"))).as("t"))
       .agg(coalesce(sum(col("t")), lit(0L)).as("triangles"))
 
     // materialize the 1-row summary (checkpoint blocks above free when
     // their frames are GC'd — nothing pins executor storage across the
     // bench's repeated runs)
-    val out = deg.agg(org.apache.spark.sql.functions.count(lit(1)).as("n_nodes"))
+    deg.agg(org.apache.spark.sql.functions.count(lit(1)).as("n_nodes"))
       .crossJoin(e.agg(org.apache.spark.sql.functions.count(lit(1)).as("n_edges")))
       .crossJoin(tri)
       .localCheckpoint(true)
-    out
   }
 
   /** PER-NODE triangle counts + LOCAL CLUSTERING COEFFICIENT
@@ -109,40 +82,18 @@ object Triangles {
   def perNode(edges: DataFrame, aCol: String, bCol: String): DataFrame = {
     // eager chain (the count() rationale): every multi-consumer frame
     // materializes once before its concurrent consumers plan against it
-    val e = edges
-      .select(
-        least(col(aCol), col(bCol)).as("a"),
-        greatest(col(aCol), col(bCol)).as("b"))
-      .filter(col("a") =!= col("b"))
-      .distinct()
-      .localCheckpoint(true)
-    val deg = e.select(col("a").as("v"))
-      .unionAll(e.select(col("b").as("v")))
-      .groupBy("v").agg(org.apache.spark.sql.functions.count(lit(1)).as("deg"))
-      .localCheckpoint(true)
-    val dir = e
-      .join(deg.select(col("v").as("a"), col("deg").as("da")), "a")
-      .join(deg.select(col("v").as("b"), col("deg").as("db")), "b")
-      .select(
-        when(col("da") < col("db") ||
-            (col("da") === col("db") && col("a") < col("b")),
-          struct(col("a").as("s"), col("b").as("d")))
-          .otherwise(struct(col("b").as("s"), col("a").as("d"))).as("e"))
-      .select(col("e.s").as("src"), col("e.d").as("dst"))
-      .localCheckpoint(true)
-    val adj = dir.groupBy(col("src"))
-      .agg(collect_list(col("dst")).as("nbrs"))
-      .localCheckpoint(true)
-    val corners = dir
-      .join(adj.select(col("src"), col("nbrs").as("__nu")), Seq("src"))
-      .join(adj.select(col("src").as("dst"), col("nbrs").as("__nv")), Seq("dst"))
+    val e = Edges.canonical(edges, aCol, bCol).localCheckpoint(true)
+    val deg = Edges.degrees(e).localCheckpoint(true)
+    val dir = Edges.oriented(e, deg).localCheckpoint(true)
+    val out = Edges.outLists(dir).localCheckpoint(true)
+    val corners = Edges.closing(dir, out)
       .select(col("src"), col("dst"),
         explode(array_intersect(col("__nu"), col("__nv"))).as("__w"))
     val triPerNode = corners.select(col("src").as("v"))
       .unionAll(corners.select(col("dst").as("v")))
       .unionAll(corners.select(col("__w").as("v")))
       .groupBy("v").agg(org.apache.spark.sql.functions.count(lit(1)).as("triangles"))
-    val out = deg
+    deg
       .join(triPerNode, Seq("v"), "left")
       .select(
         col("v").as("node"),
@@ -153,6 +104,5 @@ object Triangles {
             / (col("deg") * (col("deg") - 1L)).cast("double"), 6))
           .as("clustering_coef"))
       .localCheckpoint(true)
-    out
   }
 }

@@ -43,27 +43,11 @@ object Truss {
     // no triangle simply emit no rows (support 0 — always below the
     // k−2 ≥ 1 peel threshold, so omission is equivalent to filtering)
     def supports(cur: DataFrame): DataFrame = {
-      val deg = cur.select(col("a").as("v")).unionAll(cur.select(col("b").as("v")))
-        .groupBy("v").agg(count(lit(1)).as("deg"))
-      // orient each edge from its (deg, id)-smaller endpoint: out-degree
-      // is O(√m) under this order even at a celebrity node, whose edges
-      // all point toward it
-      val dir = cur
-        .join(deg.select(col("v").as("a"), col("deg").as("da")), "a")
-        .join(deg.select(col("v").as("b"), col("deg").as("db")), "b")
-        .select(
-          when(col("da") < col("db") ||
-              (col("da") === col("db") && col("a") < col("b")),
-            struct(col("a").as("s"), col("b").as("d")))
-            .otherwise(struct(col("b").as("s"), col("a").as("d"))).as("e"))
-        .select(col("e.s").as("src"), col("e.d").as("dst"))
-      val adj = dir.groupBy(col("src")).agg(collect_list(col("dst")).as("nbrs"))
+      val dir = Edges.oriented(cur, Edges.degrees(cur))
       // triangle {u,v,w} appears exactly once, as the wedge u→v, u→w
       // closed by v→w — so exploding N⁺(u) ∩ N⁺(v) per directed edge
       // enumerates each triangle once
-      val tris = dir
-        .join(adj.select(col("src"), col("nbrs").as("__nu")), Seq("src"))
-        .join(adj.select(col("src").as("dst"), col("nbrs").as("__nv")), Seq("dst"))
+      val tris = Edges.closing(dir, Edges.outLists(dir))
         .select(col("src").as("u"), col("dst").as("v"),
           explode(array_intersect(col("__nu"), col("__nv"))).as("w"))
       // one triangle row → +1 support on each of its three edges (the
@@ -79,14 +63,8 @@ object Truss {
 
     // the peel only shrinks the edge set (no row is flagged), so an
     // unchanged size is the fixpoint
-    val cur = Iterate.untilStable(
-      edges
-        .select(
-          least(col(aCol), col(bCol)).as("a"),
-          greatest(col(aCol), col(bCol)).as("b"))
-        .filter(col("a") =!= col("b"))
-        .distinct(),
-      Int.MaxValue, "Truss.decompose") { (s, _) =>
+    val cur = Iterate.untilStable(Edges.canonical(edges, aCol, bCol),
+        Int.MaxValue, "Truss.decompose") { (s, _) =>
       supports(s)
         .filter(col("support") >= k - 2)
         .select(col("a"), col("b"), lit(false).as("__imp"))

@@ -40,15 +40,9 @@ object Walks {
       walksPerNode: Int = 2, length: Int = 8): DataFrame = {
     require(walksPerNode >= 1, s"walksPerNode must be >= 1, got $walksPerNode")
     require(length >= 1, s"length must be >= 1, got $length")
-    val e = edges
-      .select(
-        least(col(aCol), col(bCol)).cast("long").as("a"),
-        greatest(col(aCol), col(bCol)).cast("long").as("b"))
-      .filter(col("a").isNotNull && col("b").isNotNull)
-      .filter(col("a") =!= col("b"))
-      .distinct()
-    val adj = e.select(col("a").as("v"), col("b").as("t"))
-      .unionAll(e.select(col("b").as("v"), col("a").as("t")))
+    val e = Edges.canonical(
+      edges.select(col(aCol).cast("long").as("a"), col(bCol).cast("long").as("b")), "a", "b")
+    val adj = Edges.symmetric(e, "t")
       .groupBy(col("v"))
       .agg(sort_array(collect_list(col("t"))).as("nbrs"),
         org.apache.spark.sql.functions.count(lit(1)).as("deg"))

@@ -1,16 +1,11 @@
 package graft.graph
 
-import java.util.concurrent.ConcurrentLinkedQueue
-
-import scala.jdk.CollectionConverters._
-
-import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent}
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
 import org.apache.spark.sql.functions.{col, lit, min, sum, when}
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.{GraftSession, Iterate}
+import graft.{GraftSession, Iterate, SpecTools}
+import graft.SpecTools.{closing, codeOnly, enclosingDef, mainSources}
 
 /** Round-driver contracts: the observation-driven stop matches a
   * count-driven loop round for round, an already-stable init returns
@@ -106,28 +101,7 @@ class IterateSpec extends AnyFunSuite {
     assert(ex2.getMessage.contains("maxRounds=5"), ex2.getMessage)
   }
 
-  // call sites ("<action> at File.scala:N") of the SQL executions `body`
-  // starts — job-level stage names are AQE's async submit threads
-  private def actionsOf(body: => Unit): Seq[String] = {
-    val names = new ConcurrentLinkedQueue[String]()
-    val listener = new SparkListener {
-      override def onOtherEvent(event: SparkListenerEvent): Unit = event match {
-        case e: SparkListenerSQLExecutionStart => names.add(e.description)
-        case _ =>
-      }
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      body
-      // listener delivery is async; poll until quiescent
-      val deadline = System.nanoTime() + 5_000_000_000L
-      var last = -1
-      while (System.nanoTime() < deadline && names.size != last) {
-        last = names.size; Thread.sleep(100)
-      }
-    } finally spark.sparkContext.removeSparkListener(listener)
-    names.asScala.toSeq
-  }
+  private def actionsOf(body: => Unit): Seq[String] = SpecTools.actionsOf(spark)(body)
 
   test("no count job is submitted from inside the loop") {
     val ed = chain.localCheckpoint(true)
@@ -251,44 +225,6 @@ class IterateSpec extends AnyFunSuite {
       Betweenness.runWeighted(path, "x", "y", "w", maxRounds = 3).collect())
   }
 
-  // src/main text with comments and string literals blanked (offsets
-  // and newlines kept), so prose or a string never reads as a loop
-  private def codeOnly(t: String): String = {
-    val out = t.toCharArray
-    def blank(from: Int, to: Int): Unit =
-      (from until math.min(to, t.length)).foreach(j => if (t(j) != '\n') out(j) = ' ')
-    def end(close: String, from: Int): Int = {
-      val j = t.indexOf(close, from)
-      if (j < 0) t.length else j + close.length
-    }
-    var i = 0
-    while (i < t.length) {
-      if (t.startsWith("//", i)) { val e = end("\n", i) - 1; blank(i, e); i = e }
-      else if (t.startsWith("/*", i)) { val e = end("*/", i + 2); blank(i, e); i = e }
-      else if (t.startsWith("\"\"\"", i)) { val e = end("\"\"\"", i + 3); blank(i + 3, e - 3); i = e }
-      else if (t(i) == '"') {
-        var j = i + 1
-        while (j < t.length && t(j) != '"') j += (if (t(j) == '\\') 2 else 1)
-        blank(i + 1, j); i = j + 1
-      } else if (t(i) == '\'' && i + 2 < t.length && (t(i + 1) == '\\' || t(i + 2) == '\'')) {
-        val e = end("'", i + 2); blank(i + 1, e - 1); i = e
-      } else i += 1
-    }
-    new String(out)
-  }
-
-  // index just past the bracket matching the opener at `from`
-  private def closing(code: String, from: Int, open: Char, close: Char): Int = {
-    var depth = 0
-    var j = from
-    while (j < code.length) {
-      if (code(j) == open) depth += 1
-      else if (code(j) == close) { depth -= 1; if (depth == 0) return j + 1 }
-      j += 1
-    }
-    code.length
-  }
-
   // round loops left outside Iterate (file → enclosing def); each def's
   // scaladoc says why it does not run on a round driver
   private val outsideIterate = Set(
@@ -298,19 +234,14 @@ class IterateSpec extends AnyFunSuite {
     "TextAnalysis.scala" -> "bpeTrain")
 
   test("no round loop in src/main checkpoints a DataFrame outside Iterate") {
-    import java.nio.file.{Files, Paths}
-    val files = Files.walk(Paths.get("src", "main", "scala")).iterator().asScala
-      .filter(p => p.toString.endsWith(".scala") && p.getFileName.toString != "Iterate.scala")
-      .toSeq
+    import java.nio.file.Files
+    val files = mainSources().filter(_.getFileName.toString != "Iterate.scala")
     val loopHead = "\\b(while|for)\\s*\\(".r
-    val defName = "\\bdef\\s+(\\w+)".r
     // (file, enclosing def, loop header, def scaladoc) of every
     // while/for loop whose body checkpoints, directly or counted
     val loops = files.flatMap { p =>
       val text = Files.readString(p)
       val code = codeOnly(text)
-      val depth = code.scanLeft(0) { (d, c) =>
-        if (c == '{') d + 1 else if (c == '}') d - 1 else d }
       loopHead.findAllMatchIn(code).flatMap { m =>
         val cond = closing(code, code.indexOf('(', m.start), '(', ')')
         val at = code.indexWhere(c => !c.isWhitespace, cond)
@@ -319,15 +250,14 @@ class IterateSpec extends AnyFunSuite {
           else code.substring(cond, math.max(cond, code.indexOf('\n', cond)))
         if (!body.contains("localCheckpoint(") && !body.contains("checkpointCounted(")) None
         else {
-          val owner = defName.findAllMatchIn(code.substring(0, m.start))
-            .filter(d => depth(d.start) < depth(m.start)).toSeq.lastOption
-          val name = owner.fold("<none>")(_.group(1))
+          val owner = enclosingDef(code, m.start)
+          val name = owner.fold("<none>")(_._1)
           // the scaladoc right above the enclosing def, or ""
-          val doc = owner.fold("") { d =>
-            val start = text.lastIndexOf("/**", d.start)
+          val doc = owner.fold("") { case (_, defAt) =>
+            val start = text.lastIndexOf("/**", defAt)
             val close = text.indexOf("*/", math.max(start, 0))
-            if (start < 0 || close > d.start ||
-                !text.substring(close + 2, d.start).trim.matches("((private|protected)(\\[\\w+\\])?|final|override|\\s)*"))
+            if (start < 0 || close > defAt ||
+                !text.substring(close + 2, defAt).trim.matches("((private|protected)(\\[\\w+\\])?|final|override|\\s)*"))
               ""
             else text.substring(start, close)
           }

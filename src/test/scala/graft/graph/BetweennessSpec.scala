@@ -2,7 +2,7 @@ package graft.graph
 
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.GraftSession
+import graft.{GraftSession, SpecTools}
 
 /** Betweenness contracts: hand-computed exact values (path, star, and a
   * fractional-σ cycle), the pivot estimator's exactness on a
@@ -86,9 +86,26 @@ class BetweennessSpec extends AnyFunSuite {
 
   test("messy input: duplicates, both orientations, self-loops canonicalize") {
     val clean = bc(Seq((1L, 2L), (2L, 3L), (3L, 4L)))
-    val messy = bc(Seq(
-      (1L, 2L), (2L, 1L), (2L, 3L), (3L, 2L), (3L, 4L), (3L, 4L), (2L, 2L)))
+    val messy = Betweenness.run(Seq[(Option[Long], Option[Long])](
+        (Some(1L), Some(2L)), (Some(2L), Some(1L)), (Some(2L), Some(3L)),
+        (Some(3L), Some(2L)), (Some(3L), Some(4L)), (Some(3L), Some(4L)),
+        (Some(2L), Some(2L)),
+        (Some(2L), None), (None, None)) // null endpoints dropped
+      .toDF("x", "y"), "x", "y").as[(Long, Double)].collect().toMap
     assert(approxEq(messy, clean))
+  }
+
+  test("the all-pivots path counts its node set once, inside its checkpoint") {
+    // pivots = 0 makes every node a pivot, so k = n needs no count job
+    val path = Seq((1L, 2L), (2L, 3L), (3L, 4L))
+    var out: Map[Long, Double] = null
+    val names = SpecTools.actionsOf(spark) { out = bc(path) }
+    assert(approxEq(out, Map(1L -> 0.0, 2L -> 2.0, 3L -> 2.0, 4L -> 0.0)))
+    var wout: Map[Long, Double] = null
+    val wnames = SpecTools.actionsOf(spark) { wout = wbc(path.map(e => (e._1, e._2, 1.0))) }
+    assert(approxEq(wout, out))
+    val counts = (names ++ wnames).filter(_.contains("count at Betweenness.scala"))
+    assert(counts.isEmpty, (names ++ wnames).mkString("\n"))
   }
 
   test("empty and edgeless inputs return empty frames") {

@@ -11,8 +11,11 @@ class CentralitySpec extends AnyFunSuite {
       "canonicalization, empty input") {
     import spark.implicits._
     // path 0-1-2 plus a separate edge 10-11 (disconnected component),
-    // with a dup orientation and a self-loop to pin canonicalization
-    val edges = Seq((0L, 1L), (1L, 2L), (1L, 0L), (3L, 3L), (10L, 11L))
+    // with a dup orientation, a self-loop and null endpoints to pin
+    // canonicalization
+    val edges = Seq[(Option[Long], Option[Long])](
+      (Some(0L), Some(1L)), (Some(1L), Some(2L)), (Some(1L), Some(0L)), (Some(3L), Some(3L)),
+      (Some(10L), Some(11L)), (Some(4L), None), (None, None))
       .toDF("a", "b")
     val out = Centrality.distanceCentralities(edges, "a", "b")
       .as[(Long, Long, Long, Double, Double)].collect()
@@ -26,8 +29,8 @@ class CentralitySpec extends AnyFunSuite {
     // never touches the other component
     assert(out(10L) == ((10L, 1L, 1L, 1.0, 1.0)))
     assert(out(11L) == ((11L, 1L, 1L, 1.0, 1.0)))
-    // self-loop-only node 3 is isolated: no row
-    assert(!out.contains(3L))
+    // self-loop-only node 3 and null-sided node 4 are isolated: no row
+    assert(out.keySet == Set(0L, 1L, 2L, 10L, 11L))
     assert(Centrality.distanceCentralities(
       edges.filter(lit(false)), "a", "b").count() == 0L)
   }
@@ -245,5 +248,21 @@ class CentralitySpec extends AnyFunSuite {
     val xMerged = Centrality.eigenvectorCentrality(merged, "a", "b", iters = 8,
       weightCol = Some("w")).as[(Long, Double)].collect().toMap
     assert(xSplit == xMerged)
+  }
+
+  test("the exact, HyperBall and weighted all-pairs loops branch on the " +
+      "adjacency's own row count: no emptiness probe job") {
+    import spark.implicits._
+    val path = Seq((0L, 1L), (1L, 2L)).toDF("a", "b")
+    var sizes = Seq.empty[Long]
+    val names = graft.SpecTools.actionsOf(spark) {
+      sizes = Seq(
+        Centrality.distanceCentralities(path, "a", "b").count(),
+        Centrality.harmonicHyperBall(path, "a", "b").count(),
+        Centrality.weightedAllPairsDistances(
+          path.withColumn("w", lit(1.0)), "a", "b", "w").count())
+    }
+    assert(sizes == Seq(3L, 3L, 9L))
+    assert(!names.exists(_.contains("isEmpty at Centrality.scala")), names.mkString("\n"))
   }
 }

@@ -2,7 +2,7 @@ package graft.graph
 
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.GraftSession
+import graft.{GraftSession, SpecTools}
 
 /** SCC contracts: mutual-reachability equivalence classes labeled by
   * their minimum member, against hand graphs and a brute-force
@@ -64,29 +64,46 @@ class SccSpec extends AnyFunSuite {
     assert(got == Map(1L -> 1L, 2L -> 1L, 3L -> 3L))
   }
 
+  // the brute-force oracle: Floyd-Warshall reachability over the
+  // endpoints, each labeled by the least node it reaches both ways
+  private def bruteForce(arcs: Seq[(Long, Long)]): Map[Long, Long] = {
+    val present = arcs.flatMap(e => Seq(e._1, e._2)).distinct
+    val at = present.zipWithIndex.toMap
+    val n = present.size
+    val reach = Array.fill(n, n)(false)
+    arcs.foreach { case (a, b) => reach(at(a))(at(b)) = true }
+    (0 until n).foreach(i => reach(i)(i) = true)
+    for (k <- 0 until n; i <- 0 until n; j <- 0 until n)
+      if (reach(i)(k) && reach(k)(j)) reach(i)(j) = true
+    present.map { v =>
+      v -> present.filter(u => reach(at(u))(at(v)) && reach(at(v))(at(u))).min
+    }.toMap
+  }
+
   test("matches a brute-force transitive-closure oracle on a hash-random " +
       "graph; deterministic under repartitioning; empty graph is empty") {
     val n = 24
     val arcs = (0 until 90).map { i =>
       (((i * 2654435761L) % n).abs, ((i * 40503L + 7) % n).abs)
     }.distinct
-    // Floyd-Warshall reachability
-    val reach = Array.fill(n, n)(false)
-    arcs.foreach { case (a, b) => reach(a.toInt)(b.toInt) = true }
-    (0 until n).foreach(i => reach(i)(i) = true)
-    for (k <- 0 until n; i <- 0 until n; j <- 0 until n)
-      if (reach(i)(k) && reach(k)(j)) reach(i)(j) = true
-    val present = arcs.flatMap(e => Seq(e._1, e._2)).distinct
-    val expect = present.map { v =>
-      v -> present.filter(u =>
-        reach(u.toInt)(v.toInt) && reach(v.toInt)(u.toInt)).min
-    }.toMap
     val got = scc(arcs)
-    assert(got == expect)
+    assert(got == bruteForce(arcs))
     val again = Scc.run(arcs.toDF("s", "d").repartition(7), "s", "d")
       .as[(Long, Long)].collect().toMap
     assert(again == got)
     assert(Scc.run(
       Seq.empty[(Long, Long)].toDF("s", "d"), "s", "d").count() == 0L)
+  }
+
+  test("the outer peel ends on counts observed in its checkpoints: no " +
+      "emptiness probe job") {
+    // 2-cycles chained 1→3→5→7: coloring labels the whole chain 1, and
+    // confinement retires one 2-cycle per outer round — four rounds
+    val arcs = Seq((1L, 2L), (2L, 1L), (2L, 3L), (3L, 4L), (4L, 3L), (4L, 5L),
+      (5L, 6L), (6L, 5L), (6L, 7L), (7L, 8L), (8L, 7L))
+    var got: Map[Long, Long] = null
+    val names = SpecTools.actionsOf(spark) { got = scc(arcs) }
+    assert(got == bruteForce(arcs))
+    assert(!names.exists(_.contains("isEmpty at Scc.scala")), names.mkString("\n"))
   }
 }

@@ -52,10 +52,13 @@ class StructureSpec extends AnyFunSuite {
     // no non-adjacent pair beyond those through the hub -> empty
     assert(capped.count() == 0L)
     // duplicate spellings must not inflate degrees or wedge counts
-    val messy = Seq((1L, 2L), (2L, 1L), (1L, 2L), (2L, 3L)).toDF("x", "y")
+    // and neither may null endpoints
+    val messy = Seq[(Option[Long], Option[Long])](
+      (Some(1L), Some(2L)), (Some(2L), Some(1L)), (Some(1L), Some(2L)), (Some(2L), Some(3L)),
+      (None, Some(2L)), (None, None)).toDF("x", "y")
     val r = Structure.linkPrediction(messy, "x", "y", minCommon = 1).collect()
     assert(r.length == 1 && r(0).getLong(2) == 1L)
-    assert(r(0).getDouble(4) == 0.5) // middle deg 2, not 4
+    assert(r(0).getDouble(4) == 0.5) // middle deg 2, not 3 or 4
   }
 
   test("link prediction plan: every join keyed, no cartesian under the wedge") {

@@ -1,5 +1,6 @@
 package graft.graph
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -15,8 +16,11 @@ class TrianglesSpec extends AnyFunSuite {
   private lazy val spark = GraftSession.local(4, "triangles-spec")
   import spark.implicits._
 
-  private def count(edges: Seq[(Long, Long)]): (Long, Long, Long) = {
-    val r = Triangles.count(edges.toDF("x", "y"), "x", "y").collect()(0)
+  private def count(edges: Seq[(Long, Long)]): (Long, Long, Long) =
+    countDf(edges.toDF("x", "y"))
+
+  private def countDf(edges: DataFrame): (Long, Long, Long) = {
+    val r = Triangles.count(edges, "x", "y").collect()(0)
     (r.getLong(0), r.getLong(1), r.getLong(2))
   }
 
@@ -39,11 +43,12 @@ class TrianglesSpec extends AnyFunSuite {
   }
 
   test("input canonicalization: duplicates, reversed orientations, self-loops") {
-    val messy = Seq(
-      (1L, 2L), (2L, 1L), (1L, 2L), // one edge, three spellings
-      (2L, 3L), (3L, 1L),
-      (2L, 2L), (3L, 3L)) // self-loops dropped
-    assert(count(messy) == (3L, 3L, 1L))
+    val messy = Seq[(Option[Long], Option[Long])](
+      (Some(1L), Some(2L)), (Some(2L), Some(1L)), (Some(1L), Some(2L)), // one edge, three spellings
+      (Some(2L), Some(3L)), (Some(3L), Some(1L)),
+      (Some(2L), Some(2L)), (Some(3L), Some(3L)), // self-loops dropped
+      (Some(3L), None), (None, None)) // null endpoints dropped
+    assert(countDf(messy.toDF("x", "y")) == (3L, 3L, 1L))
   }
 
   test("perNode: coefficients exact on K3 + pendant, corner credit sums " +

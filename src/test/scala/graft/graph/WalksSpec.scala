@@ -47,7 +47,9 @@ class WalksSpec extends AnyFunSuite {
   }
 
   test("canonicalization: self-loops drop; a loop-only node never walks") {
-    val messy = Seq((1L, 2L), (2L, 1L), (3L, 3L)).toDF("x", "y")
+    val messy = Seq[(Option[Long], Option[Long])](
+      (Some(1L), Some(2L)), (Some(2L), Some(1L)), (Some(3L), Some(3L)),
+      (Some(4L), None), (None, None)).toDF("x", "y") // null endpoints dropped
     val starts = Walks.randomWalks(messy, "x", "y", walksPerNode = 1, length = 3)
       .select(col("start")).distinct().as[Long].collect().toSet
     assert(starts == Set(1L, 2L))

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions.{col, count, count_if, lit}
 import org.slf4j.LoggerFactory
 
@@ -33,22 +33,34 @@ private[graft] object Iterate {
     * or a `cache(); count()` pair is two jobs where this is one.
     */
   def checkpointCounted(df: DataFrame): (DataFrame, Long) = {
+    val (cp, m) = checkpointObserved(df)
+    (cp, m("rows").asInstanceOf[Long])
+  }
+
+  /** [[checkpointCounted]] with `observed` aggregates (each aliased)
+    * riding the same observation: the returned map holds their values by
+    * alias beside the row count under `rows`. An order-free aggregate
+    * (`min`, `max`, an integer `sum`) reads the same as its own job
+    * would; a double `sum` merges partials in task-completion order.
+    */
+  def checkpointObserved(df: DataFrame, observed: Column*): (DataFrame, Map[String, Any]) = {
     val obs = new Observation()
-    val cp = df.observe(obs, count(lit(1)).as("rows")).localCheckpoint(true)
-    (cp, obs.get("rows").asInstanceOf[Long])
+    val cp = df.observe(obs, count(lit(1)).as("rows"), observed: _*).localCheckpoint(true)
+    (cp, obs.get)
   }
 
   /** `df` `localCheckpoint`ed once and coalesced to the [[parts]] of
-    * its row count, plus that partition count and the row count: the
-    * probe table a loop reads every round computes exactly once, each
-    * round's scan of it runs data-sized tasks instead of
-    * shuffle.partitions KB blocks, and a caller that branches on an
-    * empty table reads the count instead of probing it.
+    * its row count, plus that partition count and the
+    * [[checkpointObserved]] values (the row count under `rows`, and any
+    * `observed` aggregates): the probe table a loop reads every round
+    * computes exactly once, each round's scan of it runs data-sized
+    * tasks instead of shuffle.partitions KB blocks, and a caller that
+    * branches on an empty table reads the count instead of probing it.
     */
-  def sized(df: DataFrame): (DataFrame, Int, Long) = {
-    val (cp, rows) = checkpointCounted(df)
-    val n = parts(df.sparkSession, rows)
-    (cp.coalesce(n), n, rows)
+  def sized(df: DataFrame, observed: Column*): (DataFrame, Int, Map[String, Any]) = {
+    val (cp, m) = checkpointObserved(df, observed: _*)
+    val n = parts(df.sparkSession, m("rows").asInstanceOf[Long])
+    (cp.coalesce(n), n, m)
   }
 
   /** Applies `step(state, round)` (round 1-based) `rounds` times from

@@ -137,27 +137,25 @@ object Bfs {
         col(wCol).cast("double").as("__w"))
       .filter(col("v").isNotNull && col("t").isNotNull && col("__w").isNotNull)
       .filter(col("v") =!= col("t"))
-    val (ed, _, _) = Iterate.sized(
+    val (ed, _, observed) = Iterate.sized(
       (if (directed) typed
        else typed.unionAll(typed.select(col("t").as("v"), col("v").as("t"), col("__w"))))
         .groupBy(col("v"), col("t"))
-        .agg(min(col("__w")).as("__w")))
+        .agg(min(col("__w")).as("__w")),
+      min(col("__w")).as("minW"))
     // fail fast on negative weights: with directed=false, ONE negative
     // edge is a 2-cycle of negative total — the fixpoint would burn all
     // maxRounds of joins before throwing a generic non-convergence
-    // error. One min(w) pass over the (already checkpointed) edge table
-    // turns that into an immediate, precise rejection. Directed inputs
-    // keep negative edges (label-correcting Bellman-Ford handles them;
-    // only a directed negative CYCLE diverges, still caught by
+    // error. The min weight, observed in the edge table's own checkpoint
+    // job, turns that into an immediate, precise rejection. Directed
+    // inputs keep negative edges (label-correcting Bellman-Ford handles
+    // them; only a directed negative CYCLE diverges, still caught by
     // maxRounds).
-    if (!directed) {
-      val minW = ed.agg(min(col("__w"))).head()
-      if (!minW.isNullAt(0) && minW.getDouble(0) < 0.0) {
-        throw new IllegalArgumentException(
-          s"sssp with directed=false requires non-negative weights: " +
-            s"min weight ${minW.getDouble(0)} < 0 forms a negative cycle " +
-            "with its reverse edge, so no shortest path exists")
-      }
+    if (!directed) minWeight(observed).filter(_ < 0.0).foreach { w =>
+      throw new IllegalArgumentException(
+        s"sssp with directed=false requires non-negative weights: " +
+          s"min weight $w < 0 forms a negative cycle " +
+          "with its reverse edge, so no shortest path exists")
     }
     val schema = StructType(Seq(
       StructField("p", LongType, nullable = false),
@@ -184,18 +182,22 @@ object Bfs {
     val longs = edges.select(
       col(aCol).cast("long").as("a"), col(bCol).cast("long").as("b"), col(wCol).as("__w"))
     // min skips null weights, so a pair left null had only null weights
-    val (ed, _, rows) = Iterate.sized(
-      Edges.weighted(longs, "a", "b", "__w", min, "t").filter(col("__w").isNotNull))
-    val minW = ed.agg(min(col("__w"))).head()
-    if (!minW.isNullAt(0) && minW.getDouble(0) <= 0.0) {
+    val (ed, _, observed) = Iterate.sized(
+      Edges.weighted(longs, "a", "b", "__w", min, "t").filter(col("__w").isNotNull),
+      min(col("__w")).as("minW"))
+    minWeight(observed).filter(_ <= 0.0).foreach { w =>
       throw new IllegalArgumentException(
         s"$caller requires strictly positive weights: min weight " +
-          s"${minW.getDouble(0)} ≤ 0 (zero puts distinct vertices at " +
+          s"$w ≤ 0 (zero puts distinct vertices at " +
           "distance 0 and ties infinitely many equal-cost paths; negative " +
           "forms a cycle)")
     }
-    (ed, rows)
+    (ed, observed("rows").asInstanceOf[Long])
   }
+
+  /** The `minW` an [[Iterate.sized]] call observed; none on no rows. */
+  private def minWeight(observed: Map[String, Any]): Option[Double] =
+    Option(observed("minW")).map(_.asInstanceOf[Double])
 
   /** The min-plus distance fixpoint behind [[sssp]], all-pairs
     * closeness/eccentricity and weighted betweenness: frontier

@@ -120,8 +120,8 @@ object Centrality {
     *
     * Weights must be STRICTLY positive: a zero-weight edge puts two
     * distinct vertices at distance 0 and harmonic = Σ 1/d diverges —
-    * rejected up front with one min(w) pass
-    * ([[Bfs.positiveAdjacency]]); undirected negatives are negative
+    * rejected up front by the min weight the adjacency's checkpoint
+    * observes ([[Bfs.positiveAdjacency]]); undirected negatives are negative
     * cycles anyway. Parallel edges collapse to min weight; self-loops, null
     * endpoints/weights drop; isolated vertices emit no row (no edges
     * → no rows, the [[distanceCentralities]] contract).
@@ -137,10 +137,10 @@ object Centrality {
       edges: DataFrame, aCol: String, bCol: String, wCol: String,
       maxRounds: Int = 128): DataFrame = {
     val spark = edges.sparkSession
-    val dist = weightedAllPairsDistances(
+    val (dist, adjRows) = weightedAllPairsDistances(
       edges, aCol, bCol, wCol, maxRounds,
       caller = "weightedDistanceCentralities")
-    if (dist.isEmpty) {
+    if (adjRows == 0L) {
       return spark.range(0).select(
         col("id").as("node"), lit(0L).as("n_reached"),
         lit(0.0).as("sum_dist"), lit(0.0).as("closeness"),
@@ -186,20 +186,23 @@ object Centrality {
       edges: DataFrame, aCol: String, bCol: String, wCol: String,
       maxRounds: Int = 128): DataFrame =
     weightedAllPairsDistances(edges, aCol, bCol, wCol, maxRounds,
-      caller = "weightedAllPairsDistances")
+      caller = "weightedAllPairsDistances")._1
 
+  /** The distances plus the adjacency's row count: zero means the
+    * distance table is empty, with no job to probe it.
+    */
   private def weightedAllPairsDistances(
       edges: DataFrame, aCol: String, bCol: String, wCol: String,
-      maxRounds: Int, caller: String): DataFrame = {
+      maxRounds: Int, caller: String): (DataFrame, Long) = {
     require(maxRounds >= 1, s"maxRounds must be >= 1, got $maxRounds")
     val (ed, rows) = Bfs.positiveAdjacency(edges, aCol, bCol, wCol, caller)
     if (rows == 0L) {
-      return edges.sparkSession.range(0).select(
-        col("id").as("p"), col("id").as("v"), lit(0.0).as("dist"))
+      return (edges.sparkSession.range(0).select(
+        col("id").as("p"), col("id").as("v"), lit(0.0).as("dist")), rows)
     }
-    Bfs.minPlus(ed,
+    (Bfs.minPlus(ed,
       ed.select(col("v")).distinct().select(col("v").as("p"), col("v"), lit(0.0).as("dist")),
-      maxRounds, caller)
+      maxRounds, caller), rows)
   }
 
   /** WEIGHTED ECCENTRICITY per vertex — `(node, n_reached, ecc)` with
@@ -221,7 +224,7 @@ object Centrality {
       edges: DataFrame, aCol: String, bCol: String, wCol: String,
       maxRounds: Int = 128): DataFrame =
     weightedAllPairsDistances(edges, aCol, bCol, wCol, maxRounds,
-      caller = "weightedEccentricity")
+      caller = "weightedEccentricity")._1
       .filter(col("p") =!= col("v"))
       .groupBy(col("v"))
       .agg(count(lit(1)).as("n_reached"), max(col("dist")).as("__ecc"))

@@ -1,6 +1,6 @@
 package graft.graph
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** G7 — leave-one-out criticality (reference
@@ -92,24 +92,29 @@ object Criticality {
     * columns (name, unroutablePairs, impactedPairs, avgTimeNonZero) —
     * split out so the normalization formula is property-testable without
     * running the routing sweep.
+    *
+    * The two maxima are read from the stats rows on the driver and
+    * applied as literals, so scoring a driver-local frame (what
+    * [[waysStats]] returns) is one projection that Catalyst evaluates on
+    * the driver: no aggregate, no broadcast, no job. A zero (or absent)
+    * `avgMaxTime` — no way's removal raises any OD cost — makes every
+    * `timeScore` 0, the reference's `|| 0`, instead of dividing by zero.
     */
   def scoreStats(stats: DataFrame): DataFrame = {
-    val norms = stats.agg(
-      max((col("unroutablePairs") + col("impactedPairs")) * col("avgTimeNonZero")).as("avgMaxTime"),
-      max(col("unroutablePairs")).as("maxUnroutable"))
-    stats
-      .crossJoin(broadcast(norms))
-      .withColumn(
-        "timeScore",
-        coalesce(
-          (col("unroutablePairs") + col("impactedPairs")) * col("avgTimeNonZero") / col("avgMaxTime"),
-          lit(0.0)))
-      .withColumn(
-        "unroutableScore",
-        when(col("maxUnroutable") === 0, 0.0).otherwise(col("unroutablePairs").cast("double") / col("maxUnroutable")))
-      .withColumn(
-        "timeScore", when(isnan(col("timeScore")), 0.0).otherwise(col("timeScore")))
-      .withColumn("score", (col("timeScore") * 0.4 + col("unroutableScore") * 0.6) * 100)
-      .select(col("name").as("way_id"), col("score"), col("unroutablePairs"), col("impactedPairs"), col("avgTimeNonZero"))
+    val timeNum = (col("unroutablePairs") + col("impactedPairs")) * col("avgTimeNonZero")
+    val maxima = stats.select(timeNum, col("unroutablePairs")).collect()
+    // `num` over column i's maximum, 0 where that is zero or absent;
+    // Spark's max skips nulls and puts NaN above every number (math.max)
+    def normalized(num: Column, i: Int): Column =
+      maxima.iterator.filterNot(_.isNullAt(i)).map(_.getAs[Number](i).doubleValue)
+        .reduceOption[Double](math.max).filter(_ != 0.0)
+        .fold(lit(0.0))(m => num / lit(m))
+    val t = coalesce(normalized(timeNum, 0), lit(0.0))
+    val timeScore = when(isnan(t), 0.0).otherwise(t)
+    val unroutableScore = normalized(col("unroutablePairs").cast("double"), 1)
+    stats.select(
+      col("name").as("way_id"),
+      ((timeScore * 0.4 + unroutableScore * 0.6) * 100).as("score"),
+      col("unroutablePairs"), col("impactedPairs"), col("avgTimeNonZero"))
   }
 }

@@ -193,6 +193,17 @@ object Eaul {
       yearlyTraffic: Array[Array[Double]],
       noTraffic: Set[(Int, Int)]): DataFrame = {
     import spark.implicits._
+    sweepRows(spark, g, stats, odNodes, yearlyTraffic, noTraffic).toDF()
+  }
+
+  /** [[sweep]]'s rows, for a caller that also counts them. */
+  def sweepRows(
+      spark: SparkSession,
+      g: CsrGraph,
+      stats: FloodStats,
+      odNodes: Array[Int],
+      yearlyTraffic: Array[Array[Double]],
+      noTraffic: Set[(Int, Int)]): Seq[WayEaul] = {
     val sc = spark.sparkContext
     val globalUnroutable = globalUnroutablePairs(g, stats, odNodes)
     val baselineEaul =
@@ -214,6 +225,6 @@ object Eaul {
         WayEaul(graph.ways(w).name, up.id, eaul)
       }
       .collect()
-    (results :+ WayEaul("baseline", "baseline", baselineEaul)).toSeq.toDF()
+    (results :+ WayEaul("baseline", "baseline", baselineEaul)).toSeq
   }
 }

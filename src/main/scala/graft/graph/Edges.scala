@@ -70,8 +70,10 @@ private[graph] object Edges {
     * exactly once. Returns the frame, its partition count and its row
     * count; zero rows means no node has an edge.
     */
-  def adjacency(edges: DataFrame, aCol: String, bCol: String): (DataFrame, Int, Long) =
-    Iterate.sized(symmetric(canonical(edges, aCol, bCol)))
+  def adjacency(edges: DataFrame, aCol: String, bCol: String): (DataFrame, Int, Long) = {
+    val (adj, parts, observed) = Iterate.sized(symmetric(canonical(edges, aCol, bCol)))
+    (adj, parts, observed("rows").asInstanceOf[Long])
+  }
 
   /** The degree table `(v, deg)` of a canonical set `(a, b)`. */
   def degrees(e: DataFrame): DataFrame =

@@ -3,8 +3,11 @@ package graft
 import graft.sources.OsmXml
 import java.util.concurrent.{ConcurrentHashMap, ConcurrentLinkedQueue, CountDownLatch, TimeUnit}
 import java.util.concurrent.atomic.AtomicInteger
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageSubmitted, SparkListenerTaskEnd}
-import org.apache.spark.sql.execution.QueryExecution
+import graft.operators.Relational
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageSubmitted, SparkListenerTaskEnd}
+import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.execution.{QueryExecution, SQLExecution}
+import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalatest.funsuite.AnyFunSuite
@@ -19,31 +22,59 @@ class PipelineSpec extends AnyFunSuite with TempDirs {
   private lazy val spark = GraftSession.local(4, "pipeline-spec")
 
   /** What `body` ran: the ids of the jobs that read input records, the
-    * task count of every submitted stage, and the name of every SQL
-    * action (`count`, `collect`, `command`, …).
+    * task count of every submitted stage, the name of every SQL action
+    * (`count`, `collect`, `command`, …), the ids of the jobs each SQL
+    * execution ran keyed by its description (`csv at Pipeline.scala:N`;
+    * a nested execution's jobs count for its root), the stages of each
+    * job, and the shuffle bytes each stage wrote.
     */
-  private case class JobShape(inputJobs: Set[Int], stageTasks: Seq[Int], sqlActions: Seq[String])
+  private case class JobShape(
+      inputJobs: Set[Int], stageTasks: Map[Int, Int], sqlActions: Seq[String],
+      jobsBySql: Map[String, Seq[Int]], jobStages: Map[Int, Seq[Int]],
+      shuffleWrites: Map[Int, Long]) {
+    def jobs: Set[Int] = jobStages.keySet
+    /** The jobs of the SQL executions whose description starts with `what`. */
+    def jobsOf(what: String): Seq[Int] =
+      jobsBySql.collect { case (d, js) if d.startsWith(what) => js }.flatten.toSeq
+    def tasksOf(job: Int): Int = jobStages(job).flatMap(stageTasks.get).sum
+  }
 
   private def jobShape(body: => Unit): JobShape = {
     val sc = spark.sparkContext
     val jobOfStage = new ConcurrentHashMap[Int, Int]()
     val inputStages = ConcurrentHashMap.newKeySet[Int]()
     val stageTasks = new ConcurrentHashMap[Int, Int]()
+    val shuffleWrites = new ConcurrentHashMap[Int, Long]()
+    val execOfJob = new ConcurrentHashMap[Int, Long]()
+    val execRoot = new ConcurrentHashMap[Long, Long]()
+    val execDescription = new ConcurrentHashMap[Long, String]()
     val actions = new ConcurrentLinkedQueue[String]()
     val flushJob = new AtomicInteger(-1)
     val flushed = new CountDownLatch(1)
     val listener = new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit = {
         e.stageIds.foreach(jobOfStage.put(_, e.jobId))
-        if (e.properties != null && e.properties.getProperty("spark.job.description") == "flush")
-          flushJob.set(e.jobId)
+        if (e.properties != null) {
+          if (e.properties.getProperty("spark.job.description") == "flush") flushJob.set(e.jobId)
+          Option(e.properties.getProperty(SQLExecution.EXECUTION_ID_KEY))
+            .foreach(id => execOfJob.put(e.jobId, id.toLong))
+        }
       }
       override def onJobEnd(e: SparkListenerJobEnd): Unit =
         if (e.jobId == flushJob.get) flushed.countDown()
       override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit =
         stageTasks.put(e.stageInfo.stageId, e.stageInfo.numTasks)
       override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
-        if (e.taskMetrics != null && e.taskMetrics.inputMetrics.recordsRead > 0) inputStages.add(e.stageId)
+        if (e.taskMetrics != null) {
+          if (e.taskMetrics.inputMetrics.recordsRead > 0) inputStages.add(e.stageId)
+          shuffleWrites.merge(e.stageId, e.taskMetrics.shuffleWriteMetrics.bytesWritten, _ + _)
+        }
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case s: SparkListenerSQLExecutionStart =>
+          execDescription.put(s.executionId, s.description)
+          execRoot.put(s.executionId, s.rootExecutionId.getOrElse(s.executionId))
+        case _ =>
+      }
     }
     val qel = new QueryExecutionListener {
       override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit = actions.add(funcName)
@@ -63,23 +94,65 @@ class PipelineSpec extends AnyFunSuite with TempDirs {
       sc.removeSparkListener(listener)
       spark.listenerManager.unregister(qel)
     }
+    val ours = (s: Int) => jobOfStage.get(s) != flushJob.get
+    val jobStages = jobOfStage.asScala.toSeq.collect { case (s, j) if ours(s) => (j, s) }
+      .groupBy(_._1).map { case (j, ss) => j -> ss.map(_._2) }
     JobShape(
       inputStages.asScala.map(jobOfStage.get).toSet,
-      stageTasks.asScala.collect { case (s, n) if jobOfStage.get(s) != flushJob.get => n }.toSeq,
-      actions.asScala.toSeq)
+      stageTasks.asScala.collect { case (s, n) if ours(s) => s -> n }.toMap,
+      actions.asScala.toSeq,
+      execOfJob.asScala.toSeq
+        .map { case (j, x) => execDescription.get(execRoot.getOrDefault(x, x)) -> j }
+        .groupBy(_._1).map { case (d, js) => String.valueOf(d) -> js.map(_._2) },
+      jobStages,
+      shuffleWrites.asScala.collect { case (s, b) if ours(s) => s -> b }.toMap)
   }
 
+  /** Stage 5's inputs for the network under `osmDir`, built as the
+    * pipeline builds them: the road-network rows `(NAME, RUC)` and the
+    * scored criticality rows `(way_id, score)`.
+    */
+  private def stage5Inputs(osmDir: String): (DataFrame, DataFrame) = {
+    val (nodesDf, waysDf) = OsmXml.read(spark, osmDir)
+    val g = graph.RoadGraph.fromOsm(spark, nodesDf, waysDf)
+    val scored = graph.Criticality.scoreStats(graph.Criticality.waysStats(spark, g, Pipeline.odNodes(g)))
+      .select(col("way_id"), round(col("score"), 2).as("score"))
+    val rn = waysDf.select(col("tags")("NAME").as("NAME"), col("tags")("RUC").cast("double").as("RUC"))
+    (rn, scored)
+  }
+
+  private def strings(r: Row): Seq[String] = r.toSeq.map(v => if (v == null) null else v.toString)
+
+  /** A CSV output's rows as strings, in file order. */
+  private def csvRows(dir: String): Seq[Seq[String]] =
+    spark.read.option("header", "true").csv(dir).collect().toSeq.map(strings)
+
   test("five-stage pipeline egresses merged indicators and EAUL results") {
+    val osmDir = Pipeline.demoOsmDir(tempDir("pipeline-osm"))
     val outDir = tempDir("pipeline-out").toString
-    val shape = jobShape(Pipeline.run(spark, Pipeline.demoOsmDir(tempDir("pipeline-osm")), outDir))
-    // Spark work only where the routing is: one parse of the OSM input, no
-    // count job, and no stage wider than the cores (grid(6) has 60 ways,
-    // so 60 criticality and 180 EAUL scenarios)
+    val shape = jobShape(Pipeline.run(spark, osmDir, outDir))
+    // Spark work only where the routing is and in the two writes: one
+    // parse of the OSM input, the criticality and EAUL sweeps, one job of
+    // one task per write, no count job, no shuffle, and no stage wider
+    // than the cores (grid(6) has 60 ways, so 60 criticality and 180
+    // EAUL scenarios)
     assert(shape.inputJobs.size == 1, s"jobs reading the OSM input: ${shape.inputJobs}")
+    assert(shape.jobs.size <= 5, s"jobs ${shape.jobs.size}, by SQL execution: ${shape.jobsBySql}")
+    for (write <- Seq("csv at Pipeline", "json at Pipeline")) {
+      val jobs = shape.jobsOf(write)
+      assert(jobs.size == 1, s"$write ran jobs $jobs; by SQL execution: ${shape.jobsBySql}")
+      assert(shape.tasksOf(jobs.head) == 1, s"$write ran ${shape.tasksOf(jobs.head)} tasks")
+    }
+    assert(shape.shuffleWrites.values.forall(_ == 0L), s"shuffle bytes by stage: ${shape.shuffleWrites}")
     assert(shape.sqlActions.nonEmpty && !shape.sqlActions.contains("count"), s"SQL actions: ${shape.sqlActions}")
     val parallelism = spark.sparkContext.defaultParallelism
-    assert(shape.stageTasks.nonEmpty && shape.stageTasks.max <= parallelism,
+    assert(shape.stageTasks.nonEmpty && shape.stageTasks.values.max <= parallelism,
       s"stage task counts ${shape.stageTasks}, defaultParallelism $parallelism")
+
+    // the driver-side merge writes the rows the broadcast merge gives
+    val (rn, scored) = stage5Inputs(osmDir)
+    val expected = Relational.mergeIndicators(rn, "NAME", Seq("crit" -> scored))
+    assert(csvRows(s"$outDir/indicators") == expected.collect().toSeq.map(strings))
 
     val indicators = spark.read.option("header", "true").csv(s"$outDir/indicators")
     // grid(6): 60 ways, every one present after the merge, each with a
@@ -93,9 +166,45 @@ class PipelineSpec extends AnyFunSuite with TempDirs {
     assert(scores.exists(_ > 0)) // leave-one-out found at least one critical way
 
     val eaul = spark.read.json(s"$outDir/eaul")
-    // 60 ways × 3 upgrades + baseline = 181 rows
+    // 60 ways × 3 upgrades + baseline = 181 rows, in one file
     assert(eaul.count() == 181)
     assert(eaul.filter(col("way_id") === "baseline").count() == 1)
+    assert(eaul.inputFiles.length == 1, eaul.inputFiles.mkString(", "))
+  }
+
+  test("stage 5's driver-side merge gives mergeIndicators' rows in its order") {
+    import spark.implicits._
+    // a NAME twice in the base, a null NAME, a way with no score, a
+    // score twice for one way_id (its base rows multiply), a null way_id
+    val base = Seq[(String, Double)](
+      ("a", 1.0), (null, 2.0), ("b", 3.0), ("c", 4.0), ("a", 5.0), ("d", 6.0))
+      .toDF("NAME", "RUC")
+    val ind = Seq[(String, java.lang.Double)](
+      ("b", 20.0), ("a", 10.0), ("b", 21.0), (null, 99.0), ("d", null), ("e", 50.0))
+      .toDF("way_id", "score")
+    val got = Pipeline.mergeOnDriver(base, "NAME", "crit", ind)
+    val want = Relational.mergeIndicators(base, "NAME", Seq("crit" -> ind))
+    assert(got.columns.toSeq == want.columns.toSeq)
+    assert(got.schema.map(_.dataType) == want.schema.map(_.dataType))
+    assert(got.collect().toSeq == want.collect().toSeq)
+    assert(got.count() == 7)
+  }
+
+  test("a path network (every removal only disconnects pairs) scores without dividing by zero") {
+    // three collinear ways: no way's removal raises any OD cost, so the
+    // reference's avgMaxTime is 0 and every timeScore is `|| 0`
+    val osmDir = tempDir("pipeline-path")
+    val nodes = (0 until 4).map(i => OsmXml.OsmNode(i.toLong, 36.80 + 0.01 * i, -1.28))
+    val ways = (0 until 3).map(i =>
+      OsmXml.OsmWay(100L + i, Seq(i.toLong, i + 1L), Map("NAME" -> s"w$i", "RUC" -> "1.0")))
+    OsmXml.write(nodes, ways, osmDir.resolve("path.osm").toString)
+    val outDir = tempDir("pipeline-out").toString
+    Pipeline.run(spark, osmDir.toString, outDir)
+    // each removal cuts two of the three OD pairs, the most any way cuts:
+    // unroutableScore 1, timeScore 0 → 0.6 · 100
+    val rows = csvRows(s"$outDir/indicators")
+    assert(rows.map(_.head).sorted == Seq("w0", "w1", "w2"))
+    assert(rows.map(_(2).toDouble) == Seq(60.0, 60.0, 60.0), rows)
   }
 
   test("an OSM input with no nodes is rejected, naming the input") {

@@ -209,6 +209,18 @@ class PropertySpec extends AnyFunSuite {
     }
   }
 
+  test("criticality scoring of all-zero stats gives zeros and of no stats no rows") {
+    // avgMaxTime = maxUnroutable = 0 (no removal cut or slowed a pair):
+    // the reference's `|| 0` makes both scores 0, where dividing by the
+    // zero maximum would throw under ANSI mode
+    import spark.implicits._
+    val zeros = Seq(("w0", 0, 0, 0.0), ("w1", 0, 0, 0.0))
+      .toDF("name", "unroutablePairs", "impactedPairs", "avgTimeNonZero")
+    val scores = graft.graph.Criticality.scoreStats(zeros).collect()
+    assert(scores.map(_.getAs[Double]("score")).toSeq == Seq(0.0, 0.0))
+    assert(graft.graph.Criticality.scoreStats(zeros.limit(0)).collect().isEmpty)
+  }
+
   test("lineSplit pieces reassemble the original line's length") {
     // random rectangle + random horizontal line crossing it
     val gen = for {

@@ -47,7 +47,10 @@ object Verify {
     } catch { case e: Throwable =>
       System.err.println(s"[verify] manifest write skipped: ${SparkEntry.failureReason(e)}")
     }
+    // the selected gates' oracles only, failed ones included, so a
+    // filtered dump checks what it ran
     val json = SparkEntry.oracleSql
+      .filter { case (k, _) => selected.contains(k) }
       .map { case (k, v) => s"${SparkEntry.jsonString(k)}: ${SparkEntry.jsonString(v)}" }
       .mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)

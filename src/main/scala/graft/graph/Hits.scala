@@ -2,7 +2,6 @@ package graft.graph
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
 import graft.Iterate
 
@@ -55,7 +54,6 @@ object Hits {
       wCol: String,
       iterations: Int): DataFrame = {
     require(iterations >= 1, s"iterations must be >= 1, got $iterations")
-    val spark = edges.sparkSession
 
     // eager, not a lazy persist: the first action over a lazy cache is
     // nodes' union-distinct, whose two branches scan e inside ONE job
@@ -66,20 +64,16 @@ object Hits {
       .select(col(srcCol).as("src"), col(dstCol).as("dst"),
         col(wCol).cast("double").as("w"))
       .groupBy("src", "dst").agg(sum("w").as("w")))
-    val nodes = e.select(col("src").as("node"))
+    // sized like e: every gather probes the node set, so it holds
+    // data-sized partitions, and its count rides the checkpoint job. The
+    // double ΣW stays its own job: a sum merged in task-completion order
+    // is not bit-stable
+    val (nodesV, parts, sized) = Iterate.sized(e.select(col("src").as("node"))
       .union(e.select(col("dst").as("node")))
-      .distinct()
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val n = nodes.count()
-    require(n > 0, "empty graph")
+      .distinct())
+    require(sized("rows").asInstanceOf[Long] > 0, "empty graph")
     val sumW = e.agg(sum("w")).head().getDouble(0)
     require(sumW > 0.0, s"total edge weight must be positive, got $sumW")
-    val parts = Iterate.parts(spark, n)
-    // size the per-iteration probe to the data (the PageRank transV /
-    // rankParts rationale): nodes' cache holds shuffle.partitions
-    // KB-blocks, and every gather would launch that many tasks
-    // regardless of data
-    val nodesV = nodes.coalesce(parts)
 
     // gather along edges: scores flow src→dst (by="src", out="dst") or
     // dst→src; nodes with no contributing edge score 0; the constant
@@ -105,9 +99,8 @@ object Hits {
       a = gather(h, "h", by = "src", out = "dst", outCol = "a")
       gather(a, "a", by = "dst", out = "src", outCol = "h").coalesce(parts)
     }
-    // the last a must checkpoint too: it still references e/nodes,
-    // which unpersist below (recompute would re-run the edge build on
-    // every downstream action)
+    // the last a checkpoints too: the max aggregate and the output both
+    // read it, and each would otherwise re-run its gather
     val aFinal = a.coalesce(parts).localCheckpoint(true)
     val joined = h.join(aFinal, Seq("node"))
     val m = joined.agg(max("h").as("__mh"), max("a").as("__ma"))
@@ -118,9 +111,6 @@ object Hits {
           .otherwise(lit(0.0)).as("hub"),
         when(col("__ma") > 0.0, col("a") / col("__ma"))
           .otherwise(lit(0.0)).as("authority"))
-    // e is a localCheckpoint now — its blocks free when the frame is
-    // GC'd; only the lazily-persisted nodes cache needs an explicit drop
-    nodes.unpersist()
     out
   }
 }

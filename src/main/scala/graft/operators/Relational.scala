@@ -66,52 +66,8 @@ object Relational {
     * counts), so callers that need a rank derived from n (percentile
     * thresholds) don't pay a separate count() job over the input.
     */
-  def kthSmallestByRank(df: DataFrame, valueCol: String, rankOf: Long => Long, numRanges: Int = 32): Double = {
-    val vals = df
-      .select(col(valueCol).cast("double").as("v"))
-      .filter(col("v").isNotNull && !isnan(col("v")))
-      .repartitionByRange(numRanges, col("v"))
-      .rdd
-      .map(_.getDouble(0))
-    // two jobs hit the ranged RDD (count pass + select pass): cache it so
-    // the range shuffle runs once
-    vals.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      val counts: Array[(Int, Long)] = vals
-        .mapPartitionsWithIndex { case (i, it) => Iterator((i, it.size.toLong)) }
-        .collect()
-        .sortBy(_._1)
-      val n = counts.map(_._2).sum
-      val k = rankOf(n)
-      require(0 <= k && k < n,
-        s"rank $k out of bounds for n=$n" +
-          (if (n == 0) " (empty input — no non-null, non-NaN values)" else ""))
-      var remaining = k
-      var target = -1
-      for ((idx, c) <- counts if target < 0) {
-        if (remaining < c) target = idx else remaining -= c
-      }
-      require(target >= 0, s"rank $k out of bounds (n=${counts.map(_._2).sum})")
-      val offset = remaining
-      val tgt = target
-      require(
-        offset <= Int.MaxValue,
-        s"range partition holds > 2^31 values ($offset); raise numRanges")
-      // select pass scheduled on ONLY the target range partition (runJob
-      // with an explicit partition list) — first()/take(1) would probe
-      // empty partitions in escalating batches, costing extra jobs
-      vals.sparkContext
-        .runJob(
-          vals,
-          (it: Iterator[Double]) => {
-            val arr = it.toArray
-            java.util.Arrays.sort(arr)
-            arr(offset.toInt)
-          },
-          Seq(tgt))
-        .head
-    } finally vals.unpersist(blocking = false)
-  }
+  def kthSmallestByRank(df: DataFrame, valueCol: String, rankOf: Long => Long, numRanges: Int = 32): Double =
+    kthSmallestManyByRank(df, valueCol, n => Seq(rankOf(n)), numRanges).head
 
   /** [[kthSmallestByRank]] for SEVERAL ranks in one pass: one range
     * shuffle + one count pass + one select job over only the partitions

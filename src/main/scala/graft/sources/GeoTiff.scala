@@ -399,16 +399,8 @@ object GeoTiff {
     }
   }
 
-  /** Decode to a cell iterator (col, row, value) — a generator, one cell
-    * at a time, nodata skipped.
-    */
-  def cells(bytes: Array[Byte]): Iterator[(Int, Int, Double)] =
-    cells(bytes, parseHeader(bytes))
-
-  /** As [[cells]] with a pre-parsed header (callers that also need the
-    * georeferencing parse once, not twice). */
   /** Read one sample at byte offset `o` of a decoded segment buffer. */
-  private[sources] def sampleAt(buf: ByteBuffer, o: Int, bits: Int, fmt: Int): Double =
+  private def sampleAt(buf: ByteBuffer, o: Int, bits: Int, fmt: Int): Double =
     (bits, fmt) match {
       case (8, 2) => buf.get(o).toDouble
       case (8, _) => (buf.get(o) & 0xff).toDouble
@@ -422,50 +414,16 @@ object GeoTiff {
         s"unsupported sample: $b bits, format $f")
     }
 
-  /** Decode one strip/tile byte range (`[off, off+len)` of `bytes`) to a
-    * segment-relative sample buffer: decompressed + predictor-undone,
-    * rowSamples × rows samples.
+  /** Decode to a cell iterator (col, row, value) — a generator, one cell
+    * at a time, nodata skipped.
     */
-  private[sources] def segmentBuffer(
-      bytes: Array[Byte],
-      off: Int,
-      len0: Int,
-      order: ByteOrder,
-      compression: Int,
-      predictor: Int,
-      bits: Int,
-      rowSamples: Int,
-      rows: Int,
-      jpegTables: Option[Array[Byte]] = None): ByteBuffer = {
-    val outLen = rowSamples * rows * (bits / 8)
-    val len = if (len0 > 0) len0 else outLen
-    val data: Array[Byte] = compression match {
-      case 1 =>
-        if (predictor == 1) null // sample straight from the source buffer
-        else java.util.Arrays.copyOfRange(bytes, off, off + outLen)
-      case 8 | 32946 => inflateSegment(bytes, off, len, outLen)
-      case 32773 => packBitsSegment(bytes, off, len, outLen)
-      case 5 => lzwSegment(bytes, off, len, outLen)
-      case 7 =>
-        // strip/tile is a JPEG stream (TIFF TechNote 2); shared tables may
-        // ride in the JPEGTables tag (abbreviated streams)
-        val pre = jpegTables.map(Jpeg.parseTables).getOrElse(new Jpeg.TableState)
-        val (jw, jh, px) = Jpeg.decodeGray(
-          java.util.Arrays.copyOfRange(bytes, off, off + len), pre)
-        require(jw == rowSamples && jh == rows,
-          s"JPEG segment is ${jw}x$jh, expected ${rowSamples}x$rows")
-        px
-    }
-    if (data == null) ByteBuffer.wrap(bytes, off, outLen).slice().order(order)
-    else {
-      if (predictor == 2) undoPredictor(data, order, rowSamples, rows, bits)
-      else if (predictor == 3) undoFloatPredictor(data, order, rowSamples, rows, bits)
-      ByteBuffer.wrap(data).order(order)
-    }
-  }
+  def cells(bytes: Array[Byte]): Iterator[(Int, Int, Double)] =
+    cells(bytes, parseHeader(bytes))
 
+  /** As [[cells]] with a pre-parsed header (callers that also need the
+    * georeferencing parse once, not twice). */
   def cells(bytes: Array[Byte], h: Header): Iterator[(Int, Int, Double)] = {
-    require(h.spp == 1, s"multi-band raster (spp=${h.spp}) — use cellsBands/readBands")
+    singleBand(h, "cellsBands/readBands")
     cellsBands(bytes, h).map { case (c, r, _, v) => (c, r, v) }
   }
 
@@ -473,244 +431,13 @@ object GeoTiff {
     * (col, row, band, value). Single-band rasters emit band 0 — the
     * general form [[cells]] specializes.
     */
-  def cellsBands(bytes: Array[Byte], h: Header): Iterator[(Int, Int, Int, Double)] = {
-    val order = if (bytes(0) == 'I') ByteOrder.LITTLE_ENDIAN else ByteOrder.BIG_ENDIAN
-    val bytesPerSample = h.bits / 8
-    val spp = h.spp
-    def sample(buf: ByteBuffer, o: Int): Double = sampleAt(buf, o, h.bits, h.sampleFormat)
-    def segment(idx: Int, rowPixels: Int, rows: Int): ByteBuffer =
-      segmentBuffer(
-        bytes, h.offsets(idx).toInt, h.byteCounts(idx).toInt, order,
-        h.compression, h.predictor, h.bits, rowPixels * spp, rows, h.jpegTables)
-    val raw: Iterator[(Int, Int, Int, Double)] =
-      if (h.tileW > 0) {
-        val across = (h.width + h.tileW - 1) / h.tileW
-        Iterator.range(0, h.offsets.length).flatMap { t =>
-          val tCol = (t % across) * h.tileW
-          val tRow = (t / across) * h.tileH
-          val seg = segment(t, h.tileW, h.tileH) // tiles are always full-size (padded)
-          Iterator.range(0, h.tileH).flatMap { j =>
-            Iterator.range(0, h.tileW).flatMap { i =>
-              val col = tCol + i; val row = tRow + j
-              if (col < h.width && row < h.height)
-                Iterator.range(0, spp).map(b =>
-                  (col, row, b, sample(seg, ((j * h.tileW + i) * spp + b) * bytesPerSample)))
-              else Iterator.empty // edge-tile padding
-            }
-          }
-        }
-      } else {
-        Iterator.range(0, h.offsets.length).flatMap { s =>
-          val row0 = s * h.rowsPerStrip
-          val rows = math.min(h.rowsPerStrip, h.height - row0)
-          val seg = segment(s, h.width, rows)
-          Iterator.range(0, rows).flatMap { j =>
-            Iterator.range(0, h.width).flatMap { i =>
-              Iterator.range(0, spp).map(b =>
-                (i, row0 + j, b, sample(seg, ((j * h.width + i) * spp + b) * bytesPerSample)))
-            }
-          }
-        }
-      }
-    h.nodata match {
-      case Some(nd) => raw.filter { case (_, _, _, v) => v != nd && !(v.isNaN && nd.isNaN) }
-      case None => raw
-    }
-  }
+  def cellsBands(bytes: Array[Byte], h: Header): Iterator[(Int, Int, Int, Double)] =
+    segmentsOf(h, "", little = bytes(0) == 'I').iterator
+      .flatMap(s => segmentCells(s, bytes, s.off.toInt))
 
-  /** S11 sink — write a single-band float32 single-strip GeoTIFF,
-    * uncompressed or zlib (`deflate = true`, Compression=8) — the exact
-    * layouts [[parseHeader]]/[[cells]] read back; spec round-trips both.
-    * `values` is row-major (row·width + col); georeferencing is the
-    * north-up ModelPixelScale/Tiepoint pair: x = ox + col·sx,
-    * y = oy − row·sy.
-    */
-  def write(
-      path: String,
-      width: Int,
-      height: Int,
-      values: Array[Float],
-      sx: Double,
-      sy: Double,
-      ox: Double,
-      oy: Double,
-      nodata: Option[Float] = None,
-      deflate: Boolean = false,
-      rowsPerStrip: Int = 0): Unit = {
-    require(values.length == width * height, "values must be width*height row-major")
-    // rowsPerStrip <= 0 -> one whole-image strip; a positive value splits
-    // the payload into independently-compressed strips, the layout
-    // `readParallel` fans out per segment
-    val rps = if (rowsPerStrip <= 0) height else rowsPerStrip
-    val nStrips = (height + rps - 1) / rps
-    def zip(b: Array[Byte]): Array[Byte] = {
-      val d = new java.util.zip.Deflater()
-      d.setInput(b); d.finish()
-      val buf = new Array[Byte](b.length + 64)
-      val m = d.deflate(buf)
-      require(d.finished(), "deflate grew the strip beyond input + 64B; write uncompressed")
-      d.end()
-      java.util.Arrays.copyOf(buf, m)
-    }
-    val strips: Array[Array[Byte]] = Array.tabulate(nStrips) { s =>
-      val r0 = s * rps
-      val rows = math.min(rps, height - r0)
-      val b = ByteBuffer.allocate(rows * width * 4).order(ByteOrder.LITTLE_ENDIAN)
-      var i = r0 * width
-      while (i < (r0 + rows) * width) { b.putFloat(values(i)); i += 1 }
-      if (deflate) zip(b.array()) else b.array()
-    }
-    // tags: 256 W, 257 H, 258 bits, 259 comp, 273 strip offs, 277 spp,
-    // 278 rows/strip, 279 strip bytes, 339 fmt, 33550 scale, 33922 tiepoint
-    val ndAscii = nodata.map(v => (if (v == v.toLong) v.toLong.toString else v.toString) + "\u0000")
-    val n = 11 + (if (ndAscii.isDefined) 1 else 0)
-    val ifdOff = 8
-    var cursor = ifdOff + 2 + n * 12 + 4
-    val scaleOff = cursor; cursor += 24
-    val tieOff = cursor; cursor += 48
-    val ndOff = ndAscii.map { s => val o = cursor; cursor += s.length; o }
-    // multi-strip: the offset/count entries overflow 4 inline bytes and
-    // point to external LONG arrays
-    val offsArrOff = { val o = cursor; if (nStrips > 1) cursor += nStrips * 4; o }
-    val cntsArrOff = { val o = cursor; if (nStrips > 1) cursor += nStrips * 4; o }
-    val payloadOff = cursor
-    val stripOffs = strips.scanLeft(payloadOff)(_ + _.length).init
-    val total = strips.iterator.map(_.length).sum
-    val out = ByteBuffer.allocate(payloadOff + total).order(ByteOrder.LITTLE_ENDIAN)
-    out.put('I'.toByte).put('I'.toByte).putShort(42.toShort).putInt(ifdOff)
-    var e = 0
-    def entry(tag: Int, typ: Int, count: Int, value: Int): Unit = {
-      val off = ifdOff + 2 + e * 12
-      out.putShort(off, tag.toShort)
-      out.putShort(off + 2, typ.toShort)
-      out.putInt(off + 4, count)
-      out.putInt(off + 8, value)
-      e += 1
-    }
-    out.putShort(ifdOff, n.toShort)
-    entry(256, 3, 1, width)
-    entry(257, 3, 1, height)
-    entry(258, 3, 1, 32)
-    entry(259, 3, 1, if (deflate) 8 else 1)
-    entry(273, 4, nStrips, if (nStrips == 1) payloadOff else offsArrOff)
-    entry(277, 3, 1, 1)
-    entry(278, 3, 1, rps)
-    entry(279, 4, nStrips, if (nStrips == 1) strips.head.length else cntsArrOff)
-    entry(339, 3, 1, 3)
-    entry(33550, 12, 3, scaleOff)
-    entry(33922, 12, 6, tieOff)
-    ndAscii.foreach(s => entry(42113, 2, s.length, ndOff.get))
-    out.putInt(ifdOff + 2 + n * 12, 0)
-    out.putDouble(scaleOff, sx).putDouble(scaleOff + 8, sy).putDouble(scaleOff + 16, 0.0)
-    out.putDouble(tieOff, 0.0).putDouble(tieOff + 8, 0.0).putDouble(tieOff + 16, 0.0)
-    out.putDouble(tieOff + 24, ox).putDouble(tieOff + 32, oy).putDouble(tieOff + 40, 0.0)
-    ndAscii.foreach { s =>
-      val b = s.getBytes("ASCII")
-      var i = 0
-      while (i < b.length) { out.put(ndOff.get + i, b(i)); i += 1 }
-    }
-    if (nStrips > 1) {
-      strips.indices.foreach { s =>
-        out.putInt(offsArrOff + s * 4, stripOffs(s))
-        out.putInt(cntsArrOff + s * 4, strips(s).length)
-      }
-    }
-    out.position(payloadOff)
-    strips.foreach(out.put)
-    java.nio.file.Files.write(java.nio.file.Paths.get(path), out.array())
-  }
+  private def singleBand(h: Header, use: String): Unit =
+    require(h.spp == 1, s"multi-band raster (spp=${h.spp}) — use $use")
 
-  /** S11 sink, JPEG layout — write a single-band 8-bit grayscale raster
-    * with Compression=7 in the common libtiff shape: shared huffman/quant
-    * tables in the JPEGTables tag (347), ABBREVIATED baseline-JPEG stream
-    * per strip. `pixels` ∈ 0..255 row-major. JPEG is lossy in general;
-    * block-constant content round-trips exactly (see [[Jpeg]] scaladoc),
-    * which is what the qz5 oracle gate relies on.
-    */
-  def writeJpeg(
-      path: String,
-      width: Int,
-      height: Int,
-      pixels: Array[Int],
-      sx: Double,
-      sy: Double,
-      ox: Double,
-      oy: Double,
-      rowsPerStrip: Int = 0): Unit = {
-    require(pixels.length == width * height, "pixels must be width*height row-major")
-    require(pixels.forall(p => p >= 0 && p <= 255), "JPEG samples must be 0..255")
-    val rps = if (rowsPerStrip <= 0) height else rowsPerStrip
-    val nStrips = (height + rps - 1) / rps
-    val tables = Jpeg.tablesStream()
-    val strips: Array[Array[Byte]] = Array.tabulate(nStrips) { s =>
-      val r0 = s * rps
-      val rows = math.min(rps, height - r0)
-      Jpeg.encodeGray(
-        java.util.Arrays.copyOfRange(pixels, r0 * width, (r0 + rows) * width),
-        width, rows, includeTables = false)
-    }
-    // tags: 256 W, 257 H, 258 bits, 259 comp, 262 photometric, 273 strip
-    // offs, 277 spp, 278 rows/strip, 279 strip bytes, 339 fmt, 347 tables,
-    // 33550 scale, 33922 tiepoint
-    val n = 13
-    val ifdOff = 8
-    var cursor = ifdOff + 2 + n * 12 + 4
-    val scaleOff = cursor; cursor += 24
-    val tieOff = cursor; cursor += 48
-    val tablesOff = cursor; cursor += tables.length
-    cursor += cursor & 1 // TIFF 6.0: value offsets must be word-aligned
-    val offsArrOff = { val o = cursor; if (nStrips > 1) cursor += nStrips * 4; o }
-    val cntsArrOff = { val o = cursor; if (nStrips > 1) cursor += nStrips * 4; o }
-    val payloadOff = cursor
-    val stripOffs = strips.scanLeft(payloadOff)(_ + _.length).init
-    val total = strips.iterator.map(_.length).sum
-    val out = ByteBuffer.allocate(payloadOff + total).order(ByteOrder.LITTLE_ENDIAN)
-    out.put('I'.toByte).put('I'.toByte).putShort(42.toShort).putInt(ifdOff)
-    var e = 0
-    def entry(tag: Int, typ: Int, count: Int, value: Int): Unit = {
-      val off = ifdOff + 2 + e * 12
-      out.putShort(off, tag.toShort)
-      out.putShort(off + 2, typ.toShort)
-      out.putInt(off + 4, count)
-      out.putInt(off + 8, value)
-      e += 1
-    }
-    out.putShort(ifdOff, n.toShort)
-    entry(256, 3, 1, width)
-    entry(257, 3, 1, height)
-    entry(258, 3, 1, 8)
-    entry(259, 3, 1, 7)
-    entry(262, 3, 1, 1) // BlackIsZero
-    entry(273, 4, nStrips, if (nStrips == 1) payloadOff else offsArrOff)
-    entry(277, 3, 1, 1)
-    entry(278, 3, 1, rps)
-    entry(279, 4, nStrips, if (nStrips == 1) strips.head.length else cntsArrOff)
-    entry(339, 3, 1, 1)
-    entry(347, 7, tables.length, tablesOff)
-    entry(33550, 12, 3, scaleOff)
-    entry(33922, 12, 6, tieOff)
-    out.putInt(ifdOff + 2 + n * 12, 0)
-    out.putDouble(scaleOff, sx).putDouble(scaleOff + 8, sy).putDouble(scaleOff + 16, 0.0)
-    out.putDouble(tieOff, 0.0).putDouble(tieOff + 8, 0.0).putDouble(tieOff + 16, 0.0)
-    out.putDouble(tieOff + 24, ox).putDouble(tieOff + 32, oy).putDouble(tieOff + 40, 0.0)
-    var i = 0
-    while (i < tables.length) { out.put(tablesOff + i, tables(i)); i += 1 }
-    if (nStrips > 1) {
-      strips.indices.foreach { s =>
-        out.putInt(offsArrOff + s * 4, stripOffs(s))
-        out.putInt(cntsArrOff + s * 4, strips(s).length)
-      }
-    }
-    out.position(payloadOff)
-    strips.foreach(out.put)
-    java.nio.file.Files.write(java.nio.file.Paths.get(path), out.array())
-  }
-
-  /** Read raster(s) into a cell table (path, x, y, value) — the
-    * `Spatial.zonalStats` input. Cell center coordinates
-    * (x = ox + (col+0.5)·sx, y = oy − (row+0.5)·sy), matching
-    * rasterio/GDAL's pixel-center convention for point sampling.
-    */
   /** One strip/tile of one raster file: everything a task needs to
     * decode its byte range independently (geometry + codec + georef).
     */
@@ -737,31 +464,86 @@ object GeoTiff {
       jpegTables: Option[Array[Byte]] = None,
       spp: Int = 1)
 
-  /** Split a header into per-strip/per-tile segment tasks. */
-  private[sources] def segmentsOf(h: Header, path: String, little: Boolean): Seq[RasterSegment] = {
-    require(h.spp == 1,
-      s"readParallel is single-band (spp=${h.spp}) — use readBandsParallel for multi-band rasters")
-    segmentsOfImpl(h, path, little)
+  /** Split a header into per-strip/per-tile segments — the one place the
+    * layout is told apart: a tile is always full-size (edge tiles
+    * padded), a strip is as tall as the rows left.
+    */
+  private def segmentsOf(h: Header, path: String, little: Boolean): Seq[RasterSegment] = {
+    val across = if (h.tileW > 0) (h.width + h.tileW - 1) / h.tileW else 1
+    h.offsets.indices.map { k =>
+      val (segW, rows, col0, row0) =
+        if (h.tileW > 0) (h.tileW, h.tileH, (k % across) * h.tileW, (k / across) * h.tileH)
+        else (h.width, math.min(h.rowsPerStrip, h.height - k * h.rowsPerStrip), 0, k * h.rowsPerStrip)
+      RasterSegment(
+        path, h.offsets(k), h.byteCounts(k), little, h.compression, h.predictor,
+        h.bits, h.sampleFormat, segW, rows, col0, row0,
+        h.width, h.height, h.sx, h.sy, h.ox, h.oy, h.nodata, h.jpegTables, h.spp)
+    }
   }
 
-  private def segmentsOfImpl(h: Header, path: String, little: Boolean): Seq[RasterSegment] =
-    if (h.tileW > 0) {
-      val across = (h.width + h.tileW - 1) / h.tileW
-      h.offsets.indices.map { t =>
-        RasterSegment(
-          path, h.offsets(t), h.byteCounts(t), little, h.compression, h.predictor,
-          h.bits, h.sampleFormat, h.tileW, h.tileH,
-          (t % across) * h.tileW, (t / across) * h.tileH,
-          h.width, h.height, h.sx, h.sy, h.ox, h.oy, h.nodata, h.jpegTables, h.spp)
+  /** Stored bytes of a segment: its byte count, or the uncompressed size
+    * when the file records none. */
+  private def storedLen(s: RasterSegment): Int =
+    if (s.len > 0) s.len.toInt else s.rowSamples * s.spp * s.rows * (s.bits / 8)
+
+  /** The one cell decoder behind every reader: decode segment `s`, stored
+    * at `off` of `bytes` (decompress, undo the predictor), and walk it
+    * row → col → band to (col, row, band, value), skipping edge-tile
+    * padding and nodata.
+    */
+  private def segmentCells(
+      s: RasterSegment, bytes: Array[Byte], off: Int): Iterator[(Int, Int, Int, Double)] = {
+    val order = if (s.little) ByteOrder.LITTLE_ENDIAN else ByteOrder.BIG_ENDIAN
+    val rowSamples = s.rowSamples * s.spp
+    val bytesPerSample = s.bits / 8
+    val outLen = rowSamples * s.rows * bytesPerSample
+    val len = storedLen(s)
+    val data: Array[Byte] = s.compression match {
+      case 1 =>
+        if (s.predictor == 1) null // sample straight from the source buffer
+        else java.util.Arrays.copyOfRange(bytes, off, off + outLen)
+      case 8 | 32946 => inflateSegment(bytes, off, len, outLen)
+      case 32773 => packBitsSegment(bytes, off, len, outLen)
+      case 5 => lzwSegment(bytes, off, len, outLen)
+      case 7 =>
+        // strip/tile is a JPEG stream (TIFF TechNote 2); shared tables may
+        // ride in the JPEGTables tag (abbreviated streams)
+        val pre = s.jpegTables.map(Jpeg.parseTables).getOrElse(new Jpeg.TableState)
+        val (jw, jh, px) = Jpeg.decodeGray(
+          java.util.Arrays.copyOfRange(bytes, off, off + len), pre)
+        require(jw == rowSamples && jh == s.rows,
+          s"JPEG segment is ${jw}x$jh, expected ${rowSamples}x${s.rows}")
+        px
+    }
+    val seg =
+      if (data == null) ByteBuffer.wrap(bytes, off, outLen).slice().order(order)
+      else {
+        if (s.predictor == 2) undoPredictor(data, order, rowSamples, s.rows, s.bits)
+        else if (s.predictor == 3) undoFloatPredictor(data, order, rowSamples, s.rows, s.bits)
+        ByteBuffer.wrap(data).order(order)
       }
-    } else {
-      h.offsets.indices.map { s =>
-        val row0 = s * h.rowsPerStrip
-        RasterSegment(
-          path, h.offsets(s), h.byteCounts(s), little, h.compression, h.predictor,
-          h.bits, h.sampleFormat, h.width, math.min(h.rowsPerStrip, h.height - row0),
-          0, row0, h.width, h.height, h.sx, h.sy, h.ox, h.oy, h.nodata, h.jpegTables, h.spp)
+    val raw = Iterator.range(0, s.rows).flatMap { j =>
+      Iterator.range(0, s.rowSamples).flatMap { i =>
+        val col = s.col0 + i; val row = s.row0 + j
+        if (col < s.width && row < s.height)
+          Iterator.range(0, s.spp).map(b => (col, row, b,
+            sampleAt(seg, ((j * s.rowSamples + i) * s.spp + b) * bytesPerSample, s.bits, s.fmt)))
+        else Iterator.empty // edge-tile padding
       }
+    }
+    s.nodata match {
+      case Some(nd) => raw.filter { case (_, _, _, v) => v != nd && !(v.isNaN && nd.isNaN) }
+      case None => raw
+    }
+  }
+
+  /** A segment's cells as cell-table rows (path, x, y, band, value) at
+    * the pixel centers x = ox + (col+0.5)·sx, y = oy − (row+0.5)·sy.
+    */
+  private def segmentRows(
+      s: RasterSegment, bytes: Array[Byte], off: Int): Iterator[(String, Double, Double, Int, Double)] =
+    segmentCells(s, bytes, off).map { case (col, row, b, v) =>
+      (s.path, s.ox + (col + 0.5) * s.sx, s.oy - (row + 0.5) * s.sy, b, v)
     }
 
   /** Hadoop Configuration is a Writable, not Serializable — standard
@@ -830,8 +612,8 @@ object GeoTiff {
           if (off == 0L) little = b(0) == 'I'
           b
         }
-        if (multiBand) segmentsOfImpl(h, st.getPath.toString, little)
-        else segmentsOf(h, st.getPath.toString, little)
+        if (!multiBand) singleBand(h, "readBandsParallel")
+        segmentsOf(h, st.getPath.toString, little)
       } finally in.close()
     }
     require(segs.nonEmpty, s"no TIFF segments under $path")
@@ -842,42 +624,36 @@ object GeoTiff {
         it.flatMap { s =>
           val p = new org.apache.hadoop.fs.Path(s.path)
           val sfs = p.getFileSystem(confSer.conf) // Hadoop caches per-scheme instances
-          val raw = new Array[Byte](
-            (if (s.len > 0) s.len
-             else s.rowSamples.toLong * s.spp * s.rows * (s.bits / 8)).toInt)
+          val raw = new Array[Byte](storedLen(s))
           val in = sfs.open(p)
           try in.readFully(s.off, raw, 0, raw.length)
           finally in.close()
-          val order = if (s.little) ByteOrder.LITTLE_ENDIAN else ByteOrder.BIG_ENDIAN
-          val seg = segmentBuffer(
-            raw, 0, raw.length, order, s.compression, s.predictor, s.bits,
-            s.rowSamples * s.spp, s.rows, s.jpegTables)
-          val bps = s.bits / 8
-          Iterator.range(0, s.rows).flatMap { j =>
-            Iterator.range(0, s.rowSamples).flatMap { i =>
-              val col = s.col0 + i; val row = s.row0 + j
-              if (col < s.width && row < s.height) {
-                Iterator.range(0, s.spp).flatMap { b =>
-                  val v = sampleAt(
-                    seg, ((j * s.rowSamples + i) * s.spp + b) * bps, s.bits, s.fmt)
-                  val keep = s.nodata match {
-                    case Some(nd) => v != nd && !(v.isNaN && nd.isNaN)
-                    case None => true
-                  }
-                  if (keep)
-                    Iterator.single((s.path,
-                      s.ox + (col + 0.5) * s.sx, s.oy - (row + 0.5) * s.sy, b, v))
-                  else Iterator.empty
-                }
-              } else Iterator.empty // edge-tile padding
-            }
-          }
+          segmentRows(s, raw, 0)
         }
       }
       .toDF("path", "x", "y", "band", "value")
   }
 
-  def read(spark: SparkSession, path: String, globFilter: Option[String] = None): DataFrame = {
+  /** Read raster(s) into a cell table (path, x, y, value) — the
+    * `Spatial.zonalStats` input. Cell center coordinates
+    * (x = ox + (col+0.5)·sx, y = oy − (row+0.5)·sy), matching
+    * rasterio/GDAL's pixel-center convention for point sampling.
+    */
+  def read(spark: SparkSession, path: String, globFilter: Option[String] = None): DataFrame =
+    readImpl(spark, path, globFilter, multiBand = false).drop("band")
+
+  /** Multi-band scan: (path, x, y, band, value) — the general form of
+    * [[read]] for chunky-interleaved rasters (RGB orthophotos, multi-
+    * spectral stacks). Single-band files come back with band 0.
+    */
+  def readBands(spark: SparkSession, path: String, globFilter: Option[String] = None): DataFrame =
+    readImpl(spark, path, globFilter, multiBand = true)
+
+  private def readImpl(
+      spark: SparkSession,
+      path: String,
+      globFilter: Option[String],
+      multiBand: Boolean): DataFrame = {
     import spark.implicits._
     // pass a DIRECTORY + globFilter rather than a literal "dir/*.tif"
     // glob: Spark's DataSource probes the literal path first and logs a
@@ -890,31 +666,117 @@ object GeoTiff {
       .as[(String, Array[Byte])]
       .flatMap { case (p, bytes) =>
         val h = parseHeader(bytes) // once per file, not per cell
-        cells(bytes, h).map { case (col, row, v) =>
-          (p, h.ox + (col + 0.5) * h.sx, h.oy - (row + 0.5) * h.sy, v)
-        }
-      }
-      .toDF("path", "x", "y", "value")
-  }
-
-  /** Multi-band scan: (path, x, y, band, value) — the general form of
-    * [[read]] for chunky-interleaved rasters (RGB orthophotos, multi-
-    * spectral stacks). Single-band files come back with band 0.
-    */
-  def readBands(spark: SparkSession, path: String, globFilter: Option[String] = None): DataFrame = {
-    import spark.implicits._
-    val reader = spark.read.format("binaryFile")
-    globFilter.foreach(g => reader.option("pathGlobFilter", g))
-    reader.load(path)
-      .select("path", "content")
-      .as[(String, Array[Byte])]
-      .flatMap { case (p, bytes) =>
-        val h = parseHeader(bytes)
-        cellsBands(bytes, h).map { case (col, row, b, v) =>
-          (p, h.ox + (col + 0.5) * h.sx, h.oy - (row + 0.5) * h.sy, b, v)
-        }
+        if (!multiBand) singleBand(h, "cellsBands/readBands")
+        segmentsOf(h, p, little = bytes(0) == 'I').iterator
+          .flatMap(s => segmentRows(s, bytes, s.off.toInt))
       }
       .toDF("path", "x", "y", "band", "value")
+  }
+
+  /** One IFD entry for [[writeLayout]]: `count` values of TIFF type
+    * `typ`, little-endian in `bytes`. */
+  private final case class Tag(tag: Int, typ: Int, count: Int, bytes: Array[Byte])
+
+  private def tagOf(tag: Int, typ: Int, count: Int)(put: ByteBuffer => Unit): Tag = {
+    val b = ByteBuffer.allocate(typeSize(typ) * count).order(ByteOrder.LITTLE_ENDIAN)
+    put(b)
+    Tag(tag, typ, count, b.array())
+  }
+  private def shorts(tag: Int, vs: Int*): Tag =
+    tagOf(tag, 3, vs.size)(b => vs.foreach(v => b.putShort(v.toShort)))
+  private def longs(tag: Int, vs: Long*): Tag =
+    tagOf(tag, 4, vs.size)(b => vs.foreach(v => b.putInt(v.toInt)))
+  private def doubles(tag: Int, vs: Double*): Tag =
+    tagOf(tag, 12, vs.size)(b => vs.foreach(v => b.putDouble(v)))
+
+  /** The one file layout every writer emits: a little-endian classic TIFF
+    * with one IFD sorted by tag, every value too big for its 4-byte entry
+    * field stored after the IFD at an even offset (TIFF 6.0 word
+    * alignment), then the strips. The image is cut into strips of
+    * `rowsPerStrip` rows (≤ 0: one whole-image strip) that
+    * `strip(row0, rows)` encodes; the size, strip and north-up
+    * georeferencing tags (x = ox + col·sx, y = oy − row·sy) are added to
+    * the writer's own `tags`.
+    */
+  private def writeLayout(
+      path: String,
+      width: Int,
+      height: Int,
+      rowsPerStrip: Int,
+      sx: Double,
+      sy: Double,
+      ox: Double,
+      oy: Double,
+      tags: Seq[Tag])(strip: (Int, Int) => Array[Byte]): Unit = {
+    val rps = if (rowsPerStrip <= 0) height else rowsPerStrip
+    val strips = Array.tabulate((height + rps - 1) / rps) { s =>
+      strip(s * rps, math.min(rps, height - s * rps))
+    }
+    def ifd(stripOffs: Seq[Long]): Seq[Tag] = (tags ++ Seq(
+      longs(256, width), longs(257, height), longs(273, stripOffs: _*), longs(278, rps),
+      longs(279, strips.map(_.length.toLong).toSeq: _*),
+      doubles(33550, sx, sy, 0.0), doubles(33922, 0.0, 0.0, 0.0, ox, oy, 0.0))).sortBy(_.tag)
+    val sized = ifd(strips.map(_ => 0L).toSeq)
+    val n = sized.size
+    val ifdOff = 8
+    var cursor = ifdOff + 2 + n * 12 + 4
+    val valueOffs = sized.map { t =>
+      if (t.bytes.length <= 4) 0
+      else { val o = cursor; cursor += t.bytes.length; cursor += cursor & 1; o }
+    }
+    val payloadOff = cursor
+    val out = ByteBuffer.allocate(payloadOff + strips.map(_.length).sum)
+      .order(ByteOrder.LITTLE_ENDIAN)
+    out.put('I'.toByte).put('I'.toByte).putShort(42.toShort).putInt(ifdOff).putShort(n.toShort)
+    ifd(strips.scanLeft(payloadOff.toLong)(_ + _.length).init.toSeq).zip(valueOffs).foreach {
+      case (t, o) =>
+        out.putShort(t.tag.toShort).putShort(t.typ.toShort).putInt(t.count)
+        if (t.bytes.length <= 4) out.put(java.util.Arrays.copyOf(t.bytes, 4))
+        else { out.putInt(o); out.put(o, t.bytes) }
+    }
+    out.putInt(0) // no next IFD
+    out.position(payloadOff)
+    strips.foreach(out.put)
+    java.nio.file.Files.write(java.nio.file.Paths.get(path), out.array())
+  }
+
+  /** zlib-deflate a strip into a growable sink — incompressible rasters
+    * exceed their input size via stored-block overhead. */
+  private def zip(payload: Array[Byte]): Array[Byte] = {
+    val d = new java.util.zip.Deflater()
+    d.setInput(payload); d.finish()
+    val sink = new java.io.ByteArrayOutputStream(payload.length / 2 + 64)
+    val buf = new Array[Byte](8192)
+    while (!d.finished()) sink.write(buf, 0, d.deflate(buf))
+    d.end()
+    sink.toByteArray
+  }
+
+  /** S11 sink — write a single-band float32 GeoTIFF, uncompressed or
+    * zlib (`deflate = true`, Compression=8): the one-band case of
+    * [[writeBands]], plus an optional GDAL_NODATA tag. `values` is
+    * row-major (row·width + col); rowsPerStrip ≤ 0 writes one
+    * whole-image strip, a positive value splits the payload into
+    * independently-compressed strips, the layout [[readParallel]] fans
+    * out per segment.
+    */
+  def write(
+      path: String,
+      width: Int,
+      height: Int,
+      values: Array[Float],
+      sx: Double,
+      sy: Double,
+      ox: Double,
+      oy: Double,
+      nodata: Option[Float] = None,
+      deflate: Boolean = false,
+      rowsPerStrip: Int = 0): Unit = {
+    require(values.length == width * height, "values must be width*height row-major")
+    val (tags, strip) = float32Strips(width, Array(values), deflate)
+    val ndAscii = nodata.map(v => (if (v == v.toLong) v.toLong.toString else v.toString) + "\u0000")
+    writeLayout(path, width, height, rowsPerStrip, sx, sy, ox, oy,
+      tags ++ ndAscii.map(s => Tag(42113, 2, s.length, s.getBytes("ASCII"))))(strip)
   }
 
   /** Multi-band float32 sink (chunky interleave, optionally deflate,
@@ -932,26 +794,21 @@ object GeoTiff {
       oy: Double,
       deflate: Boolean = false,
       rowsPerStrip: Int = 0): Unit = {
-    val spp = bands.length
-    require(spp >= 1 && bands.forall(_.length == width * height),
+    require(bands.length >= 1 && bands.forall(_.length == width * height),
       "each band must be width*height row-major")
-    def zip(payload0: Array[Byte]): Array[Byte] = {
-      // growable sink — incompressible rasters exceed input size via
-      // stored-block overhead, and a single fixed-slack deflate() call
-      // would refuse them outright
-      val d = new java.util.zip.Deflater()
-      d.setInput(payload0); d.finish()
-      val sink = new java.io.ByteArrayOutputStream(payload0.length / 2 + 64)
-      val buf = new Array[Byte](8192)
-      while (!d.finished()) sink.write(buf, 0, d.deflate(buf))
-      d.end()
-      sink.toByteArray
-    }
-    val rps = if (rowsPerStrip <= 0) height else rowsPerStrip
-    val nStrips = (height + rps - 1) / rps
-    val strips: Array[Array[Byte]] = Array.tabulate(nStrips) { s =>
-      val r0 = s * rps
-      val rows = math.min(rps, height - r0)
+    val (tags, strip) = float32Strips(width, bands, deflate)
+    writeLayout(path, width, height, rowsPerStrip, sx, sy, ox, oy, tags)(strip)
+  }
+
+  /** The float32 chunky strip encoder behind [[write]] and [[writeBands]]:
+    * the sample-format tags and the `(row0, rows)` strip encoder.
+    */
+  private def float32Strips(
+      width: Int, bands: Array[Array[Float]], deflate: Boolean): (Seq[Tag], (Int, Int) => Array[Byte]) = {
+    val spp = bands.length
+    val tags = Seq(shorts(258, Seq.fill(spp)(32): _*), shorts(259, if (deflate) 8 else 1),
+      shorts(277, spp), shorts(284, 1), shorts(339, Seq.fill(spp)(3): _*))
+    (tags, (r0, rows) => {
       val b = ByteBuffer.allocate(rows * width * spp * 4).order(ByteOrder.LITTLE_ENDIAN)
       var i = r0 * width
       while (i < (r0 + rows) * width) {
@@ -960,66 +817,36 @@ object GeoTiff {
         i += 1
       }
       if (deflate) zip(b.array()) else b.array()
+    })
+  }
+
+  /** S11 sink, JPEG layout — write a single-band 8-bit grayscale raster
+    * with Compression=7 in the common libtiff shape: shared huffman/quant
+    * tables in the JPEGTables tag (347), ABBREVIATED baseline-JPEG stream
+    * per strip. `pixels` ∈ 0..255 row-major. JPEG is lossy in general;
+    * block-constant content round-trips exactly (see [[Jpeg]] scaladoc),
+    * which is what the qz5 oracle gate relies on.
+    */
+  def writeJpeg(
+      path: String,
+      width: Int,
+      height: Int,
+      pixels: Array[Int],
+      sx: Double,
+      sy: Double,
+      ox: Double,
+      oy: Double,
+      rowsPerStrip: Int = 0): Unit = {
+    require(pixels.length == width * height, "pixels must be width*height row-major")
+    require(pixels.forall(p => p >= 0 && p <= 255), "JPEG samples must be 0..255")
+    val tables = Jpeg.tablesStream()
+    // 262 = 1: BlackIsZero
+    writeLayout(path, width, height, rowsPerStrip, sx, sy, ox, oy,
+      Seq(shorts(258, 8), shorts(259, 7), shorts(262, 1), shorts(277, 1), shorts(339, 1),
+        Tag(347, 7, tables.length, tables))) { (r0, rows) =>
+      Jpeg.encodeGray(
+        java.util.Arrays.copyOfRange(pixels, r0 * width, (r0 + rows) * width),
+        width, rows, includeTables = false)
     }
-    // tags: 256 W, 257 H, 258 bits×spp, 259 comp, 273 strip offs, 277 spp,
-    // 278 rows/strip, 279 strip bytes, 284 planar, 339 fmt×spp,
-    // 33550 scale, 33922 tiepoint
-    val n = 12
-    val ifdOff = 8
-    var cursor = ifdOff + 2 + n * 12 + 4
-    val bitsOff = { val o = cursor; if (spp > 2) cursor += spp * 2; o }
-    val fmtOff = { val o = cursor; if (spp > 2) cursor += spp * 2; o }
-    val scaleOff = cursor; cursor += 24
-    val tieOff = cursor; cursor += 48
-    val offsArrOff = { val o = cursor; if (nStrips > 1) cursor += nStrips * 4; o }
-    val cntsArrOff = { val o = cursor; if (nStrips > 1) cursor += nStrips * 4; o }
-    val payloadOff = cursor
-    val stripOffs = strips.scanLeft(payloadOff)(_ + _.length).init
-    val total = strips.iterator.map(_.length).sum
-    val out = ByteBuffer.allocate(payloadOff + total).order(ByteOrder.LITTLE_ENDIAN)
-    out.put('I'.toByte).put('I'.toByte).putShort(42.toShort).putInt(ifdOff)
-    var e = 0
-    def entry(tag: Int, typ: Int, count: Int, value: Int): Unit = {
-      val off = ifdOff + 2 + e * 12
-      out.putShort(off, tag.toShort)
-      out.putShort(off + 2, typ.toShort)
-      out.putInt(off + 4, count)
-      out.putInt(off + 8, value)
-      e += 1
-    }
-    // SHORT arrays of count<=2 fit inline (little-endian packing)
-    def inlineShorts(v: Int): Int = if (spp == 1) v else v | (v << 16)
-    out.putShort(ifdOff, n.toShort)
-    entry(256, 3, 1, width)
-    entry(257, 3, 1, height)
-    entry(258, 3, spp, if (spp <= 2) inlineShorts(32) else bitsOff)
-    entry(259, 3, 1, if (deflate) 8 else 1)
-    entry(273, 4, nStrips, if (nStrips == 1) payloadOff else offsArrOff)
-    entry(277, 3, 1, spp)
-    entry(278, 3, 1, rps)
-    entry(279, 4, nStrips, if (nStrips == 1) strips.head.length else cntsArrOff)
-    entry(284, 3, 1, 1) // chunky
-    entry(339, 3, spp, if (spp <= 2) inlineShorts(3) else fmtOff)
-    entry(33550, 12, 3, scaleOff)
-    entry(33922, 12, 6, tieOff)
-    out.putInt(ifdOff + 2 + n * 12, 0)
-    if (spp > 2) {
-      (0 until spp).foreach { b =>
-        out.putShort(bitsOff + b * 2, 32.toShort)
-        out.putShort(fmtOff + b * 2, 3.toShort)
-      }
-    }
-    out.putDouble(scaleOff, sx).putDouble(scaleOff + 8, sy).putDouble(scaleOff + 16, 0.0)
-    out.putDouble(tieOff, 0.0).putDouble(tieOff + 8, 0.0).putDouble(tieOff + 16, 0.0)
-    out.putDouble(tieOff + 24, ox).putDouble(tieOff + 32, oy).putDouble(tieOff + 40, 0.0)
-    if (nStrips > 1) {
-      strips.indices.foreach { s =>
-        out.putInt(offsArrOff + s * 4, stripOffs(s))
-        out.putInt(cntsArrOff + s * 4, strips(s).length)
-      }
-    }
-    out.position(payloadOff)
-    strips.foreach(out.put)
-    java.nio.file.Files.write(java.nio.file.Paths.get(path), out.array())
   }
 }

@@ -520,4 +520,89 @@ class GeoTiffSpec extends AnyFunSuite with TempDirs {
     val ex = intercept[IllegalArgumentException](GeoTiff.readParallel(spark, p).collect())
     assert(ex.getMessage.contains("readBandsParallel"))
   }
+
+  test("every writer word-aligns out-of-entry IFD values; cells and nodata round-trip") {
+    val w = 16; val h = 20
+    val dir = tempDir("gtiffalign")
+    def roundTrip(name: String)(write: String => Unit): (Array[Byte], String) = {
+      val sub = java.nio.file.Files.createDirectory(dir.resolve(name))
+      write(sub.resolve(s"$name.tif").toString)
+      (java.nio.file.Files.readAllBytes(sub.resolve(s"$name.tif")), sub.toString)
+    }
+    // TIFF 6.0: a value too big for its 4-byte entry field sits at an even offset
+    def assertAligned(name: String, bytes: Array[Byte]): Unit = {
+      val b = ByteBuffer.wrap(bytes).order(ByteOrder.LITTLE_ENDIAN)
+      val size = Map(1 -> 1, 2 -> 1, 3 -> 2, 4 -> 4, 7 -> 1, 12 -> 8)
+      val ifd = b.getInt(4)
+      (0 until (b.getShort(ifd) & 0xffff)).foreach { e =>
+        val off = ifd + 2 + e * 12
+        val bytesOut = size(b.getShort(off + 2) & 0xffff) * b.getInt(off + 4)
+        if (bytesOut > 4) assert(b.getInt(off + 8) % 2 == 0,
+          s"$name: tag ${b.getShort(off) & 0xffff} value at odd offset ${b.getInt(off + 8)}")
+      }
+    }
+    def cellsOf(df: org.apache.spark.sql.DataFrame) =
+      df.select("x", "y", "value").collect().map(r => (r.getDouble(0), r.getDouble(1), r.getDouble(2))).toSet
+    def expected(value: Int => Double) = (0 until w * h).map { i =>
+      ((i % w) + 0.5, h - (i / w) - 0.5, value(i))
+    }.toSet
+    // float32 with a 3-byte GDAL_NODATA: the -1 cells must drop out
+    val vals = Array.tabulate(w * h)(i => if (i % 7 == 0) -1.0f else i * 0.25f)
+    val (f32, f32Dir) = roundTrip("f32")(GeoTiff.write(_, w, h, vals, 1.0, 1.0, 0.0, h.toDouble,
+      nodata = Some(-1f), rowsPerStrip = 8))
+    assertAligned("write", f32)
+    val f32Cells = expected(i => vals(i).toDouble).filter(_._3 != -1.0)
+    assert(cellsOf(GeoTiff.read(spark, f32Dir)) == f32Cells)
+    assert(cellsOf(GeoTiff.readParallel(spark, f32Dir + "/*")) == f32Cells)
+    // JPEG: odd-length JPEGTables before the strip arrays
+    val px = Array.tabulate(w * h)(i => ((i % w) / 8 * 40 + (i / w) / 8 * 90) % 256)
+    val (jpg, jpgDir) = roundTrip("jpg")(GeoTiff.writeJpeg(_, w, h, px, 1.0, 1.0, 0.0, h.toDouble,
+      rowsPerStrip = 8))
+    assertAligned("writeJpeg", jpg)
+    assert(cellsOf(GeoTiff.read(spark, jpgDir)) == expected(i => px(i).toDouble))
+    assert(cellsOf(GeoTiff.readParallel(spark, jpgDir + "/*")) == expected(i => px(i).toDouble))
+    // three bands: out-of-entry SHORT arrays for bits and sample format
+    val bands = Array.tabulate(3)(b => Array.tabulate(w * h)(i => i * 0.5f + b * 1000f))
+    val (rgb, rgbDir) = roundTrip("rgb")(GeoTiff.writeBands(_, w, h, bands, 1.0, 1.0, 0.0, h.toDouble,
+      deflate = true, rowsPerStrip = 8))
+    assertAligned("writeBands", rgb)
+    def bandCells(df: org.apache.spark.sql.DataFrame) = df.collect()
+      .map(r => (r.getDouble(1), r.getDouble(2), r.getInt(3), r.getDouble(4))).toSet
+    val rgbCells = (0 until 3).flatMap(b =>
+      expected(i => bands(b)(i).toDouble).map { case (x, y, v) => (x, y, b, v) }).toSet
+    assert(bandCells(GeoTiff.readBands(spark, rgbDir)) == rgbCells)
+    assert(bandCells(GeoTiff.readBandsParallel(spark, rgbDir + "/*")) == rgbCells)
+  }
+
+  test("raster sizes past 16 bits survive the IFD") {
+    val dir = tempDir("gtiffwide")
+    val p = dir.resolve("wide.tif")
+    GeoTiff.write(p.toString, 70000, 1, Array.tabulate(70000)(_.toFloat), 1.0, 1.0, 0.0, 1.0)
+    val bytes = java.nio.file.Files.readAllBytes(p)
+    val h = GeoTiff.parseHeader(bytes)
+    assert(h.width == 70000 && h.rowsPerStrip == 1)
+    assert(GeoTiff.cells(bytes, h).map(_._3).toSeq == (0 until 70000).map(_.toDouble))
+  }
+
+  test("deflate of an incompressible single strip round-trips bit-exact through read") {
+    val w = 256; val h = 256
+    val rnd = new java.util.Random(20261020L)
+    val vals = Array.fill(w * h) {
+      var f = Float.NaN
+      while (f.isNaN || f.isInfinite) f = java.lang.Float.intBitsToFloat(rnd.nextInt())
+      f
+    }
+    val dir = tempDir("gtiffrand")
+    GeoTiff.write(dir.resolve("rand.tif").toString, w, h, vals, 1.0, 1.0, 0.0, h.toDouble,
+      deflate = true)
+    val bytes = java.nio.file.Files.readAllBytes(dir.resolve("rand.tif"))
+    assert(GeoTiff.parseHeader(bytes).compression == 8)
+    val got = GeoTiff.read(spark, dir.toString).collect()
+      .map(r => ((r.getDouble(1) - 0.5).toInt, (h - 0.5 - r.getDouble(2)).toInt) ->
+        java.lang.Float.floatToRawIntBits(r.getDouble(3).toFloat)).toMap
+    assert(got.size == w * h)
+    (0 until w * h).foreach { i =>
+      assert(got((i % w, i / w)) == java.lang.Float.floatToRawIntBits(vals(i)), s"cell $i")
+    }
+  }
 }

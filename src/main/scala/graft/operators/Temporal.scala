@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.Iterate
+
 /** Temporal joins (beyond-reference: the events table makes event-time
   * capabilities part of the engine surface).
   *
@@ -23,6 +25,73 @@ import org.apache.spark.sql.functions._
   * `max_by` per instant).
   */
 object Temporal {
+
+  /** Per-key sorted series: one row per `key` whose `__s` array holds
+    * the key's `(__t = ts, __i = tie, __v = value)` structs sorted by
+    * (ts, tie) — the array every sequential fold and in-array scan below
+    * reads. Per-key state is the key's own series (the bounded-series
+    * contract every keyed time-series op here carries; at 100 TB, key
+    * by (entity, window) to cap it). `dropNulls` is the caller's null
+    * policy: true drops the rows whose `value` is null before grouping,
+    * false carries them into the array.
+    */
+  private def series(
+      df: DataFrame, key: String, ts: String, tie: String, value: Column,
+      dropNulls: Boolean): DataFrame =
+    (if (dropNulls) df.filter(value.isNotNull) else df)
+      .groupBy(col(key))
+      .agg(sort_array(collect_list(struct(
+        col(ts).as("__t"), col(tie).as("__i"), value.as("__v")))).as("__s"))
+
+  /** Fixed-point quantizer: `floor(c · scale)` as a Long (scale 100 =
+    * centi units, 1e6 = micro units), so sums, comparisons and folds over
+    * it are exact integer arithmetic. Floor, never a bare cast: Spark's
+    * double→long cast truncates and DuckDB's rounds to nearest; every qe
+    * oracle replays this floor.
+    */
+  private def fixed(c: Column, scale: Double): Column =
+    floor(c.cast("double") * lit(scale)).cast("long")
+
+  /** LET-BINDING: `f(x)` with `x` bound as the lambda variable of a
+    * single-element transform, `element_at(transform(array(x), f), 1)`.
+    * The optimizer cannot inline a lambda variable, so `x` evaluates
+    * once per row however often `f` reads it. Bound as a withColumn
+    * instead, CollapseProject inlined lttb's bucket arrays into its
+    * 18-step fold and every step re-evaluated every bucket scan
+    * (measured 412 s at sf0.01; ~2 s let-bound).
+    */
+  private def let(x: Column)(f: Column => Column): Column =
+    element_at(transform(array(x), f), 1)
+
+  /** Per-subject lifetime for the survival tests: `__dur` = whole days
+    * from the subject's first observation to its first `death` event, or
+    * to its last observation (right-censored) when it has none, and
+    * `__evt` = 1 if it died. Each `extra` (alias → aggregate) rides the
+    * same subject aggregate and is kept beside them. Days are integer
+    * floor-division of epoch-µs, exact in every engine.
+    */
+  private def lifetimes(
+      df: DataFrame, subject: String, ts: String, death: Column,
+      extra: (String, Column)*): DataFrame = {
+    val us = unix_micros(col(ts))
+    df.groupBy(col(subject))
+      .agg(min(us).as("__t0"), min(when(death, us)).as("__td") +:
+        max(us).as("__tmax") +: extra.map { case (n, c) => c.as(n) }: _*)
+      .select(expr("(coalesce(__td, __tmax) - __t0) div 86400000000").as("__dur") +:
+        col("__td").isNotNull.cast("long").as("__evt") +: extra.map(e => col(e._1)): _*)
+  }
+
+  /** CROSS-ENGINE LITERAL CONTRACT of the smoothing folds: each constant
+    * and its complement must be exactly representable doubles (dyadic
+    * rationals k/1024 — 0.5, 0.25, 0.125…). With 0.3, Scala's `1 - 0.3`
+    * and SQL's literal `0.7` can be DIFFERENT doubles, skewing every
+    * step; this makes that a loud error instead of a 7th-decimal
+    * heisen-mismatch.
+    */
+  private def requireDyadic(params: (String, Double)*): Unit =
+    require(params.forall { case (_, x) => x * 1024.0 == math.rint(x * 1024.0) },
+      s"${params.map(_._1).mkString("/")} must be dyadic (k/1024) so 1-x is the " +
+        s"same double in every engine, got ${params.map(_._2).mkString("/")}")
 
   def asofJoin(
       left: DataFrame,
@@ -81,18 +150,15 @@ object Temporal {
     * while the fold executes the IDENTICAL IEEE op sequence in any
     * engine — the qe15 oracle replays it step-for-step as a recursive
     * CTE and matches bit-for-bit before the 6-dp output round.
-    * Per-key state is the key's own series (the bounded-series
-    * assumption every keyed time-series op carries; at 100 TB, key by
-    * (entity, window) to cap it). Output: (key, n_events, ewma).
+    * A null value stays in the series: it counts in n_events and makes
+    * the key's ewma null. Output: (key, n_events, ewma).
     */
   def ewma(
       df: DataFrame, keyCol: String, tsCol: String, tieCol: String,
       valCol: String, alpha: Double): DataFrame = {
     require(alpha > 0.0 && alpha <= 1.0, s"alpha must be in (0, 1], got $alpha")
     val keep = 1.0 - alpha
-    df.groupBy(col(keyCol))
-      .agg(sort_array(collect_list(struct(
-        col(tsCol), col(tieCol), col(valCol).cast("double").as("__v")))).as("__s"))
+    series(df, keyCol, tsCol, tieCol, col(valCol).cast("double"), dropNulls = false)
       .select(
         col(keyCol),
         size(col("__s")).cast("long").as("n_events"),
@@ -353,14 +419,10 @@ object Temporal {
         ((((idx - 1) * m).cast("double") /
           greatest(col("__n") - 2, lit(1)).cast("double")).cast("long") + 1)
           .as("b")))
-    // LET-BINDING VIA SINGLE-ELEMENT transform: the precomputed arrays
-    // (mid, then per-bucket candidates/anchors) bind as LAMBDA
-    // VARIABLES, which the optimizer cannot inline — as withColumns,
-    // CollapseProject inlined them into the 18-step fold and each step
-    // re-evaluated every bucket scan (measured 412 s at sf0.01; ~2 s
-    // with the bindings). Each binding evaluates exactly once per row.
+    // the precomputed arrays (mid, then per-bucket candidates/anchors)
+    // are [[let]]-bound: each evaluates exactly once per row
     val midBound = filter(mid, e => e("rn") >= 2 && e("rn") <= col("__n") - 1)
-    val selExpr = element_at(transform(array(midBound), md => {
+    val selExpr = let(midBound) { md =>
       // per bucket i: its candidates and the NEXT anchor (bucket i+1's
       // integer-sum centroid, or the last point for the final bucket)
       val cands = transform(sequence(lit(1), lit(m)),
@@ -378,7 +440,7 @@ object Temporal {
             last("x").cast("double").as("nx"),
             last("y").cast("double").as("ny")))
       })
-      element_at(transform(array(struct(cands.as("c"), nexts.as("a"))), ctx =>
+      let(struct(cands.as("c"), nexts.as("a")))(ctx =>
         aggregate(sequence(lit(1), lit(m)),
           struct(
             element_at(col("__ps"), 1)("x").as("px"),
@@ -407,8 +469,8 @@ object Temporal {
           },
           acc => concat(acc("sel"), array(struct(
             element_at(col("__ps"), col("__n"))("x").as("x"),
-            element_at(col("__ps"), col("__n"))("y").as("y")))))), 1)
-    }), 1)
+            element_at(col("__ps"), col("__n"))("y").as("y"))))))
+    }
     val folded = big
       .select(col(keyCol), explode(selExpr).as("__s"))
       .select(col(keyCol), col("__s.x").as("x"), col("__s.y").as("__yq"))
@@ -417,26 +479,6 @@ object Temporal {
         (col("__yq").cast("double") / 1000000.0).as("y"))
   }
 
-  /** ROLLING Z-SCORE — per-key anomaly scoring of a value series
-    * against its own trailing baseline: for each event (in strict
-    * (ts, tie) order), mean/variance over the PRECEDING `lookback`
-    * rows — the current row never contaminates its own baseline — and
-    * z = (v − μ)/σ. The training-data-quality staple (drift spikes,
-    * sensor faults, metric regressions) in its scalable form: one
-    * window shuffle on the key, sliding-frame sums, no self-join.
-    * Only rows with a FULL lookback window score (the first `lookback`
-    * rows per key have no defensible baseline and are dropped);
-    * zero-variance baselines yield null z and a false flag.
-    *
-    * Replay contract: variance is the explicit s2/n − (s1/n)² in that
-    * exact operation order (NOT the builtin stddev — engines disagree
-    * on the internal algorithm), null-value rows are excluded BEFORE
-    * the window so both engines see identical frames, and z rounds at
-    * 4 dp (windowed double sums may associate differently across
-    * engines; the ulp-level slack needs coarser rounding than the
-    * usual 6 dp). The flag compares the UNROUNDED |z| to the
-    * threshold.
-    */
   /** HOLT DOUBLE-EXPONENTIAL SMOOTHING — [[ewma]]'s trend-aware big
     * sibling: per key, the coupled level/trend fold
     * {{{
@@ -446,36 +488,22 @@ object Temporal {
     * seeded l₀ = x₀, b₀ = 0 — the forecasting/feature primitive for
     * trending series a single EWMA lags behind. Like qe15, the fold is
     * sequential BY DEFINITION and computes as an ordered in-array
-    * `aggregate` (sort_array over (ts, tie, v) structs): the identical
+    * `aggregate` over the key's [[series]]: the identical
     * IEEE op tree runs in every engine, replayed step-for-step by the
     * qe26 recursive-CTE oracle. The accumulator carries (seen, l, b) —
     * never a NaN sentinel (a NaN input must poison, not re-seed).
-    *
-    * CROSS-ENGINE LITERAL CONTRACT: α, β, 1−α, 1−β must all be exactly
-    * representable doubles (dyadic rationals — 0.5, 0.25, 0.125…).
-    * With β = 0.3, Scala's `1 - 0.3` and SQL's literal `0.7` can be
-    * DIFFERENT doubles, skewing every step; the require below makes
-    * that a loud error instead of a 7th-decimal heisen-mismatch.
-    *
-    * Per-key state is the key's own series (the usual bounded-series
-    * contract). Output: (key, n_events, level, trend, forecast = l+b).
+    * α and β must be dyadic ([[requireDyadic]]); null values are
+    * dropped. Output: (key, n_events, level, trend, forecast = l+b).
     */
   def holt(
       df: DataFrame, keyCol: String, tsCol: String, tieCol: String,
       valCol: String, alpha: Double, beta: Double): DataFrame = {
     require(alpha > 0.0 && alpha <= 1.0, s"alpha must be in (0, 1], got $alpha")
     require(beta >= 0.0 && beta <= 1.0, s"beta must be in [0, 1], got $beta")
-    def dyadic(x: Double) = (x * 1024.0) == math.rint(x * 1024.0)
-    require(dyadic(alpha) && dyadic(beta),
-      s"alpha/beta must be dyadic (k/1024) so 1-alpha/1-beta are the same " +
-        s"double in every engine, got $alpha/$beta")
+    requireDyadic("alpha" -> alpha, "beta" -> beta)
     val ka = 1.0 - alpha
     val kb = 1.0 - beta
-    df
-      .filter(col(valCol).isNotNull)
-      .groupBy(col(keyCol))
-      .agg(sort_array(collect_list(struct(
-        col(tsCol), col(tieCol), col(valCol).cast("double").as("__v")))).as("__s"))
+    series(df, keyCol, tsCol, tieCol, col(valCol).cast("double"), dropNulls = true)
       .select(
         col(keyCol),
         size(col("__s")).cast("long").as("n_events"),
@@ -581,6 +609,26 @@ object Temporal {
         col("__g.f").as("filled"))
   }
 
+  /** ROLLING Z-SCORE — per-key anomaly scoring of a value series
+    * against its own trailing baseline: for each event (in strict
+    * (ts, tie) order), mean/variance over the PRECEDING `lookback`
+    * rows — the current row never contaminates its own baseline — and
+    * z = (v − μ)/σ. The training-data-quality staple (drift spikes,
+    * sensor faults, metric regressions) in its scalable form: one
+    * window shuffle on the key, sliding-frame sums, no self-join.
+    * Only rows with a FULL lookback window score (the first `lookback`
+    * rows per key have no defensible baseline and are dropped);
+    * zero-variance baselines yield null z and a false flag.
+    *
+    * Replay contract: variance is the explicit s2/n − (s1/n)² in that
+    * exact operation order (NOT the builtin stddev — engines disagree
+    * on the internal algorithm), null-value rows are excluded BEFORE
+    * the window so both engines see identical frames, and z rounds at
+    * 4 dp (windowed double sums may associate differently across
+    * engines; the ulp-level slack needs coarser rounding than the
+    * usual 6 dp). The flag compares the UNROUNDED |z| to the
+    * threshold.
+    */
   def rollingZscore(
       df: DataFrame, keyCol: String, tsCol: String, tieCol: String,
       valCol: String, lookback: Int, threshold: Double): DataFrame = {
@@ -626,16 +674,11 @@ object Temporal {
     * in-array `aggregate` (the qe15/qe26 shape): sequential BY
     * DEFINITION, identical IEEE op tree in every engine, replayed
     * step-for-step by the qe29 recursive-CTE oracle (the ring rides as
-    * a LIST column in the recursive term). Same DYADIC literal
-    * contract as [[holt]]: α, β, γ and their complements must be
-    * exactly representable (k/1024), or Scala's `1−γ` and SQL's
-    * literal differ in the last ulp and every step after the first
-    * seasonal wrap skews.
+    * a LIST column in the recursive term). Same [[requireDyadic]]
+    * contract as [[holt]] for α, β, γ; null values are dropped.
     *
     * Output: (key, n_events, level, trend, seasonal_next, forecast =
-    * l + b + s_{next slot}). Per-key state is the key's own series
-    * (the usual bounded-series contract; key by (entity, window) at
-    * 100 TB).
+    * l + b + s_{next slot}).
     */
   def holtWinters(
       df: DataFrame, keyCol: String, tsCol: String, tieCol: String,
@@ -645,18 +688,12 @@ object Temporal {
     require(alpha > 0.0 && alpha <= 1.0, s"alpha must be in (0, 1], got $alpha")
     require(beta >= 0.0 && beta <= 1.0, s"beta must be in [0, 1], got $beta")
     require(gamma >= 0.0 && gamma <= 1.0, s"gamma must be in [0, 1], got $gamma")
-    def dyadic(x: Double) = (x * 1024.0) == math.rint(x * 1024.0)
-    require(dyadic(alpha) && dyadic(beta) && dyadic(gamma),
-      s"alpha/beta/gamma must be dyadic (k/1024), got $alpha/$beta/$gamma")
+    requireDyadic("alpha" -> alpha, "beta" -> beta, "gamma" -> gamma)
     val ka = 1.0 - alpha
     val kb = 1.0 - beta
     val kg = 1.0 - gamma
     val m = lit(period)
-    df
-      .filter(col(valCol).isNotNull)
-      .groupBy(col(keyCol))
-      .agg(sort_array(collect_list(struct(
-        col(tsCol), col(tieCol), col(valCol).cast("double").as("__v")))).as("__s"))
+    series(df, keyCol, tsCol, tieCol, col(valCol).cast("double"), dropNulls = true)
       .select(
         col(keyCol),
         size(col("__s")).cast("long").as("n_events"),
@@ -720,13 +757,7 @@ object Temporal {
       thresholdMicro: Long): DataFrame = {
     require(thresholdMicro > 0, s"threshold must be positive, got $thresholdMicro")
     val shift = lit(targetMicro + slackMicro)
-    df
-      .filter(col(valCol).isNotNull)
-      .groupBy(col(keyCol))
-      .agg(sort_array(collect_list(struct(
-        col(tsCol), col(tieCol),
-        floor(col(valCol).cast("double") * lit(1e6)).cast("long").as("__q"))))
-        .as("__s"))
+    series(df, keyCol, tsCol, tieCol, fixed(col(valCol), 1e6), dropNulls = true)
       .select(
         col(keyCol),
         size(col("__s")).cast("long").as("n_events"),
@@ -735,7 +766,7 @@ object Temporal {
             lit(0L).as("t"), lit(0L).as("mx"), lit(0L).as("n"),
             lit(0L).as("rn"), lit(null).cast("long").as("first")),
           (st, x) => {
-            val t = greatest(lit(0L), st("t") + (x("__q") - shift))
+            val t = greatest(lit(0L), st("t") + (x("__v") - shift))
             val alarm = t > lit(thresholdMicro)
             struct(
               t.as("t"),
@@ -780,8 +811,7 @@ object Temporal {
       .filter(col(durCol).isNotNull && col(durCol) > 0)
       .select(col(keyCol), col(tieCol),
         unix_micros(col(startCol)).as("__st"),
-        (unix_micros(col(startCol))
-          + floor(col(durCol).cast("double") * lit(1e6)).cast("long")).as("__en"))
+        (unix_micros(col(startCol)) + fixed(col(durCol), 1e6)).as("__en"))
       .withColumn("__pm", max(col("__en")).over(w))
       .select(col(keyCol),
         greatest(lit(0L),
@@ -826,8 +856,7 @@ object Temporal {
       .filter(col(durCol).isNotNull && col(durCol) > 0)
       .select(col(keyCol),
         unix_micros(col(startCol)).as("__st"),
-        (unix_micros(col(startCol))
-          + floor(col(durCol).cast("double") * lit(1e6)).cast("long")).as("__en"))
+        (unix_micros(col(startCol)) + fixed(col(durCol), 1e6)).as("__en"))
     val pts = iv.select(col(keyCol), col("__st").as("__t"), lit(1L).as("__d"))
       .unionAll(iv.select(col(keyCol), col("__en").as("__t"), lit(-1L).as("__d")))
       .groupBy(col(keyCol), col("__t"))
@@ -865,10 +894,9 @@ object Temporal {
     * an in-array scan (slice + filter per element) inside the bounded-
     * series contract every fold in this tier shares — no pair
     * materialization, no self-join. The tie term folds over a
-    * value-sorted copy counting runs. The whole computation binds the
-    * time-ordered value array ONCE as a lambda variable (the qe28
-    * let-binding idiom — CollapseProject cannot inline lambda vars, so
-    * the array materializes once per key, not once per use).
+    * value-sorted copy counting runs. The whole computation [[let]]-binds
+    * the time-ordered value array, so it materializes once per key, not
+    * once per use.
     *
     * Output: (key, n_events, s_stat, var_num — the integer 18·Var(S),
     * z_score, trend ∈ increasing/decreasing/no_trend at |z| > 1.959964).
@@ -877,16 +905,10 @@ object Temporal {
       df: DataFrame, keyCol: String, tsCol: String, tieCol: String,
       valCol: String): DataFrame = {
     val zCrit = 1.959964
-    df
-      .filter(col(valCol).isNotNull)
-      .groupBy(col(keyCol))
-      .agg(sort_array(collect_list(struct(
-        col(tsCol), col(tieCol),
-        floor(col(valCol).cast("double") * lit(1e6)).cast("long").as("__q"))))
-        .as("__s"))
+    series(df, keyCol, tsCol, tieCol, fixed(col(valCol), 1e6), dropNulls = true)
       .select(
         col(keyCol),
-        element_at(transform(array(transform(col("__s"), x => x("__q"))), vs => {
+        let(transform(col("__s"), x => x("__v"))) { vs =>
           val n = size(vs).cast("long")
           // S: for each element, count strictly-smaller minus
           // strictly-larger among the elements BEFORE it (slice of the
@@ -915,7 +937,7 @@ object Temporal {
               + st("run") * (st("run") - 1L) * (lit(2L) * st("run") + 5L))
           struct(n.as("n"), s.as("s"),
             (n * (n - 1L) * (lit(2L) * n + 5L) - tie).as("vn"))
-        }), 1).as("__mk"))
+        }.as("__mk"))
       .select(
         col(keyCol),
         col("__mk.n").as("n_events"),
@@ -949,22 +971,17 @@ object Temporal {
     * report null.
     *
     * Shape: ONE key shuffle; the lag products are in-array `zip_with`
-    * slices over the let-bound series (the qe28 idiom).
+    * slices over the [[let]]-bound series.
     */
   def acf(
       df: DataFrame, keyCol: String, tsCol: String, tieCol: String,
       valCol: String, maxLag: Int): DataFrame = {
     require(maxLag >= 1 && maxLag <= 10, s"maxLag must be in [1,10], got $maxLag")
-    val withSums = df
-      .filter(col(valCol).isNotNull)
-      .groupBy(col(keyCol))
-      .agg(sort_array(collect_list(struct(
-        col(tsCol), col(tieCol),
-        floor(col(valCol).cast("double") * lit(100.0)).cast("long")
-          .as("__q")))).as("__s"))
+    val withSums = series(df, keyCol, tsCol, tieCol, fixed(col(valCol), 100.0),
+        dropNulls = true)
       .select(
         col(keyCol),
-        element_at(transform(array(transform(col("__s"), x => x("__q"))), q => {
+        let(transform(col("__s"), x => x("__v"))) { q =>
           val n = size(q)
           val len = (k: Int) => greatest(lit(0), n - k)
           val lagSums = (1 to maxLag).map { k =>
@@ -983,7 +1000,7 @@ object Temporal {
               aggregate(q, lit(0L), (acc, x) => acc + x).as("sx") +:
               aggregate(q, lit(0L), (acc, x) => acc + x * x).as("sxx") +:
               lagSums): _*)
-        }), 1).as("__a"))
+        }.as("__a"))
     val n = col("__a.n")
     val xbar = col("__a.sx").cast("double") / n.cast("double")
     val denom = col("__a.sxx").cast("double") -
@@ -1023,17 +1040,7 @@ object Temporal {
   def kaplanMeier(
       df: DataFrame, subjectCol: String, tsCol: String,
       death: Column): DataFrame = {
-    val dayUs = 86400000000L
-    val subj = df
-      .groupBy(col(subjectCol))
-      .agg(
-        min(unix_micros(col(tsCol))).as("__t0"),
-        min(when(death, unix_micros(col(tsCol)))).as("__td"),
-        max(unix_micros(col(tsCol))).as("__tmax"))
-      .select(
-        expr(s"(coalesce(__td, __tmax) - __t0) div $dayUs").as("__dur"),
-        col("__td").isNotNull.cast("long").as("__evt"))
-    val days = subj
+    val days = lifetimes(df, subjectCol, tsCol, death)
       .groupBy(col("__dur"))
       .agg(count(lit(1)).as("__n"), sum(col("__evt")).as("__d"))
       .agg(sort_array(collect_list(struct(
@@ -1083,17 +1090,11 @@ object Temporal {
   def changepoint(
       df: DataFrame, keyCol: String, tsCol: String, tieCol: String,
       valCol: String): DataFrame = {
-    df
-      .filter(col(valCol).isNotNull)
-      .groupBy(col(keyCol))
-      .agg(sort_array(collect_list(struct(
-        col(tsCol), col(tieCol),
-        floor(col(valCol).cast("double") * lit(100.0)).cast("long")
-          .as("__q")))).as("__s"))
+    series(df, keyCol, tsCol, tieCol, fixed(col(valCol), 100.0), dropNulls = true)
       .filter(size(col("__s")) >= 2)
       .select(
         col(keyCol),
-        element_at(transform(array(transform(col("__s"), x => x("__q"))), q => {
+        let(transform(col("__s"), x => x("__v"))) { q =>
           val n = size(q).cast("long")
           val t = aggregate(q, lit(0L), (a, x) => a + x)
           // best = max over k in [1, n) of (D_k, -k, k, P_k)
@@ -1108,7 +1109,7 @@ object Temporal {
             e => e("k") < n))
           struct(n.as("n"), t.as("t"), best("d").as("d"),
             best("k").as("k"), best("p").as("p"))
-        }), 1).as("__cp"))
+        }.as("__cp"))
       .select(
         col(keyCol),
         col("__cp.n").as("n_events"),
@@ -1144,18 +1145,8 @@ object Temporal {
   def logRank(
       df: DataFrame, subjectCol: String, tsCol: String,
       death: Column, arm: Column): DataFrame = {
-    val dayUs = 86400000000L
-    val subj = df
-      .groupBy(col(subjectCol))
-      .agg(
-        min(unix_micros(col(tsCol))).as("__t0"),
-        min(when(death, unix_micros(col(tsCol)))).as("__td"),
-        max(unix_micros(col(tsCol))).as("__tmax"),
-        max(when(arm, 1L).otherwise(0L)).as("__g"))
-      .select(
-        expr(s"(coalesce(__td, __tmax) - __t0) div $dayUs").as("__dur"),
-        col("__td").isNotNull.cast("long").as("__evt"), col("__g"))
-    val packed = subj
+    val packed = lifetimes(df, subjectCol, tsCol, death,
+        "__g" -> max(when(arm, 1L).otherwise(0L)))
       .groupBy(col("__dur"))
       .agg(
         sum(col("__g")).as("n1c"),
@@ -1231,10 +1222,9 @@ object Temporal {
       df: DataFrame, keyCol: String, tsCol: String, tieCol: String,
       valCol: String): DataFrame = {
     val w = Window.partitionBy(col(keyCol)).orderBy(col(tsCol), col(tieCol))
-    val q = floor(col(valCol).cast("double") * lit(100.0)).cast("long")
     val base = df
       .filter(col(valCol).isNotNull)
-      .select(col(keyCol), col(tsCol), col(tieCol), q.as("__q"))
+      .select(col(keyCol), col(tsCol), col(tieCol), fixed(col(valCol), 100.0).as("__q"))
       .withColumn("__rn", row_number().over(w))
       .withColumn("__n", count(lit(1)).over(Window.partitionBy(col(keyCol))))
       .withColumn("__ma8",
@@ -1378,26 +1368,20 @@ object Temporal {
       df: DataFrame, keyCol: String, tsCol: String, tieCol: String,
       valCol: String, maxEvents: Int = 4096): DataFrame = {
     require(maxEvents >= 2, s"maxEvents must be >= 2, got $maxEvents")
-    df
-      .filter(col(valCol).isNotNull)
-      .groupBy(col(keyCol))
-      .agg(sort_array(collect_list(struct(
-        unix_micros(col(tsCol)).as("__t"), col(tieCol).as("__i"),
-        floor(col(valCol).cast("double") * lit(100.0)).cast("long")
-          .as("__q")))).as("__s"))
+    series(df, keyCol, tsCol, tieCol, fixed(col(valCol), 100.0), dropNulls = true)
       .filter(size(col("__s")) >= 2)
       .select(
         col(keyCol),
         size(col("__s")).cast("long").as("__ne"),
-        when(size(col("__s")) <= maxEvents,
-          element_at(transform(array(col("__s")), s => {
+        when(size(col("__s")) <= maxEvents, let(col("__s")) { s =>
           val n = size(s).cast("long")
+          val us = (e: Column) => unix_micros(e("__t"))
           // pairwise slopes, earlier-element × current, equal-t skipped
           val slopes = sort_array(flatten(transform(s, (x, i) =>
             transform(
               filter(slice(s, lit(1), i), y => y("__t") =!= x("__t")),
-              y => ((x("__q") - y("__q")) * lit(36000000L)).cast("double")
-                / (x("__t") - y("__t")).cast("double")))))
+              y => ((x("__v") - y("__v")) * lit(36000000L)).cast("double")
+                / (us(x) - us(y)).cast("double")))))
           val m = size(slopes).cast("long")
           val slope = when(m > 0L,
             when(m % 2L === 1L,
@@ -1406,7 +1390,7 @@ object Temporal {
                 (element_at(slopes, (m / 2L).cast("int"))
                   + element_at(slopes, (m / 2L + 1L).cast("int")))
                   / lit(2.0)))
-          val qs = sort_array(transform(s, x => x("__q")))
+          val qs = sort_array(transform(s, x => x("__v")))
           val vmed = when(n % 2L === 1L,
             element_at(qs, ((n + 1L) / 2L).cast("int")).cast("double"))
             .otherwise(
@@ -1414,7 +1398,7 @@ object Temporal {
                 + element_at(qs, (n / 2L + 1L).cast("int"))).cast("double")
                 / lit(2.0))
           struct(n.as("n"), m.as("m"), slope.as("slope"), vmed.as("vmed"))
-        }), 1)).as("__ts2"))
+        }).as("__ts2"))
       .select(
         col(keyCol),
         col("__ne").as("n_events"),
@@ -1444,12 +1428,11 @@ object Temporal {
     df
       .filter(col(valCol).isNotNull)
       .groupBy(col(keyCol))
-      .agg(sort_array(collect_list(
-        floor(col(valCol).cast("double") * lit(100.0)).cast("long"))).as("__q"))
+      .agg(sort_array(collect_list(fixed(col(valCol), 100.0))).as("__q"))
       .select(
         col(keyCol),
         size(col("__q")).cast("long").as("n_events"),
-        element_at(transform(array(col("__q")), q => {
+        let(col("__q")) { q =>
           val n = size(q).cast("long")
           def med2(a: Column, m: Column) = when(m % 2L === 1L,
             element_at(a, ((m + 1L) / 2L).cast("int")) * 2L)
@@ -1460,7 +1443,7 @@ object Temporal {
           val dm2 = med2(devs, n)
           val outs = size(filter(devs, d => d * 2L > dm2 * 3L)).cast("long")
           struct(m2.as("m2"), dm2.as("dm2"), outs.as("outs"))
-        }), 1).as("__s"))
+        }.as("__s"))
       .select(
         col(keyCol), col("n_events"),
         round(col("__s.m2").cast("double") / lit(200.0), 6).as("value_median"),
@@ -1490,10 +1473,9 @@ object Temporal {
       df: DataFrame, keyCol: String, tsCol: String, valCol: String): DataFrame = {
     // integer floor-division (Column./ is DOUBLE division in Spark)
     val t = expr(s"unix_micros($tsCol) div 3600000000L") - lit(438288L) // hours since 2020-01-01T00Z
-    val q = floor(col(valCol).cast("double") * lit(100.0)).cast("long")
     val agg = df
       .filter(col(valCol).isNotNull)
-      .select(col(keyCol), t.as("__t"), q.as("__q"))
+      .select(col(keyCol), t.as("__t"), fixed(col(valCol), 100.0).as("__q"))
       .groupBy(col(keyCol))
       .agg(
         count(lit(1)).as("__n"),
@@ -1538,7 +1520,7 @@ object Temporal {
       df: DataFrame, keyCol: String, tsCol: String, tieCol: String,
       valCol: String, window: Int = 5, k: Double = 2.0): DataFrame = {
     require(window >= 2, s"window must be >= 2, got $window")
-    val q = floor(col(valCol).cast("double") * lit(100.0)).cast("long")
+    val q = fixed(col(valCol), 100.0)
     val w = Window.partitionBy(col(keyCol))
       .orderBy(col(tsCol), col("__tie"))
       .rowsBetween(-(window - 1), Window.currentRow)
@@ -1590,21 +1572,22 @@ object Temporal {
       df: DataFrame, userCol: String, tsCol: String, valCol: String,
       buckets: Int = 5): DataFrame = {
     require(buckets >= 2, s"buckets must be >= 2, got $buckets")
-    val perUser = df
-      .groupBy(col(userCol))
-      .agg(
-        max(unix_micros(col(tsCol))).as("__last"),
-        count(lit(1)).as("n_events"),
-        sum(floor(coalesce(col(valCol), lit(0.0)).cast("double") * lit(100.0))
-          .cast("long")).as("__cents"))
-    val maxUs = perUser.agg(max(col("__last"))).head().getLong(0)
+    // checkpointed once (read by 3·(buckets−1) threshold selections +
+    // the scoring pass); the corpus max rides the checkpoint's own job
+    val (perUser, obs) = Iterate.checkpointObserved(
+      df.groupBy(col(userCol))
+        .agg(
+          max(unix_micros(col(tsCol))).as("__last"),
+          count(lit(1)).as("n_events"),
+          sum(fixed(coalesce(col(valCol), lit(0.0)), 100.0)).as("__cents")),
+      max(col("__last")).as("__max_last"))
+    val maxUs = obs("__max_last").asInstanceOf[Long]
     val metrics = perUser.select(
       col(userCol),
       // integer floor-division (Column./ is DOUBLE division in Spark)
       expr(s"(${maxUs}L - __last) div 86400000000L").as("recency_days"),
       col("n_events"),
       col("__cents"))
-      .localCheckpoint(true) // read by 3·(buckets−1) threshold selections + the scoring pass
     // threshold i = the ⌈i·N/buckets⌉-th smallest (1-based), i.e. the
     // 0-based rank ⌈i·N/buckets⌉ − 1; all buckets−1 ranks resolve in
     // ONE ranged pass per metric (kthSmallestManyByRank)
@@ -1652,7 +1635,7 @@ object Temporal {
   def spearman(
       df: DataFrame, keyCol: String, tsCol: String, tieCol: String,
       valCol: String): DataFrame = {
-    val q = floor(col(valCol).cast("double") * lit(100.0)).cast("long")
+    val q = fixed(col(valCol), 100.0)
     val base = df
       .filter(col(valCol).isNotNull)
       .select(col(keyCol), unix_micros(col(tsCol)).as("__tus"),
@@ -1747,7 +1730,7 @@ object Temporal {
   def peakDetect(
       df: DataFrame, keyCol: String, tsCol: String, tieCol: String,
       valCol: String, minDelta: Double = 0.0): DataFrame = {
-    val q = floor(col(valCol).cast("double") * lit(100.0)).cast("long")
+    val q = fixed(col(valCol), 100.0)
     val minQ = math.round(minDelta * 100.0)
     val w = Window.partitionBy(col(keyCol)).orderBy(col(tsCol), col("__tie"))
     df.filter(col(valCol).isNotNull)
@@ -1788,7 +1771,7 @@ object Temporal {
       valCol: String, trainFrac: Double = 0.8): DataFrame = {
     require(trainFrac > 0.0 && trainFrac < 1.0,
       s"trainFrac must be in (0, 1), got $trainFrac")
-    val q = floor(col(valCol).cast("double") * lit(100.0)).cast("long")
+    val q = fixed(col(valCol), 100.0)
     val wOrd = Window.partitionBy(col(keyCol)).orderBy(col(tsCol), col("__tie"))
     val wAll = Window.partitionBy(col(keyCol))
     val base = df
@@ -1841,7 +1824,7 @@ object Temporal {
       df: DataFrame, keyCol: String, tsCol: String, tieCol: String,
       valCol: String, window: Int = 8): DataFrame = {
     require(window >= 3, s"window must be >= 3, got $window")
-    val q = floor(col(valCol).cast("double") * lit(100.0)).cast("long")
+    val q = fixed(col(valCol), 100.0)
     val wLag = Window.partitionBy(col(keyCol)).orderBy(col(tsCol), col("__tie"))
     val wRoll = Window.partitionBy(col(keyCol))
       .orderBy(col(tsCol), col("__tie"))
@@ -1944,6 +1927,14 @@ object Temporal {
         round(dtw(col("l.__vs"), col("r.__vs")), 6).as("dtw"))
   }
 
+  /** Cap on the zero-filled grid's bucket span per key: the grid
+    * explodes keys × span rows, so a fine bucket over a multi-year span
+    * (1-second buckets over a month is 2.6M per key) would blow up the
+    * grid and every lag join after it instead of failing. A million
+    * buckets is over a century of hourly buckets.
+    */
+  private val MaxGridBuckets = 1000000L
+
   /** LAGGED CROSS-CORRELATION between per-key activity series — the
     * lead/lag detector ("clicks follow views by an hour") beside qe44's
     * within-key autocorrelation: bucket counts per (key, bucket) on a
@@ -1962,8 +1953,9 @@ object Temporal {
     *
     * Plan shape: one count aggregate, a 1-row global span broadcast, a
     * per-key sequence explode (rows = keys × span — the grid, bounded
-    * by the bucket span, not the event count), one equi-join on the
-    * shifted bucket, one aggregate per (pair, lag). Lags ride a
+    * by the bucket span, not the event count, and the span by
+    * [[MaxGridBuckets]]), one equi-join on the shifted bucket, one
+    * aggregate per (pair, lag). Lags ride a
     * broadcast explode so the whole family shares one shuffle. Pair
     * volume is Θ(K²·span·lags) BY CONTRACT — K is a CATEGORY count
     * (event types, channels, experiment arms: dozens), never an
@@ -1988,10 +1980,17 @@ object Temporal {
       .groupBy(col("__k"), col("__b"))
       .agg(org.apache.spark.sql.functions.count(lit(1)).as("__n"))
     val span = cnt.agg(min(col("__b")).as("__lo"), max(col("__b")).as("__hi"))
+    // the span check is the sequence bound itself: it fails inside the
+    // grid's own job, so it adds none
+    val hi = when(col("__hi") - col("__lo") < lit(MaxGridBuckets), col("__hi"))
+      .otherwise(raise_error(concat(
+        lit("laggedCrossCorrelation: a span of "),
+        (col("__hi") - col("__lo") + 1L).cast("string"),
+        lit(s" buckets exceeds the grid cap of $MaxGridBuckets buckets " +
+          s"(bucketSeconds = $bucketSeconds)"))))
     val grid = cnt.select(col("__k")).distinct()
       .crossJoin(broadcast(span))
-      .select(col("__k"),
-        explode(sequence(col("__lo"), col("__hi"))).as("__b"))
+      .select(col("__k"), explode(sequence(col("__lo"), hi)).as("__b"))
       .join(cnt, Seq("__k", "__b"), "left")
       .select(col("__k"), col("__b"),
         coalesce(col("__n"), lit(0L)).as("__n"))

@@ -1,9 +1,12 @@
 package graft.operators
 
+import scala.jdk.CollectionConverters._
+
+import com.fasterxml.jackson.databind.JsonNode
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.types.{DataType, StructType}
 
 /** TRANSACTION-LOG TABLE FORMAT — versioned, atomically-committed
   * parquet tables with time travel, the minimal Delta-Lake/Iceberg shape
@@ -103,35 +106,56 @@ object TxLog {
       dvAdd: Seq[String] = Seq.empty,
       dvRemove: Seq[String] = Seq.empty)
 
-  private def readCommit(f: FileSystem, root: Path, v: Long): Commit = {
-    val in = f.open(logPath(root, v))
-    try {
-      val node = mapper.readTree(in)
-      def arr(name: String): Seq[String] = {
-        val a = node.get(name)
-        (0 until a.size()).map(a.get(_).asText())
-      }
-      val statsCol = Option(node.get("statsCol")).filterNot(_.isNull).map(_.asText())
-      val stats = Option(node.get("stats")).filterNot(_.isNull) match {
-        case None => Map.empty[String, (Long, Long)]
-        case Some(s) =>
-          val it = s.properties().iterator()
-          val b = Map.newBuilder[String, (Long, Long)]
-          while (it.hasNext) {
-            val e = it.next()
-            b += e.getKey -> (e.getValue.get(0).asLong(), e.getValue.get(1).asLong())
-          }
-          b.result()
-      }
-      def optArr(name: String): Seq[String] =
-        Option(node.get(name)).filterNot(_.isNull) match {
-          case None => Seq.empty[String]
-          case Some(a) => (0 until a.size()).map(a.get(_).asText())
-        }
+  /** Reads one log file (a commit or a checkpoint) through `read`. */
+  private def readLogFile(f: FileSystem, p: Path)(read: JsonNode => Commit): Commit = {
+    val in = f.open(p)
+    try read(mapper.readTree(in)) finally in.close()
+  }
+
+  /** The field readers commits and checkpoints share: a string array, an
+    * optional field (absent or JSON null → None), and the manifest stats
+    * map `{path: [lo, hi]}`.
+    */
+  private def strings(a: JsonNode): Seq[String] = (0 until a.size()).map(a.get(_).asText())
+
+  private def optField(node: JsonNode, name: String): Option[JsonNode] =
+    Option(node.get(name)).filterNot(_.isNull)
+
+  private def optStrings(node: JsonNode, name: String): Seq[String] =
+    optField(node, name).fold(Seq.empty[String])(strings)
+
+  private def statsOf(node: JsonNode): Map[String, (Long, Long)] =
+    optField(node, "stats").fold(Map.empty[String, (Long, Long)])(_.properties().asScala
+      .map(e => e.getKey -> (e.getValue.get(0).asLong(), e.getValue.get(1).asLong())).toMap)
+
+  private def readCommit(f: FileSystem, root: Path, v: Long): Commit =
+    readLogFile(f, logPath(root, v)) { node =>
       Commit(node.get("version").asLong(), node.get("schemaJson").asText(),
-        arr("add"), arr("remove"), statsCol, stats,
-        optArr("partitionBy"), optArr("dvAdd"), optArr("dvRemove"))
-    } finally in.close()
+        strings(node.get("add")), strings(node.get("remove")),
+        optField(node, "statsCol").map(_.asText()), statsOf(node),
+        optStrings(node, "partitionBy"), optStrings(node, "dvAdd"), optStrings(node, "dvRemove"))
+    }
+
+  private def schemaOf(json: String): StructType =
+    DataType.fromJson(json).asInstanceOf[StructType]
+
+  /** Absolute paths of table-relative `files` under `root`. */
+  private def absPaths(root: Path, files: Seq[String]): Seq[String] =
+    files.map(p => new Path(root, p).toString)
+
+  /** The table at `dir` and the version a call resolves to — `version`,
+    * or the latest when None — with its file system, root and committed
+    * versions. Fails if no table is there or the version was never
+    * committed.
+    */
+  private def resolve(spark: SparkSession, dir: String,
+      version: Option[Long]): (FileSystem, Path, Seq[Long], Long) = {
+    val (f, root) = fs(spark, dir)
+    val vs = versions(spark, dir)
+    require(vs.nonEmpty, s"no table at $dir")
+    val v = version.getOrElse(vs.last)
+    require(vs.contains(v), s"version $v not in ${vs.mkString(",")}")
+    (f, root, vs, v)
   }
 
   /** The one method whose atomicity the whole format rests on: create
@@ -229,7 +253,7 @@ object TxLog {
       case Some(c) =>
         // read the explicit file list (not the dir) so partition-dir
         // discovery can't inject __p_ columns into the stats scan
-        spark.read.parquet(files.map(p => new Path(root, p).toString): _*)
+        spark.read.parquet(absPaths(root, files): _*)
           .groupBy(input_file_name().as("uri"))
           .agg(min(col(c).cast("long")).as("lo"), max(col(c).cast("long")).as("hi"))
           .collect()
@@ -269,11 +293,8 @@ object TxLog {
       .collectFirst { case p if p.nonEmpty => p }.getOrElse(Seq.empty)
 
   /** Append `df` as a new version. Returns the committed version. */
-  def append(spark: SparkSession, dir: String, df: DataFrame): Long = {
-    val vs = versions(spark, dir)
-    require(vs.nonEmpty, s"no table at $dir")
-    appendAt(spark, dir, df, vs.last + 1)
-  }
+  def append(spark: SparkSession, dir: String, df: DataFrame): Long =
+    appendAt(spark, dir, df, resolve(spark, dir, None)._4 + 1)
 
   /** The optimistic-concurrency core append targets: stage, then claim
     * exactly version `v` — if another writer claimed it between the
@@ -318,7 +339,7 @@ object TxLog {
         live = live ++ c.add
         stats = c.stats
         dv = dv ++ c.dvAdd
-        schema = org.apache.spark.sql.types.DataType.fromJson(c.schemaJson).asInstanceOf[StructType]
+        schema = schemaOf(c.schemaJson)
         cv + 1
     }
     (from to upTo).foreach { v =>
@@ -326,7 +347,7 @@ object TxLog {
       live = live -- c.remove ++ c.add
       stats = stats -- c.remove ++ c.stats
       dv = dv -- c.dvRemove ++ c.dvAdd
-      schema = org.apache.spark.sql.types.DataType.fromJson(c.schemaJson).asInstanceOf[StructType]
+      schema = schemaOf(c.schemaJson)
     }
     TableState(live.toSeq.sorted, schema, stats, dv.toSeq.sorted)
   }
@@ -334,33 +355,12 @@ object TxLog {
   private def checkpointPath(root: Path, v: Long): Path =
     new Path(root, f"_log/$v%020d.checkpoint.json")
 
-  private def readCheckpoint(f: FileSystem, root: Path, v: Long): Commit = {
-    val in = f.open(checkpointPath(root, v))
-    try {
-      val node = mapper.readTree(in)
-      val a = node.get("live")
-      val live = (0 until a.size()).map(a.get(_).asText())
-      val statsCol = Option(node.get("statsCol")).filterNot(_.isNull).map(_.asText())
-      val stats = Option(node.get("stats")).filterNot(_.isNull) match {
-        case None => Map.empty[String, (Long, Long)]
-        case Some(s) =>
-          val it = s.properties().iterator()
-          val b = Map.newBuilder[String, (Long, Long)]
-          while (it.hasNext) {
-            val e = it.next()
-            b += e.getKey -> (e.getValue.get(0).asLong(), e.getValue.get(1).asLong())
-          }
-          b.result()
-      }
-      def optArr(name: String): Seq[String] =
-        Option(node.get(name)).filterNot(_.isNull) match {
-          case None => Seq.empty[String]
-          case Some(a2) => (0 until a2.size()).map(a2.get(_).asText())
-        }
-      Commit(v, node.get("schemaJson").asText(), live, Seq.empty, statsCol, stats,
-        optArr("partitionBy"), optArr("dv"))
-    } finally in.close()
-  }
+  private def readCheckpoint(f: FileSystem, root: Path, v: Long): Commit =
+    readLogFile(f, checkpointPath(root, v)) { node =>
+      Commit(v, node.get("schemaJson").asText(), strings(node.get("live")), Seq.empty,
+        optField(node, "statsCol").map(_.asText()), statsOf(node),
+        optStrings(node, "partitionBy"), optStrings(node, "dv"))
+    }
 
   /** LOG CHECKPOINT — collapse the replay prefix 0..`version` into one
     * derived summary file (`_log/<v>.checkpoint.json`: the fully-replayed
@@ -382,11 +382,7 @@ object TxLog {
     * write path. Returns the checkpointed version.
     */
   def checkpoint(spark: SparkSession, dir: String, version: Option[Long] = None): Long = {
-    val (f, root) = fs(spark, dir)
-    val vs = versions(spark, dir)
-    require(vs.nonEmpty, s"no table at $dir")
-    val v = version.getOrElse(vs.last)
-    require(vs.contains(v), s"version $v not in ${vs.mkString(",")}")
+    val (f, root, vs, v) = resolve(spark, dir, version)
     val st = replay(f, root, v)
     val sc = tableStatsCol(f, root, vs.filter(_ <= v))
     val bytes = mapper.writeValueAsBytes(
@@ -426,7 +422,7 @@ object TxLog {
       spark: SparkSession, root: Path, bound: DataFrame, dv: Seq[String]): DataFrame =
     if (dv.isEmpty) bound
     else {
-      val dvDf = spark.read.parquet(dv.map(p => new Path(root, p).toString): _*)
+      val dvDf = spark.read.parquet(absPaths(root, dv): _*)
         .select(col("file").as("__dv_file"), col("pos").as("__dv_pos"))
       bound.join(dvDf,
         col("__file") === col("__dv_file") && col("__pos") === col("__dv_pos"),
@@ -440,14 +436,23 @@ object TxLog {
   private def readLive(
       spark: SparkSession, root: Path, files: Seq[String],
       schema: StructType, dv: Seq[String]): DataFrame =
-    if (files.isEmpty)
-      spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-    else {
-      val raw = spark.read.schema(schema).parquet(files.map(p => new Path(root, p).toString): _*)
-      if (dv.isEmpty) raw
-      else dvMask(spark, root, bindFilePos(root, raw), dv)
-        .select(schema.fieldNames.toIndexedSeq.map(col): _*)
-    }
+    if (files.isEmpty) emptyFrame(spark, schema)
+    else if (dv.isEmpty) spark.read.schema(schema).parquet(absPaths(root, files): _*)
+    else readBound(spark, root, files, schema, dv)
+      .select(schema.fieldNames.toIndexedSeq.map(col): _*)
+
+  /** `files` scanned under `schema`, each row bound to its (__file,
+    * __pos) identity, with the rows `dv` masks removed: the read behind
+    * every DV-aware path and every dirty-file check.
+    */
+  private def readBound(
+      spark: SparkSession, root: Path, files: Seq[String],
+      schema: StructType, dv: Seq[String]): DataFrame =
+    dvMask(spark, root,
+      bindFilePos(root, spark.read.schema(schema).parquet(absPaths(root, files): _*)), dv)
+
+  private def emptyFrame(spark: SparkSession, schema: StructType): DataFrame =
+    spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema)
 
   /** Snapshot read — the table as of `version` (default: latest). The
     * scan lists NOTHING: the file set comes from the log replay, handed
@@ -455,11 +460,7 @@ object TxLog {
     * table still has one), and deletion-vector rows are masked out.
     */
   def snapshot(spark: SparkSession, dir: String, version: Option[Long] = None): DataFrame = {
-    val (f, root) = fs(spark, dir)
-    val vs = versions(spark, dir)
-    require(vs.nonEmpty, s"no table at $dir")
-    val v = version.getOrElse(vs.last)
-    require(vs.contains(v), s"version $v not in ${vs.mkString(",")}")
+    val (f, root, vs, v) = resolve(spark, dir, version)
     val st = replay(f, root, v)
     readLive(spark, root, st.live, st.schema, st.dv)
   }
@@ -479,14 +480,10 @@ object TxLog {
     * version.
     */
   def delete(spark: SparkSession, dir: String, pred: Column): Long = {
-    val (f, root) = fs(spark, dir)
-    val vs = versions(spark, dir)
-    require(vs.nonEmpty, s"no table at $dir")
+    val (f, root, vs, _) = resolve(spark, dir, None)
     val st = replay(f, root, vs.last)
     if (st.live.isEmpty) return vs.last
-    val bound = bindFilePos(root,
-      spark.read.schema(st.schema).parquet(st.live.map(p => new Path(root, p).toString): _*))
-    val newDv = dvMask(spark, root, bound, st.dv)
+    val newDv = readBound(spark, root, st.live, st.schema, st.dv)
       .filter(pred)
       .select(col("__file").as("file"), col("__pos").as("pos"))
     if (newDv.isEmpty) return vs.last
@@ -510,11 +507,7 @@ object TxLog {
     * the gated commits leave.
     */
   def liveFiles(spark: SparkSession, dir: String, version: Option[Long] = None): Seq[String] = {
-    val (f, root) = fs(spark, dir)
-    val vs = versions(spark, dir)
-    require(vs.nonEmpty, s"no table at $dir")
-    val v = version.getOrElse(vs.last)
-    require(vs.contains(v), s"version $v not in ${vs.mkString(",")}")
+    val (f, root, vs, v) = resolve(spark, dir, version)
     replay(f, root, v).live
   }
 
@@ -524,15 +517,18 @@ object TxLog {
     * delete, rewrite and restore commit positions, not files.
     */
   def deletionVectorRows(spark: SparkSession, dir: String, version: Option[Long] = None): Long = {
-    val (f, root) = fs(spark, dir)
-    val vs = versions(spark, dir)
-    require(vs.nonEmpty, s"no table at $dir")
-    val v = version.getOrElse(vs.last)
-    require(vs.contains(v), s"version $v not in ${vs.mkString(",")}")
+    val (f, root, vs, v) = resolve(spark, dir, version)
     val st = replay(f, root, v)
     if (st.dv.isEmpty) 0L
-    else spark.read.parquet(st.dv.map(p => new Path(root, p).toString): _*).count()
+    else spark.read.parquet(absPaths(root, st.dv): _*).count()
   }
+
+  /** Whether data file `rel` may hold a `statsCol` value in [lo, hi]:
+    * false only when its committed (min, max) is disjoint from the range.
+    * A file committed without stats cannot be proven disjoint.
+    */
+  private def statsMayOverlap(st: TableState, rel: String, lo: Long, hi: Long): Boolean =
+    st.stats.get(rel).forall { case (flo, fhi) => fhi >= lo && flo <= hi }
 
   /** Range scan planned ENTIRELY from the log: keep only live files
     * whose committed [lo, hi] stats can contain `[lo, hi]` of the
@@ -549,18 +545,11 @@ object TxLog {
       lo: Long,
       hi: Long,
       version: Option[Long] = None): DataFrame = {
-    val (f, root) = fs(spark, dir)
-    val vs = versions(spark, dir)
-    require(vs.nonEmpty, s"no table at $dir")
-    val v = version.getOrElse(vs.last)
-    require(vs.contains(v), s"version $v not in ${vs.mkString(",")}")
+    val (f, root, vs, v) = resolve(spark, dir, version)
     val sc = tableStatsCol(f, root, vs.filter(_ <= v)).getOrElse(
       throw new IllegalArgumentException(s"table at $dir has no statsCol — use snapshot().filter"))
     val st = replay(f, root, v)
-    val keep = st.live.filter(p => st.stats.get(p) match {
-      case Some((flo, fhi)) => fhi >= lo && flo <= hi
-      case None => true // stat-less file: cannot prove disjoint, must scan
-    })
+    val keep = st.live.filter(statsMayOverlap(st, _, lo, hi))
     readLive(spark, root, keep, st.schema, st.dv)
       .filter(col(sc).cast("long").between(lo, hi))
   }
@@ -571,14 +560,9 @@ object TxLog {
     * [[snapshotRange]] (qy8) prunes.
     */
   def rangeCandidateFiles(spark: SparkSession, dir: String, lo: Long, hi: Long): Long = {
-    val (f, root) = fs(spark, dir)
-    val vs = versions(spark, dir)
-    require(vs.nonEmpty, s"no table at $dir")
-    val st = replay(f, root, vs.last)
-    st.live.count(p => st.stats.get(p) match {
-      case Some((flo, fhi)) => fhi >= lo && flo <= hi
-      case None => true
-    }).toLong
+    val (f, root, _, v) = resolve(spark, dir, None)
+    val st = replay(f, root, v)
+    st.live.count(statsMayOverlap(st, _, lo, hi)).toLong
   }
 
   /** Null and empty partition values both land in this writer sentinel
@@ -616,6 +600,18 @@ object TxLog {
         seg.substring(PartPrefix.length, eq) -> unescapePath(seg.substring(eq + 1))
       }.toMap
 
+  /** Whether data file `rel` may hold rows `partFilter` allows: false
+    * only when its path-encoded value of a filtered column is outside the
+    * allowed set. A file with no segment for the column, or in the
+    * null/empty sentinel dir, cannot be proven disjoint and may match.
+    */
+  private def partitionMayMatch(rel: String, partFilter: Map[String, Seq[String]]): Boolean = {
+    val vals = partValuesOf(rel)
+    partFilter.forall { case (c, allowed) =>
+      vals.get(c).forall(pv => pv == DefaultPartDir || allowed.contains(pv))
+    }
+  }
+
   /** Partition-pruned snapshot: keep only live files whose path-encoded
     * partition value is in `partFilter`'s allowed set for every filtered
     * column, then apply the exact residual `IN` filter — so output ≡
@@ -633,26 +629,13 @@ object TxLog {
       partFilter: Map[String, Seq[String]],
       version: Option[Long] = None): DataFrame = {
     require(partFilter.nonEmpty, "empty partition filter — use snapshot()")
-    val (f, root) = fs(spark, dir)
-    val vs = versions(spark, dir)
-    require(vs.nonEmpty, s"no table at $dir")
-    val v = version.getOrElse(vs.last)
-    require(vs.contains(v), s"version $v not in ${vs.mkString(",")}")
+    val (f, root, vs, v) = resolve(spark, dir, version)
     val pb = tablePartitionBy(f, root, vs.filter(_ <= v))
     require(pb.nonEmpty, s"table at $dir is not partitioned — use snapshot().filter")
     partFilter.keys.foreach(c => require(pb.contains(c),
       s"$c is not a partition column (table partitionBy: ${pb.mkString(",")})"))
     val st = replay(f, root, v)
-    val keep = st.live.filter { p =>
-      val vals = partValuesOf(p)
-      partFilter.forall { case (c, allowed) =>
-        vals.get(c) match {
-          case None => true // no partition segment: cannot prove disjoint
-          case Some(DefaultPartDir) => true // null/empty sentinel: unknown
-          case Some(pv) => allowed.contains(pv)
-        }
-      }
-    }
+    val keep = st.live.filter(partitionMayMatch(_, partFilter))
     val base = readLive(spark, root, keep, st.schema, st.dv)
     partFilter.foldLeft(base) { case (d, (c, allowed)) =>
       d.filter(col(c).cast("string").isin(allowed: _*))
@@ -678,11 +661,7 @@ object TxLog {
       hi: Long,
       version: Option[Long] = None): DataFrame = {
     require(partFilter.nonEmpty, "empty partition filter — use snapshotRange()")
-    val (f, root) = fs(spark, dir)
-    val vs = versions(spark, dir)
-    require(vs.nonEmpty, s"no table at $dir")
-    val v = version.getOrElse(vs.last)
-    require(vs.contains(v), s"version $v not in ${vs.mkString(",")}")
+    val (f, root, vs, v) = resolve(spark, dir, version)
     val pb = tablePartitionBy(f, root, vs.filter(_ <= v))
     require(pb.nonEmpty, s"table at $dir is not partitioned — use snapshotRange")
     partFilter.keys.foreach(c => require(pb.contains(c),
@@ -690,21 +669,8 @@ object TxLog {
     val sc = tableStatsCol(f, root, vs.filter(_ <= v)).getOrElse(
       throw new IllegalArgumentException(s"table at $dir has no statsCol — use snapshotWhere"))
     val st = replay(f, root, v)
-    val keep = st.live.filter { p =>
-      val vals = partValuesOf(p)
-      val partOk = partFilter.forall { case (c, allowed) =>
-        vals.get(c) match {
-          case None => true
-          case Some(DefaultPartDir) => true
-          case Some(pv) => allowed.contains(pv)
-        }
-      }
-      val statsOk = st.stats.get(p) match {
-        case Some((flo, fhi)) => fhi >= lo && flo <= hi
-        case None => true
-      }
-      partOk && statsOk
-    }
+    val keep = st.live.filter(p =>
+      partitionMayMatch(p, partFilter) && statsMayOverlap(st, p, lo, hi))
     val base = readLive(spark, root, keep, st.schema, st.dv)
       .filter(col(sc).cast("long").between(lo, hi))
     partFilter.foldLeft(base) { case (d, (c, allowed)) =>
@@ -719,20 +685,9 @@ object TxLog {
     */
   def partitionCandidateFiles(
       spark: SparkSession, dir: String, partFilter: Map[String, Seq[String]]): Long = {
-    val (f, root) = fs(spark, dir)
-    val vs = versions(spark, dir)
-    require(vs.nonEmpty, s"no table at $dir")
-    val st = replay(f, root, vs.last)
-    st.live.count { p =>
-      val vals = partValuesOf(p)
-      partFilter.forall { case (c, allowed) =>
-        vals.get(c) match {
-          case None => true
-          case Some(DefaultPartDir) => true
-          case Some(pv) => allowed.contains(pv)
-        }
-      }
-    }.toLong
+    val (f, root, _, v) = resolve(spark, dir, None)
+    val st = replay(f, root, v)
+    st.live.count(partitionMayMatch(_, partFilter)).toLong
   }
 
   /** Rewrite: keep only rows satisfying `keep`, touching ONLY the files
@@ -744,25 +699,19 @@ object TxLog {
     * dirty files. No dirty files → no commit (returns current version).
     */
   def rewrite(spark: SparkSession, dir: String, keep: Column): Long = {
-    val (f, root) = fs(spark, dir)
-    val vs = versions(spark, dir)
-    require(vs.nonEmpty, s"no table at $dir")
+    val (f, root, vs, _) = resolve(spark, dir, None)
     val st = replay(f, root, vs.last)
     if (st.live.isEmpty) return vs.last
     // dirty detection and survivors both read through the DV mask: a
     // row already deleted by a DV neither dirties its file nor survives
-    val cur = dvMask(spark, root, bindFilePos(root,
-      spark.read.schema(st.schema)
-        .parquet(st.live.map(p => new Path(root, p).toString): _*)), st.dv)
+    val cur = readBound(spark, root, st.live, st.schema, st.dv)
     val dirtyRel = cur.filter(!keep)
       .select(col("__file")).distinct()
       .collect().map(_.getString(0))
       .toSeq.sorted
     if (dirtyRel.isEmpty) return vs.last
     val v = vs.last + 1
-    val dirtyAbs = dirtyRel.map(p => new Path(root, p).toString)
-    val rewritten = dvMask(spark, root, bindFilePos(root,
-      spark.read.schema(st.schema).parquet(dirtyAbs: _*)), st.dv)
+    val rewritten = readBound(spark, root, dirtyRel, st.schema, st.dv)
       .filter(keep)
       .select(st.schema.fieldNames.toIndexedSeq.map(col): _*)
     val sc = tableStatsCol(f, root, vs)
@@ -799,9 +748,7 @@ object TxLog {
     require(numFiles > 0, s"numFiles must be positive, got $numFiles")
     require(clusterBy.isEmpty || clusterBy.size == 2,
       s"clusterBy takes exactly 2 key columns (Hilbert), got ${clusterBy.size}")
-    val (f, root) = fs(spark, dir)
-    val vs = versions(spark, dir)
-    require(vs.nonEmpty, s"no table at $dir")
+    val (f, root, vs, _) = resolve(spark, dir, None)
     val st = replay(f, root, vs.last)
     if (st.live.isEmpty) return vs.last
     // the compaction rewrite FOLDS deletion vectors: it reads the masked
@@ -862,10 +809,7 @@ object TxLog {
     * history to keep. Restoring to the current state is a no-op.
     */
   def restore(spark: SparkSession, dir: String, version: Long): Long = {
-    val (f, root) = fs(spark, dir)
-    val vs = versions(spark, dir)
-    require(vs.nonEmpty, s"no table at $dir")
-    require(vs.contains(version), s"version $version not in ${vs.mkString(",")}")
+    val (f, root, vs, _) = resolve(spark, dir, Some(version))
     val old = replay(f, root, version)
     val cur = replay(f, root, vs.last)
     if (old.live == cur.live && old.dv == cur.dv) return vs.last
@@ -906,9 +850,7 @@ object TxLog {
       spark: SparkSession, dir: String, source: DataFrame,
       keyCols: Seq[String]): Long = {
     require(keyCols.nonEmpty, "merge needs at least one key column")
-    val (f, root) = fs(spark, dir)
-    val vs = versions(spark, dir)
-    require(vs.nonEmpty, s"no table at $dir")
+    val (f, root, vs, _) = resolve(spark, dir, None)
     val st = replay(f, root, vs.last)
     val (live, schema) = (st.live, st.schema)
     val tableCols = schema.fieldNames.toSeq
@@ -932,9 +874,7 @@ object TxLog {
     // file identity must bind to the scan BEFORE any join (metadata
     // columns don't survive joins); the DV mask then hides rows already
     // deleted so they neither dirty their file nor survive the rewrite
-    val cur = dvMask(spark, root, bindFilePos(root,
-      spark.read.schema(schema)
-        .parquet(live.map(p => new Path(root, p).toString): _*)), st.dv)
+    val cur = readBound(spark, root, live, schema, st.dv)
     val srcKeys = src.select(keyCols.map(col): _*).distinct()
     val dirtyRel = cur
       .join(srcKeys, keyCols, "left_semi")
@@ -942,14 +882,10 @@ object TxLog {
       .collect().map(_.getString(0))
       .toSeq.sorted
     val survivors =
-      if (dirtyRel.isEmpty)
-        spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-      else
-        dvMask(spark, root, bindFilePos(root,
-          spark.read.schema(schema)
-            .parquet(dirtyRel.map(p => new Path(root, p).toString): _*)), st.dv)
-          .join(srcKeys, keyCols, "left_anti")
-          .select(tableCols.map(col): _*)
+      if (dirtyRel.isEmpty) emptyFrame(spark, schema)
+      else readBound(spark, root, dirtyRel, schema, st.dv)
+        .join(srcKeys, keyCols, "left_anti")
+        .select(tableCols.map(col): _*)
     val (files, stats) = stage(spark, root, survivors.unionByName(src), v, sc, pb)
     commitFile(f, root, Commit(v, schema.json, files, dirtyRel, sc, stats, pb))
     v
@@ -982,16 +918,13 @@ object TxLog {
   def changes(
       spark: SparkSession, dir: String,
       fromVersion: Long, toVersion: Long): DataFrame = {
-    val (f, root) = fs(spark, dir)
-    val vs = versions(spark, dir)
-    require(vs.nonEmpty, s"no table at $dir")
+    val (f, root, vs, _) = resolve(spark, dir, None)
     require(fromVersion >= 0 && fromVersion <= toVersion,
       s"bad range ($fromVersion, $toVersion]")
     require(vs.contains(toVersion), s"version $toVersion not in ${vs.mkString(",")}")
     val perVersion = ((fromVersion + 1) to toVersion).map { v =>
       val c = readCommit(f, root, v)
-      val schema = org.apache.spark.sql.types.DataType.fromJson(c.schemaJson)
-        .asInstanceOf[StructType]
+      val schema = schemaOf(c.schemaJson)
       // DVs live BEFORE this commit: a row they mask was already
       // logically deleted, so a rewrite re-staging its file must not
       // re-report it as a delete here. The ADD side reads under the DVs
@@ -1021,14 +954,14 @@ object TxLog {
           fileDeletes.limit(0)
         else {
           val addSet = c.add.toSet
-          val dvDf = spark.read.parquet(c.dvAdd.map(p => new Path(root, p).toString): _*)
+          val dvDf = spark.read.parquet(absPaths(root, c.dvAdd): _*)
             .select(col("file").as("__dv_file"), col("pos").as("__dv_pos"))
           val touched = dvDf.select(col("__dv_file")).distinct()
             .collect().map(_.getString(0)).toSeq.sorted
             .filterNot(addSet)
           if (touched.isEmpty) fileDeletes.limit(0)
           else bindFilePos(root,
-            spark.read.schema(schema).parquet(touched.map(p => new Path(root, p).toString): _*))
+            spark.read.schema(schema).parquet(absPaths(root, touched): _*))
             .join(dvDf,
               col("__file") === col("__dv_file") && col("__pos") === col("__dv_pos"),
               "left_semi")

@@ -95,6 +95,15 @@ class TemporalSpec extends AnyFunSuite {
     val nanOut = Temporal.ewma(withNan, "user_id", "ts", "event_id", "value", 0.25)
       .as[(Long, Long, Double)].collect().head
     assert(nanOut._2 == 3L && nanOut._3.isNaN)
+    // a null VALUE is kept, not dropped: it still counts in n_events,
+    // and the fold's arithmetic carries the null through to the result
+    val withNull = Seq(
+      (5L, ts(1), 1L, Option(10.0)), (5L, ts(2), 2L, Option.empty[Double]),
+      (5L, ts(3), 3L, Option(50.0))
+    ).toDF("user_id", "ts", "event_id", "value")
+    val nullOut = Temporal.ewma(withNull, "user_id", "ts", "event_id", "value", 0.25)
+      .collect().head
+    assert(nullOut.getLong(1) == 3L && nullOut.isNullAt(2))
   }
 
   test("funnel: strictly-after chaining, stalls propagate, same-instant never counts") {
@@ -1092,6 +1101,22 @@ class TemporalSpec extends AnyFunSuite {
     assert(got(("B", "C", 1L))._2 == null)
     // every (pair, lag) emitted: 3 pairs x 3 lags
     assert(got.size == 9)
+  }
+
+  test("laggedCrossCorrelation: a bucket span over the grid cap fails inside " +
+    "the plan and names the span, the cap and the bucket width") {
+    import spark.implicits._
+    // two events 2,000,000 s apart at 1-second buckets: a 2,000,001-row
+    // grid for one key
+    val df = Seq(("A", 0L), ("A", 2000000L)).toDF("k", "sec")
+      .select(col("k"), timestamp_seconds(col("sec")).as("ts"))
+    val e = intercept[Exception](
+      Temporal.laggedCrossCorrelation(df, "k", "ts", 1L, maxLag = 1))
+    val msgs = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .map(_.getMessage).mkString("\n")
+    assert(msgs.contains("span of 2000001 buckets"), msgs)
+    assert(msgs.contains("cap of 1000000"), msgs)
+    assert(msgs.contains("bucketSeconds = 1"), msgs)
   }
 
 }

@@ -43,6 +43,32 @@ class TxLogSpec extends AnyFunSuite with TempDirs {
     intercept[IllegalArgumentException](TxLog.snapshot(spark, dir, Some(9L)))
   }
 
+  test("a missing table and an unknown version fail with the same messages everywhere") {
+    val dir = tmp()
+    def msg(f: => Any): String =
+      intercept[IllegalArgumentException](f).getMessage.stripPrefix("requirement failed: ")
+    val t = Seq((1L, "a")).toDF("id", "s")
+    val noTable = s"no table at $dir"
+    assert(msg(TxLog.snapshot(spark, dir)) == noTable)
+    assert(msg(TxLog.append(spark, dir, t)) == noTable)
+    assert(msg(TxLog.checkpoint(spark, dir)) == noTable)
+    assert(msg(TxLog.liveFiles(spark, dir)) == noTable)
+    assert(msg(TxLog.rewrite(spark, dir, lit(true))) == noTable)
+    assert(msg(TxLog.restore(spark, dir, 0L)) == noTable)
+    assert(msg(TxLog.changes(spark, dir, 0L, 1L)) == noTable)
+    TxLog.create(spark, dir, t)
+    TxLog.append(spark, dir, t)
+    val noVersion = "version 7 not in 0,1"
+    assert(msg(TxLog.snapshot(spark, dir, Some(7L))) == noVersion)
+    assert(msg(TxLog.checkpoint(spark, dir, Some(7L))) == noVersion)
+    assert(msg(TxLog.liveFiles(spark, dir, Some(7L))) == noVersion)
+    assert(msg(TxLog.deletionVectorRows(spark, dir, Some(7L))) == noVersion)
+    assert(msg(TxLog.snapshotRange(spark, dir, 0L, 1L, Some(7L))) == noVersion)
+    assert(msg(TxLog.snapshotWhere(spark, dir, Map("s" -> Seq("a")), Some(7L))) == noVersion)
+    assert(msg(TxLog.restore(spark, dir, 7L)) == noVersion)
+    assert(msg(TxLog.changes(spark, dir, 0L, 7L)) == noVersion)
+  }
+
   test("a table rooted under a path containing /data/c keeps correct file identity") {
     // regression: file identity was anchored on the FIRST "/data/c"
     // substring in the URI, so a root like .../data/cache/tbl recorded

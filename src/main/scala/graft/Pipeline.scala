@@ -9,10 +9,12 @@ import scala.jdk.CollectionConverters._
 
 /** §3.1 — the reference's five-stage indicator pipeline (`indicators.sh`)
   * as ONE runnable program over an OSM road network + OD points: graph
-  * build → criticality indicator → EAUL sweep → indicator merge → CSV +
-  * GeoJSON egress. The reference exchanged every arrow through `.tmp`
-  * files and S3 between separate node processes; here each stage is a
-  * DataFrame handed to the next.
+  * build → criticality indicator → EAUL sweep → indicator merge → egress
+  * of one indicator CSV (`<outDir>/indicators`: each way's NAME, RUC and
+  * criticality score) and one EAUL JSON file (`<outDir>/eaul`). The
+  * reference exchanged every arrow through `.tmp` files and S3 between
+  * separate node processes; here each stage is a DataFrame handed to the
+  * next.
   *
   * Spark work is spent only where the routing is. The OSM input is parsed
   * in one job into driver-local frames, which feed both the graph build
@@ -46,7 +48,7 @@ object Pipeline {
       Map.empty.withDefaultValue(Map.empty),
       Map.empty.withDefaultValue(Map.empty))
     val yearly = Array.fill(od.length, od.length)(100.0 * 365)
-    val eaul = Eaul.sweepRows(spark, g, stats, od, yearly, Set.empty)
+    val eaul = Eaul.sweep(spark, g, stats, od, yearly, Set.empty)
 
     // stage 5: merge onto the road network + egress
     val rn = waysDf.select(

@@ -5288,7 +5288,7 @@ object SparkEntry {
           round(sum(col("l_extendedprice")), 2).as("sum_price"))
     }
 
-  /** S13 polygons-with-holes — [[sources.VectorTile.writePolygonTiles]]
+  /** S13 polygons-with-holes — [[sources.VectorTile.writeTiles]]
     * under the oracle gate: per nation, a donut (exterior square + hole)
     * whose TARGET pixels are integers; lon/lat come from the inverse web-
     * mercator, so the sink's forward projection rounds back to exactly
@@ -5317,8 +5317,8 @@ object SparkEntry {
           Seq(invLon(x0 + s), invLat(y0 + s)), Seq(invLon(x0), invLat(y0 + s)))
         (k, Seq(ring(ex, ey, w), ring(ex + 48, ey + 48, w - 96)), "donut")
       }
-      sources.VectorTile.writePolygonTiles(
-        rows.toDF("id", "rings", "name"), "id", "rings", Seq("name"), zoom = 0, dir = tmp)
+      sources.VectorTile.writeTiles(
+        rows.toDF("id", "rings", "name"), "id", geomType = 3, "rings", Seq("name"), zoom = 0, dir = tmp)
       val bytes = java.nio.file.Files.readAllBytes(
         java.nio.file.Paths.get(tmp, "0", "0", "0.mvt"))
       sources.VectorTile
@@ -5388,12 +5388,15 @@ object SparkEntry {
     * exercises the global unroutable-pair exclusion and per-period repair
     * times through the SQL oracle, which qg3 structurally cannot.
     */
-  private def qg6GoldenEaul(spark: SparkSession, dir: String): DataFrame =
+  private def qg6GoldenEaul(spark: SparkSession, dir: String): DataFrame = {
+    import spark.implicits._
     graph.Eaul.sweep(
       spark, graph.GoldenNetwork.graph, graph.GoldenNetwork.floodStats,
       graph.GoldenNetwork.odNodes, graph.GoldenNetwork.yearlyTraffic,
       graph.GoldenNetwork.noTraffic)
+      .toDF()
       .select(col("way_id"), col("upgrade"), round(col("eaul"), 6).as("eaul"))
+  }
 
   /** G8–G10 — EAUL upgrade sweep: (way × upgrade) fan-out with flood
     * scenarios and the trapezoid over return periods. DuckDB-oracled: the
@@ -5405,10 +5408,12 @@ object SparkEntry {
     * to 6 dp (pair sums accumulate in different orders across engines).
     */
   private def qg3Eaul(spark: SparkSession, dir: String): DataFrame = {
+    import spark.implicits._
     val (g, od) = graph.DemoNetwork.grid(6)
     graph.Eaul.sweep(
       spark, g, graph.DemoNetwork.floodStats(g), od,
       graph.DemoNetwork.yearlyTraffic(od.length), Set.empty)
+      .toDF()
       .select(col("way_id"), col("upgrade"), round(col("eaul"), 6).as("eaul"))
   }
 

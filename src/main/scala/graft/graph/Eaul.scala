@@ -1,6 +1,6 @@
 package graft.graph
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.SparkSession
 
 /** G8–G10 + A8–A10 — Expected Annual User Loss (reference
   * `script-eaul/eaul.js`), re-expressed as a Spark fan-out over
@@ -182,22 +182,11 @@ object Eaul {
     * scenarios — each scenario self-contained, zero shuffle. The 3·|ways|
     * upgrade scenarios run in `Routing.sweepSlices` slices (one per core,
     * each a contiguous run of scenarios). The 3·|ways| + 1 result rows are
-    * collected once and returned as a driver-local frame, so every
-    * downstream action reads them without re-running the fan-out.
+    * collected once and returned as driver-local rows (`.toDF()` makes the
+    * frame), so every downstream action reads them without re-running the
+    * fan-out.
     */
   def sweep(
-      spark: SparkSession,
-      g: CsrGraph,
-      stats: FloodStats,
-      odNodes: Array[Int],
-      yearlyTraffic: Array[Array[Double]],
-      noTraffic: Set[(Int, Int)]): DataFrame = {
-    import spark.implicits._
-    sweepRows(spark, g, stats, odNodes, yearlyTraffic, noTraffic).toDF()
-  }
-
-  /** [[sweep]]'s rows, for a caller that also counts them. */
-  def sweepRows(
       spark: SparkSession,
       g: CsrGraph,
       stats: FloodStats,

@@ -178,31 +178,6 @@ object RoadGraph {
     new CsrGraph(numNodes, indptr, nbr, cost, wayOf, ways, nodeLon, nodeLat)
   }
 
-  /** Compile a declarative edges DataFrame — e.g. the output of
-    * `ScenarioWeights.applyOverrides` — into the broadcastable CSR kernel
-    * form. Columns: (way_id string, src int, dst int, weight double);
-    * +∞ weights (removed ways) are dropped at compile time so Dijkstra
-    * never visits them.
-    * No gate or program calls it yet: it is the upgrade-scenario route into
-    * routing (paper stage 4) that `Pipeline` does not wire.
-    */
-  def fromEdges(edgesDf: DataFrame): CsrGraph = {
-    val rows = edgesDf
-      .filter(col("weight") =!= Double.PositiveInfinity)
-      .select("way_id", "src", "dst", "weight")
-      .collect()
-    val wayIds = rows.map(_.getAs[String]("way_id")).distinct.sorted
-    val wayIdx = wayIds.zipWithIndex.toMap
-    val ways = wayIds.zipWithIndex.map { case (id, i) =>
-      Way(i, i.toLong, id, 1.0, 0.0, "unpaved", "secondary")
-    }
-    val numNodes = rows.flatMap(r => Seq(r.getAs[Int]("src"), r.getAs[Int]("dst"))).max + 1
-    val edges = rows.map { r =>
-      (r.getAs[Int]("src"), r.getAs[Int]("dst"), wayIdx(r.getAs[String]("way_id")), r.getAs[Double]("weight"))
-    }.toSeq
-    compile(numNodes, edges, ways, new Array[Double](numNodes), new Array[Double](numNodes))
-  }
-
   /** The reference's actual ingestion path (G2→G1): OSM-style nodes/ways
     * DataFrames (as produced by `sources.OsmXml.read`) → CSR graph. Way
     * tags follow the fixture contract: NAME, RUC, length (meters),
@@ -246,31 +221,5 @@ object RoadGraph {
       }.toSeq
     }.toSeq
     compile(nodeRows.length, edges, ways, lon, lat)
-  }
-
-  /** End-to-end: features DataFrame → CSR graph (collects only the road
-    * network itself — small by construction; see class doc).
-    * No gate or program calls it yet: it is the GeoJSON-features network
-    * input of paper stage 1; `Pipeline` reads OSM.
-    */
-  def fromFeatures(spark: SparkSession, features: DataFrame): CsrGraph = {
-    val (nodesDf, edgesDf) = buildTables(features)
-    val nodes = nodesDf.orderBy("node_id").collect()
-    val nodeLon = nodes.map(_.getAs[Seq[Double]]("coord")(0))
-    val nodeLat = nodes.map(_.getAs[Seq[Double]]("coord")(1))
-    val edgeRows = edgesDf.collect()
-    val wayNames = edgeRows.map(r => (r.getAs[String]("way_id"), r.getAs[String]("name"), r.getAs[Double]("ruc"))).distinct
-    val wayIdx = wayNames.zipWithIndex.map { case ((id, _, _), i) => id -> i }.toMap
-    val ways = wayNames.zipWithIndex.map { case ((id, nm, ruc), i) =>
-      Way(i, id.toLongOption.getOrElse(i.toLong), nm, ruc, 0.0, "unpaved", "secondary")
-    }
-    val edges = edgeRows.map { r =>
-      (
-        r.getAs[Int]("src"),
-        r.getAs[Int]("dst"),
-        wayIdx(r.getAs[String]("way_id")),
-        r.getAs[Double]("ruc") * r.getAs[Double]("len_km"))
-    }.toSeq
-    compile(nodeLon.length, edges, ways, nodeLon, nodeLat)
   }
 }

@@ -35,18 +35,4 @@ object ScenarioWeights {
           .otherwise(col("weight") / col("__speed")))
       .drop("__speed")
   }
-
-  /** Speed-profile CSV sink (S5 + G4 interop): `fromNode,toNode,speed`
-    * both directions, the reference's exchange format
-    * (`utils.js:196-220`).
-    * No gate or program calls it yet: it is the reference's speed-profile
-    * export, which `Pipeline` does not wire.
-    */
-  def writeSpeedProfile(edges: DataFrame, overrides: DataFrame, path: String): Unit = {
-    val rows = edges
-      .join(broadcast(overrides), Seq("way_id"))
-      .select(col("src"), col("dst"), col("speed"))
-    val both = rows.union(rows.select(col("dst"), col("src"), col("speed")))
-    both.write.mode("overwrite").option("header", "false").csv(path)
-  }
 }

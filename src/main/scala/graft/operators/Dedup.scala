@@ -448,20 +448,21 @@ object Dedup {
     // one row per DISTINCT set, carrying its sorted member-id list.
     // localCheckpoint (not cache): reused by candidates + verification +
     // expansion, and the blocks are released when the frame is GC'd
-    // instead of pinning executor storage across bench iterations.
-    val groups = docs
-      .select(
-        col(idCol).as("__id"),
-        array_sort(array_distinct(split(lower(trim(col(textCol))), "\\s+"))).as("__ws"))
-      .groupBy("__ws")
-      .agg(sort_array(collect_list(col("__id"))).as("__ids"))
-      .select(
-        element_at(col("__ids"), 1).as("__sid"),
-        col("__ws"), col("__ids"), size(col("__ws")).as("__n"))
-      .localCheckpoint(true)
-    // nmax: a single-row driver aggregate (bounded by contract)
-    val nmaxRow = groups.agg(max(col("__n"))).head()
-    val nmax = if (nmaxRow.isNullAt(0)) 0 else nmaxRow.getInt(0)
+    // instead of pinning executor storage across bench iterations. The
+    // largest set size nmax rides the checkpoint's own job (an int max is
+    // order-free); an empty input observes null, read as 0.
+    val (groups, obs) = Iterate.checkpointObserved(
+      docs
+        .select(
+          col(idCol).as("__id"),
+          array_sort(array_distinct(split(lower(trim(col(textCol))), "\\s+"))).as("__ws"))
+        .groupBy("__ws")
+        .agg(sort_array(collect_list(col("__id"))).as("__ids"))
+        .select(
+          element_at(col("__ids"), 1).as("__sid"),
+          col("__ws"), col("__ids"), size(col("__ws")).as("__n")),
+      max(col("__n")).as("__nmax"))
+    val nmax = Option(obs("__nmax")).fold(0)(_.asInstanceOf[Int])
     val dmax =
       math.floor(2.0 * nmax * (1 - minJaccard) / (1 + minJaccard)).toInt
     val lengthOk =

@@ -527,14 +527,6 @@ object Relational {
       ).drop(renamed("way_id"))
     }
 
-  /** J2 unmatched report (reference `merge-indicators.js:123-126`): indicator
-    * rows whose key has no base row — an anti-join.
-    * No gate or program calls it yet: it is the unmatched report of the
-    * paper's indicator merge (stage 5), which `Pipeline` does not emit.
-    */
-  def unmatchedIndicators(base: DataFrame, baseKey: String, ind: DataFrame, indKey: String): DataFrame =
-    ind.join(base, ind(indKey) === base(baseKey), "left_anti")
-
   /** F24 + J10 — unpivot a wide matrix into long form (reference
     * `process-traffic.js:70-94`): wide OD columns → `(origin, destination,
     * count)` rows, then self-join reverse pairs keeping `origin <

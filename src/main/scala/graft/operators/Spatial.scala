@@ -376,17 +376,7 @@ object Spatial {
     * `ways`: (way_id, coords array<array<double>>);
     * `areas`: (area_id, rings array<array<array<double>>>, value).
     */
-  def indicatorFromAreas(ways: DataFrame, areas: DataFrame): DataFrame =
-    indicatorFromAreasImpl(ways, areas, gridCell = None)
-
-  /** Scale form: identical semantics, but candidate pairs come from the
-    * grid-cell equi-join instead of broadcasting the area side. No gate
-    * runs it; SpatialSpec holds the gated broadcast form equal to it.
-    */
-  def indicatorFromAreasGrid(ways: DataFrame, areas: DataFrame, gridCell: Double): DataFrame =
-    indicatorFromAreasImpl(ways, areas, Some(gridCell))
-
-  private def indicatorFromAreasImpl(ways: DataFrame, areas: DataFrame, gridCell: Option[Double]): DataFrame = {
+  def indicatorFromAreas(ways: DataFrame, areas: DataFrame): DataFrame = {
     val contribUdf = udf {
       (coords: Seq[Seq[Double]], rings: Seq[Seq[Seq[Double]]], value: Double) =>
         val wayLen = GeoFunctions.lineLengthKm(coords)
@@ -403,11 +393,7 @@ object Spatial {
     }
     val waysB = ways.withColumn("__wbox", GeoFunctions.bboxUdf(col("coords")))
     val areasB = areas.withColumn("__abox", GeoFunctions.bboxUdf(flatten(col("rings"))))
-    val candidates = gridCell match {
-      case Some(cell) => bboxJoinGrid(waysB, areasB, col("__wbox"), col("__abox"), cell)
-      case None => bboxJoin(waysB, areasB, col("__wbox"), col("__abox"))
-    }
-    val pairs = candidates
+    val pairs = bboxJoin(waysB, areasB, col("__wbox"), col("__abox"))
       .withColumn("__contrib", contribUdf(col("coords"), col("rings"), col("value")))
       .filter(col("__contrib") > 0.0)
     val summed = pairs

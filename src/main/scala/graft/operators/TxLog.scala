@@ -1,5 +1,6 @@
 package graft.operators
 
+import scala.collection.immutable.ListSet
 import scala.jdk.CollectionConverters._
 
 import com.fasterxml.jackson.databind.JsonNode
@@ -323,33 +324,41 @@ object TxLog {
       stats: Map[String, (Long, Long)],
       dv: Seq[String])
 
-  private[operators] def replay(f: FileSystem, root: Path, upTo: Long): TableState = {
-    // start from the newest checkpoint ≤ upTo: O(commits SINCE it), not
-    // O(all commits) — at 10⁵ commits the log replay is otherwise the
-    // planner bottleneck the log was built to remove
+  /** The replay fold's state: live files, stats and DVs in commit
+    * order, and the latest schema.
+    */
+  private case class Replayed(
+      live: ListSet[String],
+      stats: Map[String, (Long, Long)],
+      dv: ListSet[String],
+      schema: StructType) {
+
+    /** This state with `c` applied: the one step [[replay]] and
+      * [[changes]] fold the log by (a checkpoint applies as a commit that
+      * removes nothing).
+      */
+    def next(c: Commit): Replayed =
+      Replayed(live -- c.remove ++ c.add, stats -- c.remove ++ c.stats,
+        dv -- c.dvRemove ++ c.dvAdd, schemaOf(c.schemaJson))
+
+    def sortedDv: Seq[String] = dv.toSeq.sorted
+  }
+
+  /** The fold to `upTo`, started from the newest checkpoint ≤ `upTo`:
+    * O(commits SINCE it), not O(all commits) — at 10⁵ commits the log
+    * replay is otherwise the planner bottleneck the log was built to
+    * remove.
+    */
+  private def replayed(f: FileSystem, root: Path, upTo: Long): Replayed = {
     val cp = checkpointVersions(f, root).filter(_ <= upTo).lastOption
-    var live = scala.collection.immutable.ListSet.empty[String]
-    var stats = Map.empty[String, (Long, Long)]
-    var dv = scala.collection.immutable.ListSet.empty[String]
-    var schema: StructType = null
-    val from = cp match {
-      case None => 0L
-      case Some(cv) =>
-        val c = readCheckpoint(f, root, cv)
-        live = live ++ c.add
-        stats = c.stats
-        dv = dv ++ c.dvAdd
-        schema = schemaOf(c.schemaJson)
-        cv + 1
-    }
-    (from to upTo).foreach { v =>
-      val c = readCommit(f, root, v)
-      live = live -- c.remove ++ c.add
-      stats = stats -- c.remove ++ c.stats
-      dv = dv -- c.dvRemove ++ c.dvAdd
-      schema = schemaOf(c.schemaJson)
-    }
-    TableState(live.toSeq.sorted, schema, stats, dv.toSeq.sorted)
+    val empty = Replayed(ListSet.empty, Map.empty, ListSet.empty, null)
+    val start = cp.fold(empty)(cv => empty.next(readCheckpoint(f, root, cv)))
+    (cp.fold(0L)(_ + 1) to upTo).foldLeft(start)((st, v) => st.next(readCommit(f, root, v)))
+  }
+
+  private[operators] def replay(f: FileSystem, root: Path, upTo: Long): TableState = {
+    val r = replayed(f, root, upTo)
+    TableState(r.live.toSeq.sorted, r.schema, r.stats, r.sortedDv)
   }
 
   private def checkpointPath(root: Path, v: Long): Path =
@@ -922,6 +931,9 @@ object TxLog {
     require(fromVersion >= 0 && fromVersion <= toVersion,
       s"bad range ($fromVersion, $toVersion]")
     require(vs.contains(toVersion), s"version $toVersion not in ${vs.mkString(",")}")
+    // one replay to fromVersion, then each commit in range folds forward
+    // once: the log is read once, not once per version
+    var state = replayed(f, root, fromVersion)
     val perVersion = ((fromVersion + 1) to toVersion).map { v =>
       val c = readCommit(f, root, v)
       val schema = schemaOf(c.schemaJson)
@@ -931,8 +943,9 @@ object TxLog {
       // live AT this commit — vacuous for fresh files (no DV predates
       // them), load-bearing for a RESTORE whose add-set re-references
       // old files together with their old masks.
-      val dvPrev = replay(f, root, v - 1).dv
-      val dvAt = replay(f, root, v).dv
+      val dvPrev = state.sortedDv
+      state = state.next(c)
+      val dvAt = state.sortedDv
       def readSet(rel: Seq[String], dv: Seq[String]): DataFrame =
         readLive(spark, root, rel, schema, dv)
       val added = readSet(c.add, dvAt)

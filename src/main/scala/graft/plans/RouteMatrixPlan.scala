@@ -29,7 +29,6 @@ import org.apache.spark.sql.types.{BooleanType, DoubleType, IntegerType}
 case class RouteMatrixRelation(
     @transient graph: CsrGraph,
     odNodes: Array[Int],
-    removedWay: Int,
     // constructor-carried so plan-tree copies keep stable exprIds
     output: Seq[Attribute])
     extends LeafNode {
@@ -56,7 +55,6 @@ case class RouteMatrixExec(relation: RouteMatrixRelation) extends LeafExecNode {
     val sc = sparkContext
     val bg = sc.broadcast(relation.graph)
     val odNodes = relation.odNodes
-    val removed = relation.removedWay
     val n = odNodes.length
     val outAttrs = output
     sc.parallelize(0 until n - 1, graft.graph.Routing.sweepSlices(sc, n - 1))
@@ -65,10 +63,7 @@ case class RouteMatrixExec(relation: RouteMatrixRelation) extends LeafExecNode {
         val proj = org.apache.spark.sql.catalyst.expressions.UnsafeProjection.create(outAttrs, outAttrs)
         val row = new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(4)
         sources.flatMap { i =>
-          val factor: Int => Double =
-            if (removed < 0) (_: Int) => 1.0
-            else (w: Int) => if (w == removed) Double.PositiveInfinity else 1.0
-          val distI = g.dijkstra(odNodes(i), factor)
+          val distI = g.dijkstra(odNodes(i))
           // reverse distances for max(ab, ba): one Dijkstra per target j>i
           // would be O(n²) — instead exploit that the stored graph is
           // undirected (both edge directions present), so dist(j,i) =
@@ -102,12 +97,12 @@ object RouteMatrixPlan {
   /** DataFrame over the custom operator; idempotently registers the
     * strategy on the session.
     */
-  def routeMatrix(spark: SparkSession, g: CsrGraph, odNodes: Array[Int], removedWay: Int = -1): DataFrame = {
+  def routeMatrix(spark: SparkSession, g: CsrGraph, odNodes: Array[Int]): DataFrame = {
     if (!spark.experimental.extraStrategies.contains(RouteMatrixStrategy)) {
       spark.experimental.extraStrategies = spark.experimental.extraStrategies :+ RouteMatrixStrategy
     }
     org.apache.spark.sql.graft.ColumnBridge.ofRows(
       spark,
-      RouteMatrixRelation(g, odNodes, removedWay, RouteMatrixRelation.freshOutput()))
+      RouteMatrixRelation(g, odNodes, RouteMatrixRelation.freshOutput()))
   }
 }

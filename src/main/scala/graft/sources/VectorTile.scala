@@ -1,6 +1,6 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** S13 — Mapbox Vector Tile (MVT 2.1, public spec) sink: the reference
@@ -15,10 +15,10 @@ import org.apache.spark.sql.functions._
   *  - [[encodeTile]]/[[decodeTile]]: one tile from features already in
   *    tile coordinates (integer 0..extent) — the deterministic kernel the
   *    oracle gate replays.
-  *  - [[writeTiles]] (points) / [[writeGeomTiles]] (lines + polygon
-  *    rings, bbox-exploded and clipped per tile): the DISTRIBUTED sinks —
-  *    features carry lon/lat, the plan computes each feature's (z, x, y)
-  *    tile key, groups by tile, and each task encodes + writes its tiles
+  *  - [[writeTiles]]: the one DISTRIBUTED sink, for points, lines and
+  *    polygons with holes — features carry lon/lat parts, the plan
+  *    explodes each to the tiles it touches, clips it per tile, groups by
+  *    the (z, x, y) tile key, and each task encodes + writes its tiles
   *    executor-side. One shuffle on the tile key, tiles never touch the
   *    driver — the tippecanoe replacement shape at 100 TB.
   */
@@ -355,61 +355,15 @@ object VectorTile {
   }
 
   /** Shift a clipped part to tile-relative integer coords and drop
-    * consecutive duplicates created by the rounding (shared by every
-    * geometry tiler — keep the three sinks byte-identical).
+    * consecutive duplicates created by the rounding.
     */
-  private def roundAndDedupe(
-      part: Seq[(Double, Double)], tx: Long, ty: Long, extent: Int): List[(Int, Int)] =
+  private def roundAndDedupe(part: Seq[(Double, Double)], tx: Long, ty: Long): List[(Int, Int)] =
     part
-      .map(p => ((p._1 - tx * extent).round.toInt, (p._2 - ty * extent).round.toInt))
+      .map(p => ((p._1 - tx * Extent).round.toInt, (p._2 - ty * Extent).round.toInt))
       .foldLeft(List.empty[(Int, Int)]) { (acc, p) =>
         if (acc.nonEmpty && acc.head == p) acc else p :: acc
       }
       .reverse
-
-  /** Terminal stage of the geometry tile sinks: encode per tile key,
-    * then write via [[writeEncodedTiles]]. (The points sink keeps its
-    * flatter (px, py) shuffle row and builds features in its own
-    * mapGroups — sharing only the write stage.)
-    */
-  private def writeTileFiles(
-      keyed: org.apache.spark.sql.Dataset[(Long, Long, Seq[Seq[(Int, Int)]], Map[String, String])],
-      geomType: Int,
-      n: Long,
-      zoom: Int,
-      dir: String,
-      layerName: String,
-      extent: Int): Unit = {
-    import keyed.sparkSession.implicits._
-    writeEncodedTiles(
-      keyed
-        .groupByKey(_._1)
-        .mapGroups { (tileKey, it) =>
-          val feats = it.map { case (_, id, parts, attrs) =>
-            Feature(id, geomType, parts, attrs)
-          }.toSeq.sortBy(_.id)
-          (tileKey, encodeTile(Seq(Layer(layerName, extent, feats))))
-        },
-      n, zoom, dir)
-  }
-
-  /** Executor-side `{z}/{x}/{y}.mvt` write of encoded tiles (no driver
-    * collect) — the one path scheme shared by every sink.
-    */
-  private def writeEncodedTiles(
-      tiles: org.apache.spark.sql.Dataset[(Long, Array[Byte])],
-      n: Long,
-      zoom: Int,
-      dir: String): Unit =
-    tiles.foreachPartition { (it: Iterator[(Long, Array[Byte])]) =>
-      it.foreach { case (tileKey, bytes) =>
-        val tx = tileKey / n
-        val ty = tileKey % n
-        val p = java.nio.file.Paths.get(dir, zoom.toString, tx.toString, s"$ty.mvt")
-        java.nio.file.Files.createDirectories(p.getParent)
-        java.nio.file.Files.write(p, bytes)
-      }
-    }
 
   /** Sutherland–Hodgman ring clip to a rect (public classic algorithm).
     * Returns the clipped ring (possibly empty); consecutive duplicates
@@ -450,200 +404,114 @@ object VectorTile {
     dedup.toSeq
   }
 
-  /** DISTRIBUTED point-tile sink: `df(idCol, lonCol, latCol, attrCols…)`
-    * → one `{z}/{x}/{y}.mvt` per occupied tile under `dir`. One shuffle
-    * (groupBy tile key); each task encodes and writes its own tiles —
-    * no driver collect, no external tool.
-    * No gate or program calls it yet: it writes the paper's stage-5 tiles,
-    * which `Pipeline` does not wire.
+  /** Every sink tile's one layer: its name and MVT's default extent. */
+  private val LayerName = "layer"
+  private val Extent = 4096
+
+  /** One feature's fragments by tile key (`tx · 2^zoom + ty`), in
+    * tile-relative integer coords. Null and short vertices drop; the rest
+    * project through [[mercator]]. A point lands in the one tile its
+    * position clamps to, so lon 180 and |lat| > 85.05 reach an edge tile.
+    * A line or ring explodes to every tile that the bbox of its vertices
+    * ± `buffer` px touches and clips to that tile's rect widened by
+    * `buffer` (the MVT rendering margin): [[clipPolyline]] per line part,
+    * [[clipRing]] per ring. After rounding a line part needs 2 points and
+    * a ring 3, or it drops — the tile simply has no fragment of it. Ring 0
+    * is the exterior: a tile where it drops gets no fragment at all, and
+    * winding normalizes per MVT §4.3.4.4, exterior positive, holes
+    * negative (holes lie inside the exterior, so the bbox is the
+    * exterior's).
+    */
+  private def fragments(geomType: Int, parts: Seq[Seq[Seq[Double]]], zoom: Int, buffer: Int)
+    : Seq[(Long, Seq[Seq[(Int, Int)]])] = {
+    val n = 1L << zoom
+    val pix = Option(parts).getOrElse(Seq.empty).map(part =>
+      Option(part).getOrElse(Seq.empty)
+        .filter(c => c != null && c.size >= 2)
+        .map(c => mercator(c(0), c(1), zoom, Extent)))
+    val all = pix.flatten
+    if (all.isEmpty || (geomType == 3 && pix.head.size < 3)) Seq.empty
+    else {
+      def tile(v: Double): Long = math.floor(v / Extent).toLong
+      val cells: Seq[(Long, Long, Seq[Seq[(Double, Double)]])] =
+        if (geomType == 1) {
+          def clamped(v: Double): Long = math.min(n - 1, math.max(0L, tile(v)))
+          all.groupBy(p => (clamped(p._1), clamped(p._2))).toSeq
+            .map { case ((tx, ty), pts) => (tx, ty, pts.map(Seq(_))) }
+        } else {
+          val xs = all.map(_._1); val ys = all.map(_._2)
+          for {
+            tx <- math.max(0L, tile(xs.min - buffer)) to math.min(n - 1, tile(xs.max + buffer))
+            ty <- math.max(0L, tile(ys.min - buffer)) to math.min(n - 1, tile(ys.max + buffer))
+            x0 = tx * Extent.toDouble - buffer
+            y0 = ty * Extent.toDouble - buffer
+            x1 = (tx + 1) * Extent.toDouble + buffer
+            y1 = (ty + 1) * Extent.toDouble + buffer
+          } yield (tx, ty,
+            if (geomType == 2) pix.flatMap(clipPolyline(_, x0, y0, x1, y1))
+            else pix.map(clipRing(_, x0, y0, x1, y1)))
+        }
+      cells.flatMap { case (tx, ty, clipped) =>
+        val rounded = clipped.map(roundAndDedupe(_, tx, ty))
+        val kept =
+          if (geomType != 3) rounded.filter(_.size >= geomType)
+          else if (rounded.head.size < 3) Seq.empty
+          else normalizeWinding(rounded.head) +:
+            rounded.tail.filter(_.size >= 3).map(normalizeWinding(_, exterior = false))
+        if (kept.isEmpty) None else Some((tx * n + ty, kept))
+      }
+    }
+  }
+
+  /** The DISTRIBUTED tile sink: `df(idCol, partsCol, attrCols…)` → one
+    * `{z}/{x}/{y}.mvt` per occupied tile under `dir`. `partsCol` is
+    * `array<array<array<double>>>` of [lon, lat] vertices per part, MVT's
+    * own part model ([[Feature]]`.geometry`): `geomType` 1 is a point, one
+    * part holding one vertex; 2 a line of one or more parts; 3 a polygon,
+    * ring 0 its exterior and any further rings its holes. Each row
+    * explodes to its per-tile [[fragments]] (`buffer` applies to lines
+    * and rings); one shuffle on the tile key, then each task encodes its
+    * tiles (features by id, null attribute values dropped) and writes
+    * them — no driver collect, no external tool.
     */
   def writeTiles(
       df: DataFrame,
       idCol: String,
-      lonCol: String,
-      latCol: String,
-      attrCols: Seq[String],
-      zoom: Int,
-      dir: String,
-      layerName: String = "layer",
-      extent: Int = 4096): Unit = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    val n = 1L << zoom
-    val rows = df.select(
-      col(idCol).cast("long").as("id"),
-      col(lonCol).cast("double").as("lon"),
-      col(latCol).cast("double").as("lat"),
-      map(attrCols.flatMap(c => Seq(lit(c), col(c).cast("string"))): _*).as("attrs"))
-    val keyed = rows.as[(Long, Double, Double, Map[String, String])].map { case (id, lon, lat, attrs) =>
-      val (gx, gy) = mercator(lon, lat, zoom, extent)
-      val tx = math.min(n - 1, math.max(0, math.floor(gx / extent).toLong))
-      val ty = math.min(n - 1, math.max(0, math.floor(gy / extent).toLong))
-      val px = (gx - tx * extent).round.toInt
-      val py = (gy - ty * extent).round.toInt
-      // null attr values (null source columns cast to string) have no MVT
-      // representation — absent key, not an executor NPE in encodeTile.
-      // The shuffle row stays (px, py) ints — no nested-array overhead on
-      // the point hot path; feature wrapping happens after the exchange
-      (tx * n + ty, id, px, py, attrs.filter(_._2 != null))
-    }
-    writeEncodedTiles(
-      keyed
-        .groupByKey(_._1)
-        .mapGroups { (tileKey, it) =>
-          val feats = it.map { case (_, id, px, py, attrs) =>
-            Feature(id, 1, Seq(Seq((px, py))), attrs)
-          }.toSeq.sortBy(_.id)
-          (tileKey, encodeTile(Seq(Layer(layerName, extent, feats))))
-        },
-      n, zoom, dir)
-  }
-
-  /** DISTRIBUTED line/polygon tile sink — the tippecanoe shape for
-    * non-point layers: each feature's lon/lat part explodes to every
-    * tile its bbox touches, is CLIPPED to that tile's rect (+`buffer`
-    * px, the MVT rendering-margin convention) with Liang–Barsky (lines)
-    * or Sutherland–Hodgman (rings), and lands as tile-relative integer
-    * coordinates. One shuffle on the tile key; encode + write stay
-    * executor-side. `geomType` 2 = linestring, 3 = polygon ring;
-    * `coordsCol` is one part (`array<array<double>>` of [lon, lat]).
-    * Degenerate clips (< 2 line points / < 3 ring points after integer
-    * rounding) drop silently — the tile simply has no fragment of that
-    * feature, matching clipping-tiler semantics.
-    * No gate or program calls it yet: it writes the paper's stage-5 tiles,
-    * which `Pipeline` does not wire.
-    */
-  def writeGeomTiles(
-      df: DataFrame,
-      idCol: String,
       geomType: Int,
-      coordsCol: String,
+      partsCol: String,
       attrCols: Seq[String],
       zoom: Int,
       dir: String,
-      layerName: String = "layer",
-      extent: Int = 4096,
-      buffer: Int = 0,
-      windRings: Boolean = true): Unit = {
-    require(geomType == 2 || geomType == 3, s"geomType must be 2 (line) or 3 (polygon), got $geomType")
-    val spark = df.sparkSession
-    import spark.implicits._
-    val n = 1L << zoom
-    val rows = df.select(
-      col(idCol).cast("long").as("id"),
-      col(coordsCol).as("coords"),
-      map(attrCols.flatMap(c => Seq(lit(c), col(c).cast("string"))): _*).as("attrs"))
-    val keyed = rows
-      .as[(Long, Seq[Seq[Double]], Map[String, String])]
-      .flatMap { case (id, coords, attrs) =>
-        // a null/empty/single-point part has no line or ring fragment in
-        // any tile; skip it instead of letting bbox .min throw and kill
-        // the task (one bad row must not fail the job)
-        val safe = if (coords == null) Seq.empty else coords.filter(c => c != null && c.size >= 2)
-        if (safe.size < 2) Iterator.empty
-        else {
-        val pix = safe.map(c => mercator(c(0), c(1), zoom, extent))
-        // candidate tiles from the BUFFERED extent: a feature within
-        // `buffer` px of a neighbor tile must land in that tile's margin
-        // even when its vertex bbox never enters the tile proper
-        val xs = pix.map(_._1); val ys = pix.map(_._2)
-        val txMin = math.floor((xs.min - buffer) / extent).toLong
-        val txMax = math.floor((xs.max + buffer) / extent).toLong
-        val tyMin = math.floor((ys.min - buffer) / extent).toLong
-        val tyMax = math.floor((ys.max + buffer) / extent).toLong
-        val cleanAttrs = attrs.filter(_._2 != null)
-        for {
-          tx <- math.max(0, txMin) to math.min(n - 1, txMax)
-          ty <- math.max(0, tyMin) to math.min(n - 1, tyMax)
-          x0 = tx * extent.toDouble - buffer
-          y0 = ty * extent.toDouble - buffer
-          x1 = (tx + 1) * extent.toDouble + buffer
-          y1 = (ty + 1) * extent.toDouble + buffer
-          parts = {
-            val clipped =
-              if (geomType == 3) Seq(clipRing(pix, x0, y0, x1, y1))
-              else clipPolyline(pix, x0, y0, x1, y1)
-            clipped
-              .map(part => roundAndDedupe(part, tx, ty, extent): Seq[(Int, Int)])
-              .filter(part => part.size >= (if (geomType == 3) 3 else 2))
-              // MVT §4.3.4.4: every standalone ring here is an exterior
-              // ring and must wind positive (screen-CW); tippecanoe-style
-              // normalization, cyclic so correctly-wound input is a no-op
-              .map(part =>
-                if (geomType == 3 && windRings) VectorTile.normalizeWinding(part)
-                else part)
-          }
-          if parts.nonEmpty
-        } yield (tx * n + ty, id, parts, cleanAttrs)
-        }
-      }
-    writeTileFiles(keyed, geomType, n, zoom, dir, layerName, extent)
-  }
-
-  /** DISTRIBUTED polygon-with-HOLES tile sink: `ringsCol` is one polygon
-    * per row as `array<array<array<double>>>` — ring 0 the exterior,
-    * rings 1+ interior holes. Same explode→clip→shuffle-on-tile-key shape
-    * as [[writeGeomTiles]]; per tile, every ring clips independently
-    * (a hole is geometrically inside its exterior, so it can only
-    * survive where the exterior does), winding normalizes per MVT
-    * §4.3.4.4 — exterior positive, holes negative — and the surviving
-    * rings emit as ONE multi-ring feature (MoveTo/LineTo/ClosePath per
-    * ring, cursor carrying across). A tile where the exterior clips away
-    * entirely gets no fragment of the feature.
-    */
-  def writePolygonTiles(
-      df: DataFrame,
-      idCol: String,
-      ringsCol: String,
-      attrCols: Seq[String],
-      zoom: Int,
-      dir: String,
-      layerName: String = "layer",
-      extent: Int = 4096,
       buffer: Int = 0): Unit = {
+    require(geomType >= 1 && geomType <= 3,
+      s"geomType must be 1 (point), 2 (line) or 3 (polygon), got $geomType")
     val spark = df.sparkSession
     import spark.implicits._
     val n = 1L << zoom
-    val rows = df.select(
-      col(idCol).cast("long").as("id"),
-      col(ringsCol).as("rings"),
-      map(attrCols.flatMap(c => Seq(lit(c), col(c).cast("string"))): _*).as("attrs"))
-    val keyed = rows
+    df.select(
+        col(idCol).cast("long").as("id"),
+        col(partsCol).as("parts"),
+        map(attrCols.flatMap(c => Seq(lit(c), col(c).cast("string"))): _*).as("attrs"))
       .as[(Long, Seq[Seq[Seq[Double]]], Map[String, String])]
-      .flatMap { case (id, rings, attrs) =>
-        val safe =
-          if (rings == null) Seq.empty
-          else rings.map(r => if (r == null) Seq.empty else r.filter(c => c != null && c.size >= 2))
-        if (safe.isEmpty || safe.head.size < 3) Iterator.empty // no usable exterior
-        else {
-          val pix = safe.map(_.map(c => mercator(c(0), c(1), zoom, extent)))
-          // tile span from the exterior (holes are contained by contract),
-          // widened by `buffer` so neighbor tiles get their margin fragment
-          val xs = pix.head.map(_._1); val ys = pix.head.map(_._2)
-          val txMin = math.floor((xs.min - buffer) / extent).toLong
-          val txMax = math.floor((xs.max + buffer) / extent).toLong
-          val tyMin = math.floor((ys.min - buffer) / extent).toLong
-          val tyMax = math.floor((ys.max + buffer) / extent).toLong
-          val cleanAttrs = attrs.filter(_._2 != null)
-          for {
-            tx <- math.max(0, txMin) to math.min(n - 1, txMax)
-            ty <- math.max(0, tyMin) to math.min(n - 1, tyMax)
-            x0 = tx * extent.toDouble - buffer
-            y0 = ty * extent.toDouble - buffer
-            x1 = (tx + 1) * extent.toDouble + buffer
-            y1 = (ty + 1) * extent.toDouble + buffer
-            clippedRings = pix.map(ring =>
-              roundAndDedupe(clipRing(ring, x0, y0, x1, y1), tx, ty, extent))
-            // the exterior must survive the clip for the feature to
-            // exist in this tile; holes that clip away just drop
-            if clippedRings.head.size >= 3
-            parts = (VectorTile.normalizeWinding(clippedRings.head) +:
-              clippedRings.tail
-                .filter(_.size >= 3)
-                .map(r => VectorTile.normalizeWinding(r, exterior = false))): Seq[Seq[(Int, Int)]]
-          } yield (tx * n + ty, id, parts, cleanAttrs)
+      .flatMap { case (id, parts, attrs) =>
+        // a null attr value (a null source column cast to string) has no
+        // MVT representation: an absent key, not an executor NPE in encodeTile
+        val clean = attrs.filter(_._2 != null)
+        fragments(geomType, parts, zoom, buffer).map { case (key, frag) => (key, id, frag, clean) }
+      }
+      .groupByKey(_._1)
+      .mapGroups { (key, it) =>
+        val feats = it.map { case (_, id, frag, attrs) =>
+          Feature(id, geomType, frag, attrs)
+        }.toSeq.sortBy(_.id)
+        (key, encodeTile(Seq(Layer(LayerName, Extent, feats))))
+      }
+      .foreachPartition { (it: Iterator[(Long, Array[Byte])]) =>
+        it.foreach { case (key, bytes) =>
+          val p = java.nio.file.Paths.get(dir, zoom.toString, (key / n).toString, s"${key % n}.mvt")
+          java.nio.file.Files.createDirectories(p.getParent)
+          java.nio.file.Files.write(p, bytes)
         }
       }
-    writeTileFiles(keyed, geomType = 3, n, zoom, dir, layerName, extent)
   }
 }

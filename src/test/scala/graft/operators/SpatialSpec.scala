@@ -75,31 +75,6 @@ class SpatialSpec extends AnyFunSuite with TempDirs {
     assert(again.select(explode(col("features"))).count() == 2)
   }
 
-  test("overlay grid scale-path equals the broadcast path on the gate data") {
-    import spark.implicits._
-    val rnd = new scala.util.Random(11)
-    val ways = (1 to 80).map { i =>
-      val x = rnd.nextDouble() * 40; val y = rnd.nextDouble() * 40
-      (i.toLong, Seq(Seq(x, y), Seq(x + rnd.nextDouble() * 6, y)))
-    }.toDF("way_id", "coords")
-    val areas = (1 to 30).map { i =>
-      val x = rnd.nextDouble() * 40; val y = rnd.nextDouble() * 40
-      (i.toLong,
-        Seq(Seq(Seq(x, y), Seq(x + 4, y), Seq(x + 4, y + 4), Seq(x, y + 4), Seq(x, y))),
-        (i % 5 + 1).toDouble)
-    }.toDF("area_id", "rings", "value")
-    def result(df: org.apache.spark.sql.DataFrame) =
-      df.collect().map(r => r.getLong(0) -> (r.getDouble(1), r.getDouble(2))).toMap
-    val broadcastForm = result(Spatial.indicatorFromAreas(ways, areas))
-    val gridForm = result(Spatial.indicatorFromAreasGrid(ways, areas, gridCell = 5.0))
-    // same pair sets; values equal modulo summation-order ULPs
-    assert(broadcastForm.keySet == gridForm.keySet)
-    broadcastForm.foreach { case (k, (v, s)) =>
-      assert(math.abs(gridForm(k)._1 - v) < 1e-9 && math.abs(gridForm(k)._2 - s) < 0.01)
-    }
-    assert(broadcastForm.nonEmpty)
-  }
-
   test("§3.2 end-to-end: GeoJSON files → typed coords → weighted overlay") {
     val dir = tempDir("overlay-e2e")
     java.nio.file.Files.writeString(

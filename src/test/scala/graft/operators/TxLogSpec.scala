@@ -707,4 +707,26 @@ class TxLogSpec extends AnyFunSuite with TempDirs {
     intercept[IllegalArgumentException](TxLog.changes(spark, dir, 3L, 9L))
     intercept[IllegalArgumentException](TxLog.changes(spark, dir, 4L, 3L))
   }
+
+  test("changes: a range that starts past a checkpoint equals the union of its single-version feeds") {
+    val dir = tmp()
+    TxLog.create(spark, dir,
+      spark.range(60).select($"id", ($"id" % 7).as("v"))
+        .repartitionByRange(3, $"id").sortWithinPartitions($"id")) // v0
+    TxLog.delete(spark, dir, $"id" < 3L) // v1: DV commit
+    TxLog.checkpoint(spark, dir) // at v1, carrying v1's mask
+    TxLog.delete(spark, dir, $"id" === 30L) // v2: DV commit past the checkpoint
+    TxLog.rewrite(spark, dir, $"id" =!= 5L) // v3: re-stages the masked 0..19 file
+    TxLog.merge(spark, dir, Seq((10L, 999L), (100L, 1L)).toDF("id", "v"), Seq("id")) // v4
+    TxLog.optimize(spark, dir, numFiles = 2) // v5: folds the masks, no logical change
+    def feed(from: Long, to: Long) = TxLog.changes(spark, dir, from, to)
+      .select($"_commit_version", $"_change_type", $"id", $"v")
+      .as[(Long, String, Long, Long)].collect().toSeq.sorted
+    val singles = (2L to 5L).flatMap(v => feed(v - 1, v)).sorted
+    assert(singles == Seq(
+      (2L, "delete", 30L, 30L % 7), (3L, "delete", 5L, 5L),
+      (4L, "delete", 10L, 10L % 7), (4L, "insert", 10L, 999L), (4L, "insert", 100L, 1L)))
+    assert(feed(1L, 5L) == singles)
+    assert(feed(0L, 5L) == (feed(0L, 1L) ++ singles).sorted)
+  }
 }

@@ -1,6 +1,7 @@
 package graft.sources
 
 import graft.{GraftSession, TempDirs}
+import org.apache.spark.sql.functions.{array, col}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** MVT sink: wire-format anchors from the public spec, encode/decode
@@ -60,20 +61,26 @@ class VectorTileSpec extends AnyFunSuite with TempDirs {
       (1L, -90.0, 40.0, "nw"),
       (2L, 90.0, 40.0, "ne"),
       (3L, -90.0, -40.0, "sw"),
-      (4L, 90.0, -40.0, "se")).toDF("id", "lon", "lat", "name")
-    VectorTile.writeTiles(df, "id", "lon", "lat", Seq("name"), zoom = 1, dir = dir)
+      (4L, 90.0, -40.0, "se"),
+      // world edge: lon 180 and lat past 85.05 clamp into the edge tile
+      (5L, 180.0, 85.5, "edge")).toDF("id", "lon", "lat", "name")
+    VectorTile.writeTiles(df.withColumn("pt", array(array(array(col("lon"), col("lat"))))),
+      "id", geomType = 1, "pt", Seq("name"), zoom = 1, dir = dir)
     def readTile(tx: Int, ty: Int) = {
       val p = java.nio.file.Paths.get(dir, "1", tx.toString, s"$ty.mvt")
       assert(java.nio.file.Files.exists(p), s"missing tile $tx/$ty")
       VectorTile.decodeTile(java.nio.file.Files.readAllBytes(p)).head
     }
     assert(readTile(0, 0).features.map(_.id) == Seq(1L))
-    assert(readTile(1, 0).features.map(_.id) == Seq(2L))
+    assert(readTile(1, 0).features.map(_.id) == Seq(2L, 5L))
     assert(readTile(0, 1).features.map(_.id) == Seq(3L))
     assert(readTile(1, 1).features.map(_.id) == Seq(4L))
     assert(readTile(1, 0).features.head.attrs("name") == "ne")
     // pixel coords: lon 90 at z1 → world x = 1.5 tiles → px 2048 in tile 1
     assert(readTile(1, 0).features.head.geometry.head.head._1 == 2048)
+    // the edge point sits on the tile's east edge, above its top row
+    val Seq(Seq((ex, ey))) = readTile(1, 0).features(1).geometry
+    assert(ex == 4096 && ey < 0, s"edge point at ($ex, $ey)")
   }
 
   test("clipSegment/clipPolyline: hand-computed crossings, re-entry splits runs") {
@@ -110,7 +117,8 @@ class VectorTileSpec extends AnyFunSuite with TempDirs {
       (2L, Seq.empty[Seq[Double]], "empty"),
       (3L, Seq(Seq(5.0, 5.0)), "single"),
       (4L, Seq(Seq(1.0), Seq(2.0, 3.0)), "ragged")).toDF("id", "coords", "name")
-    VectorTile.writeGeomTiles(df, "id", geomType = 2, "coords", Seq("name"), zoom = 0, dir = dir)
+    VectorTile.writeTiles(df.withColumn("parts", array(col("coords"))),
+      "id", geomType = 2, "parts", Seq("name"), zoom = 0, dir = dir)
     val tile = VectorTile.decodeTile(java.nio.file.Files.readAllBytes(
       java.nio.file.Paths.get(dir, "0", "0", "0.mvt"))).head
     assert(tile.features.map(_.id) == Seq(1L)) // only the valid line survived
@@ -124,7 +132,8 @@ class VectorTileSpec extends AnyFunSuite with TempDirs {
     val poly = Seq((7L, Seq(
       Seq(-45.0, 20.0), Seq(45.0, 20.0), Seq(45.0, 60.0), Seq(-45.0, 60.0)), "big"))
       .toDF("id", "coords", "name")
-    VectorTile.writeGeomTiles(poly, "id", geomType = 3, "coords", Seq("name"), zoom = 1, dir = dir)
+    VectorTile.writeTiles(poly.withColumn("parts", array(col("coords"))),
+      "id", geomType = 3, "parts", Seq("name"), zoom = 1, dir = dir)
     def readTile(tx: Int, ty: Int) = {
       val p = java.nio.file.Paths.get(dir, "1", tx.toString, s"$ty.mvt")
       assert(java.nio.file.Files.exists(p), s"missing tile $tx/$ty")
@@ -146,7 +155,8 @@ class VectorTileSpec extends AnyFunSuite with TempDirs {
       Seq(-40.0, 40.0), Seq(30.0, 40.0), Seq(30.0, 55.0), Seq(-40.0, 55.0)), "zig"))
       .toDF("id", "coords", "name")
     val dir2 = tempDir("mvt-line").toString
-    VectorTile.writeGeomTiles(line, "id", geomType = 2, "coords", Seq("name"), zoom = 1, dir = dir2)
+    VectorTile.writeTiles(line.withColumn("parts", array(col("coords"))),
+      "id", geomType = 2, "parts", Seq("name"), zoom = 1, dir = dir2)
     def readTile2(tx: Int, ty: Int) = VectorTile.decodeTile(java.nio.file.Files.readAllBytes(
       java.nio.file.Paths.get(dir2, "1", tx.toString, s"$ty.mvt"))).head
     val west = readTile2(0, 0).features.head
@@ -162,9 +172,9 @@ class VectorTileSpec extends AnyFunSuite with TempDirs {
     val exterior = Seq(Seq(-60.0, -30.0), Seq(60.0, -30.0), Seq(60.0, 50.0), Seq(-60.0, 50.0))
     val hole = Seq(Seq(-20.0, 0.0), Seq(20.0, 0.0), Seq(20.0, 30.0), Seq(-20.0, 30.0))
     val dir = tempDir("mvt-holes").toString
-    VectorTile.writePolygonTiles(
+    VectorTile.writeTiles(
       Seq((5L, Seq(exterior, hole), "donut")).toDF("id", "rings", "name"),
-      "id", "rings", Seq("name"), zoom = 0, dir = dir)
+      "id", geomType = 3, "rings", Seq("name"), zoom = 0, dir = dir)
     val tile = VectorTile.decodeTile(java.nio.file.Files.readAllBytes(
       java.nio.file.Paths.get(dir, "0", "0", "0.mvt"))).head
     val f = tile.features.head
@@ -176,9 +186,9 @@ class VectorTileSpec extends AnyFunSuite with TempDirs {
     // z1: the same donut spans the lon-0 boundary — both tiles keep a
     // fragment of exterior AND hole (the hole straddles lon 0 too)
     val dir2 = tempDir("mvt-holes2").toString
-    VectorTile.writePolygonTiles(
+    VectorTile.writeTiles(
       Seq((6L, Seq(exterior, hole), "donut")).toDF("id", "rings", "name"),
-      "id", "rings", Seq("name"), zoom = 1, dir = dir2)
+      "id", geomType = 3, "rings", Seq("name"), zoom = 1, dir = dir2)
     Seq((0, 0), (1, 0), (0, 1), (1, 1)).foreach { case (tx, ty) =>
       val p = java.nio.file.Paths.get(dir2, "1", tx.toString, s"$ty.mvt")
       assert(java.nio.file.Files.exists(p), s"missing tile $tx/$ty")
@@ -191,9 +201,9 @@ class VectorTileSpec extends AnyFunSuite with TempDirs {
 
     // a hole-only row (no usable exterior) writes nothing rather than failing
     val dir3 = tempDir("mvt-holes3").toString
-    VectorTile.writePolygonTiles(
+    VectorTile.writeTiles(
       Seq((7L, Seq(Seq(Seq(0.0, 0.0)), hole), "bad")).toDF("id", "rings", "name"),
-      "id", "rings", Seq("name"), zoom = 0, dir = dir3)
+      "id", geomType = 3, "rings", Seq("name"), zoom = 0, dir = dir3)
     assert(!java.nio.file.Files.exists(java.nio.file.Paths.get(dir3, "0", "0", "0.mvt")))
   }
 
@@ -207,8 +217,8 @@ class VectorTileSpec extends AnyFunSuite with TempDirs {
     val line = Seq((9L, Seq(Seq(-40.0, 40.0), Seq(-1.0, 40.0)), "edge"))
       .toDF("id", "coords", "name")
     val dirB = tempDir("mvt-buf").toString
-    VectorTile.writeGeomTiles(line, "id", geomType = 2, "coords", Seq("name"),
-      zoom = 1, dir = dirB, buffer = 64)
+    VectorTile.writeTiles(line.withColumn("parts", array(col("coords"))), "id", geomType = 2, "parts",
+      Seq("name"), zoom = 1, dir = dirB, buffer = 64)
     val neighbor = java.nio.file.Paths.get(dirB, "1", "1", "0.mvt")
     assert(java.nio.file.Files.exists(neighbor),
       "buffered write must emit the margin fragment into the adjacent tile")
@@ -218,8 +228,8 @@ class VectorTileSpec extends AnyFunSuite with TempDirs {
       s"margin fragment must sit wholly in tile 1's buffer zone, got $frag")
     // same feature, buffer = 0: the neighbor tile must NOT exist
     val dir0 = tempDir("mvt-buf0").toString
-    VectorTile.writeGeomTiles(line, "id", geomType = 2, "coords", Seq("name"),
-      zoom = 1, dir = dir0, buffer = 0)
+    VectorTile.writeTiles(line.withColumn("parts", array(col("coords"))), "id", geomType = 2, "parts",
+      Seq("name"), zoom = 1, dir = dir0, buffer = 0)
     assert(!java.nio.file.Files.exists(java.nio.file.Paths.get(dir0, "1", "1", "0.mvt")))
   }
 
@@ -245,9 +255,9 @@ class VectorTileSpec extends AnyFunSuite with TempDirs {
     val ringCw = ringCcwOnScreen.head +: ringCcwOnScreen.tail.reverse
     def render(ring: Seq[Seq[Double]]): Array[Byte] = {
       val dir = tempDir("mvt-wind").toString
-      VectorTile.writeGeomTiles(
-        Seq((3L, ring, "w")).toDF("id", "coords", "name"),
-        "id", geomType = 3, "coords", Seq("name"), zoom = 0, dir = dir)
+      VectorTile.writeTiles(
+        Seq((3L, Seq(ring), "w")).toDF("id", "parts", "name"),
+        "id", geomType = 3, "parts", Seq("name"), zoom = 0, dir = dir)
       java.nio.file.Files.readAllBytes(
         java.nio.file.Paths.get(dir, "0", "0", "0.mvt"))
     }

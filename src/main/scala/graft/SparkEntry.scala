@@ -3935,10 +3935,10 @@ object SparkEntry {
       .agg(count(lit(1)).as("n_images"))
   }
 
-  /** Image near-dup clusters ([[multimodal.Multimodal
-    * .imageNearDupClusters]], 8 bands / hamming ≤ 10): the multimodal
-    * dedup pass — aHash fingerprints banded LSH-style, exact hamming
-    * verify, min-label components. Media = 100 synthetic PNGs where
+  /** Image near-dup clusters ([[multimodal.Multimodal.nearDupClusters]]
+    * over [[multimodal.Multimodal.aHash]], 8 bands / hamming ≤ 10): the
+    * multimodal dedup pass — aHash fingerprints banded LSH-style, exact
+    * hamming verify, min-label components. Media = 100 synthetic PNGs where
     * ids ≥ 50 are one-block-retouched copies of id − 50 (a few aHash
     * bits move, never the whole fingerprint).
     */
@@ -3947,14 +3947,14 @@ object SparkEntry {
       .select((col("doc_id") % 100L).as("doc_id"))
       .distinct()
     val media = multimodal.Multimodal.pngMediaNearDupFromDocuments(spark, folded)
-    multimodal.Multimodal.imageNearDupClusters(
-      media, factor = 4, bands = 8, maxHamming = 10)
+    multimodal.Multimodal.nearDupClusters(
+      multimodal.Multimodal.aHash(media, factor = 4), bands = 8, maxHamming = 10)
   }
 
-  /** Video near-dup clusters ([[multimodal.Multimodal
-    * .videoNearDupClusters]], 8 bands / hamming ≤ 16): per-frame aHash
-    * fingerprints concatenated in frame order, banded LSH-style, exact
-    * hamming verify, min-label components. Media = 100 synthetic
+  /** Video near-dup clusters ([[multimodal.Multimodal.nearDupClusters]]
+    * over [[multimodal.Multimodal.videoFrameHash]], 8 bands / hamming
+    * ≤ 16): per-frame aHash fingerprints concatenated in frame order,
+    * banded LSH-style, exact hamming verify, min-label components. Media = 100 synthetic
     * 4-frame MJPEG clips where ids ≥ 50 are one-block-retouched copies
     * of id − 50 (block-constant frames survive JPEG losslessly, the
     * qm10 contract, so the oracle replays pixels by formula).
@@ -3964,13 +3964,14 @@ object SparkEntry {
       .select((col("doc_id") % 100L).as("doc_id"))
       .distinct()
     val media = multimodal.Multimodal.aviMediaNearDupFromDocuments(spark, folded)
-    multimodal.Multimodal.videoNearDupClusters(
-      media, factor = 4, bands = 8, maxHamming = 16)
+    multimodal.Multimodal.nearDupClusters(
+      multimodal.Multimodal.videoFrameHash(media, factor = 4), bands = 8, maxHamming = 16)
   }
 
   /** Trim-invariant video near-dup clusters ([[multimodal.Multimodal
-    * .videoNearDupClustersSampled]], 4 sampled frames / 8 bands /
-    * hamming ≤ 16): the frame-SAMPLED fingerprint hashes exactly 4
+    * .nearDupClusters]] over [[multimodal.Multimodal
+    * .videoSampledFrameHash]], 4 sampled frames / 8 bands / hamming
+    * ≤ 16): the frame-SAMPLED fingerprint hashes exactly 4
     * evenly-spaced frames (index ⌊j·F/4⌋), so an end-trimmed re-upload
     * compares at the same 256-bit length as its original — the pair
     * the qm19 concatenated fingerprint (length F·64) can never merge.
@@ -3984,24 +3985,25 @@ object SparkEntry {
       .select((col("doc_id") % 100L).as("doc_id"))
       .distinct()
     val media = multimodal.Multimodal.aviMediaTrimNearDupFromDocuments(spark, folded)
-    multimodal.Multimodal.videoNearDupClustersSampled(
-      media, factor = 4, nFrames = 4, bands = 8, maxHamming = 16)
+    multimodal.Multimodal.nearDupClusters(
+      multimodal.Multimodal.videoSampledFrameHash(media, factor = 4, nFrames = 4),
+      bands = 8, maxHamming = 16)
   }
 
-  /** Audio near-dup clusters ([[multimodal.Multimodal
-    * .audioNearDupClusters]], 16 windows / 4 bands / hamming ≤ 3): the
-    * audio dedup pass — energy-envelope fingerprints banded LSH-style,
-    * exact hamming verify, min-label components. Media = 100 synthetic
-    * WAV clips where ids ≥ 50 are one-segment-boosted copies of
-    * id − 50.
+  /** Audio near-dup clusters ([[multimodal.Multimodal.nearDupClusters]]
+    * over [[multimodal.Multimodal.audioEnergyHash]], 16 windows / 4
+    * bands / hamming ≤ 3): the audio dedup pass — energy-envelope
+    * fingerprints banded LSH-style, exact hamming verify, min-label
+    * components. Media = 100 synthetic WAV clips where ids ≥ 50 are
+    * one-segment-boosted copies of id − 50.
     */
   private def qm18AudioDedup(spark: SparkSession, dir: String): DataFrame = {
     val folded = t(spark, dir, "documents")
       .select((col("doc_id") % 100L).as("doc_id"))
       .distinct()
     val media = multimodal.Multimodal.wavMediaNearDupFromDocuments(spark, folded)
-    multimodal.Multimodal.audioNearDupClusters(
-      media, windows = 16, bands = 4, maxHamming = 3)
+    multimodal.Multimodal.nearDupClusters(
+      multimodal.Multimodal.audioEnergyHash(media, windows = 16), bands = 4, maxHamming = 3)
   }
 
   /** Incremental media near-dup dedup ([[multimodal.Multimodal
@@ -4034,8 +4036,9 @@ object SparkEntry {
   }
 
   /** Trim-tolerant audio near-dup clusters ([[multimodal.Multimodal
-    * .audioNearDupClustersSampled]], 16 sampled windows / 4 bands /
-    * hamming ≤ 3): the strict energy hash requires n divisible by
+    * .nearDupClusters]] over [[multimodal.Multimodal
+    * .audioSampledEnergyHash]], 16 sampled windows / 4 bands / hamming
+    * ≤ 3): the strict energy hash requires n divisible by
     * `windows`, so a trimmed re-upload emitted NO row and was
     * invisible to dedup; the sampled form assigns sample i to window
     * ⌊i·16/n⌋ and compares window means by cross-multiplication —
@@ -4049,8 +4052,9 @@ object SparkEntry {
       .select((col("doc_id") % 100L).as("doc_id"))
       .distinct()
     val media = multimodal.Multimodal.wavMediaTrimNearDupFromDocuments(spark, folded)
-    multimodal.Multimodal.audioNearDupClustersSampled(
-      media, windows = 16, bands = 4, maxHamming = 3)
+    multimodal.Multimodal.nearDupClusters(
+      multimodal.Multimodal.audioSampledEnergyHash(media, windows = 16),
+      bands = 4, maxHamming = 3)
   }
 
   /** Multimodal audio tier — REAL WAV/PCM decode ([[sources.Wav]]): one

@@ -1,6 +1,6 @@
 package graft.multimodal
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Multimodal (image/audio/video) column handling for training-data
@@ -69,10 +69,6 @@ object Multimodal {
     (mean, entropy, feature)
   }
 
-  /** Feature extraction over a media Dataset — mapPartitions so a real
-    * decoder initializes once per partition (the reference's per-process
-    * model, `img-stats.py:88-102`, maps to per-partition here).
-    */
   /** Null payloads (e.g. a NULL source column cast to binary) are treated
     * as empty media rather than NPE-ing the job — mirrors the null-safety
     * contract of the text kernels.
@@ -163,6 +159,10 @@ object Multimodal {
     } else None
   }
 
+  /** Feature extraction over a media Dataset — mapPartitions so a real
+    * decoder initializes once per partition (the reference's per-process
+    * model, `img-stats.py:88-102`, maps to per-partition here).
+    */
   def extractFeatures(media: Dataset[Media]): Dataset[MediaFeatures] = {
     import media.sparkSession.implicits._
     media.mapPartitions { it =>
@@ -379,13 +379,6 @@ object Multimodal {
     }.toDF("media_id", "sample_rate", "n_samples", "checksum", "rms")
   }
 
-  /** REAL resize tier: decodable image payloads decode to pixels,
-    * box-average `factor`×`factor` blocks (integer floor mean —
-    * deterministic, SQL-replayable), and re-encode LOSSLESSLY as PNG;
-    * metadata tracks the payload in lockstep. Payloads without a codec
-    * (or with dims not divisible by the factor) fall back to the stub
-    * byte-subsampling so the pipeline shape never branches.
-    */
   /** Integer floor box means — the shared resize/hash kernel:
     * deterministic, SQL-replayable, no float rounding anywhere.
     */
@@ -433,6 +426,13 @@ object Multimodal {
     bits.toString
   }
 
+  /** REAL resize tier: decodable image payloads decode to pixels,
+    * box-average `factor`×`factor` blocks (integer floor mean —
+    * deterministic, SQL-replayable), and re-encode LOSSLESSLY as PNG;
+    * metadata tracks the payload in lockstep. Payloads without a codec
+    * (or with dims not divisible by the factor) fall back to the stub
+    * byte-subsampling so the pipeline shape never branches.
+    */
   def resizeDecoded(media: Dataset[Media], factor: Int): Dataset[Media] = {
     import media.sparkSession.implicits._
     require(factor >= 1)
@@ -458,6 +458,12 @@ object Multimodal {
     }
   }
 
+  /** The one size guard behind every aHash-style fingerprint: the frame
+    * splits into whole `factor`×`factor` boxes, at least one each way.
+    */
+  private def tiles(w: Int, h: Int, factor: Int): Boolean =
+    w % factor == 0 && h % factor == 0 && w >= factor && h >= factor
+
   /** AVERAGE-HASH (aHash) PERCEPTUAL IMAGE FINGERPRINT — the
     * image-dedup primitive: decode (REAL in-repo codecs), box-average
     * down to a `factor`-reduced thumbnail (the shared integer-floor
@@ -470,6 +476,12 @@ object Multimodal {
     * re-encoded copy; this can). Everything is integer (block sums,
     * floor means, strict > threshold), so the hash is the same in any
     * engine and the qm14 oracle recomputes it cell-for-cell in SQL.
+    *
+    * Image near-dup clusters are `nearDupClusters(aHash(media, factor),
+    * bands, maxHamming)` (qm17: factor 4, 8 bands, hamming ≤ 10): a
+    * re-encoded, resized-then-restored, or slightly-retouched copy
+    * hashes within a few bits of its original where byte-level dedup
+    * (qd1) sees nothing.
     *
     * The hash emits as a '0'/'1' STRING: a 64-cell hash doesn't fit a
     * signed 64-bit long when the top bit is set, and the driver's
@@ -485,72 +497,35 @@ object Multimodal {
     media.flatMap { m =>
       val bytes = safeBytes(m.bytes)
       (imageDims(bytes), decodeImage(bytes)) match {
-        case (Some((_, w, h)), Some(px))
-            if w % factor == 0 && h % factor == 0 && w >= factor && h >= factor =>
+        case (Some((_, w, h)), Some(px)) if tiles(w, h, factor) =>
           Some((m.media_id, meanBits(px, w, h, factor)))
         case _ => None
       }
     }.toDF("media_id", "hash_bits")
   }
 
-  /** IMAGE NEAR-DUP CLUSTERS — the multimodal training-data dedup pass:
-    * cluster images whose [[aHash]] fingerprints are within `maxHamming`
-    * bits, via the text tier's LSH recipe re-targeted at pixels. A
-    * re-encoded, resized-then-restored, or slightly-retouched copy hashes
-    * within a few bits of its original where byte-level dedup (qd1) sees
-    * nothing.
+  /** MEDIA NEAR-DUP CLUSTERS — the one clustering entry of the
+    * multimodal dedup pass, for any `(media_id, hash_bits)` fingerprint
+    * frame: [[aHash]] (images), [[audioEnergyHash]] /
+    * [[audioSampledEnergyHash]] (audio), [[videoFrameHash]] /
+    * [[videoSampledFrameHash]] (video). Media whose fingerprints are
+    * within `maxHamming` bits cluster, via the text tier's LSH recipe
+    * re-targeted at decoded content.
     *
-    * Pipeline: aHash per image (integer-exact, SQL-replayable) → band the
-    * bit string into `bands` equal substrings and bucket-join on
-    * (band, substring) — a pair within `maxHamming` collides on at least
-    * one band unless every band is hit, the qd2/qd3 banding bet — → verify
-    * EXACT hamming (per-character compare over the zipped bit strings; a
-    * length mismatch counts as distance, so differently-dimensioned
-    * images never merge) → min-label connected components
-    * ([[graft.operators.Dedup.connectedComponents]]). Images whose hash
-    * matches nothing cluster as themselves.
+    * Pipeline: DICTIONARY-COLLAPSE identical fingerprints, band each
+    * DISTINCT '0'/'1' hash string into `bands` substrings, bucket-join
+    * on (band, substring) — a pair within `maxHamming` collides on ≥ 1
+    * band unless every band is hit, the qd2/qd3 banding bet — verify
+    * EXACT hamming (per-character compare over the zipped strings; a
+    * length mismatch counts as distance, so differently-shaped media
+    * never merge), then min-label connected components
+    * ([[graft.operators.Dedup.connectedComponents]]) over fingerprint
+    * representatives, expanded back through the fingerprint groups.
+    * Fingerprints matching nothing cluster as themselves.
     *
     * Output `(media_id, cluster)`, cluster = the component's minimum
     * media_id — the same labeling contract as the text dedup tier.
-    * Undecodable images emit no row (the aHash honesty rule).
-    *
-    * Scale shape: banding is a projection + explode; candidates come from
-    * the band equi-join (never all-pairs); the verify joins each
-    * candidate's two hash strings (candidate-bounded); components run on
-    * the collided subgraph only.
-    */
-  def imageNearDupClusters(
-      media: Dataset[Media],
-      factor: Int = 4,
-      bands: Int = 8,
-      maxHamming: Int = 10): DataFrame =
-    hashClusters(aHash(media, factor), bands, maxHamming)
-
-  /** AUDIO NEAR-DUP CLUSTERS — [[imageNearDupClusters]] for the audio
-    * tier: cluster clips whose [[audioEnergyHash]] fingerprints are
-    * within `maxHamming` bits. A re-encoded or one-segment-retouched
-    * clip clusters with its original; a uniformly-louder copy hashes
-    * IDENTICALLY (the energy threshold is the clip's own mean — the
-    * brightness-invariance story on the time axis).
-    */
-  def audioNearDupClusters(
-      media: Dataset[Media],
-      windows: Int = 16,
-      bands: Int = 4,
-      maxHamming: Int = 3): DataFrame =
-    hashClusters(audioEnergyHash(media, windows), bands, maxHamming)
-
-  /** The shared fingerprint-clustering tail behind the image, audio and
-    * video near-dup passes: DICTIONARY-COLLAPSE identical fingerprints,
-    * band each DISTINCT '0'/'1' hash string into `bands` substrings,
-    * bucket-join on (band, substring) — a pair within `maxHamming`
-    * collides on ≥ 1 band unless every band is hit, the qd2/qd3 banding
-    * bet — verify EXACT hamming (per-character compare over the zipped
-    * strings; a length mismatch counts as distance, so
-    * differently-shaped media never merge), then min-label connected
-    * components over fingerprint representatives, expanded back through
-    * the fingerprint groups. Fingerprints matching nothing cluster as
-    * themselves.
+    * Undecodable media emit no fingerprint and so no row.
     *
     * Identical-fingerprint collapse (the [[graft.operators.Dedup]]
     * `prefixFilterJoin` recipe, third time it's paid for itself): exact
@@ -572,9 +547,19 @@ object Multimodal {
     * Fingerprints shorter than `bands` raise an error at execution
     * time — a zero-width band would give every row the same band keys
     * and degenerate the candidate join to all-pairs.
+    *
+    * Scale shape: banding is a projection + explode; candidates come
+    * from the band equi-join (never all-pairs); the verify joins each
+    * candidate's two hash strings (candidate-bounded); components run
+    * on the collided subgraph only.
     */
-  private[graft] def hashClusters(
-      hashes: DataFrame, bands: Int, maxHamming: Int): DataFrame = {
+  def nearDupClusters(hashes: DataFrame, bands: Int, maxHamming: Int): DataFrame =
+    clustered(hashes, bands, maxHamming)._2
+
+  /** [[nearDupClusters]] beside the checkpointed `(media_id, hash_bits)`
+    * rows it clustered.
+    */
+  private def clustered(hashes: DataFrame, bands: Int, maxHamming: Int): (DataFrame, DataFrame) = {
     require(bands >= 1, s"bands must be >= 1, got $bands")
     require(maxHamming >= 0, s"maxHamming must be >= 0, got $maxHamming")
     // EAGER materialization of the fingerprint rows and their collapse:
@@ -587,27 +572,31 @@ object Multimodal {
       .localCheckpoint(true)
     val fp = collapseFingerprints(hs).localCheckpoint(true)
     val cand = fingerprintCandidates(fp, bands)
-    val ham = aggregate(
-      zip_with(
-        split(col("__ab"), ""), split(col("__bb"), ""),
-        (x, y) => when(x === y, 0).otherwise(1)),
-      lit(0), (acc, v) => acc + v)
     val reps = fp.select(col("__rep"), col("hash_bits"))
     val pairs = cand
       .join(reps.select(col("__rep").as("__a"), col("hash_bits").as("__ab")), Seq("__a"))
       .join(reps.select(col("__rep").as("__b"), col("hash_bits").as("__bb")), Seq("__b"))
-      .filter(ham <= maxHamming)
+      .filter(hamming("__ab", "__bb") <= maxHamming)
       .select(col("__a"), col("__b"))
     val comps = graft.operators.Dedup.connectedComponents(pairs, "__a", "__b")
     // expand through the fingerprint group: every member inherits its
     // representative's component label (or the rep itself when the
     // fingerprint collided with nothing)
-    hs
+    (hs, hs
       .join(fp, Seq("hash_bits"))
       .join(comps.select(col("id").as("__rep"), col("label")), Seq("__rep"), "left")
-      .select(col("media_id"),
-        coalesce(col("label"), col("__rep")).as("cluster"))
+      .select(col("media_id"), coalesce(col("label"), col("__rep")).as("cluster")))
   }
+
+  /** Exact hamming distance between two '0'/'1' string columns: a
+    * per-character compare over the zipped strings, where `zip_with`'s
+    * null padding makes every position past the shorter string count.
+    */
+  private def hamming(a: String, b: String): Column =
+    aggregate(
+      zip_with(split(col(a), ""), split(col(b), ""),
+        (x, y) => when(x === y, 0).otherwise(1)),
+      lit(0), (acc, v) => acc + v)
 
   /** INCREMENTAL media near-dup dedup — the multimodal twin of
     * [[graft.operators.Dedup.incrementalMinHashDedup]]: a batch medium
@@ -640,7 +629,7 @@ object Multimodal {
     // twice — the corpus screen (via collapseFingerprints) and the
     // survivor anti-join. Checkpointed once here, both consumers read
     // fingerprint-sized blocks and the batch is decoded exactly once
-    // per call (the hashClusters `hs` treatment).
+    // per call (the `clustered` treatment of its `hs`).
     val bh = batchHashes.select(col("media_id"), col("hash_bits"))
       .localCheckpoint(true)
     // corpus artifact: DISTINCT fingerprints; rep = the string itself
@@ -652,27 +641,18 @@ object Multimodal {
     val cKeys = bandKeys(cfp, bands)
       .select(col("hash_bits").as("__ch"), col("__bkey"))
     // (both sides banded over DISTINCT fingerprints only)
-    val ham = aggregate(
-      zip_with(
-        split(col("__bh"), ""), split(col("__ch"), ""),
-        (x, y) => when(x === y, 0).otherwise(1)),
-      lit(0), (acc, v) => acc + v)
     val dupFp = bKeys.join(cKeys, Seq("__bkey"))
       .select(col("__bh"), col("__ch"))
       .distinct()
-      .filter(ham <= maxHamming)
+      .filter(hamming("__bh", "__ch") <= maxHamming)
       .select(col("__bh").as("hash_bits"))
       .distinct()
-    // eager: the survivor set feeds the hashClusters tail AND the final
-    // semi-join — lazy, the anti-join would re-run for each consumer
-    val survivors = bh
-      .join(dupFp, Seq("hash_bits"), "left_anti")
-      .localCheckpoint(true)
-    val clusters = hashClusters(survivors, bands, maxHamming)
-    survivors
-      .join(clusters.filter(col("media_id") === col("cluster"))
-        .select(col("media_id")), Seq("media_id"), "left_semi")
-      .select(col("media_id"), col("hash_bits"))
+    // lazy: `clustered` checkpoints the survivor rows once, and the
+    // final semi-join reads them back from that checkpoint
+    val (survivors, clusters) =
+      clustered(bh.join(dupFp, Seq("hash_bits"), "left_anti"), bands, maxHamming)
+    survivors.join(clusters.filter(col("media_id") === col("cluster"))
+      .select(col("media_id")), Seq("media_id"), "left_semi")
   }
 
   /** Band keys for a fingerprint frame carrying `hash_bits`: bands
@@ -689,7 +669,7 @@ object Multimodal {
         when(length(col("hash_bits")) >= bands,
           (length(col("hash_bits")) / bands).cast("int"))
           .otherwise(raise_error(concat(
-            lit("hashClusters: fingerprint length "),
+            lit("nearDupClusters: fingerprint length "),
             length(col("hash_bits")),
             lit(s" < bands=$bands — band width would be 0 and every row " +
               "would share every band key (all-pairs candidates); lower " +
@@ -699,7 +679,7 @@ object Multimodal {
           s"if(__band = ${bands - 1}, length(hash_bits) - __band * __w, __w))")))
       .drop("__band", "__w")
 
-  /** The dictionary-collapse step of [[hashClusters]]: one row per
+  /** The dictionary-collapse step of [[nearDupClusters]]: one row per
     * DISTINCT fingerprint, `(hash_bits, __rep)` with __rep = the
     * group's minimum media_id. Package-private so the scale probe can
     * assert the candidate tier is Θ(distinct), not Θ(rows).
@@ -709,7 +689,7 @@ object Multimodal {
       .groupBy(col("hash_bits"))
       .agg(min(col("media_id")).as("__rep"))
 
-  /** The banded candidate tier of [[hashClusters]] over COLLAPSED
+  /** The banded candidate tier of [[nearDupClusters]] over COLLAPSED
     * fingerprints (`(hash_bits, __rep)` rows from
     * [[collapseFingerprints]]): explode `bands` band keys per distinct
     * fingerprint — bands 0..bands−2 take width ⌊len/bands⌋, the LAST
@@ -730,78 +710,58 @@ object Multimodal {
 
   /** ENERGY-ENVELOPE HASH over REAL decoded audio — [[aHash]]'s recipe
     * on the time axis: split the clip into `windows` equal segments,
-    * sum each segment's |amplitude| (exact Longs — Σ|v| < 2^41 even at
-    * 2^25 samples), and emit bit w = 1 iff segment w's energy exceeds
-    * the per-window mean (strict cross-multiplied compare
-    * `e_w · windows > total` — no division, so the hash replays
-    * cell-for-cell in SQL). Threshold = the clip's OWN mean ⇒ a
-    * uniformly-scaled (volume-changed, non-clipping) copy hashes
-    * identically. Undecodable clips and lengths not divisible by
-    * `windows` emit NO row (the aHash honesty rule).
+    * sum each segment's |amplitude| (exact Longs), and emit bit w = 1
+    * iff segment w's energy exceeds the per-window mean (strict
+    * cross-multiplied compare `e_w · windows > total` — no division,
+    * so the hash replays cell-for-cell in SQL). Threshold = the clip's
+    * OWN mean ⇒ a uniformly-scaled (volume-changed, non-clipping) copy
+    * hashes identically. Undecodable clips and lengths not divisible
+    * by `windows` emit NO row (the aHash honesty rule).
+    *
+    * Audio near-dup clusters are `nearDupClusters(audioEnergyHash(media,
+    * windows), bands, maxHamming)` (qm18: 16 windows, 4 bands, hamming
+    * ≤ 3): a re-encoded or one-segment-retouched clip clusters with its
+    * original, and a uniformly-louder copy hashes IDENTICALLY — the
+    * brightness-invariance story on the time axis.
     */
-  def audioEnergyHash(media: Dataset[Media], windows: Int): DataFrame = {
-    import media.sparkSession.implicits._
-    require(windows >= 1, s"windows must be >= 1, got $windows")
-    media.flatMap { m =>
-      decodeAudio(safeBytes(m.bytes)) match {
-        case Some((_, _, samples))
-            if samples.length >= windows && samples.length % windows == 0 =>
-          val win = samples.length / windows
-          val e = new Array[Long](windows)
-          var i = 0
-          while (i < samples.length) {
-            e(i / win) += math.abs(samples(i).toLong)
-            i += 1
-          }
-          var total = 0L
-          var w = 0
-          while (w < windows) { total += e(w); w += 1 }
-          val bits = new StringBuilder(windows)
-          w = 0
-          while (w < windows) {
-            bits.append(if (e(w) * windows > total) '1' else '0')
-            w += 1
-          }
-          Some((m.media_id, bits.toString))
-        case _ => None
-      }
-    }.toDF("media_id", "hash_bits")
-  }
-
-  /** TRIM-TOLERANT AUDIO NEAR-DUP CLUSTERS — [[audioNearDupClusters]]
-    * over the SAMPLED-boundary energy hash: [[audioEnergyHash]]
-    * requires the sample count divisible by `windows` (off-length
-    * clips emit NO row — the honesty rule made a trimmed re-upload
-    * invisible to the dedup pass entirely). [[audioSampledEnergyHash]]
-    * hashes ANY clip with ≥ `windows` samples at a fixed `windows`-bit
-    * length, and a short end-trim only drifts the window boundaries,
-    * moving at most a few bits — within `maxHamming`, so trims cluster
-    * with their originals (the qm20 story on the time axis).
-    */
-  def audioNearDupClustersSampled(
-      media: Dataset[Media],
-      windows: Int = 16,
-      bands: Int = 4,
-      maxHamming: Int = 3): DataFrame =
-    hashClusters(audioSampledEnergyHash(media, windows), bands, maxHamming)
+  def audioEnergyHash(media: Dataset[Media], windows: Int): DataFrame =
+    energyHash(media, windows, divisible = true)
 
   /** SAMPLED-BOUNDARY energy hash — [[audioEnergyHash]] for ANY length
     * ≥ `windows`: sample i belongs to window ⌊i·windows/n⌋ (total,
     * monotone, near-equal window sizes for every n), energies are
     * exact Long Σ|v| per window, and bit w compares window w's MEAN
     * energy to the clip mean by cross-multiplication —
-    * `e_w · n > total · n_w` (strict, division-free, exact integers;
-    * |products| < 2⁶³ for n up to ~2²⁴ samples) — so a uniformly
-    * louder copy still hashes identically and the whole pipeline
-    * replays cell-for-cell in SQL. Clips shorter than `windows`
-    * samples emit no row.
+    * `e_w · n > total · n_w` (strict, division-free, exact at any
+    * length through [[exceeds]]) — so a uniformly louder copy still
+    * hashes identically and the whole pipeline replays cell-for-cell in
+    * SQL. Clips shorter than `windows` samples emit no row.
+    *
+    * Trim-tolerant audio near-dup clusters are
+    * `nearDupClusters(audioSampledEnergyHash(media, windows), bands,
+    * maxHamming)` (qm21: 16 windows, 4 bands, hamming ≤ 3): the strict
+    * [[audioEnergyHash]] emits NO row off-length, which made a trimmed
+    * re-upload invisible to the dedup pass entirely; here a short
+    * end-trim only drifts the window boundaries, moving at most a few
+    * bits — within `maxHamming`, so trims cluster with their originals
+    * (the qm20 story on the time axis).
     */
-  def audioSampledEnergyHash(media: Dataset[Media], windows: Int): DataFrame = {
+  def audioSampledEnergyHash(media: Dataset[Media], windows: Int): DataFrame =
+    energyHash(media, windows, divisible = false)
+
+  /** The one energy fold behind both audio hashes, in the sampled form.
+    * `divisible` keeps only clips with n % windows == 0: there window
+    * ⌊i·windows/n⌋ = ⌊i/win⌋ and n_w = win = n / windows, so
+    * `e_w · n > total · n_w` is `e_w · windows > total` — the strict
+    * hash, bit for bit.
+    */
+  private def energyHash(media: Dataset[Media], windows: Int, divisible: Boolean): DataFrame = {
     import media.sparkSession.implicits._
     require(windows >= 1, s"windows must be >= 1, got $windows")
     media.flatMap { m =>
       decodeAudio(safeBytes(m.bytes)) match {
-        case Some((_, _, samples)) if samples.length >= windows =>
+        case Some((_, _, samples))
+            if samples.length >= windows && (!divisible || samples.length % windows == 0) =>
           val n = samples.length
           val e = new Array[Long](windows)
           val cnt = new Array[Long](windows)
@@ -812,13 +772,11 @@ object Multimodal {
             cnt(w) += 1L
             i += 1
           }
-          var total = 0L
-          var w = 0
-          while (w < windows) { total += e(w); w += 1 }
+          val total = e.sum
           val bits = new StringBuilder(windows)
-          w = 0
+          var w = 0
           while (w < windows) {
-            bits.append(if (e(w) * n > total * cnt(w)) '1' else '0')
+            bits.append(if (exceeds(e(w), n, total, cnt(w))) '1' else '0')
             w += 1
           }
           Some((m.media_id, bits.toString))
@@ -826,6 +784,52 @@ object Multimodal {
       }
     }.toDF("media_id", "hash_bits")
   }
+
+  /** a·b > c·d for non-negative Longs, exact at any magnitude: the two
+    * products compare as 128-bit values (high words from
+    * `Math.multiplyHigh`, low words unsigned), where a `Long` compare
+    * wraps once a product passes 2⁶³ — at 16 windows, a full-scale
+    * clip of 2²⁶ samples.
+    */
+  private[graft] def exceeds(a: Long, b: Long, c: Long, d: Long): Boolean = {
+    val hi = Math.multiplyHigh(a, b)
+    val hiOther = Math.multiplyHigh(c, d)
+    if (hi != hiOther) hi > hiOther else java.lang.Long.compareUnsigned(a * b, c * d) > 0
+  }
+
+  /** The id-patterned clip behind both planted audio fixtures: `n`
+    * PCM16 samples whose 64-sample block w is LOUD (amplitude 32768)
+    * iff bit w of base·2654435761 mod 65536 is set (base = id mod 50),
+    * QUIET (amplitude 256) otherwise, with the first block boosted by
+    * `boost` (clipped at 32767).
+    */
+  private def patternClip(id: Long, n: Int, boost: Int): Media = {
+    val base = id % 50
+    val pat = base * 2654435761L % 65536L
+    val samples = Array.tabulate(n) { i =>
+      val amp = if (((pat >> (i / 64)) & 1L) == 1L) 32768 else 256
+      val v = ((i * 2731 + 5 * base) % (2 * amp) - amp).toInt
+      (if (i < 64) math.min(v + boost, 32767) else v).toShort
+    }
+    Media(id, MediaMeta("audio", 0, 0, 16000), graft.sources.Wav.encodeMono16(samples, 16000))
+  }
+
+  /** The WAV fixture with PLANTED NEAR-DUPS for the audio-dedup gate:
+    * ids < 50 are bases whose ENERGY ENVELOPE carries the id — window w
+    * is LOUD (amplitude 32768) iff bit w of the HASHED id
+    * (id·2654435761 mod 65536, Knuth's multiplicative spread — raw id
+    * bits repeat across windows and one-bit id neighbours land within
+    * the hamming budget and chain into a giant cluster; measured
+    * before this formula) is set, QUIET (amplitude 256) otherwise, so
+    * distinct ids sit ~8 hash bits apart (a flat-envelope formula
+    * would merge everything: the hash thresholds on the clip's own
+    * mean). Ids ≥ 50 re-encode
+    * base id − 50 with the first window boosted by +8000 (clipped) —
+    * a one-segment retouch that moves a couple of hash bits, never
+    * the whole fingerprint.
+    */
+  def wavMediaNearDupFromDocuments(spark: SparkSession, docs: DataFrame): Dataset[Media] =
+    encodedFixture(spark, docs)(id => patternClip(id, 1024, if (id >= 50) 8000 else 0))
 
   /** The WAV fixture with PLANTED END-TRIMS for the trim-tolerant
     * audio dedup gate: ids < 50 are 1024-sample bases with the
@@ -839,18 +843,7 @@ object Multimodal {
     * into neighboring blocks, flipping at most a couple of bits.
     */
   def wavMediaTrimNearDupFromDocuments(spark: SparkSession, docs: DataFrame): Dataset[Media] =
-    encodedFixture(spark, docs) { id =>
-      val base = id % 50
-      val n = if (id >= 50) 1000 else 1024
-      val pat = base * 2654435761L % 65536L
-      val samples = Array.tabulate(n) { i =>
-        val w = i / 64
-        val amp = if (((pat >> w) & 1L) == 1L) 32768 else 256
-        ((i * 2731 + 5 * base) % (2 * amp) - amp).toShort
-      }
-      Media(id, MediaMeta("audio", 0, 0, 16000),
-        graft.sources.Wav.encodeMono16(samples, 16000))
-    }
+    encodedFixture(spark, docs)(id => patternClip(id, if (id >= 50) 1000 else 1024, 0))
 
   /** The [[pngMediaFromDocuments]] generator with PLANTED NEAR-DUPS for
     * the image-dedup gate: ids < 50 are bases with per-id PATTERNS
@@ -874,37 +867,88 @@ object Multimodal {
       Media(id, MediaMeta("image", w, h, 0), graft.sources.Png.encodeGray(px, w, h))
     }
 
-  /** VIDEO NEAR-DUP CLUSTERS — the quartet's last member (text qd2,
-    * image qm17, audio qm18): cluster clips whose per-frame [[aHash]]
-    * fingerprints, concatenated in frame order, are within
-    * `maxHamming` bits — a re-encoded or one-block-retouched clip
-    * clusters with its original. Same shared [[hashClusters]] tail.
-    */
-  def videoNearDupClusters(
-      media: Dataset[Media],
-      factor: Int = 4,
-      bands: Int = 8,
-      maxHamming: Int = 16): DataFrame =
-    hashClusters(videoFrameHash(media, factor), bands, maxHamming)
-
   /** Per-clip video fingerprint: each decoded frame's [[aHash]] bit
     * string (per-frame mean threshold — per-frame brightness-invariant),
     * concatenated in frame order. Clips with different frame counts or
     * dimensions produce different-length strings, which the clustering
     * verify counts as distance. Undecodable clips emit no row.
+    *
+    * Video near-dup clusters are `nearDupClusters(videoFrameHash(media,
+    * factor), bands, maxHamming)` (qm19: factor 4, 8 bands, hamming
+    * ≤ 16) — the quartet's last member (text qd2, image qm17, audio
+    * qm18): a re-encoded or one-block-retouched clip clusters with its
+    * original.
     */
-  def videoFrameHash(media: Dataset[Media], factor: Int): DataFrame = {
+  def videoFrameHash(media: Dataset[Media], factor: Int): DataFrame =
+    frameHash(media, factor, None)
+
+  /** FIXED-COUNT frame-sampled video fingerprint: hash exactly
+    * `nFrames` evenly-spaced frames — frame j of the fingerprint is
+    * decoded frame ⌊j·F/nFrames⌋ (j = 0..nFrames−1, F = frame count) —
+    * each by the per-frame [[aHash]] recipe, concatenated in sample
+    * order. The fingerprint length is nFrames·(w/factor)·(h/factor)
+    * bits regardless of F, so clips differing only by a short trim
+    * still compare bit-for-bit ([[videoFrameHash]]'s concatenated form
+    * cannot: its length is F-dependent). Clips with F < nFrames sample
+    * frames repeatedly (the index formula is total for F ≥ 1) — still
+    * deterministic, still fixed-length. Undecodable clips emit no row.
+    *
+    * Trim-invariant video near-dup clusters are
+    * `nearDupClusters(videoSampledFrameHash(media, factor, nFrames),
+    * bands, maxHamming)` (qm20: factor 4, 4 frames, 8 bands, hamming
+    * ≤ 16): the concatenated form gives a clip trimmed by even one
+    * frame a different-LENGTH string, so it can never cluster with its
+    * original (a documented contract, but a real-world near-dup miss:
+    * re-uploads routinely lose a trailing second); here same-dimension
+    * clips compare at a fixed bit length and an end-trimmed copy
+    * samples (nearly) the same frames as its original.
+    */
+  def videoSampledFrameHash(media: Dataset[Media], factor: Int, nFrames: Int): DataFrame = {
+    require(nFrames >= 1, s"nFrames must be >= 1, got $nFrames")
+    frameHash(media, factor, Some(nFrames))
+  }
+
+  /** The one frame fold behind both video hashes: frames ⌊j·F/k⌋ for
+    * j = 0..k−1, k = `nFrames` or, when None, the clip's own frame
+    * count F — where ⌊j·F/F⌋ = j hashes every frame in order.
+    */
+  private def frameHash(media: Dataset[Media], factor: Int, nFrames: Option[Int]): DataFrame = {
     import media.sparkSession.implicits._
     require(factor >= 1, s"factor must be >= 1, got $factor")
     media.flatMap { m =>
       decodeVideo(safeBytes(m.bytes)) match {
-        case Some((w, h, frames))
-            if frames.nonEmpty && w % factor == 0 && h % factor == 0
-              && w >= factor && h >= factor =>
-          Some((m.media_id, frames.map(meanBits(_, w, h, factor)).mkString))
+        case Some((w, h, frames)) if frames.nonEmpty && tiles(w, h, factor) =>
+          val k = nFrames.getOrElse(frames.length)
+          val sampled = (0 until k).map(j => frames(j * frames.length / k))
+          Some((m.media_id, sampled.map(meanBits(_, w, h, factor)).mkString))
         case _ => None
       }
     }.toDF("media_id", "hash_bits")
+  }
+
+  /** The LCG block clip behind both planted video fixtures: `nf` 32×32
+    * MJPEG frames whose 8×8 block values are v = ((blockIdx + 16·f) ·
+    * (7919 + 16·base) + 3·base) mod 251 (base = id mod 50), with frame
+    * 0's top-left block brightened by +100 (clipped at 250) when
+    * `retouch`.
+    */
+  private def lcgClip(id: Long, nf: Int, retouch: Boolean): Media = {
+    val base = id % 50
+    mjpegClip(id, nf) { (f, i) =>
+      val bc = (i % 32) / 8
+      val br = (i / 32) / 8
+      val v = (((bc + 4 * br + 16 * f) * (7919 + 16 * base) + 3 * base) % 251).toInt
+      if (retouch && f == 0 && br == 0 && bc == 0) math.min(v + 100, 250) else v
+    }
+  }
+
+  /** A 32×32 MJPEG clip of `nf` baseline-JPEG frames: pixel i of frame
+    * f is `px(f, i)`.
+    */
+  private def mjpegClip(id: Long, nf: Int)(px: (Int, Int) => Int): Media = {
+    val frames = (0 until nf).map(f =>
+      graft.sources.Jpeg.encodeGray(Array.tabulate(32 * 32)(px(f, _)), 32, 32))
+    Media(id, MediaMeta("video", 32, 32, 0), graft.sources.Avi.encodeMjpeg(frames, 32, 32))
   }
 
   /** The AVI fixture with PLANTED NEAR-DUPS for the video-dedup gate:
@@ -919,70 +963,7 @@ object Multimodal {
     * flipped bits all land in the first frame's hash.
     */
   def aviMediaNearDupFromDocuments(spark: SparkSession, docs: DataFrame): Dataset[Media] =
-    encodedFixture(spark, docs) { id =>
-      val base = id % 50
-      val w = 32; val h = 32
-      val frames = (0 until 4).map { f =>
-        val px = Array.tabulate(w * h) { i =>
-          val bc = (i % 32) / 8
-          val br = (i / 32) / 8
-          val v = (((bc + 4 * br + 16 * f) * (7919 + 16 * base)
-            + 3 * base) % 251).toInt
-          if (id >= 50 && f == 0 && br == 0 && bc == 0) math.min(v + 100, 250)
-          else v
-        }
-        graft.sources.Jpeg.encodeGray(px, w, h)
-      }
-      Media(id, MediaMeta("video", w, h, 0),
-        graft.sources.Avi.encodeMjpeg(frames, w, h))
-    }
-
-  /** TRIM-INVARIANT VIDEO NEAR-DUP CLUSTERS — [[videoNearDupClusters]]
-    * over the FRAME-SAMPLED fingerprint: the concatenated form hashes
-    * every frame in order, so a clip trimmed by even one frame
-    * produces a different-LENGTH string and can never cluster with its
-    * original (the verify counts a length mismatch as distance — a
-    * documented contract, but a real-world near-dup miss: re-uploads
-    * routinely lose a trailing second). [[videoSampledFrameHash]]
-    * always hashes exactly `nFrames` evenly-spaced frames, so same-
-    * dimension clips compare at a fixed bit length and an end-trimmed
-    * copy samples (nearly) the same frames as its original.
-    */
-  def videoNearDupClustersSampled(
-      media: Dataset[Media],
-      factor: Int = 4,
-      nFrames: Int = 4,
-      bands: Int = 8,
-      maxHamming: Int = 16): DataFrame =
-    hashClusters(videoSampledFrameHash(media, factor, nFrames), bands, maxHamming)
-
-  /** FIXED-COUNT frame-sampled video fingerprint: hash exactly
-    * `nFrames` evenly-spaced frames — frame j of the fingerprint is
-    * decoded frame ⌊j·F/nFrames⌋ (j = 0..nFrames−1, F = frame count) —
-    * each by the per-frame [[aHash]] recipe, concatenated in sample
-    * order. The fingerprint length is nFrames·(w/factor)·(h/factor)
-    * bits regardless of F, so clips differing only by a short trim
-    * still compare bit-for-bit ([[videoFrameHash]]'s concatenated form
-    * cannot: its length is F-dependent). Clips with F < nFrames sample
-    * frames repeatedly (the index formula is total for F ≥ 1) — still
-    * deterministic, still fixed-length. Undecodable clips emit no row.
-    */
-  def videoSampledFrameHash(
-      media: Dataset[Media], factor: Int, nFrames: Int): DataFrame = {
-    import media.sparkSession.implicits._
-    require(factor >= 1, s"factor must be >= 1, got $factor")
-    require(nFrames >= 1, s"nFrames must be >= 1, got $nFrames")
-    media.flatMap { m =>
-      decodeVideo(safeBytes(m.bytes)) match {
-        case Some((w, h, frames))
-            if frames.nonEmpty && w % factor == 0 && h % factor == 0
-              && w >= factor && h >= factor =>
-          val sampled = (0 until nFrames).map(j => frames(j * frames.length / nFrames))
-          Some((m.media_id, sampled.map(meanBits(_, w, h, factor)).mkString))
-        case _ => None
-      }
-    }.toDF("media_id", "hash_bits")
-  }
+    encodedFixture(spark, docs)(id => lcgClip(id, 4, retouch = id >= 50))
 
   /** The AVI fixture with PLANTED TRIMS for the trim-invariant video
     * dedup gate: ids < 50 are 5-frame bases with the
@@ -995,22 +976,7 @@ object Multimodal {
     * 4·64) can never merge.
     */
   def aviMediaTrimNearDupFromDocuments(spark: SparkSession, docs: DataFrame): Dataset[Media] =
-    encodedFixture(spark, docs) { id =>
-      val base = id % 50
-      val nf = if (id >= 50) 4 else 5
-      val w = 32; val h = 32
-      val frames = (0 until nf).map { f =>
-        val px = Array.tabulate(w * h) { i =>
-          val bc = (i % 32) / 8
-          val br = (i / 32) / 8
-          (((bc + 4 * br + 16 * f) * (7919 + 16 * base)
-            + 3 * base) % 251).toInt
-        }
-        graft.sources.Jpeg.encodeGray(px, w, h)
-      }
-      Media(id, MediaMeta("video", w, h, 0),
-        graft.sources.Avi.encodeMjpeg(frames, w, h))
-    }
+    encodedFixture(spark, docs)(id => lcgClip(id, if (id >= 50) 4 else 5, retouch = false))
 
   /** OTSU BINARIZATION THRESHOLD over decoded grayscale pixels — the
     * classic foreground/background split point (argmax of between-class
@@ -1107,44 +1073,10 @@ object Multimodal {
     */
   def aviMediaFromDocuments(spark: SparkSession, docs: DataFrame): Dataset[Media] =
     encodedFixture(spark, docs) { id =>
-      val w = 32; val h = 32
-      val frames = (0 until 4).map { f =>
-        val px = Array.tabulate(w * h) { i =>
-          val bc = (i % w) / 8; val br = (i / w) / 8
-          ((bc * 5 + br * 7 + id + f * 13) % 251).toInt
-        }
-        graft.sources.Jpeg.encodeGray(px, w, h)
+      mjpegClip(id, 4) { (f, i) =>
+        val bc = (i % 32) / 8; val br = (i / 32) / 8
+        ((bc * 5 + br * 7 + id + f * 13) % 251).toInt
       }
-      Media(id, MediaMeta("video", w, h, 0), graft.sources.Avi.encodeMjpeg(frames, w, h))
-    }
-
-  /** The WAV fixture with PLANTED NEAR-DUPS for the audio-dedup gate:
-    * ids < 50 are bases whose ENERGY ENVELOPE carries the id — window w
-    * is LOUD (amplitude 32768) iff bit w of the HASHED id
-    * (id·2654435761 mod 65536, Knuth's multiplicative spread — raw id
-    * bits repeat across windows and one-bit id neighbours land within
-    * the hamming budget and chain into a giant cluster; measured
-    * before this formula) is set, QUIET (amplitude 256) otherwise, so
-    * distinct ids sit ~8 hash bits apart (a flat-envelope formula
-    * would merge everything: the hash thresholds on the clip's own
-    * mean). Ids ≥ 50 re-encode
-    * base id − 50 with the first window boosted by +8000 (clipped) —
-    * a one-segment retouch that moves a couple of hash bits, never
-    * the whole fingerprint.
-    */
-  def wavMediaNearDupFromDocuments(spark: SparkSession, docs: DataFrame): Dataset[Media] =
-    encodedFixture(spark, docs) { id =>
-      val base = id % 50
-      val boost = if (id >= 50) 8000 else 0
-      val pat = base * 2654435761L % 65536L
-      val samples = Array.tabulate(1024) { i =>
-        val w = i / 64
-        val amp = if (((pat >> w) & 1L) == 1L) 32768 else 256
-        val v = ((i * 2731 + 5 * base) % (2 * amp) - amp).toInt
-        (if (i < 64) math.min(v + boost, 32767) else v).toShort
-      }
-      Media(id, MediaMeta("audio", 0, 0, 16000),
-        graft.sources.Wav.encodeMono16(samples, 16000))
     }
 
   /** WAV media fixture: 1024 deterministic PCM16 samples per document,

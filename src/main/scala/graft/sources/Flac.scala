@@ -16,15 +16,15 @@ import scala.collection.mutable.ArrayBuffer
   * (with real MD5 of the unencoded samples), frames with CRC-8-guarded
   * headers and CRC-16-guarded bodies, UTF-8-style frame numbers,
   * Rice partitions (4/5-bit parameters + escape), fixed predictors of
-  * order 0..4, quantized-LP coefficients via Levinson–Durbin.
+  * order 0..4, quantized-LP coefficients via Levinson–Durbin. Mono and
+  * stereo encode through one stream writer (magic, STREAMINFO, frame
+  * headers and CRCs) and one Rice residual coder; each encoder adds
+  * only its channel assignment and subframes.
   */
 object Flac {
 
   /** Decoded stream: per-channel sample arrays (not interleaved). */
-  final case class Audio(sampleRate: Int, channels: Int, bps: Int, data: Array[Array[Int]]) {
-    /** Samples per channel. No gate or program reads it; FlacSpec does. */
-    def numSamples: Int = if (data.isEmpty) 0 else data(0).length
-  }
+  final case class Audio(sampleRate: Int, channels: Int, bps: Int, data: Array[Array[Int]])
 
   // ------------------------------------------------------------- bit I/O
   private final class BitWriter {
@@ -187,14 +187,19 @@ object Flac {
   }
 
   // -------------------------------------------------------------- encode
-  /** Encode 16-bit mono PCM. Per 4096-sample block: best FIXED order
-    * 0..2 by residual magnitude, single Rice partition, parameter from
-    * the mean residual magnitude. Bit-exact lossless.
+  /** The one FLAC stream writer behind [[encodeMono16]] and
+    * [[encodeStereo16]]: fLaC magic, STREAMINFO (the last metadata
+    * block) with the MD5 of the interleaved little-endian samples, then
+    * one fixed-blocksize frame per `blockSize` samples — header with
+    * CRC-8, subframes, byte alignment, CRC-16. `frame(frameNo, block)`
+    * gets the frame's samples per channel and returns its channel
+    * assignment and the writer of its subframes.
     */
-  def encodeMono16(samples: Array[Short], sampleRate: Int, blockSize: Int = 4096): Array[Byte] = {
-    require(samples.nonEmpty, "no samples")
+  private def encodeStream(channels: Seq[Array[Short]], sampleRate: Int, blockSize: Int)(
+      frame: (Long, Seq[Array[Int]]) => (Int, BitWriter => Unit)): Array[Byte] = {
     require(sampleRate > 0 && sampleRate < (1 << 20), s"bad sample rate $sampleRate")
     require(blockSize >= 16 && blockSize <= 65535, s"bad block size $blockSize")
+    val total = channels.head.length
     val out = new java.io.ByteArrayOutputStream()
     out.write("fLaC".getBytes("ASCII"))
     // STREAMINFO (last metadata block), 34 bytes
@@ -202,19 +207,22 @@ object Flac {
     si.put(blockSize, 16); si.put(blockSize, 16) // min/max block size
     si.put(0, 24); si.put(0, 24) // min/max frame size unknown
     si.put(sampleRate, 20)
-    si.put(0, 3) // channels - 1
+    si.put(channels.length - 1, 3)
     si.put(15, 5) // bits per sample - 1
-    si.put(samples.length.toLong, 36)
-    val md5 = java.security.MessageDigest.getInstance("MD5")
-    val pcmBytes = new Array[Byte](samples.length * 2)
-    var mi = 0
-    while (mi < samples.length) {
-      pcmBytes(mi * 2) = (samples(mi) & 0xff).toByte
-      pcmBytes(mi * 2 + 1) = ((samples(mi) >> 8) & 0xff).toByte
-      mi += 1
+    si.put(total.toLong, 36)
+    val pcm = new Array[Byte](total * channels.length * 2) // interleaved, little-endian
+    var i = 0
+    while (i < total) {
+      var c = 0
+      while (c < channels.length) {
+        val k = (i * channels.length + c) * 2
+        pcm(k) = (channels(c)(i) & 0xff).toByte
+        pcm(k + 1) = ((channels(c)(i) >> 8) & 0xff).toByte
+        c += 1
+      }
+      i += 1
     }
-    md5.update(pcmBytes)
-    val siBytes = si.toArray ++ md5.digest()
+    val siBytes = si.toArray ++ java.security.MessageDigest.getInstance("MD5").digest(pcm)
     out.write(0x80) // last-metadata-block flag | type 0
     out.write((siBytes.length >> 16) & 0xff)
     out.write((siBytes.length >> 8) & 0xff)
@@ -223,68 +231,60 @@ object Flac {
 
     var frameNo = 0L
     var off = 0
-    while (off < samples.length) {
-      val n = math.min(blockSize, samples.length - off)
-      val x = Array.tabulate(n)(i => samples(off + i).toInt)
-      val bw = new BitWriter
+    while (off < total) {
+      val n = math.min(blockSize, total - off)
+      val block = channels.map(ch => Array.tabulate(n)(j => ch(off + j).toInt))
+      val (asgn, subframes) = frame(frameNo, block)
+      val head = new BitWriter
       // frame header: sync + fixed-blocksize strategy
-      bw.put(0x3ffe, 14); bw.put(0, 1); bw.put(0, 1)
-      bw.put(7, 4) // blocksize: 16-bit value - 1 follows header
-      bw.put(0, 4) // sample rate: from STREAMINFO
-      bw.put(0, 4) // channel assignment: mono
-      bw.put(4, 3) // sample size: 16 bits
-      bw.put(0, 1)
-      putUtf8Num(bw, frameNo)
-      bw.put(n - 1, 16)
-      val headBytes = bw.toArray // aligned: header fields are byte-multiples here
-      val bw2 = new BitWriter
-      headBytes.foreach(b => bw2.put(b & 0xffL, 8))
-      bw2.put(crc8(headBytes, 0, headBytes.length), 8)
-      // subframe: pick best fixed order 0..2 (3/4 rarely win on our data)
-      val maxOrder = math.min(2, n - 1)
-      val byOrder = (0 to maxOrder).map(o => o -> fixedResidual(x, o))
-      val (order, resid) = byOrder.minBy { case (_, e) => e.foldLeft(0L)((a, v) => a + math.abs(v.toLong)) }
-      bw2.put(0, 1)
-      bw2.put(8 + order, 6) // FIXED order
-      bw2.put(0, 1) // no wasted bits
-      var i = 0
-      while (i < order) { bw2.put(x(i).toLong & 0xffff, 16); i += 1 } // warmup
-      // residual: method 0 (4-bit rice), partition order 0
-      bw2.put(0, 2); bw2.put(0, 4)
-      val mean = if (resid.isEmpty) 0L
-        else resid.foldLeft(0L)((a, v) => a + math.abs(v.toLong)) / math.max(1, resid.length)
-      var p = 0
-      while (p < 14 && (1L << p) < mean + 1) p += 1
-      if (p > 0 && resid.nonEmpty) {
-        // cap the worst-case unary run; escape to raw if any residual is huge
-        val worst = resid.map(r => zigzag(r) >>> p).max
-        if (worst > (1 << 16)) p = 15 // force escape below
-      }
-      if (p >= 15) {
-        bw2.put(15, 4) // rice escape: raw residuals
-        bw2.put(18, 5) // 18 raw bits each (covers 17-bit 2nd-order residuals)
-        resid.foreach(r => bw2.put(r.toLong & 0x3ffff, 18))
-      } else {
-        bw2.put(p, 4)
-        resid.foreach { r =>
-          val z = zigzag(r)
-          val q = (z >>> p).toInt
-          var k = q
-          while (k >= 63) { bw2.put(0, 63); k -= 63 } // q zeros + terminating 1
-          bw2.put(1, k + 1)
-          if (p > 0) bw2.put(z & ((1L << p) - 1), p)
-        }
-      }
-      bw2.align()
-      val body = bw2.toArray
-      val withCrc = body ++ Array(
-        ((crc16(body, 0, body.length) >> 8) & 0xff).toByte,
-        (crc16(body, 0, body.length) & 0xff).toByte)
-      out.write(withCrc, 0, withCrc.length)
+      head.put(0x3ffe, 14); head.put(0, 1); head.put(0, 1)
+      head.put(7, 4) // blocksize: 16-bit value - 1 follows header
+      head.put(0, 4) // sample rate: from STREAMINFO
+      head.put(asgn.toLong, 4)
+      head.put(4, 3) // sample size: 16 bits
+      head.put(0, 1)
+      putUtf8Num(head, frameNo)
+      head.put(n - 1, 16)
+      val headBytes = head.toArray // aligned: header fields are byte-multiples here
+      val bw = new BitWriter
+      headBytes.foreach(b => bw.put(b & 0xffL, 8))
+      bw.put(crc8(headBytes, 0, headBytes.length), 8)
+      subframes(bw)
+      val body = bw.toArray
+      val crc = crc16(body, 0, body.length)
+      out.write(body, 0, body.length)
+      out.write((crc >> 8) & 0xff)
+      out.write(crc & 0xff)
       frameNo += 1
       off += n
     }
     out.toByteArray
+  }
+
+  /** Encode 16-bit mono PCM. Per 4096-sample block: best FIXED order
+    * 0..2 by residual magnitude, single Rice partition, parameter from
+    * the mean residual magnitude. Bit-exact lossless.
+    */
+  def encodeMono16(samples: Array[Short], sampleRate: Int, blockSize: Int = 4096): Array[Byte] = {
+    require(samples.nonEmpty, "no samples")
+    encodeStream(Seq(samples), sampleRate, blockSize) { (_, block) =>
+      (0, writeFixedSubframe(_, block(0))) // channel assignment 0: mono
+    }
+  }
+
+  /** One FIXED subframe at 16 bits: the best order 0..2 by residual
+    * magnitude (3/4 rarely win on our data), residual via
+    * [[writeResidual]].
+    */
+  private def writeFixedSubframe(bw: BitWriter, x: Array[Int]): Unit = {
+    val byOrder = (0 to math.min(2, x.length - 1)).map(o => o -> fixedResidual(x, o))
+    val (order, resid) = byOrder.minBy { case (_, e) => e.foldLeft(0L)((a, v) => a + math.abs(v.toLong)) }
+    bw.put(0, 1)
+    bw.put(8 + order, 6) // FIXED order
+    bw.put(0, 1) // no wasted bits
+    var i = 0
+    while (i < order) { bw.put(x(i).toLong & 0xffff, 16); i += 1 } // warmup
+    writeResidual(bw, resid)
   }
 
   // ------------------------------------------------------ stereo + LPC encode
@@ -417,77 +417,18 @@ object Flac {
   def encodeStereo16(left: Array[Short], right: Array[Short], sampleRate: Int,
       blockSize: Int = 4096): Array[Byte] = {
     require(left.nonEmpty && left.length == right.length, "stereo channels must be equal, non-empty")
-    require(sampleRate > 0 && sampleRate < (1 << 20), s"bad sample rate $sampleRate")
-    require(blockSize >= 16 && blockSize <= 65535, s"bad block size $blockSize")
-    val out = new java.io.ByteArrayOutputStream()
-    out.write("fLaC".getBytes("ASCII"))
-    val si = new BitWriter
-    si.put(blockSize, 16); si.put(blockSize, 16)
-    si.put(0, 24); si.put(0, 24)
-    si.put(sampleRate, 20)
-    si.put(1, 3) // channels - 1
-    si.put(15, 5) // bits per sample - 1
-    si.put(left.length.toLong, 36)
-    val md5 = java.security.MessageDigest.getInstance("MD5")
-    val pcm = new Array[Byte](left.length * 4) // interleaved L,R little-endian
-    var mi = 0
-    while (mi < left.length) {
-      pcm(mi * 4) = (left(mi) & 0xff).toByte
-      pcm(mi * 4 + 1) = ((left(mi) >> 8) & 0xff).toByte
-      pcm(mi * 4 + 2) = (right(mi) & 0xff).toByte
-      pcm(mi * 4 + 3) = ((right(mi) >> 8) & 0xff).toByte
-      mi += 1
-    }
-    md5.update(pcm)
-    val siBytes = si.toArray ++ md5.digest()
-    out.write(0x80)
-    out.write((siBytes.length >> 16) & 0xff)
-    out.write((siBytes.length >> 8) & 0xff)
-    out.write(siBytes.length & 0xff)
-    out.write(siBytes, 0, siBytes.length)
-
-    var frameNo = 0L
-    var off = 0
-    while (off < left.length) {
-      val n = math.min(blockSize, left.length - off)
-      val l = Array.tabulate(n)(i => left(off + i).toInt)
-      val r = Array.tabulate(n)(i => right(off + i).toInt)
-      val asgn = (frameNo % 3).toInt match {
-        case 0 => 10 // mid/side
-        case 1 => 8 // left/side
-        case 2 => 9 // right/side
-      }
+    encodeStream(Seq(left, right), sampleRate, blockSize) { (frameNo, block) =>
+      val l = block(0)
+      val r = block(1)
+      val n = l.length
       val side = Array.tabulate(n)(i => l(i) - r(i))
-      val (ch0, ch1, bps0, bps1) = asgn match {
-        case 10 => (Array.tabulate(n)(i => (l(i) + r(i)) >> 1), side, 16, 17)
-        case 8 => (l, side, 16, 17)
-        case 9 => (side, r, 17, 16) // side stored first in right/side
+      val (asgn, ch0, ch1, bps0, bps1) = (frameNo % 3).toInt match {
+        case 0 => (10, Array.tabulate(n)(i => (l(i) + r(i)) >> 1), side, 16, 17) // mid/side
+        case 1 => (8, l, side, 16, 17) // left/side
+        case 2 => (9, side, r, 17, 16) // right/side: side stored first
       }
-      val bw = new BitWriter
-      bw.put(0x3ffe, 14); bw.put(0, 1); bw.put(0, 1)
-      bw.put(7, 4) // blocksize: 16-bit value - 1 follows header
-      bw.put(0, 4) // sample rate: from STREAMINFO
-      bw.put(asgn.toLong, 4)
-      bw.put(4, 3) // sample size: 16 bits
-      bw.put(0, 1)
-      putUtf8Num(bw, frameNo)
-      bw.put(n - 1, 16)
-      val headBytes = bw.toArray
-      val bw2 = new BitWriter
-      headBytes.foreach(b => bw2.put(b & 0xffL, 8))
-      bw2.put(crc8(headBytes, 0, headBytes.length), 8)
-      writeLpcSubframe(bw2, ch0, bps0)
-      writeLpcSubframe(bw2, ch1, bps1)
-      bw2.align()
-      val body = bw2.toArray
-      val crc = crc16(body, 0, body.length)
-      out.write(body, 0, body.length)
-      out.write((crc >> 8) & 0xff)
-      out.write(crc & 0xff)
-      frameNo += 1
-      off += n
+      (asgn, bw => { writeLpcSubframe(bw, ch0, bps0); writeLpcSubframe(bw, ch1, bps1) })
     }
-    out.toByteArray
   }
 
   // -------------------------------------------------------------- decode

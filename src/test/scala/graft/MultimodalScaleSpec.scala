@@ -4,7 +4,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Scale-shape probe for the multimodal near-dup clustering tail
-  * ([[graft.multimodal.Multimodal]] hashClusters): exact re-uploads are
+  * ([[graft.multimodal.Multimodal.nearDupClusters]]): exact re-uploads are
   * the DOMINANT near-dup class in a crawled media corpus, and the
   * r14 band join re-verified them all-pairs — m byte-identical
   * fingerprints collide in EVERY band, Θ(m²·bands) candidate rows.
@@ -38,7 +38,7 @@ class MultimodalScaleSpec extends AnyFunSuite {
     // end-to-end: all copies + the hamming-2 neighbour in ONE cluster
     // labeled min media_id (0); far fingerprints label as themselves
     val clusters = graft.multimodal.Multimodal
-      .hashClusters(hashes, bands = 4, maxHamming = 2)
+      .nearDupClusters(hashes, bands = 4, maxHamming = 2)
       .as[(Long, Long)].collect().toMap
     assert(clusters.size == m.toInt + 3)
     assert((0L until m).forall(clusters(_) == 0L), "copies must share cluster 0")

@@ -110,7 +110,7 @@ class AviSpec extends AnyFunSuite {
     assert(hashes(1L).substring(64) == hashes(2L).substring(64))
     assert(hashes(1L).take(64) != hashes(2L).take(64))
     val got = Multimodal
-      .videoNearDupClusters(media, factor = 4, bands = 6, maxHamming = 16)
+      .nearDupClusters(Multimodal.videoFrameHash(media, factor = 4), bands = 6, maxHamming = 16)
       .as[(Long, Long)].collect().toMap
     assert(got(1L) == 1L && got(2L) == 1L, s"retouch did not cluster: $got")
     assert(got(3L) == 3L, s"different pattern merged: $got")
@@ -144,8 +144,13 @@ class AviSpec extends AnyFunSuite {
     val concat = Multimodal.videoFrameHash(media, factor = 4).collect()
       .map(r => r.getLong(0) -> r.getString(1)).toMap
     assert(concat(1L).length == 320 && concat(2L).length == 256)
+    // nFrames = F samples every frame in order: the concatenated hash
+    val everyFrame = Multimodal.videoSampledFrameHash(Seq(clip(1L, 7919, 5)).toDS(),
+      factor = 4, nFrames = 5).collect().head.getString(1)
+    assert(everyFrame == concat(1L))
     val got = Multimodal
-      .videoNearDupClustersSampled(media, factor = 4, nFrames = 4, bands = 8, maxHamming = 16)
+      .nearDupClusters(Multimodal.videoSampledFrameHash(media, factor = 4, nFrames = 4),
+        bands = 8, maxHamming = 16)
       .as[(Long, Long)].collect().toMap
     assert(got(1L) == 1L && got(2L) == 1L, s"trim did not cluster: $got")
     assert(got(3L) == 3L, s"different pattern merged: $got")

@@ -71,7 +71,7 @@ class FlacSpec extends AnyFunSuite {
     assert(r.toSeq == right.toSeq, "right channel must round-trip bit-exactly")
     // the general decoder agrees
     val a = Flac.decode(enc)
-    assert(a.channels == 2 && a.bps == 16 && a.numSamples == n)
+    assert(a.channels == 2 && a.bps == 16 && a.data(0).length == n)
   }
 
   test("LPC actually predicts: smooth content compresses well below raw PCM") {

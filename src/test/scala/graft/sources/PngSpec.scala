@@ -178,13 +178,13 @@ class PngSpec extends AnyFunSuite {
     val aRetouch = a.zipWithIndex.map { case (p, i) => if (i < 4) math.min(p + 60, 255) else p }
     val b = Array.tabulate(64)(i => ((i % 8) * 31) % 256) // different structure
     val media = Seq(img(1L, a), img(2L, aRetouch), img(3L, b)).toDS()
-    val got = Multimodal.imageNearDupClusters(media, factor = 2, bands = 4, maxHamming = 4)
+    val got = Multimodal.nearDupClusters(Multimodal.aHash(media, factor = 2), bands = 4, maxHamming = 4)
       .as[(Long, Long)].collect().toMap
     assert(got(1L) == 1L && got(2L) == 1L, s"retouch did not cluster: $got")
     assert(got(3L) == 3L, s"distinct pattern merged: $got")
     // full-fidelity copy: identical hash, trivially clustered
     val withCopy = Seq(img(1L, a), img(9L, a)).toDS()
-    val got2 = Multimodal.imageNearDupClusters(withCopy, factor = 2, bands = 4, maxHamming = 0)
+    val got2 = Multimodal.nearDupClusters(Multimodal.aHash(withCopy, factor = 2), bands = 4, maxHamming = 0)
       .as[(Long, Long)].collect().toMap
     assert(got2 == Map(1L -> 1L, 9L -> 1L))
   }

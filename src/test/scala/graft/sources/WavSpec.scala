@@ -151,7 +151,7 @@ class WavSpec extends AnyFunSuite {
     val b = (w: Int) => w < 4      // front-loaded envelope
     val media = Seq(clip(1L, a), clip(2L, a, boost = 4000), clip(3L, b)).toDS()
     val got = Multimodal
-      .audioNearDupClusters(media, windows = 8, bands = 4, maxHamming = 2)
+      .nearDupClusters(Multimodal.audioEnergyHash(media, windows = 8), bands = 4, maxHamming = 2)
       .as[(Long, Long)].collect().toMap
     assert(got(1L) == 1L && got(2L) == 1L, s"retouch did not cluster: $got")
     assert(got(3L) == 3L, s"different envelope merged: $got")
@@ -199,7 +199,8 @@ class WavSpec extends AnyFunSuite {
     val media = Seq(clipN(1L, 1024, 0xA5C3L), clipN(2L, 1000, 0xA5C3L),
       clipN(3L, 1024, 0x3C5AL)).toDS()
     val got = Multimodal
-      .audioNearDupClustersSampled(media, windows = 16, bands = 4, maxHamming = 3)
+      .nearDupClusters(Multimodal.audioSampledEnergyHash(media, windows = 16),
+        bands = 4, maxHamming = 3)
       .as[(Long, Long)].collect().toMap
     assert(got(1L) == 1L && got(2L) == 1L, s"trim did not cluster: $got")
     assert(got(3L) == 3L, s"different pattern merged: $got")
@@ -213,5 +214,40 @@ class WavSpec extends AnyFunSuite {
       Seq(quiet(7L, 1), quiet(8L, 4)).toDS(), windows = 16)
       .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
     assert(vh(7L) == vh(8L))
+  }
+
+  test("the energy compare stays exact past 2^63, where a Long " +
+      "cross-multiply wraps, and agrees with it at fixture sizes") {
+    import graft.multimodal.Multimodal
+    // a 2^26-sample clip at 16 windows: window 0 at full scale
+    // (e = 32768 * 2^22 = 2^37), the other 15 at half scale
+    val n = 1L << 26
+    val cnt = n / 16
+    val loud = 32768L * cnt
+    val total = loud + 15 * (loud / 2)
+    assert(loud * n < 0L, "the Long product must wrap for this case to bite")
+    assert(!(loud * n > total * cnt), "the Long form misses the loud window")
+    assert(Multimodal.exceeds(loud, n, total, cnt))
+    assert(!Multimodal.exceeds(loud / 2, n, total, cnt))
+    // high words differ: 3·(2^63 − 1) against 2·(2^63 − 1)
+    assert(Multimodal.exceeds(Long.MaxValue, 3L, Long.MaxValue, 2L))
+    assert(!Multimodal.exceeds(Long.MaxValue, 2L, Long.MaxValue, 3L))
+    // high words tie and the low words decide unsigned:
+    // 2^64 + 2^63 + 4 against 2^64 + 8
+    val big = 3L * (1L << 61) + 1
+    val small = (1L << 62) + 2
+    assert(Multimodal.exceeds(big, 4L, small, 4L))
+    assert(!Multimodal.exceeds(small, 4L, big, 4L))
+    assert(!Multimodal.exceeds(big, 4L, 4L, big)) // equal products: strict
+    // fixture sizes (n ≤ 2^12, window energies ≤ 2^28): the same bits as Long
+    val rnd = new scala.util.Random(5)
+    (0 until 10000).foreach { _ =>
+      val m = 16L + rnd.nextInt(4096)
+      val c = 1L + rnd.nextInt(m.toInt)
+      val e = rnd.nextLong() & ((1L << 28) - 1)
+      val t = e + (rnd.nextLong() & ((1L << 31) - 1))
+      assert(Multimodal.exceeds(e, m, t, c) == (e * m > t * c), s"$e $m $t $c")
+    }
+    assert(!Multimodal.exceeds(4L, 4L, 8L, 2L))
   }
 }
